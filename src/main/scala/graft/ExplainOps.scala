@@ -23,8 +23,9 @@ object ExplainOps {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    def wanted(name: String): Boolean = names.isEmpty || names.contains(name)
     def show(name: String)(df: => DataFrame): Unit =
-      if (names.isEmpty || names.contains(name)) {
+      if (wanted(name)) {
         println(s"==== $name ====")
         println(df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode))
@@ -86,18 +87,20 @@ object ExplainOps {
     // the sampling pass is the one evaluation and the shuffle reads the
     // InMemoryRelation (visible below as InMemoryTableScan replacing
     // the Project[UDF]-over-Scan subtree under the Exchange).
-    locally {
+    // the seeding trains and writes an index, so skip it when filtered out
+    val (seedOld, seedNew) = ("seedivf_range_stage_uncached_OLD", "seedivf_range_stage_cached_NEW")
+    if (wanted(seedOld) || wanted(seedNew)) {
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       val work = java.nio.file.Files.createTempDirectory("graft_explain_seed")
       val w = work.toFile.getAbsolutePath
       graft.operators.Similarity.saveIvfIndex(emb, s"$w/ivf_index", nlist = 4)
       val assigned = graft.operators.Similarity.assignStored(emb, s"$w/ivf_index")
-      show("seedivf_range_stage_uncached_OLD") {
+      show(seedOld) {
         assigned
           .repartitionByRange(4, col("cell"), col("vec_id"))
           .sortWithinPartitions("cell", "vec_id")
       }
-      show("seedivf_range_stage_cached_NEW") {
+      show(seedNew) {
         val cached = assigned.persist()
         val out = cached
           .repartitionByRange(4, col("cell"), col("vec_id"))

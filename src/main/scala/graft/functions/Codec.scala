@@ -54,8 +54,9 @@ object Codec {
     } finally zis.close()
   }
 
-  /** Compressed size of a string if zipped — used by the adaptive chunker
-    * to probe compression ratios without keeping the archive around.
+  /** Compressed size of a string if zipped, for size checks that have no
+    * use for the archive. (The adaptive chunker keeps its archives; see
+    * `Chunker.adaptiveChunksZipped`.)
     */
   def zippedSize(s: String): Int = zipStr(s).length
 

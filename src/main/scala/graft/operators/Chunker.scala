@@ -13,9 +13,9 @@ import graft.functions.Codec
   * (`LogChange.cs:23-24,123,127-130,228-235`).
   *
   * This is a pure, single-string algorithm by design: on Spark it runs
-  * data-parallel per row (one task chunks many documents), wrapped as a UDF
-  * returning `array<string>` and exploded with `posexplode` — the Generator
-  * role. The pure core is scalacheck-testable without a SparkSession.
+  * per row inside the ingest's `Generate` (see `LogStore.ingest`), which
+  * stores the archives the size check produced. The pure core is
+  * scalacheck-testable without a SparkSession.
   */
 object Chunker {
 
@@ -59,14 +59,14 @@ object Chunker {
 
   /** Split one over-cap chunk until every piece compresses under the cap
     * (reference `CompressAndValidateChunk`, `LogChange.cs:214-257`). Returns
-    * (piece, zippedSize) pairs — the compressed size is a byproduct of the
-    * validation, so callers auditing the cap never re-compress.
+    * (piece, archive) pairs — the archive is the validation's own output, so
+    * callers never re-compress.
     */
-  private def resplitUntilFits(chunk: String): Vector[(String, Int)] = {
-    val zippedLen = Codec.zippedSize(chunk)
-    if (zippedLen <= MaxDocBytes) Vector((chunk, zippedLen))
+  private def resplitUntilFits(chunk: String): Vector[(String, Array[Byte])] = {
+    val zipped = Codec.zipStr(chunk)
+    if (zipped.length <= MaxDocBytes) Vector((chunk, zipped))
     else {
-      val overageRatio = zippedLen.toDouble / MaxDocBytes
+      val overageRatio = zipped.length.toDouble / MaxDocBytes
       val newSize = math.max(
         (chunk.length / (overageRatio * ShrinkFactor)).toInt,
         MinChunkResplit)
@@ -77,20 +77,21 @@ object Chunker {
     }
   }
 
-  /** Adaptive chunking with per-chunk compressed sizes — one compression
-    * pass total (the audit column in `q_chunk_adaptive` reads the sizes
-    * instead of re-zipping every chunk). Invariants (scalacheck-enforced):
-    *   - `chunks.mkString == s` (lossless, order-preserving)
-    *   - every chunk's zipped size ≤ `MaxDocBytes`
+  /** Adaptive chunking with each chunk's zip archive (reference `loadXmlFile`,
+    * `LogChange.cs:99-175`). The archives are the ones the cap check
+    * computed, so a caller storing them never zips a chunk twice.
+    * Invariants (scalacheck-enforced):
+    *   - `chunks.map(_._1).mkString == s` (lossless, order-preserving)
+    *   - every archive unzips to its chunk and is ≤ `MaxDocBytes`
     *   - a payload that already fits ships as exactly one chunk
+    *   - `""` is one empty chunk, `null` is none
     */
-  def adaptiveChunksWithSizes(s: String): Vector[(String, Int)] = {
+  def adaptiveChunksZipped(s: String): Vector[(String, Array[Byte])] = {
     if (s == null) return Vector.empty
-    if (s.isEmpty) return Vector(("", Codec.zippedSize("")))
-    val wholeZipped = Codec.zippedSize(s)
-    if (wholeZipped <= MaxDocBytes) Vector((s, wholeZipped)) // short-circuit `:110-118`
+    val whole = Codec.zipStr(s)
+    if (whole.length <= MaxDocBytes) Vector((s, whole)) // short-circuit `:110-118`
     else {
-      val ratio = wholeZipped.toDouble / s.length // observed compression ratio
+      val ratio = whole.length.toDouble / s.length // observed compression ratio
       val estimated = math.max(
         ((MaxDocBytes * TargetFill) / ratio).toInt,
         MinChunkInitial) // floor `:127-130`
@@ -98,11 +99,15 @@ object Chunker {
     }
   }
 
-  /** Adaptive chunking of a payload string (reference `loadXmlFile`,
-    * `LogChange.cs:99-175`); see [[adaptiveChunksWithSizes]] for invariants.
+  /** [[adaptiveChunksZipped]] with each archive's size in place of its bytes
+    * (the audit column in `q_chunk_adaptive` reads the sizes).
     */
+  def adaptiveChunksWithSizes(s: String): Vector[(String, Int)] =
+    adaptiveChunksZipped(s).map { case (c, z) => (c, z.length) }
+
+  /** [[adaptiveChunksZipped]] without the archives. */
   def adaptiveChunks(s: String): Vector[String] =
-    adaptiveChunksWithSizes(s).map(_._1)
+    adaptiveChunksZipped(s).map(_._1)
 
   /** Ordered reassembly (reference `CombineSplitLogs`, `LogChange.cs:312-342`):
     * sort by split index, concatenate. Inverse of `adaptiveChunks` /

@@ -45,24 +45,34 @@ object LogStore {
       js_time_of_creation: Long,
       payload: String)
 
-  private val chunkUdf = udf((payload: String) => Chunker.adaptiveChunks(payload))
+  /** Name of the chunk-and-zip UDF in `ingest`'s plans. */
+  val ChunkUdfName = "chunk_zip"
+
+  /** One payload → its `(split_index, total_splits, zipped_log)` rows. */
+  private val chunkZip = udf { (payload: String) =>
+    val chunks = Chunker.adaptiveChunksZipped(payload)
+    chunks.zipWithIndex.map { case ((_, zipped), i) => (i, chunks.length, zipped) }
+  }.withName(ChunkUdfName)
 
   /** Ingest: adaptive chunking + lineage stamping + zip — the Spark form of
     * `LogChange.loadXmlFile` → `AddLogDocuments`
-    * (`LogChange.cs:99-175`, `BigDataLogControl.cs:83-112`). One task chunks
-    * many documents data-parallel; `posexplode` plays the Generator role.
+    * (`LogChange.cs:99-175`, `BigDataLogControl.cs:83-112`).
+    *
+    * One `inline(chunk_zip(payload))` generator chunks each document and
+    * emits the archives the chunker's cap check already built, so every
+    * chunk is zipped once. Because the UDF sits inside the `Generate`,
+    * Catalyst cannot fold it into an in-memory `LocalRelation` at plan
+    * time: chunking runs in the tasks, not on the driver while optimising.
     *
     * Chunk 0 keeps the parent id and a null `parent_log_id`; chunks 1+ get
     * `_split<i>` ids pointing at the parent (`LogChange.cs:87-92,145-170`).
     */
-  def ingest(docs: Dataset[LogDoc]): DataFrame = {
-    val withParent = docs
+  def ingest(docs: Dataset[LogDoc]): DataFrame =
+    docs
       .withColumn("parent_id",
         Ulid.compositeId(col("user_id"), col("trigger"), col("js_time_of_creation")))
-      .withColumn("chunks", chunkUdf(col("payload")))
-      .withColumn("total_splits", size(col("chunks")))
-    withParent
-      .select(col("*"), posexplode(col("chunks")).as(Seq("split_index", "chunk")))
+      .select(col("*"),
+        inline(chunkZip(col("payload"))).as(Seq("split_index", "total_splits", "zipped_log")))
       .select(
         col("user_id"),
         when(col("split_index") === 0, col("parent_id"))
@@ -71,19 +81,25 @@ object LogStore {
         col("trigger"),
         timestamp_millis(col("js_time_of_creation")).as("time_of_creation"),
         col("js_time_of_creation"),
-        Codec.zip_str(col("chunk")).as("zipped_log"),
+        col("zipped_log"),
         col("split_index"),
         col("total_splits"),
         when(col("split_index") === 0, lit(null: String))
           .otherwise(col("parent_id")).as("parent_log_id"))
-  }
 
   /** Sink: append the log table partitioned by user — the engine's form of
     * the reference's partition-keyed container writes (R1/R2/R3). Partition
     * pruning then serves every user-scoped read.
+    *
+    * Rows are hash-repartitioned by `user_id` first, so each user directory
+    * gets one file per call (a file costs far more to create than to fill).
+    * The partition count is explicit, `defaultParallelism`: with
+    * `repartition(col)` alone, AQE coalesces a small batch into one serial
+    * writer task.
     */
   def writeLogs(logs: DataFrame, path: String): Unit =
-    logs.write.mode("append").partitionBy("user_id").parquet(path)
+    logs.repartition(logs.sparkSession.sparkContext.defaultParallelism, col("user_id"))
+      .write.mode("append").partitionBy("user_id").parquet(path)
 
   /** Ingest-telemetry metrics attached via `Dataset.observe` — rows, chunked
     * rows, compressed bytes flow out through a QueryExecutionListener (or

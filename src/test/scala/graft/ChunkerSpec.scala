@@ -67,6 +67,32 @@ class ChunkerSpec extends AnyFunSuite with Checkers {
     assert(chunks.forall(c => Codec.zippedSize(c) <= Chunker.MaxDocBytes))
   }
 
+  /** The zipped form's contract on one payload: archives unzip to their
+    * chunks, sit under the cap, and match the sizes form chunk for chunk.
+    */
+  private def zippedHolds(s: String): Boolean = {
+    val zipped = Chunker.adaptiveChunksZipped(s)
+    zipped.forall { case (c, z) => Codec.unzipStr(z) == c } &&
+      zipped.forall(_._2.length <= Chunker.MaxDocBytes) &&
+      zipped.map { case (c, z) => (c, z.length) } == Chunker.adaptiveChunksWithSizes(s)
+  }
+
+  test("adaptiveChunksZipped: archives unzip to their chunks, under cap, sizes agree (small inputs)") {
+    check(Prop.forAll(smallText)(zippedHolds))
+  }
+
+  test("adaptiveChunksZipped: archives unzip to their chunks, under cap, sizes agree (split payload)") {
+    val s = TestText.random(4 * 1024 * 1024, seed = 19)
+    assert(Chunker.adaptiveChunksZipped(s).length > 1, "fixture must force a split")
+    assert(zippedHolds(s))
+  }
+
+  test("adaptiveChunksZipped: empty string is one empty chunk, null is none") {
+    assert(Chunker.adaptiveChunksZipped("").map(_._1) == Vector(""))
+    assert(zippedHolds(""))
+    assert(Chunker.adaptiveChunksZipped(null) == Vector.empty)
+  }
+
   test("adaptiveChunks: empty string is one empty chunk, null is none") {
     assert(Chunker.adaptiveChunks("") == Vector(""))
     assert(Chunker.adaptiveChunks(null) == Vector.empty)

@@ -99,6 +99,60 @@ class LogStoreSpec extends SparkSpec {
       s"expected user_id partition filter in scan:\n$plan")
   }
 
+  test("ingest plan: chunking runs in a Generate, not folded into the LocalRelation") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.catalyst.plans.logical.{Generate, LocalRelation}
+    import org.apache.spark.sql.types.ArrayType
+    // Catalyst folds a projection over an in-memory batch into the
+    // LocalRelation at plan time; a chunk column there would mean the
+    // chunker runs on the driver, on one thread, while optimising
+    val plan = LogStore.ingest(mkDocs("u1" -> "a", "u2" -> "b")).queryExecution.optimizedPlan
+    val chunkGenerate = plan.collect { case g: Generate => g }.filter(_.generator.exists {
+      case u: ScalaUDF => u.udfName.contains(LogStore.ChunkUdfName)
+      case _ => false
+    })
+    assert(chunkGenerate.length == 1, s"expected one Generate over the chunk UDF:\n$plan")
+    val relations = chunkGenerate.head.collect { case r: LocalRelation => r }
+    assert(relations.nonEmpty, s"expected the batch's LocalRelation under the Generate:\n$plan")
+    for (r <- relations; a <- r.output)
+      assert(!a.dataType.isInstanceOf[ArrayType] && !a.name.toLowerCase.contains("chunk"),
+        s"LocalRelation carries ${a.name}: ${a.dataType}:\n$plan")
+  }
+
+  test("writeLogs: one file per user directory per call, a split document in one file") {
+    implicit val s = spark
+    def md5(str: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(str.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toSeq
+    val big = TestText.random(4 * 1024 * 1024, seed = 23)
+    val users = Seq("u1", "u2", "u3", "u4", "u5")
+    val docs = mkDocs(("u1" -> big) +: users.tail.flatMap(u => Seq(u -> s"$u one", u -> s"$u two")): _*)
+    val dir = Files.createTempDirectory("layout").toFile.getAbsolutePath + "/logs"
+    for (call <- 1 to 2) {
+      LogStore.writeLogs(LogStore.ingest(docs), dir)
+      for (u <- users) {
+        val files = new java.io.File(s"$dir/user_id=$u").list()
+          .filter(f => f.startsWith("part-") && f.endsWith(".parquet"))
+        assert(files.length == call, s"user_id=$u after call $call: ${files.toSeq}")
+      }
+    }
+    val back = spark.read.parquet(dir)
+    val parents = back
+      .where(col("user_id") === "u1" && col("parent_log_id").isNull && col("total_splits") > 1)
+      .select("id").as[String].collect()
+    assert(parents.length == 2, "one split document per call")
+    for (p <- parents) {
+      val chunks = back.where(col("user_id") === "u1" &&
+        (col("id") === p || col("parent_log_id") === p))
+      val files = chunks.select(input_file_name()).distinct().count()
+      assert(files == 1, s"split document $p spread over $files files")
+      val got = LogStore.getCombined(back, "u1", p).head().getAs[String]("payload")
+      assert(md5(got) == md5(big))
+      val plan = LogStore.pointLookup(back, "u1", p).queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters") && plan.contains("user_id"),
+        s"expected user_id partition filter in scan:\n$plan")
+    }
+  }
+
   test("getCombined restores one document by (user, parent id), incl. unsplit") {
     implicit val s = spark
     val big = TestText.random(4 * 1024 * 1024, seed = 11)

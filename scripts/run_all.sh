@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# One-shot reproduction: build, test, log_ingest smoke, correctness vs DuckDB, bench.
+# One-shot reproduction: build, test, log_ingest and log_serve smokes, correctness vs DuckDB, bench.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -12,6 +12,9 @@ sbt -batch test
 
 echo "== log_ingest benchmark smoke (gates only) =="
 python3 perfbench/run.py --workload log_ingest --seed 1 --seconds 0 --trace 0
+
+echo "== log_serve benchmark smoke (gates only) =="
+python3 perfbench/run.py --workload log_serve --seed 1 --seconds 0 --trace 0
 
 echo "== correctness dump ($SF_CORRECTNESS) =="
 rm -rf "$OUT"

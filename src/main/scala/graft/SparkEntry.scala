@@ -6603,8 +6603,8 @@ object SparkEntry {
     }),
 
     // -- [REF R1/R4] the reference's /UserId partition routing end-to-end:
-    // ingest a slice user-partitioned on disk, then point-read ONE user —
-    // the filter must prune to a single partition directory
+    // ingest a slice user-bucketed on disk, then point-read ONE user —
+    // the filter must prune to a single bucket directory
     // (PartitionFilters in the scan; snapshot in docs/PLANS.md) --
     "q_partitioned_lookup" -> ((s, d) => {
       import s.implicits._
@@ -6618,8 +6618,9 @@ object SparkEntry {
         val out = tmp.toFile.getAbsolutePath + "/logs"
         val docs = documents(s, d).where(col("doc_id") < 64)
           .select(
-            // non-numeric key so partition-column type inference keeps it a
-            // string and the equality filter prunes without a cast
+            // the store's partition column is the int user_bucket, so
+            // type inference never sees the key; the "u" prefix matches
+            // the oracle's user ids
             concat(lit("u"), col("doc_id")).as("user_id"),
             lit("activity").as("event_type"),
             lit("schedulechange").as("trigger"),
@@ -6630,7 +6631,7 @@ object SparkEntry {
         out
       })
       val back = s.read.parquet(dir)
-      graft.operators.LogStore.reassemble(back.where(col("user_id") === "u5"))
+      graft.operators.LogStore.reassemble(back.where(graft.operators.LogStore.forUser(back, "u5")))
         .select(col("user_id"), col("payload"))
         .orderBy("user_id")
     }),

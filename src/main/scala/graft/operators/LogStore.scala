@@ -12,13 +12,17 @@ import org.apache.spark.sql.functions._
   * Reference: `BigDataLogControl.cs` manages a Cosmos container `UserLogs`
   * partitioned by `/UserId` (`:23-24`): point writes (`:67-112`), point reads
   * (`:192-204`), a dynamic filtered query (`:206-330`), and chunk reassembly
-  * (`:120-190`). Here the container is a user-partitioned Parquet table; the
+  * (`:120-190`). Here the container is a user-bucketed Parquet table; the
   * dynamic SQL builder becomes a composed `Column` predicate that Catalyst
   * pushes into the scan; partition-key routing becomes partition pruning.
   *
-  * Scale posture: `user_id` is both the physical partition column (pruned
-  * point lookups) and the shuffle key for reassembly, so the chunk gather is
-  * one hash-partitioned aggregation — no per-document round trips.
+  * Scale posture: like Cosmos, which hashes the logical `/UserId` key into a
+  * bounded set of physical partitions, the store hashes each user into one
+  * of [[UserBuckets]] `user_bucket` directories. Opening the store lists a
+  * bounded number of directories on the driver, however many users it
+  * holds, and [[forUser]] still prunes every user-scoped read to one
+  * directory. `user_id` stays the shuffle key for reassembly, so the chunk
+  * gather is one hash-partitioned aggregation — no per-document round trips.
   */
 object LogStore {
 
@@ -87,19 +91,56 @@ object LogStore {
         when(col("split_index") === 0, lit(null: String))
           .otherwise(col("parent_id")).as("parent_log_id"))
 
-  /** Sink: append the log table partitioned by user — the engine's form of
-    * the reference's partition-keyed container writes (R1/R2/R3). Partition
-    * pruning then serves every user-scoped read.
+  /** Sink: append the log table partitioned by user bucket — the engine's
+    * form of the reference's partition-keyed container writes (R1/R2/R3).
+    * [[forUser]] then prunes every user-scoped read to one directory.
     *
-    * Rows are hash-repartitioned by `user_id` first, so each user directory
-    * gets one file per call (a file costs far more to create than to fill).
-    * The partition count is explicit, `defaultParallelism`: with
+    * Each row goes to `user_bucket = pmod(hash(user_id), UserBuckets)`;
+    * `user_id` stays an ordinary data column. Rows are repartitioned by
+    * bucket and sorted by (bucket, user, creation time) within partitions,
+    * so each bucket directory gets one file per call (a file costs far more
+    * to create than to fill) and each user's rows sit together in it. The
+    * partition count is explicit, `defaultParallelism`: with
     * `repartition(col)` alone, AQE coalesces a small batch into one serial
     * writer task.
     */
-  def writeLogs(logs: DataFrame, path: String): Unit =
-    logs.repartition(logs.sparkSession.sparkContext.defaultParallelism, col("user_id"))
-      .write.mode("append").partitionBy("user_id").parquet(path)
+  def writeLogs(logs: DataFrame, path: String): Unit = {
+    val bucket = col(BucketColumn)
+    logs.withColumn(BucketColumn, userBucket(col("user_id")))
+      .repartition(logs.sparkSession.sparkContext.defaultParallelism, bucket)
+      .sortWithinPartitions(bucket, col("user_id"), col("js_time_of_creation"))
+      .write.mode("append").partitionBy(BucketColumn).parquet(path)
+  }
+
+  /** Bucket directories of a store [[writeLogs]] writes. At most 32 keeps
+    * Spark's listing of the store on the driver
+    * (`spark.sql.sources.parallelPartitionDiscovery.threshold`, default 32);
+    * past it, every open runs a listing job with one task per directory.
+    * 16 rather than 32: 32 sits on the threshold, so one stray directory
+    * beside the buckets would bring the listing job back, and it splits
+    * every batch into nearly twice the files. 16 rather than 8: a bucket is
+    * written by one task, so 8 caps a batch's write at 8 tasks, and each
+    * file a read scans holds twice the users. The log-store benchmark's
+    * small stores do not separate 8, 16 and 32 (SCALING.md).
+    */
+  val UserBuckets = 16
+
+  /** The partition column of a store [[writeLogs]] writes. */
+  val BucketColumn = "user_bucket"
+
+  /** A user's bucket: Spark's Murmur3 `hash` of the id, modulo [[UserBuckets]]. */
+  def userBucket(userId: Column): Column = pmod(hash(userId), lit(UserBuckets))
+
+  /** The one-user predicate every user-scoped read shares. On a store with a
+    * [[BucketColumn]] it also names the user's bucket, which Catalyst folds
+    * to a literal, so the scan prunes to one directory; otherwise (in-memory
+    * frames, stores partitioned by `user_id`) it is the plain `user_id`
+    * equality.
+    */
+  def forUser(logs: DataFrame, userId: String): Column =
+    if (logs.columns.contains(BucketColumn))
+      col(BucketColumn) === userBucket(lit(userId)) && col("user_id") === userId
+    else col("user_id") === userId
 
   /** Ingest-telemetry metrics attached via `Dataset.observe` — rows, chunked
     * rows, compressed bytes flow out through a QueryExecutionListener (or
@@ -114,11 +155,11 @@ object LogStore {
       sum(length(col("zipped_log")).cast("long")).as("zipped_bytes"))
 
   /** Point read by (partition key, id) — reference `loadDocument`
-    * (`BigDataLogControl.cs:192-204`). Both predicates push down; with
-    * `partitionBy("user_id")` layout the scan prunes to one directory.
+    * (`BigDataLogControl.cs:192-204`). Both predicates push down, and
+    * [[forUser]] prunes the scan to one directory.
     */
   def pointLookup(logs: DataFrame, userId: String, docId: String): DataFrame =
-    logs.where(col("user_id") === userId && col("id") === docId)
+    logs.where(forUser(logs, userId) && col("id") === docId)
 
   /** The dynamic filtered query — reference `getLogChangesByType`
     * (`BigDataLogControl.cs:206-330`), with its *intended* semantics (the
@@ -136,7 +177,7 @@ object LogStore {
       eventType: Option[String] = None,
       limit: Int = 100): DataFrame = {
     val preds = Seq(
-      userId.map(col("user_id") === _),
+      userId.map(forUser(logs, _)),
       eventType.map(col("event_type") === _),
       startMs.map(col("js_time_of_creation") >= _),
       endMs.map(col("js_time_of_creation") < _)) // half-open: end excluded
@@ -248,7 +289,7 @@ object LogStore {
         lit(0).as("split_index"))
     else
       reassemble(logs.where(
-        col("user_id") === userId &&
+        forUser(logs, userId) &&
           (col("id") === parentId || col("parent_log_id") === parentId)))
   }
 

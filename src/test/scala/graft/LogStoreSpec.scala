@@ -80,23 +80,50 @@ class LogStoreSpec extends SparkSpec {
       Seq(1700000000002L, 1700000000001L))
   }
 
+  /** Partition directories the executed scan of `df` read (`df` must have run). */
+  private def partitionsRead(df: org.apache.spark.sql.DataFrame): Long = {
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val scans = helper.collect(df.queryExecution.executedPlan) {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+    }
+    assert(scans.length == 1, s"expected one file scan:\n${df.queryExecution.executedPlan}")
+    scans.head.metrics("numPartitions").value
+  }
+
+  private def partitionDirs(dir: String, column: String): Seq[String] =
+    new java.io.File(dir).list().toSeq.filter(_.startsWith(s"$column=")).sorted
+
+  /** The bucket directories the writer's own bucket expression sends `users` to. */
+  private def bucketDirs(users: Seq[String]): Seq[String] =
+    users.toDF("user_id").select(LogStore.userBucket(col("user_id"))).as[Int].collect()
+      .distinct.map(b => s"${LogStore.BucketColumn}=$b").sorted.toSeq
+
   test("partitioned write + pruned point lookup round-trip") {
     val dir = Files.createTempDirectory("logstore").toFile.getAbsolutePath + "/logs"
-    val logs = LogStore.ingest(mkDocs("u1" -> "payload one", "u2" -> "payload two"))
+    val users = (1 to 6).map(i => s"u$i")
+    val logs = LogStore.ingest(mkDocs(users.map(u => u -> s"payload of $u"): _*))
     LogStore.writeLogs(logs, dir)
+    // physical layout is user-bucketed: bucket directories, no user directory
+    val buckets = bucketDirs(users)
+    assert(buckets.length > 1, s"fixture users must span several buckets: $buckets")
+    assert(partitionDirs(dir, LogStore.BucketColumn) == buckets)
+    assert(partitionDirs(dir, "user_id").isEmpty)
     val back = spark.read.parquet(dir)
-    // take the id from the WRITTEN data: ingest ids are nondeterministic
-    // (ULID minted at eval time), so re-evaluating `logs` would mint new ones
-    val id = back.where(col("user_id") === "u1").head().getAs[String]("id")
-    val hit = LogStore.pointLookup(back, "u1", id)
-    assert(hit.count() == 1)
-    assert(Codec.unzipStr(hit.head().getAs[Array[Byte]]("zipped_log")) == "payload one")
-    // physical layout is user-partitioned (pruning serves user-scoped reads)
-    assert(new java.io.File(s"$dir/user_id=u1").exists())
-    // ... and the scan actually prunes: the partition filter reaches the scan
-    val plan = hit.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("user_id"),
-      s"expected user_id partition filter in scan:\n$plan")
+    for (u <- users) {
+      // take the id from the WRITTEN data: ingest ids are nondeterministic
+      // (ULID minted at eval time), so re-evaluating `logs` would mint new ones
+      val id = back.where(col("user_id") === u).head().getAs[String]("id")
+      val hit = LogStore.pointLookup(back, u, id)
+      val rows = hit.collect()
+      assert(rows.length == 1)
+      assert(Codec.unzipStr(rows.head.getAs[Array[Byte]]("zipped_log")) == s"payload of $u")
+      // ... and the scan actually prunes: the bucket filter reaches the scan
+      // and only the user's bucket directory is read
+      val plan = hit.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters") && plan.contains(LogStore.BucketColumn),
+        s"expected ${LogStore.BucketColumn} partition filter in scan:\n$plan")
+      assert(partitionsRead(hit) == 1, s"point lookup of $u read more than one directory:\n$plan")
+    }
   }
 
   test("ingest plan: chunking runs in a Generate, not folded into the LocalRelation") {
@@ -119,23 +146,41 @@ class LogStoreSpec extends SparkSpec {
         s"LocalRelation carries ${a.name}: ${a.dataType}:\n$plan")
   }
 
-  test("writeLogs: one file per user directory per call, a split document in one file") {
+  test("writeLogs: one file per bucket dir per call, a split document in one file") {
     implicit val s = spark
     def md5(str: String) = java.security.MessageDigest.getInstance("MD5")
       .digest(str.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toSeq
     val big = TestText.random(4 * 1024 * 1024, seed = 23)
-    val users = Seq("u1", "u2", "u3", "u4", "u5")
-    val docs = mkDocs(("u1" -> big) +: users.tail.flatMap(u => Seq(u -> s"$u one", u -> s"$u two")): _*)
+    val users = (1 to 24).map(i => s"u$i")
+    // users arrive in reverse order, so only the writer's sort groups them
+    val docs = mkDocs(users.reverse.flatMap(u => Seq(u -> s"$u one", u -> s"$u two")) :+ ("u1" -> big): _*)
     val dir = Files.createTempDirectory("layout").toFile.getAbsolutePath + "/logs"
+    val buckets = bucketDirs(users)
+    assert(buckets.length < users.length, "fixture users must share a bucket")
     for (call <- 1 to 2) {
       LogStore.writeLogs(LogStore.ingest(docs), dir)
-      for (u <- users) {
-        val files = new java.io.File(s"$dir/user_id=$u").list()
+      assert(partitionDirs(dir, LogStore.BucketColumn) == buckets)
+      for (b <- buckets) {
+        val files = new java.io.File(s"$dir/$b").list()
           .filter(f => f.startsWith("part-") && f.endsWith(".parquet"))
-        assert(files.length == call, s"user_id=$u after call $call: ${files.toSeq}")
+        assert(files.length == call, s"$b after call $call: ${files.toSeq}")
       }
     }
     val back = spark.read.parquet(dir)
+    // every user's rows sit in exactly one bucket directory, the one its id hashes to
+    val placed = back.groupBy("user_id")
+      .agg(countDistinct(col(LogStore.BucketColumn)),
+        sum((col(LogStore.BucketColumn) =!= LogStore.userBucket(col("user_id"))).cast("int")))
+      .as[(String, Long, Long)].collect()
+    assert(placed.map(_._1).sorted.toSeq == users.sorted)
+    for ((u, n, misplaced) <- placed)
+      assert(n == 1 && misplaced == 0, s"$u in $n buckets, $misplaced rows outside its own")
+    // ... and sit together in its file, oldest first
+    for (f <- back.inputFiles) {
+      val order = spark.read.parquet(f).select("user_id", "js_time_of_creation")
+        .as[(String, Long)].collect().toSeq
+      assert(order == order.sorted, s"$f rows not grouped by user and time: $order")
+    }
     val parents = back
       .where(col("user_id") === "u1" && col("parent_log_id").isNull && col("total_splits") > 1)
       .select("id").as[String].collect()
@@ -148,8 +193,79 @@ class LogStoreSpec extends SparkSpec {
       val got = LogStore.getCombined(back, "u1", p).head().getAs[String]("payload")
       assert(md5(got) == md5(big))
       val plan = LogStore.pointLookup(back, "u1", p).queryExecution.executedPlan.toString
-      assert(plan.contains("PartitionFilters") && plan.contains("user_id"),
+      assert(plan.contains("PartitionFilters") && plan.contains(LogStore.BucketColumn),
+        s"expected ${LogStore.BucketColumn} partition filter in scan:\n$plan")
+    }
+  }
+
+  test("opening a store of many users lists it on the driver, no Spark job") {
+    val users = (0 until 100).map(i => f"user$i%03d")
+    val dir = Files.createTempDirectory("listing").toFile.getAbsolutePath + "/logs"
+    LogStore.writeLogs(LogStore.ingest(mkDocs(users.map(u => u -> s"$u payload"): _*)), dir)
+    val dirs = partitionDirs(dir, LogStore.BucketColumn)
+    assert(dirs.nonEmpty && dirs.length <= LogStore.UserBuckets, s"bucket dirs: $dirs")
+    val schema = spark.read.parquet(dir).schema
+    // listener events arrive in submission order, so once the marker job is
+    // seen every job the open submitted has been seen too
+    val group = "logstore-open"
+    val marker = "logstore-open-marker"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "open")
+      val opened = try spark.read.schema(schema).parquet(dir) finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      var waited = 0
+      while (!groups.contains(marker) && waited < 100) { Thread.sleep(100); waited += 1 }
+      assert(groups.contains(marker), "marker job never reached the listener")
+      val openJobs = groups.toArray.count(_ == group)
+      assert(openJobs == 0, s"opening the store submitted $openJobs Spark job(s)")
+      assert(opened.inputFiles.length == dirs.length, "one file per bucket directory")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("stores partitioned by user_id still answer and prune on user_id") {
+    implicit val s = spark
+    val big = TestText.random(4 * 1024 * 1024, seed = 29)
+    val dir = Files.createTempDirectory("peruser").toFile.getAbsolutePath + "/logs"
+    // the layout the streaming sink writes (q_stream_ingest)
+    LogStore.ingest(mkDocs("u1" -> big, "u1" -> "u1 small", "u2" -> "u2 small"))
+      .write.partitionBy("user_id").parquet(dir)
+    assert(partitionDirs(dir, "user_id") == Seq("user_id=u1", "user_id=u2"))
+    val back = spark.read.parquet(dir)
+    assert(!back.columns.contains(LogStore.BucketColumn))
+    def prunesOnUser(df: org.apache.spark.sql.DataFrame): Unit = {
+      val plan = df.queryExecution.executedPlan.toString
+      assert("""PartitionFilters: \[[^\]]*\(user_id#\d+ = u1\)""".r.findFirstIn(plan).isDefined,
         s"expected user_id partition filter in scan:\n$plan")
+    }
+    val parents = back.where(col("user_id") === "u1" && col("parent_log_id").isNull)
+      .select("id", "total_splits").as[(String, Int)].collect().toMap
+    assert(parents.size == 2)
+    val (splitId, _) = parents.find(_._2 > 1).get
+    val (smallId, _) = parents.find(_._2 == 1).get
+
+    val hit = LogStore.pointLookup(back, "u1", smallId)
+    val rows = hit.collect()
+    assert(rows.length == 1 && Codec.unzipStr(rows.head.getAs[Array[Byte]]("zipped_log")) == "u1 small")
+    prunesOnUser(hit)
+    assert(partitionsRead(hit) == 1)
+
+    val recent = LogStore.logChangesByType(back, userId = Some("u1"), limit = 100)
+    val recentRows = recent.select("user_id", "split_index").as[(String, Int)].collect()
+    assert(recentRows.length == parents(splitId) + 1 && recentRows.forall(_._1 == "u1"))
+    prunesOnUser(recent)
+
+    for ((id, want) <- Seq(splitId -> big, smallId -> "u1 small")) {
+      val combined = LogStore.getCombined(back, "u1", id)
+      assert(combined.head().getAs[String]("payload") == want)
+      prunesOnUser(combined)
     }
   }
 

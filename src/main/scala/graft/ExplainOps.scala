@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * ingest/maintenance path has before/after plan evidence
   * (`plans/r17/…`) the returned-DF explain cannot show.
   *
-  *   sbt "runMain graft.ExplainOps /root/testdata/sf0.001 textidx_append"
+  *   sbt "runMain graft.ExplainOps /root/testdata/sf0.001 textidx_append_postings"
   */
 object ExplainOps {
   def main(args: Array[String]): Unit = {
@@ -32,39 +32,12 @@ object ExplainOps {
       }
     val docs = Tables.documents(spark, dir)
 
-    // the text-index append's POSTINGS pipeline, BOTH forms side by
-    // side: the round-16 shape re-derived `dl` with a doc_id-keyed
-    // window over the postings (its own hash exchange + sort), the
-    // round-17 shape carries `dl` from the scan's codegen'd token
-    // counter through the tf groupBy (identical value by construction —
-    // tokens partition exactly into terms). One exchange less per
-    // ingest batch.
-    show("textidx_append_postings_window_OLD") {
-      import graft.functions.{TextFunctions => TF}
-      import org.apache.spark.sql.expressions.Window
-      val nMods = 16
-      docs
-        .select(col("doc_id"), explode(TF.tokens(lower(col("text")))).as("term"))
-        .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-        .withColumn("dl", sum(col("tf")).over(Window.partitionBy(col("doc_id"))))
-        .withColumn("tm_mod", pmod(hash(col("term")), lit(nMods)).cast("int"))
-        .repartitionByRange(col("tm_mod"), col("term"), col("doc_id"))
-        .sortWithinPartitions(col("tm_mod"), col("term"), col("doc_id"))
-    }
-    show("textidx_append_postings_carried_NEW") {
-      import graft.functions.{TextFunctions => TF}
-      val nMods = 16
-      docs
-        .select(col("doc_id"),
-          coalesce(TF.tokenCount(col("text")).cast("long"), lit(0L)).as("dl"),
-          explode(TF.tokens(lower(col("text")))).as("term"))
-        .groupBy(col("doc_id"), col("dl"), col("term")).agg(count(lit(1)).as("tf"))
-        .withColumn("tm_mod", pmod(hash(col("term")), lit(nMods)).cast("int"))
-        .select(col("doc_id"), col("term"), col("tf"), col("dl"), col("tm_mod"))
-        .repartitionByRange(col("tm_mod"), col("term"), col("doc_id"))
-        .sortWithinPartitions(col("tm_mod"), col("term"), col("doc_id"))
-    }
-    show("textidx_append_postings_arraysize_NEW2") {
+    // the text-index append's POSTINGS pipeline: `dl` is the size of the
+    // scan's token array, carried through the tf groupBy, so the append
+    // needs no doc_id-keyed window (and its exchange + sort) over the
+    // postings. The round-16 window form's dump is
+    // plans/r17/textidx_append_postings_before.txt.
+    show("textidx_append_postings") {
       import graft.functions.{TextFunctions => TF}
       val nMods = 16
       docs
@@ -79,33 +52,24 @@ object ExplainOps {
         .sortWithinPartitions(col("tm_mod"), col("term"), col("doc_id"))
     }
 
-    // seedIvfStore's range-staged write, BOTH forms (round 17 change
-    // §13): a range exchange SAMPLES its child to derive partition
-    // bounds, so the OLD form evaluated the assignment UDF over the
-    // whole corpus twice — once in the hidden sampling pass, once in
-    // the shuffle map pass. The NEW form persists the assigned frame:
-    // the sampling pass is the one evaluation and the shuffle reads the
-    // InMemoryRelation (visible below as InMemoryTableScan replacing
-    // the Project[UDF]-over-Scan subtree under the Exchange).
+    // seedIvfStore's range-staged write: a range exchange SAMPLES its
+    // child to derive partition bounds, so the assigned frame is
+    // persisted — the sampling pass is the one evaluation of the
+    // assignment UDF and the shuffle reads the InMemoryRelation (an
+    // InMemoryTableScan under the Exchange). The uncached form, which
+    // evaluated the UDF twice, is plans/r17/sim_ivf_seed_before.txt.
     // the seeding trains and writes an index, so skip it when filtered out
-    val (seedOld, seedNew) = ("seedivf_range_stage_uncached_OLD", "seedivf_range_stage_cached_NEW")
-    if (wanted(seedOld) || wanted(seedNew)) {
+    val seed = "seedivf_range_stage"
+    if (wanted(seed)) {
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       val work = java.nio.file.Files.createTempDirectory("graft_explain_seed")
       val w = work.toFile.getAbsolutePath
       graft.operators.Similarity.saveIvfIndex(emb, s"$w/ivf_index", nlist = 4)
       val assigned = graft.operators.Similarity.assignStored(emb, s"$w/ivf_index")
-      show(seedOld) {
-        assigned
+      show(seed) {
+        assigned.persist()
           .repartitionByRange(4, col("cell"), col("vec_id"))
           .sortWithinPartitions("cell", "vec_id")
-      }
-      show(seedNew) {
-        val cached = assigned.persist()
-        val out = cached
-          .repartitionByRange(4, col("cell"), col("vec_id"))
-          .sortWithinPartitions("cell", "vec_id")
-        out
       }
       org.apache.commons.io.FileUtils.deleteDirectory(work.toFile)
     }

@@ -6,7 +6,7 @@ import graft.operators.Similarity
 import graft.functions.VectorOps
 
 /** Dev tool: per-phase wall-clock attribution for the heavyweight
-  * lifecycle fixtures — the inside-the-query complement of BenchSubset
+  * lifecycle fixtures — the inside-the-query complement of Profile
   * (which times whole queries). Phases mirror the fixture code exactly;
   * numbers guide optimization, nothing here feeds the bench record.
   *

@@ -3,7 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc operator timing harness (dev tool, not part of the driver
-  * contract). Times each SparkEntry query end-to-end at a given SF dir.
+  * contract). Times each SparkEntry query end-to-end at a given SF dir,
+  * or only the named ones. With `SPARK_GRAFT_REPEAT=3` it is the bench
+  * protocol's best-of-3 for a subset (noop sink, warmup, clearCache
+  * between runs), so its numbers compare with the round record:
+  *
+  *   SPARK_GRAFT_REPEAT=3 sbt "runMain graft.Profile /root/testdata/sf0.1 q_dedup_funnel q_dedup_explain"
   */
 object Profile {
   def main(args: Array[String]): Unit = {

@@ -1,21 +1,14 @@
 package graft
 
-import graft.functions.{Codec, TextFunctions => TF, VectorOps}
-import graft.operators.{Dedup, Multimodal, Similarity}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import graft.queries._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — the declared query inventory (SURVEY.md §2.3).
   *
-  * Every query ends in an explicit total order (or is uniquely keyed by its
-  * group-by) so the driver's hash compare is deterministic, and every
-  * floating-point aggregate is summed in DECIMAL then cast to DOUBLE so
-  * Spark's parallel partial aggregation and DuckDB's serial sum produce the
-  * same bits regardless of addition order.
-  *
-  * Column names are aligned 1:1 between each Spark query and its oracle SQL
-  * (the driver sorts columns by name before hashing).
+  * Each query is declared once, beside its oracle SQL, as a
+  * [[graft.queries.Query]] in one family module under `graft.queries`;
+  * this registry derives the two maps the driver mains read from those
+  * declarations.
   */
 object SparkEntry {
 
@@ -23,385 +16,7 @@ object SparkEntry {
     * semantics (`BigDataLogControl.cs:206-268`); driver smoke-checks rows>0.
     */
   def entry(spark: SparkSession): DataFrame =
-    logComposite(spark, "/root/testdata/sf0.001")
-
-  // ---- shared table handles -------------------------------------------------
-
-  private def events(s: SparkSession, d: String)     = Tables.events(s, d)
-  private def documents(s: SparkSession, d: String)  = Tables.documents(s, d)
-  private def embeddings(s: SparkSession, d: String) = Tables.embeddings(s, d)
-
-  /** Per-JVM cache of ingested scratch layouts keyed by sf dir: queries that
-    * declare a READ over a written layout (partitioned lookup, doubled
-    * stream input) materialize the write exactly once, so repeat
-    * invocations — the bench's best-of-N in particular — time the read path
-    * they advertise. Dirs live under java.io.tmpdir and are removed on exit.
-    */
-  private val scratchDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Shared dedup artifact store: the minhash-signature, shingle-set and
-    * content-defined-window tables are pure functions of the corpus text,
-    * so they are computed ONCE per input dir, written to scratch parquet,
-    * and every dedup tier of every dashboard query reads the store instead
-    * of re-deriving from raw text (the judge-flagged r6-r8 recompute). This
-    * is the production shape at 100 TB too: a curation pipeline stores
-    * these tables next to the corpus and appends them on ingest (see
-    * [[graft.operators.Dedup.minhashIncremental]]'s corpus-index contract).
-    * Disk, not `persist()`, because the store must outlive any one query's
-    * cache lifetime. Parameters match the dashboard tiers: n=3 word
-    * shingles, 32 perms, width=40 windows.
-    */
-  /** The dashboard queries additionally read the two expensive TIER
-    * RESULTS materialized at store-build time: the transitive-fuzzy drop
-    * set and the per-doc substring dup mass. A curation dashboard renders
-    * the state of a dedup RUN; it does not re-run the closure per view.
-    * The operators themselves stay live-benched in their dedicated queries
-    * (`q_dedup_transitive`, `q_dedup_substring_mass`).
-    */
-  private final case class DedupStore(art: Dedup.Artifacts,
-      fuzzyDrops: DataFrame, mass: DataFrame, edges07: DataFrame)
-
-  /** The canonical store parameters every dashboard consumer declares:
-    * n=3 word shingles, 32 perms, width-40 Karp-Rabin windows, and the
-    * bottom-80%-of-ids standing-corpus split for the census artifact.
-    * `dedupStoreParams` renders them for a given input dir; every read
-    * path asserts them against the store's pinned manifest, so a drift
-    * between store build and consumer fails loudly
-    * ([[graft.operators.Dedup.StoreManifest]]).
-    */
-  private val storeParamsCache =
-    scala.collection.concurrent.TrieMap.empty[String, Dedup.StoreParams]
-  private def dedupStoreParams(s: SparkSession, d: String): Dedup.StoreParams =
-    storeParamsCache.getOrElseUpdate(d,
-      Dedup.StoreParams(version = 1, n = 3, perms = 32, width = 40,
-        selection = "kr257-2p31m1-mod16",
-        censusThr = documents(s, d).agg(max(col("doc_id"))).head().getLong(0) * 4L / 5L))
-
-  private def dedupStoreRoot(s: SparkSession, d: String): String =
-    scratchDirs.getOrElseUpdate(s"dedupart:$d", {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_dedupart")
-      deleteRecursivelyOnExit(tmp)
-      val r = tmp.toFile.getAbsolutePath
-      val docs0 = documents(s, d)
-      val params = dedupStoreParams(s, d)
-      Dedup.sigTable(docs0).write.parquet(s"$r/sigs")
-      Dedup.shingleTable(docs0).write.parquet(s"$r/shingles")
-      Dedup.windowTable(docs0).write.parquet(s"$r/wins")
-      // tier results derive from the just-written tables, not raw text
-      val art = Dedup.Artifacts(
-        s.read.parquet(s"$r/sigs").persist(),
-        s.read.parquet(s"$r/shingles").persist(),
-        s.read.parquet(s"$r/wins").persist())
-      Dedup.minhashTransitiveDrops(docs0, minEstJaccard = 0.4,
-        verifyJaccard = Some(0.9), art = Some(art)).write.parquet(s"$r/fuzzy_drop")
-      Dedup.substringDupMass(docs0, width = 40, art = Some(art))
-        .write.parquet(s"$r/mass")
-      // the J >= 0.7 similarity GRAPH: edges are as much a corpus artifact
-      // as the drop set — graph analytics (PageRank, triangles) read the
-      // stored edge list; the AllPairs join that builds it stays
-      // live-benched in q_dedup_recall
-      Dedup.exactJaccardPairs(docs0, n = 3, minJaccard = 0.7, art = Some(art))
-        .write.parquet(s"$r/edges07")
-      // the PRE-AGGREGATED window census of the standing corpus (bottom
-      // 80% of ids): (win, n_docs), mergeable under append — the artifact
-      // the incremental substring tier semi-joins into instead of
-      // group-counting every stored corpus window per batch. Stored
-      // HASH-FANNED-OUT by window (win_mod partitions + its own pinned
-      // manifest) so the probe prunes to the increment's windows' mods
-      Dedup.writeCensusStore(
-        Dedup.windowCensus(art.winsPos.where(col("doc_id") < params.censusThr)),
-        s"$r/census80", width = 40)
-      Seq(art.sigs, art.shingles, art.winsPos).foreach(_.unpersist())
-      // pin the build parameters LAST: a manifest only exists once every
-      // artifact it describes is fully written
-      Dedup.StoreManifest.write(r, params)
-      r
-    })
-
-  private def dedupArtifacts(s: SparkSession, d: String): Dedup.Artifacts = {
-    val root = dedupStoreRoot(s, d)
-    Dedup.StoreManifest.check(root, dedupStoreParams(s, d))
-    // persist the handles: within one query each table feeds 2-3 consumers
-    // (band explode + both verify join sides), and the cached form spares
-    // the repeat parquet scans; across queries the DISK store is the share
-    Dedup.Artifacts(
-      sigs     = s.read.parquet(s"$root/sigs").persist(),
-      shingles = s.read.parquet(s"$root/shingles").persist(),
-      winsPos  = s.read.parquet(s"$root/wins").persist())
-  }
-
-  private def dedupStore(s: SparkSession, d: String): DedupStore = {
-    val root = dedupStoreRoot(s, d)
-    Dedup.StoreManifest.check(root, dedupStoreParams(s, d))
-    DedupStore(dedupArtifacts(s, d),
-      fuzzyDrops = s.read.parquet(s"$root/fuzzy_drop"),
-      mass       = s.read.parquet(s"$root/mass"),
-      edges07    = s.read.parquet(s"$root/edges07"))
-  }
-
-  /** Checked path of the standing-corpus window census store — the
-    * consumer declares the id threshold it expects the census to cover
-    * and the manifest assert fails on drift (the census store's own
-    * width/fanout manifest is checked by the pruned probe itself).
-    */
-  private def dedupCensusPath(s: SparkSession, d: String): String = {
-    val root = dedupStoreRoot(s, d)
-    Dedup.StoreManifest.check(root, dedupStoreParams(s, d))
-    s"$root/census80"
-  }
-
-  /** `(size, sha256)` snapshot of every data file under `root` — the
-    * cold-file identity signature the erasure/retention/compaction gates
-    * compare before/after a maintenance op (test-gate only: KB-scale
-    * fixture stores, never an operator cost). Manifest/metadata names
-    * are excluded so only data bytes sign.
-    */
-  private def snapStoreFiles(root: String): Map[String, (Long, String)] = {
-    val out = scala.collection.mutable.Map.empty[String, (Long, String)]
-    val rootP = java.nio.file.Paths.get(root)
-    val it = java.nio.file.Files.walk(rootP).iterator()
-    while (it.hasNext) {
-      val p = it.next()
-      val n = p.getFileName.toString
-      if (java.nio.file.Files.isRegularFile(p) &&
-          !n.startsWith("_") && !n.startsWith(".") &&
-          !n.endsWith("manifest.json") && n != "nmods") {
-        val b = java.nio.file.Files.readAllBytes(p)
-        val sha = java.security.MessageDigest.getInstance("SHA-256")
-          .digest(b).map("%02x".format(_)).mkString
-        out(rootP.relativize(p).toString) = (b.length.toLong, sha)
-      }
-    }
-    out.toMap
-  }
-
-  /** Multiset (bag) equality of two frames in ONE aggregation pass — the
-    * gate primitive behind the "two-direction exceptAll" invariants. The
-    * exceptAll pair costs two actions, EACH re-running both legs through
-    * a replicate-and-subtract plan, so an expensive oracle twin (a census
-    * rebuild, a full-scan scorer) executed 2× per gate. Here each leg
-    * runs exactly once: +1/−1 weights unioned, grouped on the row, net
-    * sum ≠ 0 anywhere ⇔ the bags differ. NULL keys group together,
-    * matching exceptAll's null-safe equality, so the predicate is
-    * value-identical to `a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty`.
-    */
-  private def multisetEqual(a: org.apache.spark.sql.DataFrame,
-                            b: org.apache.spark.sql.DataFrame): Boolean = {
-    val cols = a.columns.toSeq
-    a.withColumn("_w", lit(1L))
-      .unionByName(b.toDF(cols: _*).withColumn("_w", lit(-1L)))
-      .groupBy(cols.map(col): _*).agg(sum(col("_w")).as("_net"))
-      .where(col("_net") =!= 0L)
-      .isEmpty
-  }
-
-  /** Shared STORED TEXT (BM25 inverted) index over the documents corpus,
-    * built once per input dir in the incremental shape (two batch
-    * appends split at doc_id 250 — the id split every SF covers), so the
-    * read-only consumers (`q_bm25_stored`, `q_hybrid_search_indexed`)
-    * time the SERVE path they advertise. Mutating gates (delete /
-    * retention / compaction) build their own throwaway stores.
-    */
-  private def textIndexRoot(s: SparkSession, d: String): String =
-    scratchDirs.getOrElseUpdate(s"textidx:$d", {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_textidx")
-      deleteRecursivelyOnExit(tmp)
-      val r = tmp.toFile.getAbsolutePath + "/text_index"
-      val docs0 = documents(s, d)
-      // positions enabled: the shared fixture also serves the phrase/
-      // proximity gates (the positional tier is opt-in per store; the
-      // flat serves never read it). Both arrival slices append
-      // concurrently — disjoint batch= dirs commute (the backfill shape)
-      graft.operators.TextIndex.appendTextIndexBatches(
-        Seq(docs0.where(col("doc_id") < 250L) -> 0L,
-            docs0.where(col("doc_id") >= 250L) -> 1L), r,
-        withPositions = true)
-      r
-    })
-
-  /** Shared scratch for the stateful-catch-up pair: two arrivals, two
-    * `catchUpRunningTotals` runs against one checkpoint. `q_availablenow_
-    * totals` declares the served table; `q_state_reader` reads the same
-    * checkpoint's STATE STORE back as data.
-    */
-  private def availTotalsRoot(s: SparkSession, d: String): String =
-    scratchDirs.getOrElseUpdate(s"availtotals:$d", {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_availtotals")
-      deleteRecursivelyOnExit(tmp)
-      val r = tmp.toFile.getAbsolutePath
-      val ev = events(s, d).select("event_id", "user_id", "event_type", "value")
-      ev.where(col("event_id") % 2 === 0).write.parquet(s"$r/in")
-      graft.streaming.EventStreams.catchUpRunningTotals(s, s"$r/in", s"$r/tgt")
-      // snapshot the run-1 state before run 2 overwrites it: q_cdc_diff
-      // declares the change feed between the two served versions
-      s.read.parquet(s"$r/tgt/current")
-        .write.parquet(s"$r/tgt/snap1")
-      ev.where(col("event_id") % 2 =!= 0).write.mode("append").parquet(s"$r/in")
-      graft.streaming.EventStreams.catchUpRunningTotals(s, s"$r/in", s"$r/tgt")
-      r
-    })
-
-  /** Four id-ordered arrival slices of the documents table as single
-    * parquet files (per-JVM cached): the shared fixture of the streaming
-    * ingest queries. FileStreamSource processes oldest-mtime-first, so
-    * write order = arrival order = id order; mtimes come from the
-    * explicit ladder in [[stampSliceMtime]].
-    */
-  private def docSlices(s: SparkSession, d: String): String =
-    scratchDirs.getOrElseUpdate(s"fuzzyslices:$d", {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_fuzzyslices")
-      deleteRecursivelyOnExit(tmp)
-      val out = tmp.toFile.getAbsolutePath + "/slices"
-      val docs0 = documents(s, d)
-      val mx = docs0.agg(max(col("doc_id"))).head().getLong(0) + 1
-      val base = System.currentTimeMillis()
-      (0 until 4).foreach { i =>
-        docs0.where(col("doc_id") >= i * mx / 4 && col("doc_id") < (i + 1) * mx / 4)
-          .coalesce(1).write.mode("append").parquet(out)
-        stampSliceMtime(out, i, base)
-      }
-      out
-    })
-
-  /** Stamp the just-written data files of arrival slice `i` (any file in
-    * `dir` whose mtime is within a minute of `base`) onto an explicit
-    * strictly-increasing mtime ladder an hour in the past. FileStreamSource
-    * orders files by timestamp; relying on the filesystem clock between
-    * sequential writes ties slices on 1-second-granularity filesystems and
-    * silently breaks the arrival-order-=-id-order premise the streaming
-    * oracles depend on. Earlier slices already sit on (older) ladder rungs,
-    * so only the new slice's files match the near-now window.
-    */
-  /** Shared id-ordered embedding-slice fixture for the streaming ANN
-    * queries: 4 parquet slices with an explicit mtime ladder so arrival
-    * order = id order even on coarse filesystem clocks (production
-    * arrival order comes from the SOURCE — a queue offset or ingest
-    * sequence — not from mtimes; the ladder only makes the fixture
-    * deterministic). The 1-row max-id sniff sizing the slices is an
-    * audited bounded collect.
-    */
-  /** Expanded-corpus fixture for the coarse-assignment gate
-    * (`q_sim_ivf_coarse`): 16 deterministic jittered copies of every
-    * embedding row (new id = orig·16 + copy; copy 0 unjittered; jitter =
-    * hash-keyed uniform ±0.1 per component — expected jitter norm
-    * ≈ √(64·0.01/3) ≈ 0.46, i.e. ~46% of the unit-norm vectors, which
-    * still leaves intra-copy cosine ~0.9 vs inter-cluster ~0.13), so a
-    * 500-row table becomes an 8000-row corpus of 500 TIGHT clusters —
-    * enough rows to train a 2048-cell quantizer, and the clustered
-    * geometry a real embedding corpus has (the regime the two-level
-    * assigner's 0.96 agreement floor was measured on, vs 0.38 on i.i.d.
-    * gaussian — SCALING.md round 12). Pure column expressions, no collect.
-    */
-  private def embExpanded(s: SparkSession, d: String): String =
-    embExpandedN(s, d, factor = 16)
-
-  /** 256×-expanded sibling for the LAKE-SCALE training gate
-    * (`q_sim_ivf_hier`): 128k rows at the correctness SF — enough that a
-    * distributed ≥ 8×nlist sample exists for nlist 8192. Written as 32
-    * files so downstream scans parallelize.
-    */
-  private def embExpandedWide(s: SparkSession, d: String): String =
-    embExpandedN(s, d, factor = 256)
-
-  private def embExpandedN(s: SparkSession, d: String, factor: Int): String =
-    scratchDirs.getOrElseUpdate(s"embexpanded$factor:$d", {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_embexp")
-      deleteRecursivelyOnExit(tmp)
-      val out = tmp.toFile.getAbsolutePath + "/corpus"
-      // `label` rides through unchanged (constant per cluster — every copy
-      // inherits its original's label), giving the clustered fixtures a
-      // pushable relational attribute for the filtered-ANN gate
-      val expanded = embeddings(s, d)
-        .select(col("vec_id"), col("embedding"), col("label"),
-          explode(sequence(lit(0), lit(factor - 1))).as("copy"))
-        .select((col("vec_id") * factor + col("copy")).as("vec_id"),
-          when(col("copy") === 0, col("embedding"))
-            .otherwise(transform(col("embedding"),
-              (x, j) => (x.cast("double") +
-                (pmod(xxhash64(col("vec_id"), col("copy"), j), lit(1001))
-                  .cast("double") / lit(1000.0) - lit(0.5)) * lit(0.2))
-                .cast("float")))
-            .as("embedding"),
-          col("label"))
-      // the 16× fixture stays one file (its consumers re-partition through
-      // shuffles anyway); the wide fixture fans out so the corpus-side
-      // scans don't serialize on a single 100+ MB parquet split
-      (if (factor >= 64) expanded.repartition(32, col("vec_id"))
-       else expanded.coalesce(1))
-        .write.mode("overwrite").parquet(out)
-      out
-    })
-
-  /** Drifting-arrival fixture for the hot-cell maintenance gate
-    * (`q_sim_ivf_hotsplit`): slices 0–1 are the base embeddings (the
-    * bootstrap's uniform world); slices 2–3 are a CONCENTRATED drop —
-    * `max(64, base/8)` tight jittered near-clones of each of originals
-    * 0–3 (ids beyond the base range, ±0.02/component jitter so every
-    * clone stays in its original's cell) — so the quantizer trained on
-    * the bootstrap batch watches mass pile into a few cells while the
-    * store-wide MEAN stays unremarkable. Same mtime ladder as
-    * [[embSlices]].
-    */
-  private def embDriftSlices(s: SparkSession, d: String): String =
-    scratchDirs.getOrElseUpdate(s"embdrift:$d", {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_embdrift")
-      deleteRecursivelyOnExit(tmp)
-      val out = tmp.toFile.getAbsolutePath + "/slices"
-      val e = embeddings(s, d)
-      val mx = e.agg(max(col("vec_id"))).head().getLong(0) + 1
-      val baseN = e.count()
-      val copies = math.max(64L, (baseN + 7) / 8)
-      val base = System.currentTimeMillis()
-      (0 until 2).foreach { i =>
-        e.where(col("vec_id") >= i * mx / 2 && col("vec_id") < (i + 1) * mx / 2)
-          .coalesce(1).write.mode("append").parquet(out)
-        stampSliceMtime(out, i, base)
-      }
-      (2 until 4).foreach { i =>
-        val lo = (i - 2) * copies / 2
-        val hi = (i - 1) * copies / 2 - 1
-        e.where(col("vec_id") < 4)
-          .select(col("vec_id"), col("embedding"), col("label"),
-            explode(sequence(lit(lo), lit(hi))).as("copy"))
-          .select((lit(mx) + col("vec_id") * copies + col("copy")).as("vec_id"),
-            transform(col("embedding"),
-              (x, j) => (x.cast("double") +
-                (pmod(xxhash64(col("vec_id"), col("copy"), j), lit(1001))
-                  .cast("double") / lit(1000.0) - lit(0.5)) * lit(0.04))
-                .cast("float")).as("embedding"),
-            col("label"))
-          .coalesce(1).write.mode("append").parquet(out)
-        stampSliceMtime(out, i, base)
-      }
-      out
-    })
-
-  private def embSlices(s: SparkSession, d: String): String =
-    scratchDirs.getOrElseUpdate(s"embslices:$d", {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_embslices")
-      deleteRecursivelyOnExit(tmp)
-      val out = tmp.toFile.getAbsolutePath + "/slices"
-      val e = embeddings(s, d)
-      val mx = e.agg(max(col("vec_id"))).head().getLong(0) + 1
-      val base = System.currentTimeMillis()
-      (0 until 4).foreach { i =>
-        e.where(col("vec_id") >= i * mx / 4 && col("vec_id") < (i + 1) * mx / 4)
-          .coalesce(1).write.mode("append").parquet(out)
-        stampSliceMtime(out, i, base)
-      }
-      out
-    })
-
-  private def stampSliceMtime(dir: String, i: Int, base: Long): Unit = {
-    val it = java.nio.file.Files.list(java.nio.file.Paths.get(dir)).iterator()
-    while (it.hasNext) {
-      val p = it.next()
-      if (java.nio.file.Files.getLastModifiedTime(p).toMillis >= base - 60000L)
-        java.nio.file.Files.setLastModifiedTime(p,
-          java.nio.file.attribute.FileTime.fromMillis(base - 3600000L + i * 2000L))
-    }
-  }
+    Fixtures.logComposite(spark, "/root/testdata/sf0.001")
 
   private[graft] def deleteRecursivelyOnExit(root: java.nio.file.Path): Unit =
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
@@ -412,9797 +27,23 @@ object SparkEntry {
           .forEach(p => { Files.deleteIfExists(p); () })
     }))
 
-  /** Exact decimal sum of a double column, cast back to double — immune to
-    * float addition-order divergence between engines.
-    */
-  private def dsum(c: Column, scale: Int = 2): Column =
-    sum(c.cast(s"decimal(18,$scale)")).cast("double")
+  /** Every declaration, family by family. */
+  private[graft] lazy val declared: Seq[Query] = Seq(
+    LogQueries.declared, ConnectorQueries.declared, AnalyticsQueries.declared,
+    RelationalQueries.declared, DedupQueries.declared,
+    SimilarityQueries.declared, TextIndexQueries.declared,
+    CorpusQueries.declared, MultimodalQueries.declared,
+    StreamingQueries.declared, LayoutQueries.declared).flatten
 
-  private def tsLit(s: String): Column = lit(s).cast("timestamp")
-
-  /** Half-open `[start, end)` time range, expressed on BOTH the raw-nanos
-    * column and the timestamp column. The two forms are exactly equivalent
-    * for whole-second bounds (X div 1000 >= T·1000 ⟺ X >= T·10⁶), and
-    * which one is the PHYSICAL scan column depends on the testdata
-    * generation (nanos-era files scan `ts` as a raw long surfaced as
-    * `ts_ns`; µs-era files scan `ts` as a native timestamp and derive
-    * `ts_ns`). Emitting both means the scan-column half always pushes down
-    * to parquet row-group pruning — at 100 TB this is pruning on the time
-    * axis — while the derived half is a cheap residual on surviving rows.
-    */
-  private def nsRange(startIso: String, endIso: String): Column = {
-    def ns(iso: String) =
-      java.time.Instant.parse(iso.replace(' ', 'T') + "Z").toEpochMilli * 1000000L
-    // the ts bound is built TZ-independently (timestamp_micros of the same
-    // UTC instant as the nanos bound, folded to a literal at plan time) —
-    // an ISO-string cast would parse in the SESSION time zone and silently
-    // narrow the conjunction for any non-UTC caller
-    def tsBound(iso: String) = timestamp_micros(lit(ns(iso) / 1000L))
-    (col("ts_ns") >= ns(startIso) && col("ts_ns") < ns(endIso)) &&
-      (col("ts") >= tsBound(startIso) && col("ts") < tsBound(endIso))
+  private lazy val byName: Map[String, Query] = {
+    val dups = declared.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    require(dups.isEmpty, s"query declared more than once: ${dups.toSeq.sorted.mkString(", ")}")
+    declared.map(q => q.name -> q).toMap
   }
 
-  // ---- [REF] core read path (M1) --------------------------------------------
-
-  private def logComposite(s: SparkSession, dir: String): DataFrame =
-    events(s, dir)
-      .where(col("user_id") === 7 && col("event_type") === "click" &&
-        nsRange("2024-01-05 00:00:00", "2024-01-20 00:00:00"))
-      .select("event_id", "ts", "user_id", "event_type", "value")
-      .orderBy(col("ts").desc, col("event_id"))
-      .limit(100)
-
-  /** Fixed-size chunk rows of documents.text — pure expressions (R10). */
-  private def chunkRows(s: SparkSession, dir: String, n: Int = 64): DataFrame = {
-    val docs = documents(s, dir).where(length(col("text")) > 0)
-    docs
-      .withColumn("total_splits", ceil(length(col("text")) / lit(n.toDouble)).cast("int"))
-      .select(
-        col("doc_id"), col("text"), col("total_splits"),
-        posexplode(transform(sequence(lit(0), col("total_splits") - 1),
-          i => substring(col("text"), i * n + 1, lit(n)))).as(Seq("split_index", "chunk")))
-  }
-
-  /** The production hybrid frontend's fusion-overlap gate, shared by the
-    * flat ([[queries]] `q_hybrid_search_production`) and PQ
-    * (`q_hybrid_search_production_pq`) vector tiers: fuse the lexical
-    * ranking with a PRUNED vector leg and with its EXHAUSTIVE twin, both
-    * production ways (RRF and the min-max-normalized 0.6/0.4 α-blend),
-    * and report per query whether each pruned fused top-10 overlaps its
-    * exhaustive fusion's top-10 in ≥ 8 items. `lex` carries
-    * (query_id, doc_id, bm25); each vector leg carries
-    * (query_id, doc_id, cosine). Pruning moves the quality question to
-    * fusion level, so that is where the gate sits.
-    */
-  private def hybridFusionOverlapGate(lexIn: DataFrame, vecPrunedIn: DataFrame,
-                                      vecExhaustiveIn: DataFrame): DataFrame = {
-    // each vector leg's plan feeds BOTH fusion modes (RRF and the
-    // α-blend build separate cached branches), so without a cache the
-    // probe-set store scan runs twice per leg inside the one gate
-    // action; persisted here as a result-plan cache (category 2 —
-    // released by the session's cache discipline, like every gate
-    // fixture cache)
-    val vecPruned = vecPrunedIn.persist()
-    val vecExhaustive = vecExhaustiveIn.persist()
-    val byLex = Window.partitionBy(col("query_id"))
-      .orderBy(col("bm25").desc, col("doc_id"))
-    val byVec = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("doc_id"))
-    val byFused = Window.partitionBy(col("query_id"))
-      .orderBy(col("fused").desc, col("doc_id"))
-    val lexRanked = lexIn
-      .withColumn("r_lex", row_number().over(byLex))
-      .select(col("query_id"), col("doc_id"), col("r_lex"), col("bm25"))
-    // per-(query, leg) min-max normalization for the α-blend: BM25 and
-    // cosine live on incomparable scales
-    val byQ = Window.partitionBy(col("query_id"))
-    def fuse(vec: DataFrame): (DataFrame, DataFrame) = {
-      val vecRanked = vec
-        .withColumn("r_vec", row_number().over(byVec))
-      val joined = lexRanked.join(vecRanked, Seq("query_id", "doc_id"), "full_outer")
-      val rrf = joined
-        .select(col("query_id"), col("doc_id"),
-          (coalesce(lit(1.0) / (lit(60) + col("r_lex")), lit(0.0)) +
-            coalesce(lit(1.0) / (lit(60) + col("r_vec")), lit(0.0))).as("fused"))
-        .withColumn("rk", row_number().over(byFused))
-        .where(col("rk") <= 10).select("query_id", "doc_id")
-      val weighted = joined
-        .withColumn("n_lex",
-          when(max(col("bm25")).over(byQ) > min(col("bm25")).over(byQ),
-            (col("bm25") - min(col("bm25")).over(byQ)) /
-              (max(col("bm25")).over(byQ) - min(col("bm25")).over(byQ)))
-            .otherwise(when(col("bm25").isNotNull, lit(1.0))))
-        .withColumn("n_vec",
-          when(max(col("cosine")).over(byQ) > min(col("cosine")).over(byQ),
-            (col("cosine") - min(col("cosine")).over(byQ)) /
-              (max(col("cosine")).over(byQ) - min(col("cosine")).over(byQ)))
-            .otherwise(when(col("cosine").isNotNull, lit(1.0))))
-        .select(col("query_id"), col("doc_id"),
-          (lit(0.6) * coalesce(col("n_lex"), lit(0.0)) +
-            lit(0.4) * coalesce(col("n_vec"), lit(0.0))).as("fused"))
-        .withColumn("rk", row_number().over(byFused))
-        .where(col("rk") <= 10).select("query_id", "doc_id")
-      (rrf, weighted)
-    }
-    val (rrfP, wP) = fuse(vecPruned)
-    val (rrfX, wX) = fuse(vecExhaustive)
-    def overlap(p: DataFrame, x: DataFrame, flag: String): DataFrame =
-      x.join(p, Seq("query_id", "doc_id"), "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("n"))
-        .select(col("query_id"), (col("n") >= 8).as(flag))
-    overlap(rrfP.persist(), rrfX, "rrf_overlap_ok")
-      .join(overlap(wP.persist(), wX, "weighted_overlap_ok"), Seq("query_id"))
-      .orderBy("query_id")
-  }
-
-  // ---- the inventory ---------------------------------------------------------
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // -- [REF] scans, filters, top-k (BigDataLogControl.cs:192-330) --
-    "q_scan_project" -> ((s, d) =>
-      events(s, d).select("event_id", "ts", "user_id", "event_type").orderBy("event_id")),
-
-    // -- [NS] non-Parquet connector surface, oracle-gated: export a dim
-    // table to CSV through Sources.write (once per JVM), re-read it with an
-    // EXPLICIT schema through Sources.read, and the round-trip must be the
-    // identity against the original table — quoting, header, and type
-    // parsing all on the hook. CSV is the ingest/egress edge; Parquet stays
-    // the primary format (TESTDATA.md). --
-    // -- [NS] malformed-input handling on the CSV connector: PERMISSIVE
-    // mode quarantines bad rows into _corrupt_record instead of failing
-    // the scan — the lake-ingest contract (one bad row must not kill a
-    // 100 TB load). Fixture: nation as CSV plus two injected garbage
-    // lines; the declared result is the survivor count + quarantine count.
-    "q_source_csv_corrupt" -> ((s, d) => {
-      val base = Tables.nation(s, d)
-      val dir = scratchDirs.getOrElseUpdate(s"csvcorrupt:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_csv_bad")
-        deleteRecursivelyOnExit(tmp)
-        val out = tmp.toFile.getAbsolutePath + "/nation_bad"
-        // header-free on purpose: with header=true Spark blindly skips the
-        // FIRST line of every part file, which would swallow one injected
-        // garbage line (and the writer's header would itself quarantine
-        // under header=false) — headerless keeps the contract exact
-        base.coalesce(1).write.mode("overwrite")
-          .option("header", "false").csv(out)
-        // append a malformed part file: wrong arity + non-numeric key
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(out, "part-99999-garbage.csv"),
-          "not_a_number,XX\ntoo,many,columns,here,entirely,extra,cols\n")
-        out
-      })
-      val schema = org.apache.spark.sql.types.StructType(
-        base.schema.fields :+
-          org.apache.spark.sql.types.StructField("_corrupt_record",
-            org.apache.spark.sql.types.StringType, true))
-      val read = s.read.schema(schema)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .csv(dir)
-        .cache() // corrupt-record column requires a materialized referenced scan
-      read.agg(
-        sum(when(col("_corrupt_record").isNull, 1L).otherwise(0L)).as("n_good"),
-        sum(when(col("_corrupt_record").isNotNull, 1L).otherwise(0L)).as("n_corrupt"))
-    }),
-
-    "q_source_csv" -> ((s, d) => {
-      val schema = Tables.nation(s, d).schema
-      val dir = scratchDirs.getOrElseUpdate(s"csv:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_csv")
-        deleteRecursivelyOnExit(tmp)
-        val out = tmp.toFile.getAbsolutePath + "/nation_csv"
-        graft.sources.Sources.write(Tables.nation(s, d), out, "csv")
-        out
-      })
-      graft.sources.Sources.read(s, dir, "csv", Some(schema))
-        .orderBy("n_nationkey")
-    }),
-
-    // -- [NS] JSON-lines connector round-trip, same identity contract as
-    // the CSV query (schema-explicit read; inference deliberately unexposed)
-    "q_source_json" -> ((s, d) => {
-      val schema = Tables.region(s, d).schema
-      val dir = scratchDirs.getOrElseUpdate(s"json:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_json")
-        deleteRecursivelyOnExit(tmp)
-        val out = tmp.toFile.getAbsolutePath + "/region_json"
-        graft.sources.Sources.write(Tables.region(s, d), out, "json")
-        out
-      })
-      graft.sources.Sources.read(s, dir, "json", Some(schema))
-        .orderBy("r_regionkey")
-    }),
-
-    // -- [NS] ORC connector round-trip (the third lakehouse format Spark
-    // ships natively); identity contract incl. a double column, which JSON
-    // can't carry losslessly without schema and CSV serializes as text --
-    "q_source_orc" -> ((s, d) => {
-      val dir = scratchDirs.getOrElseUpdate(s"orc:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_orc")
-        deleteRecursivelyOnExit(tmp)
-        val out = tmp.toFile.getAbsolutePath + "/supplier_orc"
-        graft.sources.Sources.write(Tables.supplier(s, d), out, "orc")
-        out
-      })
-      graft.sources.Sources.read(s, dir, "orc")
-        .orderBy("s_suppkey")
-    }),
-
-    // -- [REF §3.2] XML connector round-trip: the reference's ingest edge IS
-    // XML (`LogChange.loadXmlFile`, `LogChange.cs:99-175`) — documents
-    // arrive as XML and get serialized to strings before chunking. Spark 4
-    // ships XML natively; write the supplier dim out as <row> elements
-    // (once per JVM), re-read with an explicit schema, and the round-trip
-    // must be the identity — element escaping and numeric parsing on the
-    // hook. Scale shape: the read is a distributed file scan like any other
-    // connector; XML stays an ingest edge, Parquet the working format. --
-    "q_source_xml" -> ((s, d) => {
-      val schema = Tables.supplier(s, d).schema
-      val dir = scratchDirs.getOrElseUpdate(s"xml:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_xml")
-        deleteRecursivelyOnExit(tmp)
-        val out = tmp.toFile.getAbsolutePath + "/supplier_xml"
-        graft.sources.Sources.write(Tables.supplier(s, d), out, "xml")
-        out
-      })
-      graft.sources.Sources.read(s, dir, "xml", Some(schema))
-        .orderBy("s_suppkey")
-    }),
-
-    // -- [REF §3.2] in-engine XML serialize→parse round-trip — the
-    // `loadXmlFile` serialization step as column expressions: each document
-    // row becomes one XML string (`to_xml`), is parsed back (`from_xml`),
-    // and the extracted fields must equal the source table. Entity escaping
-    // of arbitrary text (&, <, >) is exactly what this gates. Both
-    // directions are codegen'd expressions — no files, no UDFs, fully
-    // distributed. --
-    "q_xml_roundtrip" -> ((s, d) => {
-      val xmlSchema = org.apache.spark.sql.types.StructType.fromDDL(
-        "doc_id BIGINT, lang STRING, source STRING, text STRING")
-      documents(s, d)
-        .select(to_xml(struct(col("doc_id"), col("lang"), col("source"),
-          col("text"))).as("xml"))
-        .select(from_xml(col("xml"), xmlSchema).as("r"))
-        .select(col("r.doc_id").as("doc_id"), col("r.lang").as("lang"),
-          col("r.source").as("source"), col("r.text").as("text"))
-        .orderBy("doc_id")
-    }),
-
-    // -- [NS] text connector round-trip: line-oriented raw text, the format
-    // web-scale corpora actually arrive in (one record per line, no schema,
-    // no types). Write funnels a single string column to .txt part files;
-    // read surfaces each line as `value`. Identity contract against the
-    // source column; completes the built-in format surface
-    // (parquet/csv/json/orc/binaryFile/text). --
-    "q_source_text" -> ((s, d) => {
-      val dir = scratchDirs.getOrElseUpdate(s"text:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_text")
-        deleteRecursivelyOnExit(tmp)
-        val out = tmp.toFile.getAbsolutePath + "/nation_txt"
-        graft.sources.Sources.write(
-          Tables.nation(s, d).select(col("n_name")), out, "text")
-        out
-      })
-      graft.sources.Sources.read(s, dir, "text")
-        .select(col("value").as("n_name"))
-        .orderBy("n_name")
-    }),
-
-    // -- [NS] schema evolution (mergeSchema): two parquet batches written
-    // under one root, the later batch carrying an extra column — the drift
-    // every long-lived lake table accumulates. The merged read must surface
-    // the union schema with NULLs for the early batch, never failing and
-    // never silently dropping the new column. Spark merges footers at
-    // LISTING time (one planning pass), so old batches are not rewritten —
-    // the property that matters when "old batches" is 100 TB. --
-    "q_schema_merge" -> ((s, d) => {
-      val dir = scratchDirs.getOrElseUpdate(s"mergeschema:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_mergeschema")
-        deleteRecursivelyOnExit(tmp)
-        val out = tmp.toFile.getAbsolutePath + "/events_evolved"
-        val ev = events(s, d)
-        ev.where(col("event_id") < 500).select("event_id", "value")
-          .write.mode("overwrite").parquet(out + "/batch=1")
-        ev.where(col("event_id") >= 500 && col("event_id") < 1000)
-          .select("event_id", "value", "event_type")
-          .write.mode("overwrite").parquet(out + "/batch=2")
-        out
-      })
-      s.read.option("mergeSchema", "true").parquet(dir)
-        .select("event_id", "value", "event_type")
-        .orderBy("event_id")
-    }),
-
-    // -- [NS] binary-file connector: the multimodal ingest shape — a
-    // directory of raw files scanned into (path, content) rows, one file
-    // per task, no driver-side reads. Fixture files are written once per
-    // JVM (driver-side, 64 tiny blobs standing in for externally-produced
-    // media); the declared result re-derives each doc's byte length from
-    // the scanned content and must match the source table. --
-    "q_source_binary" -> ((s, d) => {
-      val dir = scratchDirs.getOrElseUpdate(s"bin:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_bin")
-        deleteRecursivelyOnExit(tmp)
-        val out = tmp.toFile.getAbsolutePath + "/blobs"
-        new java.io.File(out).mkdirs()
-        documents(s, d).where(col("doc_id") < 64)
-          .select(col("doc_id"), col("text")).collect().foreach { r =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(out, f"doc_${r.getLong(0)}%05d.bin"),
-              r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          }
-        out
-      })
-      graft.sources.Sources.readBinaryFiles(s, dir, Some("*.bin"))
-        .select(
-          regexp_extract(col("path"), "doc_(\\d+)\\.bin$", 1).cast("long").as("doc_id"),
-          length(col("content")).cast("long").as("n_bytes"))
-        .orderBy("doc_id")
-    }),
-
-    // -- [REF R7] raw-bytes file sink (`BigDataLogControl.cs:354-361`),
-    // oracle-gated as a CONTENT-identity round-trip: each doc's UTF-8 bytes
-    // go out through LogStore.writeDocumentToFile (once per JVM), come back
-    // through the distributed binary-file connector, and the decoded text
-    // must equal the source table byte-for-byte — not just by length. --
-    "q_file_sink" -> ((s, d) => {
-      val dir = scratchDirs.getOrElseUpdate(s"filesink:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_filesink")
-        deleteRecursivelyOnExit(tmp)
-        val out = tmp.toFile.getAbsolutePath + "/docs"
-        new java.io.File(out).mkdirs()
-        documents(s, d).where(col("doc_id") < 64)
-          .select(col("doc_id"), col("text")).collect().foreach { r =>
-            graft.operators.LogStore.writeDocumentToFile(
-              r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8),
-              out + f"/doc_${r.getLong(0)}%05d.bin")
-          }
-        out
-      })
-      graft.sources.Sources.readBinaryFiles(s, dir, Some("*.bin"))
-        .select(
-          regexp_extract(col("path"), "doc_(\\d+)\\.bin$", 1).cast("long").as("doc_id"),
-          decode(col("content"), "UTF-8").as("text"))
-        .orderBy("doc_id")
-    }),
-
-    // -- [NS] single-file export (Sources.writeSingleFile): a small
-    // aggregate coalesced through one task into exactly one parquet file
-    // (the driver-side-consumer/report shape), re-read and compared to the
-    // aggregate computed directly — sink and re-read both on the hook. --
-    "q_sink_singlefile" -> ((s, d) => {
-      val dir = scratchDirs.getOrElseUpdate(s"singlefile:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_singlefile")
-        deleteRecursivelyOnExit(tmp)
-        val out = tmp.toFile.getAbsolutePath + "/report"
-        graft.sources.Sources.writeSingleFile(
-          Tables.nation(s, d).groupBy(col("n_regionkey"))
-            .agg(count(lit(1)).as("n_nations")), out)
-        require(new java.io.File(out).listFiles()
-          .count(_.getName.endsWith(".parquet")) == 1,
-          "writeSingleFile must produce exactly one parquet part")
-        out
-      })
-      s.read.parquet(dir).orderBy("n_regionkey")
-    }),
-
-    "q_point_lookup" -> ((s, d) =>
-      events(s, d).where(col("event_id") === 777)
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
-        .orderBy("event_id")),
-
-    "q_filter_type" -> ((s, d) =>
-      events(s, d).where(col("event_type") === "click")
-        .select("event_id", "ts", "user_id", "value").orderBy("event_id")),
-
-    "q_filter_timerange" -> ((s, d) =>
-      events(s, d)
-        .where(nsRange("2024-01-10 00:00:00", "2024-01-12 00:00:00"))
-        .select("event_id", "ts", "user_id", "event_type").orderBy("event_id")),
-
-    "q_log_composite" -> ((s, d) => logComposite(s, d)),
-
-    "q_topk_global" -> ((s, d) =>
-      events(s, d).select("event_id", "ts", "user_id", "event_type", "value")
-        .orderBy(col("value").desc, col("event_id")).limit(100)),
-
-    // -- [REF] tiler: chunk / reassemble / codec (LogChange.cs:99-342) --
-    "q_chunk_split" -> ((s, d) =>
-      chunkRows(s, d).select("doc_id", "split_index", "chunk", "total_splits")
-        .orderBy("doc_id", "split_index")),
-
-    "q_reassemble" -> ((s, d) => {
-      val rebuilt = chunkRows(s, d)
-        .groupBy(col("doc_id"))
-        .agg(array_join(
-          transform(array_sort(collect_list(struct(col("split_index"), col("chunk")))),
-            x => x.getField("chunk")), "").as("rebuilt"))
-      rebuilt.join(documents(s, d), "doc_id")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("rebuilt") === col("text"), 1L).otherwise(0L)).as("n_match"))
-    }),
-
-    // reassembly via the typed Aggregator (UDAF surface) — same invariant
-    // as q_reassemble, different aggregation machinery
-    "q_reassemble_agg" -> ((s, d) => {
-      val concatUdaf = udaf(graft.operators.LogStore.OrderedConcat,
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaInt, org.apache.spark.sql.Encoders.STRING))
-      val rebuilt = chunkRows(s, d)
-        .groupBy(col("doc_id"))
-        .agg(concatUdaf(col("split_index"), col("chunk")).as("rebuilt"))
-      rebuilt.join(documents(s, d), "doc_id")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("rebuilt") === col("text"), 1L).otherwise(0L)).as("n_match"))
-    }),
-
-    "q_roundtrip_codec" -> ((s, d) =>
-      documents(s, d).agg(
-        count(lit(1)).as("n_docs"),
-        sum(when(Codec.unzip_str(Codec.zip_str(col("text"))) === col("text"), 1L)
-          .otherwise(0L)).as("n_match"))),
-
-    // -- [NS] log analytics: aggs, windows (SURVEY §2.2) --
-    "q_agg_type_day" -> ((s, d) =>
-      events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"), dsum(col("value")).as("total_value"))
-        .orderBy("event_type", "day")),
-
-    "q_rollup_type_day" -> ((s, d) =>
-      events(s, d)
-        .withColumn("day", to_date(col("ts")))
-        .rollup(col("event_type"), col("day"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("event_type").asc_nulls_first, col("day").asc_nulls_first)),
-
-    // pivot with explicit values: deterministic column set, single scan
-    "q_pivot_type" -> ((s, d) =>
-      events(s, d)
-        .withColumn("day", to_date(col("ts")))
-        .groupBy(col("day"))
-        .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
-        .count()
-        .na.fill(0L)
-        .orderBy("day")),
-
-    "q_distinct_users" -> ((s, d) =>
-      events(s, d).groupBy(col("event_type"))
-        .agg(countDistinct(col("user_id")).as("n_users")).orderBy("event_type")),
-
-    "q_window_topk_user" -> ((s, d) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts").desc, col("event_id"))
-      events(s, d)
-        .withColumn("rn", row_number().over(w))
-        .where(col("rn") <= 3)
-        .select("user_id", "event_id", "ts", "rn")
-        .orderBy("user_id", "rn")
-    }),
-
-    "q_window_running" -> ((s, d) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      events(s, d)
-        .select(col("user_id"), col("event_id"),
-          sum(col("value").cast("decimal(18,2)")).over(w).cast("double").as("running_value"))
-        .orderBy("user_id", "event_id")
-    }),
-
-    // the same per-user top-3 as q_window_topk_user, but via the bounded
-    // top-k AGGREGATOR: partial aggregation keeps k items per group
-    // map-side, so the shuffle carries k·|groups| rows, not every row —
-    // proven equivalent by sharing the window query's oracle
-    "q_topk_agg" -> ((s, d) =>
-      graft.operators.TopK.perGroup(
-        events(s, d), col("user_id"), col("ts_ns"), col("event_id"), k = 3)
-        .select(col("group_key").as("user_id"), col("id").as("event_id"),
-          timestamp_micros(expr("primary div 1000")).as("ts"), col("rn").cast("int").as("rn"))
-        .orderBy("user_id", "rn")),
-
-    "q_window_rank" -> ((s, d) => {
-      // value ties are real in this data, so rank/dense_rank diverge from
-      // row_number — included deliberately to pin tie semantics
-      val w = Window.partitionBy(col("event_type")).orderBy(col("value").desc, col("event_id"))
-      val wTime = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      events(s, d)
-        .select(col("event_id"),
-          rank().over(w).as("rnk"),
-          dense_rank().over(w).as("drnk"),
-          lag(col("event_id"), 1).over(wTime).as("prev_event"),
-          lead(col("event_id"), 1).over(wTime).as("next_event"))
-        .orderBy("event_id")
-    }),
-
-    "q_window_dist" -> ((s, d) => {
-      val w = Window.partitionBy(col("event_type")).orderBy(col("value"), col("event_id"))
-      events(s, d)
-        .select(col("event_id"),
-          ntile(4).over(w).as("quartile"),
-          round(percent_rank().over(w), 6).as("pct_rank"),
-          round(cume_dist().over(w), 6).as("cume"))
-        .orderBy("event_id")
-    }),
-
-    // moment statistics derived from decimal-exact sums — mean/variance are
-    // computed from (n, Σx, Σx²) so float addition order can't shift bits
-    "q_value_stats" -> ((s, d) =>
-      events(s, d)
-        .groupBy(col("event_type"))
-        .agg(
-          count(lit(1)).as("n"),
-          round(min(col("value")), 2).as("min_v"),
-          round(max(col("value")), 2).as("max_v"),
-          sum(col("value").cast("decimal(28,6)")).as("s1"),
-          sum((col("value") * col("value")).cast("decimal(28,6)")).as("s2"))
-        .select(col("event_type"), col("n"), col("min_v"), col("max_v"),
-          round(col("s1").cast("double") / col("n"), 4).as("mean_v"),
-          round((col("s2").cast("double") -
-            col("s1").cast("double") * col("s1").cast("double") / col("n")) /
-            (col("n") - 1), 4).as("var_v"))
-        .orderBy("event_type")),
-
-    // -- [NS] QUALIFY-style latest-per-key dedup: the newest event per
-    // (user, type) via row_number over the (ts, event_id) desc total order
-    // — the canonical "current state of every key" read. One shuffle on
-    // the key; WindowGroupLimit stops per-key work at rank 1. --
-    "q_window_qualify" -> ((s, d) => {
-      val w = Window.partitionBy(col("user_id"), col("event_type"))
-        .orderBy(col("ts").desc, col("event_id").desc)
-      events(s, d)
-        .withColumn("rk", row_number().over(w))
-        .where(col("rk") === 1)
-        .select("user_id", "event_type", "event_id", "value")
-        .orderBy("user_id", "event_type")
-    }),
-
-    // -- [NS] bitwise aggregate family: bit_and / bit_or / bit_xor over
-    // exact integers per group — set-membership and parity rollups. --
-    "q_bitwise_agg" -> ((s, d) =>
-      events(s, d).groupBy(col("event_type"))
-        .agg(
-          bit_and(col("user_id")).as("band"),
-          bit_or(col("user_id")).as("bor"),
-          bit_xor(col("event_id")).as("bxor"))
-        .orderBy("event_type")),
-
-    // -- [NS] ordered string aggregation (listagg WITHIN GROUP): per-source
-    // doc_id-ordered concatenation, fingerprinted so the output stays
-    // group-sized. The ordered-agg shape the reference's reassembly (R14)
-    // uses, exposed through the standard SQL surface. --
-    "q_listagg" -> ((s, d) =>
-      documents(s, d).groupBy(col("source"))
-        .agg(
-          md5(expr("listagg(text, '|') WITHIN GROUP (ORDER BY doc_id)")).as("agg_md5"),
-          count(lit(1)).as("n_docs"))
-        .orderBy("source")),
-
-    // -- [NS] time-series gap-fill + forward-fill: per-user daily totals
-    // left-joined onto the full January calendar (sequence → explode, a
-    // broadcast-sized dimension), missing days carried forward with
-    // last(ignoreNulls) over the per-user date order. The window shuffles
-    // once on user_id; the calendar never exceeds days×users rows. The
-    // standard resample-ffill that turns an irregular event log into a
-    // regular panel. --
-    "q_gapfill" -> ((s, d) => {
-      val daily = events(s, d)
-        .groupBy(col("user_id"), col("ts").cast("date").as("day"))
-        .agg(dsum(col("value")).as("v"))
-      val cal = s.range(1).select(explode(sequence(
-        lit(java.sql.Date.valueOf("2024-01-01")),
-        lit(java.sql.Date.valueOf("2024-01-30")),
-        expr("interval 1 day"))).as("day"))
-      val users = events(s, d).select(col("user_id")).distinct()
-      val w = Window.partitionBy(col("user_id")).orderBy(col("day"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-      users.crossJoin(cal)
-        .join(daily, Seq("user_id", "day"), "left")
-        .withColumn("filled", last(col("v"), ignoreNulls = true).over(w))
-        .select(col("user_id"), col("day"), col("v"), col("filled"))
-        .orderBy("user_id", "day")
-    }),
-
-    // -- [NS] conversion funnel (view → click-after → purchase-after):
-    // stage k is a per-user min-timestamp aggregate joined to stage k-1
-    // with a strictly-after predicate — each stage's table is user-sized
-    // and broadcastable; the event log is scanned once per stage with the
-    // type filter pushed down. --
-    "q_funnel" -> ((s, d) => {
-      val ev = events(s, d).select(col("user_id"), col("event_type"), col("ts"))
-      val v = ev.where(col("event_type") === "view")
-        .groupBy(col("user_id")).agg(min(col("ts")).as("t_view"))
-      val c = ev.where(col("event_type") === "click")
-        .join(broadcast(v), "user_id").where(col("ts") > col("t_view"))
-        .groupBy(col("user_id")).agg(min(col("ts")).as("t_click"))
-      val p = ev.where(col("event_type") === "purchase")
-        .join(broadcast(c), "user_id").where(col("ts") > col("t_click"))
-        .groupBy(col("user_id")).agg(min(col("ts")).as("t_purchase"))
-      v.agg(count(lit(1)).as("n_view"))
-        .crossJoin(c.agg(count(lit(1)).as("n_click")))
-        .crossJoin(p.agg(count(lit(1)).as("n_purchase")))
-    }),
-
-    // -- [NS] cohort retention: users cohorted by first active day; for
-    // each (cohort, day-offset) cell, how many of that cohort were active.
-    // Two keyed aggregates and one join on user_id — the distinct
-    // (user, day) activity set is the only shuffle of event-scale data. --
-    "q_retention" -> ((s, d) => {
-      val act = events(s, d)
-        .select(col("user_id"), col("ts").cast("date").as("day")).distinct()
-      val first = act.groupBy(col("user_id")).agg(min(col("day")).as("cohort"))
-      act.join(first, "user_id")
-        .groupBy(col("cohort"), datediff(col("day"), col("cohort")).as("day_offset"))
-        .agg(count(lit(1)).as("n_active"))
-        .orderBy("cohort", "day_offset")
-    }),
-
-    "q_sessionize" -> ((s, d) => {
-      val wOrder = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      events(s, d)
-        .withColumn("prev_ms", lag(unix_millis(col("ts")), 1).over(wOrder))
-        .withColumn("new_session",
-          when(col("prev_ms").isNull || unix_millis(col("ts")) - col("prev_ms") > 1800000L, 1L)
-            .otherwise(0L))
-        .withColumn("session_id", sum(col("new_session"))
-          .over(wOrder.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .select("user_id", "event_id", "session_id")
-        .orderBy("user_id", "event_id")
-    }),
-
-    "q_asof_join" -> ((s, d) => {
-      // as-of join: each purchase matched to the latest strictly-prior click
-      // of the same user — window form, one shuffle, no custom strategy
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      events(s, d)
-        .withColumn("last_click_ts",
-          last(when(col("event_type") === "click", col("ts")), ignoreNulls = true).over(w))
-        .where(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts", "last_click_ts")
-        .orderBy("event_id")
-    }),
-
-    // -- [NS] FORWARD as-of join (the time-reversed twin): each click
-    // matched to the earliest strictly-later purchase of the same user —
-    // attribution's "time to conversion" shape; same one-shuffle window
-    // plan, frame flipped to (1 FOLLOWING, UNBOUNDED FOLLOWING) --
-    "q_asof_forward" -> ((s, d) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-        .rowsBetween(1, Window.unboundedFollowing)
-      events(s, d)
-        .withColumn("next_purchase_ts",
-          first(when(col("event_type") === "purchase", col("ts")), ignoreNulls = true).over(w))
-        .where(col("event_type") === "click")
-        .select("event_id", "user_id", "ts", "next_purchase_ts")
-        .orderBy("event_id")
-    }),
-
-    // batch twin of the watermarked stream-stream interval join
-    "q_interval_join" -> ((s, d) => {
-      val e = events(s, d)
-      graft.streaming.EventStreams.clickPurchaseJoin(e, e)
-        .orderBy("user_id", "click_id", "purchase_id")
-    }),
-
-    "q_tumbling_1d" -> ((s, d) =>
-      events(s, d)
-        .groupBy(window(col("ts"), "1 day"))
-        .agg(count(lit(1)).as("n"), dsum(col("value")).as("total_value"))
-        .select(col("window.start").as("day_start"), col("n"), col("total_value"))
-        .orderBy("day_start")),
-
-    // -- [NS] relational breadth: star join, semi/anti, set ops, json --
-    "q_star_join" -> ((s, d) => {
-      val li = Tables.lineitem(s, d)
-      val o  = Tables.orders(s, d)
-      val c  = Tables.customer(s, d)
-      val n  = Tables.nation(s, d)
-      val r  = Tables.region(s, d)
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(c), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("r_name"))
-        .agg(dsum(col("l_extendedprice") * (lit(1) - col("l_discount")), 4).as("revenue"),
-          count(lit(1)).as("n"))
-        .orderBy("r_name")
-    }),
-
-    "q_join_outer" -> ((s, d) =>
-      Tables.customer(s, d)
-        .join(Tables.orders(s, d), col("c_custkey") === col("o_custkey"), "left_outer")
-        .groupBy(col("c_custkey"), col("c_name"))
-        .agg(count(col("o_orderkey")).as("n_orders"),
-          dsum(coalesce(col("o_totalprice"), lit(0.0)), 4).as("total_spend"))
-        .orderBy("c_custkey")),
-
-    "q_join_semi" -> ((s, d) =>
-      Tables.customer(s, d)
-        .join(Tables.orders(s, d), col("c_custkey") === col("o_custkey"), "left_semi")
-        .select("c_custkey", "c_name").orderBy("c_custkey")),
-
-    // -- [NS] join strategy hints: the same aggregate join under an
-    // explicit SHUFFLE_HASH hint — the manual override for when the
-    // optimizer's choice is wrong (a build side that fits memory but
-    // exceeds the broadcast threshold). Hints must be result-invisible;
-    // the hinted plan shape is asserted in a spec, the values here --
-    "q_join_hint" -> ((s, d) =>
-      Tables.customer(s, d)
-        .join(Tables.orders(s, d).hint("shuffle_hash"),
-          col("c_custkey") === col("o_custkey"), "left_outer")
-        .groupBy(col("c_custkey"), col("c_name"))
-        .agg(count(col("o_orderkey")).as("n_orders"),
-          dsum(coalesce(col("o_totalprice"), lit(0.0)), 4).as("total_spend"))
-        .orderBy("c_custkey")),
-
-    "q_join_anti" -> ((s, d) =>
-      Tables.customer(s, d)
-        .join(Tables.orders(s, d), col("c_custkey") === col("o_custkey"), "left_anti")
-        .select("c_custkey", "c_name").orderBy("c_custkey")),
-
-    "q_set_union" -> ((s, d) => {
-      val e = events(s, d)
-      e.where(col("event_type") === "click").select("user_id", "event_type")
-        .union(e.where(col("event_type") === "signup").select("user_id", "event_type"))
-        .distinct()
-        .orderBy("user_id", "event_type")
-    }),
-
-    "q_set_except" -> ((s, d) => {
-      val e = events(s, d).where(col("event_type") === "error")
-      e.where(col("ts") < tsLit("2024-01-08 00:00:00")).select("user_id").distinct()
-        .except(e.where(col("ts") >= tsLit("2024-01-22 00:00:00")).select("user_id").distinct())
-        .orderBy("user_id")
-    }),
-
-    "q_set_except_all" -> ((s, d) => {
-      val e = events(s, d)
-      e.where(col("event_type").isin("click", "view")).select("user_id")
-        .exceptAll(e.where(col("event_type") === "view").select("user_id"))
-        .groupBy("user_id").agg(count(lit(1)).as("n"))
-        .orderBy("user_id")
-    }),
-
-    "q_json_props" -> ((s, d) =>
-      events(s, d)
-        .select(col("event_id"),
-          from_json(col("props"), org.apache.spark.sql.types.StructType.fromDDL("k INT"))
-            .getField("k").as("k"))
-        .orderBy("event_id")),
-
-    // -- [NS] VARIANT semi-structured surface (Spark 4): parse the props
-    // JSON once into the binary VARIANT encoding and path-extract typed
-    // fields from it — the schema-on-read shape for logs whose payload
-    // drifts. Unlike from_json, VARIANT needs no up-front struct schema;
-    // unlike get_json_object, extraction reads the pre-parsed binary form,
-    // not the string. try_variant_get returns null (never throws) on a
-    // path/type miss — the posture a 100 TB ingest of drifting payloads
-    // needs. --
-    "q_variant_get" -> ((s, d) =>
-      events(s, d)
-        .select(col("event_id"), parse_json(col("props")).as("v"))
-        .select(col("event_id"),
-          try_variant_get(col("v"), "$.k", "int").as("k"),
-          try_variant_get(col("v"), "$.missing", "string").as("absent"))
-        .orderBy("event_id")),
-
-    // -- [NS] correlated scalar subqueries (TPC-H Q2/Q17 shape): parts
-    // strictly larger than their type's average size. Catalyst de-correlates
-    // the agg subquery into a grouped aggregate + join — asserted in the
-    // spec; no per-row re-execution anywhere. Stated in multiplication form
-    // (size·count > sum) so both engines compare exact integers, not
-    // engine-rounded decimal averages. --
-    "q_scalar_subquery" -> ((s, d) => {
-      Tables.part(s, d).createOrReplaceTempView("part_sq")
-      s.sql("""SELECT p_partkey, p_type, p_size FROM part_sq p
-              |WHERE CAST(p_size AS BIGINT) *
-              |      (SELECT count(*) FROM part_sq p2 WHERE p2.p_type = p.p_type)
-              |    > (SELECT sum(CAST(p_size AS BIGINT)) FROM part_sq p2
-              |       WHERE p2.p_type = p.p_type)
-              |ORDER BY p_partkey""".stripMargin)
-    }),
-
-    // -- [NS] LLM-pipeline: dedup, similarity, text analysis --
-    "q_dedup_exact" -> ((s, d) =>
-      Dedup.exact(documents(s, d)).orderBy("doc_id")),
-
-    "q_dedup_exact_norm" -> ((s, d) =>
-      Dedup.exactNormalized(documents(s, d)).orderBy("doc_id")),
-
-    // Candidate-then-EXACT-verify (the production contract): banded LSH at
-    // est ≥ 0.4 proposes candidates (recall ~1 on this corpus's J ≥ 0.9
-    // planted near-dups), then the tiny candidate set verifies against
-    // real shingle sets at J ≥ 0.9 — so the output equals the exact-
-    // Jaccard truth set at ANY scale, not just where the corpus's
-    // est/exact separation gap happens to hold (at sf0.001 a single
-    // unrelated pair estimating ≥ 0.4 used to break the est-only form).
-    // The DuckDB twin computes the truth set hash-free from first
-    // principles.
-    "q_dedup_minhash" -> ((s, d) =>
-      Dedup.minhashCandidates(documents(s, d), minEstJaccard = 0.4,
-          verifyJaccard = Some(0.9), art = Some(dedupArtifacts(s, d)))
-        .select("doc_a", "doc_b")
-        .orderBy("doc_a", "doc_b")),
-
-    // SimHash band-blocking only *guarantees* recall at Hamming ≤ 3 (4×16
-    // pigeonhole) and legitimately pairs unrelated word-salad docs at ≤ 6,
-    // so set equality has no SQL twin. The invariant oracle instead plants
-    // an exact clone (doc -1 = doc 0): identical text → identical simhash →
-    // Hamming 0 → found in every band, deterministically. Declared result:
-    // probe recall + the output's structural bounds.
-    "q_dedup_simhash" -> ((s, d) => {
-      val docs = documents(s, d)
-      val probe = docs.where(col("doc_id") === 0).withColumn("doc_id", lit(-1L))
-      Dedup.simhashPairs(docs.unionByName(probe), maxHamming = 6)
-        .agg(
-          coalesce(bool_or(col("doc_a") === -1 && col("doc_b") === 0 && col("hamming") === 0),
-            lit(false)).as("probe_found"),
-          coalesce(bool_and(col("hamming") <= 6), lit(false)).as("all_ham_ok"),
-          coalesce(bool_and(col("doc_a") < col("doc_b")), lit(false)).as("ordered_ok"))
-    }),
-
-    // exact-verified pairs at J ≥ 0.7 over LSH candidates == the hash-free
-    // DuckDB all-pairs truth (same clean-separation argument as above, and
-    // the jaccard VALUES are plain double divisions both engines compute
-    // identically) — the full fuzzy-dedup path oracled row-by-row
-    "q_dedup_ngram" -> ((s, d) =>
-      Dedup.ngramJaccard(documents(s, d), minJaccard = 0.7, minEstJaccard = 0.35,
-          art = Some(dedupArtifacts(s, d)))
-        .orderBy("doc_a", "doc_b")),
-
-    // -- [NS] directed containment pairs (|A∩B|/|A| >= 0.9): the
-    // quote/subset-copy detector Jaccard's union denominator misses;
-    // asymmetric prefix filter (contained side probes rare shingles,
-    // container side is a full inverted index) --
-    "q_dedup_containment" -> ((s, d) =>
-      Dedup.containmentPairs(documents(s, d), n = 3, minContain = 0.9,
-          art = Some(dedupArtifacts(s, d)))
-        .orderBy("doc_a", "doc_b")),
-
-    // -- [NS] INCREMENTAL fuzzy dedup: the new batch (doc_id >= 400)
-    // deduped against the standing corpus without re-pairing corpus×corpus
-    // — emits the increment ids to DROP (match in corpus or earlier
-    // arrival); candidates propose at est >= 0.4, then exact-verify at
-    // J >= 0.9 against shingle sets (same contract as q_dedup_minhash) --
-    "q_dedup_incremental" -> ((s, d) => {
-      val docs0 = documents(s, d)
-      Dedup.minhashIncremental(
-        docs0.where(col("doc_id") < 400),
-        docs0.where(col("doc_id") >= 400),
-        minEstJaccard = 0.4, verifyJaccard = Some(0.9))
-        .orderBy("doc_id")
-    }),
-
-    // -- [NS] the STORED-index form of the increment probe: the corpus is
-    // indexed ONCE into the pre-banded, append-capped band/doc store
-    // (scratch-cached across invocations — the artifact a pipeline owns),
-    // and the increment reads only its colliding buckets (adaptive
-    // regime: stored — 450 indexed docs vs a 50-doc batch). Same drop
-    // semantics as q_dedup_incremental; regime parity is additionally
-    // spec-pinned in DedupSpec --
-    "q_dedup_incremental_stored" -> ((s, d) => {
-      val docs0 = documents(s, d)
-      val idx = scratchDirs.getOrElseUpdate(s"dedupidxstore:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_dedupidx")
-        deleteRecursivelyOnExit(tmp)
-        val r = tmp.toFile.getAbsolutePath + "/index"
-        Dedup.seedStreamStores(docs0, r,
-          tmp.toFile.getAbsolutePath + "/acc", Seq("doc_id"), n = 3, perms = 32)
-        Dedup.minhashIncrementalStored(s, r,
-          docs0.where(col("doc_id") < 450).select("doc_id", "text"),
-          batchId = 0L, minEstJaccard = 0.4, verifyJaccard = Some(0.9)).count()
-        r
-      })
-      Dedup.minhashIncrementalStored(s, idx,
-          docs0.where(col("doc_id") >= 450).select("doc_id", "text"),
-          batchId = 1L, minEstJaccard = 0.4, verifyJaccard = Some(0.9))
-        .orderBy("doc_id")
-    }),
-
-    // -- [NS] index MAINTENANCE: three appended micro-batches of the
-    // band/doc store COMPACTED into one consolidated partition (parallel
-    // size-targeted rewrite; stage → rename-aside → promote with every
-    // FileSystem boolean checked — the small-file control an append-only
-    // index needs at lake scale), then probed. Compaction is pure layout:
-    // the probe's drops still equal the first-principles truth (and a
-    // spec asserts row-identity + file-count shrink + recoverable swap) --
-    "q_dedup_index_compact" -> ((s, d) => {
-      val docs0 = documents(s, d)
-      val idx = scratchDirs.getOrElseUpdate(s"dedupidxcompact:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_dedupcpt")
-        deleteRecursivelyOnExit(tmp)
-        val r = tmp.toFile.getAbsolutePath + "/index"
-        Dedup.seedStreamStores(docs0, r,
-          tmp.toFile.getAbsolutePath + "/acc", Seq("doc_id"), n = 3, perms = 32)
-        (0 until 3).foreach { b =>
-          Dedup.minhashIncrementalStored(s, r,
-            docs0.where(col("doc_id") >= b * 150 && col("doc_id") < (b + 1) * 150)
-              .select("doc_id", "text"),
-            batchId = b.toLong, minEstJaccard = 0.4, verifyJaccard = Some(0.9)).count()
-        }
-        Dedup.compactIndex(s, r, upTo = 5L)
-        r
-      })
-      Dedup.minhashIncrementalStored(s, idx,
-          docs0.where(col("doc_id") >= 450).select("doc_id", "text"),
-          batchId = 9L, minEstJaccard = 0.4, verifyJaccard = Some(0.9))
-        .orderBy("doc_id")
-    }),
-
-    // -- [NS] RIGHT-TO-ERASURE from the stored MinHash band index — the
-    // dedup-tier analogue of q_sim_ivf_delete: victims vanish from all
-    // THREE index tables (bands / sigs / shingles) by file-targeted
-    // rewrite (no re-banding, no re-aggregation; the did_mod tables'
-    // victim scans prune to the ids' own partitions), untouched files
-    // byte-identical, and the erased docs no longer influence probes —
-    // post-delete drops EQUAL the in-memory incremental over the corpus
-    // WITHOUT the victims. --
-    "q_dedup_index_delete" -> ((s, d) => {
-      val docs0 = documents(s, d)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_idxdel")
-      deleteRecursivelyOnExit(tmp)
-      val idx = tmp.toFile.getAbsolutePath + "/index"
-      Dedup.seedStreamStores(docs0, idx,
-        tmp.toFile.getAbsolutePath + "/acc", Seq("doc_id"), n = 3, perms = 32)
-      Dedup.minhashIncrementalStored(s, idx,
-        docs0.where(col("doc_id") < 400).select("doc_id", "text"),
-        batchId = 0L, minEstJaccard = 0.4, verifyJaccard = Some(0.9)).count()
-      Dedup.minhashIncrementalStored(s, idx,
-        docs0.where(col("doc_id") >= 400 && col("doc_id") < 450).select("doc_id", "text"),
-        batchId = 1L, minEstJaccard = 0.4, verifyJaccard = Some(0.9)).count()
-      def snap(): Map[String, (Long, String)] = {
-        val out = scala.collection.mutable.Map.empty[String, (Long, String)]
-        val root = java.nio.file.Paths.get(idx)
-        val it = java.nio.file.Files.walk(root).iterator()
-        while (it.hasNext) {
-          val p = it.next()
-          val n = p.getFileName.toString
-          if (java.nio.file.Files.isRegularFile(p) &&
-              !n.startsWith("_") && !n.startsWith(".") && n != "nmods" &&
-              n != "index_manifest.json") {
-            val b = java.nio.file.Files.readAllBytes(p)
-            val sha = java.security.MessageDigest.getInstance("SHA-256")
-              .digest(b).map("%02x".format(_)).mkString
-            out(root.relativize(p).toString) = (b.length.toLong, sha)
-          }
-        }
-        out.toMap
-      }
-      val before = snap()
-      val victims = Seq(410L, 420L)
-      val nDel = Dedup.deleteFromMinhashIndex(s, idx, victims)
-      val after = snap()
-      val survivors = before.keySet intersect after.keySet
-      val coldOk = survivors.nonEmpty && survivors.forall(f => after(f) == before(f))
-      val vLits = victims.map(java.lang.Long.valueOf)
-      val erasedOk = Seq("bands", "sigs", "shingles").forall { sub =>
-        s.read.parquet(s"$idx/$sub")
-          .where(col("doc_id").isin(vLits: _*)).isEmpty
-      }
-      // semantics: post-delete probe == in-memory incremental over the
-      // corpus minus the victims (set equality, both directions)
-      val probe = docs0.where(col("doc_id") >= 450 && col("doc_id") < 500)
-        .select("doc_id", "text")
-      // one-pass bag equality: each probe leg (shingling + probe — the
-      // expensive side) executes exactly once inside the net-sum gate
-      // (the exceptAll-pair form ran both legs twice; measured 12 s →
-      // ~7 s with persists, and the single-pass gate drops the second
-      // action entirely)
-      val got = Dedup.minhashIncrementalStored(s, idx, probe,
-        batchId = 2L, minEstJaccard = 0.4, verifyJaccard = Some(0.9))
-      val expect = Dedup.minhashIncremental(
-        docs0.where(col("doc_id") < 450 && !col("doc_id").isin(vLits: _*))
-          .select("doc_id", "text"),
-        probe, minEstJaccard = 0.4, verifyJaccard = Some(0.9))
-      val probeOk = multisetEqual(got, expect)
-      s.range(1).select(
-        lit(nDel).as("n_deleted"),
-        lit(erasedOk).as("erased_ok"),
-        lit(coldOk).as("cold_ok"),
-        lit(probeOk).as("probe_ok"))
-    }),
-
-    // -- [NS] RETENTION for the stored band index — TTL aging by ingest
-    // batch (retainMinhashIndexBatches): every `batch <= cutoff`
-    // partition of ALL THREE tables (bands/sigs/shingles — a doc's rows
-    // span all three, so they age together or the index dangles) drops
-    // as a PURE METADATA operation; the batch=-1 layout seed never ages.
-    // Declared: exactly batch 0 dropped from each table (dropped_ok),
-    // every aged doc's rows gone from all three tables (aged_ok), every
-    // surviving file byte-identical — no data was read or rewritten
-    // (cold_ok) — and a post-retention probe EQUALS the in-memory
-    // incremental over only the RETAINED docs (probe_ok: set equality,
-    // both directions). Own store (retention mutates). --
-    "q_dedup_index_retention" -> ((s, d) => {
-      val docs0 = documents(s, d)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_idxret")
-      deleteRecursivelyOnExit(tmp)
-      val idx = tmp.toFile.getAbsolutePath + "/index"
-      Dedup.seedStreamStores(docs0, idx,
-        tmp.toFile.getAbsolutePath + "/acc", Seq("doc_id"), n = 3, perms = 32)
-      Dedup.minhashIncrementalStored(s, idx,
-        docs0.where(col("doc_id") < 400).select("doc_id", "text"),
-        batchId = 0L, minEstJaccard = 0.4, verifyJaccard = Some(0.9)).count()
-      Dedup.minhashIncrementalStored(s, idx,
-        docs0.where(col("doc_id") >= 400 && col("doc_id") < 450).select("doc_id", "text"),
-        batchId = 1L, minEstJaccard = 0.4, verifyJaccard = Some(0.9)).count()
-      def snap(): Map[String, (Long, String)] = {
-        val out = scala.collection.mutable.Map.empty[String, (Long, String)]
-        val root = java.nio.file.Paths.get(idx)
-        val it = java.nio.file.Files.walk(root).iterator()
-        while (it.hasNext) {
-          val p = it.next()
-          val n = p.getFileName.toString
-          if (java.nio.file.Files.isRegularFile(p) &&
-              !n.startsWith("_") && !n.startsWith(".") && n != "nmods" &&
-              n != "index_manifest.json") {
-            val b = java.nio.file.Files.readAllBytes(p)
-            val sha = java.security.MessageDigest.getInstance("SHA-256")
-              .digest(b).map("%02x".format(_)).mkString
-            out(root.relativize(p).toString) = (b.length.toLong, sha)
-          }
-        }
-        out.toMap
-      }
-      val before = snap()
-      val dropped = Dedup.retainMinhashIndexBatches(s, idx, cutoff = 0L)
-      val after = snap()
-      val droppedOk = dropped == Map(
-        "bands" -> Seq(0L), "sigs" -> Seq(0L), "shingles" -> Seq(0L))
-      // pure metadata: EVERY surviving file byte-identical, and the set
-      // of survivors is exactly before-minus-the-aged-batch
-      val coldOk = after.nonEmpty && after.keySet == before.keySet
-        .filterNot(_.contains("batch=0")) &&
-        after.forall { case (f, sig) => before(f) == sig }
-      val agedOk = Seq("bands", "sigs", "shingles").forall { sub =>
-        s.read.parquet(s"$idx/$sub").where(col("doc_id") < 400).isEmpty
-      }
-      // semantics: post-retention probe == in-memory incremental over the
-      // RETAINED corpus (docs 400-449) only
-      val probe = docs0.where(col("doc_id") >= 450 && col("doc_id") < 500)
-        .select("doc_id", "text")
-      val got = Dedup.minhashIncrementalStored(s, idx, probe,
-        batchId = 2L, minEstJaccard = 0.4, verifyJaccard = Some(0.9))
-      val expect = Dedup.minhashIncremental(
-        docs0.where(col("doc_id") >= 400 && col("doc_id") < 450)
-          .select("doc_id", "text"),
-        probe, minEstJaccard = 0.4, verifyJaccard = Some(0.9))
-      val probeOk = multisetEqual(got, expect)
-      s.range(1).select(
-        lit(droppedOk).as("dropped_ok"),
-        lit(agedOk).as("aged_ok"),
-        lit(coldOk).as("cold_ok"),
-        lit(probeOk).as("probe_ok"))
-    }),
-
-    // -- [NS] INCREMENTAL substring dup-mass: the new batch's windows
-    // (the top 20% of doc ids — a batch-sized increment at EVERY scale,
-    // where a fixed id split would make the "batch" most of a larger
-    // corpus) semi-join the standing corpus's STORED pre-aggregated
-    // window CENSUS (win, n_docs) — corpus text and corpus windows are
-    // never re-scanned or re-counted per batch, and the census read is
-    // PARTITION-PRUNED to the increment's windows' win_mod hash dirs
-    // before the broadcast semi-join; result == full-corpus dup mass
-    // restricted to the increment, which the oracle recomputes with the
-    // same floor-div threshold --
-    "q_dedup_substring_incremental" -> ((s, d) => {
-      val docs0 = documents(s, d)
-      val thr = dedupStoreParams(s, d).censusThr
-      Dedup.substringMassIncrementalStored(s, dedupCensusPath(s, d),
-          docs0.where(col("doc_id") >= thr), width = 40)
-        .orderBy("doc_id")
-    }),
-
-    // -- [NS] RIGHT-TO-ERASURE from the stored substring census — the
-    // DECREMENT analogue (census rows are aggregates): the victim doc's
-    // content-defined windows re-derive, holder counts subtract, and
-    // windows hitting zero VANISH (the probe is an existence test — a
-    // zero-count row would keep reporting corpus duplication against
-    // erased text). Physically pruned to the victim's win_mod slices
-    // (nMods 64 so one doc's windows hit a real subset); untouched
-    // slices byte-identical; the decremented census EQUALS a census
-    // rebuilt on corpus-minus-victim. Own store (erasure mutates). --
-    "q_census_delete" -> ((s, d) => {
-      val docs0 = documents(s, d)
-      val corpus = docs0.where(col("doc_id") < 250L)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_censdel")
-      deleteRecursivelyOnExit(tmp)
-      val path = tmp.toFile.getAbsolutePath + "/census"
-      Dedup.writeCensusStore(
-        Dedup.windowCensus(Dedup.windowTable(corpus)), path,
-        width = 40, nMods = 64)
-      def snap(): Map[String, (Long, String)] = {
-        val out = scala.collection.mutable.Map.empty[String, (Long, String)]
-        val root = java.nio.file.Paths.get(path)
-        val it = java.nio.file.Files.walk(root).iterator()
-        while (it.hasNext) {
-          val p = it.next()
-          val n = p.getFileName.toString
-          if (java.nio.file.Files.isRegularFile(p) &&
-              !n.startsWith("_") && !n.startsWith(".")) {
-            val b = java.nio.file.Files.readAllBytes(p)
-            val sha = java.security.MessageDigest.getInstance("SHA-256")
-              .digest(b).map("%02x".format(_)).mkString
-            out(root.relativize(p).toString) = (b.length.toLong, sha)
-          }
-        }
-        out.toMap
-      }
-      val before = snap()
-      val erased = Dedup.deleteFromCensusStore(s, path,
-        docs0.where(col("doc_id") === 3L), width = 40)
-      val after = snap()
-      val survivors = before.keySet intersect after.keySet
-      val coldOk = survivors.nonEmpty &&
-        survivors.forall(f => after(f) == before(f))
-      val got = s.read.parquet(path).groupBy(col("win"))
-        .agg(sum(col("n_docs")).as("n"))
-      val want = Dedup.windowCensus(
-        Dedup.windowTable(corpus.where(col("doc_id") =!= 3L)))
-        .select(col("win"), col("n_docs").as("n"))
-      // one-pass bag equality: the rebuilt-census twin (the expensive
-      // leg) executes once, not twice per exceptAll direction
-      val censusOk = multisetEqual(got, want)
-      s.range(1).select(
-        lit(erased > 0L).as("erased_some"),
-        lit(coldOk).as("cold_ok"),
-        lit(censusOk).as("census_ok"))
-    }),
-
-    // -- [NS] batch-TTL retention for the streamed substring-census DELTA
-    // store: aged delta batches drop as pure metadata (survivors
-    // byte-identical; the batch=-1 seed never ages). The census the
-    // probes read is the SUM over batch deltas and each batch's delta
-    // counts only its own docs' windows, so the retained sum EQUALS the
-    // census rebuilt over the retained docs — exact aging, asserted by
-    // two-direction exceptAll. --
-    "q_census_retention" -> ((s, d) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_censret")
-      deleteRecursivelyOnExit(tmp)
-      val w = tmp.toFile.getAbsolutePath
-      // the streamed delta layout: 4 id-ordered slices, one per batch
-      Dedup.substringStreamMass(s, docSlices(s, d), w, width = 40).count()
-      val censusDir = s"$w/census"
-      val mx = documents(s, d).agg(max(col("doc_id"))).head().getLong(0) + 1
-      val half = 2L * mx / 4L
-      val before = snapStoreFiles(censusDir)
-      val dropped = Dedup.retainCensusStoreBatches(s, censusDir, cutoff = 1L)
-      val after = snapStoreFiles(censusDir)
-      val droppedOk = dropped == Seq(0L, 1L)
-      val coldOk = after.nonEmpty &&
-        after.keySet == before.keySet
-          .filterNot(f => f.contains("batch=0/") || f.contains("batch=1/")) &&
-        after.forall { case (f, sig) => before(f) == sig }
-      val got = s.read.parquet(censusDir).groupBy(col("win"))
-        .agg(sum(col("n_docs")).as("n"))
-      val want = Dedup.windowCensus(
-        Dedup.windowTable(documents(s, d).where(col("doc_id") >= half)))
-        .select(col("win"), col("n_docs").as("n"))
-      // one-pass bag equality: the rebuilt-census twin executes once,
-      // not twice per exceptAll direction
-      val censusOk = multisetEqual(got, want)
-      s.range(1).select(
-        lit(droppedOk).as("dropped_ok"),
-        lit(coldOk).as("cold_ok"),
-        lit(censusOk).as("census_equal"))
-    }),
-
-    // -- [NS] the dedup FUNNEL: every tier composed into one curation
-    // dashboard — raw → byte-exact → normalized-exact → fuzzy-transitive
-    // survivors → substring-clean docs. Each count exercises its tier's
-    // full machinery; the oracle recomputes all five from first
-    // principles (incl. the recursive-CTE closure twin). --
-    "q_dedup_funnel" -> ((s, d) => {
-      // dashboard over a dedup RUN: the two expensive tier results
-      // (transitive-fuzzy drop set, substring dup mass) come from the
-      // materialized dedup store — the closure is not re-run per view;
-      // the cheap exact tiers hash the (persisted) docs scan live
-      val docs0 = documents(s, d).persist()
-      val store = dedupStore(s, d)
-      def stage(i: Int, tier: String, df: DataFrame) =
-        df.agg(count(lit(1)).as("n_docs"))
-          .select(lit(i).as("stage"), lit(tier).as("tier"), col("n_docs"))
-      stage(0, "raw", docs0)
-        .unionByName(stage(1, "exact", Dedup.exact(docs0)))
-        .unionByName(stage(2, "exact_norm", Dedup.exactNormalized(docs0)))
-        .unionByName(stage(3, "fuzzy_transitive",
-          docs0.join(store.fuzzyDrops, Seq("doc_id"), "left_anti")))
-        .unionByName(stage(4, "substring_clean",
-          docs0.join(store.mass.select("doc_id"), Seq("doc_id"), "left_anti")))
-        .orderBy("stage")
-    }),
-
-    // -- [NS] dedup explainability: per flagged document, WHICH tiers flag
-    // it (exact / normalized / fuzzy-transitive / substring) — the "why was
-    // my document dropped" audit a curation pipeline owes its users; same
-    // tier machinery and thresholds as q_dedup_funnel, re-aimed from counts
-    // to per-doc attribution --
-    "q_dedup_explain" -> ((s, d) => {
-      val docs0 = documents(s, d).persist() // see q_dedup_funnel
-      val store = dedupStore(s, d)
-      def drops(survivors: DataFrame, tier: String) =
-        docs0.join(survivors.select("doc_id"), Seq("doc_id"), "left_anti")
-          .select(col("doc_id")).withColumn("tier", lit(tier))
-      drops(Dedup.exact(docs0), "exact")
-        .unionByName(drops(Dedup.exactNormalized(docs0), "exact_norm"))
-        .unionByName(store.fuzzyDrops.select(col("doc_id"))
-          .withColumn("tier", lit("fuzzy_transitive")))
-        .unionByName(store.mass
-          .select(col("doc_id")).withColumn("tier", lit("substring")))
-        .groupBy(col("doc_id"))
-        .agg(array_join(array_sort(collect_set(col("tier"))), ",").as("tiers"))
-        .orderBy("doc_id")
-    }),
-
-    // -- [NS] the substring-clean corpus MATERIALIZED (Lee et al.'s
-    // excision step): shared-window spans merged into runs and cut out,
-    // survivors fingerprinted — run counts, removed chars, cleaned md5
-    // all row-for-row against the relational twin --
-    "q_substring_clean" -> ((s, d) =>
-      Dedup.substringClean(documents(s, d), width = 40,
-        art = Some(dedupArtifacts(s, d)))),
-
-    // -- [NS] per-doc duplicated-text mass: windows shared with ANY other
-    // doc — the corpus-health headline (no doc×doc pair space touched) --
-    "q_dedup_substring_mass" -> ((s, d) =>
-      Dedup.substringDupMass(documents(s, d), width = 40,
-          art = Some(dedupArtifacts(s, d)))
-        .orderBy("doc_id")),
-
-    // -- [NS] exact substring-window dedup (Lee et al. 2021 family):
-    // content-defined 1/16 window sample (winnowing-style Karp-Rabin
-    // anchor, alignment-independent, one rolling pass per doc), bucket
-    // join, shared-window counts --
-    "q_dedup_substring" -> ((s, d) =>
-      Dedup.substringDupPairs(documents(s, d), width = 40, minShared = 2,
-          art = Some(dedupArtifacts(s, d)))
-        .orderBy("doc_a", "doc_b")),
-
-    // the synthetic embeddings have no organic near-dups (max pairwise
-    // cosine ≈ 0.51), so recall is made non-vacuous by planting one: vec -1
-    // is a byte-identical clone of vec 0 — identical hyperplane signature →
-    // same bucket in every band → the pair (-1, 0) at cosine 1.0 is found
-    // deterministically, and it is the ONLY pair ≥ 0.9 in the augmented set
-    // -- [NS] SemDeDup semantic dedup: cluster-then-pair inside IVF cells.
-    // Same planted-clone discipline as q_neardup_embedding (organic max
-    // pairwise cosine ≈0.51 « 0.95): three byte-identical clones at high
-    // vec_ids land in their originals' cells at cosine 1.0 and are the
-    // ONLY drops — survivors must be exactly the original corpus. --
-    "q_semdedup" -> ((s, d) => {
-      val e = embeddings(s, d)
-      val clones = e.where(col("vec_id") < 3)
-        .withColumn("vec_id", col("vec_id") + lit(10000000L))
-      graft.operators.Dedup.semDedup(e.unionByName(clones), minCosine = 0.95)
-        .select("vec_id", "label")
-        .orderBy("vec_id")
-    }),
-
-    // -- [NS] INCREMENTAL semantic dedup (FAISS add-vs-train): quantizer
-    // trained on the standing corpus only; the increment assigns to the
-    // existing cells in one map pass and compares within-cell against
-    // corpus members and earlier increment arrivals. Planted increment:
-    // three byte-identical clones of corpus vectors (cosine 1.0, same
-    // cell under ANY quantizer) and two identical NEGATED vectors (fresh
-    // direction — cosine -1 to the original, |cos| <= 0.51 organically —
-    // whose later arrival is an intra-increment drop). The drop set is
-    // therefore deterministic: the 3 clones + the later negated copy. --
-    "q_semdedup_incremental" -> ((s, d) => {
-      val e = embeddings(s, d).select("vec_id", "embedding")
-      val clones = e.where(col("vec_id") < 3)
-        .select((col("vec_id") + 9000000L).as("vec_id"), col("embedding"))
-      val negBase = e.where(col("vec_id") === 5)
-        .select(transform(col("embedding"), x => -x).as("embedding"))
-      val inc = clones
-        .unionByName(negBase.select(lit(9000010L).as("vec_id"), col("embedding")))
-        .unionByName(negBase.select(lit(9000011L).as("vec_id"), col("embedding")))
-      graft.operators.Dedup.semDedupIncremental(e, inc, minCosine = 0.95)
-        .orderBy("vec_id")
-    }),
-
-    // -- [NS] the STORED-index form of incremental semantic dedup: the
-    // corpus's cell assignments are persisted ONCE next to the persisted
-    // centroids (scratch-cached — the artifact a pipeline owns), and a
-    // batch reads only its own cells' cell_mod partitions: the corpus is
-    // never re-assigned, never re-shuffled (round-10 verdict's #1). Same
-    // planted fixture/drop semantics as q_semdedup_incremental at shifted
-    // ids; stored==in-memory parity is additionally spec-pinned --
-    "q_semdedup_incremental_stored" -> ((s, d) => {
-      val e = embeddings(s, d).select("vec_id", "embedding")
-      val store = scratchDirs.getOrElseUpdate(s"semstore:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_semstore")
-        deleteRecursivelyOnExit(tmp)
-        val r = tmp.toFile.getAbsolutePath
-        graft.operators.Dedup.seedSemStore(e, r)
-        r
-      })
-      val clones = e.where(col("vec_id") < 3)
-        .select((col("vec_id") + 8000000L).as("vec_id"), col("embedding"))
-      val negBase = e.where(col("vec_id") === 5)
-        .select(transform(col("embedding"), x => -x).as("embedding"))
-      val inc = clones
-        .unionByName(negBase.select(lit(8000010L).as("vec_id"), col("embedding")))
-        .unionByName(negBase.select(lit(8000011L).as("vec_id"), col("embedding")))
-      graft.operators.Dedup.semDedupIncrementalStored(s, store, inc,
-          batchId = 1L, minCosine = 0.95)
-        .orderBy("vec_id")
-    }),
-
-    // -- [NS] RIGHT-TO-ERASURE from the stored semantic index: victims
-    // vanish from the cell store by file-targeted rewrite (centroids
-    // untouched — deletion never moves a surviving row's cell), untouched
-    // files byte-identical, and the semantics flip exactly: a fresh clone
-    // of the ERASED vector no longer drops (nothing left to match) while
-    // a clone of a SURVIVOR still does. Own store (erasure mutates — the
-    // shared semstore fixture must not be touched). --
-    "q_semdedup_delete" -> ((s, d) => {
-      val e = embeddings(s, d).select("vec_id", "embedding")
-      val tmp = java.nio.file.Files.createTempDirectory("graft_semdel")
-      deleteRecursivelyOnExit(tmp)
-      val store = tmp.toFile.getAbsolutePath
-      graft.operators.Dedup.seedSemStore(e, store)
-      // batch 1: exact clones of vec 0 and vec 7 land (and drop)
-      val inc = e.where(col("vec_id").isin(0, 7))
-        .select((col("vec_id") + 8000000L).as("vec_id"), col("embedding"))
-      graft.operators.Dedup.semDedupIncrementalStored(s, store, inc,
-        batchId = 1L).count()
-      def snap(): Map[String, (Long, String)] = {
-        val out = scala.collection.mutable.Map.empty[String, (Long, String)]
-        val root = java.nio.file.Paths.get(s"$store/cells")
-        val it = java.nio.file.Files.walk(root).iterator()
-        while (it.hasNext) {
-          val p = it.next()
-          val n = p.getFileName.toString
-          if (java.nio.file.Files.isRegularFile(p) &&
-              !n.startsWith("_") && !n.startsWith(".")) {
-            val b = java.nio.file.Files.readAllBytes(p)
-            val sha = java.security.MessageDigest.getInstance("SHA-256")
-              .digest(b).map("%02x".format(_)).mkString
-            out(root.relativize(p).toString) = (b.length.toLong, sha)
-          }
-        }
-        out.toMap
-      }
-      val before = snap()
-      // erase vec 0 AND its already-ingested clone (both carry the
-      // embedding the erasure request names)
-      val n1 = graft.operators.Dedup.deleteFromSemStore(s, store, Seq(0L))
-      val coldAfterFirst = snap()
-      val survivors = before.keySet intersect coldAfterFirst.keySet
-      val coldOk = survivors.nonEmpty &&
-        survivors.forall(f => coldAfterFirst(f) == before(f))
-      val n2 = graft.operators.Dedup.deleteFromSemStore(s, store, Seq(8000000L))
-      // probe batch: fresh clones of the erased vec 0 and surviving vec 7
-      val probe = e.where(col("vec_id").isin(0, 7))
-        .select((col("vec_id") + 9000000L).as("vec_id"), col("embedding"))
-      val drops = graft.operators.Dedup.semDedupIncrementalStored(s, store,
-        probe, batchId = 2L)
-      val erasedFree = drops.where(col("vec_id") === 9000000L).isEmpty
-      val survivorDrops = !drops.where(col("vec_id") === 9000007L).isEmpty
-      s.range(1).select(
-        lit(n1 + n2).as("n_deleted"),
-        lit(coldOk).as("cold_ok"),
-        lit(erasedFree).as("erased_free"),
-        lit(survivorDrops).as("survivor_drops"))
-    }),
-
-    // -- [NS] batch-TTL retention for the stored SEMANTIC-DEDUP index:
-    // the aged corpus batch's cell partitions drop as pure metadata
-    // (survivors byte-identical; the batch=-1 seed never ages), the
-    // trained centroids stay (a quantizer is valid over any subset), and
-    // the dedup semantics flip exactly as if the aged vectors were never
-    // ingested: a fresh clone of an AGED vector passes free while a
-    // clone of a RETAINED vector still drops — the q_semdedup_delete
-    // gate's flip, driven by aging instead of erasure. --
-    "q_semdedup_retention" -> ((s, d) => {
-      val e = embeddings(s, d).select("vec_id", "embedding")
-      val tmp = java.nio.file.Files.createTempDirectory("graft_semret")
-      deleteRecursivelyOnExit(tmp)
-      val store = tmp.toFile.getAbsolutePath
-      // batch 0 = the old corpus half; batch 1 = the retained increment
-      graft.operators.Dedup.seedSemStore(e.where(col("vec_id") < 250L), store)
-      graft.operators.Dedup.semDedupIncrementalStored(s, store,
-        e.where(col("vec_id") >= 250L), batchId = 1L).count()
-      val before = snapStoreFiles(s"$store/cells")
-      val dropped = graft.operators.Dedup.retainSemStoreBatches(s, store, cutoff = 0L)
-      val after = snapStoreFiles(s"$store/cells")
-      val droppedOk = dropped == Seq(0L)
-      val coldOk = after.nonEmpty &&
-        after.keySet == before.keySet.filterNot(_.contains("batch=0/")) &&
-        after.forall { case (f, sig) => before(f) == sig }
-      // probe: clones of an aged vec (0) and a retained vec (250)
-      val probe = e.where(col("vec_id").isin(0L, 250L))
-        .select((col("vec_id") + 9000000L).as("vec_id"), col("embedding"))
-      val drops = graft.operators.Dedup.semDedupIncrementalStored(s, store,
-        probe, batchId = 2L)
-      val agedFree = drops.where(col("vec_id") === 9000000L).isEmpty
-      val retainedDrops = !drops.where(col("vec_id") === 9000250L).isEmpty
-      s.range(1).select(
-        lit(droppedOk).as("dropped_ok"),
-        lit(coldOk).as("cold_ok"),
-        lit(agedFree).as("aged_free"),
-        lit(retainedDrops).as("retained_drops"))
-    }),
-
-    // -- [NS] in-place RE-QUANTIZATION maintenance of the stored semantic
-    // index (the knob that grows nlist with the corpus WITHOUT a full
-    // re-seed): the store seeds at nlist=16, requantizeSemStore trains 64
-    // centroids from the stored rows' sample, re-assigns the stored cells
-    // in one parallel job, swaps via the recoverable sentinel protocol and
-    // bumps the manifest; the probe then runs against the evolved store.
-    // Drop semantics are quantizer-invariant for the planted fixture
-    // (clones at cosine 1.0 share a cell under ANY quantizer; organic max
-    // pairwise cosine ≈0.51 « 0.95), so the oracle is the same
-    // deterministic set at shifted ids; requantized==untouched parity is
-    // additionally spec-pinned. --
-    "q_semdedup_requantized" -> ((s, d) => {
-      val e = embeddings(s, d).select("vec_id", "embedding")
-      val store = scratchDirs.getOrElseUpdate(s"semrqstore:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_semrq")
-        deleteRecursivelyOnExit(tmp)
-        val r = tmp.toFile.getAbsolutePath
-        graft.operators.Dedup.seedSemStore(e, r)
-        graft.operators.Dedup.requantizeSemStore(s, r, newNlist = 64)
-        r
-      })
-      val clones = e.where(col("vec_id") < 3)
-        .select((col("vec_id") + 8600000L).as("vec_id"), col("embedding"))
-      val negBase = e.where(col("vec_id") === 5)
-        .select(transform(col("embedding"), x => -x).as("embedding"))
-      val inc = clones
-        .unionByName(negBase.select(lit(8600010L).as("vec_id"), col("embedding")))
-        .unionByName(negBase.select(lit(8600011L).as("vec_id"), col("embedding")))
-      graft.operators.Dedup.semDedupIncrementalStored(s, store, inc,
-          batchId = 1L, minCosine = 0.95, nlist = 64)
-        .orderBy("vec_id")
-    }),
-
-    // -- [NS] the SQ8-QUANTIZED stored semantic index: cells persist
-    // (cell, vec_id, qvec int8, qscale) at ~1/4 the bytes of the
-    // full-precision store (the minhash store's column-weight lesson
-    // applied to the sem tier — at lake scale the float embedding column
-    // is the index's byte bottleneck). Cosine needs only the codes (a
-    // per-vector positive scale cancels), so the probe compares the batch
-    // floats against the cast-up stored codes; SQ8 direction error is
-    // < 1% per component, three orders below the planted fixture's margin
-    // (clones at 1.0, organics ≤ 0.51, threshold 0.95), so the drop set is
-    // the same deterministic plant at shifted ids. Quantized==full parity
-    // and the 1/4-bytes claim are spec-pinned. --
-    "q_semdedup_quantized_stored" -> ((s, d) => {
-      val e = embeddings(s, d).select("vec_id", "embedding")
-      val store = scratchDirs.getOrElseUpdate(s"semqstore:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_semq")
-        deleteRecursivelyOnExit(tmp)
-        val r = tmp.toFile.getAbsolutePath
-        graft.operators.Dedup.seedSemStore(e, r, quantized = true)
-        r
-      })
-      val clones = e.where(col("vec_id") < 3)
-        .select((col("vec_id") + 8800000L).as("vec_id"), col("embedding"))
-      val negBase = e.where(col("vec_id") === 5)
-        .select(transform(col("embedding"), x => -x).as("embedding"))
-      val inc = clones
-        .unionByName(negBase.select(lit(8800010L).as("vec_id"), col("embedding")))
-        .unionByName(negBase.select(lit(8800011L).as("vec_id"), col("embedding")))
-      graft.operators.Dedup.semDedupIncrementalStored(s, store, inc,
-          batchId = 1L, minCosine = 0.95)
-        .orderBy("vec_id")
-    }),
-
-    // -- [NS] STREAMING semantic dedup: the embedding tier's streaming
-    // form, completing tier symmetry (exact/fuzzy/substring/ANN already
-    // stream). Three id-ordered organic slices bootstrap the quantizer on
-    // the first arrival; a fourth slice carries the planted duplicates —
-    // three byte-identical clones of corpus vectors (cosine 1.0 to an
-    // earlier arrival, same cell under ANY quantizer → drop) and two
-    // identical negated copies of vec 5 (fresh direction: the earlier one
-    // is accepted, the later one drops intra-batch by keep-first).
-    // Accepted = every organic vector + the first negated copy. --
-    "q_stream_semdedup" -> ((s, d) => {
-      val in = scratchDirs.getOrElseUpdate(s"semslices:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_semslices")
-        deleteRecursivelyOnExit(tmp)
-        val out = tmp.toFile.getAbsolutePath + "/slices"
-        val e = embeddings(s, d).select("vec_id", "embedding")
-        val mx = e.agg(max(col("vec_id"))).head().getLong(0) + 1
-        val base = System.currentTimeMillis()
-        (0 until 3).foreach { i =>
-          e.where(col("vec_id") >= i * mx / 3 && col("vec_id") < (i + 1) * mx / 3)
-            .coalesce(1).write.mode("append").parquet(out)
-          stampSliceMtime(out, i, base)
-        }
-        val clones = e.where(col("vec_id") < 3)
-          .select((col("vec_id") + 8500000L).as("vec_id"), col("embedding"))
-        val negBase = e.where(col("vec_id") === 5)
-          .select(transform(col("embedding"), x => -x).as("embedding"))
-        clones
-          .unionByName(negBase.select(lit(8500010L).as("vec_id"), col("embedding")))
-          .unionByName(negBase.select(lit(8500011L).as("vec_id"), col("embedding")))
-          .coalesce(1).write.mode("append").parquet(out)
-        stampSliceMtime(out, 3, base)
-        out
-      })
-      val work = java.nio.file.Files.createTempDirectory("graft_semstream")
-      deleteRecursivelyOnExit(work)
-      graft.operators.Dedup.semDedupStreamKeep(s, in,
-          work.toFile.getAbsolutePath, keepCols = Seq("vec_id"),
-          minCosine = 0.95)
-        .orderBy("vec_id")
-    }),
-
-    "q_neardup_embedding" -> ((s, d) => {
-      val e = embeddings(s, d)
-      val probe = e.where(col("vec_id") === 0).withColumn("vec_id", lit(-1L))
-      Dedup.embeddingNearDup(e.unionByName(probe), minCosine = 0.9)
-        .orderBy("vec_a", "vec_b")
-    }),
-
-    "q_embed_stats" -> ((s, d) =>
-      embeddings(s, d)
-        .withColumn("nrm", VectorOps.norm(col("embedding")))
-        .groupBy(col("label"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("nrm").cast("decimal(18,6)")).cast("double") / count(lit(1)), 4)
-            .as("avg_norm"))
-        .orderBy("label")),
-
-    "q_sim_topk" -> ((s, d) =>
-      Similarity.bruteForceTopK(embeddings(s, d), probeId = 0L, k = 10)),
-
-    // nprobe=8 of nlist=16: still skips half the corpus (the IVF structure
-    // is exercised for real) but empirically recovers the exact top-10 on
-    // this data — so the declared rows hash-match the brute-force twin.
-    // The production-shape nprobe=4 path is what q_sim_ivf_recall gates.
-    "q_sim_ivf" -> ((s, d) =>
-      Similarity.ivfTopK(embeddings(s, d), probeId = 0L, k = 10, nprobe = 8)),
-
-    // -- [NS] hard-negative mining: per-anchor most-similar vector BELOW
-    // the 0.9 positive band. The planted clone of vec 0 (cosine 1.0) makes
-    // the band exclusion load-bearing: anchor 0's hardest negative must be
-    // an organic neighbor, never the clone. --
-    "q_hard_negatives" -> ((s, d) => {
-      val e = embeddings(s, d)
-      val clone0 = e.where(col("vec_id") === 0).withColumn("vec_id", lit(-1L))
-      Similarity.hardNegatives(
-        e.unionByName(clone0),
-        e.where(col("vec_id") < 10),
-        posFloor = 0.9)
-    }),
-
-    // -- [NS] incremental IVF: the index is trained on the first 400
-    // vectors ONLY; the remaining batch is assigned to those centroids in
-    // one map pass (no re-train) and must be immediately searchable — the
-    // declared result still hash-matches the brute-force twin over the
-    // FULL set, so appended vectors provably surface in the top-k --
-    "q_sim_ivf_append" -> ((s, d) => {
-      val e = embeddings(s, d)
-      Similarity.ivfAppendTopK(
-        e.where(col("vec_id") < 400),
-        e.where(col("vec_id") >= 400),
-        probeId = 0L, k = 10, nprobe = 8)
-    }),
-
-    // batch (probe-set) IVF: 4 probes against the corpus in ONE pass — the
-    // training-pipeline shape. nprobe=10 of nlist=16 still skips 3/8 of the
-    // corpus per probe but empirically recovers the exact per-probe top-10
-    // for all 4 probes at the gate SF (measured: nprobe=8 misses one true
-    // neighbor of probe 2), so the declared rows hash-match the brute-force
-    // window-top-k twin in DuckDB. The production-shape nprobe=4 recall is
-    // what q_sim_ivf_recall gates.
-    "q_sim_ivf_batch" -> ((s, d) => {
-      val emb = embeddings(s, d)
-      // nprobe scales inversely with shard size: below ~1k vectors probe
-      // every cell (nprobe == nlist degrades gracefully to exact — the
-      // right production behavior for a tiny shard, and it keeps this
-      // query equal to its exact-top-k oracle at ANY scale); at size,
-      // prune to 10/16 cells. The count is one columnar scan of vec_id,
-      // noise next to the top-k job itself.
-      val np = if (emb.count() <= 1000) 16 else 10
-      Similarity.ivfProbeSetTopK(
-        emb, emb.where(col("vec_id").isin(0L, 1L, 2L, 3L)), k = 10, nprobe = np)
-    }),
-
-    // batch exact threshold search: 3 probes broadcast against the corpus,
-    // all pairs above the cosine floor. The declared filter is on the
-    // ROUNDED cosine (probeSetSearch's internal floor sits safely below) so
-    // the selection is engine-portable at the oracle's 4-dp comparison.
-    "q_sim_probeset" -> ((s, d) => {
-      val emb = embeddings(s, d)
-      Similarity.probeSetSearch(
-        emb, emb.where(col("vec_id").isin(0L, 1L, 2L)), minCosine = 0.25)
-        .where(col("cosine") >= 0.3)
-        .orderBy("probe_id", "vec_id")
-    }),
-
-    // IVF is approximate, so its top-k itself is rows-only — but its recall
-    // against the exact brute-force top-k is a deterministic invariant of
-    // (data, centroids, nprobe) and hash-checks against a constant oracle
-    // -- [NS] REAL streaming ANN ingest: embedding drops arrive as
-    // id-ordered file slices; the IVF index bootstraps on the FIRST drop
-    // (the pipeline's one k-means) and every batch assigns to the
-    // persisted centroids and appends (…, cell) rows — the FAISS
-    // add-vs-train split, streamed. The probe then searches the STORED
-    // cells (no re-assignment on the read path) and must recall >= 8/10
-    // of the float brute-force truth. --
-    "q_stream_ann_ingest" -> ((s, d) => {
-      val in = embSlices(s, d)
-      val work = java.nio.file.Files.createTempDirectory("graft_annstream")
-      deleteRecursivelyOnExit(work)
-      val w = work.toFile.getAbsolutePath
-      val streamed = Similarity.streamIngestIvf(s, in, w, nlist = 16)
-      val bf = Similarity.bruteForceTopK(embeddings(s, d), probeId = 0L, k = 10)
-        .select("vec_id")
-      val ivf = Similarity.ivfTopKStored(streamed, s"$w/ivf_index", probeId = 0L,
-          k = 10, nprobe = 8)
-        .select("vec_id")
-      bf.join(ivf, Seq("vec_id"), "left_semi")
-        .agg(count(lit(1)).as("n_common"))
-        .select(lit(10).as("k"), (col("n_common") >= 8).as("recall_ok"))
-    }),
-
-    // -- [NS] IN-PLACE RE-QUANTIZATION of the streamed ANN store: the
-    // ingest's add-vs-train split freezes the bootstrap quantizer, so at
-    // fixed nlist every cell grows linearly with the corpus — the same
-    // aging term the semantic tier's requantizeSemStore closed.
-    // streamIngestIvf(targetCellRows) rides requantizeIvfStore BETWEEN
-    // micro-batches: train the larger quantizer from the STORED rows'
-    // bounded sample, re-assign the stored rows in ONE parallel job
-    // preserving batch provenance, swap via the recoverable
-    // sentinel-guarded protocol. Declared: the index GREW in-stream (8 →
-    // past it, no re-seed, no second corpus read) and the evolved store
-    // still clears the 8/10 recall gate against float brute force at a
-    // pruned nprobe (5/8 of the grown cells — see the margin note below). --
-    "q_sim_ivf_requantized" -> ((s, d) => {
-      val in = embSlices(s, d)
-      val work = java.nio.file.Files.createTempDirectory("graft_ivfrq")
-      deleteRecursivelyOnExit(work)
-      val w = work.toFile.getAbsolutePath
-      val streamed = Similarity.streamIngestIvf(s, in, w, nlist = 8,
-        sampleRows = 2048, targetCellRows = 16, growFactor = 4)
-      val nlistAfter = Similarity.loadIvfIndex(s, s"$w/ivf_index").length
-      val bf = Similarity.bruteForceTopK(embeddings(s, d), probeId = 0L, k = 10)
-        .select("vec_id")
-      // nprobe = 5/8 of the grown cells: gaussian embeddings are IVF's
-      // worst case (neighbors scatter across cells — the reason
-      // q_sim_ivf_batch probes every cell on tiny shards), and the
-      // measured recall curve on the evolved 32-cell index at the verify
-      // SF is 16 cells → 8/10, 20 → 9/10, 32 → 10/10; 5/8 keeps a
-      // one-neighbor margin over the gate while still pruning 37% of the
-      // store (deterministic: seed-free k-means over a deterministic
-      // stream, so the margin is a constant of data+index, not luck)
-      val ivf = Similarity.ivfTopKStored(streamed, s"$w/ivf_index", probeId = 0L,
-          k = 10, nprobe = math.max(8, nlistAfter * 5 / 8))
-        .select("vec_id")
-      bf.join(ivf, Seq("vec_id"), "left_semi")
-        .agg(count(lit(1)).as("n_common"))
-        .select(lit(10).as("k"), lit(nlistAfter > 8).as("nlist_grew"),
-          (col("n_common") >= 8).as("recall_ok"))
-    }),
-
-    // -- [NS] SQ8-QUANTIZED streamed ANN store: the ingest persists
-    // (…, cell, qvec int8, qscale) instead of the float embedding column —
-    // ~1/4 the bytes on the column that IS the store's byte bottleneck at
-    // lake scale (the seedSemStore(quantized) lesson applied to the ANN
-    // tier). Cosine ranking needs only the codes (per-vector scale
-    // cancels), so the stored probe ranks on the bare cast-up codes and
-    // never loads qscale. Declared: the store holds codes only AND the
-    // code-ranked stored probe still clears the 8/10 recall gate against
-    // FLOAT brute force (quantization perturbs cosine < 1%, inside the
-    // gate's margin at nprobe=8 — the q_sim_quantized contract composed
-    // with the streamed store). --
-    "q_stream_ann_quantized" -> ((s, d) => {
-      val in = embSlices(s, d)
-      val work = java.nio.file.Files.createTempDirectory("graft_annq")
-      deleteRecursivelyOnExit(work)
-      val w = work.toFile.getAbsolutePath
-      val streamed = Similarity.streamIngestIvf(s, in, w, nlist = 16,
-        quantized = true)
-      val codesOnly = streamed.columns.contains("qvec") &&
-        !streamed.columns.contains("embedding")
-      val bf = Similarity.bruteForceTopK(embeddings(s, d), probeId = 0L, k = 10)
-        .select("vec_id")
-      val ivf = Similarity.ivfTopKStored(streamed, s"$w/ivf_index", probeId = 0L,
-          k = 10, nprobe = 8)
-        .select("vec_id")
-      bf.join(ivf, Seq("vec_id"), "left_semi")
-        .agg(count(lit(1)).as("n_common"))
-        .select(lit(10).as("k"), lit(codesOnly).as("codes_only"),
-          (col("n_common") >= 8).as("recall_ok"))
-    }),
-
-    // -- [NS] COMPACTION of the streamed ANN store (compactIvfStore): the
-    // per-batch appends collapse into ONE size-targeted batch partition,
-    // range-clustered and sorted by cell so the stored probe's
-    // cell-IN filter prunes parquet row groups via min/max stats — the
-    // flat layout's version of partition pruning. With this the ANN store
-    // has the full maintenance pair (compaction + requantize) like every
-    // other stored index. Declared: the compacted store is COMPLETE
-    // (every streamed vector present) and the probe over it still clears
-    // the 8/10 recall gate. --
-    "q_sim_ivf_compacted" -> ((s, d) => {
-      val in = embSlices(s, d)
-      val work = java.nio.file.Files.createTempDirectory("graft_ivfcomp")
-      deleteRecursivelyOnExit(work)
-      val w = work.toFile.getAbsolutePath
-      Similarity.streamIngestIvf(s, in, w, nlist = 16)
-      Similarity.compactIvfStore(s, w, upTo = 10L)
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells")
-      // completeness folded INTO the returned frame (a cross-join of two
-      // 1-row counts) so the declared query is one job — no
-      // plan-build-time actions
-      val completeDf = stored.agg(count(lit(1)).as("n_stored"))
-        .crossJoin(embeddings(s, d).agg(count(lit(1)).as("n_src")))
-        .select((col("n_stored") === col("n_src")).as("complete"))
-      val bf = Similarity.bruteForceTopK(embeddings(s, d), probeId = 0L, k = 10)
-        .select("vec_id")
-      val ivf = Similarity.ivfTopKStored(stored.drop("batch"), s"$w/ivf_index",
-          probeId = 0L, k = 10, nprobe = 8)
-        .select("vec_id")
-      bf.join(ivf, Seq("vec_id"), "left_semi")
-        .agg(count(lit(1)).as("n_common"))
-        .crossJoin(completeDf)
-        .select(lit(10).as("k"), col("complete"),
-          (col("n_common") >= 8).as("recall_ok"))
-    }),
-
-    // -- [NS] STORED batch probe-set (ivfProbeSetTopKStored): the
-    // production probe shape at lake scale — probes arrive N at a time and
-    // the index is always the persisted one, so N single-probe reads would
-    // re-scan the store N times. This runs all four probes in ONE pruned
-    // pass over the AGED production layout (SQ8-quantized at ingest, then
-    // compacted so the store is cell-clustered): each probe ranks its
-    // nprobe cells against the loaded centroids, the probes' cell-union
-    // becomes a literal IN that parquet row-group stats act on, and one
-    // per-probe WindowGroupLimit ranks the candidates. Declared: EVERY
-    // probe independently clears the 8/10 recall gate vs float brute
-    // force (the per-probe form of the single-probe tiers' contract). --
-    "q_sim_ivf_batch_stored" -> ((s, d) => {
-      val in = embSlices(s, d)
-      val work = java.nio.file.Files.createTempDirectory("graft_ivfbstore")
-      deleteRecursivelyOnExit(work)
-      val w = work.toFile.getAbsolutePath
-      Similarity.streamIngestIvf(s, in, w, nlist = 16, quantized = true)
-      Similarity.compactIvfStore(s, w, upTo = 10L)
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells").drop("batch")
-      val emb = embeddings(s, d)
-      val probes = emb.where(col("vec_id").isin(0L, 1L, 2L, 3L))
-      val approx = Similarity.ivfProbeSetTopKStored(
-        stored, s"$w/ivf_index", probes, k = 10, nprobe = 8)
-      // float truth: per-probe exact top-10 — one corpus pass, probes
-      // broadcast, same WindowGroupLimit shape as the probe under test
-      val p = probes.select(col("vec_id").as("probe_id"),
-        col("embedding").as("probe_emb"))
-      val byProbe = Window.partitionBy(col("probe_id"))
-        .orderBy(col("cosine").desc, col("vec_id"))
-      val truth = emb.crossJoin(broadcast(p))
-        .where(col("vec_id") =!= col("probe_id"))
-        .withColumn("cosine",
-          round(VectorOps.cosine(col("embedding"), col("probe_emb")), 4))
-        .withColumn("rk", row_number().over(byProbe))
-        .where(col("rk") <= 10)
-        .select("probe_id", "vec_id")
-      truth.join(approx.select("probe_id", "vec_id"),
-          Seq("probe_id", "vec_id"), "left_semi")
-        .groupBy("probe_id").agg(count(lit(1)).as("n_common"))
-        .select(col("probe_id"), (col("n_common") >= 8).as("recall_ok"))
-        .orderBy("probe_id")
-    }),
-
-    // -- [NS] COARSE two-level assignment under the oracle gate: every
-    // other declared ANN/dedup query runs at nlist far below
-    // CoarseAssignThreshold (2048), so the two-level shortlist the 100 TB
-    // story leans on (assign via ~sqrt(nlist) groups — 27x per row at
-    // nlist 16k) was spec-tested but never oracle-gated. This query
-    // requantizes a streamed store PAST the threshold (16 -> 2048 cells;
-    // the re-assign of every stored row AND the probe-side cell ranking
-    // both go through the two-level path) over an expanded corpus of 16
-    // deterministic jittered copies per embedding (the clustered geometry
-    // a real corpus has — see embExpanded), then gates per-probe recall
-    // >= 8/10 vs float brute force through the stored batch probe.
-    // Deterministic end to end: seed-free k-means on an ordered sample,
-    // hash-keyed jitter, tie-breaks by (distance, index). --
-    "q_sim_ivf_coarse" -> ((s, d) => {
-      val in = embExpanded(s, d)
-      val work = java.nio.file.Files.createTempDirectory("graft_ivfcoarse")
-      deleteRecursivelyOnExit(work)
-      val w = work.toFile.getAbsolutePath
-      Similarity.streamIngestIvf(s, in, w, nlist = 16)
-      Similarity.requantizeIvfStore(s, w, newNlist = 2048, sampleRows = 2048)
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells").drop("batch")
-      val nlistAfter = Similarity.loadIvfIndex(s, s"$w/ivf_index").length
-      val expanded = s.read.parquet(in)
-      // probes = copy-0 (unjittered) rows of originals 0 and 1
-      val probes = expanded.where(col("vec_id").isin(0L, 16L))
-      val approx = Similarity.ivfProbeSetTopKStored(
-        stored, s"$w/ivf_index", probes, k = 10, nprobe = 32)
-      val p = probes.select(col("vec_id").as("probe_id"),
-        col("embedding").as("probe_emb"))
-      val byProbe = Window.partitionBy(col("probe_id"))
-        .orderBy(col("cosine").desc, col("vec_id"))
-      val truth = expanded.crossJoin(broadcast(p))
-        .where(col("vec_id") =!= col("probe_id"))
-        .withColumn("cosine",
-          round(VectorOps.cosine(col("embedding"), col("probe_emb")), 4))
-        .withColumn("rk", row_number().over(byProbe))
-        .where(col("rk") <= 10)
-        .select("probe_id", "vec_id")
-      truth.join(approx.select("probe_id", "vec_id"),
-          Seq("probe_id", "vec_id"), "left_semi")
-        .groupBy("probe_id").agg(count(lit(1)).as("n_common"))
-        .select(col("probe_id"),
-          lit(nlistAfter >= Similarity.CoarseAssignThreshold).as("nlist_coarse"),
-          (col("n_common") >= 8).as("recall_ok"))
-        .orderBy("probe_id")
-    }),
-
-    // -- [NS] FILTERED ANN over the stored index — the most common
-    // production vector-search shape ("top-k among docs WHERE lang='en'
-    // AND ts > X"): a relational predicate on a STORED column composes
-    // with the cell prune as a PRE-filter in the one store scan
-    // (post-filtering a top-k pool loses recall whenever fewer than k
-    // unfiltered winners qualify). The store is the aged production
-    // layout (streamed ingest, then compacted/cell-clustered); the scan
-    // carries `label >= 5 AND cell IN (…)` — both filters parquet-
-    // pushable (plan-asserted in SimilaritySpec). The serve path is the
-    // selectivity-SCALED probe (ivfProbeSetTopKStoredFiltered): filtered
-    // winners spread across ~1/sel× more cells than unfiltered ones, so
-    // the nprobe budget widens by inverse selectivity, capped at an
-    // exhaustive-but-still-one-scan pass. Runs on the CLUSTERED expanded
-    // corpus (the geometry a real embedding corpus has — labels ride the
-    // expansion as per-cluster constants); probes are the first four
-    // copy-0 rows whose own label qualifies ("top-k en docs for an en
-    // query"), computed by the DuckDB twin from the same table.
-    // Declared: every probe independently clears the ≥8/10 recall gate
-    // vs the FILTERED float brute force (truth ranks qualifying rows
-    // only). --
-    "q_sim_filtered_stored" -> ((s, d) => {
-      val in = embExpanded(s, d)
-      val work = java.nio.file.Files.createTempDirectory("graft_ivffilt")
-      deleteRecursivelyOnExit(work)
-      val w = work.toFile.getAbsolutePath
-      Similarity.streamIngestIvf(s, in, w, nlist = 16)
-      Similarity.compactIvfStore(s, w, upTo = 10L)
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells").drop("batch")
-      val expanded = s.read.parquet(in)
-      val probes = expanded
-        .where(pmod(col("vec_id"), lit(16)) === 0 && col("label") >= 5)
-        .orderBy(col("vec_id")).limit(4)
-      val approx = Similarity.ivfProbeSetTopKStoredFiltered(
-        stored, s"$w/ivf_index", probes,
-        rowFilter = col("label") >= 5, k = 10, nprobe = 6)
-      val p = probes.select(col("vec_id").as("probe_id"),
-        col("embedding").as("probe_emb"))
-      val byProbe = Window.partitionBy(col("probe_id"))
-        .orderBy(col("cosine").desc, col("vec_id"))
-      val truth = expanded.where(col("label") >= 5).crossJoin(broadcast(p))
-        .where(col("vec_id") =!= col("probe_id"))
-        .withColumn("cosine",
-          round(VectorOps.cosine(col("embedding"), col("probe_emb")), 4))
-        .withColumn("rk", row_number().over(byProbe))
-        .where(col("rk") <= 10)
-        .select("probe_id", "vec_id")
-      truth.join(approx.select("probe_id", "vec_id"),
-          Seq("probe_id", "vec_id"), "left_semi")
-        .groupBy("probe_id").agg(count(lit(1)).as("n_common"))
-        .select(col("probe_id"), (col("n_common") >= 8).as("recall_ok"))
-        .orderBy("probe_id")
-    }),
-
-    // -- [NS] FILTERED ANN on the CODED store — the production layout
-    // (PQ codes) behind the production query shape (top-k among
-    // qualifying rows): same clustered fixture, probes and filtered
-    // float truth as the flat gate above, served through the PQ batch
-    // probe with BOTH recall budgets scaled by inverse qualifier
-    // selectivity (nprobe ACORN-style capped at nlist; rerank scaled
-    // too — the ADC pool is composed of pre-filter survivors, so a
-    // fixed pool starves at sparse selectivity: exactly where the coded
-    // path loses recall first). Declared: per-probe recall ≥ 8/10 vs
-    // the FILTERED float brute force. --
-    "q_sim_ivfpq_filtered" -> ((s, d) => {
-      val in = embExpanded(s, d)
-      val work = java.nio.file.Files.createTempDirectory("graft_ivfpqfilt")
-      deleteRecursivelyOnExit(work)
-      val w = work.toFile.getAbsolutePath
-      Similarity.streamIngestIvfPq(s, in, w, nlist = 16, m = 8, codebookK = 32)
-      Similarity.compactIvfStore(s, w, upTo = 10L)
-      val expanded = s.read.parquet(in)
-      val probes = expanded
-        .where(pmod(col("vec_id"), lit(16)) === 0 && col("label") >= 5)
-        .orderBy(col("vec_id")).limit(4)
-      val approx = Similarity.ivfPqProbeSetTopKStoredFiltered(s, w,
-        probes = probes, rerankWith = expanded,
-        rowFilter = col("label") >= 5, k = 10, nprobe = 6, rerank = 10)
-      val p = probes.select(col("vec_id").as("probe_id"),
-        col("embedding").as("probe_emb"))
-      val byProbe = Window.partitionBy(col("probe_id"))
-        .orderBy(col("cosine").desc, col("vec_id"))
-      val truth = expanded.where(col("label") >= 5).crossJoin(broadcast(p))
-        .where(col("vec_id") =!= col("probe_id"))
-        .withColumn("cosine",
-          round(VectorOps.cosine(col("embedding"), col("probe_emb")), 4))
-        .withColumn("rk", row_number().over(byProbe))
-        .where(col("rk") <= 10)
-        .select("probe_id", "vec_id")
-      truth.join(approx.select("probe_id", "vec_id"),
-          Seq("probe_id", "vec_id"), "left_semi")
-        .groupBy("probe_id").agg(count(lit(1)).as("n_common"))
-        .select(col("probe_id"), (col("n_common") >= 8).as("recall_ok"))
-        .orderBy("probe_id")
-    }),
-
-    // -- [NS] LAKE-SCALE quantizer TRAINING (hierarchical two-level
-    // k-means): the driver-sample trainer caps nlist at the bounded
-    // sample (kmeans now clamps LOUDLY), but √N at 100 TB implies nlist
-    // 10⁵–10⁶ — so training goes two-level, the training-side twin of
-    // the coarse assigner: the driver trains √nlist GROUP centroids from
-    // the usual bounded sample, then ONE parallel job hash-samples
-    // ~10×nlist rows DISTRIBUTED (never driver-collected), assigns each
-    // to its group, and trains per-group sub-centroids in the tasks
-    // (mass-proportional k, largest-remainder, Σ = nlist). This query
-    // trains nlist=8192 on the 256×-expanded corpus (128k rows),
-    // seeds a cell-clustered store against the artifact, and declares:
-    // the distributed sample was NON-degenerate (≥ 8×nlist rows), the
-    // artifact holds all 8192 centroids (no silent clamp), and every
-    // probe clears the ≥8/10 recall gate through the stored batch probe
-    // — assignment and probe-side ranking both on the two-level coarse
-    // path. --
-    "q_sim_ivf_hier" -> ((s, d) => {
-      val in = embExpandedWide(s, d)
-      val work = java.nio.file.Files.createTempDirectory("graft_ivfhier")
-      deleteRecursivelyOnExit(work)
-      val w = work.toFile.getAbsolutePath
-      val expanded = s.read.parquet(in)
-      val sampleN = Similarity.trainIvfIndexHierarchical(
-        expanded, s"$w/ivf_index", nlist = 8192, oversample = 10)
-      Similarity.seedIvfStore(expanded, w)
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells").drop("batch")
-      val nlistTrained = Similarity.loadIvfIndex(s, s"$w/ivf_index").length
-      // probes = copy-0 (unjittered) rows of originals 0 and 1
-      val probes = expanded.where(col("vec_id").isin(0L, 256L))
-      val approx = Similarity.ivfProbeSetTopKStored(
-        stored, s"$w/ivf_index", probes, k = 10, nprobe = 32)
-      val p = probes.select(col("vec_id").as("probe_id"),
-        col("embedding").as("probe_emb"))
-      val byProbe = Window.partitionBy(col("probe_id"))
-        .orderBy(col("cosine").desc, col("vec_id"))
-      val truth = expanded.crossJoin(broadcast(p))
-        .where(col("vec_id") =!= col("probe_id"))
-        .withColumn("cosine",
-          round(VectorOps.cosine(col("embedding"), col("probe_emb")), 4))
-        .withColumn("rk", row_number().over(byProbe))
-        .where(col("rk") <= 10)
-        .select("probe_id", "vec_id")
-      truth.join(approx.select("probe_id", "vec_id"),
-          Seq("probe_id", "vec_id"), "left_semi")
-        .groupBy("probe_id").agg(count(lit(1)).as("n_common"))
-        .select(col("probe_id"),
-          lit(nlistTrained == 8192).as("nlist_ok"),
-          lit(sampleN >= 8L * 8192).as("sample_ok"),
-          (col("n_common") >= 8).as("recall_ok"))
-        .orderBy("probe_id")
-    }),
-
-    // -- [NS] STORED IVF-PQ — the layout a real 100 TB ANN deployment
-    // uses (FAISS IVFPQ: coarse cells to touch less + PQ codes to store
-    // less, ~32x under float32): streamed ingest trains BOTH quantizers
-    // on the bootstrap batch, appends (…, cell, pqcode) codes-only rows,
-    // and the probe serves as ADC over the nprobe-pruned cells into a
-    // rerank·k candidate pool, exact-float re-ranked against the source
-    // corpus (the FAISS refine discipline — exact math touches rerank·k
-    // rows, never the store). Declared: the store holds codes only AND
-    // the served top-k clears the 8/10 recall gate vs float brute force.
-    // Maintenance closes the last index-family asymmetry: this layout
-    // requantizes through the SAME requantizeIvfStore op (codes encode
-    // raw vectors, so nlist growth relabels cells without touching a
-    // code) — spec-covered alongside the swap protocol. --
-    "q_sim_ivfpq_stored" -> ((s, d) => {
-      val in = embSlices(s, d)
-      val work = java.nio.file.Files.createTempDirectory("graft_ivfpq")
-      deleteRecursivelyOnExit(work)
-      val w = work.toFile.getAbsolutePath
-      val streamed = Similarity.streamIngestIvfPq(s, in, w, nlist = 16,
-        m = 8, codebookK = 32)
-      val codesOnly = streamed.columns.contains("pqcode") &&
-        !streamed.columns.contains("embedding")
-      val emb = embeddings(s, d)
-      val bf = Similarity.bruteForceTopK(emb, probeId = 0L, k = 10)
-        .select("vec_id")
-      val pq = Similarity.ivfPqTopKStored(s, w, probeId = 0L,
-          rerankWith = emb, k = 10, nprobe = 8, rerank = 10)
-        .select("vec_id")
-      bf.join(pq, Seq("vec_id"), "left_semi")
-        .agg(count(lit(1)).as("n_common"))
-        .select(lit(10).as("k"), lit(codesOnly).as("codes_only"),
-          (col("n_common") >= 8).as("recall_ok"))
-    }),
-
-    // -- [NS] BATCH probe-set over the stored IVF-PQ index — the
-    // production probe shape for the production layout: N probes, ONE
-    // pruned pass over the coded store (cell-union IN prune, per-probe
-    // ADC LUTs shipped in the task closure, WindowGroupLimit pool, exact
-    // float re-rank against the source corpus). Declared: every probe
-    // independently clears the 8/10 recall gate vs float brute force. --
-    "q_sim_ivfpq_batch_stored" -> ((s, d) => {
-      val in = embSlices(s, d)
-      val work = java.nio.file.Files.createTempDirectory("graft_ivfpqb")
-      deleteRecursivelyOnExit(work)
-      val w = work.toFile.getAbsolutePath
-      Similarity.streamIngestIvfPq(s, in, w, nlist = 16, m = 8, codebookK = 32)
-      val emb = embeddings(s, d)
-      val probes = emb.where(col("vec_id").isin(0L, 1L, 2L, 3L))
-      val approx = Similarity.ivfPqProbeSetTopKStored(s, w, probes,
-        rerankWith = emb, k = 10, nprobe = 8, rerank = 10)
-      val p = probes.select(col("vec_id").as("probe_id"),
-        col("embedding").as("probe_emb"))
-      val byProbe = Window.partitionBy(col("probe_id"))
-        .orderBy(col("cosine").desc, col("vec_id"))
-      val truth = emb.crossJoin(broadcast(p))
-        .where(col("vec_id") =!= col("probe_id"))
-        .withColumn("cosine",
-          round(VectorOps.cosine(col("embedding"), col("probe_emb")), 4))
-        .withColumn("rk", row_number().over(byProbe))
-        .where(col("rk") <= 10)
-        .select("probe_id", "vec_id")
-      truth.join(approx.select("probe_id", "vec_id"),
-          Seq("probe_id", "vec_id"), "left_semi")
-        .groupBy("probe_id").agg(count(lit(1)).as("n_common"))
-        .select(col("probe_id"), (col("n_common") >= 8).as("recall_ok"))
-        .orderBy("probe_id")
-    }),
-
-    // -- [NS] IN-STREAM RE-QUANTIZATION of the IVF-PQ store: the coded
-    // tier rides the SAME maintenance as the flat/SQ8 tiers —
-    // streamIngestIvfPq(targetCellRows) fires requantizeIvfStore between
-    // micro-batches, which reconstructs through the codebooks, retrains
-    // the coarse quantizer from the stored rows, and relabels cells
-    // WITHOUT touching a code. Declared: the index grew in-stream (8 ->
-    // past it) and the evolved coded store still clears the 8/10 recall
-    // gate through ADC + exact re-rank at a pruned nprobe. --
-    "q_sim_ivfpq_requantized" -> ((s, d) => {
-      val in = embSlices(s, d)
-      val work = java.nio.file.Files.createTempDirectory("graft_ivfpqrq")
-      deleteRecursivelyOnExit(work)
-      val w = work.toFile.getAbsolutePath
-      Similarity.streamIngestIvfPq(s, in, w, nlist = 8, m = 8, codebookK = 32,
-        targetCellRows = 16, growFactor = 4)
-      val nlistAfter = Similarity.loadIvfIndex(s, s"$w/ivf_index").length
-      val emb = embeddings(s, d)
-      val bf = Similarity.bruteForceTopK(emb, probeId = 0L, k = 10)
-        .select("vec_id")
-      // wider than the flat twin's 5/8 pruning on BOTH knobs: the coded
-      // tier stacks two approximations (cell pruning + ADC pool), and at
-      // grown nlist the per-cell candidate count shrinks so ADC's pool-
-      // composition noise is the recall term — production IVFPQ raises
-      // rerank with nlist for the same reason (measured: 5/8+rerank10
-      // missed the gate at the bench SF's 128-cell growth; 3/4+rerank20
-      // clears at every testdata SF)
-      val pq = Similarity.ivfPqTopKStored(s, w, probeId = 0L,
-          rerankWith = emb, k = 10,
-          nprobe = math.max(8, nlistAfter * 3 / 4), rerank = 20)
-        .select("vec_id")
-      bf.join(pq, Seq("vec_id"), "left_semi")
-        .agg(count(lit(1)).as("n_common"))
-        .select(lit(10).as("k"), lit(nlistAfter > 8).as("nlist_grew"),
-          (col("n_common") >= 8).as("recall_ok"))
-    }),
-
-    // -- [NS] HOT-CELL skew maintenance: per-probe serve cost is
-    // per-CELL, so a drifting stream that concentrates mass into a few
-    // cells degrades latency even while the store-wide MEAN stays on
-    // target — requantize's mean-based trigger never fires. This query
-    // streams the drift fixture (uniform bootstrap, then a concentrated
-    // drop of tight clone clusters), reads the occupancy probe, drives
-    // splitHotCells to quiescence (per-hot-cell sub-quantizers trained
-    // from each cell's OWN rows — O(hot rows), cold cells bit-identical),
-    // and declares: the split fired, the max-cell occupancy ceiling is
-    // restored, the store kept every row, and the hot-cluster probes
-    // still clear the ≥8/10 recall gate vs float brute force. --
-    "q_sim_ivf_hotsplit" -> ((s, d) => {
-      val in = embDriftSlices(s, d)
-      val work = java.nio.file.Files.createTempDirectory("graft_hotsplit")
-      deleteRecursivelyOnExit(work)
-      val w = work.toFile.getAbsolutePath
-      Similarity.streamIngestIvf(s, in, w, nlist = 16)
-      val occBefore = Similarity.cellOccupancy(s, w)
-        .agg(max(col("n_rows")), sum(col("n_rows"))).head()
-      val (maxBefore, totalRows) = (occBefore.getLong(0), occBefore.getLong(1))
-      // ceiling = 1.5× the uniform mean: the drop's clusters sit well
-      // above it, the cold cells well below
-      val ceiling = (totalRows * 3 / (2 * 16)).toInt
-      // drive to QUIESCENCE (geometric convergence on distinct rows); the
-      // budget is a runaway backstop only (byte-identical clone blobs can
-      // never split), and exhausting it is surfaced as its OWN gate
-      // column (`converged`) so a budget exit is never misread as a
-      // genuine ceiling violation
-      var splits = 0
-      var rounds = 0
-      var quiescent = false
-      while (rounds < 16 && !quiescent) {
-        if (Similarity.splitHotCells(s, w, maxCellRows = ceiling) > 0) {
-          splits += 1; rounds += 1
-        } else quiescent = true
-      }
-      val occAfter = Similarity.cellOccupancy(s, w)
-        .agg(max(col("n_rows")), sum(col("n_rows"))).head()
-      val (maxAfter, totalAfter) = (occAfter.getLong(0), occAfter.getLong(1))
-      val nlistFinal = Similarity.loadIvfIndex(s, s"$w/ivf_index").length
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells").drop("batch")
-      val corpus = s.read.parquet(in)
-      // probes 0 and 1: originals whose clone clusters drove the skew
-      val probes = corpus.where(col("vec_id").isin(0L, 1L))
-      val approx = Similarity.ivfProbeSetTopKStored(
-        stored, s"$w/ivf_index", probes, k = 10,
-        nprobe = math.max(8, nlistFinal / 2))
-      val p = probes.select(col("vec_id").as("probe_id"),
-        col("embedding").as("probe_emb"))
-      val byProbe = Window.partitionBy(col("probe_id"))
-        .orderBy(col("cosine").desc, col("vec_id"))
-      val truth = corpus.crossJoin(broadcast(p))
-        .where(col("vec_id") =!= col("probe_id"))
-        .withColumn("cosine",
-          round(VectorOps.cosine(col("embedding"), col("probe_emb")), 4))
-        .withColumn("rk", row_number().over(byProbe))
-        .where(col("rk") <= 10)
-        .select("probe_id", "vec_id")
-      truth.join(approx.select("probe_id", "vec_id"),
-          Seq("probe_id", "vec_id"), "left_semi")
-        .groupBy("probe_id").agg(count(lit(1)).as("n_common"))
-        .select(col("probe_id"),
-          lit(splits >= 1).as("split_fired"),
-          lit(quiescent).as("converged"),
-          lit(maxAfter <= ceiling && maxAfter < maxBefore).as("ceiling_ok"),
-          lit(totalAfter == totalRows).as("complete"),
-          (col("n_common") >= 8).as("recall_ok"))
-        .orderBy("probe_id")
-    }),
-
-    // -- [NS] IN-STREAM hot-cell maintenance — the streaming twin of
-    // q_sim_ivf_hotsplit: the SAME drift fixture arrives as a file
-    // stream with the skew trigger armed (maxCellRows = 3× the final
-    // mean), so the response fires BETWEEN micro-batches while the
-    // stream keeps running — no operator ever stops the ingest to run
-    // the split. The uniform bootstrap batch stays under the ceiling
-    // (the trigger's idle path is one bounded occupancy aggregate); the
-    // clone drop trips it. Declared: the split fired in-stream (nlist
-    // grew past the bootstrap 16), the ceiling is restored, the store
-    // kept every row, and the hot-cluster probes clear ≥8/10 recall. --
-    "q_stream_ivf_hotsplit" -> ((s, d) => {
-      val in = embDriftSlices(s, d)
-      val work = java.nio.file.Files.createTempDirectory("graft_streamsplit")
-      deleteRecursivelyOnExit(work)
-      val w = work.toFile.getAbsolutePath
-      val corpus = s.read.parquet(in)
-      val total = corpus.count()
-      // 1.5× the final mean — the batch twin's ceiling: the drop's
-      // clusters sit well above it at every SF, the cold cells below
-      val ceiling = (total * 3 / (2 * 16)).toInt
-      val streamed = Similarity.streamIngestIvf(s, in, w, nlist = 16,
-        maxCellRows = ceiling, splitRounds = 12)
-      val nlistFinal = Similarity.loadIvfIndex(s, s"$w/ivf_index").length
-      val occ = Similarity.cellOccupancy(s, w)
-        .agg(max(col("n_rows")).as("mx"), sum(col("n_rows")).as("n"))
-      val probes = corpus.where(col("vec_id").isin(0L, 1L))
-      val approx = Similarity.ivfProbeSetTopKStored(
-        streamed, s"$w/ivf_index", probes, k = 10,
-        nprobe = math.max(8, nlistFinal / 2))
-      val p = probes.select(col("vec_id").as("probe_id"),
-        col("embedding").as("probe_emb"))
-      val byProbe = Window.partitionBy(col("probe_id"))
-        .orderBy(col("cosine").desc, col("vec_id"))
-      val truth = corpus.crossJoin(broadcast(p))
-        .where(col("vec_id") =!= col("probe_id"))
-        .withColumn("cosine",
-          round(VectorOps.cosine(col("embedding"), col("probe_emb")), 4))
-        .withColumn("rk", row_number().over(byProbe))
-        .where(col("rk") <= 10)
-        .select("probe_id", "vec_id")
-      truth.join(approx.select("probe_id", "vec_id"),
-          Seq("probe_id", "vec_id"), "left_semi")
-        .groupBy("probe_id").agg(count(lit(1)).as("n_common"))
-        .crossJoin(broadcast(occ))
-        .select(col("probe_id"),
-          lit(nlistFinal > 16).as("split_fired"),
-          (col("mx") <= ceiling).as("ceiling_ok"),
-          (col("n") === total).as("complete"),
-          (col("n_common") >= 8).as("recall_ok"))
-        .orderBy("probe_id")
-    }),
-
-    // -- [NS] IN-STREAM GROWTH ACROSS THE HIERARCHICAL-TRAINING BOUNDARY:
-    // the ingest stream's requantize ladder COMPOUNDS (nlist × growFactor
-    // per trigger), so any fixed driver-sample ceiling is eventually
-    // crossed — exactly where kmeans' `sample >= k` refusal used to kill
-    // the stream mid-run. requantizeIvfStore's totality guard routes the
-    // staged quantizer to hierarchical two-level training past the
-    // ceiling; this gate drives the LIVE stream across that boundary
-    // (deterministic 2-batch ladder: 4 → 16 on the driver-sample path,
-    // then 16 → 64 where 64 > sampleRows=48 forces the hierarchical
-    // path) and declares: the ladder compounded to exactly 64
-    // (ladder_ok — batches are mtime-deterministic), the boundary was
-    // crossed while the stream ran (crossed_ok — nlist exceeds the
-    // driver-trainable ceiling, which only the hierarchical route can
-    // produce), the store kept every row (complete), and the grown
-    // store still serves ≥8/10 recall vs float brute force. --
-    "q_stream_ivf_growth" -> ((s, d) => {
-      val in = embSlices(s, d)
-      val work = java.nio.file.Files.createTempDirectory("graft_streamgrow")
-      deleteRecursivelyOnExit(work)
-      val w = work.toFile.getAbsolutePath
-      val corpus = s.read.parquet(in)
-      val total = corpus.count() // 500 at every SF — the ladder is fixed
-      // targetCellRows=12: batch 0 (250 rows) > 12·4 fires 4→16 (16 ≤
-      // min(250, 48): driver path); batch 1 (500 rows) > 12·16 fires
-      // 16→64 (64 > min(500, 48): hierarchical) — the crash boundary,
-      // crossed between micro-batches with the stream still running
-      val streamed = Similarity.streamIngestIvf(s, in, w, nlist = 4,
-        sampleRows = 48, targetCellRows = 12, growFactor = 4)
-      val nlistFinal = Similarity.loadIvfIndex(s, s"$w/ivf_index").length
-      val stTotal = streamed.agg(count(lit(1)).as("n"))
-      val probes = corpus.where(col("vec_id").isin(0L, 1L))
-      val approx = Similarity.ivfProbeSetTopKStored(
-        streamed, s"$w/ivf_index", probes, k = 10, nprobe = nlistFinal / 2)
-      val p = probes.select(col("vec_id").as("probe_id"),
-        col("embedding").as("probe_emb"))
-      val byProbe = Window.partitionBy(col("probe_id"))
-        .orderBy(col("cosine").desc, col("vec_id"))
-      val truth = corpus.crossJoin(broadcast(p))
-        .where(col("vec_id") =!= col("probe_id"))
-        .withColumn("cosine",
-          round(VectorOps.cosine(col("embedding"), col("probe_emb")), 4))
-        .withColumn("rk", row_number().over(byProbe))
-        .where(col("rk") <= 10)
-        .select("probe_id", "vec_id")
-      truth.join(approx.select("probe_id", "vec_id"),
-          Seq("probe_id", "vec_id"), "left_semi")
-        .groupBy("probe_id").agg(count(lit(1)).as("n_common"))
-        .crossJoin(broadcast(stTotal))
-        .select(col("probe_id"),
-          lit(nlistFinal == 64).as("ladder_ok"),
-          lit(nlistFinal > 48).as("crossed_ok"),
-          (col("n") === total).as("complete"),
-          (col("n_common") >= 8).as("recall_ok"))
-        .orderBy("probe_id")
-    }),
-
-    // -- [NS] RIGHT-TO-ERASURE AGAINST THE LIVE INGEST STREAM: a direct
-    // deleteFromIvfStore racing a running streamIngestIvf would collide
-    // with the stream's own maintenance triggers on the swap sentinel
-    // (whichever loses throws — stream death by compliance request). The
-    // coordination hook removes the race: enqueueIvfErasure publishes the
-    // request as a queue file, and the stream DRAINS the queue in its
-    // between-batch slot — the only window where it is provably the
-    // single writer. Here the request is enqueued BEFORE the stream
-    // starts (deterministic drain: applied right after batch 0 lands the
-    // victims, while batch 1 is still unprocessed — mid-stream by
-    // construction). Declared: the queue drained (drained_ok), victims
-    // gone + every survivor present across BOTH batches (complete — the
-    // stream kept running after the erasure), and the erased store
-    // serves ≥8/10 recall vs float truth over corpus-minus-victims. --
-    "q_stream_ivf_erase" -> ((s, d) => {
-      val in = embSlices(s, d)
-      val work = java.nio.file.Files.createTempDirectory("graft_streamerase")
-      deleteRecursivelyOnExit(work)
-      val w = work.toFile.getAbsolutePath
-      val corpus = s.read.parquet(in)
-      val total = corpus.count()
-      // victims live in batch 0 (slices 0-1 = the low id half), so the
-      // drain after batch 0 has real rows to erase while batch 1 is
-      // still in flight
-      val victims = Seq(10L, 20L)
-      val vLits = victims.map(java.lang.Long.valueOf)
-      Similarity.enqueueIvfErasure(s, w, victims)
-      val streamed = Similarity.streamIngestIvf(s, in, w, nlist = 16)
-      val pendDir = java.nio.file.Paths.get(w, ".pending_erasures")
-      val drainedOk = !java.nio.file.Files.exists(pendDir) || {
-        val st = java.nio.file.Files.list(pendDir)
-        try st.filter(p => p.getFileName.toString.endsWith(".req")).count() == 0L
-        finally st.close()
-      }
-      val nlist = Similarity.loadIvfIndex(s, s"$w/ivf_index").length
-      val probes = corpus.where(col("vec_id").isin(0L, 1L))
-      val approx = Similarity.ivfProbeSetTopKStored(
-        streamed, s"$w/ivf_index", probes, k = 10,
-        nprobe = math.max(8, nlist / 2))
-      val p = probes.select(col("vec_id").as("probe_id"),
-        col("embedding").as("probe_emb"))
-      val byProbe = Window.partitionBy(col("probe_id"))
-        .orderBy(col("cosine").desc, col("vec_id"))
-      val truth = corpus.where(!col("vec_id").isin(vLits: _*))
-        .crossJoin(broadcast(p))
-        .where(col("vec_id") =!= col("probe_id"))
-        .withColumn("cosine",
-          round(VectorOps.cosine(col("embedding"), col("probe_emb")), 4))
-        .withColumn("rk", row_number().over(byProbe))
-        .where(col("rk") <= 10)
-        .select("probe_id", "vec_id")
-      val completeness = streamed.agg(
-        count(lit(1)).as("n"),
-        count(when(col("vec_id").isin(vLits: _*), 1)).as("n_victims"))
-        .select((col("n") === total - victims.length &&
-          col("n_victims") === 0L).as("complete"))
-      truth.join(approx.select("probe_id", "vec_id"),
-          Seq("probe_id", "vec_id"), "left_semi")
-        .groupBy("probe_id").agg(count(lit(1)).as("n_common"))
-        .crossJoin(broadcast(completeness))
-        .select(col("probe_id"),
-          lit(drainedOk).as("drained_ok"),
-          col("complete"),
-          (col("n_common") >= 8).as("recall_ok"))
-        .orderBy("probe_id")
-    }),
-
-    // -- [NS] RIGHT-TO-ERASURE from the stored ANN index: delete a set of
-    // vec_ids WITHOUT a rebuild — prune to the files holding victims,
-    // rewrite only those, swap at file granularity, centroids untouched
-    // (the first compliance request a real deployment gets). Declared:
-    // the victims are gone and every other row survives (complete),
-    // files without victims are byte-identical (cold_ok — the
-    // q_partition_overwrite discipline applied to the index), and the
-    // shrunken store still clears the ≥8/10 recall gate vs float brute
-    // force over corpus-minus-victims. --
-    // -- [NS] batch-TTL retention for the STORED ANN index — the last
-    // store family without a retention gate: `batch <= cutoff` cell
-    // partitions drop as PURE METADATA (survivors byte-identical,
-    // asserted; the batch=-1 layout seed never ages); the centroids are a
-    // quantizer, valid over any subset, so the post-retention
-    // exhaustive-nprobe probe must EQUAL brute force over the retained
-    // corpus — an exact gate, not a recall bound. --
-    "q_sim_ivf_retention" -> ((s, d) => {
-      val in = embSlices(s, d)
-      val work = java.nio.file.Files.createTempDirectory("graft_ivfret")
-      deleteRecursivelyOnExit(work)
-      val w = work.toFile.getAbsolutePath
-      Similarity.streamIngestIvf(s, in, w, nlist = 16)
-      val corpus = s.read.parquet(in)
-      // ingest = 2 micro-batches of 2 slices; batch 0 covers the lower
-      // half of ids (same integer split embSlices wrote)
-      val mx = corpus.agg(max(col("vec_id"))).head().getLong(0) + 1
-      val half = 2L * mx / 4L
-      val before = snapStoreFiles(s"$w/cells")
-      val dropped = Similarity.retainIvfStoreBatches(s, w, cutoff = 0L)
-      val after = snapStoreFiles(s"$w/cells")
-      val droppedOk = dropped == Seq(0L)
-      val coldOk = after.nonEmpty &&
-        after.keySet == before.keySet.filterNot(_.contains("batch=0")) &&
-        after.forall { case (f, sig) => before(f) == sig }
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells").drop("batch")
-      val agedComplete = stored.agg(
-        count(when(col("vec_id") < half, 1)).as("n_aged"),
-        count(lit(1)).as("n"))
-        .crossJoin(broadcast(corpus.where(col("vec_id") >= half)
-          .agg(count(lit(1)).as("n_retained"))))
-        .select((col("n_aged") === 0L && col("n") === col("n_retained"))
-          .as("complete"))
-      val nlist = Similarity.loadIvfIndex(s, s"$w/ivf_index").length
-      val probes = corpus.where(col("vec_id").isin(half, mx - 1))
-      val approx = Similarity.ivfProbeSetTopKStored(
-        stored, s"$w/ivf_index", probes, k = 10, nprobe = nlist)
-      val p = probes.select(col("vec_id").as("probe_id"),
-        col("embedding").as("probe_emb"))
-      val byProbe = Window.partitionBy(col("probe_id"))
-        .orderBy(col("cosine").desc, col("vec_id"))
-      val truth = corpus.where(col("vec_id") >= half)
-        .crossJoin(broadcast(p))
-        .where(col("vec_id") =!= col("probe_id"))
-        .withColumn("cosine",
-          round(VectorOps.cosine(col("embedding"), col("probe_emb")), 4))
-        .withColumn("rk", row_number().over(byProbe))
-        .where(col("rk") <= 10)
-        .select("probe_id", "vec_id")
-      truth.join(approx.select("probe_id", "vec_id"),
-          Seq("probe_id", "vec_id"), "left_semi")
-        .groupBy("probe_id").agg(count(lit(1)).as("n_common"))
-        .crossJoin(broadcast(agedComplete))
-        .select(col("probe_id"),
-          lit(droppedOk).as("dropped_ok"),
-          lit(coldOk).as("cold_ok"),
-          col("complete"),
-          (col("n_common") === 10L).as("equal_ok"))
-        .orderBy("probe_id")
-    }),
-
-    "q_sim_ivf_delete" -> ((s, d) => {
-      val in = embSlices(s, d)
-      val work = java.nio.file.Files.createTempDirectory("graft_ivfdel")
-      deleteRecursivelyOnExit(work)
-      val w = work.toFile.getAbsolutePath
-      Similarity.streamIngestIvf(s, in, w, nlist = 16)
-      val corpus = s.read.parquet(in)
-      // victims: the 3 highest ids — they live in the LAST ingest batch,
-      // so earlier batches' files must survive byte-identical
-      val victims = corpus.orderBy(col("vec_id").desc).limit(3)
-        .select("vec_id").as[Long](org.apache.spark.sql.Encoders.scalaLong)
-        .collect().toSeq.sorted
-      def files(): Map[String, (Long, String)] = {
-        val out = scala.collection.mutable.Map.empty[String, (Long, String)]
-        val root = java.nio.file.Paths.get(s"$w/cells")
-        val it = java.nio.file.Files.walk(root).iterator()
-        while (it.hasNext) {
-          val p = it.next()
-          val n = p.getFileName.toString
-          if (java.nio.file.Files.isRegularFile(p) &&
-              !n.startsWith("_") && !n.startsWith(".")) {
-            val b = java.nio.file.Files.readAllBytes(p)
-            val sha = java.security.MessageDigest.getInstance("SHA-256")
-              .digest(b).map("%02x".format(_)).mkString
-            out(root.relativize(p).toString) = (b.length.toLong, sha)
-          }
-        }
-        out.toMap
-      }
-      val before = files()
-      val nDeleted = Similarity.deleteFromIvfStore(s, w, victims)
-      val after = files()
-      val survivors = before.keySet intersect after.keySet
-      val coldOk = survivors.nonEmpty &&
-        survivors.forall(f => after(f) == before(f))
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells").drop("batch")
-      val vLits = victims.map(java.lang.Long.valueOf)
-      val nlist = Similarity.loadIvfIndex(s, s"$w/ivf_index").length
-      val probes = corpus.where(col("vec_id").isin(0L, 1L))
-      val approx = Similarity.ivfProbeSetTopKStored(
-        stored, s"$w/ivf_index", probes, k = 10, nprobe = math.max(8, nlist / 2))
-      val p = probes.select(col("vec_id").as("probe_id"),
-        col("embedding").as("probe_emb"))
-      val byProbe = Window.partitionBy(col("probe_id"))
-        .orderBy(col("cosine").desc, col("vec_id"))
-      val truth = corpus.where(!col("vec_id").isin(vLits: _*))
-        .crossJoin(broadcast(p))
-        .where(col("vec_id") =!= col("probe_id"))
-        .withColumn("cosine",
-          round(VectorOps.cosine(col("embedding"), col("probe_emb")), 4))
-        .withColumn("rk", row_number().over(byProbe))
-        .where(col("rk") <= 10)
-        .select("probe_id", "vec_id")
-      val completeness = stored.agg(
-        count(lit(1)).as("n"),
-        count(when(col("vec_id").isin(vLits: _*), 1)).as("n_victims"))
-        .crossJoin(broadcast(corpus.agg(count(lit(1)).as("n_corpus"))))
-        .select((col("n") === col("n_corpus") - nDeleted &&
-          col("n_victims") === 0L).as("complete"))
-      truth.join(approx.select("probe_id", "vec_id"),
-          Seq("probe_id", "vec_id"), "left_semi")
-        .groupBy("probe_id").agg(count(lit(1)).as("n_common"))
-        .crossJoin(broadcast(completeness))
-        .select(col("probe_id"),
-          lit(nDeleted == 3L).as("deleted_ok"),
-          lit(coldOk).as("cold_ok"),
-          col("complete"),
-          (col("n_common") >= 8).as("recall_ok"))
-        .orderBy("probe_id")
-    }),
-
-    // -- [NS] BULK right-to-erasure from the stored ANN index: a
-    // seventh of the corpus arrives as a victim TABLE (the compliance-
-    // batch shape) and applies through the broadcast semi/anti erasure
-    // core — constant-size plan, no driver-built literal list (the
-    // Seq[Long] form stops scaling around 10⁴ ids; EraseProbe's bulk
-    // leg measures the divergence). Served at the exhaustive corner
-    // (nprobe = nlist) the gate is EXACT: the post-delete stored probe
-    // set-equals brute force over corpus-minus-victims, and the store
-    // prices complete (survivor count right, zero victims left). --
-    "q_sim_ivf_bulk_delete" -> ((s, d) => {
-      val work = java.nio.file.Files.createTempDirectory("graft_ivfbulk")
-      deleteRecursivelyOnExit(work)
-      val w = work.toFile.getAbsolutePath
-      val emb = embeddings(s, d)
-      Similarity.saveIvfIndex(emb, s"$w/ivf_index", nlist = 16)
-      Similarity.seedIvfStore(emb, w)
-      val victims = emb.where(col("vec_id") % 7 === 3L).select("vec_id")
-      val expected = victims.count()
-      val nDeleted = Similarity.deleteFromIvfStore(s, w, victims)
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells").drop("batch")
-      val completeness = stored
-        .agg(count(lit(1)).as("n"),
-          count(when(col("vec_id") % 7 === 3L, 1)).as("n_victims"))
-        .crossJoin(broadcast(emb.agg(count(lit(1)).as("n_corpus"))))
-        .select((col("n") === col("n_corpus") - nDeleted &&
-          col("n_victims") === 0L).as("complete"))
-      val probes = emb.where(col("vec_id").isin(0L, 1L))
-      val approx = Similarity.ivfProbeSetTopKStored(
-        stored, s"$w/ivf_index", probes, k = 10, nprobe = 16)
-      val p = probes.select(col("vec_id").as("probe_id"),
-        col("embedding").as("probe_emb"))
-      val byProbe = Window.partitionBy(col("probe_id"))
-        .orderBy(col("cosine").desc, col("vec_id"))
-      val truth = emb.where(col("vec_id") % 7 =!= 3L)
-        .crossJoin(broadcast(p))
-        .where(col("vec_id") =!= col("probe_id"))
-        .withColumn("cosine",
-          round(VectorOps.cosine(col("embedding"), col("probe_emb")), 4))
-        .withColumn("rk", row_number().over(byProbe))
-        .where(col("rk") <= 10)
-        .select("probe_id", "vec_id")
-      truth.join(approx.select("probe_id", "vec_id"),
-          Seq("probe_id", "vec_id"), "left_semi")
-        .groupBy("probe_id").agg(count(lit(1)).as("n_common"))
-        .crossJoin(broadcast(completeness))
-        .select(col("probe_id"),
-          lit(nDeleted == expected).as("deleted_ok"),
-          col("complete"),
-          (col("n_common") === 10).as("equal_ok"))
-        .orderBy("probe_id")
-    }),
-
-    // -- [NS] RIGHT-TO-ERASURE on the PRODUCTION (PQ coded) layout — the
-    // q_sim_ivf_delete discipline on the codes-only store: victims drop
-    // by vec_id with the PAYLOAD PASSING THROUGH (no re-encode, no
-    // re-train — a delete that touched codes would silently degrade every
-    // survivor). Declared: victims gone + store complete (complete),
-    // files without victims byte-identical (cold_ok), every survivor's
-    // PQ codes byte-equal through the rewrite (codes_ok), BOTH quantizer
-    // artifacts untouched (index_ok — coarse centroids and codebooks are
-    // trained state, erasure must not move them), and the shrunken coded
-    // store still clears ≥8/10 ADC+rerank recall vs float brute force
-    // over corpus-minus-victims. --
-    "q_sim_ivfpq_delete" -> ((s, d) => {
-      val in = embSlices(s, d)
-      val work = java.nio.file.Files.createTempDirectory("graft_ivfpqdel")
-      deleteRecursivelyOnExit(work)
-      val w = work.toFile.getAbsolutePath
-      Similarity.streamIngestIvfPq(s, in, w, nlist = 8, m = 8, codebookK = 32)
-      val corpus = s.read.parquet(in)
-      val victims = corpus.orderBy(col("vec_id").desc).limit(3)
-        .select("vec_id").as[Long](org.apache.spark.sql.Encoders.scalaLong)
-        .collect().toSeq.sorted
-      val vLits = victims.map(java.lang.Long.valueOf)
-      def sha(dir: String): Map[String, String] = {
-        val out = scala.collection.mutable.Map.empty[String, String]
-        val root = java.nio.file.Paths.get(dir)
-        val it = java.nio.file.Files.walk(root).iterator()
-        while (it.hasNext) {
-          val p = it.next()
-          val n = p.getFileName.toString
-          if (java.nio.file.Files.isRegularFile(p) &&
-              !n.startsWith("_") && !n.startsWith("."))
-            out(root.relativize(p).toString) =
-              java.security.MessageDigest.getInstance("SHA-256")
-                .digest(java.nio.file.Files.readAllBytes(p))
-                .map("%02x".format(_)).mkString
-        }
-        out.toMap
-      }
-      val cellsBefore = sha(s"$w/cells")
-      val idxBefore = (sha(s"$w/ivf_index"), sha(s"$w/pq_index"))
-      // survivor codes snapshot — DISTRIBUTED (persisted before the swap
-      // rewrites the files under the reader), compared by join, never
-      // collected
-      val codesBefore = graft.operators.Dedup.readStore(s, s"$w/cells")
-        .select(col("vec_id"), col("pqcode").as("pq_before")).persist()
-      codesBefore.count()
-      val nDeleted = Similarity.deleteFromIvfStore(s, w, victims)
-      val cellsAfter = sha(s"$w/cells")
-      val survivors = cellsBefore.keySet intersect cellsAfter.keySet
-      val coldOk = survivors.nonEmpty &&
-        survivors.forall(f => cellsAfter(f) == cellsBefore(f))
-      val indexOk = (sha(s"$w/ivf_index"), sha(s"$w/pq_index")) == idxBefore
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells")
-      val codesOk = stored
-        .join(codesBefore, Seq("vec_id"))
-        .agg(count(lit(1)).as("n_joined"),
-          count(when(col("pqcode") === col("pq_before"), 1)).as("n_equal"))
-        .crossJoin(broadcast(corpus.agg(count(lit(1)).as("n_corpus"))))
-        .select((col("n_joined") === col("n_corpus") - nDeleted &&
-          col("n_equal") === col("n_joined")).as("codes_ok"),
-          (col("n_joined") === col("n_corpus") - nDeleted).as("complete"))
-      val emb = embeddings(s, d)
-      val survivorsEmb = emb.where(!col("vec_id").isin(vLits: _*))
-      val probes = emb.where(col("vec_id").isin(0L, 1L))
-      // exhaustive coarse pass (nprobe = nlist): the declared subject is
-      // the ERASURE, so the recall gate isolates ADC+rerank error alone
-      val nlist = Similarity.loadIvfIndex(s, s"$w/ivf_index").length
-      val approx = Similarity.ivfPqProbeSetTopKStored(s, w, probes,
-        rerankWith = survivorsEmb, k = 10, nprobe = nlist, rerank = 20)
-      val p = probes.select(col("vec_id").as("probe_id"),
-        col("embedding").as("probe_emb"))
-      val byProbe = Window.partitionBy(col("probe_id"))
-        .orderBy(col("cosine").desc, col("vec_id"))
-      val truth = survivorsEmb.crossJoin(broadcast(p))
-        .where(col("vec_id") =!= col("probe_id"))
-        .withColumn("cosine",
-          round(VectorOps.cosine(col("embedding"), col("probe_emb")), 4))
-        .withColumn("rk", row_number().over(byProbe))
-        .where(col("rk") <= 10)
-        .select("probe_id", "vec_id")
-      // codesBefore stays persisted (MEMORY_AND_DISK, KB-scale): the
-      // returned frame references it, and an unpersist-then-recompute
-      // would re-read file paths the swap already retired
-      truth.join(approx.select("probe_id", "vec_id"),
-          Seq("probe_id", "vec_id"), "left_semi")
-        .groupBy("probe_id").agg(count(lit(1)).as("n_common"))
-        .crossJoin(broadcast(codesOk))
-        .select(col("probe_id"),
-          lit(nDeleted == 3L).as("deleted_ok"),
-          lit(coldOk).as("cold_ok"),
-          lit(indexOk).as("index_ok"),
-          col("codes_ok"), col("complete"),
-          (col("n_common") >= 8).as("recall_ok"))
-        .orderBy("probe_id")
-    }),
-
-    // -- [NS] AGED IVF-PQ lifecycle end to end — the coded-store analogue
-    // of q_sim_ivf_batch_stored's aged-layout discipline: streamed
-    // codes-only ingest whose coarse quantizer GROWS in-stream (the
-    // shared requantize relabels cells without touching a code), then
-    // COMPACTION collapses the batch partitions into one cell-clustered
-    // partition (row-group pruning for the cell-IN probe), then the
-    // BATCH probe serves N probes in one pruned pass with ADC + exact
-    // re-rank. Declared: nlist grew past its bootstrap, the compacted
-    // store is complete in ONE batch partition, and every probe clears
-    // the ≥8/10 recall gate vs float brute force. --
-    "q_sim_ivfpq_aged" -> ((s, d) => {
-      val in = embSlices(s, d)
-      val work = java.nio.file.Files.createTempDirectory("graft_ivfpqaged")
-      deleteRecursivelyOnExit(work)
-      val w = work.toFile.getAbsolutePath
-      Similarity.streamIngestIvfPq(s, in, w, nlist = 8, m = 8, codebookK = 32,
-        targetCellRows = 16, growFactor = 4)
-      Similarity.compactIvfStore(s, w, upTo = 10L)
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells")
-      val nlistAfter = Similarity.loadIvfIndex(s, s"$w/ivf_index").length
-      val emb = embeddings(s, d)
-      val probes = emb.where(col("vec_id").isin(0L, 1L, 2L, 3L))
-      // the requantized single-probe twin's measured policy: at grown
-      // nlist the per-cell candidate count shrinks, so both knobs widen
-      // (3/4-of-nlist probes + rerank 20) to absorb the stacked cell +
-      // ADC approximations
-      val approx = Similarity.ivfPqProbeSetTopKStored(s, w, probes,
-        rerankWith = emb, k = 10,
-        nprobe = math.max(8, nlistAfter * 3 / 4), rerank = 20)
-      // aged-layout invariants folded into the frame: complete store,
-      // ONE surviving batch partition
-      val agedDf = stored.agg(count(lit(1)).as("n_stored"),
-          countDistinct(col("batch")).as("n_parts"))
-        .crossJoin(emb.agg(count(lit(1)).as("n_src")))
-        .select((col("n_stored") === col("n_src") &&
-          col("n_parts") === 1).as("aged_ok"))
-      val p = probes.select(col("vec_id").as("probe_id"),
-        col("embedding").as("probe_emb"))
-      val byProbe = Window.partitionBy(col("probe_id"))
-        .orderBy(col("cosine").desc, col("vec_id"))
-      val truth = emb.crossJoin(broadcast(p))
-        .where(col("vec_id") =!= col("probe_id"))
-        .withColumn("cosine",
-          round(VectorOps.cosine(col("embedding"), col("probe_emb")), 4))
-        .withColumn("rk", row_number().over(byProbe))
-        .where(col("rk") <= 10)
-        .select("probe_id", "vec_id")
-      truth.join(approx.select("probe_id", "vec_id"),
-          Seq("probe_id", "vec_id"), "left_semi")
-        .groupBy("probe_id").agg(count(lit(1)).as("n_common"))
-        .crossJoin(agedDf)
-        .select(col("probe_id"),
-          lit(nlistAfter > 8).as("nlist_grew"), col("aged_ok"),
-          (col("n_common") >= 8).as("recall_ok"))
-        .orderBy("probe_id")
-    }),
-
-    "q_sim_ivf_recall" -> ((s, d) => {
-      val bf  = Similarity.bruteForceTopK(embeddings(s, d), probeId = 0L, k = 10).select("vec_id")
-      val ivf = Similarity.ivfTopK(embeddings(s, d), probeId = 0L, k = 10).select("vec_id")
-      bf.join(ivf, Seq("vec_id"), "left_semi")
-        .agg(count(lit(1)).as("n_common"))
-        .select(lit(10).as("k"), (col("n_common") >= 8).as("recall_ok"))
-    }),
-
-    // int8 scalar quantization (Similarity.quantize, the 4× storage/scan
-    // compression tier): top-k over the quantized vectors vs the exact
-    // float top-k, recall-gated on the same contract as IVF. Rounding to
-    // 127 levels perturbs cosines by ~1e-3 on this data, so the exact
-    // top-10 survives — empirically verified, gated at ≥ 8/10.
-    "q_sim_quantized" -> ((s, d) => {
-      val bf = Similarity.bruteForceTopK(embeddings(s, d), probeId = 0L, k = 10).select("vec_id")
-      val qz = Similarity.quantizedTopK(embeddings(s, d), probeId = 0L, k = 10).select("vec_id")
-      bf.join(qz, Seq("vec_id"), "left_semi")
-        .agg(count(lit(1)).as("n_common"))
-        .select(lit(10).as("k"), (col("n_common") >= 8).as("recall_ok"))
-    }),
-
-    // Product quantization (Similarity.pqTopK): the 32× compression tier —
-    // vectors become m=8 codes into 32-entry per-subspace codebooks, and a
-    // probe scores rows by summing 8 LUT entries (ADC) instead of a 64-term
-    // dot product. Recall-gated against the float brute-force truth on the
-    // same ≥ 8/10 contract as the IVF and int8 tiers.
-    "q_sim_pq" -> ((s, d) => {
-      val bf = Similarity.bruteForceTopK(embeddings(s, d), probeId = 0L, k = 10).select("vec_id")
-      val pq = Similarity.pqTopK(embeddings(s, d), probeId = 0L, kTop = 10).select("vec_id")
-      bf.join(pq, Seq("vec_id"), "left_semi")
-        .agg(count(lit(1)).as("n_common"))
-        .select(lit(10).as("k"), (col("n_common") >= 8).as("recall_ok"))
-    }),
-
-    // -- [NS] PERSISTED IVF index: the centroid matrix is written to
-    // parquet ONCE per (JVM, sf) and every probe LOADS the artifact — no
-    // re-sample, no re-train (SimilaritySpec proves the k-means count stays
-    // flat across an index-cache clear). A production IVF index is durable
-    // state that outlives the driver; this is the load-probe path. nprobe=8
-    // recovers the exact top-10 here, so the declared rows share
-    // q_sim_ivf's brute-force twin. --
-    "q_sim_ivf_persisted" -> ((s, d) => {
-      val idx = scratchDirs.getOrElseUpdate(s"ivfindex:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_ivfindex")
-        deleteRecursivelyOnExit(tmp)
-        val p = tmp.toFile.getAbsolutePath + "/ivf"
-        Similarity.saveIvfIndex(embeddings(s, d), p)
-        p
-      })
-      Similarity.ivfTopKPersisted(embeddings(s, d), idx, probeId = 0L, k = 10, nprobe = 8)
-    }),
-
-    // -- [NS] persisted PQ codebooks, same durability contract: load the
-    // (subspace, code, centroid) artifact and ADC-probe with it; recall
-    // gated vs the float brute-force truth like every compressed tier. --
-    "q_sim_pq_persisted" -> ((s, d) => {
-      val idx = scratchDirs.getOrElseUpdate(s"pqindex:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_pqindex")
-        deleteRecursivelyOnExit(tmp)
-        val p = tmp.toFile.getAbsolutePath + "/pq"
-        Similarity.savePqIndex(embeddings(s, d), p)
-        p
-      })
-      val bf = Similarity.bruteForceTopK(embeddings(s, d), probeId = 0L, k = 10).select("vec_id")
-      val pq = Similarity.pqTopKPersisted(embeddings(s, d), idx, probeId = 0L, kTop = 10).select("vec_id")
-      bf.join(pq, Seq("vec_id"), "left_semi")
-        .agg(count(lit(1)).as("n_common"))
-        .select(lit(10).as("k"), (col("n_common") >= 8).as("recall_ok"))
-    }),
-
-    // -- [NS] batch-probe SRP/Hamming: N probes, one signature pass (8-byte
-    // coarse ops vs broadcast probes), per-probe WindowGroupLimit
-    // shortlist, exact re-rank; per-probe recall gated vs the exact
-    // probe-set top-k --
-    "q_sim_hamming_batch" -> ((s, d) => {
-      val emb = embeddings(s, d)
-      val probes = emb.where(col("vec_id").isin(0L, 1L, 2L, 3L))
-      val wC = Window.partitionBy(col("probe_id"))
-        .orderBy(col("cosine").desc, col("vec_id"))
-      val exact = emb.crossJoin(broadcast(probes.select(
-          col("vec_id").as("probe_id"), col("embedding").as("probe_emb"))))
-        .where(col("vec_id") =!= col("probe_id"))
-        .withColumn("cosine",
-          round(graft.functions.VectorOps.cosine(col("embedding"), col("probe_emb")), 4))
-        .withColumn("rk", row_number().over(wC)).where(col("rk") <= 10)
-        .select(col("probe_id"), col("vec_id"))
-      val hm = Similarity.hammingProbeSetTopK(emb, probes, k = 10, shortlist = 200)
-        .select(col("probe_id"), col("vec_id"), lit(1).as("hit"))
-      exact.join(hm, Seq("probe_id", "vec_id"), "left")
-        .groupBy(col("probe_id"))
-        .agg(sum(coalesce(col("hit"), lit(0))).as("n_common"))
-        .select(col("probe_id"), lit(10).as("k"), (col("n_common") >= 8).as("recall_ok"))
-        .orderBy("probe_id")
-    }),
-
-    // -- [NS] SRP/Hamming ANN: 64-bit sign-projection signatures, Hamming
-    // shortlist (8-byte scan, TakeOrderedAndProject, no index build), exact
-    // re-rank — recall-gated against the brute-force truth like the other
-    // approximate tiers --
-    "q_sim_hamming" -> ((s, d) => {
-      val bf = Similarity.bruteForceTopK(embeddings(s, d), probeId = 0L, k = 10).select("vec_id")
-      val hm = Similarity.hammingTopK(embeddings(s, d), probeId = 0L, k = 10).select("vec_id")
-      bf.join(hm, Seq("vec_id"), "left_semi")
-        .agg(count(lit(1)).as("n_common"))
-        .select(lit(10).as("k"), (col("n_common") >= 8).as("recall_ok"))
-    }),
-
-    // IVF over QUANTIZED vectors — the two scale levers chained: cell
-    // pruning skips nprobe/nlist of the corpus AND the scanned column is
-    // int8 (4× less IO). Centroids build on the quantized vectors too, so
-    // the whole index path never touches float32. Recall-gated against the
-    // float brute-force truth like the other approximate tiers.
-    "q_sim_ivf_quantized" -> ((s, d) => {
-      val bf = Similarity.bruteForceTopK(embeddings(s, d), probeId = 0L, k = 10).select("vec_id")
-      val qemb = Similarity.quantize(embeddings(s, d))
-        .select(col("vec_id"), col("qvec").cast("array<float>").as("embedding"))
-      val ivfq = Similarity.ivfTopK(qemb, probeId = 0L, k = 10, nprobe = 8).select("vec_id")
-      bf.join(ivfq, Seq("vec_id"), "left_semi")
-        .agg(count(lit(1)).as("n_common"))
-        .select(lit(10).as("k"), (col("n_common") >= 8).as("recall_ok"))
-    }),
-
-    // MinHash-LSH recall against hash-free ground truth: exact-Jaccard pairs
-    // (inverted shingle index) vs the banded-LSH candidate set. Both counts
-    // are DuckDB-expressible (planted near-dups in this corpus sit at
-    // jaccard ≥ 0.9 where banded recall is ~1-2e-4 per pair), so this gates
-    // the whole fuzzy-dedup path on a real oracle.
-    "q_dedup_recall" -> ((s, d) => {
-      val art = Some(dedupArtifacts(s, d))
-      val truth = Dedup.exactJaccardPairs(documents(s, d), n = 3, minJaccard = 0.7,
-          art = art)
-        .select("doc_a", "doc_b")
-      val cands = Dedup.minhashCandidates(documents(s, d), minEstJaccard = 0.4,
-          art = art)
-        .select(col("doc_a"), col("doc_b"), lit(1).as("hit"))
-      truth.join(cands, Seq("doc_a", "doc_b"), "left")
-        .agg(count(lit(1)).as("n_true"),
-          sum(coalesce(col("hit"), lit(0))).as("n_recalled"))
-    }),
-
-    "q_text_stats" -> ((s, d) =>
-      documents(s, d)
-        .groupBy(col("lang"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum(TF.tokenCount(col("text")).cast("long")).as("n_tokens"),
-          round(sum(col("n_chars")).cast("double") / count(lit(1)), 4).as("avg_chars"))
-        .orderBy("lang")),
-
-    "q_text_lang" -> ((s, d) =>
-      documents(s, d)
-        .groupBy(TF.langId(col("text")).as("predicted_lang"))
-        .agg(count(lit(1)).as("n")).orderBy("predicted_lang")),
-
-    // -- [NS] per-document top-3 TF-IDF terms: term-keyed co-located join of
-    // (doc,term) counts with document frequencies, per-doc window top-k --
-    "q_tfidf_topterms" -> ((s, d) =>
-      graft.operators.Corpus.tfidfTopTerms(documents(s, d), k = 3)),
-
-    // -- [NS] BM25 retrieval: top-20 documents for a 3-term query mixing a
-    // rare term (high idf) with two common ones — the classic search-
-    // ranking operator over the corpus; scoring discipline documented on
-    // Corpus.bm25TopK (ln rounded at 6 dp, per-term decimal fixing, final
-    // 4 dp) so the oracle reproduces it bit-for-bit --
-    "q_bm25_search" -> ((s, d) =>
-      graft.operators.Corpus.bm25TopK(documents(s, d),
-        Seq("dup", "merge", "scan"), k = 20)),
-
-    // -- [NS] HYBRID RETRIEVAL — the standard production composition of
-    // the two retrieval legs this engine already serves: reciprocal-rank
-    // fusion (RRF, k=60) of the BM25 lexical top-20 and the STORED ANN
-    // top-20 (served through the persisted IVF index at exhaustive
-    // nprobe, where the stored probe provably equals brute force — which
-    // is what makes the fusion exactly value-oracle-able). Both legs
-    // rank deterministically (score desc, id), the fused score is two
-    // IEEE divisions and one addition in a fixed order rounded to 6 dp,
-    // ties pinned by doc_id. --
-    "q_hybrid_search" -> ((s, d) => {
-      val byLex = Window.orderBy(col("bm25").desc, col("doc_id"))
-      val lex = graft.operators.Corpus.bm25TopK(documents(s, d),
-          Seq("dup", "merge", "scan"), k = 20)
-        .select(col("doc_id"), row_number().over(byLex).as("r_lex"))
-      val work = java.nio.file.Files.createTempDirectory("graft_hybrid")
-      deleteRecursivelyOnExit(work)
-      val w = work.toFile.getAbsolutePath
-      val emb = embeddings(s, d)
-      Similarity.saveIvfIndex(emb, s"$w/ivf_index", nlist = 16)
-      Similarity.seedIvfStore(emb, w)
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells").drop("batch")
-      val byVec = Window.orderBy(col("cosine").desc, col("vec_id"))
-      val vec = Similarity.ivfProbeSetTopKStored(
-          stored, s"$w/ivf_index", emb.where(col("vec_id") === 0L),
-          k = 20, nprobe = 16)
-        .select(col("vec_id").as("doc_id"), row_number().over(byVec).as("r_vec"))
-      lex.join(vec, Seq("doc_id"), "full_outer")
-        .select(col("doc_id"),
-          round(
-            coalesce(lit(1.0) / (lit(60) + col("r_lex")), lit(0.0)) +
-              coalesce(lit(1.0) / (lit(60) + col("r_vec")), lit(0.0)), 6)
-            .as("rrf"))
-        .orderBy(col("rrf").desc, col("doc_id"))
-        .limit(20)
-    }),
-
-    // -- [NS] PRODUCTION-SHAPE hybrid retrieval: the BATCH probe-set form
-    // (two hybrid queries served together — the vector legs ride ONE
-    // probe-set serve, the way a real query frontier batches), with the
-    // vector leg PRUNED (nprobe = 4 of 16 — the serve shape that scales;
-    // q_hybrid_search's exhaustive corner exists to be value-oracled, not
-    // deployed). Pruning moves the quality question to FUSION level, so
-    // that is where the gate sits: per query, the pruned-leg RRF fused
-    // top-10 must overlap the exhaustive-leg fusion's top-10 in ≥ 8
-    // items — a recall invariant on the RESULT a user sees, not on the
-    // leg (leg recall over-constrains: fusion damps single-leg misses
-    // that lexical agreement covers). --
-    "q_hybrid_search_pruned" -> ((s, d) => {
-      val docs = documents(s, d)
-      val work = java.nio.file.Files.createTempDirectory("graft_hybridp")
-      deleteRecursivelyOnExit(work)
-      val w = work.toFile.getAbsolutePath
-      val emb = embeddings(s, d)
-      Similarity.saveIvfIndex(emb, s"$w/ivf_index", nlist = 16)
-      Similarity.seedIvfStore(emb, w)
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells").drop("batch")
-      // query batch: (query_id = probe vec_id, its own term set)
-      val queries = Seq(0L -> Seq("dup", "merge", "scan"),
-        1L -> Seq("join", "window", "stream"))
-      val byLex = Window.partitionBy(col("query_id"))
-        .orderBy(col("bm25").desc, col("doc_id"))
-      val lex = queries.map { case (qid, terms) =>
-        graft.operators.Corpus.bm25TopK(docs, terms, k = 20)
-          .withColumn("query_id", lit(qid))
-      }.reduce(_ unionByName _)
-        .withColumn("r_lex", row_number().over(byLex))
-        .select(col("query_id"), col("doc_id"), col("r_lex"))
-        .persist() // shared by both fusions (pruned + exhaustive truth)
-      val probes = emb.where(col("vec_id").isin(queries.map(_._1): _*))
-      val byVec = Window.partitionBy(col("probe_id"))
-        .orderBy(col("cosine").desc, col("vec_id"))
-      def vecLeg(np: Int): DataFrame =
-        Similarity.ivfProbeSetTopKStored(stored, s"$w/ivf_index", probes,
-            k = 20, nprobe = np)
-          .withColumn("r_vec", row_number().over(byVec))
-          .select(col("probe_id").as("query_id"), col("vec_id").as("doc_id"),
-            col("r_vec"))
-      val byFused = Window.partitionBy(col("query_id"))
-        .orderBy(col("rrf").desc, col("doc_id"))
-      def fuse(vec: DataFrame): DataFrame =
-        lex.join(vec, Seq("query_id", "doc_id"), "full_outer")
-          .select(col("query_id"), col("doc_id"),
-            (coalesce(lit(1.0) / (lit(60) + col("r_lex")), lit(0.0)) +
-              coalesce(lit(1.0) / (lit(60) + col("r_vec")), lit(0.0))).as("rrf"))
-          .withColumn("rk", row_number().over(byFused))
-          .where(col("rk") <= 10)
-          .select("query_id", "doc_id")
-      val pruned = fuse(vecLeg(4)).persist()
-      val exhaustive = fuse(vecLeg(16))
-      val out = exhaustive.join(pruned, Seq("query_id", "doc_id"), "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("n_common"))
-        .select(col("query_id"), (col("n_common") >= 8).as("overlap_ok"))
-        .orderBy("query_id")
-      out
-    }),
-
-    // -- [NS] WEIGHTED hybrid fusion (the α-blend production frontends
-    // expose next to RRF): each leg's top-20 scores min-max NORMALIZED
-    // within the leg (BM25 and cosine live on incomparable scales — raw
-    // addition lets the wider scale swallow the other), then fused as
-    // 0.6·lex + 0.4·vec, absent-leg scores contributing 0. Served at the
-    // exhaustive corner (nprobe = nlist) where the stored vector leg
-    // provably equals brute force — which is what makes the whole fused
-    // ranking exactly value-oracle-able; the pruned production shape is
-    // gated by q_hybrid_search_pruned. --
-    "q_hybrid_search_weighted" -> ((s, d) => {
-      val lex = graft.operators.Corpus.bm25TopK(documents(s, d),
-        Seq("dup", "merge", "scan"), k = 20)
-      val lexN = lex.crossJoin(broadcast(
-          lex.agg(min(col("bm25")).as("lo"), max(col("bm25")).as("hi"))))
-        .select(col("doc_id"),
-          when(col("hi") > col("lo"),
-            (col("bm25") - col("lo")) / (col("hi") - col("lo")))
-            .otherwise(lit(1.0)).as("n_lex"))
-      val work = java.nio.file.Files.createTempDirectory("graft_hybridw")
-      deleteRecursivelyOnExit(work)
-      val w = work.toFile.getAbsolutePath
-      val emb = embeddings(s, d)
-      Similarity.saveIvfIndex(emb, s"$w/ivf_index", nlist = 16)
-      Similarity.seedIvfStore(emb, w)
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells").drop("batch")
-      val vec = Similarity.ivfProbeSetTopKStored(
-          stored, s"$w/ivf_index", emb.where(col("vec_id") === 0L),
-          k = 20, nprobe = 16)
-        .select(col("vec_id").as("doc_id"), col("cosine"))
-      val vecN = vec.crossJoin(broadcast(
-          vec.agg(min(col("cosine")).as("lo"), max(col("cosine")).as("hi"))))
-        .select(col("doc_id"),
-          when(col("hi") > col("lo"),
-            (col("cosine") - col("lo")) / (col("hi") - col("lo")))
-            .otherwise(lit(1.0)).as("n_vec"))
-      lexN.join(vecN, Seq("doc_id"), "full_outer")
-        .select(col("doc_id"),
-          round(lit(0.6) * coalesce(col("n_lex"), lit(0.0)) +
-            lit(0.4) * coalesce(col("n_vec"), lit(0.0)), 6).as("fused"))
-        .orderBy(col("fused").desc, col("doc_id"))
-        .limit(20)
-    }),
-
-    // -- [NS] BM25 served FROM THE STORED INVERTED INDEX — the lexical
-    // analogue of the stored-IVF serve: postings live term-hash-fanned
-    // (tm_mod partitions) with doc length denormalized into the row, so
-    // the serve is ONE partition-pruned postings scan (≤ |terms| of the
-    // nMods dirs listed) plus an O(batches) stats-row sum — the raw
-    // corpus is never touched at query time. The index is the shared
-    // 2-batch INCREMENTAL build, and the scorer replays bm25TopK's
-    // operation order bit-for-bit, so the oracle is the full-scan BM25
-    // SQL itself: stored serve == corpus scan, exactly. --
-    "q_bm25_stored" -> ((s, d) =>
-      graft.operators.TextIndex.bm25TopKStored(s, textIndexRoot(s, d),
-        Seq("dup", "merge", "scan"), k = 20)),
-
-    // -- [NS] RIGHT-TO-ERASURE from the text index: victims' postings go
-    // by file-targeted rewrite (cold files byte-identical), and the
-    // victims' OWN batches' stats rows decrement in place (N/avgdl match
-    // a corpus that never held them; retention still drops each batch's
-    // stats with its postings). Gate = the strongest form this engine
-    // has: the post-delete serve EQUALS the full-scan BM25 over
-    // corpus-minus-victims, value-for-value. --
-    "q_bm25_delete" -> ((s, d) => {
-      val docs0 = documents(s, d)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_bm25del")
-      deleteRecursivelyOnExit(tmp)
-      val idx = tmp.toFile.getAbsolutePath + "/text_index"
-      graft.operators.TextIndex.appendTextIndexBatches(
-        Seq(docs0.where(col("doc_id") < 250L) -> 0L,
-            docs0.where(col("doc_id") >= 250L) -> 1L), idx)
-      val victims = Seq(3L, 7L, 250L, 401L)
-      val before = snapStoreFiles(s"$idx/postings")
-      // file-targeting ground truth: the files that actually hold victim
-      // postings (bounded collect ≤ the store's file count). On this
-      // corpus's ~30-word shared vocabulary a victim doc's terms can hash
-      // into EVERY tm_mod dir — cold-file identity must be asserted
-      // against the true victim placement, not against "some file survived"
-      val victimFiles = s.read.parquet(s"$idx/postings")
-        .where(col("doc_id").isin(victims.map(java.lang.Long.valueOf): _*))
-        .select(input_file_name().as("f")).distinct().collect()
-        .map(r => r.getString(0).split("/").takeRight(3).mkString("/")).toSet
-      val erased = graft.operators.TextIndex.deleteFromTextIndex(s, idx, victims)
-      val after = snapStoreFiles(s"$idx/postings")
-      // every victim-free file must survive the swap byte-identical
-      val expectedSurvivors = before.keySet -- victimFiles
-      val coldOk = expectedSurvivors.subsetOf(after.keySet) &&
-        expectedSurvivors.forall(f => after(f) == before(f))
-      val goneOk = s.read.parquet(s"$idx/postings")
-        .where(col("doc_id").isin(victims.map(java.lang.Long.valueOf): _*))
-        .isEmpty
-      // stats decremented in the victims' own batches: the summed store
-      // stats equal a direct recount over corpus-minus-victims
-      val statsRow = s.read.parquet(s"$idx/stats")
-        .agg(sum(col("n_docs")), sum(col("total_toks"))).head()
-      val wantStats = docs0
-        .where(!col("doc_id").isin(victims.map(java.lang.Long.valueOf): _*))
-        .agg(count(lit(1)),
-          sum(graft.functions.TextFunctions.tokenCount(col("text")).cast("long")))
-        .head()
-      val statsOk = statsRow.getLong(0) == wantStats.getLong(0) &&
-        statsRow.getLong(1) == wantStats.getLong(1)
-      require(erased == victims.length && coldOk && goneOk && statsOk,
-        s"q_bm25_delete: erased=$erased coldOk=$coldOk goneOk=$goneOk statsOk=$statsOk")
-      graft.operators.TextIndex.bm25TopKStored(s, idx,
-        Seq("dup", "merge", "scan"), k = 20)
-    }),
-
-    // -- [NS] erasure of ZERO-TOKEN documents: an empty doc has no
-    // postings rows, but it holds a membership row and counts in
-    // N/avgdl — an erasure that only chased postings would leave the
-    // stored N permanently high per such victim (silently skewing every
-    // later score). The membership (docs/) table is what makes these
-    // victims findable; the gate erases one empty and one normal doc
-    // and pins the recomputed stats against a direct recount, then
-    // serves — the oracle scores the emptied corpus minus the victims
-    // with dl derived over ALL docs (zero-token docs contribute dl=0,
-    // exactly as the engine's token counter does). --
-    "q_bm25_zero_token_delete" -> ((s, d) => {
-      val docs0 = documents(s, d)
-        .withColumn("text",
-          when(col("doc_id").isin(5L, 6L), lit("")).otherwise(col("text")))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_bm25zero")
-      deleteRecursivelyOnExit(tmp)
-      val idx = tmp.toFile.getAbsolutePath + "/text_index"
-      graft.operators.TextIndex.appendTextIndexBatches(
-        Seq(docs0.where(col("doc_id") < 250L) -> 0L,
-            docs0.where(col("doc_id") >= 250L) -> 1L), idx)
-      val erased = graft.operators.TextIndex.deleteFromTextIndex(s, idx, Seq(5L, 7L))
-      val statsRow = s.read.parquet(s"$idx/stats")
-        .agg(sum(col("n_docs")), sum(col("total_toks"))).head()
-      val wantStats = docs0.where(!col("doc_id").isin(5L, 7L))
-        .agg(count(lit(1)), coalesce(
-          sum(graft.functions.TextFunctions.tokenCount(col("text")).cast("long")),
-          lit(0L)))
-        .head()
-      val statsOk = statsRow.getLong(0) == wantStats.getLong(0) &&
-        statsRow.getLong(1) == wantStats.getLong(1)
-      require(erased == 2L && statsOk,
-        s"q_bm25_zero_token_delete: erased=$erased statsOk=$statsOk")
-      graft.operators.TextIndex.bm25TopKStored(s, idx,
-        Seq("dup", "merge", "scan"), k = 20)
-    }),
-
-    // -- [NS] BULK right-to-erasure from the text index: the victim set
-    // is a TABLE (a fifth of the corpus — the compliance-batch shape),
-    // applied through the broadcast semi/anti erasure core; no victim
-    // id ever funnels through a driver-built literal list (the
-    // Seq[Long] form's expression tree is ∝ |victims| and stops scaling
-    // around 10⁴ ids). Gate: the erased count prices to the victim
-    // table's cardinality, no victim posting survives, and the serve
-    // equals the full-scan BM25 over the surviving four fifths. --
-    "q_bm25_bulk_delete" -> ((s, d) => {
-      val docs0 = documents(s, d)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_bm25bulk")
-      deleteRecursivelyOnExit(tmp)
-      val idx = tmp.toFile.getAbsolutePath + "/text_index"
-      graft.operators.TextIndex.appendTextIndexBatches(
-        Seq(docs0.where(col("doc_id") < 250L) -> 0L,
-            docs0.where(col("doc_id") >= 250L) -> 1L), idx)
-      val victims = docs0.where(col("doc_id") % 5 === 3L).select("doc_id")
-      val expected = victims.count()
-      val erased = graft.operators.TextIndex.deleteFromTextIndex(s, idx, victims)
-      val goneOk = s.read.parquet(s"$idx/postings")
-        .join(broadcast(victims), Seq("doc_id"), "left_semi").isEmpty
-      require(erased == expected && goneOk,
-        s"q_bm25_bulk_delete: erased=$erased expected=$expected goneOk=$goneOk")
-      graft.operators.TextIndex.bm25TopKStored(s, idx,
-        Seq("dup", "merge", "scan"), k = 20)
-    }),
-
-    // -- [NS] batch-TTL retention for the text index: `batch <= cutoff`
-    // partitions of postings AND stats drop as PURE METADATA (no data
-    // file read or rewritten; surviving files inode-level byte-identical,
-    // require()d below). Aging is exact for this family — a batch's docs
-    // contribute nothing outside their own partitions — so the gate is
-    // again exact: post-retention serve == full-scan BM25 over the
-    // retained docs only. --
-    "q_bm25_retention" -> ((s, d) => {
-      val docs0 = documents(s, d)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_bm25ret")
-      deleteRecursivelyOnExit(tmp)
-      val idx = tmp.toFile.getAbsolutePath + "/text_index"
-      graft.operators.TextIndex.appendTextIndexBatches(
-        Seq(docs0.where(col("doc_id") < 200L) -> 0L,
-            docs0.where(col("doc_id") >= 200L && col("doc_id") < 400L) -> 1L,
-            docs0.where(col("doc_id") >= 400L) -> 2L), idx)
-      val before = snapStoreFiles(idx)
-      val dropped = graft.operators.TextIndex.retainTextIndexBatches(s, idx, cutoff = 0L)
-      val after = snapStoreFiles(idx)
-      val droppedOk = dropped == Map("postings" -> Seq(0L), "stats" -> Seq(0L),
-        "docs" -> Seq(0L), "terms" -> Seq(0L))
-      val coldOk = after.nonEmpty &&
-        after.keySet == before.keySet.filterNot(_.contains("batch=0")) &&
-        after.forall { case (f, sig) => before(f) == sig }
-      val agedOk = s.read.parquet(s"$idx/postings")
-        .where(col("doc_id") < 200L).isEmpty
-      require(droppedOk && coldOk && agedOk,
-        s"q_bm25_retention: droppedOk=$droppedOk coldOk=$coldOk agedOk=$agedOk")
-      graft.operators.TextIndex.bm25TopKStored(s, idx,
-        Seq("dup", "merge", "scan"), k = 20)
-    }),
-
-    // -- [NS] text-index COMPACTION: fold the micro-batch postings
-    // (3 appends) into one consolidated term-clustered batch — the
-    // small-files maintenance every streaming-ingested store needs —
-    // touching ONLY the folded batches (younger batches byte-identical,
-    // require()d) behind the checked recoverable swap; stats rows fold
-    // by summation, which is exactly what the scorer reads. Gate: the
-    // post-compaction serve still equals the full-scan BM25. --
-    "q_bm25_compact" -> ((s, d) => {
-      val docs0 = documents(s, d)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_bm25cmp")
-      deleteRecursivelyOnExit(tmp)
-      val idx = tmp.toFile.getAbsolutePath + "/text_index"
-      graft.operators.TextIndex.appendTextIndexBatches(
-        Seq(docs0.where(col("doc_id") < 150L) -> 0L,
-            docs0.where(col("doc_id") >= 150L && col("doc_id") < 300L) -> 1L,
-            docs0.where(col("doc_id") >= 300L) -> 2L), idx)
-      val before = snapStoreFiles(idx)
-      val (folded, erased0) =
-        graft.operators.TextIndex.compactTextIndexBatches(s, idx, upTo = 1L)
-      val after = snapStoreFiles(idx)
-      val youngBefore = before.keySet.filter(_.contains("batch=2"))
-      val coldOk = youngBefore.subsetOf(after.keySet) &&
-        youngBefore.forall(f => after(f) == before(f))
-      val foldedOk = folded == 1L && erased0 == 0L &&
-        !after.keySet.exists(_.contains("batch=0"))
-      require(coldOk && foldedOk,
-        s"q_bm25_compact: coldOk=$coldOk foldedOk=$foldedOk")
-      graft.operators.TextIndex.bm25TopKStored(s, idx,
-        Seq("dup", "merge", "scan"), k = 20)
-    }),
-
-    // -- [NS] MAINTENANCE PLANNER — the deterministic ops advisor a
-    // 100 TB control loop runs instead of hand-scheduling per store:
-    // O(batches) stats rows in, the declared two-rule policy out
-    // (batch-TTL retention with the drop-all refusal applied at PLAN
-    // time; compaction of survivors past the live-batch budget, newest
-    // batch kept unfolded so a hot appender never races the fold's
-    // swap). Two policy scenarios against one 5-batch store exercise
-    // both rules; n_docs comes from the store's stats rows, so the
-    // exact oracle (recounting the same batches from `documents`)
-    // re-verifies the stats invariant as a side effect. --
-    "q_maint_plan" -> ((s, d) => {
-      // the planner only READS store metadata, so the 5-batch fixture
-      // memoizes like every read-only store (textIndexRoot discipline) —
-      // the declared subject is the DECISION, not the store build
-      val idx = scratchDirs.getOrElseUpdate(s"maintplan:$d", {
-        val docs0 = documents(s, d)
-        val mx = docs0.agg(max(col("doc_id"))).head().getLong(0) + 1
-        val work = java.nio.file.Files.createTempDirectory("graft_maintplan")
-        deleteRecursivelyOnExit(work)
-        val r = work.toFile.getAbsolutePath + "/text_index"
-        graft.operators.TextIndex.appendTextIndexBatches(
-          (0 until 5).map { i =>
-            docs0.where(col("doc_id") >= i * mx / 5 &&
-              col("doc_id") < (i + 1) * mx / 5) -> i.toLong
-          }, r)
-        r
-      })
-      val a = graft.operators.Maintenance.planTextIndexMaintenance(
-          s, idx, ttlBatches = 2, maxLiveBatches = 2)
-        .withColumn("scenario", lit("A"))
-      val b = graft.operators.Maintenance.planTextIndexMaintenance(
-          s, idx, ttlBatches = 10, maxLiveBatches = 2)
-        .withColumn("scenario", lit("B"))
-      a.unionByName(b)
-        .select("scenario", "action", "param", "n_batches", "n_docs")
-        .orderBy("scenario", "action")
-    }),
-
-    // -- [NS] the maintenance control loop's FULL STEP — plan then
-    // EXECUTE (retention first, so compaction folds survivors only;
-    // both ops behind the shared sentinel): a 6-batch store ages 3
-    // batches and folds 2 of the 3 survivors in one call. The declared
-    // output is the executed plan (exact oracle recounts it from
-    // documents); the post-state is require()d — only the planned
-    // batches remain, and the maintained serve equals the full-scan
-    // BM25 over the retained corpus (folding is value-invisible, aging
-    // is exact for this family). --
-    "q_maint_run" -> ((s, d) => {
-      val docs0 = documents(s, d)
-      val mx = docs0.agg(max(col("doc_id"))).head().getLong(0) + 1
-      val work = java.nio.file.Files.createTempDirectory("graft_maintrun")
-      deleteRecursivelyOnExit(work)
-      val idx = work.toFile.getAbsolutePath + "/text_index"
-      graft.operators.TextIndex.appendTextIndexBatches(
-        (0 until 6).map { i =>
-          docs0.where(col("doc_id") >= i * mx / 6 &&
-            col("doc_id") < (i + 1) * mx / 6) -> i.toLong
-        }, idx)
-      val executed = graft.operators.Maintenance.runTextIndexMaintenance(
-        s, idx, ttlBatches = 3, maxLiveBatches = 2)
-      val batchesLeft = s.read.parquet(s"$idx/stats")
-        .select(col("batch").cast("long")).distinct()
-        .orderBy("batch").collect().map(_.getLong(0)).toSeq
-      val retained = docs0.where(col("doc_id") >= 3 * mx / 6)
-      val served = graft.operators.TextIndex.bm25TopKStored(s, idx,
-        Seq("dup", "merge", "scan"), k = 20)
-      val twin = graft.operators.Corpus.bm25TopK(retained,
-        Seq("dup", "merge", "scan"), k = 20)
-      // one-pass bag equality: the full-scan twin (the expensive leg)
-      // executes once, not twice per exceptAll direction
-      require(batchesLeft == Seq(4L, 5L) && multisetEqual(served, twin),
-        s"q_maint_run: batchesLeft=$batchesLeft or maintained serve drifted " +
-          "from the retained-corpus scorer")
-      executed.select("action", "param", "n_batches", "n_docs")
-        .orderBy("action")
-    }),
-
-    // -- [NS] text-index compaction with ERASURE FOLDED IN: a victim
-    // set big enough to saturate file-targeted deletion (V ≫ F touches
-    // ~every file: 1−(1−1/F)^V) costs ONE fold rewrite instead of
-    // delete-then-compact's two — the victims simply drop out of the
-    // fold's reads, the folded stats row aggregates the folded
-    // membership (decrement for free), and the folded dictionary
-    // recomputes from the folded postings (impact bounds stay exact).
-    // Victims in batches the fold won't rewrite refuse loudly
-    // (require()d below). Gate: young batch byte-identical, victims
-    // gone, serve equals the full scan over corpus-minus-victims. --
-    "q_bm25_compact_erase" -> ((s, d) => {
-      val docs0 = documents(s, d)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_bm25cmpe")
-      deleteRecursivelyOnExit(tmp)
-      val idx = tmp.toFile.getAbsolutePath + "/text_index"
-      graft.operators.TextIndex.appendTextIndexBatches(
-        Seq(docs0.where(col("doc_id") < 150L) -> 0L,
-            docs0.where(col("doc_id") >= 150L && col("doc_id") < 300L) -> 1L,
-            docs0.where(col("doc_id") >= 300L) -> 2L), idx)
-      val victims = Seq(3L, 77L, 151L, 299L) // batches 0 and 1 only
-      // a victim in an unfolded batch must refuse, store untouched
-      val refused =
-        try {
-          graft.operators.TextIndex.compactTextIndexBatches(
-            s, idx, upTo = 1L, dropIds = victims :+ 400L)
-          false
-        } catch { case e: IllegalArgumentException =>
-          e.getMessage.contains("batches > 1")
-        }
-      val before = snapStoreFiles(idx)
-      val (folded, erased) = graft.operators.TextIndex.compactTextIndexBatches(
-        s, idx, upTo = 1L, dropIds = victims)
-      val after = snapStoreFiles(idx)
-      val youngBefore = before.keySet.filter(_.contains("batch=2"))
-      val coldOk = youngBefore.subsetOf(after.keySet) &&
-        youngBefore.forall(f => after(f) == before(f))
-      val goneOk = s.read.parquet(s"$idx/postings")
-        .where(col("doc_id").isin(victims.map(java.lang.Long.valueOf): _*))
-        .isEmpty
-      require(refused && folded == 1L && erased == victims.length.toLong &&
-        coldOk && goneOk,
-        s"q_bm25_compact_erase: refused=$refused folded=$folded erased=$erased " +
-          s"coldOk=$coldOk goneOk=$goneOk")
-      graft.operators.TextIndex.bm25TopKStored(s, idx,
-        Seq("dup", "merge", "scan"), k = 20)
-    }),
-
-    // -- [NS] STREAMING text-index ingest: the lexical tier's streaming
-    // form (fuzzy has q_stream_fuzzy_dedup, substring q_stream_substring_
-    // ingest, ANN q_stream_ann_ingest). The same id-ordered document
-    // slices arrive as a REAL file stream; each micro-batch appends its
-    // own postings batch + one-row stats partition (idempotent under
-    // replay — a batch overwrites only its own dirs). Because BM25 is a
-    // pure function of the corpus (batch boundaries don't enter the
-    // score), the gate is again EXACT: the post-stream stored serve
-    // equals the full-scan BM25 over the whole corpus. --
-    "q_stream_bm25_ingest" -> ((s, d) => {
-      val work = java.nio.file.Files.createTempDirectory("graft_bm25stream")
-      deleteRecursivelyOnExit(work)
-      val idx = work.toFile.getAbsolutePath + "/text_index"
-      graft.operators.TextIndex.streamIngestTextIndex(s, docSlices(s, d), idx)
-      graft.operators.TextIndex.bm25TopKStored(s, idx,
-        Seq("dup", "merge", "scan"), k = 20)
-    }),
-
-    // -- [NS] RIGHT-TO-ERASURE against the LIVE text-index ingest
-    // stream (the IVF queue discipline applied to the lexical tier): a
-    // direct deleteFromTextIndex racing the stream's appends is out of
-    // the single-writer contract, so the request lands in the shared
-    // pending-erasure queue — one literal (.req) and one BULK parquet
-    // (.reqp) request, overlapping ids (idempotent) — and the stream
-    // drains both in its between-batch slot. Victims sit in the FIRST
-    // arrival slice, so the drain after batch 0 has real rows to erase
-    // while later slices are still in flight. Because BM25 is a pure
-    // function of the corpus, the gate stays EXACT: queue retired +
-    // post-stream serve == full-scan BM25 over corpus-minus-victims. --
-    "q_stream_bm25_erase" -> ((s, d) => {
-      import s.implicits._
-      val work = java.nio.file.Files.createTempDirectory("graft_bm25qerase")
-      deleteRecursivelyOnExit(work)
-      val idx = work.toFile.getAbsolutePath + "/text_index"
-      val victims = Seq(10L, 20L)
-      graft.operators.TextIndex.enqueueTextIndexErasure(s, idx, victims)
-      graft.operators.TextIndex.enqueueTextIndexErasure(
-        s, idx, Seq(20L).toDF("doc_id")) // bulk form, overlapping id
-      graft.operators.TextIndex.streamIngestTextIndex(s, docSlices(s, d), idx)
-      val pendDir = java.nio.file.Paths.get(idx, ".pending_erasures")
-      val drainedOk = !java.nio.file.Files.exists(pendDir) || {
-        val st = java.nio.file.Files.list(pendDir)
-        try st.filter(p => p.getFileName.toString.endsWith(".req") ||
-          p.getFileName.toString.endsWith(".reqp")).count() == 0L
-        finally st.close()
-      }
-      val goneOk = s.read.parquet(s"$idx/postings")
-        .where(col("doc_id").isin(victims.map(java.lang.Long.valueOf): _*))
-        .isEmpty
-      require(drainedOk && goneOk,
-        s"q_stream_bm25_erase: drainedOk=$drainedOk goneOk=$goneOk")
-      graft.operators.TextIndex.bm25TopKStored(s, idx,
-        Seq("dup", "merge", "scan"), k = 20)
-    }),
-
-    // -- [NS] IMPACT-BOUNDED BM25 serve (WAND/MaxScore posture): the
-    // exact serve's candidate set is ∝ Σ df(term) — one stopword makes
-    // it corpus-sized. The terms/ dictionary carries per-term
-    // (df, max_tf, min_dl), so the serve decides BEFORE touching any
-    // postings which terms' postings it refuses to read; capped terms'
-    // bytes are never scanned and each returned score understates truth
-    // by at most the declared bound. Gate: with the ceiling at the
-    // terms' min df (capping the rest), every scored doc sits inside
-    // [exact − bound, exact]; with the ceiling at the max df (nothing
-    // capped) the bounded serve IS the exact serve — which is what the
-    // oracle hashes. --
-    "q_bm25_bounded" -> ((s, d) => {
-      val idx = textIndexRoot(s, d)
-      val qTerms = Seq("dup", "merge", "scan")
-      // term dfs from the vocab-sized dictionary (bounded collect ≤ |terms|)
-      val dfs = s.read.parquet(s"$idx/terms")
-        .where(col("term").isin(qTerms: _*))
-        .groupBy(col("term")).agg(sum(col("df")).as("df"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val low = dfs.values.min
-      val (capped, bound) = graft.operators.TextIndex.cappedImpactBound(
-        s, idx, qTerms, dfCeiling = low)
-      val kAll = 1 << 20 // every scored doc (result ≤ docs holding a term)
-      val boundedAll = graft.operators.TextIndex.bm25TopKStoredBounded(
-        s, idx, qTerms, k = kAll, dfCeiling = low)
-      val exactAll = graft.operators.TextIndex.bm25TopKStored(s, idx, qTerms, k = kAll)
-      val bad = exactAll.as("e")
-        .join(boundedAll.select(col("doc_id"), col("bm25").as("b_bm25")),
-          Seq("doc_id"), "left_outer")
-        .where(coalesce(col("b_bm25"), lit(0.0)) > col("e.bm25") + lit(1e-9) ||
-          col("e.bm25") > coalesce(col("b_bm25"), lit(0.0)) + lit(bound) + lit(1e-9))
-        .count()
-      require(bad == 0L && capped.forall(t => dfs(t) > low),
-        s"q_bm25_bounded: $bad docs outside the declared bound " +
-          s"(capped=$capped bound=$bound dfs=$dfs)")
-      graft.operators.TextIndex.bm25TopKStoredBounded(
-        s, idx, qTerms, k = 20, dfCeiling = dfs.values.max)
-    }),
-
-    // -- [NS] BOOLEAN retrieval from the stored postings — the filter
-    // half of a production search engine (Lucene MUST / MUST_NOT),
-    // served without touching the corpus: each clause leg is one
-    // tm_mod-pruned postings scan (candidates ∝ Σ df, never
-    // corpus-sized); MUST is a doc-grouped term count (the append
-    // contract stores each (doc, term) pair exactly once, so count ≡
-    // count distinct — no distinct shuffle), MUST_NOT a left-anti join.
-    // Exact value oracle: DuckDB re-tokenizes and intersects. --
-    "q_bool_and_stored" -> ((s, d) =>
-      graft.operators.TextIndex.booleanSearchStored(s, textIndexRoot(s, d),
-        must = Seq("dup", "merge"), mustNot = Seq("scan"))),
-
-    // -- [NS] PHRASE search from the stored POSITIONAL tier (Lucene
-    // PhraseQuery) — the exact-match class flat postings cannot answer:
-    // docs where the phrase's terms occur CONSECUTIVELY, with per-doc
-    // occurrence counts. One tm_mod-pruned positions scan (∝ Σ tf over
-    // the phrase's terms, never corpus-sized) + the anchor trick
-    // (term i at pos p → candidate start p−i; a (doc, start) filling
-    // all slots is a match). Exact value oracle: DuckDB re-tokenizes
-    // and checks adjacency. --
-    "q_phrase_stored" -> ((s, d) =>
-      graft.operators.TextIndex.phraseSearchStored(s, textIndexRoot(s, d),
-        Seq("fast", "merge"))),
-
-    // -- [NS] PROXIMITY search from the positional tier (Lucene
-    // SpanNearQuery, unordered): docs where two terms co-occur within a
-    // token window. Doc-keyed hash join of the two pruned position
-    // sets with the distance as residual — never a cross product
-    // across documents. --
-    "q_near_stored" -> ((s, d) =>
-      graft.operators.TextIndex.proximitySearchStored(s, textIndexRoot(s, d),
-        "vector", "spark", window = 3)),
-
-    // -- [NS] ORDERED proximity (SpanNearQuery inOrder=true): the first
-    // term must precede the second within the window — the asymmetric
-    // span ("big" before "table") the unordered form cannot express;
-    // same doc-keyed join, the direction rides the residual. --
-    "q_near_ordered_stored" -> ((s, d) =>
-      graft.operators.TextIndex.proximitySearchStored(s, textIndexRoot(s, d),
-        "big", "table", window = 2, ordered = true)),
-
-    // -- [NS] FILTERED RANKING — the boolean filter COMPOSED with the
-    // BM25 scorer, both from the stored index (the "category:x AND NOT
-    // y, ranked" query every deployed engine serves): the boolean match
-    // set restricts which docs are scored while df/N/avgdl stay
-    // corpus-level (the Lucene filter-clause semantics — a filter never
-    // changes idf). Exactly value-oracled: the twin scores the same
-    // docs with corpus-level stats in SQL. --
-    "q_bool_rank_stored" -> ((s, d) => {
-      val idx = textIndexRoot(s, d)
-      val matches = graft.operators.TextIndex.booleanSearchStored(
-        s, idx, must = Seq("dup", "merge"), mustNot = Seq("scan"))
-      graft.operators.TextIndex.bm25TopKStored(s, idx,
-        Seq("dup", "merge"), k = 10, docFilter = Some(matches))
-    }),
-
-    // -- [NS] hybrid retrieval with BOTH legs served from PERSISTED
-    // indexes — the deployed frontend shape: the lexical top-20 from the
-    // stored inverted index (one term-pruned postings scan; the raw
-    // corpus untouched) and the vector top-20 from the stored IVF index
-    // at the exhaustive corner (provably equal to brute force), RRF
-    // fused. Because the stored BM25 serve equals the corpus scan
-    // exactly, the whole fusion stays exactly value-oracle-able — the
-    // oracle is q_hybrid_search's SQL verbatim. --
-    "q_hybrid_search_indexed" -> ((s, d) => {
-      val byLex = Window.orderBy(col("bm25").desc, col("doc_id"))
-      val lex = graft.operators.TextIndex.bm25TopKStored(s, textIndexRoot(s, d),
-          Seq("dup", "merge", "scan"), k = 20)
-        .select(col("doc_id"), row_number().over(byLex).as("r_lex"))
-      val work = java.nio.file.Files.createTempDirectory("graft_hybridi")
-      deleteRecursivelyOnExit(work)
-      val w = work.toFile.getAbsolutePath
-      val emb = embeddings(s, d)
-      Similarity.saveIvfIndex(emb, s"$w/ivf_index", nlist = 16)
-      Similarity.seedIvfStore(emb, w)
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells").drop("batch")
-      val byVec = Window.orderBy(col("cosine").desc, col("vec_id"))
-      val vec = Similarity.ivfProbeSetTopKStored(
-          stored, s"$w/ivf_index", emb.where(col("vec_id") === 0L),
-          k = 20, nprobe = 16)
-        .select(col("vec_id").as("doc_id"), row_number().over(byVec).as("r_vec"))
-      lex.join(vec, Seq("doc_id"), "full_outer")
-        .select(col("doc_id"),
-          round(
-            coalesce(lit(1.0) / (lit(60) + col("r_lex")), lit(0.0)) +
-              coalesce(lit(1.0) / (lit(60) + col("r_vec")), lit(0.0)), 6)
-            .as("rrf"))
-        .orderBy(col("rrf").desc, col("doc_id"))
-        .limit(20)
-    }),
-
-    // -- [NS] the COMPOSED PRODUCTION SEARCH FRONTEND in one gate — the
-    // query shape a deployed hybrid service actually serves, every leg
-    // from its store: the lexical top-20 from the PERSISTED inverted
-    // index (one term-pruned postings scan per query; the raw corpus is
-    // never readable from this path — bm25TopKStored touches only the
-    // index dirs), the vector top-20 from the PERSISTED IVF index at
-    // PRUNED nprobe (4 of 16) through the ONE-pass batch probe-set
-    // serve, fused BOTH production ways (RRF and the min-max-normalized
-    // 0.6/0.4 α-blend). Pruning moves the quality question to fusion
-    // level, so that is where both gates sit (the
-    // q_hybrid_search_pruned invariant, now over stored-only legs):
-    // per query and per fusion mode, the pruned fused top-10 overlaps
-    // the exhaustive-leg fusion's top-10 in ≥ 8 items. --
-    "q_hybrid_search_production" -> ((s, d) => {
-      val idx = textIndexRoot(s, d)
-      val work = java.nio.file.Files.createTempDirectory("graft_hybprod")
-      deleteRecursivelyOnExit(work)
-      val w = work.toFile.getAbsolutePath
-      val emb = embeddings(s, d)
-      Similarity.saveIvfIndex(emb, s"$w/ivf_index", nlist = 16)
-      Similarity.seedIvfStore(emb, w)
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells").drop("batch")
-      val queries = Seq(0L -> Seq("dup", "merge", "scan"),
-        1L -> Seq("join", "window", "stream"))
-      // lexical leg: stored postings only (per query one pruned scan)
-      val lex = queries.map { case (qid, terms) =>
-        graft.operators.TextIndex.bm25TopKStored(s, idx, terms, k = 20)
-          .withColumn("query_id", lit(qid))
-      }.reduce(_ unionByName _).persist()
-      val probes = emb.where(col("vec_id").isin(queries.map(_._1): _*))
-      def vecLeg(np: Int): DataFrame =
-        Similarity.ivfProbeSetTopKStored(stored, s"$w/ivf_index", probes,
-            k = 20, nprobe = np)
-          .select(col("probe_id").as("query_id"), col("vec_id").as("doc_id"),
-            col("cosine"))
-      hybridFusionOverlapGate(lex, vecLeg(4), vecLeg(16))
-    }),
-
-    // -- [NS] the production frontend at the PRODUCTION LAYOUT: the same
-    // composed gate with the vector leg served from the stored IVF-PQ
-    // index (codes-only cells ~32× under float32 — the tier a 100 TB
-    // deployment actually keeps hot) through the one-pass batch
-    // probe-set ADC serve + exact float re-rank, at PRUNED nprobe (4 of
-    // 16) vs its exhaustive twin. ADC quantization rides BOTH legs, so
-    // the overlap gate isolates exactly what pruning costs at fusion
-    // level — the q_hybrid_search_production invariant, now over the
-    // coded store. --
-    "q_hybrid_search_production_pq" -> ((s, d) => {
-      val idx = textIndexRoot(s, d)
-      val work = java.nio.file.Files.createTempDirectory("graft_hybprodpq")
-      deleteRecursivelyOnExit(work)
-      val w = work.toFile.getAbsolutePath
-      val emb = embeddings(s, d)
-      Similarity.streamIngestIvfPq(s, embSlices(s, d), w, nlist = 16,
-        m = 8, codebookK = 32)
-      val queries = Seq(0L -> Seq("dup", "merge", "scan"),
-        1L -> Seq("join", "window", "stream"))
-      val lex = queries.map { case (qid, terms) =>
-        graft.operators.TextIndex.bm25TopKStored(s, idx, terms, k = 20)
-          .withColumn("query_id", lit(qid))
-      }.reduce(_ unionByName _).persist()
-      val probes = emb.where(col("vec_id").isin(queries.map(_._1): _*))
-      def vecLeg(np: Int): DataFrame =
-        Similarity.ivfPqProbeSetTopKStored(s, w, probes,
-            rerankWith = emb, k = 20, nprobe = np, rerank = 20)
-          .select(col("probe_id").as("query_id"), col("vec_id").as("doc_id"),
-            col("cosine"))
-      hybridFusionOverlapGate(lex, vecLeg(4), vecLeg(16))
-    }),
-
-    // -- [NS] the production system INGEST-TO-SERVE in one gate: BOTH
-    // index tiers built by LIVE Structured Streaming ingest (the text
-    // index and the IVF store, each appending its own batch= partitions
-    // per micro-batch), then the composed frontend served from the
-    // streamed stores. The gate is three-layer, strongest first: the
-    // streamed lexical tier serves EXACTLY (stored top-20 == full-scan
-    // BM25 over the whole corpus — streaming batch boundaries never
-    // enter the score), the streamed vector tier is EXACT at the
-    // exhaustive corner (probe-set top-20 == float brute force), and
-    // pruned-nprobe fusion overlaps its exhaustive twin >= 8/10 both
-    // production ways. A stream that silently dropped or duplicated a
-    // micro-batch fails the exactness legs — overlap alone could not
-    // see a consistently-wrong store. --
-    "q_stream_hybrid_production" -> ((s, d) => {
-      val work = java.nio.file.Files.createTempDirectory("graft_streamhyb")
-      deleteRecursivelyOnExit(work)
-      val w = work.toFile.getAbsolutePath
-      val idx = s"$w/text_index"
-      // the TWO live ingest streams are independent (different sources,
-      // different stores, different checkpoints) — a deployed frontend
-      // runs its lexical and vector ingest side by side, so the fixture
-      // does too: wall time is max(streams), not their sum. Fixture dirs
-      // resolve BEFORE the futures (the memo map's builder must not race
-      // itself); the outer futures ride the global pool, never the
-      // 4-thread writer pool the appends inside each stream await on.
-      locally {
-        val docsIn = docSlices(s, d)
-        val embIn = embSlices(s, d)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val lexStream = Future {
-          graft.operators.TextIndex.streamIngestTextIndex(s, docsIn, idx)
-        }
-        val vecStream = Future {
-          Similarity.streamIngestIvf(s, embIn, w, nlist = 16)
-        }
-        Await.result(lexStream, scala.concurrent.duration.Duration.Inf)
-        Await.result(vecStream, scala.concurrent.duration.Duration.Inf)
-        ()
-      }
-      val emb = embeddings(s, d)
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells").drop("batch")
-      val queries = Seq(0L -> Seq("dup", "merge", "scan"),
-        1L -> Seq("join", "window", "stream"))
-      // ONE stored serve per query id feeds BOTH the exactness gate and
-      // the fusion leg below (the serve returns a materialized ≤20-row
-      // frame, so reuse is free); the full-scan twin runs once inside
-      // the one-pass bag-equality gate instead of twice per exceptAll
-      // direction
-      val lexServed = queries.map { case (qid, terms) =>
-        qid -> graft.operators.TextIndex.bm25TopKStored(s, idx, terms, k = 20)
-      }.toMap
-      val lexOk = queries.map { case (qid, terms) =>
-        val b = graft.operators.Corpus.bm25TopK(documents(s, d), terms, k = 20)
-        qid -> multisetEqual(lexServed(qid), b)
-      }.toMap
-      val probes = emb.where(col("vec_id").isin(queries.map(_._1): _*))
-      def vecLeg(np: Int): DataFrame =
-        Similarity.ivfProbeSetTopKStored(stored, s"$w/ivf_index", probes,
-            k = 20, nprobe = np)
-          .select(col("probe_id").as("query_id"), col("vec_id").as("doc_id"),
-            col("cosine"))
-      val p = probes.select(col("vec_id").as("probe_id"),
-        col("embedding").as("probe_emb"))
-      val byProbe = Window.partitionBy(col("probe_id"))
-        .orderBy(col("cosine").desc, col("vec_id"))
-      val truth = emb.crossJoin(broadcast(p))
-        .where(col("vec_id") =!= col("probe_id"))
-        .withColumn("cosine",
-          round(VectorOps.cosine(col("embedding"), col("probe_emb")), 4))
-        .withColumn("rk", row_number().over(byProbe))
-        .where(col("rk") <= 20)
-        .select(col("probe_id").as("query_id"), col("vec_id").as("doc_id"))
-      val vecExact = truth
-        .join(vecLeg(16).select("query_id", "doc_id"),
-          Seq("query_id", "doc_id"), "left_semi")
-        .groupBy("query_id")
-        .agg((count(lit(1)) === 20L).as("vec_exact_ok"))
-      val lex = queries.map { case (qid, _) =>
-        lexServed(qid).withColumn("query_id", lit(qid))
-      }.reduce(_ unionByName _).persist()
-      hybridFusionOverlapGate(lex, vecLeg(4), vecLeg(16))
-        .join(vecExact, Seq("query_id"))
-        .withColumn("lex_exact_ok",
-          when(col("query_id") === 0L, lit(lexOk(0L))).otherwise(lit(lexOk(1L))))
-        .select("query_id", "lex_exact_ok", "vec_exact_ok",
-          "rrf_overlap_ok", "weighted_overlap_ok")
-        .orderBy("query_id")
-    }),
-
-    // -- [NS] token-budget sequence packing, per-shard (source) so packing
-    // state never funnels through one partition --
-    "q_pack_sequences" -> ((s, d) =>
-      graft.operators.Corpus.packSequences(documents(s, d), budget = 512)),
-
-    // -- [NS] data-quality gate: five declarative expectations over
-    // lineitem in ONE aggregate pass (sum(when(!p,1)) counters + stack to
-    // long form — no shuffle beyond the 1-row combine) plus the
-    // referential-integrity orphan check as a broadcast anti join. The
-    // publish gate a production pipeline runs; one rule (quantity ≤ 49) is
-    // deliberately violated so the gate provably counts, not just passes. --
-    "q_data_audit" -> ((s, d) => {
-      import graft.operators.DataQuality._
-      val li = Tables.lineitem(s, d)
-      audit(li, Seq(
-        Rule("key_not_null", col("l_orderkey").isNotNull),
-        Rule("linenumber_positive", col("l_linenumber") >= 1),
-        Rule("price_positive", col("l_extendedprice") > 0),
-        Rule("discount_in_range", col("l_discount").between(0, 1)),
-        Rule("quantity_le_49", col("l_quantity") <= 49)))
-        .unionByName(refIntegrity(li, "l_orderkey",
-          Tables.orders(s, d), "o_orderkey", "orders_ref_integrity"))
-        .orderBy("rule")
-    }),
-
-    // -- [NS] the training-data pipeline COMPOSED end-to-end, one exact
-    // oracle: normalized exact dedup (keep min doc_id) → quality-score
-    // filter (≥ 0.5) → per-source corpus profile. Each stage is an
-    // already-oracled operator; this declares that they compose without
-    // semantic drift — the shape a real pre-training run executes. --
-    "q_pipeline_e2e" -> ((s, d) => {
-      val docs = documents(s, d)
-      val kept = docs.join(
-        Dedup.exactNormalized(docs).select("doc_id"), Seq("doc_id"), "left_semi")
-      kept
-        .withColumn("p", TF.textProfileCol(col("text")))
-        .where(col("p.quality") >= 0.5)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("p.n_tokens").cast("long")).as("n_tokens"))
-        .orderBy("source")
-    }),
-
-    // -- [NS] unigram-LM quality scoring: add-1-smoothed LM trained on the
-    // doc_id >= 50 split scores the doc_id < 50 "incoming" docs by mean
-    // token log-prob — the perplexity-style pre-training filter. Token-
-    // keyed co-located join; per-token ln rounded to 6 dp then decimal-
-    // summed, so the mean is engine-identical. --
-    "q_lm_score" -> ((s, d) => {
-      val docs = documents(s, d)
-      graft.operators.Corpus.lmScore(
-        docs.where(col("doc_id") >= 50), docs.where(col("doc_id") < 50))
-    }),
-
-    // -- [NS] pack materialization: the packSequences bins rendered as
-    // actual training sequences (doc_id-ordered concat per bin);
-    // fingerprinted by md5 + length so the declared rows stay bounded --
-    "q_pack_concat" -> ((s, d) =>
-      graft.operators.Corpus.packedTexts(documents(s, d), budget = 512)),
-
-    // -- [NS] balanced token-budget sharding: rank-desc round-robin deal
-    // (LPT-style) of documents into 8 shards; per-shard token totals stay
-    // within one max-document of each other. The global rank runs over a
-    // 2-column projection (the text column never sorts). --
-    "q_token_shard" -> ((s, d) =>
-      graft.operators.Corpus.tokenShard(documents(s, d), nShards = 8)),
-
-    // -- [NS] the same sharding via the lake-scale rank (range partition +
-    // local counters + offset table — no single-partition window over the
-    // data). Total order is identical, so it shares the window form's
-    // oracle VERBATIM: the scale path is gated on exact equality. --
-    "q_token_shard_ranged" -> ((s, d) =>
-      graft.operators.Corpus.tokenShardRanged(documents(s, d), nShards = 8)),
-
-    // -- [NS] tokenizer-vocab coverage: top-256 train vocabulary (count
-    // desc, term asc — a total-ordered cut), per-source eval OOV rate. The
-    // vocab is TakeOrderedAndProject-sized and broadcast; the eval token
-    // stream never shuffles for the probe. --
-    "q_vocab_coverage" -> ((s, d) => {
-      val docs = documents(s, d)
-      graft.operators.Corpus.vocabCoverage(
-        docs.where(col("doc_id") >= 50), docs.where(col("doc_id") < 50), v = 256)
-    }),
-
-    // -- [NS] length-curriculum tiers: equal-count ntile buckets over the
-    // (toks, doc_id) total order; per-tier doc count, length envelope, and
-    // token mass — the short-to-long curriculum schedule. --
-    "q_length_curriculum" -> ((s, d) =>
-      graft.operators.Corpus.lengthCurriculum(documents(s, d), n = 4)),
-
-    // -- [NS] the same curriculum tiers via the lake-scale rank (range
-    // partition + local counters + offset table, exact ntile tiling
-    // arithmetic — no single-partition window over the data). Total order
-    // is identical, so it shares the window form's oracle VERBATIM. --
-    "q_length_curriculum_ranged" -> ((s, d) =>
-      graft.operators.Corpus.lengthCurriculumRanged(documents(s, d), n = 4)),
-
-    // -- [NS] heavy hitters: Misra-Gries sketch (typed Aggregator, ≤ 64
-    // counters per partial) finds candidates in one pass, an exact recount
-    // of the ≤ 64 candidates makes the output deterministic — no
-    // full-vocabulary shuffle at any corpus size. k ≥ frac guarantees no
-    // qualifying token is missed, so the exact SQL oracle applies. --
-    "q_heavy_hitters" -> ((s, d) =>
-      graft.operators.HeavyHitters.frequentTokens(documents(s, d), k = 64, frac = 32)),
-
-    // -- [NS] reproducible shuffled sample: salted-md5 order, distributed
-    // top-k (TakeOrderedAndProject), the training-run data-order fixer --
-    "q_shuffle_sample" -> ((s, d) =>
-      graft.operators.Corpus.shuffledSample(documents(s, d), salt = "g1", n = 100)),
-
-    // -- [NS] train/eval decontamination: distinct-8-gram overlap of each
-    // "eval" doc (doc_id < 50) against the "train" remainder — one
-    // semi-join on the gram, no pairwise doc comparison --
-    "q_decontaminate" -> ((s, d) => {
-      val docs = documents(s, d)
-      graft.operators.Corpus.contamination(
-        docs.where(col("doc_id") >= 50), docs.where(col("doc_id") < 50), n = 8)
-    }),
-
-    // -- [NS] bloom-pre-filtered decontamination twin: identical result to
-    // q_decontaminate BY CONSTRUCTION (the exact semi-join still removes
-    // the bloom's false positives); what changes is the shuffle — eval
-    // grams that miss the train set are dropped map-side by the filter.
-    // Same oracle SQL as the exact form, so the equality is oracle-gated. --
-    "q_decontaminate_bloom" -> ((s, d) => {
-      val docs = documents(s, d)
-      graft.operators.Corpus.contaminationBloom(
-        docs.where(col("doc_id") >= 50), docs.where(col("doc_id") < 50), n = 8)
-    }),
-
-    // -- [NS] decontamination, eval-broadcast form: the distinct eval gram
-    // set broadcasts and the TRAIN side is filtered map-side (broadcast
-    // semi-join) — the 100 TB train corpus is read once and never shuffled.
-    // Result must be bit-identical to the exact form (same DuckDB twin). --
-    "q_decontaminate_bcast" -> ((s, d) => {
-      val docs = documents(s, d)
-      graft.operators.Corpus.contaminationBroadcast(
-        docs.where(col("doc_id") >= 50), docs.where(col("doc_id") < 50), n = 8)
-    }),
-
-    // -- [NS] per-doc repetition profile: single-pass JVM n-gram multiset
-    // (total/distinct/max-frequency), the loops-and-boilerplate signal --
-    "q_text_repetition" -> ((s, d) =>
-      graft.operators.Corpus.repetitionStats(documents(s, d), n = 3)),
-
-    // quality / token counts are deterministic formulas with a DuckDB twin
-    // (oracled); the rolling-hash fingerprint is split into its own
-    // rows-only query below so it doesn't drag this one off the oracle
-    "q_text_quality" -> ((s, d) =>
-      documents(s, d)
-        .withColumn("p", TF.textProfileCol(col("text")))
-        .select(col("doc_id"), col("p.quality").as("quality"),
-          col("p.n_tokens").as("n_tokens"),
-          col("p.n_bpeish").as("n_bpeish"))
-        .orderBy("doc_id")),
-
-    // -- [NS] PII redaction: the synthetic corpus has no PII, so each doc
-    // gets a deterministic email+phone derived from doc_id (the oracle
-    // builds the identical string), then the regex scrub replaces them with
-    // typed markers. Patterns live in TF (Java∩RE2 dialect); pure codegen'd
-    // regexp_replace/regexp_count — no UDF in the scan path. --
-    "q_text_redact" -> ((s, d) =>
-      documents(s, d)
-        .withColumn("t2", concat(col("text"),
-          lit(" contact user"), col("doc_id").cast("string"),
-          lit("@example.com or call +1-555-"),
-          lpad(pmod(col("doc_id"), lit(10000)).cast("string"), 4, "0")))
-        .select(col("doc_id"),
-          TF.redactPii(col("t2")).as("redacted"),
-          regexp_count(col("t2"), lit(TF.EmailRe)).cast("long").as("n_emails"),
-          regexp_count(col("t2"), lit(TF.PhoneRe)).cast("long").as("n_phones"))
-        .orderBy("doc_id")),
-
-    // -- [NS] URL/domain profile: deterministic synthetic URL per doc, then
-    // domain extraction + frequency — the source-mix census a crawl corpus
-    // runs before sampling. Same Java∩RE2 dialect constraint. --
-    "q_url_domains" -> ((s, d) =>
-      documents(s, d)
-        .withColumn("t2", concat(col("text"),
-          lit(" see https://site"), pmod(col("doc_id"), lit(7)).cast("string"),
-          lit(".example.org/p/"), col("doc_id").cast("string")))
-        .select(regexp_extract(col("t2"), "https://([A-Za-z0-9.-]+)/", 1).as("domain"))
-        .groupBy(col("domain")).agg(count(lit(1)).as("n_docs"))
-        .orderBy("domain")),
-
-    // fingerprint invariant oracle: the 64-bit rolling hash has no SQL twin,
-    // but its defining properties do — equal texts ⇒ equal fingerprints
-    // (deterministic) and distinct texts ⇒ distinct fingerprints (64-bit
-    // collision odds ~1e-14 at corpus size), so distinct-fingerprint count
-    // == distinct-text count, which DuckDB computes exactly
-    "q_text_fingerprint" -> ((s, d) =>
-      documents(s, d)
-        .select(col("doc_id"), col("text"),
-          TF.textProfileCol(col("text")).getField("fingerprint").as("fp"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          countDistinct(col("text")).as("n_texts"),
-          countDistinct(col("fp")).as("n_fps"))),
-
-    // -- [REF R9] adaptive chunker exercised end-to-end on synthetic large docs --
-    "q_chunk_adaptive" -> ((s, d) => {
-      // inflate each seed doc to ~4 MB of barely-compressible hex via a
-      // single-pass JVM generator (the md5-expression-chain version was
-      // interpreted and 120k-element arrays dominated the whole bench), then
-      // chunk once: adaptiveChunksWithSizes reports compressed sizes from
-      // the SAME compression pass the validator ran, so the cap audit is free
-      // even docs inflate past the cap (split path), odd docs stay under it
-      // (the reference's short-circuit path) — both audited in one query
-      val inflate = udf { (t: String, docId: Long) =>
-        val n = if (docId % 2 == 0) 3400000 else 500000
-        val sb = new java.lang.StringBuilder(n + 16)
-        var h = TF.fnv1a64(t)
-        while (sb.length < n) {
-          h = TF.splitmix64(h)
-          sb.append(java.lang.Long.toHexString(h))
-        }
-        sb.toString
-      }
-      val chunkUdf = udf((t: String) => graft.operators.Chunker.adaptiveChunksWithSizes(t))
-      documents(s, d)
-        .where(col("doc_id") < 8)
-        // one doc per partition: the 8 seed rows otherwise share the single
-        // parquet split and the ~4 MB inflate+compress runs serially in one task
-        .repartitionByRange(8, col("doc_id"))
-        .withColumn("big_text", inflate(col("text"), col("doc_id")))
-        .withColumn("chunks", chunkUdf(col("big_text")))
-        .select(
-          col("doc_id"),
-          // is_split replaces the raw chunk count (zip sizes are codec-
-          // specific): even docs inflate to ~3.4 MB of hex → compressed
-          // past the 1.5 MB cap → must split; odd docs stay at ~500 KB →
-          // single chunk — a parity DuckDB expresses as doc_id % 2 = 0
-          (size(col("chunks")) > 1).as("is_split"),
-          (array_max(col("chunks._2")) <= graft.operators.Chunker.MaxDocBytes)
-            .as("all_under_cap"),
-          (array_join(col("chunks._1"), "") === col("big_text")).as("rebuilt_ok"))
-        .orderBy("doc_id")
-    }),
-
-    // -- [NS] multimodal plumbing (decode stubbed; see Multimodal) --
-    "q_mm_meta" -> ((s, d) =>
-      Multimodal.extractMeta(Multimodal.mediaFromDocuments(documents(s, d)))
-        .orderBy("media_id")),
-
-    "q_mm_decode_batch" -> ((s, d) =>
-      Multimodal.decodeMapPartitions(s, Multimodal.mediaFromDocuments(documents(s, d)))
-        .orderBy("media_id")),
-
-    // -- [NS] REAL image headers: byte-genuine PNG (signature + IHDR +
-    // CRC32-correct chunks) for even docs, baseline JPEG (SOI/APP0/SOF0)
-    // for odd, dimensions parsed back from the actual magic bytes by the
-    // marker-walking header decoder — no codec library, the header-sniff
-    // pass a 100 TB ingest runs before any pixel decode. The oracle knows
-    // the dimension arithmetic, not the bytes: a parser that cheats on the
-    // real formats can't match it. --
-    "q_mm_meta_real" -> ((s, d) => {
-      val w = (lit(32) + col("doc_id") % 96).cast("int")
-      val h = (lit(24) + col("doc_id") % 72).cast("int")
-      val media = documents(s, d).select(
-        col("doc_id").as("media_id"),
-        when(col("doc_id") % 2 === 0, Multimodal.encodePng(w, h, col("text")))
-          .otherwise(Multimodal.encodeJpeg(w, h, col("text"))).as("payload"))
-      Multimodal.decodeImages(s, media).orderBy("media_id")
-    }),
-
-    // -- [NS] REAL pixel decode end to end: a complete, spec-valid
-    // grayscale PNG per document (deflated filter-0 scanlines, real
-    // CRCs — built distributed, one Deflater per task) decoded through
-    // the JDK's ACTUAL codec (javax.imageio: inflate, defilter, raster)
-    // in the per-task-init mapPartitions plumbing. The returned checksum
-    // sums every decoded sample, so a wrong byte anywhere in the
-    // deflate/filter path would show; the oracle recomputes dimensions
-    // AND the full pixel-sum arithmetic from the deterministic formula
-    // gray(x,y) = (7x + 13y + id) mod 256. Nothing stubbed. --
-    "q_mm_decode_png" -> ((s, d) => {
-      val media = Multimodal.pngMediaFromDocuments(s, documents(s, d))
-      Multimodal.decodePngPixels(s, media).orderBy("media_id")
-    }),
-
-    // -- [NS] REAL audio SAMPLE decode end to end — the second modality
-    // closed after PNG: complete mono PCM-16 WAVs (spec-exact RIFF/fmt/
-    // data, built distributed) decoded through the JDK's ACTUAL audio
-    // codec (javax.sound.sampled.AudioSystem — header parse, format
-    // negotiation, frame walk), checksum-oracled sample by sample. The
-    // oracle recomputes the deterministic sample formula; only a true
-    // PCM decode (right byte order, right sign, right frame count) can
-    // match the sum. --
-    "q_mm_decode_wav" -> ((s, d) => {
-      val media = Multimodal.wavMediaFromDocuments(s, documents(s, d))
-      Multimodal.decodeWavSamples(s, media).orderBy("media_id")
-    }),
-
-    // -- [NS] REAL audio headers: byte-genuine PCM WAV (RIFF/WAVE +
-    // spec-complete fmt chunk — javax.sound reads it) with per-doc
-    // deterministic rate/channels/bit-depth, parsed back by a proper RIFF
-    // chunk walk. The oracle recomputes the parameter arithmetic and the
-    // dataLen/byteRate duration; the Spark side must recover it all from
-    // genuine bytes. --
-    "q_mm_audio_meta" -> ((s, d) => {
-      val sr = (lit(8000) + (col("doc_id") % 5) * 1000).cast("int")
-      val ch = (lit(1) + col("doc_id") % 2).cast("int")
-      val bits = (lit(8) + (col("doc_id") % 2) * 8).cast("int")
-      val media = documents(s, d).select(
-        col("doc_id").as("media_id"),
-        Multimodal.encodeWav(sr, ch, bits, col("text")).as("payload"))
-      Multimodal.decodeAudio(s, media).orderBy("media_id")
-    }),
-
-    // -- [NS] REAL video headers: byte-genuine minimal MP4 (ftyp brand +
-    // moov/mvhd with real timescale+duration + mdat), parsed back by an
-    // ISO-BMFF box walk (largesize/size-0 forms handled, mvhd v0 and v1).
-    // Duration arithmetic is the oracle gate. --
-    "q_mm_video_meta" -> ((s, d) => {
-      val dur = ((lit(1) + col("doc_id") % 120) * 600).cast("int")
-      val media = documents(s, d).select(
-        col("doc_id").as("media_id"),
-        Multimodal.encodeMp4(lit(600), dur, col("text")).as("payload"))
-      Multimodal.decodeVideo(s, media).orderBy("media_id")
-    }),
-
-    // -- [NS] MIXED-media ingest with format DISPATCH: a directory of
-    // genuine PNG + WAV + MP4 files (by doc_id parity) scanned through the
-    // binary-file connector, each payload routed to its parser off the
-    // leading magic bytes — the real shape of a media lake, where the
-    // scanner cannot assume one modality per directory. The oracle
-    // recomputes every modality's parameter arithmetic from doc_id. --
-    "q_mm_av_ingest" -> ((s, d) => {
-      val dir = scratchDirs.getOrElseUpdate(s"avbin:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_avbin")
-        deleteRecursivelyOnExit(tmp)
-        val out = tmp.toFile.getAbsolutePath + "/media"
-        new java.io.File(out).mkdirs()
-        val w = (lit(32) + col("doc_id") % 96).cast("int")
-        val h = (lit(24) + col("doc_id") % 72).cast("int")
-        val sr = (lit(8000) + (col("doc_id") % 5) * 1000).cast("int")
-        val ch = (lit(1) + col("doc_id") % 2).cast("int")
-        val bits = (lit(8) + (col("doc_id") % 2) * 8).cast("int")
-        val dur = ((lit(1) + col("doc_id") % 120) * 600).cast("int")
-        documents(s, d).where(col("doc_id") < 96)
-          .select(col("doc_id").as("media_id"),
-            when(col("doc_id") % 3 === 0, Multimodal.encodePng(w, h, col("text")))
-              .when(col("doc_id") % 3 === 1, Multimodal.encodeWav(sr, ch, bits, col("text")))
-              .otherwise(Multimodal.encodeMp4(lit(600), dur, col("text"))).as("payload"))
-          .collect().foreach { r =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(out, f"media_${r.getLong(0)}%05d.bin"),
-              r.getAs[Array[Byte]](1))
-          }
-        out
-      })
-      val scanned = graft.sources.Sources.readBinaryFiles(s, dir, Some("*.bin"))
-        .select(
-          regexp_extract(col("path"), "media_(\\d+)\\.bin$", 1).cast("long").as("media_id"),
-          col("content").as("payload"))
-      Multimodal.decodeMedia(s, scanned).orderBy("media_id")
-    }),
-
-    // -- [NS] END-TO-END multimodal ingest: media payloads written as raw
-    // FILES (the shape assets actually arrive in), scanned back through the
-    // binary-file connector into rows, then header-sniffed by extractMeta —
-    // the full file→row→metadata path a training pipeline runs before any
-    // expensive decode. Fixture files written once per JVM. --
-    "q_mm_ingest" -> ((s, d) => {
-      val dir = scratchDirs.getOrElseUpdate(s"mmbin:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_mmbin")
-        deleteRecursivelyOnExit(tmp)
-        val out = tmp.toFile.getAbsolutePath + "/media"
-        new java.io.File(out).mkdirs()
-        Multimodal.mediaFromDocuments(documents(s, d).where(col("doc_id") < 64))
-          .select(col("media_id"), col("payload")).collect().foreach { r =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(out, f"media_${r.getLong(0)}%05d.bin"),
-              r.getAs[Array[Byte]](1))
-          }
-        out
-      })
-      val scanned = graft.sources.Sources.readBinaryFiles(s, dir, Some("*.bin"))
-        .select(
-          regexp_extract(col("path"), "media_(\\d+)\\.bin$", 1).cast("long").as("media_id"),
-          col("content").as("payload"))
-        .withColumn("kind_id", (col("media_id") % 3).cast("int"))
-      Multimodal.extractMeta(scanned).orderBy("media_id")
-    }),
-
-    // -- [NS] END-TO-END multimodal near-dup: media FILES → binary-file
-    // scan → byteHistogram features → random-hyperplane LSH near-dup
-    // (Dedup.embeddingNearDup) — the full asset-dedup chain without the
-    // payload ever leaving the engine. Recall is made non-vacuous by
-    // planting byte-identical clones of media 0..2 as ids 1000..1002:
-    // identical payloads → identical histograms → identical LSH signature
-    // (same bucket in every band) → each planted pair is recovered
-    // deterministically at cosine 1.0. The declared rows are the planted
-    // pairs (organic histogram similarity between text payloads is
-    // corpus-dependent, so it stays out of the hash); the 48+3 fixture
-    // rows keep every LSH bucket under Dedup.MaxBucket, so full pair
-    // expansion — not star degradation — is guaranteed structurally. --
-    "q_mm_neardup" -> ((s, d) => {
-      val dir = scratchDirs.getOrElseUpdate(s"mmnd:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_mmnd")
-        deleteRecursivelyOnExit(tmp)
-        val out = tmp.toFile.getAbsolutePath + "/media"
-        new java.io.File(out).mkdirs()
-        Multimodal.mediaFromDocuments(documents(s, d).where(col("doc_id") < 48))
-          .select(col("media_id"), col("payload")).collect().foreach { r =>
-            val bytes = r.getAs[Array[Byte]](1)
-            val id = r.getLong(0)
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(out, f"media_$id%05d.bin"), bytes)
-            if (id < 3) // planted byte-identical clone
-              java.nio.file.Files.write(
-                java.nio.file.Paths.get(out, f"media_${id + 1000}%05d.bin"), bytes)
-          }
-        out
-      })
-      val feats = graft.sources.Sources.readBinaryFiles(s, dir, Some("*.bin"))
-        .select(
-          regexp_extract(col("path"), "media_(\\d+)\\.bin$", 1).cast("long").as("vec_id"),
-          Multimodal.byteHistogram(col("content")).cast("array<float>").as("embedding"))
-      Dedup.embeddingNearDup(feats, minCosine = 0.999)
-        .where(col("vec_b") === col("vec_a") + 1000)
-        .orderBy("vec_a")
-    }),
-
-    "q_dedup_keep" -> ((s, d) =>
-      Dedup.minhashDeduped(documents(s, d), minEstJaccard = 0.4,
-          verifyJaccard = Some(0.9), art = Some(dedupArtifacts(s, d)))
-        .select("doc_id", "lang").orderBy("doc_id")),
-
-    // -- [NS] REAL streaming fuzzy dedup: documents arrive as four
-    // id-ordered file slices; each micro-batch band-probes the APPEND-ONLY
-    // signature index of all earlier arrivals (LSH est >= 0.4, exact
-    // shingle verify at J >= 0.9) and appends survivors + its own
-    // signatures. Arrival order = id order (the ULID-ingest property), so
-    // the accepted set equals batch greedy keep-first dedup and shares
-    // q_dedup_keep's first-principles oracle. Fresh work dir per run: the
-    // stream + index build is what this query benches.
-    "q_stream_fuzzy_dedup" -> ((s, d) => {
-      val work = java.nio.file.Files.createTempDirectory("graft_fuzzystream")
-      deleteRecursivelyOnExit(work)
-      Dedup.minhashStreamKeep(s, docSlices(s, d), work.toFile.getAbsolutePath,
-          keepCols = Seq("doc_id", "lang"),
-          minEstJaccard = 0.4, verifyJaccard = Some(0.9))
-        .orderBy("doc_id")
-    }),
-
-    // -- [NS] STREAMING substring-census ingest: the substring tier's
-    // streaming form (fuzzy has q_stream_fuzzy_dedup, ANN has
-    // q_stream_ann_ingest). Same id-ordered slices; each micro-batch
-    // scores its docs' dup mass against the census-so-far (existence
-    // semi-join into the appended (win, n_docs) deltas — never
-    // re-aggregated) and appends its own delta. Arrival-time semantics:
-    // a window is dup iff another holder arrived in an earlier-or-same
-    // batch; the oracle replays that rule from the slice boundaries --
-    "q_stream_substring_ingest" -> ((s, d) => {
-      val work = java.nio.file.Files.createTempDirectory("graft_subststream")
-      deleteRecursivelyOnExit(work)
-      Dedup.substringStreamMass(s, docSlices(s, d), work.toFile.getAbsolutePath,
-          width = 40)
-        .orderBy("doc_id")
-    }),
-
-    // live closure run (the dashboards read its materialized result from
-    // the dedup store instead of re-running it per view)
-    "q_dedup_transitive" -> ((s, d) =>
-      Dedup.minhashDedupedTransitive(documents(s, d), minEstJaccard = 0.4,
-          verifyJaccard = Some(0.9), art = Some(dedupArtifacts(s, d)))
-        .select("doc_id", "lang").orderBy("doc_id")),
-
-    // feature-extraction stub: 16-bin L1-normalized byte histogram as the
-    // stand-in embedding; summarized per media kind. Bin 7 (bytes 0x60-0x6F
-    // = '`' + 'a'..'o') carries real text mass, and per-media fractions sum
-    // in DECIMAL so the aggregate is order-independent — both properties
-    // needed for the DuckDB oracle
-    "q_mm_features" -> ((s, d) => {
-      val media = Multimodal.mediaFromDocuments(documents(s, d))
-      media
-        .withColumn("feat", Multimodal.byteHistogram(col("payload")))
-        .groupBy(col("kind_id"))
-        .agg(count(lit(1)).as("n"),
-          sum(element_at(col("feat"), 7).cast("decimal(18,6)"))
-            .cast("double").as("bin6_mass"),
-          round(avg(size(col("feat"))), 4).as("dim"))
-        .orderBy("kind_id")
-    }),
-
-    "q_mm_frames" -> ((s, d) =>
-      Multimodal.sampleFrames(Multimodal.mediaFromDocuments(documents(s, d)))
-        .groupBy(col("media_id")).agg(count(lit(1)).as("n_frames"),
-          sum(length(col("frame"))).as("frame_bytes"))
-        .orderBy("media_id")),
-
-    // HLL++ sketch vs exact count in one pass; the declared result is the
-    // exact count plus a within-5%-relative-error flag — the approx value
-    // itself has no DuckDB twin, but the error-bound invariant does, so the
-    // sketch is oracle-gated instead of rows-only
-    "q_agg_approx_distinct" -> ((s, d) =>
-      events(s, d).groupBy(col("event_type"))
-        .agg(approx_count_distinct(col("user_id")).as("approx"),
-          countDistinct(col("user_id")).as("n_users"))
-        .select(col("event_type"), col("n_users"),
-          (abs(col("approx") - col("n_users")) <=
-            col("n_users").cast("double") * 0.05).as("within_5pct"))
-        .orderBy("event_type")),
-
-    // -- [NS] mergeable-sketch rollup — the production pattern for
-    // distinct counts at 100 TB: per-day HLL sketches (order-independent
-    // register maxima, so partial aggregation commutes) merged upward with
-    // hll_union_agg into weekly estimates WITHOUT re-touching the events.
-    // A pre-aggregated sketch table makes every future rollup
-    // sketch-table-sized; the estimate is gated within 5% of the exact
-    // recount like the other sketch queries. --
-    // -- [NS] mergeable quantile-sketch rollup (DDSketch-style custom
-    // Aggregator pair): per-(type, day) sketches merged per type must be
-    // BIT-IDENTICAL to sketching each type directly (bucket-wise adds
-    // commute), estimates within the α relative-error bound vs the exact
-    // percentile, and the sketch's total count exactly the row count. The
-    // quantile twin of q_hll_merge, with a custom sketch instead of a
-    // builtin — KLL/GK can't do this rollup deterministically (their state
-    // is arrival-order-dependent); DDSketch's isn't. --
-    "q_quantile_sketch" -> ((s, d) => {
-      import graft.functions.QuantileSketch
-      import org.apache.spark.sql.Encoders
-      val skUdaf = udaf(QuantileSketch.sketch, Encoders.scalaDouble)
-      val mergeUdaf = udaf(QuantileSketch.mergeSketch,
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]())
-      val est = udf((packed: Seq[Long], q: Double) =>
-        QuantileSketch.estimateQuantile(packed.toArray, q))
-      val total = udf((packed: Seq[Long]) => QuantileSketch.totalCount(packed.toArray))
-      def withinRel(e: Column, x: Column): Column =
-        abs(e - x) <= x * 0.05 + lit(0.01)
-      val ev = events(s, d).select(col("event_type"), to_date(col("ts")).as("day"), col("value"))
-      val direct = ev.groupBy("event_type").agg(
-        skUdaf(col("value")).as("sk"),
-        count(lit(1)).as("n"),
-        expr("percentile(value, 0.5)").as("x50"),
-        expr("percentile(value, 0.95)").as("x95"))
-      val merged = ev.groupBy(col("event_type"), col("day"))
-        .agg(skUdaf(col("value")).as("dsk"))
-        .groupBy("event_type").agg(mergeUdaf(col("dsk")).as("skm"))
-      direct.join(merged, Seq("event_type"))
-        .select(col("event_type"), col("n"),
-          (total(col("sk")) === col("n")).as("count_ok"),
-          withinRel(est(col("sk"), lit(0.5)), col("x50")).as("q50_ok"),
-          withinRel(est(col("sk"), lit(0.95)), col("x95")).as("q95_ok"),
-          (col("sk") === col("skm")).as("merged_eq"))
-        .orderBy("event_type")
-    }),
-
-    // -- [NS] trailing 7-day sliding quantiles from the SAME daily
-    // sketches: the windowed rollup touches 7 sketch rows per day (a
-    // 30×7 broadcast range join), never the raw events — the pattern that
-    // turns one fine-grained sketch pass into ANY window shape at lake
-    // scale. Exact-count oracle + α-bound vs the exact windowed
-    // percentile (itself recomputed through the same range join). --
-    "q_quantile_sliding" -> ((s, d) => {
-      import graft.functions.QuantileSketch
-      import org.apache.spark.sql.Encoders
-      val skUdaf = udaf(QuantileSketch.sketch, Encoders.scalaDouble)
-      val mergeUdaf = udaf(QuantileSketch.mergeSketch,
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]())
-      val est = udf((p: Seq[Long], q: Double) =>
-        QuantileSketch.estimateQuantile(p.toArray, q))
-      val total = udf((p: Seq[Long]) => QuantileSketch.totalCount(p.toArray))
-      val ev = events(s, d).select(to_date(col("ts")).as("day"), col("value"))
-      val daily = ev.groupBy(col("day")).agg(skUdaf(col("value")).as("dsk"))
-      val days = daily.select(col("day").as("w_day"))
-      val merged = days.join(broadcast(daily),
-          datediff(col("w_day"), col("day")).between(0, 6))
-        .groupBy(col("w_day")).agg(mergeUdaf(col("dsk")).as("wsk"))
-      // the gate must target the DISCRETE rank statistic the sketch
-      // estimates (rank ceil(q·n), estimateQuantile's convention), not the
-      // interpolated median: DDSketch guarantees |est − v_r| ≤ α·v_r for
-      // that order statistic at ANY n, while the distance from v_r to the
-      // interpolated median is a property of the data's local gaps (at
-      // n=72 a single wide gap broke the old ±5%-of-interpolated gate).
-      val exact = days.join(broadcast(ev), datediff(col("w_day"), col("day")).between(0, 6))
-        .groupBy(col("w_day"))
-        .agg(count(lit(1)).as("n"), sort_array(collect_list(col("value"))).as("vs"))
-        .select(col("w_day"), col("n"),
-          element_at(col("vs"), ceil(col("n") * 0.5).cast("int")).as("v50"))
-      merged.join(exact, Seq("w_day"))
-        .select(col("w_day").as("day"), col("n"),
-          (total(col("wsk")) === col("n")).as("count_ok"),
-          (abs(est(col("wsk"), lit(0.5)) - col("v50")) <=
-            abs(col("v50")) * 0.02 + lit(0.01)).as("q50_ok"))
-        .orderBy("day")
-    }),
-
-    // -- [NS] REAL streaming run of the SAME DDSketch: per-type bucket
-    // state accumulated across micro-batches in flatMapGroupsWithState
-    // must be BIT-IDENTICAL to the batch aggregator's sketch of the same
-    // rows (bucket adds commute with any row partitioning) — the
-    // batch/stream-equivalence property, asserted as stream_eq_batch --
-    "q_stream_quantile" -> ((s, d) => {
-      import graft.functions.QuantileSketch
-      import org.apache.spark.sql.Encoders
-      val st = graft.streaming.EventStreams.streamingQuantiles(s,
-        graft.streaming.EventStreams.readEventsNanos(s, s"$d/events.parquet"))
-      graft.streaming.EventStreams.runToMemory(st, "q_stream_quantile_mem", "update",
-        statePartitions = Some(8))
-      val total = udf((p: Seq[Long]) => QuantileSketch.totalCount(p.toArray))
-      val est = udf((p: Seq[Long], q: Double) =>
-        QuantileSketch.estimateQuantile(p.toArray, q))
-      // update mode emits one row per (micro-batch, key); the final state
-      // is the row with the largest held count (monotone accumulation)
-      val w = Window.partitionBy(col("event_type"))
-        .orderBy(total(col("sketch")).desc)
-      val last = s.table("q_stream_quantile_mem")
-        .withColumn("rn", row_number().over(w)).where(col("rn") === 1).drop("rn")
-      val skUdaf = udaf(QuantileSketch.sketch, Encoders.scalaDouble)
-      val batchSide = events(s, d).groupBy("event_type").agg(
-        skUdaf(col("value")).as("bsk"), count(lit(1)).as("n"),
-        expr("percentile(value, 0.5)").as("x50"))
-      last.join(batchSide, Seq("event_type"))
-        .select(col("event_type"), col("n"),
-          (total(col("sketch")) === col("n")).as("count_ok"),
-          (col("sketch") === col("bsk")).as("stream_eq_batch"),
-          (abs(est(col("sketch"), lit(0.5)) - col("x50")) <=
-            col("x50") * 0.05 + lit(0.01)).as("q50_ok"))
-        .orderBy("event_type")
-    }),
-
-    "q_hll_merge" -> ((s, d) => {
-      val daily = events(s, d)
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(hll_sketch_agg(col("user_id")).as("sk"))
-      val weekly = daily
-        .groupBy(date_trunc("week", col("day")).cast("date").as("week"))
-        .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("approx_users"))
-      val exact = events(s, d)
-        .groupBy(date_trunc("week", col("ts")).cast("date").as("week"))
-        .agg(countDistinct(col("user_id")).as("n_users"))
-      exact.join(weekly, Seq("week"))
-        .select(col("week"), col("n_users"),
-          (abs(col("approx_users") - col("n_users")) <=
-            col("n_users").cast("double") * 0.05).as("within_5pct"))
-        .orderBy("week")
-    }),
-
-    // -- [NS] grouping breadth: cube + grouping sets --
-    "q_cube_type_day" -> ((s, d) =>
-      events(s, d)
-        .withColumn("day", to_date(col("ts")))
-        .cube(col("event_type"), col("day"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("event_type").asc_nulls_first, col("day").asc_nulls_first)),
-
-    "q_grouping_sets" -> ((s, d) => {
-      events(s, d).withColumn("day", to_date(col("ts")))
-        .createOrReplaceTempView("events_gs")
-      s.sql("""SELECT event_type, day, count(*) AS n FROM events_gs
-               GROUP BY GROUPING SETS ((event_type), (day))
-               ORDER BY event_type ASC NULLS FIRST, day ASC NULLS FIRST""")
-    }),
-
-    "q_set_intersect" -> ((s, d) => {
-      val e = events(s, d)
-      e.where(col("event_type") === "click").select("user_id")
-        .intersect(e.where(col("event_type") === "purchase").select("user_id"))
-        .orderBy("user_id")
-    }),
-
-    // -- [NS] more join shapes: range join, dim joins over part/supplier --
-    "q_range_join" -> ((s, d) =>
-      Tables.lineitem(s, d)
-        .join(Tables.orders(s, d),
-          col("l_orderkey") === col("o_orderkey") &&
-            col("l_shipdate") >= col("o_orderdate") &&
-            col("l_shipdate") < col("o_orderdate") + expr("INTERVAL 7 DAYS"))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_fast_lines"))
-        .orderBy("o_orderpriority")),
-
-    // broadcast dim join FIRST, then aggregate: with a broadcast join the
-    // fact side never shuffles for the join, and map-side partial
-    // aggregation collapses each partition to |brands| rows before the only
-    // exchange — strictly less shuffled data than pre-aggregating by the
-    // join key (measured: pre-agg by l_partkey added a full fact shuffle
-    // and was ~40% slower). Pre-agg-by-key only pays off when the join
-    // itself would shuffle (sort-merge, non-broadcastable dim).
-    "q_brand_revenue" -> ((s, d) =>
-      Tables.lineitem(s, d)
-        .join(broadcast(Tables.part(s, d)), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"))
-        .agg(dsum(col("l_extendedprice") * (lit(1) - col("l_discount")), 4).as("revenue"),
-          count(lit(1)).as("n"))
-        .orderBy("p_brand")),
-
-    "q_supplier_revenue" -> ((s, d) =>
-      Tables.lineitem(s, d)
-        .join(broadcast(Tables.supplier(s, d)), col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("s_name"))
-        .agg(dsum(col("l_extendedprice"), 4).as("revenue"), count(lit(1)).as("n"))
-        .orderBy("s_name")),
-
-    // -- [NS] exact interpolated percentiles (hash-comparable across engines) --
-    "q_percentiles" -> ((s, d) =>
-      events(s, d).groupBy(col("event_type"))
-        .agg(
-          round(percentile(col("value"), lit(0.5)), 4).as("p50"),
-          round(percentile(col("value"), lit(0.9)), 4).as("p90"))
-        .orderBy("event_type")),
-
-    // -- [NS] observe() metrics: data-quality counters collected DURING the
-    // one pass an action already makes (`Observation` listener) — the
-    // audit-without-a-second-scan API a production pipeline attaches to
-    // every stage; the declared rows are the observed metrics themselves,
-    // and the oracle recomputes them relationally --
-    "q_observe_metrics" -> ((s, d) => {
-      import s.implicits._
-      val o = new org.apache.spark.sql.Observation()
-      events(s, d)
-        .observe(o,
-          count(lit(1)).as("n_rows"),
-          sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"),
-          count(when(col("value") > 100, 1)).as("n_high"))
-        .write.format("noop").mode("overwrite").save()
-      val m = o.get
-      Seq((m("n_rows").asInstanceOf[Long],
-        m("total_value").asInstanceOf[Double],
-        m("n_high").asInstanceOf[Long]))
-        .toDF("n_rows", "total_value", "n_high")
-    }),
-
-    // -- [NS] winsorization: per-type p05/p95 caps (exact interpolated
-    // percentiles, 4-dp-rounded before clamping so both engines compare
-    // values against identical thresholds) applied back through a
-    // broadcast join — the outlier-capping cleaning pass --
-    "q_winsorize" -> ((s, d) => {
-      val ev = events(s, d)
-      val q = ev.groupBy(col("event_type"))
-        .agg(round(percentile(col("value"), lit(0.05)), 4).as("p05"),
-             round(percentile(col("value"), lit(0.95)), 4).as("p95"))
-      ev.join(broadcast(q), "event_type")
-        .withColumn("clamped",
-          round(least(greatest(col("value"), col("p05")), col("p95")), 4))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("clamped").cast("decimal(18,4)")).cast("double")
-            .as("total_winsorized"),
-          first(col("p05")).as("p05"), first(col("p95")).as("p95"))
-        .orderBy("event_type")
-    }),
-
-    // -- [NS] fixed-width histogram binning (floor(value/width) keys) --
-    "q_histogram" -> ((s, d) =>
-      events(s, d)
-        .groupBy(floor(col("value") / 50).cast("long").as("bin"))
-        .agg(count(lit(1)).as("n"),
-          round(min(col("value")), 2).as("lo"),
-          round(max(col("value")), 2).as("hi"))
-        .orderBy("bin")),
-
-    // approximate percentile sketch vs exact, error-bound invariant (same
-    // oracle pattern as the HLL query: the sketch value has no SQL twin,
-    // its accuracy on fixed data does)
-    "q_approx_quantile" -> ((s, d) =>
-      events(s, d).groupBy(col("event_type"))
-        .agg(
-          percentile_approx(col("value"), lit(0.5), lit(1000)).as("p50_approx"),
-          percentile(col("value"), lit(0.5)).as("p50"))
-        .select(col("event_type"), round(col("p50"), 4).as("p50_exact"),
-          (abs(col("p50_approx") - col("p50")) <=
-            greatest(abs(col("p50")) * 0.05, lit(0.5))).as("approx_ok"))
-        .orderBy("event_type")),
-
-    // -- [NS] streaming-shape windows, batch twins --
-    "q_sliding_2h" -> ((s, d) =>
-      events(s, d)
-        .groupBy(window(col("ts"), "2 hours", "1 hour"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("window.start").as("w_start"), col("n"))
-        .orderBy("w_start")),
-
-    "q_session_window" -> ((s, d) =>
-      events(s, d)
-        .groupBy(session_window(col("ts"), "30 minutes").as("sw"), col("user_id"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("sw.start").as("session_start"), col("user_id"), col("n_events"))
-        .orderBy("user_id", "session_start")),
-
-    // -- [REF R2/R3/R5/R8/R9/R12-R14] the full log-store path as one query:
-    // documents become LogDocs (one user per doc), go through adaptive
-    // chunking + zip + ULID ids, and reassembly must restore every payload --
-    "q_logstore_roundtrip" -> ((s, d) => {
-      import s.implicits._
-      val docs = documents(s, d)
-        .select(col("doc_id").cast("string").as("user_id"),
-          lit("activity").as("event_type"),
-          lit("schedulechange").as("trigger"),
-          col("doc_id").as("js_time_of_creation"),
-          col("text").as("payload"))
-        .as[graft.operators.LogStore.LogDoc]
-      val rebuilt = graft.operators.LogStore.reassemble(graft.operators.LogStore.ingest(docs))
-      rebuilt.join(documents(s, d), rebuilt("user_id") === documents(s, d)("doc_id").cast("string"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("payload") === col("text"), 1L).otherwise(0L)).as("n_match"))
-    }),
-
-    // -- [REF/NS] scalar function breadth: string / datetime / math --
-    "q_string_funcs" -> ((s, d) =>
-      documents(s, d).select(
-        col("doc_id"),
-        length(col("text")).as("n"),
-        upper(substring(col("text"), 1, 10)).as("head10"),
-        regexp_replace(lower(substring(col("text"), 1, 50)), "[aeiou]", "").as("devoweled"),
-        concat_ws("|", col("lang"), col("source")).as("tag"))
-        .orderBy("doc_id")),
-
-    "q_time_funcs" -> ((s, d) =>
-      events(s, d).select(
-        col("event_id"),
-        year(col("ts")).as("y"),
-        month(col("ts")).as("m"),
-        dayofmonth(col("ts")).as("dom"),
-        hour(col("ts")).as("h"),
-        unix_millis(col("ts")).as("epoch_ms"))
-        .orderBy("event_id")),
-
-    "q_math_funcs" -> ((s, d) =>
-      events(s, d).select(
-        col("event_id"),
-        round(sqrt(abs(col("value"))), 4).as("root"),
-        ceil(col("value")).as("up"),
-        floor(col("value")).as("down"),
-        round(log1p(abs(col("value"))), 4).as("logv"))
-        .orderBy("event_id")),
-
-    "q_date_arith" -> ((s, d) =>
-      Tables.orders(s, d).select(
-        col("o_orderkey"),
-        date_add(col("o_orderdate").cast("date"), 7).as("next_week"),
-        datediff(col("o_orderdate").cast("date"), lit("1970-01-01").cast("date"))
-          .as("epoch_days"),
-        last_day(col("o_orderdate").cast("date")).as("eom"),
-        dayofweek(col("o_orderdate")).as("dow"),
-        quarter(col("o_orderdate")).as("q"))
-        .orderBy("o_orderkey")),
-
-    // -- [NS] TPC-H Q1: the canonical pricing-summary aggregate, decimal-
-    // exact sums so parallel partial aggregation matches DuckDB bit-for-bit
-    "q_tpch_q1" -> ((s, d) =>
-      Tables.lineitem(s, d)
-        .where(col("l_shipdate") <= tsLit("1998-09-02 00:00:00"))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          dsum(col("l_quantity")).as("sum_qty"),
-          dsum(col("l_extendedprice")).as("sum_base"),
-          // factors cast to decimal BEFORE multiplying: the source values
-          // are 2-decimal quantities, so each cast is exact and the decimal
-          // product is exact — whereas casting the double product hits
-          // engine-specific double→decimal rounding on .xxxx5 boundaries
-          sum(col("l_extendedprice").cast("decimal(18,2)") *
-            (lit(1) - col("l_discount").cast("decimal(18,2)")))
-            .cast("double").as("sum_disc"),
-          sum(col("l_extendedprice").cast("decimal(18,2)") *
-            (lit(1) - col("l_discount").cast("decimal(18,2)")) *
-            (lit(1) + col("l_tax").cast("decimal(18,2)")))
-            .cast("double").as("sum_charge"),
-          count(lit(1)).as("n"),
-          sum(col("l_quantity").cast("decimal(18,2)")).as("s_qty"),
-          sum(col("l_discount").cast("decimal(18,4)")).as("s_disc"))
-        .select(col("l_returnflag"), col("l_linestatus"),
-          col("sum_qty"), col("sum_base"), col("sum_disc"), col("sum_charge"),
-          round(col("s_qty").cast("double") / col("n"), 4).as("avg_qty"),
-          round(col("s_disc").cast("double") / col("n"), 4).as("avg_disc"),
-          col("n"))
-        .orderBy("l_returnflag", "l_linestatus")),
-
-    // -- [NS] TPC-H Q3 (shipping priority): the canonical 3-table
-    // fact-to-fact join. The filtered customer side broadcasts (dim-sized
-    // after the segment filter); orders⋈lineitem is the one real shuffle,
-    // keyed on orderkey; segment/date filters push to all three scans; the
-    // top-10 is a TakeOrderedAndProject, never a global sort. Revenue in
-    // exact decimal per the engine convention. --
-    "q_tpch_q3" -> ((s, d) => {
-      val cust = Tables.customer(s, d)
-        .where(col("c_mktsegment") === "BUILDING").select("c_custkey")
-      val ord = Tables.orders(s, d)
-        .where(col("o_orderdate") < tsLit("1998-06-30 00:00:00"))
-        .select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority")
-      val li = Tables.lineitem(s, d)
-        .where(col("l_shipdate") > tsLit("1998-06-30 00:00:00"))
-        .select("l_orderkey", "l_extendedprice", "l_discount")
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-        .agg(sum(col("l_extendedprice").cast("decimal(18,2)") *
-          (lit(1) - col("l_discount").cast("decimal(18,2)")))
-          .cast("double").as("revenue"))
-        .orderBy(col("revenue").desc, col("l_orderkey"))
-        .limit(10)
-    }),
-
-    // -- [NS] TPC-H Q10 (returned-item reporting): lineitem filtered to
-    // returns joins the quarter's orders, grouped per customer with the
-    // nation dim riding broadcast — top-20 by lost revenue as a
-    // TakeOrderedAndProject. The classic "who to call" operational query. --
-    "q_tpch_q10" -> ((s, d) => {
-      val ord = Tables.orders(s, d)
-        .where(col("o_orderdate") >= tsLit("1996-01-01 00:00:00") &&
-          col("o_orderdate") < tsLit("1996-04-01 00:00:00"))
-        .select("o_orderkey", "o_custkey")
-      val li = Tables.lineitem(s, d).where(col("l_returnflag") === "R")
-        .select("l_orderkey", "l_extendedprice", "l_discount")
-      val cust = Tables.customer(s, d)
-        .select("c_custkey", "c_name", "c_acctbal", "c_nationkey")
-      val nat = Tables.nation(s, d).select("n_nationkey", "n_name")
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(nat), col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("c_custkey"), col("c_name"), col("c_acctbal"), col("n_name"))
-        .agg(sum(col("l_extendedprice").cast("decimal(18,2)") *
-          (lit(1) - col("l_discount").cast("decimal(18,2)")))
-          .cast("double").as("revenue"))
-        .orderBy(col("revenue").desc, col("c_custkey"))
-        .limit(20)
-    }),
-
-    // -- [NS] TPC-H Q6 (forecast revenue change): the pure scan-bandwidth
-    // headline — every predicate pushes to the parquet scan (date range,
-    // discount band, quantity cap), the read schema is 4 columns, and the
-    // whole query is one map-side partial sum into a 1-row combine. At
-    // 100 TB this query IS the IO subsystem. --
-    "q_tpch_q6" -> ((s, d) =>
-      Tables.lineitem(s, d)
-        .where(col("l_shipdate") >= tsLit("1996-01-01 00:00:00") &&
-          col("l_shipdate") < tsLit("1997-01-01 00:00:00") &&
-          col("l_discount").between(0.02, 0.06) &&
-          col("l_quantity") < 24)
-        .agg(sum(col("l_extendedprice").cast("decimal(18,2)") *
-          col("l_discount").cast("decimal(18,2)"))
-          .cast("double").as("revenue"),
-          count(lit(1)).as("n"))),
-
-    // -- [NS] TPC-H Q14 (promo revenue): conditional aggregation over a
-    // broadcast fact⋈dim join, one shipdate month. Both legs of the ratio
-    // are decimal-exact sums; the percentage divides the two exact doubles
-    // (IEEE-deterministic) and rounds to 4 — the fact table never shuffles,
-    // part broadcasts, the date range prunes row groups at the scan. --
-    "q_tpch_q14" -> ((s, d) => {
-      val li = Tables.lineitem(s, d)
-        .where(col("l_shipdate") >= tsLit("1996-03-01 00:00:00") &&
-          col("l_shipdate") < tsLit("1996-04-01 00:00:00"))
-        .select("l_partkey", "l_extendedprice", "l_discount")
-      val rev = col("l_extendedprice").cast("decimal(18,2)") *
-        (lit(1) - col("l_discount").cast("decimal(18,2)"))
-      li.join(broadcast(Tables.part(s, d).select("p_partkey", "p_type")),
-          col("l_partkey") === col("p_partkey"))
-        .agg(
-          sum(when(col("p_type") === "PROMO", rev).otherwise(lit(0)))
-            .cast("double").as("promo_revenue"),
-          sum(rev).cast("double").as("total_revenue"))
-        .withColumn("promo_pct",
-          round(lit(100.0) * col("promo_revenue") / col("total_revenue"), 4))
-    }),
-
-    // -- [NS] TPC-H Q18 (large-volume customers): the big-aggregate-feeds-
-    // big-join shape. sum(l_quantity) per order is ONE hash aggregate with
-    // map-side partials; the >250 HAVING filter drops ~99% of orders BEFORE
-    // any join, so the surviving keys join orders (shuffle on orderkey) and
-    // broadcast-join customer. Top-k is TakeOrderedAndProject, never a full
-    // sort. --
-    "q_tpch_q18" -> ((s, d) => {
-      val big = Tables.lineitem(s, d)
-        .groupBy(col("l_orderkey"))
-        .agg(dsum(col("l_quantity")).as("sum_qty"))
-        .where(col("sum_qty") > 250.0)
-      big.join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(Tables.customer(s, d).select("c_custkey", "c_name")),
-          col("o_custkey") === col("c_custkey"))
-        .select(col("c_name"), col("c_custkey"), col("o_orderkey"),
-          col("o_orderdate"), col("o_totalprice"), col("sum_qty"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .limit(100)
-    }),
-
-    // -- [NS] TPC-H Q19 (discounted revenue, disjunctive predicates): the
-    // OR-of-conjunctions join. The equi-key (l_partkey = p_partkey) still
-    // drives a broadcast HASH join — the three brand/size/quantity
-    // conjunctions evaluate as a residual filter on matches, not a nested
-    // loop; per-side prunable conjuncts (quantity band, size band) are
-    // pushed below the join by Catalyst. --
-    "q_tpch_q19" -> ((s, d) => {
-      val li = Tables.lineitem(s, d)
-        .select("l_partkey", "l_quantity", "l_extendedprice", "l_discount")
-      val pt = Tables.part(s, d).select("p_partkey", "p_brand", "p_size")
-      val clause = (col("p_brand") === "Brand#12" &&
-          col("p_size").between(1, 10) && col("l_quantity").between(1, 15)) ||
-        (col("p_brand") === "Brand#23" &&
-          col("p_size").between(5, 20) && col("l_quantity").between(10, 25)) ||
-        (col("p_brand") === "Brand#15" &&
-          col("p_size").between(20, 35) && col("l_quantity").between(25, 40))
-      li.join(broadcast(pt), col("l_partkey") === col("p_partkey") && clause)
-        .agg(sum(col("l_extendedprice").cast("decimal(18,2)") *
-          (lit(1) - col("l_discount").cast("decimal(18,2)")))
-          .cast("double").as("revenue"),
-          count(lit(1)).as("n"))
-    }),
-
-    // -- [NS] TPC-H Q5 (local-supplier volume): the 6-table join. The two
-    // genuinely big sides (lineitem, orders) meet in ONE shuffle on
-    // orderkey; customer/supplier/nation/region are all dim-sized and
-    // broadcast, including the c_nationkey = s_nationkey local-supplier
-    // equality folded into the supplier join. Region filter prunes before
-    // the nation broadcast. --
-    "q_tpch_q5" -> ((s, d) => {
-      val cust = Tables.customer(s, d).select("c_custkey", "c_nationkey")
-      val ord = Tables.orders(s, d)
-        .where(col("o_orderdate") >= tsLit("1996-01-01 00:00:00") &&
-          col("o_orderdate") < tsLit("1997-01-01 00:00:00"))
-        .select("o_orderkey", "o_custkey")
-      val li = Tables.lineitem(s, d)
-        .select("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount")
-      val supp = Tables.supplier(s, d).select("s_suppkey", "s_nationkey")
-      val nat = Tables.nation(s, d).select("n_nationkey", "n_name", "n_regionkey")
-      val reg = Tables.region(s, d).where(col("r_name") === "ASIA")
-        .select("r_regionkey")
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(supp), col("l_suppkey") === col("s_suppkey") &&
-          col("c_nationkey") === col("s_nationkey"))
-        .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(reg), col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("n_name"))
-        .agg(sum(col("l_extendedprice").cast("decimal(18,2)") *
-          (lit(1) - col("l_discount").cast("decimal(18,2)")))
-          .cast("double").as("revenue"),
-          count(lit(1)).as("n"))
-        .orderBy(col("revenue").desc, col("n_name"))
-    }),
-
-    // -- [NS] TPC-H Q2 (min-cost supplier; schema-adapted: the generator
-    // has no partsupp, so the offer book is the distinct (part, supplier)
-    // pairs observed in lineitem, unit cost = min(l_extendedprice /
-    // l_quantity)). The groupwise-min-then-join-back shape survives: both
-    // aggs are map-side-partial hash aggs keyed on partkey (the second
-    // reuses the first's partitioning — no extra shuffle), the join back
-    // is on (partkey, min), and part/supplier/nation/region all broadcast.
-    // IEEE division + exact min selection make the double-equality join
-    // engine-portable: both engines pick bits from the same input set. --
-    "q_tpch_q2" -> ((s, d) => {
-      val offer = Tables.lineitem(s, d)
-        .groupBy(col("l_partkey"), col("l_suppkey"))
-        .agg(min(col("l_extendedprice") / col("l_quantity")).as("ucost"))
-      val best = offer.groupBy(col("l_partkey").as("b_partkey"))
-        .agg(min(col("ucost")).as("min_cost"))
-      val pt = Tables.part(s, d)
-        .where(col("p_type") === "LARGE" && col("p_size").between(10, 20))
-        .select("p_partkey", "p_size")
-      val nat = Tables.nation(s, d).select("n_nationkey", "n_name", "n_regionkey")
-      val reg = Tables.region(s, d).where(col("r_name") === "EUROPE")
-        .select("r_regionkey")
-      offer
-        .join(best, col("l_partkey") === col("b_partkey") &&
-          col("ucost") === col("min_cost"))
-        .join(broadcast(pt), col("l_partkey") === col("p_partkey"))
-        .join(broadcast(Tables.supplier(s, d)),
-          col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(reg), col("n_regionkey") === col("r_regionkey"))
-        .select(col("s_acctbal"), col("s_name"), col("n_name"),
-          col("p_partkey"), col("p_size"),
-          round(col("min_cost"), 4).as("unit_cost"))
-        .orderBy(col("s_acctbal").desc, col("n_name"), col("s_name"),
-          col("p_partkey"))
-        .limit(100)
-    }),
-
-    // -- [NS] TPC-H Q4 (order-priority checking; schema-adapted: no
-    // commit/receipt dates, so "late" = a lineitem shipped more than 60
-    // days after the order date). The EXISTS compiles to ONE left-semi
-    // hash join on orderkey with the date comparison as a residual; the
-    // quarter filter on orders is pushed to the scan. No per-order
-    // subquery re-execution survives. --
-    "q_tpch_q4" -> ((s, d) => {
-      val ord = Tables.orders(s, d)
-        .where(col("o_orderdate") >= tsLit("1996-01-01 00:00:00") &&
-          col("o_orderdate") < tsLit("1996-07-01 00:00:00"))
-      val li = Tables.lineitem(s, d).select("l_orderkey", "l_shipdate")
-      ord.join(li, col("o_orderkey") === col("l_orderkey") &&
-          col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAYS"),
-          "left_semi")
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("order_count"))
-        .orderBy("o_orderpriority")
-    }),
-
-    // -- [NS] TPC-H Q7 (volume shipping between two nations): lineitem
-    // and orders meet in ONE shuffle on orderkey; customer, supplier, and
-    // both nation legs broadcast. The nation legs are pre-filtered to the
-    // two nations of interest — at 100 TB that shrinks the broadcast
-    // matches before the pair-disjunction residual runs. --
-    "q_tpch_q7" -> ((s, d) => {
-      val twoNations = Seq("NATION_1", "NATION_2")
-      val li = Tables.lineitem(s, d)
-        .where(col("l_shipdate") >= tsLit("1996-01-01 00:00:00") &&
-          col("l_shipdate") < tsLit("1998-01-01 00:00:00"))
-        .select("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount",
-          "l_shipdate")
-      val n1 = Tables.nation(s, d).where(col("n_name").isin(twoNations: _*))
-        .select(col("n_nationkey").as("s_nkey"), col("n_name").as("supp_nation"))
-      val n2 = Tables.nation(s, d).where(col("n_name").isin(twoNations: _*))
-        .select(col("n_nationkey").as("c_nkey"), col("n_name").as("cust_nation"))
-      li.join(Tables.orders(s, d).select("o_orderkey", "o_custkey"),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(Tables.customer(s, d).select("c_custkey", "c_nationkey")),
-          col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.supplier(s, d).select("s_suppkey", "s_nationkey")),
-          col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(n1), col("s_nationkey") === col("s_nkey"))
-        .join(broadcast(n2), col("c_nationkey") === col("c_nkey"))
-        .where((col("supp_nation") === "NATION_1" && col("cust_nation") === "NATION_2") ||
-          (col("supp_nation") === "NATION_2" && col("cust_nation") === "NATION_1"))
-        .groupBy(col("supp_nation"), col("cust_nation"),
-          year(col("l_shipdate")).as("l_year"))
-        .agg(sum(col("l_extendedprice").cast("decimal(18,2)") *
-          (lit(1) - col("l_discount").cast("decimal(18,2)")))
-          .cast("double").as("revenue"),
-          count(lit(1)).as("n"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
-    }),
-
-    // -- [NS] TPC-H Q8 (national market share): the 7-table join with a
-    // conditional aggregate. Only li⋈orders shuffles; part (type-filtered),
-    // customer, supplier, both nation legs, and region all broadcast. Both
-    // ratio legs are exact decimal sums out of the SAME partial aggregate;
-    // the division happens once per year-group on identical bits. --
-    "q_tpch_q8" -> ((s, d) => {
-      val vol = col("l_extendedprice").cast("decimal(18,2)") *
-        (lit(1) - col("l_discount").cast("decimal(18,2)"))
-      val pt = Tables.part(s, d).where(col("p_type") === "STANDARD")
-        .select("p_partkey")
-      val natCust = Tables.nation(s, d)
-        .select(col("n_nationkey").as("cn_key"), col("n_regionkey"))
-      val natSupp = Tables.nation(s, d)
-        .select(col("n_nationkey").as("sn_key"), col("n_name").as("supp_nation"))
-      val reg = Tables.region(s, d).where(col("r_name") === "ASIA")
-        .select("r_regionkey")
-      Tables.lineitem(s, d)
-        .select("l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice", "l_discount")
-        .join(broadcast(pt), col("l_partkey") === col("p_partkey"))
-        .join(Tables.orders(s, d)
-          .where(col("o_orderdate") >= tsLit("1996-01-01 00:00:00") &&
-            col("o_orderdate") < tsLit("1998-01-01 00:00:00"))
-          .select("o_orderkey", "o_custkey", "o_orderdate"),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(Tables.customer(s, d).select("c_custkey", "c_nationkey")),
-          col("o_custkey") === col("c_custkey"))
-        .join(broadcast(natCust), col("c_nationkey") === col("cn_key"))
-        .join(broadcast(reg), col("n_regionkey") === col("r_regionkey"))
-        .join(broadcast(Tables.supplier(s, d).select("s_suppkey", "s_nationkey")),
-          col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(natSupp), col("s_nationkey") === col("sn_key"))
-        .groupBy(year(col("o_orderdate")).as("o_year"))
-        .agg(
-          sum(when(col("supp_nation") === "NATION_5", vol).otherwise(lit(0))).as("nat_dec"),
-          sum(vol).as("tot_dec"))
-        .select(col("o_year"),
-          round(col("nat_dec").cast("double") / col("tot_dec").cast("double"), 4)
-            .as("mkt_share"),
-          col("tot_dec").cast("double").as("total_volume"))
-        .orderBy("o_year")
-    }),
-
-    // -- [NS] TPC-H Q9 (product-type profit; schema-adapted cost basis:
-    // p_retailprice * l_quantity stands in for the absent partsupp
-    // supplycost). Amount is exact-decimal end to end; grouped by supplier
-    // nation × ship year. Part and supplier/nation broadcast; the fact
-    // table never shuffles before its partial aggregate. --
-    "q_tpch_q9" -> ((s, d) => {
-      val amount = col("l_extendedprice").cast("decimal(18,2)") *
-        (lit(1) - col("l_discount").cast("decimal(18,2)")) -
-        col("p_retailprice").cast("decimal(18,2)") *
-        col("l_quantity").cast("decimal(18,2)")
-      val pt = Tables.part(s, d).where(col("p_type") === "PROMO")
-        .select("p_partkey", "p_retailprice")
-      Tables.lineitem(s, d)
-        .select("l_partkey", "l_suppkey", "l_quantity", "l_extendedprice",
-          "l_discount", "l_shipdate")
-        .join(broadcast(pt), col("l_partkey") === col("p_partkey"))
-        .join(broadcast(Tables.supplier(s, d).select("s_suppkey", "s_nationkey")),
-          col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(Tables.nation(s, d).select("n_nationkey", "n_name")),
-          col("s_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name").as("nation"), year(col("l_shipdate")).as("o_year"))
-        .agg(sum(amount).cast("double").as("profit"))
-        .orderBy(col("nation"), col("o_year").desc)
-    }),
-
-    // -- [NS] TPC-H Q11 (important stock; schema-adapted: "stock value" =
-    // revenue per part from suppliers in nations 0-2). The
-    // fraction-of-total HAVING is the scalar-aggregate shape: the total is
-    // ONE extra reduce over the already-aggregated per-part table (tiny),
-    // broadcast back as a 1-row cross join. value*1000 > total compares
-    // exact decimals — no float-epsilon dependence. --
-    "q_tpch_q11" -> ((s, d) => {
-      val supp = Tables.supplier(s, d)
-        .where(col("s_nationkey").isin(0, 1, 2)).select("s_suppkey")
-      val perPart = Tables.lineitem(s, d)
-        .select("l_partkey", "l_suppkey", "l_extendedprice", "l_discount")
-        .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"), "left_semi")
-        .groupBy(col("l_partkey").as("partkey"))
-        .agg(sum(col("l_extendedprice").cast("decimal(18,2)") *
-          (lit(1) - col("l_discount").cast("decimal(18,2)"))).as("value_dec"))
-      val total = perPart.agg(sum(col("value_dec")).as("total_dec"))
-      perPart.crossJoin(broadcast(total))
-        .where(col("value_dec") * 1000 > col("total_dec"))
-        .select(col("partkey"), col("value_dec").cast("double").as("part_value"))
-        .orderBy(col("part_value").desc, col("partkey"))
-    }),
-
-    // -- [NS] TPC-H Q12 (ship-mode service levels; schema-adapted: the
-    // generator has no l_shipmode, so the mode is a deterministic function
-    // of l_linenumber). One shuffle join on orderkey; both priority
-    // counters come out of the same partial aggregate. --
-    "q_tpch_q12" -> ((s, d) => {
-      val mode = when(col("l_linenumber") % 3 === 0, "AIR")
-        .when(col("l_linenumber") % 3 === 1, "SHIP").otherwise("TRUCK")
-      val hi = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-      Tables.lineitem(s, d)
-        .where(col("l_shipdate") >= tsLit("1996-01-01 00:00:00") &&
-          col("l_shipdate") < tsLit("1997-01-01 00:00:00"))
-        .select(col("l_orderkey"), mode.as("ship_mode"))
-        .join(Tables.orders(s, d).select("o_orderkey", "o_orderpriority"),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("ship_mode"))
-        .agg(sum(when(hi, 1L).otherwise(0L)).as("high_line_count"),
-          sum(when(hi, 0L).otherwise(1L)).as("low_line_count"))
-        .orderBy("ship_mode")
-    }),
-
-    // -- [NS] TPC-H Q13 (customer order-count distribution): left outer
-    // join with an ON-clause filter (the o_comment stand-in is an
-    // order-priority exclusion), then two stacked aggregations. The
-    // distribution agg runs over a customer-count-sized input — the second
-    // shuffle is tiny by construction. --
-    "q_tpch_q13" -> ((s, d) => {
-      val perCust = Tables.customer(s, d).select("c_custkey")
-        .join(Tables.orders(s, d).select("o_orderkey", "o_custkey", "o_orderpriority"),
-          col("c_custkey") === col("o_custkey") &&
-            col("o_orderpriority") =!= "5-LOW",
-          "left_outer")
-        .groupBy(col("c_custkey"))
-        .agg(count(col("o_orderkey")).as("c_count"))
-      perCust.groupBy(col("c_count"))
-        .agg(count(lit(1)).as("custdist"))
-        .orderBy(col("custdist").desc, col("c_count").desc)
-    }),
-
-    // -- [NS] TPC-H Q15 (top supplier): the revenue view + max scalar
-    // subquery. Revenue stays exact decimal through the max comparison, so
-    // the equality join back is bit-safe; the 1-row max broadcasts. --
-    "q_tpch_q15" -> ((s, d) => {
-      val rev = Tables.lineitem(s, d)
-        .where(col("l_shipdate") >= tsLit("1996-01-01 00:00:00") &&
-          col("l_shipdate") < tsLit("1996-04-01 00:00:00"))
-        .groupBy(col("l_suppkey"))
-        .agg(sum(col("l_extendedprice").cast("decimal(18,2)") *
-          (lit(1) - col("l_discount").cast("decimal(18,2)"))).as("rev_dec"))
-      val top = rev.agg(max(col("rev_dec")).as("max_dec"))
-      rev.crossJoin(broadcast(top))
-        .where(col("rev_dec") === col("max_dec"))
-        .join(broadcast(Tables.supplier(s, d).select("s_suppkey", "s_name")),
-          col("l_suppkey") === col("s_suppkey"))
-        .select(col("s_suppkey"), col("s_name"),
-          col("rev_dec").cast("double").as("total_revenue"))
-        .orderBy("s_suppkey")
-    }),
-
-    // -- [NS] TPC-H Q16 (supplier counting; schema-adapted: offer book =
-    // distinct lineitem pairs; the complaint-comment exclusion becomes a
-    // negative-acctbal NOT IN, compiled as a broadcast anti join).
-    // count(DISTINCT) over pre-deduped pairs — the expensive distinct is
-    // map-side combined before its one shuffle. --
-    "q_tpch_q16" -> ((s, d) => {
-      val offer = Tables.lineitem(s, d)
-        .select(col("l_partkey"), col("l_suppkey")).distinct()
-      val pt = Tables.part(s, d)
-        .where(col("p_size").isin(1, 4, 9, 14, 19, 23, 36, 45) &&
-          col("p_brand") =!= "Brand#5" && col("p_type") =!= "PROMO")
-        .select("p_partkey", "p_brand", "p_type", "p_size")
-      val complained = Tables.supplier(s, d).where(col("s_acctbal") < 0)
-        .select("s_suppkey")
-      offer.join(broadcast(pt), col("l_partkey") === col("p_partkey"))
-        .join(broadcast(complained), col("l_suppkey") === col("s_suppkey"),
-          "left_anti")
-        .groupBy(col("p_brand"), col("p_type"), col("p_size"))
-        .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
-        .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_type"),
-          col("p_size"))
-    }),
-
-    // -- [NS] TPC-H Q17 (small-quantity-order revenue): the correlated
-    // per-part avg de-correlated into one grouped aggregate joined back on
-    // partkey. The avg is exact-decimal-sum / count so both engines divide
-    // identical bits. The per-part table is part-cardinality-sized — at
-    // lake scale it hash-joins on the same partkey the aggregate produced,
-    // no extra exchange. --
-    "q_tpch_q17" -> ((s, d) => {
-      val perPart = Tables.lineitem(s, d)
-        .groupBy(col("l_partkey").as("pa_key"))
-        .agg((sum(col("l_quantity").cast("decimal(18,2)")).cast("double") /
-          count(lit(1))).as("avg_qty"))
-      val pt = Tables.part(s, d)
-        .where(col("p_brand") === "Brand#3" && col("p_size") < 10)
-        .select("p_partkey")
-      Tables.lineitem(s, d)
-        .select("l_partkey", "l_quantity", "l_extendedprice")
-        .join(broadcast(pt), col("l_partkey") === col("p_partkey"))
-        .join(perPart, col("l_partkey") === col("pa_key"))
-        .where(col("l_quantity") < lit(0.5) * col("avg_qty"))
-        .agg(round(sum(col("l_extendedprice").cast("decimal(18,2)"))
-          .cast("double") / 7.0, 4).as("avg_yearly"),
-          count(lit(1)).as("n"))
-    }),
-
-    // -- [NS] TPC-H Q20 (potential part promotion; schema-adapted:
-    // suppliers who shipped >50 units of any PROMO part in 1996). The
-    // nested-IN chain becomes two stacked semi joins: part filter semi
-    // into the per-(supplier, part) shipped aggregate, the surviving
-    // supplier keys semi into supplier. Nothing bigger than the aggregate
-    // ever shuffles. --
-    "q_tpch_q20" -> ((s, d) => {
-      val promo = Tables.part(s, d).where(col("p_type") === "PROMO")
-        .select("p_partkey")
-      val shipped = Tables.lineitem(s, d)
-        .where(col("l_shipdate") >= tsLit("1996-01-01 00:00:00") &&
-          col("l_shipdate") < tsLit("1997-01-01 00:00:00"))
-        .join(broadcast(promo), col("l_partkey") === col("p_partkey"), "left_semi")
-        .groupBy(col("l_suppkey"), col("l_partkey"))
-        .agg(sum(col("l_quantity").cast("decimal(18,2)")).as("qty_dec"))
-        .where(col("qty_dec") > 50)
-        .select("l_suppkey").distinct()
-      Tables.supplier(s, d).where(col("s_nationkey") < 13)
-        .join(broadcast(shipped), col("s_suppkey") === col("l_suppkey"),
-          "left_semi")
-        .select("s_suppkey", "s_name", "s_nationkey")
-        .orderBy("s_suppkey")
-    }),
-
-    // -- [NS] TPC-H Q21 (suppliers who kept orders waiting; schema-
-    // adapted: "late" = shipped >90 days after the order date of a
-    // finished order; a waiting supplier is late on a multi-supplier order
-    // where NO other supplier was late). The exists / not-exists pair
-    // de-correlates into per-order distinct counts joined back — one
-    // shuffle on orderkey, no per-row subquery. The annotated join is
-    // persisted because both the per-order profile and the final filter
-    // read it. --
-    "q_tpch_q21" -> ((s, d) => {
-      val ann = Tables.lineitem(s, d)
-        .select("l_orderkey", "l_suppkey", "l_shipdate")
-        .join(Tables.orders(s, d).where(col("o_orderstatus") === "F")
-          .select("o_orderkey", "o_orderdate"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("l_orderkey"), col("l_suppkey"),
-          (col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 90 DAYS"))
-            .as("late"))
-        .persist()
-      val perOrder = ann.groupBy(col("l_orderkey").as("po_key"))
-        .agg(countDistinct(col("l_suppkey")).as("n_supp"),
-          countDistinct(when(col("late"), col("l_suppkey"))).as("n_late"))
-      ann.where(col("late"))
-        .join(perOrder, col("l_orderkey") === col("po_key"))
-        .where(col("n_supp") >= 2 && col("n_late") === 1)
-        .join(broadcast(Tables.supplier(s, d).where(col("s_nationkey") < 5)
-          .select("s_suppkey", "s_name")),
-          col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("s_name"))
-        .agg(count(lit(1)).as("numwait"))
-        .orderBy(col("numwait").desc, col("s_name"))
-        .limit(100)
-    }),
-
-    // -- [NS] TPC-H Q22 (global sales opportunity; schema-adapted: country
-    // code = c_nationkey band; every generated customer has at least one
-    // order, so the anti join is "no orders since 2000"). The avg-balance
-    // bar is a 1-row scalar aggregate broadcast as a cross join; the anti
-    // join hashes on custkey. --
-    "q_tpch_q22" -> ((s, d) => {
-      val band = Tables.customer(s, d)
-        .where(col("c_nationkey").isin(5, 10, 15, 20, 24))
-        .select("c_custkey", "c_nationkey", "c_acctbal")
-      val bar = band.where(col("c_acctbal") > 0)
-        .agg((sum(col("c_acctbal").cast("decimal(18,2)")).cast("double") /
-          count(lit(1))).as("avg_bal"))
-      val recent = Tables.orders(s, d)
-        .where(col("o_orderdate") >= tsLit("2000-01-01 00:00:00"))
-        .select("o_custkey")
-      band.crossJoin(broadcast(bar))
-        .where(col("c_acctbal") > col("avg_bal"))
-        .join(recent, col("c_custkey") === col("o_custkey"), "left_anti")
-        .groupBy(col("c_nationkey").as("cntrycode"))
-        .agg(count(lit(1)).as("numcust"),
-          sum(col("c_acctbal").cast("decimal(18,2)")).cast("double")
-            .as("totacctbal"))
-        .orderBy("cntrycode")
-    }),
-
-    // -- [NS] behavioral sequence mining: per-user event-type bigram
-    // transition matrix (Markov transitions). The lag window partitions by
-    // user — state stays user-local, users process in parallel — and the
-    // transition table is event-type² sized, so the per-row probability
-    // window runs over a dimension-sized aggregate, not the fact table. --
-    "q_event_transitions" -> ((s, d) => {
-      val byUser = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val seq = events(s, d)
-        .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
-        .withColumn("prev", lag(col("event_type"), 1).over(byUser))
-        .where(col("prev").isNotNull)
-      seq.groupBy(col("prev"), col("event_type").as("cur"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("p", round(col("n").cast("double") /
-          sum(col("n")).over(Window.partitionBy(col("prev"))).cast("double"), 6))
-        .orderBy("prev", "cur")
-    }),
-
-    // -- [NS] ANALYZE-style table statistics: exact per-column profile
-    // (row count, ndv, null count, min/max) of 4 orders columns in ONE
-    // aggregate pass, unpivoted to a row per column — the stats-collection
-    // scan that feeds CBO (StatsSpec proves the planner flips an un-hinted
-    // join to broadcast once these stats exist). The exact-ndv form is the
-    // oracle gate; Stats.columnStatsApprox is the one-pass HLL form a
-    // 100 TB profile job runs. --
-    "q_table_stats" -> ((s, d) =>
-      graft.operators.Stats.columnStats(Tables.orders(s, d),
-        Seq("o_custkey", "o_orderkey", "o_orderpriority", "o_orderstatus"))),
-
-    // -- [NS] the 100 TB form of the profile: approx_count_distinct (HLL)
-    // ndv in ONE map-side-combinable pass, no per-distinct shuffle
-    // expansion. HLL estimates are engine-specific, so the oracle gates
-    // the INVARIANT: every other stat is exact, and the HLL ndv must land
-    // within 10% of the exact ndv (Spark's default rsd is 5% = one sigma,
-    // so a 1-sigma bound is NOT deterministic-safe — o_orderkey at
-    // sf0.001 misses it; 2 sigma holds across the corpus — same bound
-    // StatsSpec gates). The DuckDB twin recomputes the exact stats and
-    // emits the same boolean. --
-    "q_table_stats_approx" -> ((s, d) =>
-      graft.operators.Stats.columnStatsApprox(Tables.orders(s, d),
-          Seq("o_custkey", "o_orderkey", "o_orderpriority", "o_orderstatus"))
-        .join(graft.operators.Stats.columnStats(Tables.orders(s, d),
-            Seq("o_custkey", "o_orderkey", "o_orderpriority", "o_orderstatus"))
-          .select(col("column"), col("ndv").as("ndv_exact")), Seq("column"))
-        .select(col("column"), col("n_rows"), col("n_nulls"),
-          col("min_value"), col("max_value"),
-          (abs(col("ndv") - col("ndv_exact")).cast("double") /
-            greatest(col("ndv_exact"), lit(1L)) <= 0.10).as("ndv_ok"))
-        .orderBy("column")),
-
-    // -- [NS] grouped z-score anomaly detection: per-type mean/std from
-    // decimal-exact moments (n, Σx, Σx²) so the thresholds are
-    // bit-identical cross-engine; the 5-row stats table broadcasts back
-    // and the outlier filter is a map-side residual on the scan. --
-    "q_zscore_outliers" -> ((s, d) => {
-      val m = events(s, d).groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(28,6)")).cast("double").as("sx"),
-          sum((col("value") * col("value")).cast("decimal(28,6)"))
-            .cast("double").as("sxx"))
-      val st = m.select(col("event_type"),
-        (col("sx") / col("n")).as("mu"),
-        sqrt(greatest(col("sxx") / col("n") -
-          (col("sx") / col("n")) * (col("sx") / col("n")), lit(0.0))).as("sigma"))
-      events(s, d).join(broadcast(st), Seq("event_type"))
-        .where(col("sigma") > 0 && abs(col("value") - col("mu")) > lit(3) * col("sigma"))
-        .select(col("event_id"), col("event_type"),
-          round(col("value"), 4).as("v"),
-          round((col("value") - col("mu")) / col("sigma"), 4).as("z"))
-        .orderBy("event_id")
-    }),
-
-    // -- [NS] graph analytics: fixed-iteration PageRank over the exact-
-    // Jaccard similarity graph (Graph.pageRankSim) — template hubs
-    // accumulate rank, organic docs stay at the uniform floor. Edges from
-    // the prefix-filtered AllPairs join; per-iteration 12-dp + decimal-sum
-    // convention makes all 5 iterations bit-identical cross-engine. --
-    "q_pagerank_sim" -> ((s, d) =>
-      graft.operators.Graph.pageRankSim(documents(s, d),
-        pairsOpt = Some(dedupStore(s, d).edges07))),
-
-    // -- [NS] degree-oriented triangle counting over the same similarity
-    // graph — local clustering / duplicate-clique signal; O(m^1.5) wedge
-    // bound from the orientation, three hash joins, no iteration --
-    "q_triangles" -> ((s, d) =>
-      graft.operators.Graph.triangleCounts(documents(s, d),
-        pairsOpt = Some(dedupStore(s, d).edges07))),
-
-    // -- [NS] C4-style boilerplate strip: segments repeated across >= 3
-    // documents removed corpus-wide, survivors reassembled in order
-    // (Corpus.boilerplateStrip). Exact value oracle via the DuckDB twin. --
-    "q_boilerplate_strip" -> ((s, d) =>
-      graft.operators.Corpus.boilerplateStrip(documents(s, d), width = 4, minDf = 3)),
-
-    // -- [NS] Count-Min-Sketch frequency audit: the sketch is built
-    // DISTRIBUTED with a fixed seed (only the kilobyte-sized sketch
-    // reaches the driver — bounded regardless of row count), then each
-    // type's estimate is checked against the CMS guarantee: exact <= est
-    // <= exact + ceil(eps·N). Like the HLL query, the sketch itself has
-    // no DuckDB twin but the error-bound invariant does. --
-    "q_cms_freq" -> ((s, d) => {
-      val ev = events(s, d)
-      val cms = ev.stat.countMinSketch(col("event_type"),
-        eps = 0.001, confidence = 0.99, seed = 42)
-      val est = udf((t: String) => cms.estimateCount(t))
-      val total = ev.agg(count(lit(1)).as("n_total"))
-      ev.groupBy(col("event_type")).agg(count(lit(1)).as("n_events"))
-        .crossJoin(broadcast(total))
-        .select(col("event_type"), col("n_events"),
-          (est(col("event_type")) >= col("n_events") &&
-            est(col("event_type")) <= col("n_events") +
-              ceil(lit(0.001) * col("n_total")).cast("long")).as("within_eps"))
-        .orderBy("event_type")
-    }),
-
-    // -- [NS] full-outer join surface: per-user high-value purchase vs
-    // error profiles, users present on either side. USING-style key
-    // coalescing; both sides are pre-aggregated (user-cardinality-sized)
-    // before the join, so the full-outer shuffle moves aggregates, not
-    // events. --
-    "q_join_full" -> ((s, d) => {
-      val purch = events(s, d)
-        .where(col("event_type") === "purchase" && col("value") > 150)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_purch"),
-          sum(col("value").cast("decimal(28,6)")).cast("double").as("purch_val"))
-      val errs = events(s, d)
-        .where(col("event_type") === "error" && col("value") > 150)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_err"))
-      purch.join(errs, Seq("user_id"), "full_outer")
-        .select(col("user_id"),
-          coalesce(col("n_purch"), lit(0L)).as("n_purch"),
-          round(coalesce(col("purch_val"), lit(0.0)), 4).as("purch_val"),
-          coalesce(col("n_err"), lit(0L)).as("n_err"))
-        .orderBy("user_id")
-    }),
-
-    // -- [NS] exponential rolling smoother (EWMA, 8-term lag form): the
-    // recursion is unrolled to 8 explicit lag terms with 2^-k weights —
-    // every weight is an exact binary double and both engines sum the
-    // terms in the same written order, so the result is bit-deterministic
-    // with no decimal detour. Per-user window: state stays user-local. --
-    "q_ewma_smooth" -> ((s, d) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      val lags = (0 until 8).map { k =>
-        if (k == 0) col("value") else lag(col("value"), k).over(w)
-      }
-      val num = lags.zipWithIndex.map { case (lg, k) =>
-        when(lg.isNotNull, lg * lit(math.pow(0.5, k))).otherwise(lit(0.0))
-      }.reduce(_ + _)
-      val den = lags.zipWithIndex.map { case (lg, k) =>
-        when(lg.isNotNull, lit(math.pow(0.5, k))).otherwise(lit(0.0))
-      }.reduce(_ + _)
-      events(s, d)
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-        .withColumn("ewma", round(num / den, 6))
-        .select(col("event_id"), col("user_id"),
-          round(col("value"), 4).as("v"), col("ewma"))
-        .orderBy("event_id")
-    }),
-
-    // -- [NS] grouped OLS trend (regr_slope/intercept semantics) from
-    // decimal-exact moments (n, Σx, Σy, Σxy, Σx²) — the same convention as
-    // q_corr_stats, so float addition order can't shift either engine's
-    // slope. x = days since the epoch start of the event window. --
-    "q_regr_trend" -> ((s, d) => {
-      val x = datediff(to_date(col("ts")), lit("2024-01-01")).cast("double")
-      val m = events(s, d)
-        .select(col("event_type"), col("value"), x.as("x"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("x").cast("decimal(28,6)")).cast("double").as("sx"),
-          sum(col("value").cast("decimal(28,6)")).cast("double").as("sy"),
-          sum((col("x") * col("value")).cast("decimal(28,6)")).cast("double").as("sxy"),
-          sum((col("x") * col("x")).cast("decimal(28,6)")).cast("double").as("sxx"))
-      val slope = (col("n") * col("sxy") - col("sx") * col("sy")) /
-        (col("n") * col("sxx") - col("sx") * col("sx"))
-      m.select(col("event_type"), col("n"),
-        round(slope, 6).as("slope"),
-        round((col("sy") - slope * col("sx")) / col("n"), 6).as("intercept"))
-        .orderBy("event_type")
-    }),
-
-    // -- [NS] temperature-scaled domain mixing (the n^alpha sampling rule
-    // a multi-source pre-training run uses to up-weight small domains):
-    // per-source doc counts -> weight ∝ n^0.7 -> normalized quota. Each
-    // pow() is rounded to 6 dp before the decimal-exact normalization sum
-    // (the engine's ln()-rounding convention), so both engines' libm
-    // disagreement in the last ulp can't leak into the output. The count
-    // table is domain-cardinality-sized; everything after the one
-    // aggregate is broadcast arithmetic. --
-    "q_mix_temperature" -> ((s, d) => {
-      val counts = documents(s, d).groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"))
-        .withColumn("w_raw", round(pow(col("n_docs").cast("double"), 0.7), 6))
-      val total = counts.agg(
-        sum(col("w_raw").cast("decimal(18,6)")).cast("double").as("w_total"))
-      counts.crossJoin(broadcast(total))
-        .select(col("source"), col("n_docs"),
-          round(col("w_raw") / col("w_total"), 6).as("weight"),
-          floor(lit(10000) * (col("w_raw") / col("w_total"))).cast("long")
-            .as("quota_docs"))
-        .orderBy("source")
-    }),
-
-    // -- [NS] weighted aggregate surface: per-type value-weighted mean
-    // with the weight parsed from the JSON props column; both moment sums
-    // are decimal-exact so the final division divides identical bits. --
-    "q_weighted_avg" -> ((s, d) => {
-      val k = get_json_object(col("props"), "$.k").cast("int")
-      events(s, d)
-        .select(col("event_type"), col("value"), k.as("k"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum((col("value") * col("k")).cast("decimal(28,6)")).cast("double").as("swx"),
-          sum(col("k").cast("decimal(28,6)")).cast("double").as("sw"))
-        .select(col("event_type"), col("n"),
-          round(col("swx") / col("sw"), 6).as("wavg"))
-        .orderBy("event_type")
-    }),
-
-    // -- [NS] fuzzy-match surface: consecutive-doc Levenshtein distance on
-    // a bounded 60-char prefix (edit distance is O(len²) per pair — the
-    // prefix cap keeps per-row cost constant at any corpus size). The
-    // pairing is an equi-join on doc_id+1, not a cross join. --
-    "q_fuzzy_pairs" -> ((s, d) => {
-      val a = documents(s, d).select(col("doc_id"),
-        substring(col("text"), 1, 60).as("ta"), length(col("text")).as("la"))
-      val b = documents(s, d).select((col("doc_id") - 1).as("join_id"),
-        substring(col("text"), 1, 60).as("tb"), length(col("text")).as("lb"))
-      a.join(b, col("doc_id") === col("join_id"))
-        .select(col("doc_id"),
-          levenshtein(col("ta"), col("tb")).as("lev"),
-          (col("lb") - col("la")).as("len_delta"))
-        .orderBy("doc_id")
-    }),
-
-    // -- [NS] conditional / null-handling scalar surface --
-    "q_conditional_funcs" -> ((s, d) =>
-      events(s, d).select(
-        col("event_id"),
-        when(col("value") > 100, "high").when(col("value") > 10, "mid").otherwise("low").as("band"),
-        coalesce(nullif(col("event_type"), lit("view")), lit("filtered")).as("type_or_filtered"),
-        round(greatest(col("value"), lit(0.0)), 4).as("clamped_lo"),
-        round(least(col("value"), lit(500.0)), 4).as("clamped_hi"))
-        .orderBy("event_id")),
-
-    // -- [NS] bitmap aggregate family (Spark 4): exact distinct counting
-    // through roaring-style position bitmaps — the mergeable EXACT
-    // distinct structure (HLL's q_agg_approx_distinct is the approximate
-    // sibling). user_id < 32768 keeps one bucket; the lake-scale form
-    // adds bitmap_bucket_number to the key. Must equal countDistinct. --
-    "q_bitmap_distinct" -> ((s, d) =>
-      events(s, d).groupBy(col("event_type"))
-        .agg(
-          // +1: bitmap_bit_position is 1-based (position v-1); value 0
-          // would fall off the bitmap and undercount by one
-          bitmap_count(bitmap_construct_agg(bitmap_bit_position(col("user_id") + 1)))
-            .as("nd_bitmap"),
-          countDistinct(col("user_id")).as("nd_exact"))
-        .orderBy("event_type")),
-
-    // -- [NS] AES column encryption round-trip: decrypt(encrypt(text)) is
-    // the identity — the at-rest column-crypto surface (GCM, random IV, so
-    // only the ROUND TRIP is deterministic — which is what's declared) --
-    "q_aes_roundtrip" -> ((s, d) =>
-      documents(s, d).select(
-        col("doc_id"),
-        aes_decrypt(
-          aes_encrypt(col("text").cast("binary"), lit("0123456789abcdef")),
-          lit("0123456789abcdef")).cast("string").as("rt"))
-        .orderBy("doc_id")),
-
-    // -- [NS] hidden `_metadata` file column: per-source-file provenance
-    // (name, row count, row_index span) without any user column — the
-    // lineage-audit surface every ingest pipeline stamps rows with. The
-    // testdata table is one file, so the row_index span is exactly
-    // [0, n−1] — which is what the oracle derives relationally. --
-    "q_file_metadata" -> ((s, d) =>
-      events(s, d)
-        .select(element_at(split(col("_metadata.file_path"), "/"), -1).as("file_name"),
-          col("_metadata.row_index").as("ri"))
-        .groupBy(col("file_name"))
-        .agg(count(lit(1)).as("n"),
-          min(col("ri")).as("min_ri"), max(col("ri")).as("max_ri"))
-        .orderBy("file_name")),
-
-    // -- [NS] timezone conversion: UTC instants rendered as wall time in
-    // three zones (one DST-observing — the conversion is rule-aware, not a
-    // fixed offset) plus a zone-local formatted hour; the oracle converts
-    // through DuckDB's AT TIME ZONE chain --
-    "q_timezone" -> ((s, d) =>
-      events(s, d).select(
-        col("event_id"),
-        from_utc_timestamp(col("ts"), "America/New_York").as("ny_wall"),
-        from_utc_timestamp(col("ts"), "Asia/Tokyo").as("tokyo_wall"),
-        date_format(from_utc_timestamp(col("ts"), "Europe/Paris"), "yyyy-MM-dd HH")
-          .as("paris_hour"))
-        .orderBy("event_id")),
-
-    // -- [NS] parameterized SQL: named parameter markers bound server-side
-    // (`spark.sql(text, args)`) — the injection-safe way user input reaches
-    // a query; literals never string-concatenate into the text --
-    "q_sql_params" -> ((s, d) => {
-      events(s, d).createOrReplaceTempView("graft_events_params")
-      s.sql(
-        """SELECT event_type, count(*) AS n
-          |FROM graft_events_params
-          |WHERE value > :floor AND event_type IN (:a, :b)
-          |GROUP BY event_type ORDER BY event_type""".stripMargin,
-        Map("floor" -> 50.0, "a" -> "click", "b" -> "purchase"))
-    }),
-
-    // -- [NS] string collations (Spark 4): case-insensitive grouping via
-    // UTF8_LCASE — the engine-level answer to case-variant keys (the
-    // normalize-by-hand alternative is q_dedup_exact_norm). Mixed case is
-    // planted deterministically; the output key is lower()ed because a
-    // collated group's representative is first-seen. --
-    "q_collation" -> ((s, d) =>
-      events(s, d)
-        .withColumn("mixed",
-          when(col("event_id") % 2 === 0, upper(col("event_type")))
-            .otherwise(col("event_type")))
-        .groupBy(collate(col("mixed"), "UTF8_LCASE").as("k"))
-        .agg(count(lit(1)).as("n"))
-        .select(lower(col("k")).as("event_type"), col("n"))
-        .orderBy("event_type")),
-
-    // -- [NS] SQL pipe syntax (Spark 4) + lateral column aliases: the
-    // modern composable-SQL surface — each |> stage consumes the previous
-    // one, and `v` is referenced by the sibling alias `v2` in the same
-    // SELECT. Same plan as the nested-SQL equivalent; the oracle is the
-    // plain-SQL twin. --
-    "q_sql_pipe" -> ((s, d) => {
-      events(s, d).createOrReplaceTempView("graft_events_pipe")
-      s.sql(
-        """FROM graft_events_pipe
-          ||> WHERE event_type IN ('click', 'purchase')
-          ||> SELECT event_type, CAST(value AS DECIMAL(18,2)) AS v, v * 2 AS v2
-          ||> AGGREGATE count(*) AS n, CAST(sum(v2) AS DOUBLE) AS doubled_total
-          |   GROUP BY event_type
-          ||> ORDER BY event_type""".stripMargin)
-    }),
-
-    // -- [NS] try_* ANSI-safety family: errors become NULLs instead of
-    // killing a 10-hour job — division by a zero denominator, long-add
-    // overflow, and out-of-bounds array access; the oracle reproduces each
-    // null site relationally. The overflow addend fires on id%1000 only:
-    // try_add's internal catch costs ~40µs PER overflowing row (measured
-    // 4.1 s at sf0.1 with every row overflowing), so the demo keeps the
-    // exception path as rare as production data would --
-    "q_try_funcs" -> ((s, d) =>
-      events(s, d).select(
-        col("event_id"),
-        round(try_divide(col("value"), (col("user_id") % 3).cast("double")), 4)
-          .as("safe_div"),
-        try_add(col("event_id"),
-          when(col("event_id") % 1000 === 0, lit(Long.MaxValue)).otherwise(lit(1L)))
-          .as("safe_add"),
-        try_element_at(array(col("event_type")), lit(2)).as("safe_elem"))
-        .orderBy("event_id")),
-
-    // -- [NS] arg-min/max aggregates (deterministic: keyed by unique event_id) --
-    "q_minmax_by" -> ((s, d) =>
-      events(s, d).groupBy(col("event_type"))
-        .agg(
-          max_by(round(col("value"), 4), col("event_id")).as("latest_value"),
-          min_by(round(col("value"), 4), col("event_id")).as("first_value"),
-          max(col("event_id")).as("max_id"),
-          min(col("event_id")).as("min_id"))
-        .orderBy("event_type")),
-
-    // -- [NS] array function surface over the embedding column --
-    // -- [NS] higher-order array functions (lambda surface): transform /
-    // filter / aggregate / zip_with / exists in one pass. All lambda
-    // results here are exact integers (counts and comparisons, no float
-    // folds) so the oracle is bit-deterministic regardless of either
-    // engine's summation order. --
-    "q_higher_order" -> ((s, d) =>
-      embeddings(s, d).select(
-        col("vec_id"),
-        // transform + aggregate with integer accumulation: positive count
-        aggregate(transform(col("embedding"), x => when(x > 0, 1).otherwise(0)),
-          lit(0), (acc, x) => acc + x).as("n_pos_agg"),
-        // filter: the same count via the filtered array's size
-        size(filter(col("embedding"), x => x > 0)).as("n_pos_filter"),
-        // zip_with against the reversed vector: how many positions beat
-        // their mirror (strict), an exact pairwise comparison
-        aggregate(zip_with(col("embedding"), reverse(col("embedding")),
-          (a, b) => when(a > b, 1).otherwise(0)), lit(0), (acc, x) => acc + x)
-          .as("n_beats_mirror"),
-        // exists: any component above 3 sigma-ish
-        exists(col("embedding"), x => x > 3.0f).as("has_outlier"))
-        .orderBy("vec_id")),
-
-    "q_array_funcs" -> ((s, d) =>
-      embeddings(s, d).select(
-        col("vec_id"),
-        size(col("embedding")).as("n_dims"),
-        round(array_max(col("embedding")).cast("double"), 4).as("vmax"),
-        round(array_min(col("embedding")).cast("double"), 4).as("vmin"),
-        round(element_at(col("embedding"), 1).cast("double"), 4).as("head"),
-        round(element_at(array_sort(col("embedding")), 3).cast("double"), 4).as("third_smallest"))
-        .orderBy("vec_id")),
-
-    // -- [NS] explode_outer: the null-preserving generator — rows whose
-    // array is EMPTY survive with a null element instead of vanishing (the
-    // classic silent-row-loss trap of plain explode); every 10th doc gets
-    // an empty array deterministically --
-    "q_explode_outer" -> ((s, d) =>
-      documents(s, d)
-        .withColumn("arr",
-          when(col("doc_id") % 10 === 0, array().cast("array<string>"))
-            .otherwise(slice(TF.tokens(lower(col("text"))), 1, 3)))
-        .select(col("doc_id"), explode_outer(col("arr")).as("tok"))
-        .orderBy(col("doc_id"), col("tok").asc_nulls_last)),
-
-    // -- [NS] grouped Pearson correlation from decimal-exact moments (the
-    // streaming corr() aggregate is float-order-sensitive; this form isn't) --
-    "q_corr_stats" -> ((s, d) => {
-      val k = from_json(col("props"), org.apache.spark.sql.types.StructType.fromDDL("k INT"))
-        .getField("k").cast("double")
-      events(s, d)
-        .select(col("event_type"), col("value"), k.as("k"))
-        .groupBy(col("event_type"))
-        .agg(
-          count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(28,6)")).as("sx"),
-          sum(col("k").cast("decimal(28,6)")).as("sy"),
-          sum((col("value") * col("k")).cast("decimal(28,6)")).as("sxy"),
-          sum((col("value") * col("value")).cast("decimal(28,6)")).as("sxx"),
-          sum((col("k") * col("k")).cast("decimal(28,6)")).as("syy"))
-        .select(col("event_type"), col("n"),
-          round(
-            (col("n") * col("sxy").cast("double") - col("sx").cast("double") * col("sy").cast("double")) /
-              sqrt((col("n") * col("sxx").cast("double") - col("sx").cast("double") * col("sx").cast("double")) *
-                (col("n") * col("syy").cast("double") - col("sy").cast("double") * col("sy").cast("double"))), 4)
-            .as("corr_vk"))
-        .orderBy("event_type")
-    }),
-
-    // -- [NS] regex scalar surface --
-    "q_regex_funcs" -> ((s, d) =>
-      events(s, d).select(
-        col("event_id"),
-        regexp_extract(col("props"), "\\d+", 0).cast("int").as("k_extracted"),
-        col("props").rlike("\"k\": 1").as("k_starts_1"),
-        regexp_count(col("props"), lit("\\d")).as("n_digits"))
-        .orderBy("event_id")),
-
-    // -- [NS] ordered set collection per group (sorted distinct CSV) --
-    "q_collect_sorted" -> ((s, d) =>
-      events(s, d).groupBy(col("user_id"))
-        .agg(
-          array_join(array_sort(collect_set(col("event_type"))), ",").as("types_csv"),
-          count(lit(1)).as("n_events"))
-        .orderBy("user_id")),
-
-    // -- [NS] RANGE window frame (time-valued): per-type trailing-1h sum.
-    // RANGE frames are tie-insensitive, so no ordering tiebreak is needed --
-    "q_window_range_frame" -> ((s, d) => {
-      val w = Window.partitionBy(col("event_type")).orderBy(unix_millis(col("ts")))
-        .rangeBetween(-3600000L, 0L)
-      events(s, d)
-        .select(col("event_id"),
-          sum(col("value").cast("decimal(18,2)")).over(w).cast("double").as("trailing_1h"))
-        .orderBy("event_id")
-    }),
-
-    // -- [REF R6] paging: the reference's OFFSET/LIMIT shape with a real
-    // offset (it hard-codes OFFSET 0; the generalized page is the useful op) --
-    "q_topk_page" -> ((s, d) =>
-      events(s, d).select("event_id", "ts", "user_id", "event_type", "value")
-        .orderBy(col("value").desc, col("event_id"))
-        .offset(100).limit(50)),
-
-    // -- [NS] global top-20 trigrams by document frequency (shingles are
-    // distinct per doc, so counts = doc frequency; ties broken by shingle) --
-    "q_ngram_topk" -> ((s, d) =>
-      documents(s, d)
-        .select(explode(TF.shingles(col("text"), 3)).as("shingle"))
-        .groupBy(col("shingle"))
-        .agg(count(lit(1)).as("df"))
-        .orderBy(col("df").desc, col("shingle"))
-        .limit(20)),
-
-    // -- [NS] RAG overlap chunking: 128-char windows every 96 chars (32
-    // shared context chars per boundary); exact integer chunk-count
-    // arithmetic, per-chunk md5+length fingerprint --
-    "q_chunk_overlap" -> ((s, d) =>
-      graft.operators.Corpus.overlapChunks(documents(s, d), width = 128, stride = 96)),
-
-    // -- [NS] BPE tokenizer-training first iteration: top-20 adjacent
-    // character pairs weighted by word frequency, computed over the
-    // distinct-word dictionary (the real trainer's corpus collapse) --
-    "q_bpe_pairs" -> ((s, d) =>
-      graft.operators.Corpus.bpePairs(documents(s, d), k = 20)),
-
-    // -- [NS] BPE tokenizer TRAINING — the full greedy merge loop (20
-    // rounds) over the vocabulary-collapsed dictionary, returning the
-    // merge TRAJECTORY (the artifact a tokenizer ships). Each round is
-    // one map-side-combined aggregate of which a single row (the merge
-    // rule) reaches the driver; the merge is a boundary-safe literal
-    // replace over the marked symbol encoding. Value-oracled over the
-    // WHOLE trajectory by a 20-stage unrolled DuckDB twin (the
-    // q_pagerank_sim discipline: identical tie-breaks, identical
-    // left-to-right replace semantics). --
-    "q_bpe_train" -> ((s, d) =>
-      graft.operators.Corpus.bpeTrain(documents(s, d), merges = 20)),
-
-    // -- [NS] BPE ENCODE — the serve side of the trained artifact,
-    // completing the tokenizer loop: train the 20-merge trajectory
-    // (deterministic, the q_bpe_train subject), apply it to the corpus
-    // dictionary in training order (the shipped-tokenizer path), and
-    // report the encoded-vocabulary top-30 by token mass. The merge list
-    // is the ONE driver-side read (≤ 20 rows — the artifact itself);
-    // everything else is vocabulary-sized. Value-oracled end to end by
-    // the same unrolled 20-stage DuckDB twin's final dictionary. --
-    "q_bpe_encode" -> ((s, d) => {
-      val traj = graft.operators.Corpus.bpeTrain(documents(s, d), merges = 20)
-        .select("left_sym", "right_sym").collect()
-        .map(r => (r.getString(0), r.getString(1))).toSeq
-      graft.operators.Corpus.bpeEncode(documents(s, d), traj, k = 30)
-    }),
-
-    // -- [NS] BPE encoding of HELD-OUT text — the actual serve shape
-    // (q_bpe_encode replays the training corpus; production encodes text
-    // the trainer never saw): merges train on the doc_id >= 50 split
-    // (q_vocab_coverage's split convention), then encode the doc_id < 50
-    // EVAL split with the trained rules, reporting the eval symbol
-    // histogram with in_vocab membership against the REAL trained
-    // vocabulary — the OOV/coverage report a tokenizer pipeline alarms
-    // on, wired end-to-end from a real bpeTrain artifact. Value-oracled
-    // by the same unrolled 20-stage chain trained on the train split and
-    // replayed over the eval dictionary. Bounded collect: the ≤20-row
-    // trajectory (the trained artifact itself). --
-    "q_bpe_encode_heldout" -> ((s, d) => {
-      val docs = documents(s, d)
-      val train = docs.where(col("doc_id") >= 50)
-      val eval = docs.where(col("doc_id") < 50)
-      val traj = graft.operators.Corpus.bpeTrain(train, merges = 20)
-        .select("left_sym", "right_sym").collect()
-        .map(r => (r.getString(0), r.getString(1))).toSeq
-      graft.operators.Corpus.bpeEncodeHeldout(train, eval, traj, k = 30)
-    }),
-
-    // -- [NS] PMI collocations: top-20 adjacent word bigrams by pointwise
-    // mutual information at support >= 20 — phrase mining over the corpus;
-    // float discipline documented on Corpus.pmiBigrams --
-    "q_pmi_bigrams" -> ((s, d) =>
-      graft.operators.Corpus.pmiBigrams(documents(s, d), k = 20, minCount = 20)),
-
-    // -- [NS] multimodal resize plumbing: header rewrite + proportional body
-    // truncation, then metadata re-extraction audits the new header --
-    "q_mm_resize" -> ((s, d) =>
-      Multimodal.extractMeta(
-        Multimodal.mediaFromDocuments(documents(s, d))
-          .withColumn("payload", Multimodal.resizeStub(col("payload"), 64, 48)))
-        .orderBy("media_id")),
-
-    // -- [NS] reproducible stratified sampling: per-language rates, content-
-    // keyed hash decisions. The sample itself is hash-seeded (rows-only
-    // twin below would be weak), so the DECLARED result is the invariant:
-    // per-lang achieved rate within tolerance of the target
-    "q_sample_stratified" -> ((s, d) => {
-      val rates = Map("en" -> 0.5, "es" -> 0.2, "fr" -> 0.2, "de" -> 0.2, "zh" -> 0.2)
-      val sampled = graft.operators.Sampling.stratified(
-        documents(s, d), "lang", "doc_id", rates)
-        .groupBy(col("lang")).agg(count(lit(1)).as("n_sampled"))
-      val rateLit = rates.foldLeft(lit(0.0)) { case (acc, (k, v)) =>
-        when(col("lang") === k, lit(v)).otherwise(acc)
-      }
-      documents(s, d).groupBy(col("lang")).agg(count(lit(1)).as("n_docs"))
-        .join(sampled, Seq("lang"), "left")
-        .select(col("lang"), col("n_docs"),
-          (abs(coalesce(col("n_sampled"), lit(0L)) / col("n_docs") - rateLit) <= 0.15)
-            .as("rate_ok"))
-        .orderBy("lang")
-    }),
-
-    // -- [NS] corpus mixing (the "recipe" op): two sources at different
-    // rates, declared via per-bucket achieved-rate invariants
-    "q_sample_mix" -> ((s, d) => {
-      val docs = documents(s, d)
-      val mixed = graft.operators.Sampling.mix(Seq(
-        (docs.where(col("lang") === "en"), 0.6),
-        (docs.where(col("lang") =!= "en"), 0.3)), "doc_id")
-      val bucket = when(col("lang") === "en", "en").otherwise("other")
-      val totals = docs.groupBy(bucket.as("bucket")).agg(count(lit(1)).as("n_docs"))
-      val kept = mixed.groupBy(bucket.as("bucket")).agg(count(lit(1)).as("n_kept"))
-      val rate = when(col("bucket") === "en", 0.6).otherwise(0.3)
-      totals.join(kept, Seq("bucket"), "left")
-        .select(col("bucket"), col("n_docs"),
-          (abs(coalesce(col("n_kept"), lit(0L)) / col("n_docs") - rate) <= 0.15)
-            .as("rate_ok"))
-        .orderBy("bucket")
-    }),
-
-    // -- [NS] unpivot/melt: wide numeric columns to long (metric, val) rows --
-    "q_unpivot" -> ((s, d) =>
-      Tables.lineitem(s, d)
-        .unpivot(
-          Array(col("l_orderkey"), col("l_linenumber")),
-          Array(col("l_quantity"), col("l_discount"), col("l_tax")),
-          "metric", "val")
-        .select(col("l_orderkey"), col("l_linenumber"), col("metric"),
-          round(col("val"), 4).as("val"))
-        // val in the sort: (orderkey, linenumber) is NOT unique in this
-        // synthetic lineitem, so the value column must break the tie
-        .orderBy("l_orderkey", "l_linenumber", "metric", "val")),
-
-    // -- [NS] positional window values over a full-partition frame --
-    "q_window_nth" -> ((s, d) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      events(s, d)
-        .select(col("event_id"),
-          first(col("event_id")).over(w).as("first_evt"),
-          last(col("event_id")).over(w).as("last_evt"),
-          nth_value(col("event_id"), 2).over(w).as("second_evt"))
-        .orderBy("event_id")
-    }),
-
-    // -- [NS] SQL subquery surface: uncorrelated IN + scalar subquery
-    // (Catalyst rewrites these to semi joins / scalar plans) --
-    "q_in_subquery" -> ((s, d) => {
-      events(s, d).createOrReplaceTempView("events_sq")
-      s.sql("""SELECT event_id, user_id FROM events_sq
-               WHERE user_id IN (SELECT DISTINCT user_id FROM events_sq WHERE event_type = 'signup')
-                 AND value > (SELECT min(value) FROM events_sq)
-               ORDER BY event_id""")
-    }),
-
-    // -- [NS] correlated EXISTS with an extra predicate — the decorrelation
-    // rewrite (predicate pulled into the derived semi-join condition) --
-    "q_exists_correlated" -> ((s, d) => {
-      Tables.customer(s, d).createOrReplaceTempView("customer_ec")
-      Tables.orders(s, d).createOrReplaceTempView("orders_ec")
-      s.sql("""SELECT c_custkey, c_name FROM customer_ec c
-               WHERE EXISTS (SELECT 1 FROM orders_ec o
-                             WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 100000)
-               ORDER BY c_custkey""")
-    }),
-
-    // -- [NS] LATERAL correlated subquery: per-region top-2 nations — the
-    // SQL form of "for each outer row, run this dependent subquery";
-    // Catalyst decorrelates it into a ranked join (DecorrelateInnerQuery),
-    // so nothing executes per-row --
-    "q_lateral_join" -> ((s, d) => {
-      Tables.region(s, d).createOrReplaceTempView("region_lj")
-      Tables.nation(s, d).createOrReplaceTempView("nation_lj")
-      s.sql("""SELECT r.r_name, l.n_nationkey, l.n_name
-               FROM region_lj r,
-               LATERAL (SELECT n_nationkey, n_name FROM nation_lj
-                        WHERE n_regionkey = r.r_regionkey
-                        ORDER BY n_nationkey LIMIT 2) l
-               ORDER BY r_name, n_nationkey""")
-    }),
-
-    // -- [NS] explicit cartesian: small × small cross join --
-    "q_cross_join" -> ((s, d) =>
-      Tables.region(s, d).crossJoin(Tables.nation(s, d))
-        .select(col("r_name"), col("n_name"))
-        .orderBy("r_name", "n_name")),
-
-    // -- [NS] complex-type surface: map construction/access/keys and struct
-    // nesting in one codegen'd pass — the type system beyond arrays (maps
-    // and structs are what schema'd JSON/props columns decode into) --
-    "q_complex_types" -> ((s, d) =>
-      events(s, d).where(col("event_id") < 1000)
-        .select(col("event_id"),
-          map(lit("type"), col("event_type"),
-              lit("uid"), col("user_id").cast("string")).as("m"),
-          struct(col("user_id").as("uid"), col("value").as("v")).as("st"))
-        .select(
-          col("event_id"),
-          element_at(col("m"), "type").as("type_val"),
-          size(col("m")).cast("int").as("n_keys"),
-          array_join(array_sort(map_keys(col("m"))), ",").as("keys_csv"),
-          col("st.uid").as("uid"),
-          round(col("st.v"), 4).as("v"))
-        .orderBy("event_id")),
-
-    // -- [NS] REAL Structured Streaming execution inside the gate: the
-    // watermarked tumbling aggregation runs as a file stream through the
-    // memory sink to completion, and its FINAL table must hash-match the
-    // batch oracle — streaming is oracle-gated, not just batch-twinned.
-    // Counts only: a double sum's value depends on state-merge order.
-    "q_stream_tumbling" -> ((s, d) => {
-      val stream = graft.streaming.EventStreams
-        .tumblingDaily(graft.streaming.EventStreams.readEventsNanos(s, s"$d/events.parquet"))
-        .select("day_start", "event_type", "n")
-      graft.streaming.EventStreams.runToMemory(stream, "q_stream_tumbling_mem", "complete",
-        statePartitions = Some(8))
-      s.table("q_stream_tumbling_mem").orderBy("day_start", "event_type")
-    }),
-
-    // -- [NS] REAL streaming stream-stream interval join: both sides are
-    // watermarked file streams of the same events table; inner-join matches
-    // emit as they arrive (append mode), state evicts by event-time bound.
-    // The final memory table must hash-match the batch interval join. --
-    "q_stream_interval" -> ((s, d) => {
-      val ev = graft.streaming.EventStreams.readEventsNanos(s, s"$d/events.parquet")
-      val joined = graft.streaming.EventStreams.clickPurchaseJoin(ev, ev)
-      graft.streaming.EventStreams.runToMemory(joined, "q_stream_interval_mem", "append",
-        statePartitions = Some(8))
-      s.table("q_stream_interval_mem").orderBy("user_id", "click_id", "purchase_id")
-    }),
-
-    // -- [NS] REAL streaming stream-stream LEFT OUTER interval join:
-    // unmatched clicks null-extend only after the watermark proves no
-    // match can arrive, so the twin filters unmatched rows to the
-    // finalized region (click_ts + 1h < final global watermark). --
-    "q_stream_outer" -> ((s, d) => {
-      val ev = graft.streaming.EventStreams.readEventsNanos(s, s"$d/events.parquet")
-      val joined = graft.streaming.EventStreams.clickPurchaseLeftJoin(ev, ev)
-      graft.streaming.EventStreams.runToMemory(joined, "q_stream_outer_mem", "append",
-        statePartitions = Some(8))
-      s.table("q_stream_outer_mem")
-        .orderBy("user_id", "click_id", "purchase_id")
-    }),
-
-    // -- [NS] REAL streaming stream-stream LEFT SEMI interval join:
-    // "which clicks converted" — a click emits exactly once on its first
-    // matching purchase; unmatched clicks never emit, so the batch EXISTS
-    // twin is exact with no watermark-horizon clause --
-    "q_stream_semi" -> ((s, d) => {
-      val ev = graft.streaming.EventStreams.readEventsNanos(s, s"$d/events.parquet")
-      val joined = graft.streaming.EventStreams.clickPurchaseSemiJoin(ev, ev)
-      graft.streaming.EventStreams.runToMemory(joined, "q_stream_semi_mem", "append",
-        statePartitions = Some(8))
-      s.table("q_stream_semi_mem").orderBy("user_id", "click_id")
-    }),
-
-    // -- [NS] REAL streaming stream-stream FULL OUTER interval join: both
-    // sides' unmatched rows emit null-extended at watermark finality;
-    // explicit NULLS LAST on both engines (Spark defaults nulls-first,
-    // DuckDB nulls-last — the full join is where that first matters) --
-    "q_stream_full" -> ((s, d) => {
-      val ev = graft.streaming.EventStreams.readEventsNanos(s, s"$d/events.parquet")
-      val joined = graft.streaming.EventStreams.clickPurchaseFullJoin(ev, ev)
-      graft.streaming.EventStreams.runToMemory(joined, "q_stream_full_mem", "append",
-        statePartitions = Some(8))
-      s.table("q_stream_full_mem")
-        .orderBy(col("user_id"), col("click_id").asc_nulls_last,
-          col("purchase_id").asc_nulls_last)
-    }),
-
-    // -- [NS] REAL streaming session windows through the state store; the
-    // final table must hash-match the batch session-window oracle --
-    "q_stream_session" -> ((s, d) => {
-      val sess = graft.streaming.EventStreams.userSessionCounts(
-        graft.streaming.EventStreams.readEventsNanos(s, s"$d/events.parquet"))
-      graft.streaming.EventStreams.runToMemory(sess, "q_stream_session_mem", "complete",
-        statePartitions = Some(8))
-      s.table("q_stream_session_mem").orderBy("user_id", "session_start")
-    }),
-
-    // -- [NS] the same REAL streaming session windows through the RocksDB
-    // state store provider — the production provider once state outgrows
-    // executor heap (heap provider state is memory-bound; RocksDB state
-    // lives on executor-local disk with the same checkpoint contract). Must
-    // hash-match the identical batch oracle: the provider is an execution
-    // detail, never a semantics change. --
-    // -- [NS] REAL streaming run: gap sessionization as an explicit
-    // flatMapGroupsWithState state machine with EVENT-TIME TIMEOUT — close
-    // by successor emits in-batch, close by silence emits from the timeout
-    // callback; each user's still-open final session (inside the watermark
-    // horizon) is withheld, and the oracle reproduces that boundary --
-    "q_stream_fmgs" -> ((s, d) => {
-      val sess = graft.streaming.EventStreams.gapSessions(s,
-        graft.streaming.EventStreams.readEventsNanos(s, s"$d/events.parquet"))
-      graft.streaming.EventStreams.runToMemory(sess, "q_stream_fmgs_mem", "append",
-        statePartitions = Some(8))
-      s.table("q_stream_fmgs_mem").orderBy("user_id", "session_start")
-    }),
-
-    // -- [NS] State-V2 `transformWithState` (the modern arbitrary-state
-    // API): per-user running totals in a typed ValueState cell on the
-    // RocksDB backend — REAL streaming run, same oracle as the
-    // flatMapGroupsWithState form (q_stateful_totals) --
-    "q_stream_tws" -> ((s, d) => {
-      val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val totals = graft.streaming.EventStreams.statefulUserTotalsV2(s,
-          graft.streaming.EventStreams.readEventsNanos(s, s"$d/events.parquet"))
-        graft.streaming.EventStreams.runToMemory(totals, "q_stream_tws_mem", "update",
-          statePartitions = Some(8))
-      } finally prev match {
-        case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-      // update mode emits one row per (micro-batch, key); the final state
-      // per user is the row with the largest n (monotone accumulation)
-      val w = Window.partitionBy(col("user_id")).orderBy(col("n").desc)
-      s.table("q_stream_tws_mem")
-        .withColumn("rn", row_number().over(w)).where(col("rn") === 1).drop("rn")
-        .orderBy("user_id")
-    }),
-
-    "q_stream_rocksdb" -> ((s, d) => {
-      val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val sess = graft.streaming.EventStreams.userSessionCounts(
-          graft.streaming.EventStreams.readEventsNanos(s, s"$d/events.parquet"))
-        graft.streaming.EventStreams.runToMemory(sess, "q_stream_rocksdb_mem", "complete",
-          statePartitions = Some(8))
-      } finally prev match {
-        case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-      s.table("q_stream_rocksdb_mem").orderBy("user_id", "session_start")
-    }),
-
-    // -- [NS] REAL streaming sliding windows (2h window / 1h slide), same
-    // aggregation as the batch q_sliding_2h so the final memory table must
-    // hash-match that query's oracle --
-    "q_stream_sliding" -> ((s, d) => {
-      val slid = graft.streaming.EventStreams.slidingCounts(
-        graft.streaming.EventStreams.readEventsNanos(s, s"$d/events.parquet"),
-        "2 hours", "1 hour")
-      graft.streaming.EventStreams.runToMemory(slid, "q_stream_sliding_mem", "complete",
-        statePartitions = Some(8))
-      s.table("q_stream_sliding_mem").orderBy("w_start")
-    }),
-
-    // -- [NS] REAL streaming SALTED aggregation — the skew-safe streaming
-    // shape (docs/PLANS.md "Skew handling"): streaming has no AQE and state
-    // partitioning is fixed at checkpoint birth, so a hot key funnels one
-    // state partition with no runtime rescue. Phase 1 keys state by
-    // (event_type, hash(event_id) % 16); phase 2 is the bounded batch
-    // combine (16 partial rows per type). Totals must hash-match the plain
-    // per-type oracle — salting must not change a single bit. --
-    "q_stream_salted" -> ((s, d) => {
-      val partials = graft.streaming.EventStreams.saltedTypeTotals(
-        graft.streaming.EventStreams.readEventsNanos(s, s"$d/events.parquet"))
-      graft.streaming.EventStreams.runToMemory(partials, "q_stream_salted_mem", "complete",
-        statePartitions = Some(8))
-      graft.streaming.EventStreams.combineSaltedTotals(s.table("q_stream_salted_mem"))
-        .orderBy("event_type")
-    }),
-
-    // -- [NS] REAL streaming exact dedup: the input is the events table
-    // DOUBLED (every row appears twice, written once per JVM), streamed
-    // through dropDuplicatesWithinWatermark — so the dedup state does real
-    // work and the per-type counts of the memory sink must hash-match the
-    // batch distinct-event_id oracle on the ORIGINAL table. Completes the
-    // streaming surface: windows, sessions, join, dedup. --
-    "q_stream_dedup" -> ((s, d) => {
-      val dir = scratchDirs.getOrElseUpdate(s"dedup2x:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_streamdedup")
-        deleteRecursivelyOnExit(tmp)
-        val out = tmp.toFile.getAbsolutePath + "/events2x"
-        val ev = events(s, d)
-          .select("event_id", "ts", "user_id", "event_type", "value", "props")
-        ev.union(ev).write.mode("overwrite").parquet(out)
-        out
-      })
-      val deduped = graft.streaming.EventStreams.dedupedEvents(
-        graft.streaming.EventStreams.readEvents(s, dir))
-        .select("event_id", "event_type")
-      graft.streaming.EventStreams.runToMemory(deduped, "q_stream_dedup_mem", "append",
-        statePartitions = Some(8))
-      s.table("q_stream_dedup_mem")
-        .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-        .orderBy("event_type")
-    }),
-
-    // -- [NS] REAL streaming stream-static enrichment join: the event
-    // stream joins a static nation dim (broadcast — stateless, no join
-    // state) and aggregates per dim attribute; the final memory table must
-    // hash-match the batch join oracle. The canonical production
-    // enrichment topology: dim rides executor-local, the stream never
-    // shuffles for the join. --
-    "q_stream_enrich" -> ((s, d) => {
-      val enriched = graft.streaming.EventStreams.enrichedCounts(
-        graft.streaming.EventStreams.readEventsNanos(s, s"$d/events.parquet"),
-        Tables.nation(s, d), "n_nationkey", "n_name")
-      graft.streaming.EventStreams.runToMemory(enriched, "q_stream_enrich_mem", "complete",
-        statePartitions = Some(8))
-      s.table("q_stream_enrich_mem").orderBy("n_name")
-    }),
-
-    // -- [NS] streaming dedup against HISTORY: the incoming stream
-    // anti-joins a static set of already-ingested keys (event_id < 5000 =
-    // "yesterday's corpus") — the shape an incremental ingest actually
-    // runs, complementing within-stream dedup (q_stream_dedup). The static
-    // key set broadcasts; the join is stateless; only the downstream
-    // per-type count carries state. --
-    "q_stream_dedup_hist" -> ((s, d) => {
-      val history = events(s, d).where(col("event_id") < 5000)
-        .select(col("event_id"))
-      val incoming = graft.streaming.EventStreams.readEventsNanos(s, s"$d/events.parquet")
-      val fresh = incoming
-        .join(broadcast(history), Seq("event_id"), "left_anti")
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"))
-      graft.streaming.EventStreams.runToMemory(fresh, "q_stream_dedup_hist_mem", "complete",
-        statePartitions = Some(8))
-      s.table("q_stream_dedup_hist_mem").orderBy("event_type")
-    }),
-
-    // -- [NS] STREAMING data-quality gate: the audit counters run as a
-    // streaming global aggregate (complete mode — violation counts are
-    // exactly the bounded state a quality monitor keeps), then the wide
-    // 1-row result stacks to long form batch-side. Expectations over the
-    // live events stream; one rule (value ≤ 195) deliberately trips. --
-    "q_stream_audit" -> ((s, d) => {
-      val ev = graft.streaming.EventStreams.readEventsNanos(s, s"$d/events.parquet")
-      def viol(p: org.apache.spark.sql.Column) =
-        sum(when(!coalesce(p, lit(false)), 1L).otherwise(0L))
-      val wide = ev.agg(
-        viol(col("event_id").isNotNull).as("id_not_null"),
-        viol(col("user_id").between(0, 24)).as("user_in_dim_range"),
-        viol(col("value") >= 0).as("value_nonneg"),
-        viol(col("value") <= 195).as("value_le_195"))
-      graft.streaming.EventStreams.runToMemory(wide, "q_stream_audit_mem", "complete",
-        statePartitions = Some(8))
-      s.table("q_stream_audit_mem")
-        .selectExpr("stack(4, 'id_not_null', `id_not_null`, " +
-          "'user_in_dim_range', `user_in_dim_range`, " +
-          "'value_nonneg', `value_nonneg`, " +
-          "'value_le_195', `value_le_195`) as (rule, violations)")
-        .select(col("rule"), col("violations"), (col("violations") === 0).as("ok"))
-        .orderBy("rule")
-    }),
-
-    // -- [NS] the streaming pipeline COMPOSED: watermarked exact dedup →
-    // stream-static broadcast enrichment → keyed aggregation, chained
-    // stateful operators in ONE streaming query over the DOUBLED input
-    // (reuses q_stream_dedup's fixture). The final table must hash-match
-    // the batch chain on the original table — streaming composition is
-    // oracle-gated just like the batch q_pipeline_e2e. --
-    "q_stream_pipeline" -> ((s, d) => {
-      val dir = scratchDirs.getOrElseUpdate(s"dedup2x:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_streamdedup")
-        deleteRecursivelyOnExit(tmp)
-        val out = tmp.toFile.getAbsolutePath + "/events2x"
-        val ev = events(s, d)
-          .select("event_id", "ts", "user_id", "event_type", "value", "props")
-        ev.union(ev).write.mode("overwrite").parquet(out)
-        out
-      })
-      val deduped = graft.streaming.EventStreams.dedupedEvents(
-        graft.streaming.EventStreams.readEvents(s, dir))
-      val enriched = deduped
-        .join(broadcast(Tables.nation(s, d).select("n_nationkey", "n_name")),
-          col("user_id") === col("n_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(count(lit(1)).as("n"))
-      graft.streaming.EventStreams.runToMemory(enriched, "q_stream_pipeline_mem", "complete",
-        statePartitions = Some(8))
-      s.table("q_stream_pipeline_mem").orderBy("n_name")
-    }),
-
-    // -- [NS] REAL streaming foreachBatch MERGE sink: the events stream
-    // arrives in 4 micro-batches (maxFilesPerTrigger=1 over a 4-file input)
-    // and each batch UPSERTS per-user totals into a versioned parquet
-    // target — replay-idempotent (a re-run batch overwrites its own
-    // version). The final committed state must hash-match the batch
-    // group-by over the whole table. Input files are scratch-cached once;
-    // the streamed upsert itself re-runs per invocation into a fresh
-    // target, so the bench times the sink, not a cache. --
-    "q_stream_upsert" -> ((s, d) => {
-      val in = scratchDirs.getOrElseUpdate(s"upsert_in:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_upsert_in")
-        deleteRecursivelyOnExit(tmp)
-        val out = tmp.toFile.getAbsolutePath + "/events4x"
-        events(s, d)
-          .select("event_id", "ts", "user_id", "event_type", "value", "props")
-          .repartition(4)
-          .write.mode("overwrite").parquet(out)
-        out
-      })
-      val target = java.nio.file.Files.createTempDirectory("graft_upsert_tgt")
-      deleteRecursivelyOnExit(target)
-      val stream = s.readStream
-        .schema(graft.streaming.EventStreams.eventsSchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in)
-      graft.streaming.EventStreams.upsertUserTotals(
-        stream, target.toFile.getAbsolutePath)
-      graft.streaming.EventStreams
-        .latestUpsertState(s, target.toFile.getAbsolutePath)
-        .orderBy("user_id")
-    }),
-
-    // -- [NS] STATEFUL AvailableNow catch-up: running per-user totals fold
-    // across two separate runs through the checkpoint's state store — run 2
-    // reads only the second arrival yet serves totals over everything; a
-    // re-read of arrival 1 would double it, so the batch-rollup oracle is
-    // the exactly-once evidence --
-    "q_availablenow_totals" -> ((s, d) => {
-      val root = availTotalsRoot(s, d)
-      s.read.parquet(s"$root/tgt/current")
-        .select(col("user_id"), col("n"), (col("cents") / 100.0).as("total"))
-        .orderBy("user_id")
-    }),
-
-    // -- [NS] CDC-style change feed between two served versions of the
-    // catch-up target: run-1 state (even event_ids) full-outer-joined to
-    // run-2 state (everything) per user — inserts (new users) vs updates
-    // (grown totals); the oracle recomputes both versions relationally.
-    // Append-only source ⇒ no deletes, and that absence is part of the
-    // declared result. --
-    "q_cdc_diff" -> ((s, d) => {
-      val root = availTotalsRoot(s, d)
-      val v1 = s.read.parquet(s"$root/tgt/snap1")
-        .select(col("user_id"), col("n").as("n1"), col("cents").as("c1"))
-      val v2 = s.read.parquet(s"$root/tgt/current")
-        .select(col("user_id"), col("n").as("n2"), col("cents").as("c2"))
-      v1.join(v2, Seq("user_id"), "full_outer")
-        .withColumn("change_type",
-          when(col("n1").isNull, lit("insert"))
-            .when(col("n1") =!= col("n2"), lit("update"))
-            .otherwise(lit("unchanged")))
-        .select(col("user_id"), col("change_type"),
-          coalesce(col("n2"), lit(0L)).as("n"),
-          (coalesce(col("c2"), lit(0L)) / 100.0).as("total"))
-        .orderBy("user_id")
-    }),
-
-    // -- [NS] State Data Source (Spark 4): the stateful catch-up's
-    // checkpoint READ BACK as a DataFrame — state-store introspection, the
-    // debugging/audit surface for production stateful jobs. The aggregate
-    // buffer (count, cents-sum per user key) must itself equal the batch
-    // rollup: state is data here, not a black box. --
-    "q_state_reader" -> ((s, d) => {
-      val root = availTotalsRoot(s, d)
-      s.read.format("statestore").load(s"$root/tgt/_chk")
-        .select(col("key.user_id").as("user_id"),
-          col("value.count").as("n"),
-          (col("value.sum") / 100.0).as("total"))
-        .orderBy("user_id")
-    }),
-
-    // -- [NS] streaming trending top-k: the stream maintains the per-(day,
-    // type) aggregate (the part needing incremental state); each micro-
-    // batch ranks the complete state in foreachBatch and overwrites the
-    // serving table — window-rank is unsupported inside a stream, and this
-    // is the production split. Final table = batch rank twin. --
-    "q_stream_trending" -> ((s, d) => {
-      val in = scratchDirs.getOrElseUpdate(s"upsert_in:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_upsert_in")
-        deleteRecursivelyOnExit(tmp)
-        val out = tmp.toFile.getAbsolutePath + "/events4x"
-        events(s, d)
-          .select("event_id", "ts", "user_id", "event_type", "value", "props")
-          .repartition(4)
-          .write.mode("overwrite").parquet(out)
-        out
-      })
-      val target = java.nio.file.Files.createTempDirectory("graft_trending")
-      deleteRecursivelyOnExit(target)
-      val stream = s.readStream
-        .schema(graft.streaming.EventStreams.eventsSchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in)
-      graft.streaming.EventStreams.trendingTypes(
-        stream, target.toFile.getAbsolutePath, k = 3)
-      s.read.parquet(target.toFile.getAbsolutePath + "/current")
-        .orderBy("day_start", "rk")
-    }),
-
-    // -- [REF R2/R3 streaming] the reference's ingest path (adaptive chunk
-    // + zip + ULID lineage) run as a Structured Streaming job: the same
-    // stateless LogStore.ingest expressions bind to a file stream
-    // (maxFilesPerTrigger=1 forces multiple micro-batches), appending to a
-    // user-partitioned parquet sink; reassembly of the sink must restore
-    // every payload byte-for-byte (md5-oracled per document) --
-    "q_stream_ingest" -> ((s, d) => {
-      import s.implicits._
-      val root = scratchDirs.getOrElseUpdate(s"streamingest:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_streamingest")
-        deleteRecursivelyOnExit(tmp)
-        val r = tmp.toFile.getAbsolutePath
-        documents(s, d).where(col("doc_id") < 200)
-          .select(concat(lit("u"), col("doc_id") % 16).as("user_id"),
-            lit("activity").as("event_type"),
-            lit("schedulechange").as("trigger"),
-            col("doc_id").as("js_time_of_creation"),
-            col("text").as("payload"))
-          .repartition(4).write.parquet(s"$r/in")
-        val src = s.readStream
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(
-            "user_id STRING, event_type STRING, trigger STRING, " +
-              "js_time_of_creation BIGINT, payload STRING"))
-          .option("maxFilesPerTrigger", "1")
-          .parquet(s"$r/in")
-          .as[graft.operators.LogStore.LogDoc]
-        val q = graft.operators.LogStore.ingest(src)
-          .writeStream.format("parquet")
-          .option("path", s"$r/logs")
-          .option("checkpointLocation", s"$r/chk")
-          .partitionBy("user_id")
-          .start()
-        try q.processAllAvailable() finally q.stop()
-        r
-      })
-      graft.operators.LogStore.reassemble(s.read.parquet(s"$root/logs"))
-        .select(col("user_id"), md5(col("payload")).as("payload_md5"))
-        .orderBy("user_id", "payload_md5")
-    }),
-
-    // -- [NS] Trigger.AvailableNow incremental catch-up: the events land in
-    // TWO arrivals (even ids, then odd ids appended); each arrival is
-    // followed by a catch-up run that processes only the files the
-    // checkpoint hasn't seen, appending to one parquet sink. If the second
-    // run re-processed the first arrival the append sink would double those
-    // rows — so the oracle (one aggregate over everything, exactly once) IS
-    // the exactly-once-per-file evidence. Incremental file counts are
-    // additionally asserted in EventStreamsSpec. --
-    "q_stream_availablenow" -> ((s, d) => {
-      val root = scratchDirs.getOrElseUpdate(s"availnow:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_availnow")
-        deleteRecursivelyOnExit(tmp)
-        val r = tmp.toFile.getAbsolutePath
-        val ev = events(s, d).select("event_id", "user_id", "event_type", "value")
-        ev.where(col("event_id") % 2 === 0).write.parquet(s"$r/in")
-        graft.streaming.EventStreams.catchUpAvailableNow(s, s"$r/in", s"$r/sink", s"$r/chk")
-        ev.where(col("event_id") % 2 =!= 0).write.mode("append").parquet(s"$r/in")
-        graft.streaming.EventStreams.catchUpAvailableNow(s, s"$r/in", s"$r/sink", s"$r/chk")
-        r
-      })
-      s.read.parquet(s"$root/sink")
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), dsum(col("value")).as("total"))
-        .orderBy("event_type")
-    }),
-
-    // -- [NS] version-retention vacuum: a multi-version MERGE-sink target
-    // (4 micro-batch versions) vacuumed to keep=1 — old versions deleted,
-    // the served state untouched; the oracle is the same batch rollup the
-    // surviving version must equal, and VacuumSpec asserts the deletions --
-    "q_vacuum" -> ((s, d) => {
-      val root = scratchDirs.getOrElseUpdate(s"vacuum:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_vacuum")
-        deleteRecursivelyOnExit(tmp)
-        val r = tmp.toFile.getAbsolutePath
-        events(s, d)
-          .select("event_id", "ts", "user_id", "event_type", "value", "props")
-          .repartition(4)
-          .write.mode("overwrite").parquet(s"$r/in")
-        val stream = s.readStream
-          .schema(graft.streaming.EventStreams.eventsSchema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(s"$r/in")
-        graft.streaming.EventStreams.upsertUserTotals(stream, s"$r/tgt")
-        graft.operators.Layout.vacuumVersions(s"$r/tgt", keep = 1)
-        r
-      })
-      graft.streaming.EventStreams.latestUpsertState(s, s"$root/tgt")
-        .orderBy("user_id")
-    }),
-
-    // -- [REF R1/R4] the reference's /UserId partition routing end-to-end:
-    // ingest a slice user-bucketed on disk, then point-read ONE user —
-    // the filter must prune to a single bucket directory
-    // (PartitionFilters in the scan; snapshot in docs/PLANS.md) --
-    "q_partitioned_lookup" -> ((s, d) => {
-      import s.implicits._
-      // ingest once per (JVM, sf dir) — same guard as q_bucketed_join — so
-      // the declared result (and its bench time) is the PRUNED READ the
-      // query advertises, not a repeated 64-partition write; the temp dir is
-      // reused across invocations and removed on JVM exit, not leaked
-      val dir = scratchDirs.getOrElseUpdate(s"partlookup:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_partlookup")
-        deleteRecursivelyOnExit(tmp)
-        val out = tmp.toFile.getAbsolutePath + "/logs"
-        val docs = documents(s, d).where(col("doc_id") < 64)
-          .select(
-            // the store's partition column is the int user_bucket, so
-            // type inference never sees the key; the "u" prefix matches
-            // the oracle's user ids
-            concat(lit("u"), col("doc_id")).as("user_id"),
-            lit("activity").as("event_type"),
-            lit("schedulechange").as("trigger"),
-            col("doc_id").as("js_time_of_creation"),
-            col("text").as("payload"))
-          .as[graft.operators.LogStore.LogDoc]
-        graft.operators.LogStore.writeLogs(graft.operators.LogStore.ingest(docs), out)
-        out
-      })
-      val back = s.read.parquet(dir)
-      graft.operators.LogStore.reassemble(back.where(graft.operators.LogStore.forUser(back, "u5")))
-        .select(col("user_id"), col("payload"))
-        .orderBy("user_id")
-    }),
-
-    // -- [NS] explicit-state operator (flatMapGroupsWithState) in batch;
-    // streaming twin in EventStreams, state semantics tested there --
-    "q_stateful_totals" -> ((s, d) =>
-      graft.streaming.EventStreams.statefulUserTotals(s, events(s, d))
-        .orderBy("user_id")),
-
-    // -- [NS] small-files compaction: events deliberately fragmented into
-    // 64 part files once per JVM, then Layout.compact coalesces (narrow,
-    // no shuffle) to ~target-sized files. The declared result is the
-    // compacted table read back — compaction must be content-invisible vs
-    // the plain oracle; the file-count arithmetic is asserted in
-    // LayoutSpec. --
-    "q_compact" -> ((s, d) => {
-      val dir = scratchDirs.getOrElseUpdate(s"compact:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_compact")
-        deleteRecursivelyOnExit(tmp)
-        val frag = tmp.toFile.getAbsolutePath + "/frag"
-        val out = tmp.toFile.getAbsolutePath + "/compacted"
-        events(s, d).select("event_id", "user_id", "event_type", "value")
-          .repartition(64).write.mode("overwrite").parquet(frag)
-        graft.operators.Layout.compact(s, frag, out, targetBytes = 4L * 1024 * 1024)
-        out
-      })
-      s.read.parquet(dir).orderBy("event_id")
-    }),
-
-    // -- [NS] dynamic partition overwrite: events laid out by event_type
-    // once per JVM, then the 'click' partition ALONE is rewritten (GDPR-
-    // style erasure: odd-user rows dropped) via Layout.overwritePartitions.
-    // partitionOverwriteMode=dynamic replaces only the partitions present
-    // in the update batch — the other four partitions' files are byte-
-    // untouched (file identity asserted in LayoutSpec). The oracle
-    // recomputes the post-rewrite table relationally. --
-    "q_partition_overwrite" -> ((s, d) => {
-      val dir = scratchDirs.getOrElseUpdate(s"partoverwrite:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_partow")
-        deleteRecursivelyOnExit(tmp)
-        val out = tmp.toFile.getAbsolutePath + "/events_by_type"
-        val ev = events(s, d).select("event_id", "user_id", "event_type", "value")
-        ev.write.partitionBy("event_type").parquet(out)
-        graft.operators.Layout.overwritePartitions(
-          ev.where(col("event_type") === "click" && col("user_id") % 2 === 0),
-          out, "event_type")
-        out
-      })
-      s.read.parquet(dir)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), dsum(col("value")).as("total"))
-        .orderBy("event_type")
-    }),
-
-    // -- [NS] PARTITION RETENTION (TTL aging): drop every partition older
-    // than the cutoff as a PURE METADATA operation — no data file is
-    // read, planned, or rewritten; surviving partitions byte-identical
-    // (at 100 TB a retention pass that scans anything is already wrong —
-    // cost is O(dropped partition dirs)). The events table lands
-    // day-partitioned, the oldest 7 of its 30 days age out, and the
-    // declared result is the per-day aggregate over the RETAINED table —
-    // a true value oracle (the twin recomputes the same cutoff from the
-    // same table) — with the drop count and cold-file identity as gates. --
-    "q_retention_drop" -> ((s, d) => {
-      val dir = scratchDirs.getOrElseUpdate(s"retention:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_retention")
-        deleteRecursivelyOnExit(tmp)
-        val out = tmp.toFile.getAbsolutePath + "/events_by_day"
-        val ev = events(s, d).select(col("event_id"), col("event_type"),
-          col("value"), to_date(col("ts")).cast("string").as("day"))
-        ev.coalesce(4).write.partitionBy("day").parquet(out)
-        // cutoff: the 7th distinct day — one 1-row sniff, the same value
-        // the twin derives with ORDER BY ... LIMIT 1 OFFSET 6
-        val cutoff = ev.select(col("day")).distinct()
-          .orderBy(col("day")).limit(7).agg(max(col("day"))).head().getString(0)
-        // survivor signature: (size, sha256) — the same tuple/SHA
-        // discipline as every other cold-file identity gate (a summed
-        // mtime+size signature would pass a rewrite whose deltas cancel)
-        def snap(): Map[String, (Long, String)] = {
-          val outM = scala.collection.mutable.Map.empty[String, (Long, String)]
-          val root = java.nio.file.Paths.get(out)
-          val it = java.nio.file.Files.walk(root).iterator()
-          while (it.hasNext) {
-            val p = it.next()
-            val n = p.getFileName.toString
-            if (java.nio.file.Files.isRegularFile(p) &&
-                !n.startsWith("_") && !n.startsWith(".")) {
-              val md = java.security.MessageDigest.getInstance("SHA-256")
-              val sha = md.digest(java.nio.file.Files.readAllBytes(p))
-                .map("%02x".format(_)).mkString
-              outM(root.relativize(p).toString) =
-                (java.nio.file.Files.size(p), sha)
-            }
-          }
-          outM.toMap
-        }
-        val before = snap()
-        val dropped = graft.operators.Layout.dropPartitions(
-          s, out, "day", _ <= cutoff)
-        val after = snap()
-        // survivors must be byte-identical — untouched size and content
-        // hash (no rewrite happened; the drop is directory metadata only)
-        val survivorsIdentical = after.forall { case (f, sig) =>
-          before.get(f).contains(sig)
-        }
-        require(dropped.size == 7 && survivorsIdentical &&
-          after.nonEmpty && before.size > after.size,
-          s"retention must drop exactly the 7 oldest days metadata-only " +
-            s"(dropped=${dropped.size}, identical=$survivorsIdentical)")
-        out
-      })
-      s.read.parquet(dir)
-        .groupBy(col("day"))
-        .agg(count(lit(1)).as("n"), dsum(col("value")).as("total"))
-        .orderBy("day")
-    }),
-
-    // -- [NS] SQL DDL surface: CREATE OR REPLACE TEMP VIEW + CTAS
-    // (CREATE TABLE ... USING PARQUET LOCATION ... AS SELECT) through the
-    // session catalog, then a pure-SQL join through both catalog objects.
-    // The CTAS materializes once per JVM (scratch guard); the views are
-    // metadata, re-registered per call. Oracle recomputes the same join
-    // directly over the base parquet. --
-    "q_sql_ddl" -> ((s, d) => {
-      // table name carries the sf dir (hex of its hash): two dirs in one
-      // JVM (spec at sf0.001, a dev Verify at sf0.01) must not clobber one
-      // catalog entry out from under the other's scratch guard
-      val tbl = f"graft_cust_orders_${d.hashCode & 0x7fffffff}%x"
-      scratchDirs.getOrElseUpdate(s"ctas:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_ctas")
-        deleteRecursivelyOnExit(tmp)
-        val out = tmp.toFile.getAbsolutePath + "/cust_orders"
-        Tables.orders(s, d).createOrReplaceTempView("graft_orders_src")
-        s.sql(s"DROP TABLE IF EXISTS `$tbl`")
-        s.sql(
-          s"""CREATE TABLE `$tbl` USING PARQUET LOCATION '$out' AS
-             |SELECT o_custkey, count(*) AS n_orders,
-             |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS spend
-             |FROM graft_orders_src GROUP BY o_custkey""".stripMargin)
-        out
-      })
-      Tables.customer(s, d).createOrReplaceTempView("graft_customer_v")
-      s.sql(
-        s"""SELECT c.c_mktsegment, count(*) AS n_cust,
-           |  CAST(sum(CAST(o.spend AS DECIMAL(18,2))) AS DOUBLE) AS segment_spend
-           |FROM graft_customer_v c
-           |JOIN `$tbl` o ON c.c_custkey = o.o_custkey
-           |GROUP BY c.c_mktsegment
-           |ORDER BY c.c_mktsegment""".stripMargin)
-    }),
-
-    // -- [NS] SCD-1 upsert (MERGE): a deterministic change set derived from
-    // the base (updates for id%100=0, deletes for id%97=0 not already
-    // updated, inserts at id+1000000) applied via Layout.upsert — one
-    // broadcast anti join (the base never shuffles) plus a union. The
-    // oracle recomputes the merge relationally. --
-    "q_upsert" -> ((s, d) => {
-      val base = events(s, d).select("event_id", "event_type", "value")
-      val updates = base.where(col("event_id") % 100 === 0)
-        .select(col("event_id"), col("event_type"),
-          (col("value") + 1000).as("value"), lit(false).as("_deleted"))
-      val deletes = base.where(col("event_id") % 97 === 0 && col("event_id") % 100 =!= 0)
-        .select(col("event_id"), col("event_type"), col("value"), lit(true).as("_deleted"))
-      val inserts = base.where(col("event_id") % 101 === 0)
-        .select((col("event_id") + 1000000).as("event_id"),
-          lit("ins").as("event_type"), lit(1.0).as("value"), lit(false).as("_deleted"))
-      graft.operators.Layout
-        .upsert(base, updates.unionByName(deletes).unionByName(inserts), "event_id")
-        .orderBy("event_id")
-    }),
-
-    // -- [NS] SCD-2 history-preserving upsert: where q_upsert overwrites,
-    // this closes the replaced current rows (is_current=false) and appends
-    // the changes as version max+1 (1 for brand-new keys). Change set:
-    // balance updates for s_suppkey%10=0, inserts at s_suppkey+100000 for
-    // s_suppkey%7=0. All three joins broadcast the small change side — the
-    // base never shuffles. The oracle recomputes the history relationally. --
-    "q_scd2" -> ((s, d) => {
-      val supp = Tables.supplier(s, d)
-      val base = supp.select(col("s_suppkey"), col("s_name"), col("s_acctbal"))
-        .withColumn("version", lit(1L))
-        .withColumn("is_current", lit(true))
-      val updates = supp.where(col("s_suppkey") % 10 === 0)
-        .select(col("s_suppkey"), col("s_name"),
-          (col("s_acctbal") + 500).as("s_acctbal"))
-      val inserts = supp.where(col("s_suppkey") % 7 === 0)
-        .select((col("s_suppkey") + 100000).as("s_suppkey"),
-          lit("NEW").as("s_name"), lit(0.0).as("s_acctbal"))
-      graft.operators.Layout
-        .scd2Upsert(base, updates.unionByName(inserts), "s_suppkey")
-        .orderBy("s_suppkey", "version")
-    }),
-
-    // -- [NS] z-order clustered layout: events rewritten once per JVM with
-    // bit-interleaved (user_id, event_id) range partitioning
-    // (Layout.zorderWrite), then read back through a 2-D box predicate —
-    // the multi-dimensional data-skipping layout (each file covers a
-    // compact z-range, so parquet footer min/max prune most files; a
-    // single-column sort can only serve one of the two predicates).
-    // Pruning counts are asserted in LayoutSpec; the layout must be
-    // result-invisible vs the plain filtered oracle. --
-    // -- [NS] Hilbert-curve clustered layout: same contract as the z-order
-    // twin below, better box locality (no Morton diagonal jumps); pruning
-    // comparison asserted in LayoutSpec, layout result-invisible vs the
-    // same plain-filter oracle --
-    "q_hilbert_layout" -> ((s, d) => {
-      val dir = scratchDirs.getOrElseUpdate(s"hilbert:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_hilbert")
-        deleteRecursivelyOnExit(tmp)
-        val out = tmp.toFile.getAbsolutePath + "/events_h"
-        graft.operators.Layout.hilbertWrite(
-          events(s, d).select("event_id", "user_id", "event_type", "value"),
-          "user_id", "event_id", out, nFiles = 16)
-        out
-      })
-      s.read.parquet(dir)
-        .where(col("user_id").between(3, 7) && col("event_id").between(100, 20000))
-        .orderBy("event_id")
-    }),
-
-    "q_zorder_layout" -> ((s, d) => {
-      val dir = scratchDirs.getOrElseUpdate(s"zorder:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_zorder")
-        deleteRecursivelyOnExit(tmp)
-        val out = tmp.toFile.getAbsolutePath + "/events_z"
-        graft.operators.Layout.zorderWrite(
-          events(s, d).select("event_id", "user_id", "event_type", "value"),
-          "user_id", "event_id", out, nFiles = 16)
-        out
-      })
-      s.read.parquet(dir)
-        .where(col("user_id").between(3, 7) && col("event_id").between(100, 20000))
-        .orderBy("event_id")
-    }),
-
-    // -- [NS] time-clustered layout: events rewritten once per JVM range-
-    // partitioned + sorted on ts_ns (Layout.clusteredWrite — the workhorse
-    // production layout for a time-series table), then read through a
-    // time-range predicate that parquet footer stats serve from 1-2 of the
-    // 16 files (pruning asserted in LayoutSpec). Layout must be
-    // result-invisible vs the plain filtered oracle. --
-    "q_time_clustered" -> ((s, d) => {
-      val dir = scratchDirs.getOrElseUpdate(s"clustered:$d", {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_clustered")
-        deleteRecursivelyOnExit(tmp)
-        val out = tmp.toFile.getAbsolutePath + "/events_t"
-        graft.operators.Layout.clusteredWrite(
-          events(s, d).select("event_id", "ts_ns", "event_type", "value"),
-          "ts_ns", out, nFiles = 16)
-        out
-      })
-      // ts_ns-only predicate (NOT nsRange): in THIS layout the written
-      // files physically carry ts_ns, so the nanos comparison is the one
-      // that parquet footer stats serve — and there is no ts column here
-      s.read.parquet(dir)
-        .where(col("ts_ns") >= 1704412800000000000L &&
-          col("ts_ns") < 1704672000000000000L) // [2024-01-05, 2024-01-08) UTC
-        // the raw-nanos column drives the pruning predicate; the declared
-        // output carries the µs timestamp (nanos exceed DuckDB's precision)
-        .select(col("event_id"), timestamp_micros(expr("ts_ns div 1000")).as("ts"),
-          col("event_type"), col("value"))
-        .orderBy("event_id")
-    }),
-
-    // -- [NS] bucketed co-located join: write both sides bucketed+sorted by
-    // the join key, then join through the catalog — no exchange on either
-    // side (asserted in LayoutSpec). Tables are rewritten each invocation
-    // so a regenerated testdata set can never leak stale rows through the
-    // warehouse. This is the declared-query form of Layout.writeBucketed,
-    // the 100 TB answer to repeated big-big joins.
-    "q_bucketed_join" -> ((s, d) => {
-      // write once per session: the SF dir is fixed for a JVM's lifetime, so
-      // an in-catalog table is current; a FRESH JVM never sees the previous
-      // session's in-memory catalog and always rewrites (and writeBucketed
-      // clears any stale on-disk location first), so regenerated testdata
-      // still can't leak stale rows
-      if (!s.catalog.tableExists("bl_orders"))
-        graft.operators.Layout.writeBucketed(
-          Tables.orders(s, d).select("o_orderkey", "o_orderpriority"),
-          "bl_orders", "o_orderkey", 8)
-      if (!s.catalog.tableExists("bl_lineitem"))
-        graft.operators.Layout.writeBucketed(
-          Tables.lineitem(s, d).select("l_orderkey", "l_extendedprice"),
-          "bl_lineitem", "l_orderkey", 8)
-      graft.operators.Layout.readTable(s, "bl_lineitem")
-        .join(graft.operators.Layout.readTable(s, "bl_orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"), dsum(col("l_extendedprice")).as("revenue"))
-        .orderBy("o_orderpriority")
-    }),
-
-    // -- [NS] skew-immune two-phase aggregate (event_type is low-cardinality
-    // = the skewed-key case; result must equal the direct groupBy) --
-    "q_salted_agg" -> ((s, d) =>
-      graft.operators.Layout.saltedAgg(events(s, d), col("event_type"), col("value"))
-        .orderBy("key")),
-
-    // -- [REF R8] ULID id generation properties (ids themselves are
-    // nondeterministic; the validated invariants are not) --
-    "q_ulid_props" -> ((s, d) => {
-      val e = events(s, d).where(col("event_id") < 1000)
-        .select(col("event_id"), col("user_id"), unix_millis(col("ts")).as("ms"))
-        .withColumn("id", graft.functions.Ulid.compositeId(
-          col("user_id"), lit("preview"), col("ms")))
-      e.select(col("event_id"), split(col("id"), "_").as("parts"))
-        .agg(
-          count(lit(1)).as("n"),
-          sum(when(size(col("parts")) === 4 &&
-            length(element_at(col("parts"), 3)) === 26, 1L).otherwise(0L)).as("n_valid"))
-    }),
-  )
-
-  /** DuckDB-equivalent SQL per query. Hash-seeded / approximate / codec-
-    * specific operators are oracled through deterministic invariants (the
-    * pattern proven on q_dedup_recall / q_sim_ivf_recall): planted-probe
-    * recall, truth-set equality under the corpus's clean J-separation,
-    * fingerprint injectivity, chunker cap/lossless/parity audits. Each
-    * invariant is stated at the query definition and verified empirically
-    * at the gate SF.
-    */
-  /** The unrolled DuckDB twin of `Corpus.bpeTrain`: `merges` CTE stages,
-    * each re-counting adjacent symbol pairs of the CURRENT dictionary,
-    * picking the (n DESC, pair) winner, and applying the same
-    * boundary-safe literal replace. Still plain ANSI-ish SQL — the loop
-    * here only GENERATES the text (the `q_pagerank_sim` discipline for
-    * iterative algorithms).
-    */
-  /** The shared WITH-chain of the BPE twins: dictionary d0 (marked-symbol
-    * word histogram), then per merge round i the pair census p_i, the
-    * greedy rule b_i, and the merged dictionary d_{i+1} — the exact
-    * unrolled form of Corpus.bpeTrain's loop. bpeTrainOracle reads the
-    * rule trajectory off it; bpeEncodeOracle reads the FINAL dictionary
-    * (training's replay IS encoding the training corpus).
-    */
-  private def bpeDictChain(merges: Int, trainWhere: String = ""): String = {
-    val sb = new StringBuilder
-    sb ++= s"""WITH d0 AS MATERIALIZED (
-      |  SELECT regexp_replace(word, '(.)', '<\\1>', 'g') AS w, freq FROM (
-      |    SELECT word, count(*) AS freq FROM (
-      |      SELECT unnest(list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')) AS word
-      |      FROM documents$trainWhere)
-      |    WHERE regexp_matches(word, '^[a-z]{2,}$$') GROUP BY 1))""".stripMargin
-    for (i <- 0 until merges) {
-      sb ++= s"""
-        |, p$i AS MATERIALIZED (SELECT '<' || z[1] || '><' || z[2] || '>' AS pair, CAST(sum(freq) AS BIGINT) AS n
-        |    FROM (SELECT unnest(list_zip(s[1:len(s)-1], s[2:len(s)])) AS z, freq
-        |          FROM (SELECT string_split(trim(w, '<>'), '><') AS s, freq FROM d$i))
-        |    GROUP BY 1)
-        |, b$i AS MATERIALIZED (SELECT pair, n FROM p$i ORDER BY n DESC, pair LIMIT 1)
-        |, d${i + 1} AS MATERIALIZED (SELECT replace(w, (SELECT pair FROM b$i),
-        |    (SELECT replace(pair, '><', '') FROM b$i)) AS w, freq FROM d$i)""".stripMargin
-    }
-    sb.toString
-  }
-
-  private def bpeTrainOracle(merges: Int): String = {
-    val sb = new StringBuilder
-    sb ++= bpeDictChain(merges)
-    sb ++= "\nSELECT * FROM (\n"
-    sb ++= (0 until merges).map { i =>
-      s"""  SELECT ${i + 1} AS step, regexp_extract(pair, '^<(.*?)><', 1) AS left_sym,
-         |    regexp_extract(pair, '><(.*?)>$$', 1) AS right_sym, n FROM b$i""".stripMargin
-    }.mkString("\n  UNION ALL\n")
-    sb ++= "\n) ORDER BY step"
-    sb.toString
-  }
-
-  /** Encoding the training corpus with the trained merges = the chain's
-    * FINAL dictionary, exploded to symbols and histogrammed.
-    */
-  private def bpeEncodeOracle(merges: Int, k: Int): String =
-    bpeDictChain(merges) + s"""
-      |SELECT sym, CAST(sum(freq) AS BIGINT) AS n_tokens FROM (
-      |  SELECT unnest(string_split(trim(w, '<>'), '><')) AS sym, freq FROM d$merges)
-      |GROUP BY 1 ORDER BY n_tokens DESC, sym LIMIT $k""".stripMargin
-
-  /** Held-out twin of [[bpeEncodeOracle]]: the d0..dN/b0..bN chain trains
-    * on the doc_id >= 50 split, an e0..eN chain replays the SAME b_i
-    * merge rules over the doc_id < 50 EVAL dictionary, and the final
-    * histogram flags membership against the trained vocab (d$merges'
-    * distinct symbols).
-    */
-  private def bpeEncodeHeldoutOracle(merges: Int, k: Int): String = {
-    val sb = new StringBuilder
-    sb ++= bpeDictChain(merges, trainWhere = " WHERE doc_id >= 50")
-    sb ++= s"""
-      |, e0 AS MATERIALIZED (
-      |  SELECT regexp_replace(word, '(.)', '<\\1>', 'g') AS w, freq FROM (
-      |    SELECT word, count(*) AS freq FROM (
-      |      SELECT unnest(list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')) AS word
-      |      FROM documents WHERE doc_id < 50)
-      |    WHERE regexp_matches(word, '^[a-z]{2,}$$') GROUP BY 1))""".stripMargin
-    for (i <- 0 until merges) {
-      sb ++= s"""
-        |, e${i + 1} AS MATERIALIZED (SELECT replace(w, (SELECT pair FROM b$i),
-        |    (SELECT replace(pair, '><', '') FROM b$i)) AS w, freq FROM e$i)""".stripMargin
-    }
-    sb ++= s"""
-      |, tv AS (SELECT DISTINCT unnest(string_split(trim(w, '<>'), '><')) AS sym FROM d$merges)
-      |SELECT h.sym, h.n_tokens, (tv.sym IS NOT NULL) AS in_vocab FROM (
-      |  SELECT sym, CAST(sum(freq) AS BIGINT) AS n_tokens FROM (
-      |    SELECT unnest(string_split(trim(w, '<>'), '><')) AS sym, freq FROM e$merges)
-      |  GROUP BY 1) h
-      |LEFT JOIN tv ON h.sym = tv.sym
-      |ORDER BY n_tokens DESC, h.sym LIMIT $k""".stripMargin
-    sb.toString
-  }
-
-  /** The full-scan BM25 twin (identical operation order and rounding
-    * discipline as [[graft.operators.Corpus.bm25TopK]] /
-    * [[graft.operators.TextIndex.bm25TopKStored]]: ln at 6 dp, per-term
-    * DECIMAL(18,8), final 4 dp), parameterized by the corpus relation —
-    * the stored-index lifecycle gates oracle against the same scorer
-    * over whichever corpus the maintained index should now equal.
-    */
-  private def bm25OracleSql(corpus: String): String =
-    s"""WITH toks AS (
-       |  SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')) AS term
-       |  FROM $corpus),
-       |dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY 1),
-       |stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-       |                 CAST(sum(dl) AS DOUBLE) AS total_toks FROM dl),
-       |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks
-       |       WHERE term IN ('dup', 'merge', 'scan') GROUP BY 1, 2),
-       |dfreq AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY 1),
-       |scored AS (
-       |  SELECT tf.doc_id,
-       |    CAST(round(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)), 6)
-       |      * (tf * (1.2 + 1.0))
-       |      / (tf + 1.2 * (1.0 - 0.75 + 0.75 * dl.dl / (total_toks / n_docs)))
-       |      AS DECIMAL(18,8)) AS score_t
-       |  FROM tf JOIN dfreq USING (term) JOIN dl ON tf.doc_id = dl.doc_id, stats)
-       |SELECT doc_id, round(CAST(sum(score_t) AS DOUBLE), 4) AS bm25
-       |FROM scored GROUP BY doc_id
-       |ORDER BY bm25 DESC, doc_id
-       |LIMIT 20""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "q_scan_project" ->
-      "SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type FROM events ORDER BY event_id",
-
-    // CSV round-trip is the identity on the original dim table
-    "q_source_csv" ->
-      "SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey",
-
-    // 25 well-formed nation rows survive; exactly the 2 injected garbage
-    // lines land in quarantine
-    "q_source_csv_corrupt" ->
-      "SELECT (SELECT count(*) FROM nation) AS n_good, CAST(2 AS BIGINT) AS n_corrupt",
-
-    // the map/struct plumbing is Spark-side; every output is derivable
-    // directly from the base columns
-    "q_complex_types" ->
-      """SELECT event_id, event_type AS type_val, CAST(2 AS INT) AS n_keys,
-        |  'type,uid' AS keys_csv, user_id AS uid, round(value, 4) AS v
-        |FROM events WHERE event_id < 1000 ORDER BY event_id""".stripMargin,
-
-    // JSON round-trip is the identity on the original dim table
-    "q_source_json" ->
-      "SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey",
-
-    // ORC round-trip is the identity (ORC stores the schema, so the read
-    // needs none passed; the double column survives bit-exactly)
-    "q_source_orc" ->
-      "SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier ORDER BY s_suppkey",
-
-    // XML round-trips are the identity on their source tables
-    "q_source_xml" ->
-      "SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier ORDER BY s_suppkey",
-
-    "q_xml_roundtrip" ->
-      "SELECT doc_id, lang, source, text FROM documents ORDER BY doc_id",
-
-    // text (line-oriented) round-trip is the identity on the source column
-    "q_source_text" ->
-      "SELECT n_name FROM nation ORDER BY n_name",
-
-    // the mergeSchema read equals the manual union: early batch rows carry
-    // NULL for the late-added column, both batches' shared columns intact
-    "q_schema_merge" ->
-      """SELECT event_id, value, CAST(NULL AS VARCHAR) AS event_type
-        |FROM events WHERE event_id < 500
-        |UNION ALL
-        |SELECT event_id, value, event_type
-        |FROM events WHERE event_id >= 500 AND event_id < 1000
-        |ORDER BY event_id""".stripMargin,
-
-    // byte length scanned from each written file must equal the UTF-8
-    // length of the text it was written from
-    "q_source_binary" ->
-      """SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
-        |FROM documents WHERE doc_id < 64 ORDER BY doc_id""".stripMargin,
-
-    // R7 raw-bytes sink round-trip is the identity on the text itself
-    "q_file_sink" ->
-      "SELECT doc_id, text FROM documents WHERE doc_id < 64 ORDER BY doc_id",
-
-    // single-file export round-trip equals the aggregate computed directly
-    "q_sink_singlefile" ->
-      """SELECT n_regionkey, count(*) AS n_nations FROM nation
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_point_lookup" ->
-      "SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value, props FROM events WHERE event_id = 777 ORDER BY event_id",
-
-    "q_filter_type" ->
-      "SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, value FROM events WHERE event_type = 'click' ORDER BY event_id",
-
-    "q_filter_timerange" ->
-      ("SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type FROM events " +
-        "WHERE ts >= TIMESTAMP '2024-01-10 00:00:00' AND ts < TIMESTAMP '2024-01-12 00:00:00' ORDER BY event_id"),
-
-    "q_log_composite" ->
-      ("SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value FROM events " +
-        "WHERE user_id = 7 AND event_type = 'click' " +
-        "AND ts >= TIMESTAMP '2024-01-05 00:00:00' AND ts < TIMESTAMP '2024-01-20 00:00:00' " +
-        "ORDER BY ts DESC, event_id LIMIT 100"),
-
-    "q_topk_global" ->
-      ("SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value FROM events " +
-        "ORDER BY value DESC, event_id LIMIT 100"),
-
-    "q_chunk_split" ->
-      """WITH c AS (SELECT doc_id, text, CAST(ceil(length(text)/64.0) AS INT) AS total_splits
-        |  FROM documents WHERE length(text) > 0)
-        |SELECT doc_id, CAST(i AS INT) AS split_index,
-        |  substring(text, CAST(i*64+1 AS INT), 64) AS chunk, total_splits
-        |FROM (SELECT doc_id, text, total_splits, unnest(range(CAST(total_splits AS BIGINT))) AS i FROM c)
-        |ORDER BY doc_id, split_index""".stripMargin,
-
-    "q_reassemble" ->
-      """WITH c AS (SELECT doc_id, text, CAST(ceil(length(text)/64.0) AS INT) AS total_splits
-        |  FROM documents WHERE length(text) > 0),
-        |ch AS (SELECT doc_id, CAST(i AS INT) AS split_index,
-        |  substring(text, CAST(i*64+1 AS INT), 64) AS chunk
-        |  FROM (SELECT doc_id, text, total_splits, unnest(range(CAST(total_splits AS BIGINT))) AS i FROM c)),
-        |re AS (SELECT doc_id, string_agg(chunk, '' ORDER BY split_index) AS rebuilt FROM ch GROUP BY doc_id)
-        |SELECT count(*) AS n_docs,
-        |  CAST(sum(CASE WHEN re.rebuilt = d.text THEN 1 ELSE 0 END) AS BIGINT) AS n_match
-        |FROM re JOIN documents d USING (doc_id)""".stripMargin,
-
-    "q_reassemble_agg" ->
-      "SELECT count(*) AS n_docs, count(*) AS n_match FROM (SELECT 1 FROM documents WHERE length(text) > 0)",
-
-    "q_roundtrip_codec" ->
-      "SELECT count(*) AS n_docs, count(*) AS n_match FROM documents",
-
-    "q_agg_type_day" ->
-      """SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_rollup_type_day" ->
-      """SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n FROM events
-        |GROUP BY ROLLUP (event_type, CAST(ts AS DATE))
-        |ORDER BY event_type NULLS FIRST, day NULLS FIRST""".stripMargin,
-
-    "q_pivot_type" ->
-      """SELECT CAST(ts AS DATE) AS day,
-        |  count(*) FILTER (event_type = 'click') AS click,
-        |  count(*) FILTER (event_type = 'error') AS error,
-        |  count(*) FILTER (event_type = 'purchase') AS purchase,
-        |  count(*) FILTER (event_type = 'signup') AS signup,
-        |  count(*) FILTER (event_type = 'view') AS view
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_distinct_users" ->
-      "SELECT event_type, count(DISTINCT user_id) AS n_users FROM events GROUP BY 1 ORDER BY 1",
-
-    "q_window_topk_user" ->
-      """SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, rn FROM (
-        |  SELECT user_id, event_id, ts,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id) AS rn
-        |  FROM events) WHERE rn <= 3 ORDER BY user_id, rn""".stripMargin,
-
-    "q_window_running" ->
-      """SELECT user_id, event_id,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_value
-        |FROM events ORDER BY user_id, event_id""".stripMargin,
-
-    "q_window_dist" ->
-      """SELECT event_id,
-        |  ntile(4) OVER (PARTITION BY event_type ORDER BY value, event_id) AS quartile,
-        |  round(percent_rank() OVER (PARTITION BY event_type ORDER BY value, event_id), 6) AS pct_rank,
-        |  round(cume_dist() OVER (PARTITION BY event_type ORDER BY value, event_id), 6) AS cume
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q_value_stats" ->
-      """SELECT event_type, count(*) AS n,
-        |  round(min(value), 2) AS min_v, round(max(value), 2) AS max_v,
-        |  round(CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE) / count(*), 4) AS mean_v,
-        |  round((CAST(sum(CAST(value * value AS DECIMAL(28,6))) AS DOUBLE) -
-        |    CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE) *
-        |    CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE) / count(*)) / (count(*) - 1), 4) AS var_v
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // CAST to BIGINT: DuckDB's sum(INTEGER) returns HUGEINT, which a
-    // pandas-based fetch renders as a float ("1.0" vs Spark's "1") — the
-    // round-1 hash mismatch on this query despite identical values
-    "q_window_qualify" ->
-      """SELECT user_id, event_type, event_id, value FROM events
-        |QUALIFY row_number() OVER (PARTITION BY user_id, event_type
-        |  ORDER BY ts DESC, event_id DESC) = 1
-        |ORDER BY user_id, event_type""".stripMargin,
-
-    "q_bitwise_agg" ->
-      """SELECT event_type, bit_and(user_id) AS band, bit_or(user_id) AS bor,
-        |  bit_xor(event_id) AS bxor
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_listagg" ->
-      """SELECT source, md5(string_agg(text, '|' ORDER BY doc_id)) AS agg_md5,
-        |  count(*) AS n_docs
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_gapfill" ->
-      """WITH daily AS (
-        |  SELECT user_id, CAST(ts AS DATE) AS day,
-        |    CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS v
-        |  FROM events GROUP BY 1, 2),
-        |cal AS (
-        |  SELECT CAST(unnest(generate_series(DATE '2024-01-01', DATE '2024-01-30',
-        |    INTERVAL 1 DAY)) AS DATE) AS day),
-        |users AS (SELECT DISTINCT user_id FROM events)
-        |SELECT user_id, day, v,
-        |  last_value(v IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY day
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS filled
-        |FROM users CROSS JOIN cal LEFT JOIN daily USING (user_id, day)
-        |ORDER BY user_id, day""".stripMargin,
-
-    "q_funnel" ->
-      """WITH v AS (SELECT user_id, min(ts) AS t_view FROM events
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |c AS (SELECT e.user_id, min(e.ts) AS t_click FROM events e JOIN v USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts > t_view GROUP BY 1),
-        |p AS (SELECT e.user_id, min(e.ts) AS t_purchase FROM events e JOIN c USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts > t_click GROUP BY 1)
-        |SELECT (SELECT count(*) FROM v) AS n_view,
-        |       (SELECT count(*) FROM c) AS n_click,
-        |       (SELECT count(*) FROM p) AS n_purchase""".stripMargin,
-
-    "q_retention" ->
-      """WITH act AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
-        |first AS (SELECT user_id, min(day) AS cohort FROM act GROUP BY 1)
-        |SELECT cohort, CAST(date_diff('day', cohort, day) AS INT) AS day_offset,
-        |  count(*) AS n_active
-        |FROM act JOIN first USING (user_id)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_sessionize" ->
-      """SELECT user_id, event_id,
-        |  CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        |FROM (
-        |  SELECT user_id, event_id, ts,
-        |    CASE WHEN prev_ms IS NULL OR epoch_ms(ts) - prev_ms > 1800000 THEN 1 ELSE 0 END AS new_session
-        |  FROM (SELECT user_id, event_id, ts,
-        |    lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ms FROM events))
-        |ORDER BY user_id, event_id""".stripMargin,
-
-    "q_asof_join" ->
-      """SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, CAST(last_click_ts AS TIMESTAMP) AS last_click_ts FROM (
-        |  SELECT event_id, user_id, ts, event_type,
-        |    last_value(CASE WHEN event_type = 'click' THEN ts END IGNORE NULLS)
-        |      OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS last_click_ts
-        |  FROM events)
-        |WHERE event_type = 'purchase' ORDER BY event_id""".stripMargin,
-
-    "q_asof_forward" ->
-      """SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, CAST(next_purchase_ts AS TIMESTAMP) AS next_purchase_ts FROM (
-        |  SELECT event_id, user_id, ts, event_type,
-        |    first_value(CASE WHEN event_type = 'purchase' THEN ts END IGNORE NULLS)
-        |      OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |            ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS next_purchase_ts
-        |  FROM events)
-        |WHERE event_type = 'click' ORDER BY event_id""".stripMargin,
-
-    "q_interval_join" ->
-      """SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
-        |  CAST(c.ts AS TIMESTAMP) AS click_ts, CAST(p.ts AS TIMESTAMP) AS purchase_ts
-        |FROM (SELECT * FROM events WHERE event_type = 'click') c
-        |JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
-        |  ON c.user_id = p.user_id
-        | AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR
-        |ORDER BY c.user_id, click_id, purchase_id""".stripMargin,
-
-    "q_tumbling_1d" ->
-      """SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day_start, count(*) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_star_join" ->
-      """SELECT r_name,
-        |  CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-        |  count(*) AS n
-        |FROM lineitem
-        |JOIN orders   ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation   ON c_nationkey = n_nationkey
-        |JOIN region   ON n_regionkey = r_regionkey
-        |GROUP BY r_name ORDER BY r_name""".stripMargin,
-
-    "q_join_outer" ->
-      """SELECT c_custkey, c_name, count(o_orderkey) AS n_orders,
-        |  CAST(sum(CAST(coalesce(o_totalprice, 0.0) AS DECIMAL(18,4))) AS DOUBLE) AS total_spend
-        |FROM customer LEFT OUTER JOIN orders ON c_custkey = o_custkey
-        |GROUP BY c_custkey, c_name ORDER BY c_custkey""".stripMargin,
-
-    // hints are result-invisible: identical twin to q_join_outer
-    "q_join_hint" ->
-      """SELECT c_custkey, c_name, count(o_orderkey) AS n_orders,
-        |  CAST(sum(CAST(coalesce(o_totalprice, 0.0) AS DECIMAL(18,4))) AS DOUBLE) AS total_spend
-        |FROM customer LEFT OUTER JOIN orders ON c_custkey = o_custkey
-        |GROUP BY c_custkey, c_name ORDER BY c_custkey""".stripMargin,
-
-    // empty arrays survive as one null row (the outer-generator contract)
-    "q_explode_outer" ->
-      """WITH a AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 10 = 0 THEN CAST([] AS VARCHAR[])
-        |         ELSE list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')[1:3] END AS arr
-        |  FROM documents)
-        |SELECT doc_id,
-        |  unnest(CASE WHEN len(arr) = 0 THEN [CAST(NULL AS VARCHAR)] ELSE arr END) AS tok
-        |FROM a
-        |ORDER BY doc_id, tok NULLS LAST""".stripMargin,
-
-    "q_topk_agg" ->
-      """SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, rn FROM (
-        |  SELECT user_id, event_id, ts,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id) AS rn
-        |  FROM events) WHERE rn <= 3 ORDER BY user_id, rn""".stripMargin,
-
-    "q_window_rank" ->
-      """SELECT event_id,
-        |  rank() OVER (PARTITION BY event_type ORDER BY value DESC, event_id) AS rnk,
-        |  dense_rank() OVER (PARTITION BY event_type ORDER BY value DESC, event_id) AS drnk,
-        |  lag(event_id) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_event,
-        |  lead(event_id) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_event
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q_join_semi" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey) ORDER BY c_custkey""".stripMargin,
-
-    "q_join_anti" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey) ORDER BY c_custkey""".stripMargin,
-
-    "q_set_union" ->
-      """SELECT user_id, event_type FROM (
-        |  SELECT user_id, event_type FROM events WHERE event_type = 'click'
-        |  UNION
-        |  SELECT user_id, event_type FROM events WHERE event_type = 'signup')
-        |ORDER BY user_id, event_type""".stripMargin,
-
-    "q_set_except" ->
-      """SELECT user_id FROM (
-        |  SELECT DISTINCT user_id FROM events WHERE event_type = 'error' AND ts < TIMESTAMP '2024-01-08 00:00:00'
-        |  EXCEPT
-        |  SELECT DISTINCT user_id FROM events WHERE event_type = 'error' AND ts >= TIMESTAMP '2024-01-22 00:00:00')
-        |ORDER BY user_id""".stripMargin,
-
-    "q_set_except_all" ->
-      """SELECT user_id, count(*) AS n FROM (
-        |  SELECT user_id FROM events WHERE event_type IN ('click', 'view')
-        |  EXCEPT ALL
-        |  SELECT user_id FROM events WHERE event_type = 'view')
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q_json_props" ->
-      "SELECT event_id, CAST(json_extract_string(props, '$.k') AS INT) AS k FROM events ORDER BY event_id",
-
-    "q_variant_get" ->
-      """SELECT event_id, CAST(json_extract_string(props, '$.k') AS INT) AS k,
-        |  CAST(NULL AS VARCHAR) AS absent
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q_scalar_subquery" ->
-      """SELECT p_partkey, p_type, p_size FROM part p
-        |WHERE CAST(p_size AS BIGINT) *
-        |      (SELECT count(*) FROM part p2 WHERE p2.p_type = p.p_type)
-        |    > (SELECT CAST(sum(p_size) AS BIGINT) FROM part p2
-        |       WHERE p2.p_type = p.p_type)
-        |ORDER BY p_partkey""".stripMargin,
-
-    "q_dedup_exact" ->
-      """SELECT min(doc_id) AS doc_id, count(*) AS n_copies FROM documents
-        |GROUP BY md5(text) ORDER BY doc_id""".stripMargin,
-
-    "q_embed_stats" ->
-      """SELECT label, count(*) AS n,
-        |  round(CAST(sum(CAST(sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x*x)))
-        |    AS DECIMAL(18,6))) AS DOUBLE) / count(*), 4) AS avg_norm
-        |FROM embeddings GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_dedup_exact_norm" ->
-      """SELECT min(doc_id) AS doc_id, count(*) AS n_copies FROM documents
-        |GROUP BY md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'))
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_sim_topk" ->
-      """SELECT e2.vec_id AS vec_id,
-        |  round(list_cosine_similarity(CAST(e2.embedding AS DOUBLE[]), CAST(e1.embedding AS DOUBLE[])), 4) AS cosine
-        |FROM embeddings e1, embeddings e2
-        |WHERE e1.vec_id = 0 AND e2.vec_id <> 0
-        |ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin,
-
-    "q_text_stats" ->
-      """SELECT lang, count(*) AS n_docs,
-        |  CAST(sum(len(list_filter(string_split_regex(text, '\s+'), x -> x <> ''))) AS BIGINT) AS n_tokens,
-        |  round(CAST(sum(n_chars) AS DOUBLE) / count(*), 4) AS avg_chars
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "q_mm_meta" ->
-      """SELECT doc_id AS media_id, CAST(doc_id % 3 AS INT) AS kind_id, true AS valid,
-        |  CAST(32 + doc_id % 96 AS INT) AS width, CAST(24 + doc_id % 72 AS INT) AS height,
-        |  CAST(octet_length(encode(text)) AS INT) AS body_bytes
-        |FROM documents ORDER BY media_id""".stripMargin,
-
-    "q_mm_decode_batch" ->
-      """SELECT doc_id AS media_id, CAST(doc_id % 3 AS INT) AS kind_id, true AS valid,
-        |  CAST(32 + doc_id % 96 AS INT) AS width, CAST(24 + doc_id % 72 AS INT) AS height,
-        |  CAST(octet_length(encode(text)) AS INT) AS body_bytes
-        |FROM documents ORDER BY media_id""".stripMargin,
-
-    // the real-header twin: the oracle recomputes the dimension arithmetic
-    // and the format parity; the Spark side must recover both from genuine
-    // PNG/JPEG bytes
-    "q_mm_meta_real" ->
-      """SELECT doc_id AS media_id,
-        |  CASE WHEN doc_id % 2 = 0 THEN 'png' ELSE 'jpeg' END AS format,
-        |  true AS valid,
-        |  CAST(32 + doc_id % 96 AS INT) AS width,
-        |  CAST(24 + doc_id % 72 AS INT) AS height
-        |FROM documents ORDER BY media_id""".stripMargin,
-
-    // full real pixel decode: the oracle recomputes the dimensions and
-    // the exact pixel-sum arithmetic of the deterministic test image —
-    // only a true inflate+defilter+raster pass can match it
-    "q_mm_decode_png" ->
-      """SELECT d.doc_id AS media_id,
-        |  CAST(8 + d.doc_id % 9 AS INT) AS width,
-        |  CAST(6 + d.doc_id % 7 AS INT) AS height,
-        |  (SELECT CAST(sum(CASE WHEN xs.x < 8 + d.doc_id % 9 AND ys.y < 6 + d.doc_id % 7
-        |                   THEN (xs.x * 7 + ys.y * 13 + d.doc_id) % 256 END) AS BIGINT)
-        |   FROM generate_series(0, 16) xs(x), generate_series(0, 12) ys(y)) AS pix_sum
-        |FROM documents d ORDER BY media_id""".stripMargin,
-
-    // full real PCM decode: the oracle recomputes the rate/length
-    // arithmetic and the exact signed-sample sum of the deterministic
-    // waveform — only a true header parse + frame walk (right byte
-    // order, right sign) can match it
-    "q_mm_decode_wav" ->
-      """SELECT d.doc_id AS media_id,
-        |  CAST(8000 + (d.doc_id % 5) * 1000 AS INT) AS sample_rate,
-        |  CAST(200 + d.doc_id % 57 AS BIGINT) AS n_samples,
-        |  (SELECT CAST(sum(CASE WHEN i.i < 200 + d.doc_id % 57
-        |                   THEN (i.i * 31 + d.doc_id * 17) % 65536 - 32768 END) AS BIGINT)
-        |   FROM generate_series(0, 255) i(i)) AS sample_sum
-        |FROM documents d ORDER BY media_id""".stripMargin,
-
-    // the WAV twin: oracle recomputes the per-doc format parameters and the
-    // floor(dataLen*1000/byteRate) duration (// = integer division)
-    "q_mm_audio_meta" ->
-      """SELECT doc_id AS media_id, 'wav' AS format, true AS valid,
-        |  CAST(8000 + (doc_id % 5) * 1000 AS INT) AS sample_rate,
-        |  CAST(1 + doc_id % 2 AS INT) AS channels,
-        |  CAST(8 + (doc_id % 2) * 8 AS INT) AS bits_per_sample,
-        |  CAST(octet_length(encode(text)) AS INT) AS data_bytes,
-        |  CAST(octet_length(encode(text)) * 1000
-        |    // ((8000 + (doc_id % 5) * 1000) * (1 + doc_id % 2) * (8 + (doc_id % 2) * 8) // 8)
-        |    AS BIGINT) AS duration_ms
-        |FROM documents ORDER BY media_id""".stripMargin,
-
-    // the MP4 twin: duration rides in mvhd ticks (timescale 600); the
-    // oracle recomputes ticks and milliseconds from doc_id
-    "q_mm_video_meta" ->
-      """SELECT doc_id AS media_id, 'mp4' AS format, true AS valid,
-        |  'isom' AS brand, CAST(600 AS INT) AS timescale,
-        |  CAST((1 + doc_id % 120) * 600 AS BIGINT) AS duration,
-        |  CAST((1 + doc_id % 120) * 1000 AS BIGINT) AS duration_ms,
-        |  CAST(octet_length(encode(text)) AS INT) AS mdat_bytes
-        |FROM documents ORDER BY media_id""".stripMargin,
-
-    // the mixed-lake twin: per-modality parameters recomputed from doc_id,
-    // zeros where the modality does not carry the field
-    "q_mm_av_ingest" ->
-      """SELECT doc_id AS media_id,
-        |  CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'png' WHEN 1 THEN 'wav' ELSE 'mp4' END AS format,
-        |  true AS valid,
-        |  CASE WHEN doc_id % 3 = 0 THEN CAST(32 + doc_id % 96 AS INT) ELSE 0 END AS width,
-        |  CASE WHEN doc_id % 3 = 0 THEN CAST(24 + doc_id % 72 AS INT) ELSE 0 END AS height,
-        |  CASE WHEN doc_id % 3 = 1 THEN CAST(8000 + (doc_id % 5) * 1000 AS INT) ELSE 0 END AS sample_rate,
-        |  CASE WHEN doc_id % 3 = 1 THEN CAST(1 + doc_id % 2 AS INT) ELSE 0 END AS channels,
-        |  CASE WHEN doc_id % 3 = 1 THEN CAST(octet_length(encode(text)) * 1000
-        |      // ((8000 + (doc_id % 5) * 1000) * (1 + doc_id % 2) * (8 + (doc_id % 2) * 8) // 8) AS BIGINT)
-        |    WHEN doc_id % 3 = 2 THEN CAST((1 + doc_id % 120) * 1000 AS BIGINT)
-        |    ELSE 0 END AS duration_ms
-        |FROM documents WHERE doc_id < 96 ORDER BY media_id""".stripMargin,
-
-    // file-scanned headers must decode to the same metadata the in-row
-    // payloads carry (same arithmetic as q_mm_meta, ingest-subset)
-    "q_mm_ingest" ->
-      """SELECT doc_id AS media_id, CAST(doc_id % 3 AS INT) AS kind_id, true AS valid,
-        |  CAST(32 + doc_id % 96 AS INT) AS width, CAST(24 + doc_id % 72 AS INT) AS height,
-        |  CAST(octet_length(encode(text)) AS INT) AS body_bytes
-        |FROM documents WHERE doc_id < 64 ORDER BY media_id""".stripMargin,
-
-    "q_cube_type_day" ->
-      """SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n FROM events
-        |GROUP BY CUBE (event_type, CAST(ts AS DATE))
-        |ORDER BY event_type NULLS FIRST, day NULLS FIRST""".stripMargin,
-
-    "q_grouping_sets" ->
-      """SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n FROM events
-        |GROUP BY GROUPING SETS ((event_type), (CAST(ts AS DATE)))
-        |ORDER BY event_type NULLS FIRST, day NULLS FIRST""".stripMargin,
-
-    "q_set_intersect" ->
-      """SELECT user_id FROM (
-        |  SELECT user_id FROM events WHERE event_type = 'click'
-        |  INTERSECT
-        |  SELECT user_id FROM events WHERE event_type = 'purchase')
-        |ORDER BY user_id""".stripMargin,
-
-    "q_range_join" ->
-      """SELECT o_orderpriority, count(*) AS n_fast_lines
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  AND l_shipdate >= o_orderdate
-        |  AND l_shipdate < o_orderdate + INTERVAL 7 DAY
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_brand_revenue" ->
-      """SELECT p_brand,
-        |  CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-        |  count(*) AS n
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY p_brand ORDER BY p_brand""".stripMargin,
-
-    "q_supplier_revenue" ->
-      """SELECT s_name,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-        |  count(*) AS n
-        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY s_name ORDER BY s_name""".stripMargin,
-
-    "q_percentiles" ->
-      """SELECT event_type,
-        |  round(quantile_cont(value, 0.5), 4) AS p50,
-        |  round(quantile_cont(value, 0.9), 4) AS p90
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_approx_quantile" ->
-      """SELECT event_type, round(quantile_cont(value, 0.5), 4) AS p50_exact, true AS approx_ok
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // the observed counters recomputed as a plain aggregate
-    "q_observe_metrics" ->
-      """SELECT count(*) AS n_rows,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value,
-        |  count(CASE WHEN value > 100 THEN 1 END) AS n_high
-        |FROM events""".stripMargin,
-
-    // identical rounded thresholds, identical clamp order, decimal sum
-    "q_winsorize" ->
-      """WITH q AS (
-        |  SELECT event_type,
-        |    round(quantile_cont(value, 0.05), 4) AS p05,
-        |    round(quantile_cont(value, 0.95), 4) AS p95
-        |  FROM events GROUP BY 1)
-        |SELECT e.event_type, count(*) AS n,
-        |  CAST(sum(CAST(round(least(greatest(e.value, q.p05), q.p95), 4) AS DECIMAL(18,4))) AS DOUBLE) AS total_winsorized,
-        |  any_value(q.p05) AS p05, any_value(q.p95) AS p95
-        |FROM events e JOIN q USING (event_type)
-        |GROUP BY e.event_type
-        |ORDER BY e.event_type""".stripMargin,
-
-    "q_stream_tumbling" ->
-      """SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day_start, event_type, count(*) AS n
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // salted streaming totals must equal the UNsalted per-type aggregate:
-    // the salt is invisible in the result (exact integer-cents accumulation
-    // on both paths)
-    "q_stream_salted" ->
-      """SELECT event_type, count(*) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // streamed result must equal the batch interval join (q_interval_join)
-    "q_stream_interval" ->
-      """SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
-        |  CAST(c.ts AS TIMESTAMP) AS click_ts, CAST(p.ts AS TIMESTAMP) AS purchase_ts
-        |FROM (SELECT * FROM events WHERE event_type = 'click') c
-        |JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
-        |  ON c.user_id = p.user_id
-        | AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR
-        |ORDER BY c.user_id, click_id, purchase_id""".stripMargin,
-
-    // streamed LEFT OUTER interval join: matched rows equal the batch
-    // left join; unmatched rows are exactly those the final watermark
-    // finalized (click_ts + 1h behind min-over-sides max event time - 1h,
-    // ms-floored the way Spark tracks event-time stats)
-    // semi join: clicks with at least one same-user purchase in the
-    // forward hour — exact, no horizon clause (unmatched rows never emit)
-    "q_stream_semi" ->
-      """SELECT c.user_id, c.click_ts, c.click_id
-        |FROM (SELECT user_id, ts AS click_ts, event_id AS click_id
-        |      FROM events WHERE event_type = 'click') c
-        |WHERE EXISTS (SELECT 1 FROM events p
-        |  WHERE p.event_type = 'purchase' AND p.user_id = c.user_id
-        |    AND p.ts >= c.click_ts AND p.ts <= c.click_ts + INTERVAL 1 HOUR)
-        |ORDER BY user_id, click_id""".stripMargin,
-
-    "q_stream_outer" ->
-      """WITH c AS (SELECT user_id, ts AS click_ts, event_id AS click_id
-        |  FROM events WHERE event_type = 'click'),
-        |p AS (SELECT user_id AS p_user_id, ts AS purchase_ts, event_id AS purchase_id
-        |  FROM events WHERE event_type = 'purchase'),
-        |j AS (SELECT user_id, click_id, purchase_id, click_ts, purchase_ts
-        |  FROM c LEFT JOIN p ON user_id = p_user_id
-        |    AND purchase_ts >= click_ts AND purchase_ts <= click_ts + INTERVAL 1 HOUR),
-        |w AS (SELECT least(
-        |    (SELECT date_trunc('millisecond', max(ts)) FROM events WHERE event_type = 'click'),
-        |    (SELECT date_trunc('millisecond', max(ts)) FROM events WHERE event_type = 'purchase'))
-        |  - INTERVAL 1 HOUR AS wm)
-        |SELECT user_id, click_id, purchase_id, click_ts, purchase_ts
-        |FROM j, w
-        |WHERE purchase_id IS NOT NULL OR click_ts + INTERVAL 1 HOUR < wm
-        |ORDER BY user_id, click_id, purchase_id""".stripMargin,
-
-    // full-outer twin: matched rows always; unmatched clicks final when
-    // click_ts + 1h < wm; unmatched purchases final when purchase_ts < wm
-    "q_stream_full" ->
-      """WITH c AS (SELECT user_id, ts AS click_ts, event_id AS click_id
-        |  FROM events WHERE event_type = 'click'),
-        |p AS (SELECT user_id AS p_user_id, ts AS purchase_ts, event_id AS purchase_id
-        |  FROM events WHERE event_type = 'purchase'),
-        |j AS (SELECT coalesce(user_id, p_user_id) AS user_id, click_id, purchase_id,
-        |             click_ts, purchase_ts
-        |  FROM c FULL JOIN p ON user_id = p_user_id
-        |    AND purchase_ts >= click_ts AND purchase_ts <= click_ts + INTERVAL 1 HOUR),
-        |w AS (SELECT least(
-        |    (SELECT date_trunc('millisecond', max(ts)) FROM events WHERE event_type = 'click'),
-        |    (SELECT date_trunc('millisecond', max(ts)) FROM events WHERE event_type = 'purchase'))
-        |  - INTERVAL 1 HOUR AS wm)
-        |SELECT user_id, click_id, purchase_id, click_ts, purchase_ts
-        |FROM j, w
-        |WHERE (click_id IS NOT NULL AND purchase_id IS NOT NULL)
-        |   OR (purchase_id IS NULL AND click_ts + INTERVAL 1 HOUR < wm)
-        |   OR (click_id IS NULL AND purchase_ts < wm)
-        |ORDER BY user_id, click_id NULLS LAST, purchase_id NULLS LAST""".stripMargin,
-
-    // twin of EventStreams.gapSessions: 30-min-gap sessions at ms precision;
-    // a session is VISIBLE iff a successor session closed it in-stream OR its
-    // event-time timeout (last+gap) fell behind the final watermark
-    // (max event time - 1h) — each user's still-open final session inside
-    // the horizon is exactly what a still-running job could yet extend
-    "q_stream_fmgs" ->
-      """WITH e AS (SELECT user_id, epoch_ms(ts) AS ms FROM events),
-        |lagged AS (
-        |  SELECT user_id, ms,
-        |    CASE WHEN lag(ms) OVER (PARTITION BY user_id ORDER BY ms) IS NULL
-        |           OR ms - lag(ms) OVER (PARTITION BY user_id ORDER BY ms) > 1800000
-        |         THEN 1 ELSE 0 END AS new_sess
-        |  FROM e),
-        |g AS (SELECT user_id, ms, sum(new_sess) OVER (PARTITION BY user_id ORDER BY ms
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM lagged),
-        |sess AS (SELECT user_id, sid, min(ms) AS start_ms, max(ms) AS last_ms,
-        |                count(*) AS n_events FROM g GROUP BY 1, 2),
-        |wm AS (SELECT max(epoch_ms(ts)) - 3600000 AS w FROM events)
-        |SELECT user_id, make_timestamp(start_ms * 1000) AS session_start, n_events
-        |FROM sess, wm
-        |WHERE sid < (SELECT max(sid) FROM sess s2 WHERE s2.user_id = sess.user_id)
-        |   OR last_ms + 1800000 < w
-        |ORDER BY user_id, session_start""".stripMargin,
-
-    // streamed session windows must equal the batch session-window twin
-    "q_stream_session" ->
-      """WITH flagged AS (
-        |  SELECT user_id, ts,
-        |    CASE WHEN prev_ts IS NULL OR epoch_ms(ts) - epoch_ms(prev_ts) > 1800000
-        |         THEN 1 ELSE 0 END AS new_session
-        |  FROM (SELECT user_id, ts,
-        |          lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev_ts
-        |        FROM events)),
-        |sessions AS (
-        |  SELECT user_id, ts,
-        |    sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM flagged)
-        |SELECT CAST(min(ts) AS TIMESTAMP) AS session_start, user_id, count(*) AS n_events
-        |FROM sessions GROUP BY user_id, sid
-        |ORDER BY user_id, session_start""".stripMargin,
-
-    // identical twin: the state-store provider must not change the result
-    "q_stream_rocksdb" ->
-      """WITH flagged AS (
-        |  SELECT user_id, ts,
-        |    CASE WHEN prev_ts IS NULL OR epoch_ms(ts) - epoch_ms(prev_ts) > 1800000
-        |         THEN 1 ELSE 0 END AS new_session
-        |  FROM (SELECT user_id, ts,
-        |          lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev_ts
-        |        FROM events)),
-        |sessions AS (
-        |  SELECT user_id, ts,
-        |    sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM flagged)
-        |SELECT CAST(min(ts) AS TIMESTAMP) AS session_start, user_id, count(*) AS n_events
-        |FROM sessions GROUP BY user_id, sid
-        |ORDER BY user_id, session_start""".stripMargin,
-
-    // streamed sliding windows must equal the batch q_sliding_2h twin
-    "q_stream_sliding" ->
-      """SELECT w_start, count(*) AS n FROM (
-        |  SELECT unnest([date_trunc('hour', ts), date_trunc('hour', ts) - INTERVAL 1 HOUR]) AS w_start
-        |  FROM events)
-        |GROUP BY w_start ORDER BY w_start""".stripMargin,
-
-    // the stream consumed the DOUBLED table; surviving exactly one row per
-    // event_id means per-type counts equal the original table's distinct ids
-    "q_stream_dedup" ->
-      """SELECT event_type, count(DISTINCT event_id) AS n
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // the anti-joined stream equals the batch filter: only events outside
-    // the historical key set survive
-    "q_stream_dedup_hist" ->
-      """SELECT event_type, count(*) AS n FROM events
-        |WHERE event_id >= 5000
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // the streamed audit's final counters equal the batch recount
-    "q_stream_audit" ->
-      """WITH v AS (
-        |  SELECT 'id_not_null' AS rule,
-        |    CAST(sum(CASE WHEN event_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS violations
-        |  FROM events
-        |  UNION ALL SELECT 'user_in_dim_range',
-        |    CAST(sum(CASE WHEN NOT coalesce(user_id BETWEEN 0 AND 24, false) THEN 1 ELSE 0 END) AS BIGINT) FROM events
-        |  UNION ALL SELECT 'value_le_195',
-        |    CAST(sum(CASE WHEN NOT coalesce(value <= 195, false) THEN 1 ELSE 0 END) AS BIGINT) FROM events
-        |  UNION ALL SELECT 'value_nonneg',
-        |    CAST(sum(CASE WHEN NOT coalesce(value >= 0, false) THEN 1 ELSE 0 END) AS BIGINT) FROM events)
-        |SELECT rule, violations, violations = 0 AS ok
-        |FROM v ORDER BY rule""".stripMargin,
-
-    // the composed stream (dedup → enrich → agg over the DOUBLED input)
-    // equals the batch chain on the original table
-    "q_stream_pipeline" ->
-      """SELECT n_name, count(DISTINCT event_id) AS n
-        |FROM events JOIN nation ON user_id = n_nationkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // the streamed upsert's final committed version equals the batch rollup
-    "q_stream_upsert" ->
-      """SELECT user_id, count(*) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // state folded across two catch-up runs = the one-shot batch rollup
-    "q_availablenow_totals" ->
-      """SELECT user_id, count(*) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // both versions recomputed relationally (v1 = even event_ids only)
-    "q_cdc_diff" ->
-      """WITH v1 AS (
-        |  SELECT user_id, count(*) AS n1
-        |  FROM events WHERE event_id % 2 = 0 GROUP BY 1),
-        |v2 AS (
-        |  SELECT user_id, count(*) AS n2,
-        |    CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |  FROM events GROUP BY 1)
-        |SELECT v2.user_id,
-        |  CASE WHEN v1.user_id IS NULL THEN 'insert'
-        |       WHEN v1.n1 <> v2.n2 THEN 'update'
-        |       ELSE 'unchanged' END AS change_type,
-        |  v2.n2 AS n, v2.total
-        |FROM v2 LEFT JOIN v1 ON v2.user_id = v1.user_id
-        |ORDER BY v2.user_id""".stripMargin,
-
-    // the state store's aggregate buffers = the same batch rollup
-    "q_state_reader" ->
-      """SELECT user_id, count(*) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // the serving table after the final micro-batch = the batch rank
-    "q_stream_trending" ->
-      """WITH c AS (
-        |  SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day_start,
-        |    event_type, count(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |r AS (SELECT day_start, event_type, n,
-        |        row_number() OVER (PARTITION BY day_start ORDER BY n DESC, event_type) AS rk
-        |      FROM c)
-        |SELECT day_start, event_type, n, CAST(rk AS INT) AS rk FROM r WHERE rk <= 3
-        |ORDER BY day_start, rk""".stripMargin,
-
-    // streamed chunk+zip+ULID ingest then reassembly restores every
-    // payload: md5 per (user, document) equals the source text's md5
-    "q_stream_ingest" ->
-      """SELECT 'u' || CAST(doc_id % 16 AS VARCHAR) AS user_id, md5(text) AS payload_md5
-        |FROM documents WHERE doc_id < 200
-        |ORDER BY user_id, payload_md5""".stripMargin,
-
-    // two catch-up runs over two arrivals = every qualifying event exactly
-    // once in the sink (a re-processed arrival would double its rows)
-    "q_stream_availablenow" ->
-      """SELECT event_type, count(*) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM events WHERE event_type IN ('click', 'purchase')
-        |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
-
-    // the streamed enrichment join's final table equals the batch join
-    "q_stream_enrich" ->
-      """SELECT n_name, count(*) AS n
-        |FROM events JOIN nation ON user_id = n_nationkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_partitioned_lookup" ->
-      "SELECT 'u' || CAST(doc_id AS VARCHAR) AS user_id, text AS payload FROM documents WHERE doc_id = 5 ORDER BY user_id",
-
-    // the surviving (latest) version after vacuum = the batch rollup
-    "q_vacuum" ->
-      """SELECT user_id, count(*) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_histogram" ->
-      """SELECT CAST(floor(value / 50) AS BIGINT) AS bin, count(*) AS n,
-        |  round(min(value), 2) AS lo, round(max(value), 2) AS hi
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_sliding_2h" ->
-      """SELECT w_start, count(*) AS n FROM (
-        |  SELECT unnest([date_trunc('hour', ts), date_trunc('hour', ts) - INTERVAL 1 HOUR]) AS w_start
-        |  FROM events)
-        |GROUP BY w_start ORDER BY w_start""".stripMargin,
-
-    "q_session_window" ->
-      """WITH flagged AS (
-        |  SELECT user_id, ts,
-        |    CASE WHEN prev_ts IS NULL OR epoch_ms(ts) - epoch_ms(prev_ts) > 1800000
-        |         THEN 1 ELSE 0 END AS new_session
-        |  FROM (SELECT user_id, ts,
-        |          lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev_ts
-        |        FROM events)),
-        |sessions AS (
-        |  SELECT user_id, ts,
-        |    sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM flagged)
-        |SELECT CAST(min(ts) AS TIMESTAMP) AS session_start, user_id, count(*) AS n_events
-        |FROM sessions GROUP BY user_id, sid
-        |ORDER BY user_id, session_start""".stripMargin,
-
-    "q_logstore_roundtrip" ->
-      "SELECT count(*) AS n_docs, count(*) AS n_match FROM documents",
-
-    "q_string_funcs" ->
-      """SELECT doc_id, length(text) AS n,
-        |  upper(substring(text, 1, 10)) AS head10,
-        |  regexp_replace(lower(substring(text, 1, 50)), '[aeiou]', '', 'g') AS devoweled,
-        |  concat_ws('|', lang, source) AS tag
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_time_funcs" ->
-      """SELECT event_id,
-        |  CAST(year(ts) AS INT) AS y, CAST(month(ts) AS INT) AS m,
-        |  CAST(day(ts) AS INT) AS dom, CAST(hour(ts) AS INT) AS h,
-        |  epoch_ms(CAST(ts AS TIMESTAMP)) AS epoch_ms
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q_math_funcs" ->
-      """SELECT event_id,
-        |  round(sqrt(abs(value)), 4) AS root,
-        |  CAST(ceil(value) AS BIGINT) AS up,
-        |  CAST(floor(value) AS BIGINT) AS down,
-        |  round(ln(1 + abs(value)), 4) AS logv
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q_date_arith" ->
-      """SELECT o_orderkey,
-        |  CAST(o_orderdate AS DATE) + 7 AS next_week,
-        |  CAST(datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS INT) AS epoch_days,
-        |  last_day(CAST(o_orderdate AS DATE)) AS eom,
-        |  CAST(dayofweek(o_orderdate) + 1 AS INT) AS dow,
-        |  CAST(quarter(o_orderdate) AS INT) AS q
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "q_stateful_totals" ->
-      """SELECT user_id, count(*) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // the transformWithState twin must land on the identical totals
-    "q_stream_tws" ->
-      """SELECT user_id, count(*) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_bucketed_join" ->
-      """SELECT o_orderpriority, count(*) AS n,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // compaction is content-invisible: same rows as the source table
-    "q_compact" ->
-      """SELECT event_id, user_id, event_type, value FROM events
-        |ORDER BY event_id""".stripMargin,
-
-    // end state after the click-partition rewrite: every other partition
-    // as-is, click reduced to its even-user rows
-    // retention: the retained table equals events past the 7th distinct
-    // day (the twin derives the same cutoff); the metadata-only-drop and
-    // cold-file gates are require()d inside the fixture build
-    "q_retention_drop" ->
-      """SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day, count(*) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM events
-        |WHERE CAST(ts AS DATE) > (
-        |  SELECT dd FROM (SELECT DISTINCT CAST(ts AS DATE) AS dd FROM events
-        |                  ORDER BY dd LIMIT 1 OFFSET 6))
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_partition_overwrite" ->
-      """SELECT event_type, count(*) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM events WHERE event_type <> 'click' OR user_id % 2 = 0
-        |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
-
-    // the catalog objects are pass-through: same join computed directly
-    "q_sql_ddl" ->
-      """WITH co AS (
-        |  SELECT o_custkey, count(*) AS n_orders,
-        |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS spend
-        |  FROM orders GROUP BY o_custkey)
-        |SELECT c.c_mktsegment, count(*) AS n_cust,
-        |  CAST(sum(CAST(co.spend AS DECIMAL(18,2))) AS DOUBLE) AS segment_spend
-        |FROM customer c JOIN co ON c.c_custkey = co.o_custkey
-        |GROUP BY c.c_mktsegment
-        |ORDER BY c.c_mktsegment""".stripMargin,
-
-    // relational recomputation of the SCD-1 merge: survivors = base rows
-    // whose key is untouched; plus updated rows; plus inserted rows
-    "q_upsert" ->
-      """WITH updates AS (
-        |  SELECT event_id, event_type, value + 1000 AS value
-        |  FROM events WHERE event_id % 100 = 0),
-        |deletes AS (
-        |  SELECT event_id FROM events
-        |  WHERE event_id % 97 = 0 AND event_id % 100 <> 0),
-        |inserts AS (
-        |  SELECT event_id + 1000000 AS event_id, 'ins' AS event_type,
-        |    CAST(1.0 AS DOUBLE) AS value
-        |  FROM events WHERE event_id % 101 = 0)
-        |SELECT event_id, event_type, value FROM events
-        |WHERE event_id NOT IN (SELECT event_id FROM updates)
-        |  AND event_id NOT IN (SELECT event_id FROM deletes)
-        |UNION ALL SELECT * FROM updates
-        |UNION ALL SELECT * FROM inserts
-        |ORDER BY event_id""".stripMargin,
-
-    // SCD-2 history recomputed relationally: base rows keep version 1 and
-    // flip is_current iff their key is in the change set; change rows
-    // append at version 2 (existing keys) or 1 (new keys), current
-    "q_scd2" ->
-      """WITH chg AS (
-        |  SELECT s_suppkey, s_name, s_acctbal + 500 AS s_acctbal
-        |  FROM supplier WHERE s_suppkey % 10 = 0
-        |  UNION ALL
-        |  SELECT s_suppkey + 100000 AS s_suppkey, 'NEW' AS s_name,
-        |    CAST(0.0 AS DOUBLE) AS s_acctbal
-        |  FROM supplier WHERE s_suppkey % 7 = 0)
-        |SELECT s_suppkey, s_name, s_acctbal, CAST(1 AS BIGINT) AS version,
-        |  s_suppkey NOT IN (SELECT s_suppkey FROM chg) AS is_current
-        |FROM supplier
-        |UNION ALL
-        |SELECT s_suppkey, s_name, s_acctbal,
-        |  CAST(CASE WHEN s_suppkey IN (SELECT s_suppkey FROM supplier)
-        |       THEN 2 ELSE 1 END AS BIGINT) AS version,
-        |  true AS is_current
-        |FROM chg
-        |ORDER BY s_suppkey, version""".stripMargin,
-
-    // the time-clustered rewrite is layout only — same rows as a plain
-    // filter over the source table
-    "q_time_clustered" ->
-      """SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, event_type, value FROM events
-        |WHERE epoch_ns(ts) >= 1704412800000000000 AND epoch_ns(ts) < 1704672000000000000
-        |ORDER BY event_id""".stripMargin,
-
-    // the Hilbert rewrite is layout only — same rows as a plain filter
-    "q_hilbert_layout" ->
-      """SELECT event_id, user_id, event_type, value FROM events
-        |WHERE user_id BETWEEN 3 AND 7 AND event_id BETWEEN 100 AND 20000
-        |ORDER BY event_id""".stripMargin,
-
-    // the z-ordered rewrite is layout only — same rows as a plain filter
-    "q_zorder_layout" ->
-      """SELECT event_id, user_id, event_type, value FROM events
-        |WHERE user_id BETWEEN 3 AND 7 AND event_id BETWEEN 100 AND 20000
-        |ORDER BY event_id""".stripMargin,
-
-    "q_salted_agg" ->
-      """SELECT event_type AS key, count(*) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_ulid_props" ->
-      "SELECT count(*) AS n, count(*) AS n_valid FROM events WHERE event_id < 1000",
-
-    "q_agg_approx_distinct" ->
-      "SELECT event_type, count(DISTINCT user_id) AS n_users, true AS within_5pct FROM events GROUP BY 1 ORDER BY 1",
-
-    // weekly exact recount is the oracle; the merged-sketch estimate must
-    // land within the 5% gate (deterministic: HLL registers are
-    // order-independent maxima)
-    "q_hll_merge" ->
-      """SELECT CAST(date_trunc('week', ts) AS DATE) AS week,
-        |  count(DISTINCT user_id) AS n_users, true AS within_5pct
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // invariant oracle for the DDSketch rollup: the real data check is n
-    // (exact row count recovered from the sketch); the bound/equality
-    // booleans are computed Spark-side against Spark's exact percentile
-    "q_quantile_sketch" ->
-      """SELECT event_type, count(*) AS n, true AS count_ok,
-        |  true AS q50_ok, true AS q95_ok, true AS merged_eq
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // trailing-window twin: exact count per 7-day window ending at each
-    // active day; the bound booleans are Spark-side invariants
-    "q_quantile_sliding" ->
-      """SELECT d.day, count(*) AS n, true AS count_ok, true AS q50_ok
-        |FROM (SELECT DISTINCT CAST(ts AS DATE) AS day FROM events) d
-        |JOIN events e ON CAST(e.ts AS DATE) BETWEEN d.day - 6 AND d.day
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // streaming accumulation must land on the identical canonical sketch
-    "q_stream_quantile" ->
-      """SELECT event_type, count(*) AS n, true AS count_ok,
-        |  true AS stream_eq_batch, true AS q50_ok
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_tpch_q1" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2))) * (1 + CAST(l_tax AS DECIMAL(18,2)))) AS DOUBLE) AS sum_charge,
-        |  round(CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*), 4) AS avg_qty,
-        |  round(CAST(sum(CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE) / count(*), 4) AS avg_disc,
-        |  count(*) AS n
-        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_tpch_q3" ->
-      """SELECT l_orderkey,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-        |  o_orderdate, o_orderpriority
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON l_orderkey = o_orderkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-06-30 00:00:00'
-        |  AND l_shipdate > TIMESTAMP '1998-06-30 00:00:00'
-        |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-
-    "q_tpch_q10" ->
-      """SELECT c_custkey, c_name, c_acctbal, n_name,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE l_returnflag = 'R'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND o_orderdate < TIMESTAMP '1996-04-01 00:00:00'
-        |GROUP BY c_custkey, c_name, c_acctbal, n_name
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
-
-    "q_tpch_q6" ->
-      """SELECT
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-        |  count(*) AS n
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-        |  AND l_discount BETWEEN 0.02 AND 0.06
-        |  AND l_quantity < 24""".stripMargin,
-
-    "q_tpch_q14" ->
-      """WITH j AS (
-        |  SELECT p_type,
-        |    CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2))) AS rev
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  WHERE l_shipdate >= TIMESTAMP '1996-03-01 00:00:00'
-        |    AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00')
-        |SELECT promo_revenue, total_revenue,
-        |  round(100.0 * promo_revenue / total_revenue, 4) AS promo_pct
-        |FROM (SELECT
-        |  CAST(sum(CASE WHEN p_type = 'PROMO' THEN rev ELSE 0 END) AS DOUBLE) AS promo_revenue,
-        |  CAST(sum(rev) AS DOUBLE) AS total_revenue FROM j)""".stripMargin,
-
-    "q_tpch_q18" ->
-      """WITH big AS (
-        |  SELECT l_orderkey,
-        |    CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |  FROM lineitem GROUP BY l_orderkey
-        |  HAVING sum(CAST(l_quantity AS DECIMAL(18,2))) > 250.0)
-        |SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice, sum_qty
-        |FROM big JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin,
-
-    "q_tpch_q19" ->
-      """SELECT
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-        |  count(*) AS n
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 1 AND 15)
-        |   OR (p_brand = 'Brand#23' AND p_size BETWEEN 5 AND 20 AND l_quantity BETWEEN 10 AND 25)
-        |   OR (p_brand = 'Brand#15' AND p_size BETWEEN 20 AND 35 AND l_quantity BETWEEN 25 AND 40)""".stripMargin,
-
-    "q_tpch_q5" ->
-      """SELECT n_name,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-        |  count(*) AS n
-        |FROM customer c
-        |JOIN orders o ON c_custkey = o_custkey
-        |JOIN lineitem l ON l_orderkey = o_orderkey
-        |JOIN supplier s ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation n ON s_nationkey = n_nationkey
-        |JOIN region r ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin,
-
-    "q_tpch_q2" ->
-      """WITH offer AS (
-        |  SELECT l_partkey, l_suppkey, min(l_extendedprice / l_quantity) AS ucost
-        |  FROM lineitem GROUP BY 1, 2),
-        |best AS (SELECT l_partkey AS b_partkey, min(ucost) AS min_cost FROM offer GROUP BY 1)
-        |SELECT s_acctbal, s_name, n_name, p_partkey, p_size,
-        |  round(min_cost, 4) AS unit_cost
-        |FROM offer
-        |JOIN best ON l_partkey = b_partkey AND ucost = min_cost
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'EUROPE' AND p_type = 'LARGE' AND p_size BETWEEN 10 AND 20
-        |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey LIMIT 100""".stripMargin,
-
-    "q_tpch_q4" ->
-      """SELECT o_orderpriority, count(*) AS order_count
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND o_orderdate < TIMESTAMP '1996-07-01 00:00:00'
-        |  AND EXISTS (SELECT 1 FROM lineitem
-        |    WHERE l_orderkey = o_orderkey
-        |      AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_tpch_q7" ->
-      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        |  CAST(year(l_shipdate) AS INT) AS l_year,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-        |  count(*) AS n
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        |WHERE ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-        |    OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
-        |  AND l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-
-    "q_tpch_q8" ->
-      """WITH j AS (
-        |  SELECT CAST(year(o_orderdate) AS INT) AS o_year,
-        |    CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2))) AS vol,
-        |    n2.n_name AS supp_nation
-        |  FROM lineitem
-        |  JOIN part ON l_partkey = p_partkey
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation n1 ON c_nationkey = n1.n_nationkey
-        |  JOIN region ON n1.n_regionkey = r_regionkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation n2 ON s_nationkey = n2.n_nationkey
-        |  WHERE p_type = 'STANDARD' AND r_name = 'ASIA'
-        |    AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |    AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00')
-        |SELECT o_year,
-        |  round(CAST(sum(CASE WHEN supp_nation = 'NATION_5' THEN vol ELSE 0 END) AS DOUBLE)
-        |    / CAST(sum(vol) AS DOUBLE), 4) AS mkt_share,
-        |  CAST(sum(vol) AS DOUBLE) AS total_volume
-        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_tpch_q9" ->
-      """SELECT n_name AS nation, CAST(year(l_shipdate) AS INT) AS o_year,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))
-        |    - CAST(p_retailprice AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS profit
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |WHERE p_type = 'PROMO'
-        |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin,
-
-    "q_tpch_q11" ->
-      """WITH val AS (
-        |  SELECT l_partkey AS partkey,
-        |    sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS value_dec
-        |  FROM lineitem
-        |  WHERE l_suppkey IN (SELECT s_suppkey FROM supplier WHERE s_nationkey IN (0, 1, 2))
-        |  GROUP BY 1)
-        |SELECT partkey, CAST(value_dec AS DOUBLE) AS part_value
-        |FROM val
-        |WHERE value_dec * 1000 > (SELECT sum(value_dec) FROM val)
-        |ORDER BY part_value DESC, partkey""".stripMargin,
-
-    "q_tpch_q12" ->
-      """SELECT CASE l_linenumber % 3 WHEN 0 THEN 'AIR' WHEN 1 THEN 'SHIP' ELSE 'TRUCK' END AS ship_mode,
-        |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_tpch_q13" ->
-      """WITH per_cust AS (
-        |  SELECT c_custkey, count(o_orderkey) AS c_count
-        |  FROM customer LEFT OUTER JOIN orders
-        |    ON c_custkey = o_custkey AND o_orderpriority <> '5-LOW'
-        |  GROUP BY c_custkey)
-        |SELECT c_count, count(*) AS custdist
-        |FROM per_cust GROUP BY c_count
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
-
-    "q_tpch_q15" ->
-      """WITH revenue AS (
-        |  SELECT l_suppkey,
-        |    sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS rev_dec
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |    AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'
-        |  GROUP BY 1)
-        |SELECT s_suppkey, s_name, CAST(rev_dec AS DOUBLE) AS total_revenue
-        |FROM revenue JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE rev_dec = (SELECT max(rev_dec) FROM revenue)
-        |ORDER BY s_suppkey""".stripMargin,
-
-    "q_tpch_q16" ->
-      """WITH offer AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem)
-        |SELECT p_brand, p_type, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
-        |FROM offer JOIN part ON l_partkey = p_partkey
-        |WHERE p_size IN (1, 4, 9, 14, 19, 23, 36, 45)
-        |  AND p_brand <> 'Brand#5' AND p_type <> 'PROMO'
-        |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        |GROUP BY 1, 2, 3
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-
-    "q_tpch_q17" ->
-      """WITH per_part AS (
-        |  SELECT l_partkey AS pa_key,
-        |    CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_qty
-        |  FROM lineitem GROUP BY 1)
-        |SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0, 4) AS avg_yearly,
-        |  count(*) AS n
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN per_part ON l_partkey = pa_key
-        |WHERE p_brand = 'Brand#3' AND p_size < 10
-        |  AND l_quantity < 0.5 * avg_qty""".stripMargin,
-
-    "q_tpch_q20" ->
-      """WITH shipped AS (
-        |  SELECT l_suppkey, l_partkey, sum(CAST(l_quantity AS DECIMAL(18,2))) AS qty_dec
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |    AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-        |    AND l_partkey IN (SELECT p_partkey FROM part WHERE p_type = 'PROMO')
-        |  GROUP BY 1, 2)
-        |SELECT s_suppkey, s_name, s_nationkey
-        |FROM supplier
-        |WHERE s_nationkey < 13
-        |  AND s_suppkey IN (SELECT l_suppkey FROM shipped WHERE qty_dec > 50)
-        |ORDER BY s_suppkey""".stripMargin,
-
-    "q_tpch_q21" ->
-      """WITH ann AS (
-        |  SELECT l_orderkey, l_suppkey,
-        |    l_shipdate > o_orderdate + INTERVAL 90 DAY AS late
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  WHERE o_orderstatus = 'F'),
-        |per_order AS (
-        |  SELECT l_orderkey AS po_key, count(DISTINCT l_suppkey) AS n_supp,
-        |    count(DISTINCT CASE WHEN late THEN l_suppkey END) AS n_late
-        |  FROM ann GROUP BY 1)
-        |SELECT s_name, count(*) AS numwait
-        |FROM ann
-        |JOIN per_order ON l_orderkey = po_key
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE late AND n_supp >= 2 AND n_late = 1 AND s_nationkey < 5
-        |GROUP BY 1 ORDER BY numwait DESC, s_name LIMIT 100""".stripMargin,
-
-    "q_tpch_q22" ->
-      """WITH band AS (
-        |  SELECT c_custkey, c_nationkey, c_acctbal FROM customer
-        |  WHERE c_nationkey IN (5, 10, 15, 20, 24)),
-        |bar AS (
-        |  SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_bal
-        |  FROM band WHERE c_acctbal > 0)
-        |SELECT c_nationkey AS cntrycode, count(*) AS numcust,
-        |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
-        |FROM band, bar
-        |WHERE c_acctbal > avg_bal
-        |  AND NOT EXISTS (SELECT 1 FROM orders
-        |    WHERE o_custkey = c_custkey
-        |      AND o_orderdate >= TIMESTAMP '2000-01-01 00:00:00')
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_event_transitions" ->
-      """WITH seq AS (
-        |  SELECT user_id, event_type,
-        |    lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-        |  FROM events),
-        |t AS (SELECT prev, event_type AS cur, count(*) AS n
-        |  FROM seq WHERE prev IS NOT NULL GROUP BY 1, 2)
-        |SELECT prev, cur, n,
-        |  round(CAST(n AS DOUBLE) / CAST(sum(n) OVER (PARTITION BY prev) AS DOUBLE), 6) AS p
-        |FROM t ORDER BY prev, cur""".stripMargin,
-
-    "q_zscore_outliers" ->
-      """WITH m AS (
-        |  SELECT event_type, count(*) AS n,
-        |    CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS sx,
-        |    CAST(sum(CAST(value * value AS DECIMAL(28,6))) AS DOUBLE) AS sxx
-        |  FROM events GROUP BY 1),
-        |st AS (SELECT event_type, sx / n AS mu,
-        |  sqrt(greatest(sxx / n - (sx / n) * (sx / n), 0)) AS sigma FROM m)
-        |SELECT event_id, e.event_type, round(value, 4) AS v,
-        |  round((value - mu) / sigma, 4) AS z
-        |FROM events e JOIN st USING (event_type)
-        |WHERE sigma > 0 AND abs(value - mu) > 3 * sigma
-        |ORDER BY event_id""".stripMargin,
-
-    // ANALYZE-style exact column profile, one row per column; null count
-    // as n_rows - count(col) so the type stays BIGINT in both engines
-    "q_table_stats" ->
-      """WITH s AS (SELECT * FROM orders)
-        |SELECT "column", n_rows, ndv, n_nulls, min_value, max_value FROM (
-        |  SELECT 'o_custkey' AS "column", count(*) AS n_rows,
-        |    count(DISTINCT o_custkey) AS ndv, count(*) - count(o_custkey) AS n_nulls,
-        |    CAST(min(o_custkey) AS VARCHAR) AS min_value, CAST(max(o_custkey) AS VARCHAR) AS max_value
-        |  FROM s
-        |  UNION ALL
-        |  SELECT 'o_orderkey', count(*), count(DISTINCT o_orderkey), count(*) - count(o_orderkey),
-        |    CAST(min(o_orderkey) AS VARCHAR), CAST(max(o_orderkey) AS VARCHAR) FROM s
-        |  UNION ALL
-        |  SELECT 'o_orderpriority', count(*), count(DISTINCT o_orderpriority), count(*) - count(o_orderpriority),
-        |    CAST(min(o_orderpriority) AS VARCHAR), CAST(max(o_orderpriority) AS VARCHAR) FROM s
-        |  UNION ALL
-        |  SELECT 'o_orderstatus', count(*), count(DISTINCT o_orderstatus), count(*) - count(o_orderstatus),
-        |    CAST(min(o_orderstatus) AS VARCHAR), CAST(max(o_orderstatus) AS VARCHAR) FROM s)
-        |ORDER BY "column"""".stripMargin,
-
-    // the HLL twin: exact stats recomputed, ndv_ok literally true (the
-    // 10% = 2-sigma bound is the invariant the Spark side must prove)
-    "q_table_stats_approx" ->
-      """WITH s AS (SELECT * FROM orders)
-        |SELECT "column", n_rows, n_nulls, min_value, max_value, true AS ndv_ok FROM (
-        |  SELECT 'o_custkey' AS "column", count(*) AS n_rows,
-        |    count(*) - count(o_custkey) AS n_nulls,
-        |    CAST(min(o_custkey) AS VARCHAR) AS min_value, CAST(max(o_custkey) AS VARCHAR) AS max_value
-        |  FROM s
-        |  UNION ALL
-        |  SELECT 'o_orderkey', count(*), count(*) - count(o_orderkey),
-        |    CAST(min(o_orderkey) AS VARCHAR), CAST(max(o_orderkey) AS VARCHAR) FROM s
-        |  UNION ALL
-        |  SELECT 'o_orderpriority', count(*), count(*) - count(o_orderpriority),
-        |    CAST(min(o_orderpriority) AS VARCHAR), CAST(max(o_orderpriority) AS VARCHAR) FROM s
-        |  UNION ALL
-        |  SELECT 'o_orderstatus', count(*), count(*) - count(o_orderstatus),
-        |    CAST(min(o_orderstatus) AS VARCHAR), CAST(max(o_orderstatus) AS VARCHAR) FROM s)
-        |ORDER BY "column"""".stripMargin,
-
-    "q_boilerplate_strip" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS tk
-        |  FROM documents),
-        |seg AS (
-        |  SELECT doc_id, i AS seg_idx, array_to_string(tk[(i*4+1):(i*4+4)], ' ') AS seg
-        |  FROM toks, unnest(range(0, CAST(ceil(len(tk) / 4.0) AS BIGINT))) AS u(i)),
-        |df AS (SELECT seg, count(DISTINCT doc_id) AS dfreq FROM seg GROUP BY 1)
-        |SELECT s.doc_id,
-        |  CAST(sum(CASE WHEN dfreq < 3 THEN 1 ELSE 0 END) AS INT) AS n_kept,
-        |  CAST(sum(CASE WHEN dfreq >= 3 THEN 1 ELSE 0 END) AS INT) AS n_dropped,
-        |  md5(coalesce(string_agg(CASE WHEN dfreq < 3 THEN seg END, ' ' ORDER BY seg_idx), '')) AS cleaned_md5
-        |FROM seg s JOIN df USING (seg)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_cms_freq" ->
-      """SELECT event_type, count(*) AS n_events, true AS within_eps
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_join_full" ->
-      """WITH purch AS (
-        |  SELECT user_id, count(*) AS n_purch,
-        |    CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS purch_val
-        |  FROM events WHERE event_type = 'purchase' AND value > 150 GROUP BY 1),
-        |errs AS (
-        |  SELECT user_id, count(*) AS n_err
-        |  FROM events WHERE event_type = 'error' AND value > 150 GROUP BY 1)
-        |SELECT user_id, coalesce(n_purch, 0) AS n_purch,
-        |  round(coalesce(purch_val, 0), 4) AS purch_val,
-        |  coalesce(n_err, 0) AS n_err
-        |FROM purch FULL OUTER JOIN errs USING (user_id)
-        |ORDER BY user_id""".stripMargin,
-
-    "q_ewma_smooth" ->
-      """SELECT event_id, user_id, round(value, 4) AS v,
-        |  round(
-        |    (CASE WHEN value IS NOT NULL THEN value * 1.0 ELSE 0 END
-        |     + CASE WHEN lag(value, 1) OVER w IS NOT NULL THEN lag(value, 1) OVER w * 0.5 ELSE 0 END
-        |     + CASE WHEN lag(value, 2) OVER w IS NOT NULL THEN lag(value, 2) OVER w * 0.25 ELSE 0 END
-        |     + CASE WHEN lag(value, 3) OVER w IS NOT NULL THEN lag(value, 3) OVER w * 0.125 ELSE 0 END
-        |     + CASE WHEN lag(value, 4) OVER w IS NOT NULL THEN lag(value, 4) OVER w * 0.0625 ELSE 0 END
-        |     + CASE WHEN lag(value, 5) OVER w IS NOT NULL THEN lag(value, 5) OVER w * 0.03125 ELSE 0 END
-        |     + CASE WHEN lag(value, 6) OVER w IS NOT NULL THEN lag(value, 6) OVER w * 0.015625 ELSE 0 END
-        |     + CASE WHEN lag(value, 7) OVER w IS NOT NULL THEN lag(value, 7) OVER w * 0.0078125 ELSE 0 END)
-        |    /
-        |    (CASE WHEN value IS NOT NULL THEN 1.0 ELSE 0 END
-        |     + CASE WHEN lag(value, 1) OVER w IS NOT NULL THEN 0.5 ELSE 0 END
-        |     + CASE WHEN lag(value, 2) OVER w IS NOT NULL THEN 0.25 ELSE 0 END
-        |     + CASE WHEN lag(value, 3) OVER w IS NOT NULL THEN 0.125 ELSE 0 END
-        |     + CASE WHEN lag(value, 4) OVER w IS NOT NULL THEN 0.0625 ELSE 0 END
-        |     + CASE WHEN lag(value, 5) OVER w IS NOT NULL THEN 0.03125 ELSE 0 END
-        |     + CASE WHEN lag(value, 6) OVER w IS NOT NULL THEN 0.015625 ELSE 0 END
-        |     + CASE WHEN lag(value, 7) OVER w IS NOT NULL THEN 0.0078125 ELSE 0 END), 6) AS ewma
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |ORDER BY event_id""".stripMargin,
-
-    "q_regr_trend" ->
-      """WITH pts AS (
-        |  SELECT event_type, value,
-        |    CAST(date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS DOUBLE) AS x
-        |  FROM events),
-        |m AS (
-        |  SELECT event_type, count(*) AS n,
-        |    CAST(sum(CAST(x AS DECIMAL(28,6))) AS DOUBLE) AS sx,
-        |    CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS sy,
-        |    CAST(sum(CAST(x * value AS DECIMAL(28,6))) AS DOUBLE) AS sxy,
-        |    CAST(sum(CAST(x * x AS DECIMAL(28,6))) AS DOUBLE) AS sxx
-        |  FROM pts GROUP BY 1)
-        |SELECT event_type, n,
-        |  round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) AS slope,
-        |  round((sy - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * sx) / n, 6) AS intercept
-        |FROM m ORDER BY 1""".stripMargin,
-
-    "q_mix_temperature" ->
-      """WITH c AS (
-        |  SELECT source, count(*) AS n_docs,
-        |    round(pow(CAST(count(*) AS DOUBLE), 0.7), 6) AS w_raw
-        |  FROM documents GROUP BY 1),
-        |t AS (SELECT CAST(sum(CAST(w_raw AS DECIMAL(18,6))) AS DOUBLE) AS w_total FROM c)
-        |SELECT source, n_docs, round(w_raw / w_total, 6) AS weight,
-        |  CAST(floor(10000 * (w_raw / w_total)) AS BIGINT) AS quota_docs
-        |FROM c, t ORDER BY 1""".stripMargin,
-
-    "q_weighted_avg" ->
-      """SELECT event_type, count(*) AS n,
-        |  round(
-        |    CAST(sum(CAST(value * CAST(json_extract_string(props, '$.k') AS INT) AS DECIMAL(28,6))) AS DOUBLE) /
-        |    CAST(sum(CAST(CAST(json_extract_string(props, '$.k') AS INT) AS DECIMAL(28,6))) AS DOUBLE), 6) AS wavg
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_fuzzy_pairs" ->
-      """SELECT a.doc_id,
-        |  CAST(levenshtein(substr(a.text, 1, 60), substr(b.text, 1, 60)) AS INT) AS lev,
-        |  CAST(length(b.text) - length(a.text) AS INT) AS len_delta
-        |FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1
-        |ORDER BY a.doc_id""".stripMargin,
-
-    "q_conditional_funcs" ->
-      """SELECT event_id,
-        |  CASE WHEN value > 100 THEN 'high' WHEN value > 10 THEN 'mid' ELSE 'low' END AS band,
-        |  coalesce(nullif(event_type, 'view'), 'filtered') AS type_or_filtered,
-        |  round(greatest(value, 0.0), 4) AS clamped_lo,
-        |  round(least(value, 500.0), 4) AS clamped_hi
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    // the bitmap's exact distinct = plain COUNT(DISTINCT)
-    "q_bitmap_distinct" ->
-      """SELECT event_type,
-        |  count(DISTINCT user_id) AS nd_bitmap,
-        |  count(DISTINCT user_id) AS nd_exact
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // round-trip identity: decrypt(encrypt(text)) = text
-    "q_aes_roundtrip" ->
-      """SELECT doc_id, text AS rt FROM documents ORDER BY doc_id""",
-
-    // one source file → n rows indexed 0..n-1, derived relationally
-    "q_file_metadata" ->
-      """SELECT 'events.parquet' AS file_name, count(*) AS n,
-        |  CAST(0 AS BIGINT) AS min_ri, count(*) - 1 AS max_ri
-        |FROM events""".stripMargin,
-
-    // same instants through the AT TIME ZONE chain (DST-rule-aware)
-    "q_timezone" ->
-      """SELECT event_id,
-        |  CAST(CAST(ts AS TIMESTAMP) AT TIME ZONE 'UTC' AT TIME ZONE 'America/New_York' AS TIMESTAMP) AS ny_wall,
-        |  CAST(CAST(ts AS TIMESTAMP) AT TIME ZONE 'UTC' AT TIME ZONE 'Asia/Tokyo' AS TIMESTAMP) AS tokyo_wall,
-        |  strftime(CAST(CAST(ts AS TIMESTAMP) AT TIME ZONE 'UTC' AT TIME ZONE 'Europe/Paris' AS TIMESTAMP), '%Y-%m-%d %H') AS paris_hour
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    // parameters bound to their literal values
-    "q_sql_params" ->
-      """SELECT event_type, count(*) AS n FROM events
-        |WHERE value > 50.0 AND event_type IN ('click', 'purchase')
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // collated grouping = grouping on the lowercased key
-    "q_collation" ->
-      """SELECT event_type, count(*) AS n FROM (
-        |  SELECT lower(CASE WHEN event_id % 2 = 0 THEN upper(event_type)
-        |               ELSE event_type END) AS event_type
-        |  FROM events)
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // the pipe chain re-expressed as plain SQL
-    "q_sql_pipe" ->
-      """SELECT event_type, count(*) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2)) * 2) AS DOUBLE) AS doubled_total
-        |FROM events WHERE event_type IN ('click', 'purchase')
-        |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
-
-    // each try_* null site reproduced: zero denominator, guaranteed
-    // overflow for positive ids, index past a 1-element list
-    "q_try_funcs" ->
-      """SELECT event_id,
-        |  CASE WHEN user_id % 3 = 0 THEN NULL
-        |       ELSE round(value / CAST(user_id % 3 AS DOUBLE), 4) END AS safe_div,
-        |  CASE WHEN event_id % 1000 = 0 THEN
-        |    CASE WHEN event_id > 0 THEN NULL
-        |         ELSE CAST(CAST(event_id AS HUGEINT) + 9223372036854775807 AS BIGINT) END
-        |  ELSE event_id + 1 END AS safe_add,
-        |  CAST(NULL AS VARCHAR) AS safe_elem
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q_minmax_by" ->
-      """SELECT event_type,
-        |  arg_max(round(value, 4), event_id) AS latest_value,
-        |  arg_min(round(value, 4), event_id) AS first_value,
-        |  max(event_id) AS max_id, min(event_id) AS min_id
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_higher_order" ->
-      """SELECT vec_id,
-        |  CAST(list_sum(list_transform(embedding, x -> CASE WHEN x > 0 THEN 1 ELSE 0 END)) AS INT) AS n_pos_agg,
-        |  CAST(len(list_filter(embedding, x -> x > 0)) AS INT) AS n_pos_filter,
-        |  CAST(list_sum(list_transform(range(1, len(embedding) + 1),
-        |    i -> CASE WHEN embedding[i] > embedding[len(embedding) - i + 1] THEN 1 ELSE 0 END)) AS INT) AS n_beats_mirror,
-        |  len(list_filter(embedding, x -> x > 3.0)) > 0 AS has_outlier
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-
-    "q_array_funcs" ->
-      """SELECT vec_id, CAST(len(embedding) AS INT) AS n_dims,
-        |  round(CAST(list_max(embedding) AS DOUBLE), 4) AS vmax,
-        |  round(CAST(list_min(embedding) AS DOUBLE), 4) AS vmin,
-        |  round(CAST(embedding[1] AS DOUBLE), 4) AS head,
-        |  round(CAST(list_sort(embedding)[3] AS DOUBLE), 4) AS third_smallest
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-
-    "q_corr_stats" ->
-      """WITH m AS (
-        |  SELECT event_type, count(*) AS n,
-        |    CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS sx,
-        |    CAST(sum(CAST(CAST(json_extract_string(props, '$.k') AS INT) AS DECIMAL(28,6))) AS DOUBLE) AS sy,
-        |    CAST(sum(CAST(value * CAST(json_extract_string(props, '$.k') AS INT) AS DECIMAL(28,6))) AS DOUBLE) AS sxy,
-        |    CAST(sum(CAST(value * value AS DECIMAL(28,6))) AS DOUBLE) AS sxx,
-        |    CAST(sum(CAST(CAST(json_extract_string(props, '$.k') AS INT) * CAST(json_extract_string(props, '$.k') AS INT) AS DECIMAL(28,6))) AS DOUBLE) AS syy
-        |  FROM events GROUP BY 1)
-        |SELECT event_type, n,
-        |  round((n * sxy - sx * sy) / sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)), 4) AS corr_vk
-        |FROM m ORDER BY event_type""".stripMargin,
-
-    "q_regex_funcs" ->
-      """SELECT event_id,
-        |  CAST(regexp_extract(props, '\d+', 0) AS INT) AS k_extracted,
-        |  regexp_matches(props, '"k": 1') AS k_starts_1,
-        |  CAST(len(regexp_extract_all(props, '\d')) AS INT) AS n_digits
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q_collect_sorted" ->
-      """SELECT user_id, string_agg(DISTINCT event_type, ',' ORDER BY event_type) AS types_csv,
-        |  count(*) AS n_events
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_topk_page" ->
-      ("SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value FROM events " +
-        "ORDER BY value DESC, event_id LIMIT 50 OFFSET 100"),
-
-    "q_ngram_topk" ->
-      """WITH tok AS (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS t FROM documents),
-        |sh AS (SELECT doc_id, unnest(list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)])) AS shingle
-        |       FROM tok WHERE len(t) >= 3)
-        |SELECT shingle, count(*) AS df FROM sh GROUP BY 1 ORDER BY df DESC, shingle LIMIT 20""".stripMargin,
-
-    // identical integer chunk-count arithmetic and 1-based substr windows
-    "q_chunk_overlap" ->
-      """WITH n AS (
-        |  SELECT doc_id, text,
-        |    CASE WHEN length(text) <= 128 THEN 1
-        |         ELSE 1 + (length(text) - 128 + 95) // 96 END AS n_chunks
-        |  FROM documents)
-        |SELECT doc_id, i AS chunk_idx,
-        |  length(substr(text, CAST(i * 96 + 1 AS BIGINT), 128)) AS chunk_chars,
-        |  md5(substr(text, CAST(i * 96 + 1 AS BIGINT), 128)) AS chunk_md5
-        |FROM n, unnest(generate_series(0, n_chunks - 1)) AS t(i)
-        |ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    // pair counts recomputed over the same word-frequency dictionary
-    "q_bpe_pairs" ->
-      """WITH words AS (
-        |  SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS word
-        |  FROM documents),
-        |wf AS (SELECT word, count(*) AS freq FROM words
-        |       WHERE length(word) >= 2 GROUP BY 1),
-        |pairs AS (
-        |  SELECT substr(word, i, 2) AS pair, freq
-        |  FROM wf, unnest(generate_series(1, length(word) - 1)) AS t(i))
-        |SELECT pair, CAST(sum(freq) AS BIGINT) AS n FROM pairs GROUP BY 1
-        |ORDER BY n DESC, pair LIMIT 20""".stripMargin,
-
-    // the full 20-round merge loop, value-oracled over the whole
-    // trajectory: the same dictionary collapse, pair count, (n desc,
-    // pair) tie-break and boundary-safe literal replace, unrolled as 20
-    // CTE stages (the q_pagerank_sim pattern)
-    "q_bpe_train" -> bpeTrainOracle(20),
-
-    // encoding the training corpus with the trained merges = the unrolled
-    // chain's final dictionary, exploded and histogrammed — exact value
-    // oracle for the whole train→encode loop
-    "q_bpe_encode" -> bpeEncodeOracle(20, 30),
-    // held-out encode: merges trained on doc_id >= 50, replayed over the
-    // eval (doc_id < 50) dictionary, OOV flagged vs the trained vocab
-    "q_bpe_encode_heldout" -> bpeEncodeHeldoutOracle(20, 30),
-
-    // identical count assembly and single-ln rounding discipline
-    "q_pmi_bigrams" ->
-      """WITH tk AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS tk
-        |  FROM documents),
-        |tk2 AS (SELECT * FROM tk WHERE len(tk) >= 2),
-        |uni AS (SELECT unnest(tk) AS w FROM tk),
-        |unic AS (SELECT w, count(*) AS n_w FROM uni GROUP BY 1),
-        |bic AS (
-        |  SELECT tk[i] AS a, tk[i+1] AS b, count(*) AS n_ab
-        |  FROM tk2, unnest(generate_series(1, len(tk) - 1)) AS t(i)
-        |  GROUP BY 1, 2 HAVING count(*) >= 20),
-        |tot AS (SELECT CAST(count(*) AS DOUBLE) AS n_uni FROM uni),
-        |nbi AS (SELECT CAST(sum(len(tk) - 1) AS DOUBLE) AS n_bi FROM tk2)
-        |SELECT bic.a, bic.b, CAST(bic.n_ab AS BIGINT) AS n_ab,
-        |  round(ln((bic.n_ab * n_uni * n_uni) / (n_bi * ua.n_w * ub.n_w)), 4) AS pmi
-        |FROM bic JOIN unic ua ON bic.a = ua.w JOIN unic ub ON bic.b = ub.w, tot, nbi
-        |ORDER BY pmi DESC, a, b
-        |LIMIT 20""".stripMargin,
-
-    // resize arithmetic: new dims are literal, body truncates to
-    // min(L, max(ceil(L * newArea / oldArea), 1))
-    "q_mm_resize" ->
-      """SELECT doc_id AS media_id, CAST(doc_id % 3 AS INT) AS kind_id, true AS valid,
-        |  CAST(64 AS INT) AS width, CAST(48 AS INT) AS height,
-        |  CAST(least(octet_length(encode(text)),
-        |    greatest(CAST(ceil(octet_length(encode(text)) * 3072.0 /
-        |      greatest((32 + doc_id % 96) * (24 + doc_id % 72), 1)) AS BIGINT), 1)) AS INT) AS body_bytes
-        |FROM documents ORDER BY media_id""".stripMargin,
-
-    "q_sample_stratified" ->
-      "SELECT lang, count(*) AS n_docs, true AS rate_ok FROM documents GROUP BY 1 ORDER BY 1",
-
-    "q_sample_mix" ->
-      """SELECT CASE WHEN lang = 'en' THEN 'en' ELSE 'other' END AS bucket,
-        |  count(*) AS n_docs, true AS rate_ok
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_unpivot" ->
-      """SELECT l_orderkey, l_linenumber, metric, round(val, 4) AS val
-        |FROM (UNPIVOT (SELECT l_orderkey, l_linenumber, l_quantity, l_discount, l_tax FROM lineitem)
-        |      ON l_quantity, l_discount, l_tax INTO NAME metric VALUE val)
-        |ORDER BY l_orderkey, l_linenumber, metric, val""".stripMargin,
-
-    "q_window_nth" ->
-      """SELECT event_id,
-        |  first_value(event_id) OVER w AS first_evt,
-        |  last_value(event_id) OVER w AS last_evt,
-        |  nth_value(event_id, 2) OVER w AS second_evt
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |ORDER BY event_id""".stripMargin,
-
-    "q_in_subquery" ->
-      """SELECT event_id, user_id FROM events
-        |WHERE user_id IN (SELECT DISTINCT user_id FROM events WHERE event_type = 'signup')
-        |  AND value > (SELECT min(value) FROM events)
-        |ORDER BY event_id""".stripMargin,
-
-    "q_exists_correlated" ->
-      """SELECT c_custkey, c_name FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o
-        |              WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 100000)
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q_cross_join" ->
-      "SELECT r_name, n_name FROM region CROSS JOIN nation ORDER BY r_name, n_name",
-
-    "q_lateral_join" ->
-      """SELECT r.r_name, l.n_nationkey, l.n_name
-        |FROM region r,
-        |LATERAL (SELECT n_nationkey, n_name FROM nation
-        |         WHERE n_regionkey = r.r_regionkey
-        |         ORDER BY n_nationkey LIMIT 2) l
-        |ORDER BY r_name, n_nationkey""".stripMargin,
-
-    "q_window_range_frame" ->
-      """SELECT event_id,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) OVER (PARTITION BY event_type ORDER BY epoch_ms(ts)
-        |    RANGE BETWEEN 3600000 PRECEDING AND CURRENT ROW) AS DOUBLE) AS trailing_1h
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q_sim_ivf_recall" ->
-      "SELECT CAST(10 AS INT) AS k, true AS recall_ok",
-
-    // streamed first-drop-trained index at nprobe=8: the recall gate is
-    // the declared invariant, like every approximate tier
-    "q_stream_ann_ingest" ->
-      "SELECT CAST(10 AS INT) AS k, true AS recall_ok",
-
-    // in-stream maintenance grew the quantizer past its bootstrap nlist=8
-    // (threshold fires at the verify SF's drop sizes) and the evolved
-    // store still clears the recall gate at a quarter-of-cells nprobe
-    "q_sim_ivf_requantized" ->
-      "SELECT CAST(10 AS INT) AS k, true AS nlist_grew, true AS recall_ok",
-
-    // the streamed store holds SQ8 codes only (no float column) and the
-    // code-ranked probe still clears the 8/10 gate vs float brute force
-    "q_stream_ann_quantized" ->
-      "SELECT CAST(10 AS INT) AS k, true AS codes_only, true AS recall_ok",
-
-    // the compacted store holds every streamed vector in one clustered
-    // partition and the probe over it still clears the gate
-    "q_sim_ivf_compacted" ->
-      "SELECT CAST(10 AS INT) AS k, true AS complete, true AS recall_ok",
-
-    // the stored batch probe-set (one pruned pass over the SQ8+compacted
-    // store) clears the recall gate INDEPENDENTLY for every probe
-    "q_sim_ivf_batch_stored" ->
-      """SELECT CAST(v AS BIGINT) AS probe_id, true AS recall_ok
-        |FROM (VALUES (0), (1), (2), (3)) t(v) ORDER BY probe_id""".stripMargin,
-
-    // the store requantized PAST CoarseAssignThreshold (16 -> 2048 cells):
-    // write-side re-assign and probe-side cell ranking both run the
-    // two-level coarse path, and per-probe recall still clears 8/10
-    "q_sim_ivf_coarse" ->
-      """SELECT CAST(v AS BIGINT) AS probe_id, true AS nlist_coarse,
-        |  true AS recall_ok
-        |FROM (VALUES (0), (16)) t(v) ORDER BY probe_id""".stripMargin,
-
-    // filtered ANN: the relational pre-filter composes with the cell
-    // prune in one stored scan, the nprobe budget scales by inverse
-    // selectivity, and per-probe recall vs the FILTERED brute force
-    // clears 8/10; the twin derives the probe ids (first four qualifying
-    // originals × the expansion factor) from the same table
-    "q_sim_filtered_stored" ->
-      """SELECT vec_id * 16 AS probe_id, true AS recall_ok
-        |FROM (SELECT vec_id FROM embeddings WHERE label >= 5
-        |      ORDER BY vec_id LIMIT 4) ORDER BY probe_id""".stripMargin,
-
-    // the coded-store filtered serve: same probes and filtered truth as
-    // the flat gate, recall bought with inverse-selectivity nprobe AND
-    // rerank on the PQ path
-    "q_sim_ivfpq_filtered" ->
-      """SELECT vec_id * 16 AS probe_id, true AS recall_ok
-        |FROM (SELECT vec_id FROM embeddings WHERE label >= 5
-        |      ORDER BY vec_id LIMIT 4) ORDER BY probe_id""".stripMargin,
-
-    // the streaming twin of the hot-split gate: the trigger fires BETWEEN
-    // micro-batches (the stream never stops for maintenance), ceiling
-    // restored, store complete, hot-probe recall holds
-    "q_stream_ivf_hotsplit" ->
-      """SELECT CAST(v AS BIGINT) AS probe_id, true AS split_fired,
-        |  true AS ceiling_ok, true AS complete, true AS recall_ok
-        |FROM (VALUES (0), (1)) t(v) ORDER BY probe_id""".stripMargin,
-
-    // the in-stream growth gate: the compounding requantize ladder crossed
-    // the driver-sample ceiling mid-stream (4 → 16 → 64 with sampleRows=48,
-    // the second hop hierarchically trained), store complete, recall holds
-    "q_stream_ivf_growth" ->
-      """SELECT CAST(v AS BIGINT) AS probe_id, true AS ladder_ok,
-        |  true AS crossed_ok, true AS complete, true AS recall_ok
-        |FROM (VALUES (0), (1)) t(v) ORDER BY probe_id""".stripMargin,
-
-    // erasure coordinated with the live ingest stream: the enqueued
-    // request drained in the between-batch single-writer slot (no sentinel
-    // race, no stream death), victims gone, survivors complete, recall
-    // holds over corpus-minus-victims
-    "q_stream_ivf_erase" ->
-      """SELECT CAST(v AS BIGINT) AS probe_id, true AS drained_ok,
-        |  true AS complete, true AS recall_ok
-        |FROM (VALUES (0), (1)) t(v) ORDER BY probe_id""".stripMargin,
-
-    // right-to-erasure on the stored ANN index: victims deleted without a
-    // rebuild, untouched files byte-identical, survivors complete, and
-    // post-delete recall clears the gate vs corpus-minus-victims
-    "q_sim_ivf_delete" ->
-      """SELECT CAST(v AS BIGINT) AS probe_id, true AS deleted_ok,
-        |  true AS cold_ok, true AS complete, true AS recall_ok
-        |FROM (VALUES (0), (1)) t(v) ORDER BY probe_id""".stripMargin,
-
-    // bulk (victim-table) ANN erasure at the exhaustive corner: the
-    // post-delete stored probe set-equals brute force over the
-    // surviving six sevenths — flags all true
-    "q_sim_ivf_bulk_delete" ->
-      """SELECT CAST(v AS BIGINT) AS probe_id, true AS deleted_ok,
-        |  true AS complete, true AS equal_ok
-        |FROM (VALUES (0), (1)) t(v) ORDER BY probe_id""".stripMargin,
-
-    // retention gate: the probe ids are the retained half's boundary and
-    // max ids (SF-dependent), recomputed from the same integer split
-    "q_sim_ivf_retention" ->
-      """WITH b AS (SELECT max(vec_id) AS mxid FROM embeddings)
-        |SELECT probe_id, true AS dropped_ok, true AS cold_ok,
-        |  true AS complete, true AS equal_ok
-        |FROM (SELECT 2 * (mxid + 1) // 4 AS probe_id FROM b
-        |      UNION ALL SELECT mxid FROM b) t
-        |ORDER BY probe_id""".stripMargin,
-
-    // right-to-erasure on the PRODUCTION (PQ coded) layout: victims gone,
-    // cold files byte-identical, every survivor's codes pass through
-    // byte-equal, both quantizer artifacts untouched, and post-delete
-    // ADC+rerank recall clears the gate vs corpus-minus-victims
-    "q_sim_ivfpq_delete" ->
-      """SELECT CAST(v AS BIGINT) AS probe_id, true AS deleted_ok,
-        |  true AS cold_ok, true AS index_ok, true AS codes_ok,
-        |  true AS complete, true AS recall_ok
-        |FROM (VALUES (0), (1)) t(v) ORDER BY probe_id""".stripMargin,
-
-    // hierarchical two-level training honored nlist=8192 (no silent
-    // clamp) from a distributed ≥ 8×nlist sample, and per-probe recall
-    // through the stored batch probe clears 8/10 on the coarse path
-    "q_sim_ivf_hier" ->
-      """SELECT CAST(v AS BIGINT) AS probe_id, true AS nlist_ok,
-        |  true AS sample_ok, true AS recall_ok
-        |FROM (VALUES (0), (256)) t(v) ORDER BY probe_id""".stripMargin,
-
-    // the streamed IVF-PQ store holds (cell, pqcode) rows only — ~32x
-    // under float32 — and ADC-over-pruned-cells + exact re-rank still
-    // clears the 8/10 gate vs float brute force
-    "q_sim_ivfpq_stored" ->
-      "SELECT CAST(10 AS INT) AS k, true AS codes_only, true AS recall_ok",
-
-    // N probes in one pruned pass over the coded store: per-probe ADC
-    // LUTs + exact re-rank clear the gate independently for every probe
-    "q_sim_ivfpq_batch_stored" ->
-      """SELECT CAST(v AS BIGINT) AS probe_id, true AS recall_ok
-        |FROM (VALUES (0), (1), (2), (3)) t(v) ORDER BY probe_id""".stripMargin,
-
-    // in-stream maintenance grew the coarse quantizer past its bootstrap
-    // nlist=8 on the CODED store (codes untouched) and the evolved store
-    // still clears the recall gate at a pruned nprobe
-    "q_sim_ivfpq_requantized" ->
-      "SELECT CAST(10 AS INT) AS k, true AS nlist_grew, true AS recall_ok",
-
-    // hot-cell skew maintenance: the split fired on the drift fixture,
-    // the occupancy ceiling is restored without losing a row, and the
-    // hot-cluster probes still clear the recall gate
-    "q_sim_ivf_hotsplit" ->
-      """SELECT CAST(v AS BIGINT) AS probe_id, true AS split_fired,
-        |  true AS converged, true AS ceiling_ok, true AS complete,
-        |  true AS recall_ok
-        |FROM (VALUES (0), (1)) t(v) ORDER BY probe_id""".stripMargin,
-
-    // the full coded-store lifecycle (ingest -> in-stream growth ->
-    // compaction -> batch probe): one complete batch partition survives
-    // and every probe clears the gate on the aged layout
-    "q_sim_ivfpq_aged" ->
-      """SELECT CAST(v AS BIGINT) AS probe_id, true AS nlist_grew,
-        |  true AS aged_ok, true AS recall_ok
-        |FROM (VALUES (0), (1), (2), (3)) t(v) ORDER BY probe_id""".stripMargin,
-
-    // int8 quantization keeps the exact top-10 on this data (cosine
-    // perturbation ~1e-3 ≪ neighbor gaps); gated at ≥ 8/10 like IVF
-    "q_sim_quantized" ->
-      "SELECT CAST(10 AS INT) AS k, true AS recall_ok",
-
-    // IVF cells over quantized vectors: both approximations composed still
-    // clear the 8/10 recall bar (deterministic for this data+index)
-    "q_sim_ivf_quantized" ->
-      "SELECT CAST(10 AS INT) AS k, true AS recall_ok",
-
-    // PQ/ADC at 32x compression keeps >= 8 of the exact top-10 on this
-    // data (deterministic: ordered sample, seed-free per-subspace k-means)
-    "q_sim_pq" ->
-      "SELECT CAST(10 AS INT) AS k, true AS recall_ok",
-
-    // persisted-codebook PQ probe: identical math to q_sim_pq through the
-    // parquet round-trip (doubles survive exactly), same recall gate
-    "q_sim_pq_persisted" ->
-      "SELECT CAST(10 AS INT) AS k, true AS recall_ok",
-
-    // 64-bit Hamming shortlist of 100 (of 500) then exact re-rank keeps
-    // >= 8 of the exact top-10 (deterministic splitmix64 hyperplanes)
-    "q_sim_hamming" ->
-      "SELECT CAST(10 AS INT) AS k, true AS recall_ok",
-
-    // per-probe recall gate for the batch Hamming pass (4 probes)
-    "q_sim_hamming_batch" ->
-      """SELECT probe_id, CAST(10 AS INT) AS k, true AS recall_ok
-        |FROM (SELECT unnest([0, 1, 2, 3]::BIGINT[]) AS probe_id)
-        |ORDER BY probe_id""".stripMargin,
-
-    // PageRank over the first-principles exact-Jaccard graph, 5 unrolled
-    // iterations with the identical 12-dp + decimal-sum convention — the
-    // whole trajectory is value-oracled, not just the fixed point
-    "q_pagerank_sim" ->
-      ("""WITH tok AS (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS t FROM documents),
-        |sh AS (SELECT doc_id, list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)]) AS s
-        |       FROM tok WHERE len(t) >= 3),
-        |pairs AS (
-        |  SELECT a.doc_id AS da, b.doc_id AS db
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE len(list_intersect(a.s, b.s)) * 1.0 /
-        |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.7),
-        |edges AS (SELECT da AS src, db AS dst FROM pairs UNION ALL SELECT db AS src, da AS dst FROM pairs),
-        |deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY 1),
-        |nodes AS (SELECT doc_id FROM documents),
-        |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n_total FROM nodes),
-        |r0 AS (SELECT doc_id, 1.0 / (SELECT n_total FROM nn) AS r FROM nodes),
-        |""".stripMargin +
-        (1 to 5).map { i =>
-          s"""r$i AS (SELECT n.doc_id,
-             |  round(0.15 / (SELECT n_total FROM nn) + 0.85 * coalesce(c.contrib, 0), 12) AS r
-             |  FROM nodes n LEFT JOIN (
-             |    SELECT e.dst, CAST(sum(CAST(round(p.r / d.deg, 12) AS DECIMAL(28,14))) AS DOUBLE) AS contrib
-             |    FROM r${i - 1} p JOIN edges e ON p.doc_id = e.src JOIN deg d ON d.src = e.src
-             |    GROUP BY e.dst) c ON n.doc_id = c.dst)""".stripMargin
-        }.mkString(",\n") +
-        "\nSELECT doc_id, round(r * 1000000, 4) AS rank_ppm FROM r5 ORDER BY doc_id"),
-
-    // same truth-pair CTE as pagerank_sim, closed into triangles by a
-    // 3-way join on canonical (a < b < c) ids — orientation-free twin of
-    // the degree-oriented Spark plan
-    "q_triangles" ->
-      """WITH tok AS (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS t FROM documents),
-        |sh AS (SELECT doc_id, list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)]) AS s
-        |       FROM tok WHERE len(t) >= 3),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE len(list_intersect(a.s, b.s)) * 1.0 /
-        |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.7),
-        |tri AS (
-        |  SELECT p1.doc_a AS a, p1.doc_b AS b, p2.doc_b AS c
-        |  FROM pairs p1 JOIN pairs p2 ON p2.doc_a = p1.doc_a AND p2.doc_b > p1.doc_b
-        |  JOIN pairs p3 ON p3.doc_a = p1.doc_b AND p3.doc_b = p2.doc_b),
-        |corners AS (SELECT a AS doc_id FROM tri UNION ALL
-        |            SELECT b FROM tri UNION ALL SELECT c FROM tri)
-        |SELECT doc_id, count(*) AS n_triangles FROM corners
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // Invariant-oracle family for the fuzzy-dedup path. All of these lean on
-    // the corpus's clean separation (planted pairs at J ≥ 0.9, organic pairs
-    // ≤ 0.07, empirically verified at the gate SF): the LSH candidate set at
-    // est ≥ 0.4 equals the hash-free exact-Jaccard truth set, which DuckDB
-    // derives from first principles below.
-    "q_dedup_minhash" ->
-      """WITH tok AS (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS t FROM documents),
-        |sh AS (SELECT doc_id, list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)]) AS s
-        |       FROM tok WHERE len(t) >= 3)
-        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |WHERE len(list_intersect(a.s, b.s)) * 1.0 /
-        |      (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.9
-        |ORDER BY doc_a, doc_b""".stripMargin,
-
-    // planted-clone probe recall + structural bounds (simhash itself has no
-    // SQL twin; the Hamming-0 guarantee on an exact clone is deterministic)
-    "q_dedup_simhash" ->
-      "SELECT true AS probe_found, true AS all_ham_ok, true AS ordered_ok",
-
-    // exact-verified pairs at J >= 0.7 with their jaccard values — both
-    // engines divide the same two integers and floor-round the quotient
-    "q_dedup_ngram" ->
-      """WITH tok AS (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS t FROM documents),
-        |sh AS (SELECT doc_id, list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)]) AS s
-        |       FROM tok WHERE len(t) >= 3),
-        |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |        len(list_intersect(a.s, b.s)) * 1.0 /
-        |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) AS j
-        |      FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-        |SELECT doc_a, doc_b, floor(j * 10000 + 0.5) / 10000 AS jaccard
-        |FROM p WHERE j >= 0.7 ORDER BY doc_a, doc_b""".stripMargin,
-
-    // greedy keep-smallest dedup: with candidates == truth (separation
-    // argument above), the kept set is exactly documents minus the larger
-    // endpoint of every true pair
-    "q_dedup_keep" ->
-      """WITH tok AS (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS t FROM documents),
-        |sh AS (SELECT doc_id, list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)]) AS s
-        |       FROM tok WHERE len(t) >= 3),
-        |tp AS (SELECT a.doc_id AS da, b.doc_id AS db
-        |       FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |       WHERE len(list_intersect(a.s, b.s)) * 1.0 /
-        |             (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.9)
-        |SELECT doc_id, lang FROM documents
-        |WHERE doc_id NOT IN (SELECT db FROM tp) ORDER BY doc_id""".stripMargin,
-
-    // the streamed greedy keep-first equals the batch one (arrival order =
-    // id order, append-only index): same first-principles truth set
-    "q_stream_fuzzy_dedup" ->
-      """WITH tok AS (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS t FROM documents),
-        |sh AS (SELECT doc_id, list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)]) AS s
-        |       FROM tok WHERE len(t) >= 3),
-        |tp AS (SELECT a.doc_id AS da, b.doc_id AS db
-        |       FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |       WHERE len(list_intersect(a.s, b.s)) * 1.0 /
-        |             (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.9)
-        |SELECT doc_id, lang FROM documents
-        |WHERE doc_id NOT IN (SELECT db FROM tp) ORDER BY doc_id""".stripMargin,
-
-    // arrival-time dup mass: a window of doc b is dup iff another holder
-    // arrived in an earlier-or-same slice (slice = the same integer-div
-    // quarters the fixture writes); windows re-derived with the same
-    // Karp-Rabin fold the engine uses
-    "q_stream_substring_ingest" ->
-      """WITH w AS (
-        |  SELECT DISTINCT doc_id, substring(text, i::INT, 40) AS win
-        |  FROM documents, UNNEST(range(1, length(text) - 40 + 2)) AS t(i)
-        |  WHERE length(text) >= 40
-        |    AND list_reduce(list_transform(regexp_extract_all(substring(text, i::INT, 40), '(?s).'), c -> unicode(c)), (a,b) -> (a::BIGINT*257+b)%2147483647) % 16 = 0),
-        |mx AS (SELECT max(doc_id) + 1 AS m FROM documents),
-        |s AS (SELECT w.doc_id, w.win,
-        |        CASE WHEN w.doc_id >= 3 * m // 4 THEN 3
-        |             WHEN w.doc_id >= 2 * m // 4 THEN 2
-        |             WHEN w.doc_id >= m // 4 THEN 1 ELSE 0 END AS slc
-        |      FROM w, mx)
-        |SELECT b.doc_id, count(DISTINCT b.win) AS n_dup_windows
-        |FROM s b
-        |WHERE EXISTS (SELECT 1 FROM s a
-        |              WHERE a.win = b.win AND a.doc_id <> b.doc_id AND a.slc <= b.slc)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // transitive dedup: connected components of the truth-pair graph via a
-    // recursive CTE; kept = every doc that is its component's minimum (or
-    // matched nothing)
-    "q_dedup_transitive" ->
-      """WITH RECURSIVE tok AS (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS t FROM documents),
-        |sh AS (SELECT doc_id, list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)]) AS s
-        |       FROM tok WHERE len(t) >= 3),
-        |tp AS (SELECT a.doc_id AS da, b.doc_id AS db
-        |       FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |       WHERE len(list_intersect(a.s, b.s)) * 1.0 /
-        |             (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.9),
-        |e AS (SELECT da AS a, db AS b FROM tp UNION SELECT db AS a, da AS b FROM tp),
-        |reach AS (SELECT a, b FROM e UNION SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
-        |lab AS (SELECT a AS doc_id, min(b) AS mn FROM reach WHERE b <> a GROUP BY a)
-        |SELECT d.doc_id, d.lang FROM documents d LEFT JOIN lab l ON d.doc_id = l.doc_id
-        |WHERE l.doc_id IS NULL OR l.mn > d.doc_id ORDER BY d.doc_id""".stripMargin,
-
-    // the planted byte-identical clones (1000+i of media i, i < 3) must
-    // each be recovered by the file→scan→histogram→LSH chain at exactly
-    // cosine 1.0 — identical payload bytes make the whole chain
-    // deterministic end-to-end
-    "q_mm_neardup" ->
-      """SELECT doc_id AS vec_a, doc_id + 1000 AS vec_b, 1.0 AS cosine
-        |FROM documents WHERE doc_id < 3 ORDER BY vec_a""".stripMargin,
-
-    // the three planted clones are the only semantic duplicates (organic
-    // max pairwise cosine ≈0.51 « 0.95), so SemDeDup's survivors are
-    // exactly the original corpus
-    "q_semdedup" ->
-      """SELECT vec_id, label FROM embeddings ORDER BY vec_id""".stripMargin,
-
-    // deterministic drop set: the three planted corpus clones (identical
-    // vectors share a cell under any quantizer, cosine 1.0) plus the
-    // LATER of the two identical negated arrivals (9000011); the earlier
-    // negated copy survives (cosine -1 to its source, organic |cos| <=
-    // 0.51 << 0.95)
-    "q_semdedup_incremental" ->
-      """SELECT vec_id FROM (
-        |  SELECT vec_id + 9000000 AS vec_id FROM embeddings WHERE vec_id < 3
-        |  UNION ALL SELECT 9000011
-        |) ORDER BY vec_id""".stripMargin,
-
-    // same deterministic planted-drop argument as q_semdedup_incremental
-    // (clones at cosine 1.0 share a cell under any quantizer; the later of
-    // the two identical negated arrivals is the only intra-increment drop),
-    // at the stored-index fixture's shifted ids
-    "q_semdedup_incremental_stored" ->
-      """SELECT vec_id FROM (
-        |  SELECT vec_id + 8000000 AS vec_id FROM embeddings WHERE vec_id < 3
-        |  UNION ALL SELECT 8000011
-        |) ORDER BY vec_id""".stripMargin,
-
-    // same quantizer-invariant planted-drop argument across the 16→64
-    // in-place requantize (clones at cosine 1.0 share a cell under any
-    // quantizer, before AND after the re-assign), at this fixture's ids
-    "q_semdedup_requantized" ->
-      """SELECT vec_id FROM (
-        |  SELECT vec_id + 8600000 AS vec_id FROM embeddings WHERE vec_id < 3
-        |  UNION ALL SELECT 8600011
-        |) ORDER BY vec_id""".stripMargin,
-
-    // same planted-drop argument as the stored form at shifted ids: the
-    // SQ8 codes change cosines by < 1%, three orders below the fixture's
-    // margin, so the drop set is quantizer-precision-invariant
-    "q_semdedup_quantized_stored" ->
-      """SELECT vec_id FROM (
-        |  SELECT vec_id + 8800000 AS vec_id FROM embeddings WHERE vec_id < 3
-        |  UNION ALL SELECT 8800011
-        |) ORDER BY vec_id""".stripMargin,
-
-    // arrival-ordered greedy keep-first over the planted stream: every
-    // organic vector is accepted (organic max pairwise cosine ≈0.51 «
-    // 0.95 — no organic drop regardless of cells), the three clones drop
-    // against their earlier-arrived originals, and of the two identical
-    // negated copies the EARLIER id is accepted (fresh direction) while
-    // the later drops intra-batch
-    "q_stream_semdedup" ->
-      """SELECT vec_id FROM (
-        |  SELECT vec_id FROM embeddings
-        |  UNION ALL SELECT 8500010
-        |) ORDER BY vec_id""".stripMargin,
-
-    // the planted clone (vec -1 = vec 0) is the only pair at cosine >= 0.9;
-    // DuckDB recomputes its cosine from the stored vector
-    "q_neardup_embedding" ->
-      """SELECT CAST(-1 AS BIGINT) AS vec_a, CAST(0 AS BIGINT) AS vec_b,
-        |  round(list_cosine_similarity(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[])), 4) AS cosine
-        |FROM embeddings WHERE vec_id = 0""".stripMargin,
-
-    // exact threshold search twin: filter on the ROUNDED cosine in both
-    // engines so the boundary is decided at the 4-dp comparison the whole
-    // suite relies on
-    "q_sim_probeset" ->
-      """SELECT e1.vec_id AS probe_id, e2.vec_id AS vec_id,
-        |  round(list_cosine_similarity(CAST(e2.embedding AS DOUBLE[]), CAST(e1.embedding AS DOUBLE[])), 4) AS cosine
-        |FROM embeddings e1, embeddings e2
-        |WHERE e1.vec_id IN (0, 1, 2) AND e2.vec_id <> e1.vec_id
-        |  AND round(list_cosine_similarity(CAST(e2.embedding AS DOUBLE[]), CAST(e1.embedding AS DOUBLE[])), 4) >= 0.3
-        |ORDER BY probe_id, vec_id""".stripMargin,
-
-    // per-probe exact window-top-k twin of the batch IVF (nprobe=10 recovers
-    // the exact top-10 for each probe on this data, verified at the gate SF)
-    "q_sim_ivf_batch" ->
-      """SELECT probe_id, vec_id, cosine FROM (
-        |  SELECT e1.vec_id AS probe_id, e2.vec_id AS vec_id,
-        |    round(list_cosine_similarity(CAST(e2.embedding AS DOUBLE[]), CAST(e1.embedding AS DOUBLE[])), 4) AS cosine,
-        |    row_number() OVER (PARTITION BY e1.vec_id
-        |      ORDER BY round(list_cosine_similarity(CAST(e2.embedding AS DOUBLE[]), CAST(e1.embedding AS DOUBLE[])), 4) DESC,
-        |               e2.vec_id) AS rk
-        |  FROM embeddings e1, embeddings e2
-        |  WHERE e1.vec_id IN (0, 1, 2, 3) AND e2.vec_id <> e1.vec_id)
-        |WHERE rk <= 10 ORDER BY probe_id, cosine DESC, vec_id""".stripMargin,
-
-    // at nprobe=8/nlist=16 the IVF result equals the exact top-10 on this
-    // data (verified at the gate SF) — same twin as the brute-force query
-    "q_sim_ivf" ->
-      """SELECT e2.vec_id AS vec_id,
-        |  round(list_cosine_similarity(CAST(e2.embedding AS DOUBLE[]), CAST(e1.embedding AS DOUBLE[])), 4) AS cosine
-        |FROM embeddings e1, embeddings e2
-        |WHERE e1.vec_id = 0 AND e2.vec_id <> 0
-        |ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin,
-
-    // the persisted-index probe loads the SAME deterministic centroids the
-    // in-memory build produced (doubles round-trip parquet exactly), so the
-    // nprobe=8 result is the same exact top-10 — same brute-force twin
-    "q_sim_ivf_persisted" ->
-      """SELECT e2.vec_id AS vec_id,
-        |  round(list_cosine_similarity(CAST(e2.embedding AS DOUBLE[]), CAST(e1.embedding AS DOUBLE[])), 4) AS cosine
-        |FROM embeddings e1, embeddings e2
-        |WHERE e1.vec_id = 0 AND e2.vec_id <> 0
-        |ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin,
-
-    // per-anchor exact top-1 below the band, clone row included in the
-    // corpus side so the exclusion is exercised
-    "q_hard_negatives" ->
-      """WITH corpus AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  UNION ALL
-        |  SELECT CAST(-1 AS BIGINT) AS vec_id, embedding
-        |  FROM embeddings WHERE vec_id = 0),
-        |sims AS (
-        |  SELECT a.vec_id AS anchor_id, e.vec_id AS negative_id,
-        |    round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])), 4) AS cosine
-        |  FROM embeddings a, corpus e
-        |  WHERE a.vec_id < 10 AND e.vec_id <> a.vec_id),
-        |r AS (
-        |  SELECT anchor_id, negative_id, cosine,
-        |    row_number() OVER (PARTITION BY anchor_id ORDER BY cosine DESC, negative_id) AS rk
-        |  FROM sims WHERE cosine < 0.9)
-        |SELECT anchor_id, negative_id, cosine FROM r WHERE rk = 1
-        |ORDER BY anchor_id""".stripMargin,
-
-    // appended vectors searchable without re-train: same brute-force twin
-    // over the FULL set as q_sim_ivf
-    "q_sim_ivf_append" ->
-      """SELECT e2.vec_id AS vec_id,
-        |  round(list_cosine_similarity(CAST(e2.embedding AS DOUBLE[]), CAST(e1.embedding AS DOUBLE[])), 4) AS cosine
-        |FROM embeddings e1, embeddings e2
-        |WHERE e1.vec_id = 0 AND e2.vec_id <> 0
-        |ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin,
-
-    // fingerprint respects text equality and is collision-free at corpus
-    // size, so distinct-fingerprint count == distinct-text count
-    "q_text_fingerprint" ->
-      "SELECT count(*) AS n_docs, count(DISTINCT text) AS n_texts, count(DISTINCT text) AS n_fps FROM documents",
-
-    // chunker audit: even seed docs inflate past the cap (must split), odd
-    // stay under (single chunk); cap and losslessness hold unconditionally
-    "q_chunk_adaptive" ->
-      """SELECT doc_id, doc_id % 2 = 0 AS is_split, true AS all_under_cap, true AS rebuilt_ok
-        |FROM documents WHERE doc_id < 8 ORDER BY doc_id""".stripMargin,
-
-    // hash-free ground truth twin of Dedup.exactJaccardPairs: distinct word
-    // 3-gram shingles per doc, exact Jaccard >= 0.7; recall asserts the
-    // LSH candidate set contains every true pair
-    "q_dedup_recall" ->
-      """WITH tok AS (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS t FROM documents),
-        |sh AS (SELECT doc_id, list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)]) AS s
-        |       FROM tok WHERE len(t) >= 3)
-        |SELECT count(*) AS n_true, count(*) AS n_recalled
-        |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |WHERE len(list_intersect(a.s, b.s)) * 1.0 /
-        |      (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.7""".stripMargin,
-
-    // brute-force containment twin: |A∩B|/|A| over distinct word 3-gram
-    // shingles, both directions (a≠b), threshold 0.9
-    "q_dedup_containment" ->
-      """WITH tok AS (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS t FROM documents),
-        |sh AS (SELECT doc_id, list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)]) AS s
-        |       FROM tok WHERE len(t) >= 3)
-        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |       len(list_intersect(a.s, b.s)) * 1.0 / len(a.s) AS containment
-        |FROM sh a JOIN sh b ON a.doc_id <> b.doc_id
-        |WHERE len(list_intersect(a.s, b.s)) * 1.0 / len(a.s) >= 0.9
-        |ORDER BY doc_a, doc_b""".stripMargin,
-
-    // exact-Jaccard twin: an increment doc (>= 400) drops iff some partner
-    // in the corpus (< 400) or an earlier increment doc matches at J >= 0.9
-    "q_dedup_incremental" ->
-      """WITH tok AS (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS t FROM documents),
-        |sh AS (SELECT doc_id, list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)]) AS s
-        |       FROM tok WHERE len(t) >= 3)
-        |SELECT DISTINCT b.doc_id
-        |FROM sh b JOIN sh a ON b.doc_id >= 400 AND (a.doc_id < 400 OR a.doc_id < b.doc_id)
-        |  AND a.doc_id <> b.doc_id
-        |WHERE len(list_intersect(a.s, b.s)) * 1.0 /
-        |      (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.9
-        |ORDER BY 1""".stripMargin,
-
-    // identical first-principles truth as q_dedup_incremental at the
-    // stored-index query's 450-id split: drop iff ANY corpus doc (< 450)
-    // or earlier increment doc matches at J >= 0.9
-    "q_dedup_incremental_stored" ->
-      """WITH tok AS (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS t FROM documents),
-        |sh AS (SELECT doc_id, list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)]) AS s
-        |       FROM tok WHERE len(t) >= 3)
-        |SELECT DISTINCT b.doc_id
-        |FROM sh b JOIN sh a ON b.doc_id >= 450 AND (a.doc_id < 450 OR a.doc_id < b.doc_id)
-        |  AND a.doc_id <> b.doc_id
-        |WHERE len(list_intersect(a.s, b.s)) * 1.0 /
-        |      (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.9
-        |ORDER BY 1""".stripMargin,
-
-    // compaction is pure layout — the probe over the compacted store
-    // answers the SAME first-principles truth as the stored-index probe
-    "q_dedup_index_compact" ->
-      """WITH tok AS (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS t FROM documents),
-        |sh AS (SELECT doc_id, list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)]) AS s
-        |       FROM tok WHERE len(t) >= 3)
-        |SELECT DISTINCT b.doc_id
-        |FROM sh b JOIN sh a ON b.doc_id >= 450 AND (a.doc_id < 450 OR a.doc_id < b.doc_id)
-        |  AND a.doc_id <> b.doc_id
-        |WHERE len(list_intersect(a.s, b.s)) * 1.0 /
-        |      (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.9
-        |ORDER BY 1""".stripMargin,
-
-    // band-index erasure: both victims deleted from all three tables,
-    // untouched files byte-identical, post-delete probe equals the
-    // in-memory incremental over corpus-minus-victims
-    "q_dedup_index_delete" ->
-      """SELECT CAST(2 AS BIGINT) AS n_deleted, true AS erased_ok,
-        |  true AS cold_ok, true AS probe_ok""".stripMargin,
-
-    // band-index retention: batch-TTL aging is metadata-only across all
-    // three tables, aged docs gone everywhere, survivors byte-identical,
-    // post-retention probe equals the incremental over retained docs
-    "q_dedup_index_retention" ->
-      """SELECT true AS dropped_ok, true AS aged_ok,
-        |  true AS cold_ok, true AS probe_ok""".stripMargin,
-
-    // census erasure: decrement semantics — zero-count windows vanish,
-    // untouched win_mod slices byte-identical, decremented census equals
-    // a rebuilt census on corpus-minus-victim
-    "q_census_delete" ->
-      "SELECT true AS erased_some, true AS cold_ok, true AS census_ok",
-
-    // sem-store erasure: victim + its ingested clone deleted, cold files
-    // identical, a fresh clone of the erased vector no longer drops while
-    // a clone of a survivor still does
-    "q_semdedup_delete" ->
-      """SELECT CAST(2 AS BIGINT) AS n_deleted, true AS cold_ok,
-        |  true AS erased_free, true AS survivor_drops""".stripMargin,
-
-    "q_semdedup_retention" ->
-      """SELECT true AS dropped_ok, true AS cold_ok,
-        |  true AS aged_free, true AS retained_drops""".stripMargin,
-
-    "q_census_retention" ->
-      """SELECT true AS dropped_ok, true AS cold_ok,
-        |  true AS census_equal""".stripMargin,
-
-    // five first-principles tier counts; fuzzy via the recursive closure
-    "q_dedup_funnel" ->
-      """WITH RECURSIVE tok AS (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS t FROM documents),
-        |sh AS (SELECT doc_id, list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)]) AS s
-        |       FROM tok WHERE len(t) >= 3),
-        |tp AS (SELECT a.doc_id AS da, b.doc_id AS db
-        |       FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |       WHERE len(list_intersect(a.s, b.s)) * 1.0 /
-        |             (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.9),
-        |e AS (SELECT da AS a, db AS b FROM tp UNION SELECT db AS a, da AS b FROM tp),
-        |reach AS (SELECT a, b FROM e UNION SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
-        |lab AS (SELECT a AS doc_id, min(b) AS mn FROM reach WHERE b <> a GROUP BY a),
-        |fuzzy AS (SELECT count(*) AS n FROM documents d LEFT JOIN lab l ON d.doc_id = l.doc_id
-        |          WHERE l.doc_id IS NULL OR l.mn > d.doc_id),
-        |w AS (SELECT DISTINCT doc_id, substring(text, i::INT, 40) AS win
-        |      FROM documents, UNNEST(range(1, length(text) - 40 + 2)) AS t(i)
-        |      WHERE length(text) >= 40 AND list_reduce(list_transform(regexp_extract_all(substring(text, i::INT, 40), '(?s).'), c -> unicode(c)), (a,b) -> (a::BIGINT*257+b)%2147483647) % 16 = 0),
-        |shared AS (SELECT win FROM w GROUP BY win HAVING count(*) >= 2),
-        |dup_docs AS (SELECT DISTINCT doc_id FROM w JOIN shared USING (win))
-        |SELECT * FROM (
-        |  SELECT 0 AS stage, 'raw' AS tier, count(*) AS n_docs FROM documents
-        |  UNION ALL SELECT 1, 'exact', count(DISTINCT text) FROM documents
-        |  UNION ALL SELECT 2, 'exact_norm', count(DISTINCT regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) FROM documents
-        |  UNION ALL SELECT 3, 'fuzzy_transitive', (SELECT n FROM fuzzy)
-        |  UNION ALL SELECT 4, 'substring_clean', (SELECT count(*) FROM documents) - (SELECT count(*) FROM dup_docs)
-        |) ORDER BY stage""".stripMargin,
-
-    // same tier CTEs as the funnel, re-aimed to per-doc attribution
-    "q_dedup_explain" ->
-      """WITH RECURSIVE tok AS (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS t FROM documents),
-        |sh AS (SELECT doc_id, list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)]) AS s
-        |       FROM tok WHERE len(t) >= 3),
-        |tp AS (SELECT a.doc_id AS da, b.doc_id AS db
-        |       FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |       WHERE len(list_intersect(a.s, b.s)) * 1.0 /
-        |             (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.9),
-        |e AS (SELECT da AS a, db AS b FROM tp UNION SELECT db AS a, da AS b FROM tp),
-        |reach AS (SELECT a, b FROM e UNION SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
-        |lab AS (SELECT a AS doc_id, min(b) AS mn FROM reach WHERE b <> a GROUP BY a),
-        |w AS (SELECT DISTINCT doc_id, substring(text, i::INT, 40) AS win
-        |      FROM documents, UNNEST(range(1, length(text) - 40 + 2)) AS t(i)
-        |      WHERE length(text) >= 40 AND list_reduce(list_transform(regexp_extract_all(substring(text, i::INT, 40), '(?s).'), c -> unicode(c)), (a,b) -> (a::BIGINT*257+b)%2147483647) % 16 = 0),
-        |shared AS (SELECT win FROM w GROUP BY win HAVING count(*) >= 2),
-        |u AS (
-        |  SELECT doc_id, 'exact' AS tier FROM documents d
-        |  WHERE EXISTS (SELECT 1 FROM documents d2 WHERE d2.text = d.text AND d2.doc_id < d.doc_id)
-        |  UNION ALL
-        |  SELECT doc_id, 'exact_norm' FROM documents d
-        |  WHERE EXISTS (SELECT 1 FROM documents d2
-        |    WHERE regexp_replace(trim(lower(d2.text)), '\s+', ' ', 'g') = regexp_replace(trim(lower(d.text)), '\s+', ' ', 'g')
-        |      AND d2.doc_id < d.doc_id)
-        |  UNION ALL
-        |  SELECT d.doc_id, 'fuzzy_transitive' FROM documents d JOIN lab l ON d.doc_id = l.doc_id
-        |  WHERE l.mn < d.doc_id
-        |  UNION ALL
-        |  SELECT DISTINCT doc_id, 'substring' FROM w JOIN shared USING (win))
-        |SELECT doc_id, string_agg(tier, ',' ORDER BY tier) AS tiers
-        |FROM u GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // same window sample; cross-doc shared spans -> gaps-and-islands runs
-    // -> string reconstruction from the kept segments
-    "q_substring_clean" ->
-      """WITH wp AS (
-        |  SELECT doc_id, i AS s, i + 39 AS e, substring(text, i::INT, 40) AS win
-        |  FROM documents, UNNEST(range(1, length(text) - 40 + 2)) AS t(i)
-        |  WHERE length(text) >= 40
-        |    AND list_reduce(list_transform(regexp_extract_all(substring(text, i::INT, 40), '(?s).'), c -> unicode(c)), (a,b) -> (a::BIGINT*257+b)%2147483647) % 16 = 0),
-        |shared AS (
-        |  SELECT win FROM (SELECT DISTINCT doc_id, win FROM wp)
-        |  GROUP BY win HAVING count(*) >= 2),
-        |fl AS (SELECT doc_id, s, e FROM wp JOIN shared USING (win)),
-        |m AS (SELECT doc_id, s, e,
-        |        max(e) OVER (PARTITION BY doc_id ORDER BY s
-        |                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
-        |      FROM fl),
-        |r AS (SELECT doc_id, s, e,
-        |        sum(CASE WHEN pmax IS NULL OR s > pmax + 1 THEN 1 ELSE 0 END)
-        |          OVER (PARTITION BY doc_id ORDER BY s) AS run
-        |      FROM m),
-        |runs AS (SELECT doc_id, run, min(s) AS s, max(e) AS e FROM r GROUP BY 1, 2),
-        |k AS (SELECT doc_id, s, e,
-        |        lag(e, 1, 0) OVER (PARTITION BY doc_id ORDER BY s) AS prev_e
-        |      FROM runs),
-        |pieces AS (
-        |  SELECT k.doc_id,
-        |    substring(d.text, (prev_e + 1)::INT, (s - prev_e - 1)::INT) AS piece,
-        |    s AS ord
-        |  FROM k JOIN documents d USING (doc_id)
-        |  UNION ALL
-        |  SELECT r2.doc_id,
-        |    substring(d.text, (max_e + 1)::INT, 100000000) AS piece,
-        |    2000000000 AS ord
-        |  FROM (SELECT doc_id, max(e) AS max_e FROM runs GROUP BY 1) r2
-        |  JOIN documents d USING (doc_id)),
-        |cleaned AS (
-        |  SELECT doc_id, string_agg(piece, '' ORDER BY ord) AS ct
-        |  FROM pieces GROUP BY 1),
-        |stats AS (
-        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_runs,
-        |    CAST(sum(e - s + 1) AS BIGINT) AS removed_chars
-        |  FROM runs GROUP BY 1)
-        |SELECT d.doc_id,
-        |  coalesce(st.n_runs, 0) AS n_runs,
-        |  coalesce(st.removed_chars, 0) AS removed_chars,
-        |  length(coalesce(c.ct, d.text)) AS cleaned_chars,
-        |  md5(coalesce(c.ct, d.text)) AS cleaned_md5
-        |FROM documents d
-        |LEFT JOIN stats st USING (doc_id)
-        |LEFT JOIN cleaned c USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // same window CTE, census form: windows held by >= 2 docs, counted per doc
-    "q_dedup_substring_mass" ->
-      """WITH w AS (
-        |  SELECT DISTINCT doc_id, substring(text, i::INT, 40) AS win
-        |  FROM documents, UNNEST(range(1, length(text) - 40 + 2)) AS t(i)
-        |  WHERE length(text) >= 40
-        |    AND list_reduce(list_transform(regexp_extract_all(substring(text, i::INT, 40), '(?s).'), c -> unicode(c)), (a,b) -> (a::BIGINT*257+b)%2147483647) % 16 = 0),
-        |shared AS (SELECT win FROM w GROUP BY win HAVING count(*) >= 2)
-        |SELECT w.doc_id, count(*) AS n_dup_windows
-        |FROM w JOIN shared USING (win)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // incremental == full-corpus dup mass restricted to the increment;
-    // the split threshold is the same floor-div both engines compute
-    // exactly on integers
-    "q_dedup_substring_incremental" ->
-      """WITH w AS (
-        |  SELECT DISTINCT doc_id, substring(text, i::INT, 40) AS win
-        |  FROM documents, UNNEST(range(1, length(text) - 40 + 2)) AS t(i)
-        |  WHERE length(text) >= 40
-        |    AND list_reduce(list_transform(regexp_extract_all(substring(text, i::INT, 40), '(?s).'), c -> unicode(c)), (a,b) -> (a::BIGINT*257+b)%2147483647) % 16 = 0),
-        |shared AS (SELECT win FROM w GROUP BY win HAVING count(*) >= 2)
-        |SELECT w.doc_id, count(*) AS n_dup_windows
-        |FROM w JOIN shared USING (win)
-        |WHERE w.doc_id >= (SELECT (max(doc_id) * 4) // 5 FROM documents)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // exact twin of Dedup.substringDupPairs: every 40-char window, kept iff
-    // its Karp-Rabin hash ≡ 0 mod 16 — DuckDB re-derives the SAME fold
-    // ((h*257 + codepoint) mod 2^31-1 over the window's characters) that
-    // the engine's rolling KrWindowPositions expression computes, so the
-    // selection is engine-independent — then distinct (doc, win),
-    // self-join, shared-window counts >= 2
-    "q_dedup_substring" ->
-      """WITH w AS (
-        |  SELECT DISTINCT doc_id, substring(text, i::INT, 40) AS win
-        |  FROM documents, UNNEST(range(1, length(text) - 40 + 2)) AS t(i)
-        |  WHERE length(text) >= 40
-        |    AND list_reduce(list_transform(regexp_extract_all(substring(text, i::INT, 40), '(?s).'), c -> unicode(c)), (a,b) -> (a::BIGINT*257+b)%2147483647) % 16 = 0)
-        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_shared
-        |FROM w a JOIN w b ON a.win = b.win AND a.doc_id < b.doc_id
-        |GROUP BY 1, 2 HAVING count(*) >= 2 ORDER BY 1, 2""".stripMargin,
-
-    // faithful SQL twin of TextFunctions.textProfile (minus the fingerprint,
-    // which lives in the invariant-oracled q_text_fingerprint).
-    // BMP-only assumption: DuckDB length() counts codepoints, textProfile
-    // counts UTF-16 units — they agree exactly on this corpus (no non-BMP
-    // chars); a supplementary-plane emoji would diverge len/alpha/meanWord.
-    "q_text_quality" ->
-      """WITH p AS (
-        |  SELECT doc_id,
-        |    length(text) AS len,
-        |    len(regexp_extract_all(text, '\S+')) AS n_tok,
-        |    len(regexp_extract_all(text, '[A-Za-z0-9]+|[^A-Za-z0-9\s]')) AS n_bpe,
-        |    length(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS alpha,
-        |    len(list_intersect(list_distinct(regexp_extract_all(lower(text), '\S+')),
-        |        ['the','a','of','and','to','in','is','it','that','for'])) AS stop_hits
-        |  FROM documents)
-        |SELECT doc_id,
-        |  floor((0.3 * least(len / 200.0, 1.0)
-        |      + 0.3 * (CASE WHEN len > 0 THEN alpha * 1.0 / len ELSE 0.0 END)
-        |      + 0.2 * (1.0 - least(abs((CASE WHEN n_tok > 0 THEN len * 1.0 / n_tok ELSE 0.0 END) - 5.0) / 10.0, 1.0))
-        |      + 0.2 * least(stop_hits / 3.0, 1.0)) * 10000 + 0.5) / 10000 AS quality,
-        |  CAST(n_tok AS INT) AS n_tokens,
-        |  CAST(n_bpe AS INT) AS n_bpeish
-        |FROM p ORDER BY doc_id""".stripMargin,
-
-    // synthetic-PII construction identical on both engines; 'g' flag makes
-    // DuckDB regexp_replace global like Spark's
-    "q_text_redact" ->
-      """WITH t AS (SELECT doc_id,
-        |  text || ' contact user' || CAST(doc_id AS VARCHAR)
-        |       || '@example.com or call +1-555-'
-        |       || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') AS t2
-        |  FROM documents)
-        |SELECT doc_id,
-        |  regexp_replace(regexp_replace(t2,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
-        |    '\+1-555-[0-9]{4}', '[PHONE]', 'g') AS redacted,
-        |  CAST(len(regexp_extract_all(t2, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
-        |  CAST(len(regexp_extract_all(t2, '\+1-555-[0-9]{4}')) AS BIGINT) AS n_phones
-        |FROM t ORDER BY doc_id""".stripMargin,
-
-    "q_url_domains" ->
-      """WITH t AS (SELECT doc_id,
-        |  text || ' see https://site' || CAST(doc_id % 7 AS VARCHAR)
-        |       || '.example.org/p/' || CAST(doc_id AS VARCHAR) AS t2
-        |  FROM documents)
-        |SELECT regexp_extract(t2, 'https://([A-Za-z0-9.-]+)/', 1) AS domain,
-        |  count(*) AS n_docs
-        |FROM t GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // faithful SQL twin of TextFunctions.langIdScala: distinct marker hits
-    // per language, argmax with ties broken by language declaration order
-    "q_text_lang" ->
-      """WITH t AS (SELECT doc_id, list_distinct(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS toks FROM documents),
-        |s AS (SELECT doc_id,
-        |  len(list_intersect(toks, ['the','and','of','to','is','that','it','for','with','this'])) AS en,
-        |  len(list_intersect(toks, ['el','la','de','que','los','las','una','por','como','para'])) AS es,
-        |  len(list_intersect(toks, ['le','les','des','est','une','dans','pour','que','sur','avec'])) AS fr,
-        |  len(list_intersect(toks, ['der','die','das','und','ist','nicht','mit','ein','für','auf'])) AS de,
-        |  len(list_intersect(toks, ['的','是','了','在','我','有','和','就','不','人'])) AS zh
-        | FROM t)
-        |SELECT CASE WHEN greatest(en, es, fr, de, zh) = 0 THEN 'und'
-        |  WHEN en >= es AND en >= fr AND en >= de AND en >= zh THEN 'en'
-        |  WHEN es >= fr AND es >= de AND es >= zh THEN 'es'
-        |  WHEN fr >= de AND fr >= zh THEN 'fr'
-        |  WHEN de >= zh THEN 'de' ELSE 'zh' END AS predicted_lang, count(*) AS n
-        |FROM s GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // natural-log IDF rounded to 4 dp before ranking in BOTH engines, ties
-    // broken by term — the whole pipeline is integer counts + one ln
-    "q_tfidf_topterms" ->
-      """WITH terms AS (
-        |  SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS term
-        |  FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM terms GROUP BY 1, 2),
-        |dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        |scored AS (
-        |  SELECT doc_id, term,
-        |    round(tf * ln((SELECT count(*) FROM documents) * 1.0 / df), 4) AS score
-        |  FROM tf JOIN dfreq USING (term)),
-        |ranked AS (
-        |  SELECT doc_id, term, score,
-        |    row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, term) AS rk
-        |  FROM scored)
-        |SELECT doc_id, term, score FROM ranked WHERE rk <= 3
-        |ORDER BY doc_id, score DESC, term""".stripMargin,
-
-    // BM25 recomputed with the identical operation order and rounding
-    // discipline (ln at 6 dp, per-term DECIMAL(18,8), final 4 dp)
-    "q_bm25_search" -> bm25OracleSql("documents"),
-
-    // hybrid retrieval: RRF(60) fusion of the BM25 lexical top-20 (the
-    // q_bm25_search twin, ranked) and the vector top-20 (brute-force
-    // cosine — the stored IVF probe at exhaustive nprobe equals it);
-    // fused score = two IEEE divisions + one addition, rounded to 6 dp,
-    // ties pinned by doc_id
-    "q_hybrid_search" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS term
-        |  FROM documents),
-        |dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY 1),
-        |stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-        |                 CAST(sum(dl) AS DOUBLE) AS total_toks FROM dl),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks
-        |       WHERE term IN ('dup', 'merge', 'scan') GROUP BY 1, 2),
-        |dfreq AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY 1),
-        |scored AS (
-        |  SELECT tf.doc_id,
-        |    CAST(round(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)), 6)
-        |      * (tf * (1.2 + 1.0))
-        |      / (tf + 1.2 * (1.0 - 0.75 + 0.75 * dl.dl / (total_toks / n_docs)))
-        |      AS DECIMAL(18,8)) AS score_t
-        |  FROM tf JOIN dfreq USING (term) JOIN dl ON tf.doc_id = dl.doc_id, stats),
-        |lex AS (
-        |  SELECT doc_id, row_number() OVER (ORDER BY bm25 DESC, doc_id) AS r_lex FROM (
-        |    SELECT doc_id, round(CAST(sum(score_t) AS DOUBLE), 4) AS bm25
-        |    FROM scored GROUP BY doc_id
-        |    ORDER BY bm25 DESC, doc_id LIMIT 20)),
-        |vec AS (
-        |  SELECT vec_id AS doc_id,
-        |    row_number() OVER (ORDER BY cosine DESC, vec_id) AS r_vec FROM (
-        |    SELECT e2.vec_id AS vec_id,
-        |      round(list_cosine_similarity(CAST(e2.embedding AS DOUBLE[]), CAST(e1.embedding AS DOUBLE[])), 4) AS cosine
-        |    FROM embeddings e1, embeddings e2
-        |    WHERE e1.vec_id = 0 AND e2.vec_id <> 0
-        |    ORDER BY cosine DESC, e2.vec_id LIMIT 20))
-        |SELECT doc_id,
-        |  round(coalesce(1.0 / (60 + r_lex), 0) + coalesce(1.0 / (60 + r_vec), 0), 6) AS rrf
-        |FROM lex FULL OUTER JOIN vec USING (doc_id)
-        |ORDER BY rrf DESC, doc_id LIMIT 20""".stripMargin,
-
-    // stored inverted-index serves: the stored scorer replays bm25TopK's
-    // operation order bit-for-bit, so each gate's oracle is the full-scan
-    // BM25 SQL over exactly the corpus the index should equal — the whole
-    // corpus (stored/compacted), corpus minus the erased victims
-    // (delete), or the retained batches only (retention)
-    "q_bm25_stored" -> bm25OracleSql("documents"),
-    "q_bm25_compact" -> bm25OracleSql("documents"),
-    "q_bm25_delete" -> bm25OracleSql(
-      "(SELECT * FROM documents WHERE doc_id NOT IN (3, 7, 250, 401))"),
-    "q_bm25_retention" -> bm25OracleSql(
-      "(SELECT * FROM documents WHERE doc_id >= 200)"),
-    // bulk (victim-table) erasure: a fifth of the corpus gone
-    "q_bm25_bulk_delete" -> bm25OracleSql(
-      "(SELECT * FROM documents WHERE doc_id % 5 <> 3)"),
-    // erasure folded into compaction: same serve contract as a delete
-    "q_bm25_compact_erase" -> bm25OracleSql(
-      "(SELECT * FROM documents WHERE doc_id NOT IN (3, 77, 151, 299))"),
-    // the bounded serve with nothing capped IS the exact serve
-    "q_bm25_bounded" -> bm25OracleSql("documents"),
-
-    // the executed plan: retention of batches 0-2 (cutoff 2), then the
-    // fold of survivors 3,4 (newest 5 stays); the twin recounts both
-    // actions' doc coverage from documents with the fixture's range
-    // arithmetic
-    "q_maint_run" ->
-      """WITH m AS (SELECT max(doc_id) + 1 AS mx FROM documents)
-        |SELECT 'compact' AS action, CAST(4 AS BIGINT) AS param,
-        |  CAST(2 AS BIGINT) AS n_batches,
-        |  (SELECT count(*) FROM documents, m
-        |   WHERE doc_id >= 3 * mx // 6 AND doc_id < 5 * mx // 6) AS n_docs
-        |UNION ALL
-        |SELECT 'retain', CAST(2 AS BIGINT), CAST(3 AS BIGINT),
-        |  (SELECT count(*) FROM documents, m WHERE doc_id < 3 * mx // 6)
-        |ORDER BY action""".stripMargin,
-
-    // the planner's plan is a pure function of (batch ids, per-batch
-    // doc counts); the twin recomputes both from documents with the
-    // fixture's own range arithmetic — scenario A fires retention
-    // (newest=4, ttl=2 → cutoff 2 drops batches 0-2, survivors 2 ≤
-    // budget), scenario B fires compaction (no aging; 5 live > 2 →
-    // fold batches 0-3, newest stays)
-    "q_maint_plan" ->
-      """WITH m AS (SELECT max(doc_id) + 1 AS mx FROM documents)
-        |SELECT 'A' AS scenario, 'retain' AS action, CAST(2 AS BIGINT) AS param,
-        |  CAST(3 AS BIGINT) AS n_batches,
-        |  (SELECT count(*) FROM documents, m WHERE doc_id < 3 * mx // 5) AS n_docs
-        |UNION ALL
-        |SELECT 'B', 'compact', CAST(3 AS BIGINT), CAST(4 AS BIGINT),
-        |  (SELECT count(*) FROM documents, m WHERE doc_id < 4 * mx // 5)
-        |ORDER BY scenario, action""".stripMargin,
-
-    // boolean MUST/MUST_NOT from the stored postings: the twin
-    // re-tokenizes and intersects — docs holding BOTH must terms and
-    // not the excluded one
-    "q_bool_and_stored" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS term
-        |  FROM documents),
-        |m AS (SELECT doc_id FROM toks WHERE term IN ('dup', 'merge')
-        |      GROUP BY doc_id HAVING count(DISTINCT term) = 2),
-        |x AS (SELECT DISTINCT doc_id FROM toks WHERE term = 'scan')
-        |SELECT m.doc_id FROM m LEFT JOIN x ON m.doc_id = x.doc_id
-        |WHERE x.doc_id IS NULL ORDER BY m.doc_id""".stripMargin,
-
-    // phrase adjacency from the positional tier: the twin re-tokenizes
-    // and counts consecutive (fast, merge) pairs per doc (constant
-    // series bound 256 ≥ the corpus's max token count; the i+1 <= len
-    // guard does the per-doc clamping)
-    "q_phrase_stored" ->
-      """WITH t AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks
-        |  FROM documents)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_occ
-        |FROM t, generate_series(1, 256) g(i)
-        |WHERE i + 1 <= len(toks) AND toks[i] = 'fast' AND toks[i+1] = 'merge'
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // proximity: docs where vector and spark sit within 3 token
-    // positions of each other, either order
-    "q_near_stored" ->
-      """WITH t AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks
-        |  FROM documents),
-        |pa AS (SELECT doc_id, i AS p FROM t, generate_series(1, 256) g(i)
-        |       WHERE i <= len(toks) AND toks[i] = 'vector'),
-        |pb AS (SELECT doc_id, i AS p FROM t, generate_series(1, 256) g(i)
-        |       WHERE i <= len(toks) AND toks[i] = 'spark')
-        |SELECT doc_id FROM (
-        |  SELECT DISTINCT pa.doc_id AS doc_id FROM pa JOIN pb
-        |    ON pa.doc_id = pb.doc_id AND abs(pa.p - pb.p) <= 3)
-        |ORDER BY doc_id""".stripMargin,
-
-    // ordered proximity: big strictly before table, gap <= 2
-    "q_near_ordered_stored" ->
-      """WITH t AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks
-        |  FROM documents),
-        |pa AS (SELECT doc_id, i AS p FROM t, generate_series(1, 256) g(i)
-        |       WHERE i <= len(toks) AND toks[i] = 'big'),
-        |pb AS (SELECT doc_id, i AS p FROM t, generate_series(1, 256) g(i)
-        |       WHERE i <= len(toks) AND toks[i] = 'table')
-        |SELECT doc_id FROM (
-        |  SELECT DISTINCT pa.doc_id AS doc_id FROM pa JOIN pb
-        |    ON pa.doc_id = pb.doc_id AND pb.p - pa.p BETWEEN 1 AND 2)
-        |ORDER BY doc_id""".stripMargin,
-
-    // filtered ranking: the boolean match set restricts which docs are
-    // SCORED while df/N/avgdl stay corpus-level (the Lucene
-    // filter-clause semantics) — same scorer shape as bm25OracleSql
-    // with the match-set semi join on the scored leg only
-    "q_bool_rank_stored" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS term
-        |  FROM documents),
-        |dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY 1),
-        |stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-        |                 CAST(sum(dl) AS DOUBLE) AS total_toks FROM dl),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks
-        |       WHERE term IN ('dup', 'merge') GROUP BY 1, 2),
-        |dfreq AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY 1),
-        |m AS (SELECT doc_id FROM tf GROUP BY doc_id HAVING count(DISTINCT term) = 2),
-        |x AS (SELECT DISTINCT doc_id FROM toks WHERE term = 'scan'),
-        |matches AS (SELECT m.doc_id FROM m LEFT JOIN x ON m.doc_id = x.doc_id
-        |            WHERE x.doc_id IS NULL),
-        |scored AS (
-        |  SELECT tf.doc_id,
-        |    CAST(round(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)), 6)
-        |      * (tf * (1.2 + 1.0))
-        |      / (tf + 1.2 * (1.0 - 0.75 + 0.75 * dl.dl / (total_toks / n_docs)))
-        |      AS DECIMAL(18,8)) AS score_t
-        |  FROM tf JOIN dfreq USING (term) JOIN dl ON tf.doc_id = dl.doc_id, stats
-        |  WHERE tf.doc_id IN (SELECT doc_id FROM matches))
-        |SELECT doc_id, round(CAST(sum(score_t) AS DOUBLE), 4) AS bm25
-        |FROM scored GROUP BY doc_id
-        |ORDER BY bm25 DESC, doc_id
-        |LIMIT 10""".stripMargin,
-    // zero-token erasure: docs 5/6 emptied, victims 5 (empty) and 7
-    // erased; dl derives over ALL surviving docs so the emptied doc 6
-    // contributes dl=0 to N/avgdl — exactly the engine's token counter
-    "q_bm25_zero_token_delete" ->
-      """WITH corpus AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id = 6 THEN '' ELSE text END AS text
-        |  FROM documents WHERE doc_id NOT IN (5, 7)),
-        |toks AS (
-        |  SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS term
-        |  FROM corpus),
-        |dl AS (SELECT c.doc_id, count(t.term) AS dl
-        |       FROM corpus c LEFT JOIN toks t ON c.doc_id = t.doc_id GROUP BY 1),
-        |stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-        |                 CAST(sum(dl) AS DOUBLE) AS total_toks FROM dl),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks
-        |       WHERE term IN ('dup', 'merge', 'scan') GROUP BY 1, 2),
-        |dfreq AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY 1),
-        |scored AS (
-        |  SELECT tf.doc_id,
-        |    CAST(round(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)), 6)
-        |      * (tf * (1.2 + 1.0))
-        |      / (tf + 1.2 * (1.0 - 0.75 + 0.75 * dl.dl / (total_toks / n_docs)))
-        |      AS DECIMAL(18,8)) AS score_t
-        |  FROM tf JOIN dfreq USING (term) JOIN dl ON tf.doc_id = dl.doc_id, stats)
-        |SELECT doc_id, round(CAST(sum(score_t) AS DOUBLE), 4) AS bm25
-        |FROM scored GROUP BY doc_id
-        |ORDER BY bm25 DESC, doc_id
-        |LIMIT 20""".stripMargin,
-    // streaming ingest: batch boundaries never enter the score, so the
-    // post-stream serve equals the whole-corpus scan
-    "q_stream_bm25_ingest" -> bm25OracleSql("documents"),
-    // live-stream erasure via the drained queue: exact over the
-    // surviving corpus
-    "q_stream_bm25_erase" -> bm25OracleSql(
-      "(SELECT * FROM documents WHERE doc_id NOT IN (10, 20))"),
-
-    // both-legs-indexed hybrid serve: stored BM25 == corpus-scan BM25 and
-    // the stored IVF probe at the exhaustive corner == brute force, so
-    // the fusion oracle is q_hybrid_search's SQL verbatim
-    "q_hybrid_search_indexed" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS term
-        |  FROM documents),
-        |dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY 1),
-        |stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-        |                 CAST(sum(dl) AS DOUBLE) AS total_toks FROM dl),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks
-        |       WHERE term IN ('dup', 'merge', 'scan') GROUP BY 1, 2),
-        |dfreq AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY 1),
-        |scored AS (
-        |  SELECT tf.doc_id,
-        |    CAST(round(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)), 6)
-        |      * (tf * (1.2 + 1.0))
-        |      / (tf + 1.2 * (1.0 - 0.75 + 0.75 * dl.dl / (total_toks / n_docs)))
-        |      AS DECIMAL(18,8)) AS score_t
-        |  FROM tf JOIN dfreq USING (term) JOIN dl ON tf.doc_id = dl.doc_id, stats),
-        |lex AS (
-        |  SELECT doc_id, row_number() OVER (ORDER BY bm25 DESC, doc_id) AS r_lex FROM (
-        |    SELECT doc_id, round(CAST(sum(score_t) AS DOUBLE), 4) AS bm25
-        |    FROM scored GROUP BY doc_id
-        |    ORDER BY bm25 DESC, doc_id LIMIT 20)),
-        |vec AS (
-        |  SELECT vec_id AS doc_id,
-        |    row_number() OVER (ORDER BY cosine DESC, vec_id) AS r_vec FROM (
-        |    SELECT e2.vec_id AS vec_id,
-        |      round(list_cosine_similarity(CAST(e2.embedding AS DOUBLE[]), CAST(e1.embedding AS DOUBLE[])), 4) AS cosine
-        |    FROM embeddings e1, embeddings e2
-        |    WHERE e1.vec_id = 0 AND e2.vec_id <> 0
-        |    ORDER BY cosine DESC, e2.vec_id LIMIT 20))
-        |SELECT doc_id,
-        |  round(coalesce(1.0 / (60 + r_lex), 0) + coalesce(1.0 / (60 + r_vec), 0), 6) AS rrf
-        |FROM lex FULL OUTER JOIN vec USING (doc_id)
-        |ORDER BY rrf DESC, doc_id LIMIT 20""".stripMargin,
-
-    // batch + pruned-nprobe hybrid serve: per query, the pruned fusion's
-    // top-10 overlaps the exhaustive fusion's top-10 in >= 8 items
-    "q_hybrid_search_pruned" ->
-      """SELECT CAST(v AS BIGINT) AS query_id, true AS overlap_ok
-        |FROM (VALUES (0), (1)) t(v) ORDER BY query_id""".stripMargin,
-
-    // the composed production frontend: stored lex + PRUNED stored vec,
-    // fused both production ways; per query each pruned fusion's top-10
-    // overlaps its exhaustive twin's in >= 8 items
-    "q_hybrid_search_production" ->
-      """SELECT CAST(v AS BIGINT) AS query_id, true AS rrf_overlap_ok,
-        |  true AS weighted_overlap_ok
-        |FROM (VALUES (0), (1)) t(v) ORDER BY query_id""".stripMargin,
-
-    // the production frontend over the CODED (IVF-PQ) vector tier: ADC
-    // rides both legs, so the gate isolates pruning at fusion level —
-    // same invariant, production layout
-    "q_hybrid_search_production_pq" ->
-      """SELECT CAST(v AS BIGINT) AS query_id, true AS rrf_overlap_ok,
-        |  true AS weighted_overlap_ok
-        |FROM (VALUES (0), (1)) t(v) ORDER BY query_id""".stripMargin,
-
-    // ingest-to-serve: both tiers live-streamed, then the frontend's
-    // three-layer gate — streamed lex serves exactly, streamed vec exact
-    // at the exhaustive corner, pruned fusion overlaps its twin
-    "q_stream_hybrid_production" ->
-      """SELECT CAST(v AS BIGINT) AS query_id, true AS lex_exact_ok,
-        |  true AS vec_exact_ok, true AS rrf_overlap_ok,
-        |  true AS weighted_overlap_ok
-        |FROM (VALUES (0), (1)) t(v) ORDER BY query_id""".stripMargin,
-
-    // weighted fusion at the exhaustive corner — the same leg CTEs as
-    // q_hybrid_search, min-max normalized within each leg, 0.6/0.4 blend
-    "q_hybrid_search_weighted" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS term
-        |  FROM documents),
-        |dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY 1),
-        |stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-        |                 CAST(sum(dl) AS DOUBLE) AS total_toks FROM dl),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks
-        |       WHERE term IN ('dup', 'merge', 'scan') GROUP BY 1, 2),
-        |dfreq AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY 1),
-        |scored AS (
-        |  SELECT tf.doc_id,
-        |    CAST(round(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)), 6)
-        |      * (tf * (1.2 + 1.0))
-        |      / (tf + 1.2 * (1.0 - 0.75 + 0.75 * dl.dl / (total_toks / n_docs)))
-        |      AS DECIMAL(18,8)) AS score_t
-        |  FROM tf JOIN dfreq USING (term) JOIN dl ON tf.doc_id = dl.doc_id, stats),
-        |lex AS (
-        |  SELECT doc_id, round(CAST(sum(score_t) AS DOUBLE), 4) AS bm25
-        |  FROM scored GROUP BY doc_id
-        |  ORDER BY bm25 DESC, doc_id LIMIT 20),
-        |lexn AS (
-        |  SELECT doc_id, CASE WHEN max(bm25) OVER () > min(bm25) OVER ()
-        |    THEN (bm25 - min(bm25) OVER ()) / (max(bm25) OVER () - min(bm25) OVER ())
-        |    ELSE 1.0 END AS n_lex FROM lex),
-        |vec AS (
-        |  SELECT e2.vec_id AS doc_id,
-        |    round(list_cosine_similarity(CAST(e2.embedding AS DOUBLE[]), CAST(e1.embedding AS DOUBLE[])), 4) AS cosine
-        |  FROM embeddings e1, embeddings e2
-        |  WHERE e1.vec_id = 0 AND e2.vec_id <> 0
-        |  ORDER BY cosine DESC, e2.vec_id LIMIT 20),
-        |vecn AS (
-        |  SELECT doc_id, CASE WHEN max(cosine) OVER () > min(cosine) OVER ()
-        |    THEN (cosine - min(cosine) OVER ()) / (max(cosine) OVER () - min(cosine) OVER ())
-        |    ELSE 1.0 END AS n_vec FROM vec)
-        |SELECT doc_id,
-        |  round(0.6 * coalesce(n_lex, 0) + 0.4 * coalesce(n_vec, 0), 6) AS fused
-        |FROM lexn FULL OUTER JOIN vecn USING (doc_id)
-        |ORDER BY fused DESC, doc_id LIMIT 20""".stripMargin,
-
-    // integer running-total bin assignment — exact arithmetic in both engines
-    // exact recount of MG candidates = the plain frequency filter (k=64 ≥
-    // frac=32, so the sketch provably surfaces every qualifying token)
-    "q_heavy_hitters" ->
-      """WITH tok AS (
-        |  SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS token
-        |  FROM documents),
-        |tot AS (SELECT count(*) AS n_total FROM tok)
-        |SELECT token, count(*) AS n FROM tok, tot
-        |GROUP BY token, n_total HAVING count(*) * 32 > n_total
-        |ORDER BY token""".stripMargin,
-
-    // each expectation recomputed as a direct violation count
-    "q_data_audit" ->
-      """WITH v AS (
-        |  SELECT 'discount_in_range' AS rule,
-        |    CAST(sum(CASE WHEN NOT coalesce(l_discount BETWEEN 0 AND 1, false) THEN 1 ELSE 0 END) AS BIGINT) AS violations
-        |  FROM lineitem
-        |  UNION ALL SELECT 'key_not_null',
-        |    CAST(sum(CASE WHEN l_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) FROM lineitem
-        |  UNION ALL SELECT 'linenumber_positive',
-        |    CAST(sum(CASE WHEN NOT coalesce(l_linenumber >= 1, false) THEN 1 ELSE 0 END) AS BIGINT) FROM lineitem
-        |  UNION ALL SELECT 'orders_ref_integrity',
-        |    (SELECT count(*) FROM lineitem l WHERE NOT EXISTS
-        |      (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey))
-        |  UNION ALL SELECT 'price_positive',
-        |    CAST(sum(CASE WHEN NOT coalesce(l_extendedprice > 0, false) THEN 1 ELSE 0 END) AS BIGINT) FROM lineitem
-        |  UNION ALL SELECT 'quantity_le_49',
-        |    CAST(sum(CASE WHEN NOT coalesce(l_quantity <= 49, false) THEN 1 ELSE 0 END) AS BIGINT) FROM lineitem)
-        |SELECT rule, violations, violations = 0 AS ok
-        |FROM v ORDER BY rule""".stripMargin,
-
-    // the pipeline twin chains the exact-norm dedup and quality-formula
-    // CTEs (both proven standalone above) and profiles the survivors
-    "q_pipeline_e2e" ->
-      """WITH kept AS (
-        |  SELECT min(doc_id) AS doc_id FROM documents
-        |  GROUP BY md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'))),
-        |q AS (
-        |  SELECT d.doc_id, d.source,
-        |    length(text) AS len,
-        |    len(regexp_extract_all(text, '\S+')) AS n_tok,
-        |    length(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS alpha,
-        |    len(list_intersect(list_distinct(regexp_extract_all(lower(text), '\S+')),
-        |        ['the','a','of','and','to','in','is','it','that','for'])) AS stop_hits
-        |  FROM documents d JOIN kept USING (doc_id))
-        |SELECT source, count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS n_tokens
-        |FROM q
-        |WHERE floor((0.3 * least(len / 200.0, 1.0)
-        |    + 0.3 * (CASE WHEN len > 0 THEN alpha * 1.0 / len ELSE 0.0 END)
-        |    + 0.2 * (1.0 - least(abs((CASE WHEN n_tok > 0 THEN len * 1.0 / n_tok ELSE 0.0 END) - 5.0) / 10.0, 1.0))
-        |    + 0.2 * least(stop_hits / 3.0, 1.0)) * 10000 + 0.5) / 10000 >= 0.5
-        |GROUP BY source ORDER BY source""".stripMargin,
-
-    // the LM twin recomputes counts, smoothing, and the 6-dp-rounded
-    // decimal-summed mean log-prob from first principles
-    "q_lm_score" ->
-      """WITH train AS (
-        |  SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS t
-        |  FROM documents WHERE doc_id >= 50),
-        |lm AS (SELECT t, count(*) AS c FROM train GROUP BY t),
-        |tot AS (SELECT count(*) AS n, (SELECT count(*) FROM lm) AS v FROM train),
-        |ev AS (
-        |  SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS t
-        |  FROM documents WHERE doc_id < 50)
-        |SELECT doc_id,
-        |  round(CAST(sum(CAST(round(ln((coalesce(c, 0) + 1.0) / (n + v)), 6) AS DECIMAL(18,6))) AS DOUBLE) / count(*), 4) AS avg_logp,
-        |  count(*) AS n_tok
-        |FROM ev LEFT JOIN lm USING (t), tot
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // bin assignment identical to q_pack_sequences; the packed text's
-    // fingerprint recomputed via ORDER BY doc_id string_agg
-    "q_pack_concat" ->
-      """WITH toks AS (
-        |  SELECT source, doc_id, text,
-        |    CAST(len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS BIGINT) AS toks
-        |  FROM documents),
-        |binned AS (
-        |  SELECT source, doc_id, text,
-        |    CAST(floor(coalesce(sum(toks) OVER (PARTITION BY source ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / 512) AS BIGINT) AS bin
-        |  FROM toks)
-        |SELECT source, bin, CAST(count(*) AS INT) AS n_docs,
-        |  CAST(length(string_agg(text, ' ' ORDER BY doc_id)) AS INT) AS packed_chars,
-        |  md5(string_agg(text, ' ' ORDER BY doc_id)) AS packed_md5
-        |FROM binned GROUP BY source, bin ORDER BY source, bin""".stripMargin,
-
-    "q_token_shard" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    CAST(len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS BIGINT) AS toks
-        |  FROM documents),
-        |ranked AS (
-        |  SELECT toks, row_number() OVER (ORDER BY toks DESC, doc_id) AS rn
-        |  FROM toks)
-        |SELECT CAST((rn - 1) % 8 AS INT) AS shard, count(*) AS n_docs,
-        |  CAST(sum(toks) AS BIGINT) AS n_tokens
-        |FROM ranked GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // the ranged form must produce the identical sharding — same oracle
-    "q_token_shard_ranged" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    CAST(len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS BIGINT) AS toks
-        |  FROM documents),
-        |ranked AS (
-        |  SELECT toks, row_number() OVER (ORDER BY toks DESC, doc_id) AS rn
-        |  FROM toks)
-        |SELECT CAST((rn - 1) % 8 AS INT) AS shard, count(*) AS n_docs,
-        |  CAST(sum(toks) AS BIGINT) AS n_tokens
-        |FROM ranked GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // vocab cut is total-ordered (count desc, term asc) → engine-portable
-    "q_vocab_coverage" ->
-      """WITH train_tok AS (
-        |  SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS t
-        |  FROM documents WHERE doc_id >= 50),
-        |vocab AS (
-        |  SELECT t FROM (
-        |    SELECT t, row_number() OVER (ORDER BY count(*) DESC, t) AS rk
-        |    FROM train_tok GROUP BY t) WHERE rk <= 256),
-        |eval_tok AS (
-        |  SELECT source, unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS t
-        |  FROM documents WHERE doc_id < 50)
-        |SELECT source, count(*) AS n_tokens,
-        |  CAST(sum(CASE WHEN t NOT IN (SELECT t FROM vocab) THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
-        |  round(100.0 * CAST(sum(CASE WHEN t NOT IN (SELECT t FROM vocab) THEN 1 ELSE 0 END) AS DOUBLE)
-        |        / count(*), 4) AS oov_pct
-        |FROM eval_tok GROUP BY source ORDER BY source""".stripMargin,
-
-    "q_length_curriculum" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    CAST(len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS BIGINT) AS toks
-        |  FROM documents),
-        |tiered AS (
-        |  SELECT toks, ntile(4) OVER (ORDER BY toks, doc_id) AS bucket FROM toks)
-        |SELECT bucket, count(*) AS n_docs, min(toks) AS min_toks,
-        |  max(toks) AS max_toks, CAST(sum(toks) AS BIGINT) AS n_tokens
-        |FROM tiered GROUP BY bucket ORDER BY bucket""".stripMargin,
-
-    // the ranged form must produce the identical tiers — same oracle
-    "q_length_curriculum_ranged" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    CAST(len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS BIGINT) AS toks
-        |  FROM documents),
-        |tiered AS (
-        |  SELECT toks, ntile(4) OVER (ORDER BY toks, doc_id) AS bucket FROM toks)
-        |SELECT bucket, count(*) AS n_docs, min(toks) AS min_toks,
-        |  max(toks) AS max_toks, CAST(sum(toks) AS BIGINT) AS n_tokens
-        |FROM tiered GROUP BY bucket ORDER BY bucket""".stripMargin,
-
-    "q_pack_sequences" ->
-      """WITH toks AS (
-        |  SELECT source, doc_id,
-        |    CAST(len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS BIGINT) AS toks
-        |  FROM documents),
-        |binned AS (
-        |  SELECT source, toks,
-        |    CAST(floor(coalesce(sum(toks) OVER (PARTITION BY source ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / 512) AS BIGINT) AS bin
-        |  FROM toks)
-        |SELECT source, bin, count(*) AS n_docs, CAST(sum(toks) AS BIGINT) AS n_tokens
-        |FROM binned GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // distinct 8-gram overlap recomputed from first principles (same
-    // slicing-comprehension shingle construction as the dedup truth twins)
-    "q_decontaminate" ->
-      """WITH tok AS (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS t FROM documents),
-        |sh AS (SELECT doc_id, list_distinct([array_to_string(t[i:i+7], ' ') for i in range(1, len(t) - 6)]) AS s
-        |       FROM tok WHERE len(t) >= 8),
-        |tg AS (SELECT DISTINCT unnest(s) AS g FROM sh WHERE doc_id >= 50),
-        |eg AS (SELECT doc_id, unnest(s) AS g FROM sh WHERE doc_id < 50),
-        |hits AS (SELECT doc_id, count(*) AS n_hit FROM eg WHERE g IN (SELECT g FROM tg) GROUP BY 1)
-        |SELECT e.doc_id, CAST(len(e.s) AS BIGINT) AS n_grams,
-        |  CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
-        |  coalesce(h.n_hit, 0) > 0 AS contaminated
-        |FROM sh e LEFT JOIN hits h USING (doc_id)
-        |WHERE e.doc_id < 50 AND len(e.s) > 0
-        |ORDER BY doc_id""".stripMargin,
-
-    // the bloom pre-pass must be result-invisible: same twin as the exact
-    // form — false positives die in the semi-join, true hits all survive
-    // the filter (blooms have no false negatives)
-    "q_decontaminate_bloom" ->
-      """WITH tok AS (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS t FROM documents),
-        |sh AS (SELECT doc_id, list_distinct([array_to_string(t[i:i+7], ' ') for i in range(1, len(t) - 6)]) AS s
-        |       FROM tok WHERE len(t) >= 8),
-        |tg AS (SELECT DISTINCT unnest(s) AS g FROM sh WHERE doc_id >= 50),
-        |eg AS (SELECT doc_id, unnest(s) AS g FROM sh WHERE doc_id < 50),
-        |hits AS (SELECT doc_id, count(*) AS n_hit FROM eg WHERE g IN (SELECT g FROM tg) GROUP BY 1)
-        |SELECT e.doc_id, CAST(len(e.s) AS BIGINT) AS n_grams,
-        |  CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
-        |  coalesce(h.n_hit, 0) > 0 AS contaminated
-        |FROM sh e LEFT JOIN hits h USING (doc_id)
-        |WHERE e.doc_id < 50 AND len(e.s) > 0
-        |ORDER BY doc_id""".stripMargin,
-
-    // eval-broadcast decontamination: train side never shuffles; same twin
-    "q_decontaminate_bcast" ->
-      """WITH tok AS (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS t FROM documents),
-        |sh AS (SELECT doc_id, list_distinct([array_to_string(t[i:i+7], ' ') for i in range(1, len(t) - 6)]) AS s
-        |       FROM tok WHERE len(t) >= 8),
-        |tg AS (SELECT DISTINCT unnest(s) AS g FROM sh WHERE doc_id >= 50),
-        |eg AS (SELECT doc_id, unnest(s) AS g FROM sh WHERE doc_id < 50),
-        |hits AS (SELECT doc_id, count(*) AS n_hit FROM eg WHERE g IN (SELECT g FROM tg) GROUP BY 1)
-        |SELECT e.doc_id, CAST(len(e.s) AS BIGINT) AS n_grams,
-        |  CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
-        |  coalesce(h.n_hit, 0) > 0 AS contaminated
-        |FROM sh e LEFT JOIN hits h USING (doc_id)
-        |WHERE e.doc_id < 50 AND len(e.s) > 0
-        |ORDER BY doc_id""".stripMargin,
-
-    // n-gram multiset profile from first principles; ratios are exact
-    // small-integer divisions in both engines
-    "q_text_repetition" ->
-      """WITH tok AS (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS t FROM documents),
-        |g AS (SELECT doc_id, unnest([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)]) AS g
-        |      FROM tok WHERE len(t) >= 3),
-        |c AS (SELECT doc_id, g, count(*) AS c FROM g GROUP BY 1, 2),
-        |p AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_grams,
-        |        count(*) AS n_distinct, max(c) AS max_freq FROM c GROUP BY 1)
-        |SELECT doc_id, n_grams,
-        |  floor((1.0 - n_distinct * 1.0 / n_grams) * 10000 + 0.5) / 10000 AS rep_ratio,
-        |  floor(max_freq * 1.0 / n_grams * 10000 + 0.5) / 10000 AS top_freq_ratio
-        |FROM p WHERE n_grams > 0 ORDER BY doc_id""".stripMargin,
-
-    // md5 hex strings sort identically in both engines
-    "q_shuffle_sample" ->
-      """SELECT md5(CAST(doc_id AS VARCHAR) || 'g1') AS shuffle_key, doc_id
-        |FROM documents ORDER BY shuffle_key, doc_id LIMIT 100""".stripMargin,
-
-    // per-media fraction of body bytes in 0x60-0x6F (floor-rounded to 6
-    // exactly as byteHistogram does), decimal-summed per kind
-    "q_mm_features" ->
-      """WITH m AS (
-        |  SELECT CAST(doc_id % 3 AS INT) AS kind_id,
-        |    len(regexp_extract_all(text, '[`a-o]')) AS c,
-        |    greatest(octet_length(encode(text)), 1) AS L
-        |  FROM documents)
-        |SELECT kind_id, count(*) AS n,
-        |  CAST(sum(CAST(floor(c * 1.0 / L * 1000000 + 0.5) / 1000000 AS DECIMAL(18,6))) AS DOUBLE) AS bin6_mass,
-        |  round(avg(16), 4) AS dim
-        |FROM m GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // frame sampling is pure arithmetic over the body length: frames are the
-    // strided indices of ceil(L/256) slices, each of min(256, L - i*256) bytes
-    "q_mm_frames" ->
-      """WITH m AS (SELECT doc_id AS media_id, octet_length(encode(text)) AS L FROM documents WHERE doc_id % 3 = 2),
-        |f AS (SELECT media_id, L, unnest(range(0, CAST(ceil(L / 256.0) AS BIGINT), 4)) AS i FROM m WHERE L > 0)
-        |SELECT media_id, count(*) AS n_frames,
-        |  CAST(sum(least(256, L - i * 256)) AS BIGINT) AS frame_bytes
-        |FROM f GROUP BY media_id ORDER BY media_id""".stripMargin,
-  )
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    byName.map { case (n, q) => n -> q.run }
+
+  lazy val oracleSql: Map[String, String] =
+    byName.map { case (n, q) => n -> q.oracleSql }
 }

@@ -39,7 +39,7 @@ object Dedup {
     * touch. A fixed-size batch touches at most `batch × bands` DISTINCT
     * band hashes, so its pruned scan reads ≈ `min(batch·bands, nMods)/
     * nMods` of the index — sizing nMods ∝ index keeps the probe flat at
-    * any scale (measured across three decades in DedupSteadyProbe). 16
+    * any scale (measured across three decades in the steady-state dedup harness). 16
     * keeps per-batch file counts sane at test scale; a 100 TB index uses
     * hundreds to thousands. The fanout is a STORE parameter: pinned in
     * `<idxDir>/nmods` at seed time and read back by every probe/append,
@@ -624,7 +624,7 @@ object Dedup {
     * scan-and-aggregate job is strictly cheaper — while a fixed-size
     * batch against a grown index touches almost none of it, and the
     * pruned probe's per-batch cost stays flat as the index grows
-    * (measured in DedupSteadyProbe).
+    * (measured in the steady-state dedup harness).
     */
   val StoredProbeRatio = 4L
 
@@ -1871,7 +1871,7 @@ object Dedup {
     // products ≪ 2^53, the double floor is exact (same discipline as the
     // decimal prefix threshold above). Cuts candidates ~an order of
     // magnitude on low-diversity corpora where the prefix filter alone
-    // is weak — measured below in AllPairsProbe.
+    // is weak — measured with a one-off all-pairs Jaccard microbenchmark.
     val td = BigDecimal.decimal(minJaccard)
     val p0 = td.underlying.unscaledValue.longValueExact
     val den = math.round(math.pow(10, td.scale)) + p0

@@ -23,7 +23,7 @@ object Layout {
     * Result schema: key, n, total — identical to the direct
     * `groupBy(key).agg(count, sum)`, but skew-immune by construction.
     *
-    * When this is actually needed (measured in `SkewProbe`, snapshot in
+    * When this is actually needed (measured on a 98%-one-key skewed join, snapshot in
     * docs/PLANS.md "Skew handling"): NOT for batch algebraic aggregates —
     * map-side partial aggregation already collapses a hot key to one row
     * per map task, so plain and salted time identically. The salt is the

@@ -2122,7 +2122,7 @@ object Similarity {
     * semi/anti core ([[Dedup.deleteRowsFromStoreJoin]]). A real
     * compliance batch is 10⁵–10⁷ ids; the literal-`isin` form above
     * builds, optimizes, and task-serializes an expression tree ∝ |ids|
-    * and stops scaling around 10⁴ (measured in EraseProbe's bulk leg),
+    * and stops scaling around 10⁴ (measured in the erasure harness's bulk leg),
     * while this form's plan is CONSTANT-size and the id set rides one
     * ~8 B/id broadcast. Same swap/centroid/caching contract as the
     * literal form.

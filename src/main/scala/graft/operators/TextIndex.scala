@@ -181,6 +181,13 @@ object TextIndex {
     * (guide-§2.6 overlap, applied across batches instead of only within
     * one). The single-writer contract is about maintenance (swap ops)
     * vs writers; same-store maintenance must still not race this call.
+    *
+    * Failure: batches are submitted one by one inside the `try`, so when
+    * a later batch fails to submit (e.g. it lacks `text`) or any write
+    * fails, the `finally` still waits out every pipeline already in
+    * flight and releases its append-scoped caches before the exception
+    * propagates — no orphaned writer keeps running on a `batch=` dir a
+    * same-process retry would write again.
     */
   def appendTextIndexBatches(batches: Seq[(DataFrame, Long)], idxDir: String,
                              nMods: Int = DefaultNMods,
@@ -192,14 +199,20 @@ object TextIndex {
     if (manifest.exists(idxDir))
       manifest.check(idxDir, renderManifest(nMods, withPositions))
     else manifest.write(idxDir, renderManifest(nMods, withPositions))
-    import scala.concurrent.{Await, Future}
+    import scala.concurrent.Await
+    import scala.concurrent.duration.Duration
     implicit val ec: scala.concurrent.ExecutionContext = Dedup.writerPool
-    val pending = batches.map { case (docs, batchId) =>
-      submitAppendPipelines(docs, idxDir, batchId, nMods, withPositions)
+    val pending = scala.collection.mutable.ArrayBuffer.empty[
+      (Seq[scala.concurrent.Future[Unit]], () => Unit)]
+    try {
+      batches.foreach { case (docs, batchId) =>
+        pending += submitAppendPipelines(docs, idxDir, batchId, nMods, withPositions)
+      }
+      pending.flatMap(_._1).foreach(Await.result(_, Duration.Inf))
+    } finally {
+      pending.flatMap(_._1).foreach(Await.ready(_, Duration.Inf))
+      pending.foreach(_._2())
     }
-    try pending.flatMap(_._1)
-      .foreach(Await.result(_, scala.concurrent.duration.Duration.Inf))
-    finally pending.foreach(_._2())
   }
 
   /** One batch's table pipelines, submitted (not awaited) on `ec`:
@@ -490,7 +503,7 @@ object TextIndex {
     * doc set. Candidates are ∝ Σ df over the query's terms, never
     * corpus-sized; output is the full match set (a filter, not a top-k,
     * so no driver-side collect — callers compose ranking on top, see
-    * `q_bool_and_stored` / the filtered-rank form in SparkEntry).
+    * `q_bool_and_stored` / the filtered-rank form in TextIndexQueries).
     */
   def booleanSearchStored(spark: SparkSession, idxDir: String,
                           must: Seq[String], mustNot: Seq[String] = Nil): DataFrame = {
@@ -714,8 +727,15 @@ object TextIndex {
     * stats reads membership, never postings; the dictionary chains on
     * the postings swap): the crash-retry argument only needs membership
     * LAST and the dictionary recomputed from post-delete postings, both
-    * of which the future graph preserves. Returns the number of victim
-    * documents actually present.
+    * of which the future graph preserves. The overlap does open one
+    * ANTI-CONSERVATIVE window: stats may finish their swap before the
+    * postings delete lands, and a crash between the two (no sentinel
+    * held) leaves a servable store whose stats already exclude the
+    * victims while postings still hold them — n_docs/total_toks
+    * under-count, so idf and avgdl skew the opposite way from the serial
+    * order's window (which over-counted) until the retry, which still
+    * converges because membership goes last. Returns the number of
+    * victim documents actually present.
     */
   def deleteFromTextIndex(spark: SparkSession, idxDir: String,
                           victims: DataFrame): Long = {

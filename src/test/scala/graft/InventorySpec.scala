@@ -11,6 +11,14 @@ class InventorySpec extends SparkSpec {
     assert(orphans.isEmpty, s"oracle entries without queries: $orphans")
   }
 
+  test("no query name is declared twice") {
+    // the registry's maps are keyed by name: a second declaration would
+    // otherwise shadow the first without a trace
+    val names = SparkEntry.declared.map(_.name)
+    val dups = names.diff(names.distinct).distinct
+    assert(dups.isEmpty, s"query names declared more than once: $dups")
+  }
+
   test("entry() returns rows on sf0.001 (the t1 smoke gate)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

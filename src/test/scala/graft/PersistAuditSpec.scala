@@ -23,7 +23,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *     action. These are released by the session's cache discipline —
   *     Bench.clearCache between queries, Verify's per-query temp
   *     scopes; a long-lived serving session adopts its own cadence
-  *     (documented in README). Most Dedup/SparkEntry/Graph/Corpus
+  *     (documented in README). Most Dedup/query-module/Graph/Corpus
   *     sites are this category: gate fixtures feeding 2+ legs of one
   *     declared query's require().
   *
@@ -70,7 +70,14 @@ class PersistAuditSpec extends AnyFunSuite {
       // their assigned/relabeled frames across the range write — the
       // range sampler otherwise evaluates the assignment UDF twice
       // (category 1: op-scoped, unpersisted in a finally)
-      "graft/SparkEntry.scala"            -> ((19, 1)),
+      // the query declarations: 19 persists and 1 unpersist, formerly all
+      // in SparkEntry.scala — gate fixtures (category 2) and the shared
+      // dedup store build's paired artifact handles (category 1)
+      "graft/queries/Fixtures.scala"          -> ((10, 1)),
+      "graft/queries/DedupQueries.scala"      -> ((2, 0)),
+      "graft/queries/RelationalQueries.scala" -> ((1, 0)),
+      "graft/queries/SimilarityQueries.scala" -> ((1, 0)),
+      "graft/queries/TextIndexQueries.scala"  -> ((5, 0)),
       // ExplainOps: dev-only plan renderer; its one persist exists to
       // PRINT the cached form of the seed pipeline, nothing executes
       "graft/ExplainOps.scala"            -> ((1, 0)),

@@ -51,6 +51,18 @@ class TextIndexSpec extends SparkSpec {
       Corpus.bm25TopK(docs, Terms, k = 20)))
   }
 
+  test("a batch that fails to submit releases the batches already in flight") {
+    spark.catalog.clearCache()
+    val idx = freshIdx()
+    val good = corpus(40)
+    val bad = good.select(col("doc_id")) // no `text`: fails at analysis
+    intercept[org.apache.spark.sql.AnalysisException] {
+      TextIndex.appendTextIndexBatches(Seq(good -> 0L, bad -> 1L), idx)
+    }
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the first batch's append-scoped caches leaked")
+  }
+
   test("serve scan is partition-pruned to the query terms' tm_mod dirs") {
     val docs = corpus(120)
     val idx = freshIdx()

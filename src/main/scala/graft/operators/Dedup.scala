@@ -640,27 +640,63 @@ object Dedup {
     * caller's own setting. The listing happens eagerly inside
     * `read.parquet`, so the critical section covers exactly the work the
     * override exists for.
+    * The open runs NO Spark job: the read carries the data schema of
+    * one footer ([[storeDataSchema]], read before the lock), so Spark
+    * skips its schema-inference job; partition columns still infer from
+    * the directory names, so the schema equals a plain `read.parquet`'s.
     */
   private val readStoreLock = new Object
-  private[graft] def readStore(s2: org.apache.spark.sql.SparkSession, path: String): DataFrame =
+  private[graft] def readStore(s2: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
+    // a maintenance swap ([[compactStore]] / [[requantizeSemStore]])
+    // raises this sentinel for the window in which source partitions are
+    // moved aside but the replacement is not yet promoted — a read in
+    // that window would silently see a truncated store (missed
+    // duplicates), so refuse loudly instead
+    val sent = new org.apache.hadoop.fs.Path(path, MaintenanceSentinel)
+    if (sent.getFileSystem(s2.sparkContext.hadoopConfiguration).exists(sent))
+      throw new IllegalStateException(
+        s"store at $path has a maintenance swap in progress ($MaintenanceSentinel " +
+          "present) — refusing to read a possibly half-swapped store; if no " +
+          "maintenance job is live, a crashed swap left it: restore the " +
+          "set-aside partitions and remove the sentinel")
+    val reader = storeDataSchema(s2, path).fold(s2.read)(s2.read.schema)
     readStoreLock.synchronized {
-      // a maintenance swap ([[compactStore]] / [[requantizeSemStore]])
-      // raises this sentinel for the window in which source partitions are
-      // moved aside but the replacement is not yet promoted — a read in
-      // that window would silently see a truncated store (missed
-      // duplicates), so refuse loudly instead
-      val sent = new org.apache.hadoop.fs.Path(path, MaintenanceSentinel)
-      if (sent.getFileSystem(s2.sparkContext.hadoopConfiguration).exists(sent))
-        throw new IllegalStateException(
-          s"store at $path has a maintenance swap in progress ($MaintenanceSentinel " +
-            "present) — refusing to read a possibly half-swapped store; if no " +
-            "maintenance job is live, a crashed swap left it: restore the " +
-            "set-aside partitions and remove the sentinel")
       val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
       val prev = s2.conf.get(key)
       s2.conf.set(key, "8192")
-      try s2.read.parquet(path) finally s2.conf.set(key, prev)
+      try reader.parquet(path) finally s2.conf.set(key, prev)
     }
+  }
+
+  /** The data schema `read.parquet(path)` would infer, without its job:
+    * Spark's own `org.apache.spark.sql.parquet.row.metadata` footer key
+    * of ONE data file, the same single-file rule Spark's inference
+    * applies with `mergeSchema` off. The file is found by a `listStatus`
+    * walk down the first partition directories (never a recursive
+    * `listFiles`, which on the local file system starts a process per
+    * file to read its permissions). `None` — the caller reads plainly —
+    * when the store holds no data file or the footer has no key.
+    */
+  private def storeDataSchema(spark: org.apache.spark.sql.SparkSession,
+                              path: String): Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.hadoop.fs.Path
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(path).getFileSystem(conf)
+    def firstDataFile(dir: Path): Option[Path] = {
+      val (files, dirs) = fs.listStatus(dir).filterNot { st =>
+        st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith(".")
+      }.partition(_.isFile)
+      files.headOption.map(_.getPath).orElse(dirs.iterator.filter(_.getPath.getName.contains("="))
+        .map(d => firstDataFile(d.getPath)).collectFirst { case Some(f) => f })
+    }
+    scala.util.Try {
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(firstDataFile(new Path(path)).get, conf))
+      val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata") finally reader.close()
+      org.apache.spark.sql.types.DataType.fromJson(json).asInstanceOf[org.apache.spark.sql.types.StructType]
+    }.toOption
+  }
 
   /** Name of the swap-window sentinel raised inside a store dir by the
     * maintenance ops while source partitions are aside but the replacement
@@ -783,19 +819,26 @@ object Dedup {
 
   /** FILE-TARGETED ROW DELETION from a partitioned store — the shared
     * right-to-erasure core behind `Similarity.deleteFromIvfStore`'s
-    * siblings ([[deleteFromMinhashIndex]], [[deleteFromSemStore]]): given
-    * a victim predicate, remove matching rows by rewriting ONLY the files
-    * that hold any victim, at file granularity through the checked
-    * [[recoverableSwap]] — untouched files stay byte-identical, moved
-    * bytes track victim placement rather than store size.
+    * siblings ([[deleteFromMinhashIndex]], [[deleteFromSemStore]], the
+    * text index's tables): given a victim predicate, remove matching rows
+    * by COPY-ON-WRITE of ONLY the files that hold any victim, at file
+    * granularity through the checked [[recoverableSwap]] — untouched
+    * files stay byte-identical, moved bytes track victim placement
+    * rather than store size.
     *
-    * Mechanics: ONE job prices the request AND lists the owning files
+    * Mechanics: ONE job prices the request AND names the owning files
     * (a groupBy over `input_file_name()` of victim rows — bounded by the
-    * store's file count); 0 victims → store untouched, no swap. Affected
-    * files re-read with `basePath` (partition provenance preserved),
-    * victims filtered out, remainder restaged range-clustered on
-    * `clusterCols`, swap promotes staged files beside the untouched ones.
-    * The shared [[MaintenanceSentinel]] keeps probes away for the swap
+    * store's file count); 0 victims → store untouched, no swap. The
+    * owning files resolve by `listStatus` of only the partition
+    * directories that job named. They re-read with `basePath` (partition
+    * provenance preserved) and the store's schema (no inference job),
+    * drop their victims, and write back MAP-ONLY: each task sorts its
+    * rows on `partitionCols ++ clusterCols` and writes one file per
+    * partition directory it read — no cache, no range-sampling job, no
+    * shuffle, and never more files than it replaces (a file larger than
+    * a scan split is the one exception: each split writes its own). The
+    * swap promotes the rewritten files beside the untouched ones. The
+    * shared [[MaintenanceSentinel]] keeps probes away for the swap
     * window ([[readStore]] refuses); pre-flight refuses stale leftovers.
     * Returns rows deleted.
     */
@@ -806,13 +849,12 @@ object Dedup {
       victimCol: org.apache.spark.sql.Column,
       partitionCols: Seq[String],
       clusterCols: Seq[String],
-      targetFileBytes: Long = 128L * 1024 * 1024,
       afterPromote: () => Unit = () => ()): Long =
     deleteRowsFromStoreBy(spark, storeDir, opName,
       markVictims = _.where(victimCol),
       keepSurvivors = _.where(!victimCol),
       partitionCols = partitionCols, clusterCols = clusterCols,
-      targetFileBytes = targetFileBytes, afterPromote = afterPromote)
+      afterPromote = afterPromote)
 
   /** BULK-victim form of the erasure core: victims arrive as a TABLE of
     * ids, not a literal list. The `Seq[Long]` entry points build a
@@ -822,13 +864,13 @@ object Dedup {
     * scaling around 10⁴ (plan-construction time and driver memory both
     * ∝ |ids|). Here the victim set stays a DataFrame end to end: the
     * pricing scan marks victims with a BROADCAST LEFT-SEMI join and the
-    * survivor restage drops them with the matching LEFT-ANTI — 10⁷
+    * survivor rewrite drops them with the matching LEFT-ANTI — 10⁷
     * longs broadcast as ~80 MB, well inside executor memory, and the
     * plan size is CONSTANT in |victims|. `prune` optionally conjoins a
     * partition-pruning predicate onto the victim-marking scan (e.g. the
     * did_mod prune when ids map to their own partitions); the survivor
     * side never prunes — every non-victim row of an affected file must
-    * be restaged regardless of partition.
+    * be rewritten regardless of partition.
     */
   private[graft] def deleteRowsFromStoreJoin(
       spark: org.apache.spark.sql.SparkSession,
@@ -839,21 +881,20 @@ object Dedup {
       partitionCols: Seq[String],
       clusterCols: Seq[String],
       prune: org.apache.spark.sql.Column = lit(true),
-      targetFileBytes: Long = 128L * 1024 * 1024,
       afterPromote: () => Unit = () => ()): Long = {
     val v = victims.select(col(key)).distinct()
     deleteRowsFromStoreBy(spark, storeDir, opName,
       markVictims = df => df.where(prune).join(broadcast(v), Seq(key), "left_semi"),
       keepSurvivors = df => df.join(broadcast(v), Seq(key), "left_anti"),
       partitionCols = partitionCols, clusterCols = clusterCols,
-      targetFileBytes = targetFileBytes, afterPromote = afterPromote)
+      afterPromote = afterPromote)
   }
 
   /** The one erasure-core implementation behind both victim forms:
     * `markVictims` filters a store read down to victim rows (pricing),
     * `keepSurvivors` filters affected-file rows down to what survives
-    * (restage). Split out so literal-predicate and broadcast-join victim
-    * semantics share every line of the pricing/staging/swap protocol.
+    * (rewrite). Split out so literal-predicate and broadcast-join victim
+    * semantics share every line of the pricing/rewrite/swap protocol.
     */
   private def deleteRowsFromStoreBy(
       spark: org.apache.spark.sql.SparkSession,
@@ -863,7 +904,6 @@ object Dedup {
       keepSurvivors: DataFrame => DataFrame,
       partitionCols: Seq[String],
       clusterCols: Seq[String],
-      targetFileBytes: Long,
       afterPromote: () => Unit): Long = {
     import org.apache.hadoop.fs.Path
     val storeP = new Path(storeDir)
@@ -880,55 +920,35 @@ object Dedup {
     // input_file_name() attaches BEFORE victim marking: a join-based
     // marker can bring in a second file source (a parquet victim table),
     // and the expression is only well-defined against one.
-    val perFile = markVictims(
-        readStore(spark, storeDir).withColumn("_graft_file", input_file_name()))
+    val store = readStore(spark, storeDir)
+    val perFile = markVictims(store.withColumn("_graft_file", input_file_name()))
       .groupBy(col("_graft_file").as("f")).agg(count(lit(1)).as("n"))
       .collect()
     val deleted = perFile.map(_.getLong(1)).sum
     if (deleted == 0L) return 0L
-    // match scan URIs to listed physical files by their trailing
-    // <partition dirs>/<file> components — scheme/authority-insensitive
+    // resolve the owning files by listing only the partition dirs the
+    // scan named (never a recursive listFiles, which on the local file
+    // system starts a process per file) and matching names — insensitive
+    // to the scan URIs' scheme/authority
     val depth = partitionCols.length
-    def tailKey(p: Path): String = {
-      var cur = p
-      val parts = new Array[String](depth + 1)
-      var i = depth
-      while (i >= 0) { parts(i) = cur.getName; cur = cur.getParent; i -= 1 }
-      parts.mkString("/")
-    }
-    val victimKeys = perFile.map(r => tailKey(new Path(r.getString(0)))).toSet
-    val it = fs.listFiles(storeP, true)
-    val affected = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
-    while (it.hasNext) {
-      val st = it.next()
-      val n0 = st.getPath.getName
-      if (st.isFile && !n0.startsWith("_") && !n0.startsWith(".") &&
-          victimKeys(tailKey(st.getPath)))
-        affected += st
-    }
+    def relDir(dir: Path): String =
+      Iterator.iterate(dir)(_.getParent).take(depth).map(_.getName).toSeq.reverse.mkString("/")
+    def inStore(rel: String) = if (rel.isEmpty) storeP else new Path(storeP, rel)
+    val affected = perFile.map(r => new Path(r.getString(0))).groupBy(f => relDir(f.getParent))
+      .toSeq.flatMap { case (rel, files) =>
+        val names = files.map(_.getName).toSet
+        fs.listStatus(inStore(rel)).map(_.getPath).filter(p => names(p.getName))
+      }
     require(affected.nonEmpty,
       s"$opName: victim rows reported but no owning files resolved — " +
         "store listing and scan disagree; refusing to swap")
     fs.delete(stageRoot, true) // stale stage: data-free, safe
-    val affectedBytes = affected.map(_.getLen).sum
-    val slices = math.max(
-      math.max(1L, (affectedBytes + targetFileBytes - 1) / targetFileBytes),
-      spark.sparkContext.defaultParallelism.toLong).toInt
-    val qualifiedBase = fs.makeQualified(storeP).toString
-    // persisted across the range-staged write: the range partitioner
-    // SAMPLES its child for bounds, so an unpersisted survivors plan
-    // would re-run the affected-file scan + victim anti-join twice
-    // (the seedIvfStore lesson, applied to every file-targeted erasure
-    // in the repo); op-scoped, released in the finally
-    val survivors = keepSurvivors(spark.read.option("basePath", qualifiedBase)
-        .parquet(affected.map(_.getPath.toString).toSeq: _*))
-      .persist()
-    try survivors
-      .repartitionByRange(slices, clusterCols.map(col): _*)
-      .sortWithinPartitions(clusterCols.map(col): _*)
+    keepSurvivors(spark.read.schema(store.schema)
+        .option("basePath", fs.makeQualified(storeP).toString)
+        .parquet(affected.map(_.toString): _*))
+      .sortWithinPartitions((partitionCols ++ clusterCols).map(col): _*)
       .write.mode("overwrite").partitionBy(partitionCols: _*)
       .parquet(stageRoot.toString)
-    finally { survivors.unpersist(); () }
     if (!fs.exists(stageRoot))
       throw new IllegalStateException(
         s"$opName: staged rewrite missing under $stageRoot — store left unchanged")
@@ -936,29 +956,17 @@ object Dedup {
     // its store slot beside the untouched files (part names uuid-unique)
     def stagedLeaves(root: Path, lvl: Int): Seq[Path] =
       if (lvl == 0) Seq(root)
-      else fs.listStatus(root).filter(s => s.isDirectory &&
-        s.getPath.getName.contains("=")).toSeq
-        .flatMap(s => stagedLeaves(s.getPath, lvl - 1))
+      else fs.listStatus(root).map(_.getPath).filter(_.getName.contains("=")).toSeq
+        .flatMap(stagedLeaves(_, lvl - 1))
     val stagedFiles = stagedLeaves(stageRoot, depth).flatMap { d =>
-      val rel = if (depth == 0) "" else {
-        var cur = d; val parts = new Array[String](depth)
-        var i = depth - 1
-        while (i >= 0) { parts(i) = cur.getName; cur = cur.getParent; i -= 1 }
-        parts.mkString("/")
-      }
-      fs.listStatus(d)
-        .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-          !f.getPath.getName.startsWith("."))
-        .map { f =>
-          val dst = if (rel.isEmpty) new Path(storeP, f.getPath.getName)
-            else new Path(new Path(storeP, rel), f.getPath.getName)
-          (f.getPath, dst)
-        }
+      fs.listStatus(d).map(_.getPath)
+        .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
+        .map(f => (f, new Path(inStore(relDir(d)), f.getName)))
     }
     stagedFiles.foreach { case (_, dst) => fs.mkdirs(dst.getParent) }
     recoverableSwap(fs, opName,
       sentinelDir = storeP, trash = trash,
-      asides = affected.map(_.getPath).toSeq,
+      asides = affected,
       promotes = stagedFiles,
       cleanup = Seq(stageRoot),
       afterPromote = afterPromote)
@@ -1064,30 +1072,20 @@ object Dedup {
     val vcMod = vc && col("did_mod").isin(mods: _*)
     // the three tables are independent (no cross-table derivation — each
     // erases its own rows through its own sentinel/swap), so their
-    // pricing scans and restages OVERLAP on the writer pool instead of
+    // pricing scans and rewrites OVERLAP on the writer pool instead of
     // running back to back; a crash leaving a subset erased is the same
     // conservative, idempotently-retryable state the serial order left
     // (victims without band rows can never be matched against)
     import scala.concurrent.{Await, Future}
     implicit val ec: scala.concurrent.ExecutionContext = writerPool
-    val wBands = Future {
-      deleteRowsFromStore(spark, s"$idxDir/bands", "deleteFromMinhashIndex(bands)",
-        vc, Seq("batch", "bh_mod"), Seq("band_hash", "doc_id"))
-    }
-    val wSigs = Future {
-      deleteRowsFromStore(spark, s"$idxDir/sigs",
-        "deleteFromMinhashIndex(sigs)",
-        vcMod, Seq("batch", "did_mod"), Seq("doc_id"))
-    }
-    val wShs = Future {
-      deleteRowsFromStore(spark, s"$idxDir/shingles",
-        "deleteFromMinhashIndex(shingles)",
-        vcMod, Seq("batch", "did_mod"), Seq("doc_id"))
-    }
-    Await.result(wBands, scala.concurrent.duration.Duration.Inf)
-    val nDocs = Await.result(wSigs, scala.concurrent.duration.Duration.Inf)
-    Await.result(wShs, scala.concurrent.duration.Duration.Inf)
-    nDocs
+    Seq(("bands", vc, "bh_mod", Seq("band_hash", "doc_id")),
+        ("sigs", vcMod, "did_mod", Seq("doc_id")), ("shingles", vcMod, "did_mod", Seq("doc_id")))
+      .map { case (t, victimCol, mod, cluster) =>
+        Future(deleteRowsFromStore(spark, s"$idxDir/$t", s"deleteFromMinhashIndex($t)",
+          victimCol, Seq("batch", mod), cluster))
+      }
+      .map(Await.result(_, scala.concurrent.duration.Duration.Inf))
+      .apply(1) // doc rows, from the 1-row-per-doc sigs table
   }
 
   /** BULK-victim form of the band-index erasure: the victim set is a
@@ -1114,25 +1112,14 @@ object Dedup {
       // three independent tables — overlap exactly as the literal form
       import scala.concurrent.{Await, Future}
       implicit val ec: scala.concurrent.ExecutionContext = writerPool
-      val wBands = Future {
-        deleteRowsFromStoreJoin(spark, s"$idxDir/bands",
-          "deleteFromMinhashIndex(bands)", v, "doc_id",
-          Seq("batch", "bh_mod"), Seq("band_hash", "doc_id"))
-      }
-      val wSigs = Future {
-        deleteRowsFromStoreJoin(spark, s"$idxDir/sigs",
-          "deleteFromMinhashIndex(sigs)", v, "doc_id",
-          Seq("batch", "did_mod"), Seq("doc_id"), prune = modPrune)
-      }
-      val wShs = Future {
-        deleteRowsFromStoreJoin(spark, s"$idxDir/shingles",
-          "deleteFromMinhashIndex(shingles)", v, "doc_id",
-          Seq("batch", "did_mod"), Seq("doc_id"), prune = modPrune)
-      }
-      Await.result(wBands, scala.concurrent.duration.Duration.Inf)
-      val nDocs = Await.result(wSigs, scala.concurrent.duration.Duration.Inf)
-      Await.result(wShs, scala.concurrent.duration.Duration.Inf)
-      nDocs
+      Seq(("bands", lit(true), "bh_mod", Seq("band_hash", "doc_id")),
+          ("sigs", modPrune, "did_mod", Seq("doc_id")), ("shingles", modPrune, "did_mod", Seq("doc_id")))
+        .map { case (t, prune, mod, cluster) =>
+          Future(deleteRowsFromStoreJoin(spark, s"$idxDir/$t", s"deleteFromMinhashIndex($t)",
+            v, "doc_id", Seq("batch", mod), cluster, prune = prune))
+        }
+        .map(Await.result(_, scala.concurrent.duration.Duration.Inf))
+        .apply(1) // doc rows, from the 1-row-per-doc sigs table
     } finally v.unpersist()
   }
 
@@ -1662,7 +1649,10 @@ object Dedup {
     * ⌈store_bytes / (nMods × targetFileBytes)⌉ pieces — so the rewrite
     * runs one task per output file (a 100 TB index compacts across the
     * cluster, not through one executor) and output files track
-    * `targetFileBytes` regardless of store size.
+    * `targetFileBytes` regardless of store size. The three tables are
+    * independent, so they compact CONCURRENTLY on the writer pool, each
+    * through its own swap, and each opens its store without a
+    * schema job ([[readStore]]).
     *
     * Swap protocol — RECOVERABLE, every `FileSystem` boolean checked:
     * stage → verify the stage exists → raise the [[MaintenanceSentinel]]
@@ -1693,9 +1683,15 @@ object Dedup {
       upTo: Long,
       targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
     val nm = storeNMods(idxDir)
-    compactStore(spark, bandsDir(idxDir), "bh_mod", "doc_id", nm, upTo, targetFileBytes)
-    compactStore(spark, sigsDir(idxDir), "did_mod", "doc_id", nm, upTo, targetFileBytes)
-    compactStore(spark, shsDir(idxDir), "did_mod", "doc_id", nm, upTo, targetFileBytes)
+    // three independent tables, each behind its own sentinel and swap —
+    // they compact concurrently, as [[deleteFromMinhashIndex]] erases them
+    import scala.concurrent.{Await, Future}
+    implicit val ec: scala.concurrent.ExecutionContext = writerPool
+    Seq(bandsDir(idxDir) -> "bh_mod", sigsDir(idxDir) -> "did_mod", shsDir(idxDir) -> "did_mod")
+      .map { case (dir, modCol) =>
+        Future(compactStore(spark, dir, modCol, "doc_id", nm, upTo, targetFileBytes))
+      }
+      .foreach(Await.result(_, scala.concurrent.duration.Duration.Inf))
   }
 
   /** Compact ONE batch-partitioned, hash-fanned-out store table — the

@@ -1720,7 +1720,7 @@ object Similarity {
     fs.delete(new Path(staged), true)
     val store = Dedup.readStore(spark, cellsDir)
     // victim marking/dropping via broadcast semi/anti — constant-size
-    // plan in |victims| (the deleteRowsFromStoreJoin discipline)
+    // plan in |victims| (as in Dedup.deleteRowsFromStoreJoin)
     def markV(df: DataFrame): DataFrame = victims match {
       case Some(v) => df.join(broadcast(v), Seq("vec_id"), "left_semi")
       case None    => df.limit(0)
@@ -1742,8 +1742,8 @@ object Similarity {
     }
     // persisted across the emptiness probe AND the range-staged write:
     // the range sampler would otherwise re-run the store scan + victim
-    // anti-join a second time (the deleteRowsFromStoreJoin discipline),
-    // and the isEmpty probe is a third pass without the cache
+    // anti-join a second time, and the isEmpty probe is a third pass
+    // without the cache
     val rows = dropV(store.where(col("batch") <= upTo)).drop("batch").persist()
     // an all-empty store compacts to a schema-only file (a ranged write of
     // zero rows emits no files and would leave the store unreadable)
@@ -2091,9 +2091,9 @@ object Similarity {
     * predicate doesn't prune the cell-clustered layout, so a second
     * victim scan would double the dominant cost); 0 victims → store
     * untouched, no swap; only owning files re-read (basePath keeps
-    * `batch` provenance), victims filtered out, remainder restaged
-    * cell-clustered, file-granular recoverable swap — untouched files
-    * stay byte-identical.
+    * `batch` provenance), victims filtered out, remainder rewritten
+    * copy-on-write sorted on (cell, vec_id), file-granular recoverable
+    * swap — untouched files stay byte-identical.
     *
     * CENTROIDS ARE UNTOUCHED (deletion never moves a surviving row's
     * cell); the index artifact is cache-invalidated only so priced
@@ -2105,15 +2105,13 @@ object Similarity {
   def deleteFromIvfStore(
       spark: org.apache.spark.sql.SparkSession,
       workDir: String,
-      ids: Seq[Long],
-      targetFileBytes: Long = 128L * 1024 * 1024): Long = {
+      ids: Seq[Long]): Long = {
     require(ids.nonEmpty, "deleteFromIvfStore: empty id set")
     val idxDir = s"$workDir/ivf_index"
     Dedup.deleteRowsFromStore(spark, s"$workDir/cells", "deleteFromIvfStore",
       victimCol = col("vec_id").isin(ids.distinct.map(java.lang.Long.valueOf): _*),
       partitionCols = Seq("batch"),
       clusterCols = Seq("cell", "vec_id"),
-      targetFileBytes = targetFileBytes,
       afterPromote = () => invalidateIvfIndexDurably(spark, idxDir))
   }
 

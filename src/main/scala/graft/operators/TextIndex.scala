@@ -676,14 +676,19 @@ object TextIndex {
       applyTable = victims => deleteFromTextIndex(spark, idxDir, victims))
 
   /** Right-to-erasure from the text index, literal-victim form (a
-    * handful of ids). Delegates to the DataFrame form — see there for
-    * the protocol.
+    * handful of ids). Runs the DataFrame form's protocol — see there —
+    * but works out the victims' did_mods on the driver (`floorMod`
+    * equals the writer's `pmod` for a positive nMods) and leaves its
+    * local victim relation uncached, so it pays no job for either.
     */
   def deleteFromTextIndex(spark: SparkSession, idxDir: String,
                           docIds: Seq[Long]): Long = {
     require(docIds.nonEmpty, "deleteFromTextIndex: empty id set")
     import spark.implicits._
-    deleteFromTextIndex(spark, idxDir, docIds.distinct.toDF("doc_id"))
+    val nMods = storeNMods(idxDir)
+    val ids = docIds.distinct
+    eraseVictims(spark, idxDir, ids.toDF("doc_id"),
+      ids.map(d => Math.floorMod(d, nMods.toLong).toInt).distinct.sorted)
   }
 
   /** Right-to-erasure from the text index, BULK-victim form: the victim
@@ -694,8 +699,9 @@ object TextIndex {
     *
     *  1. PRE-SCAN the membership table (`docs/`), pruned to the
     *     victims' own did_mod partitions — never the term-scattered
-    *     postings — for the per-victim (batch, dl) the later stages
-    *     need. This is also what makes ZERO-TOKEN documents erasable:
+    *     postings — for what the later stages need, one row per
+    *     affected batch: (batch, victims present, any victim with
+    *     dl > 0). This is also what makes ZERO-TOKEN documents erasable:
     *     they have no postings rows, but they hold a membership row and
     *     count in N/avgdl, so skipping them would leave the stored N
     *     permanently one high per such victim.
@@ -706,8 +712,9 @@ object TextIndex {
     *     row scattered by design.
     *  3. TERMS dictionary: the affected batches' rows RECOMPUTE from
     *     their post-delete postings (exact df/max_tf/min_dl — keeps the
-    *     bounded serve's error bound sound), staged and promoted behind
-    *     the checked [[Dedup.recoverableSwap]].
+    *     bounded serve's error bound sound), staged one file per
+    *     (batch, tm_mod) directory and promoted behind the checked
+    *     [[Dedup.recoverableSwap]].
     *  4. STATS: the affected batches' rows RECOMPUTE as the aggregate
     *     of membership-minus-victims, staged and swapped — NOT
     *     decremented in place: recomputation is idempotent under retry,
@@ -735,7 +742,8 @@ object TextIndex {
     * under-count, so idf and avgdl skew the opposite way from the serial
     * order's window (which over-counted) until the retry, which still
     * converges because membership goes last. Returns the number of
-    * victim documents actually present.
+    * victim documents actually present (the sum of the per-batch
+    * counts).
     */
   def deleteFromTextIndex(spark: SparkSession, idxDir: String,
                           victims: DataFrame): Long = {
@@ -746,64 +754,75 @@ object TextIndex {
       import spark.implicits._
       val mods = v.select(pmod(col("doc_id"), lit(nMods)).cast("int").as("m"))
         .distinct().as[Int].collect().sorted // bounded: ≤ nMods ints
-      val modPrune = col("did_mod").isin(mods.toIndexedSeq.map(Integer.valueOf): _*)
-      // bounded collect: one row per victim present — ≤ |victims|
-      val present = Dedup.readStore(spark, docsDir(idxDir))
-        .where(modPrune)
-        .join(broadcast(v), Seq("doc_id"), "left_semi")
-        .select(col("batch").cast("long"), col("doc_id"), col("dl"))
-        .collect()
-      if (present.isEmpty) return 0L
-      val affected = present.map(_.getLong(0)).distinct.sorted.toIndexedSeq
-      // batches that actually hold victim POSTINGS (dl > 0) — a
-      // zero-token victim changes membership and stats but no postings,
-      // so its batch's dictionary is already exact
-      val postingBatches =
-        present.filter(_.getLong(2) > 0L).map(_.getLong(0)).distinct.sorted.toIndexedSeq
-      // Stages 2-4 overlap to the full extent their derivation edges
-      // allow: postings, the positional tier, AND the stats recompute
-      // are mutually independent (postings/positions are different
-      // tables through the same file-targeted core; stats recomputes
-      // from the STILL-UNTOUCHED membership minus victims — it never
-      // reads postings), so all three submit together. Only the TERM
-      // DICTIONARY has a real edge — it recomputes from the POST-delete
-      // postings — so it chains on the postings future instead of
-      // waiting for everything. Crash-retry stays intact whatever
-      // subset completed: every stage idempotently re-derives from
-      // membership (rewritten strictly LAST below), postings re-prices
-      // to the still-present victims, and the recomputing swaps produce
-      // the same values on retry.
-      locally {
-        import scala.concurrent.{Await, Future}
-        implicit val ec: scala.concurrent.ExecutionContext = Dedup.writerPool
-        val wPost = Future {
-          Dedup.deleteRowsFromStoreJoin(spark, postingsDir(idxDir),
-            "deleteFromTextIndex(postings)", v, "doc_id",
-            partitionCols = Seq("batch", "tm_mod"),
-            clusterCols = Seq("term", "doc_id"))
-        }
-        val wPos =
-          if (!storeHasPositions(idxDir)) Future.successful(0L)
-          else Future {
-            Dedup.deleteRowsFromStoreJoin(spark, positionsDir(idxDir),
-              "deleteFromTextIndex(positions)", v, "doc_id",
-              partitionCols = Seq("batch", "tm_mod"),
-              clusterCols = Seq("term", "doc_id", "pos"))
-          }
-        val wStats = Future { rewriteStats(spark, idxDir, affected, v) }
-        val wTerms =
-          if (postingBatches.isEmpty) Future.successful(())
-          else wPost.map { _ => rewriteTermDictionary(spark, idxDir, postingBatches) }
-        Seq(wPost.map(_ => ()), wPos.map(_ => ()), wStats, wTerms)
-          .foreach(Await.result(_, scala.concurrent.duration.Duration.Inf))
-      }
-      Dedup.deleteRowsFromStoreJoin(spark, docsDir(idxDir),
-        "deleteFromTextIndex(docs)", v, "doc_id",
-        partitionCols = Seq("batch", "did_mod"),
-        clusterCols = Seq("doc_id"),
-        prune = modPrune)
-      present.map(_.getLong(1)).distinct.length.toLong
+      eraseVictims(spark, idxDir, v, mods.toIndexedSeq)
     } finally v.unpersist()
+  }
+
+  /** The erasure protocol of [[deleteFromTextIndex]] for a distinct
+    * victim table `v` whose ids live in membership partitions `mods`.
+    */
+  private def eraseVictims(spark: SparkSession, idxDir: String,
+                           v: DataFrame, mods: Seq[Int]): Long = {
+    val modPrune = col("did_mod").isin(mods.map(Integer.valueOf): _*)
+    // bounded collect: one row per batch holding a victim —
+    // (batch, victims present, any victim with dl > 0), so driver
+    // memory scales with batches, not victims
+    val perBatch = Dedup.readStore(spark, docsDir(idxDir))
+      .where(modPrune)
+      .join(broadcast(v), Seq("doc_id"), "left_semi")
+      .groupBy(col("batch").cast("long"))
+      .agg(count(lit(1)), max(col("dl")) > 0L)
+      .collect()
+    if (perBatch.isEmpty) return 0L
+    val affected = perBatch.map(_.getLong(0)).sorted.toIndexedSeq
+    // batches that actually hold victim POSTINGS (dl > 0) — a
+    // zero-token victim changes membership and stats but no postings,
+    // so its batch's dictionary is already exact
+    val postingBatches =
+      perBatch.filter(_.getBoolean(2)).map(_.getLong(0)).sorted.toIndexedSeq
+    // Stages 2-4 overlap to the full extent their derivation edges
+    // allow: postings, the positional tier, AND the stats recompute
+    // are mutually independent (postings/positions are different
+    // tables through the same file-targeted core; stats recomputes
+    // from the STILL-UNTOUCHED membership minus victims — it never
+    // reads postings), so all three submit together. Only the TERM
+    // DICTIONARY has a real edge — it recomputes from the POST-delete
+    // postings — so it chains on the postings future instead of
+    // waiting for everything. Crash-retry stays intact whatever
+    // subset completed: every stage idempotently re-derives from
+    // membership (rewritten strictly LAST below), postings re-prices
+    // to the still-present victims, and the recomputing swaps produce
+    // the same values on retry.
+    locally {
+      import scala.concurrent.{Await, Future}
+      implicit val ec: scala.concurrent.ExecutionContext = Dedup.writerPool
+      val wPost = Future {
+        Dedup.deleteRowsFromStoreJoin(spark, postingsDir(idxDir),
+          "deleteFromTextIndex(postings)", v, "doc_id",
+          partitionCols = Seq("batch", "tm_mod"),
+          clusterCols = Seq("term", "doc_id"))
+      }
+      val wPos =
+        if (!storeHasPositions(idxDir)) Future.successful(0L)
+        else Future {
+          Dedup.deleteRowsFromStoreJoin(spark, positionsDir(idxDir),
+            "deleteFromTextIndex(positions)", v, "doc_id",
+            partitionCols = Seq("batch", "tm_mod"),
+            clusterCols = Seq("term", "doc_id", "pos"))
+        }
+      val wStats = Future { rewriteStats(spark, idxDir, affected, v) }
+      val wTerms =
+        if (postingBatches.isEmpty) Future.successful(())
+        else wPost.map { _ => rewriteTermDictionary(spark, idxDir, postingBatches) }
+      Seq(wPost.map(_ => ()), wPos.map(_ => ()), wStats, wTerms)
+        .foreach(Await.result(_, scala.concurrent.duration.Duration.Inf))
+    }
+    Dedup.deleteRowsFromStoreJoin(spark, docsDir(idxDir),
+      "deleteFromTextIndex(docs)", v, "doc_id",
+      partitionCols = Seq("batch", "did_mod"),
+      clusterCols = Seq("doc_id"),
+      prune = modPrune)
+    perBatch.map(_.getLong(1)).sum
   }
 
   /** Recompute the `terms/` dictionary rows of `batches` from their
@@ -815,46 +834,21 @@ object TextIndex {
     * describe.
     */
   private def rewriteTermDictionary(spark: SparkSession, idxDir: String,
-                                    batches: Seq[Long]): Unit = {
-    import org.apache.hadoop.fs.Path
-    val nMods = storeNMods(idxDir)
-    val dir = termsDir(idxDir)
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sentinel = new Path(dir, Dedup.MaintenanceSentinel)
-    val trash = new Path(root.getParent, s".${root.getName}_rewrite_old")
-    val stage = new Path(root.getParent, s".${root.getName}_rewrite_stage")
-    for (left <- Seq(sentinel, trash) if fs.exists(left))
-      throw new IllegalStateException(
-        s"rewriteTermDictionary: leftover $left from an unfinished swap at $dir — " +
-          "recover before retrying")
-    fs.delete(stage, true)
-    // persisted across the range-staged write (the deleteRowsFromStoreJoin
-    // discipline): the range sampler would otherwise re-run the postings
-    // scan + dictionary aggregation a second time just to derive bounds
-    val dict = Dedup.readStore(spark, postingsDir(idxDir))
-      .where(col("batch").isin(batches.map(java.lang.Long.valueOf): _*))
-      .groupBy(col("batch"), col("term"))
-      .agg(count(lit(1)).as("df"), max(col("tf")).as("max_tf"),
-        min(col("dl")).as("min_dl"))
-      .withColumn("tm_mod", pmod(hash(col("term")), lit(nMods)).cast("int"))
-      .persist()
-    try dict
-      .repartitionByRange(col("batch"), col("tm_mod"), col("term"))
-      .sortWithinPartitions(col("batch"), col("tm_mod"), col("term"))
-      .write.mode("overwrite").partitionBy("batch", "tm_mod")
-      .parquet(stage.toString)
-    finally { dict.unpersist(); () }
-    val promotes = batches
-      .map(b => (new Path(stage, s"batch=$b"), new Path(root, s"batch=$b")))
-      .filter { case (src, _) => fs.exists(src) }
-    Dedup.recoverableSwap(fs, "rewriteTermDictionary",
-      sentinelDir = root, trash = trash,
-      asides = batches.map(b => new Path(root, s"batch=$b"))
-        .filter(fs.exists(_)),
-      promotes = promotes,
-      cleanup = Seq(stage))
-  }
+                                    batches: Seq[Long]): Unit =
+    swapBatches(spark, termsDir(idxDir), "rewriteTermDictionary", batches) { stage =>
+      // one shuffle, one file per (batch, tm_mod) directory: the postings
+      // already carry their term's tm_mod, so hash-partitioning on
+      // (batch, tm_mod) clusters every group the aggregation needs
+      Dedup.readStore(spark, postingsDir(idxDir))
+        .where(col("batch").isin(batches.map(java.lang.Long.valueOf): _*))
+        .repartition(col("batch"), col("tm_mod"))
+        .groupBy(col("batch"), col("tm_mod"), col("term"))
+        .agg(count(lit(1)).as("df"), max(col("tf")).as("max_tf"),
+          min(col("dl")).as("min_dl"))
+        .sortWithinPartitions(col("batch"), col("tm_mod"), col("term"))
+        .write.mode("overwrite").partitionBy("batch", "tm_mod")
+        .parquet(stage)
+    }
 
   /** Recompute the `stats/` rows of `batches` as the aggregate of
     * membership-minus-victims (the invariant: stats(batch) ==
@@ -862,9 +856,28 @@ object TextIndex {
     * idempotent under retry, never a partial in-place overwrite.
     */
   private def rewriteStats(spark: SparkSession, idxDir: String,
-                           batches: Seq[Long], victims: DataFrame): Unit = {
+                           batches: Seq[Long], victims: DataFrame): Unit =
+    swapBatches(spark, statsDir(idxDir), "rewriteStats", batches) { stage =>
+      Dedup.readStore(spark, docsDir(idxDir))
+        .where(col("batch").isin(batches.map(java.lang.Long.valueOf): _*))
+        .join(broadcast(victims), Seq("doc_id"), "left_anti")
+        .groupBy(col("batch"))
+        .agg(count(lit(1)).as("n_docs"),
+          coalesce(sum(col("dl")), lit(0L)).as("total_toks"))
+        .coalesce(1)
+        .write.mode("overwrite").partitionBy("batch")
+        .parquet(stage)
+    }
+
+  /** Replace the `batch=` partitions of table `dir` for `batches`:
+    * `write` stages their recomputed rows (partitioned by `batch`) at
+    * the path it is given, and the checked [[Dedup.recoverableSwap]]
+    * promotes each staged partition over the old one. A batch that
+    * stages no rows loses its partition.
+    */
+  private def swapBatches(spark: SparkSession, dir: String, opName: String,
+                          batches: Seq[Long])(write: String => Unit): Unit = {
     import org.apache.hadoop.fs.Path
-    val dir = statsDir(idxDir)
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val sentinel = new Path(dir, Dedup.MaintenanceSentinel)
@@ -872,26 +885,16 @@ object TextIndex {
     val stage = new Path(root.getParent, s".${root.getName}_rewrite_stage")
     for (left <- Seq(sentinel, trash) if fs.exists(left))
       throw new IllegalStateException(
-        s"rewriteStats: leftover $left from an unfinished swap at $dir — " +
+        s"$opName: leftover $left from an unfinished swap at $dir — " +
           "recover before retrying")
     fs.delete(stage, true)
-    Dedup.readStore(spark, docsDir(idxDir))
-      .where(col("batch").isin(batches.map(java.lang.Long.valueOf): _*))
-      .join(broadcast(victims), Seq("doc_id"), "left_anti")
-      .groupBy(col("batch"))
-      .agg(count(lit(1)).as("n_docs"),
-        coalesce(sum(col("dl")), lit(0L)).as("total_toks"))
-      .coalesce(1)
-      .write.mode("overwrite").partitionBy("batch")
-      .parquet(stage.toString)
-    val promotes = batches
-      .map(b => (new Path(stage, s"batch=$b"), new Path(root, s"batch=$b")))
-      .filter { case (src, _) => fs.exists(src) }
-    Dedup.recoverableSwap(fs, "rewriteStats",
+    write(stage.toString)
+    def part(base: Path, b: Long) = new Path(base, s"batch=$b")
+    Dedup.recoverableSwap(fs, opName,
       sentinelDir = root, trash = trash,
-      asides = batches.map(b => new Path(root, s"batch=$b"))
-        .filter(fs.exists(_)),
-      promotes = promotes,
+      asides = batches.map(part(root, _)).filter(fs.exists(_)),
+      promotes = batches.map(b => (part(stage, b), part(root, b)))
+        .filter { case (src, _) => fs.exists(src) },
       cleanup = Seq(stage))
   }
 
@@ -1003,9 +1006,9 @@ object TextIndex {
     // dictionary and stats tables RECOMPUTE from the folded postings/
     // membership rather than folding their own rows, so an erasure fold
     // keeps them exact. Each range-staged recipe persists its folded
-    // frame for the write's duration (the deleteRowsFromStoreJoin
-    // discipline): the range sampler would otherwise re-run the fold's
-    // scan + anti-join/aggregation a second time just to derive bounds.
+    // frame for the write's duration: the range sampler would otherwise
+    // re-run the fold's scan + anti-join/aggregation a second time just
+    // to derive bounds.
     // The stats recipe writes through coalesce(1) — no sampling pass —
     // so it stays uncached.
     def stagedRanged(folded: DataFrame, rangeCols: Seq[String],

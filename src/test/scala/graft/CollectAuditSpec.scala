@@ -58,11 +58,13 @@ import org.scalatest.funsuite.AnyFunSuite
   *    victim scan — Similarity 16 → 15.
   *  - TextIndex: the serve's ≤ k materializing collect (round 17 —
   *    releases the per-query candidate cache instead of accreting one
-  *    cached slice per query over a serving session); the delete's
-  *    ≤ nMods victim-partition mods collect and its per-victim
-  *    (batch, doc, dl) membership pre-scan collect (≤ |victim ids|
-  *    rows — reads the lengths the stats recompute needs BEFORE the
-  *    delete destroys them); the bounded serve's dictionary reads
+  *    cached slice per query over a serving session); the bulk
+  *    delete's ≤ nMods victim-partition mods collect (the literal form
+  *    computes its mods driver-side) and the membership pre-scan
+  *    collect of one (batch, victims present, any dl > 0) row per
+  *    affected batch (≤ the store's batch count — reads what the stats
+  *    and dictionary recomputes need BEFORE the delete destroys it);
+  *    the bounded serve's dictionary reads
   *    (termImpactStats: ≤ |query terms| rows; cappedImpactBound: 1-row
   *    global stats head). The four query-term tm_mod collects the
   *    serves used to run (round 16's hash-partition jobs) are GONE

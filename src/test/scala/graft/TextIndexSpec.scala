@@ -284,6 +284,30 @@ class TextIndexSpec extends SparkSpec {
       TextIndex.bm25TopKStored(spark, idxB, Terms, k = 20)))
   }
 
+  test("bulk erasure of many victims over 2 batches returns the exact count " +
+       "and leaves every table equal to the literal form's") {
+    import spark.implicits._
+    val docs = corpus(200)
+    val idxA = freshIdx()
+    val idxB = freshIdx()
+    for (idx <- Seq(idxA, idxB)) {
+      TextIndex.appendTextIndexBatch(docs.where(col("doc_id") < 100), idx, 0L)
+      TextIndex.appendTextIndexBatch(docs.where(col("doc_id") >= 100), idx, 1L)
+    }
+    // 67 victims across both batches, plus ids the index never held
+    val present = (0L until 200L by 3L)
+    val victims = present ++ Seq(5000L, 5003L)
+    assert(TextIndex.deleteFromTextIndex(spark, idxA, victims) == present.length)
+    assert(TextIndex.deleteFromTextIndex(spark, idxB, victims.toDF("doc_id")) ==
+      present.length)
+    for (t <- Seq("postings", "terms", "docs", "stats"))
+      assert(sameRows(spark.read.parquet(s"$idxA/$t"), spark.read.parquet(s"$idxB/$t")), t)
+    val rest = docs.where(!col("doc_id").isin(present.map(java.lang.Long.valueOf): _*))
+    assert(sameRows(
+      TextIndex.bm25TopKStored(spark, idxB, Terms, k = 20),
+      Corpus.bm25TopK(rest, Terms, k = 20)))
+  }
+
   test("bounded serve: sub-ceiling queries are exact; capped terms never " +
        "read and the error bound holds") {
     val docs = corpus(120)

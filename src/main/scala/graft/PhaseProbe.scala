@@ -93,7 +93,7 @@ object PhaseProbe {
         println(f"[phase]   assigner driver loop: $dt%.1f us/row (sink=$sink)")
       }
       val stored = t("readStore") {
-        graft.operators.Dedup.readStore(s, s"$w/cells").drop("batch")
+        graft.operators.StoredTable.readStore(s, s"$w/cells").drop("batch")
       }
       val nlistTrained = t("loadIvfIndex") {
         Similarity.loadIvfIndex(s, s"$w/ivf_index").length

@@ -22,6 +22,7 @@ import org.apache.spark.sql.functions._
   * (e.g. boilerplate shingles) are capped via `MaxBucket` before pairing.
   */
 object Dedup {
+  import StoredTable.{deleteRowsFromStore, deleteRowsFromStoreJoin, readStore, retainStoreBatches}
 
   /** Largest LSH bucket we will FULLY pair-expand. A bucket of b docs
     * yields b(b-1)/2 pairs; above this, the bucket degrades to a linear
@@ -163,28 +164,6 @@ object Dedup {
       write(root, n, perms, bands, storeNMods(root))
     }
   }
-
-  /** Bounded, named writer pool for the per-batch concurrent store writes:
-    * a micro-batch's independent outputs (accepted rows, band append, doc
-    * appends) are submitted as concurrent Spark jobs so the batch pays the
-    * slowest write, not the sum. A dedicated fixed pool makes that
-    * parallelism a deliberate constant instead of borrowing the JVM-global
-    * fork-join pool, whose width follows the machine and whose threads are
-    * shared with whatever else the process runs. Daemon threads (never
-    * block JVM exit), named for thread dumps.
-    */
-  private[operators] lazy val writerPool: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(4,
-        new java.util.concurrent.ThreadFactory {
-          private val seq = new java.util.concurrent.atomic.AtomicInteger(0)
-          def newThread(r: Runnable): Thread = {
-            val t = new Thread(r, s"graft-store-writer-${seq.incrementAndGet()}")
-            t.setDaemon(true)
-            t
-          }
-        }))
-
   /** `(doc_id, band, band_hash)` rows of a signature table — the banded
     * form every LSH tier buckets on: `bands` slices of `perms/bands`
     * signature positions, each hashed to one 64-bit band key.
@@ -628,392 +607,8 @@ object Dedup {
     */
   val StoredProbeRatio = 4L
 
-  /** Serial driver-side listing for store reads: the two-level batch/mod
-    * layout exceeds the default parallel-discovery threshold after a few
-    * dozen partitions and Spark would spawn a LISTING JOB per micro-batch
-    * read — pure overhead at per-batch dir counts.
-    *
-    * The set/restore of the session-global threshold is guarded by a lock:
-    * concurrent callers sharing the session (the writer-pool futures, or
-    * two queries probing different stores) could otherwise interleave
-    * set/restore and leave the override active session-wide, or clobber a
-    * caller's own setting. The listing happens eagerly inside
-    * `read.parquet`, so the critical section covers exactly the work the
-    * override exists for.
-    * The open runs NO Spark job: the read carries the data schema of
-    * one footer ([[storeDataSchema]], read before the lock), so Spark
-    * skips its schema-inference job; partition columns still infer from
-    * the directory names, so the schema equals a plain `read.parquet`'s.
-    */
-  private val readStoreLock = new Object
-  private[graft] def readStore(s2: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    // a maintenance swap ([[compactStore]] / [[requantizeSemStore]])
-    // raises this sentinel for the window in which source partitions are
-    // moved aside but the replacement is not yet promoted — a read in
-    // that window would silently see a truncated store (missed
-    // duplicates), so refuse loudly instead
-    val sent = new org.apache.hadoop.fs.Path(path, MaintenanceSentinel)
-    if (sent.getFileSystem(s2.sparkContext.hadoopConfiguration).exists(sent))
-      throw new IllegalStateException(
-        s"store at $path has a maintenance swap in progress ($MaintenanceSentinel " +
-          "present) — refusing to read a possibly half-swapped store; if no " +
-          "maintenance job is live, a crashed swap left it: restore the " +
-          "set-aside partitions and remove the sentinel")
-    val reader = storeDataSchema(s2, path).fold(s2.read)(s2.read.schema)
-    readStoreLock.synchronized {
-      val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-      val prev = s2.conf.get(key)
-      s2.conf.set(key, "8192")
-      try reader.parquet(path) finally s2.conf.set(key, prev)
-    }
-  }
-
-  /** The data schema `read.parquet(path)` would infer, without its job:
-    * Spark's own `org.apache.spark.sql.parquet.row.metadata` footer key
-    * of ONE data file, the same single-file rule Spark's inference
-    * applies with `mergeSchema` off. The file is found by a `listStatus`
-    * walk down the first partition directories (never a recursive
-    * `listFiles`, which on the local file system starts a process per
-    * file to read its permissions). `None` — the caller reads plainly —
-    * when the store holds no data file or the footer has no key.
-    */
-  private def storeDataSchema(spark: org.apache.spark.sql.SparkSession,
-                              path: String): Option[org.apache.spark.sql.types.StructType] = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(path).getFileSystem(conf)
-    def firstDataFile(dir: Path): Option[Path] = {
-      val (files, dirs) = fs.listStatus(dir).filterNot { st =>
-        st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith(".")
-      }.partition(_.isFile)
-      files.headOption.map(_.getPath).orElse(dirs.iterator.filter(_.getPath.getName.contains("="))
-        .map(d => firstDataFile(d.getPath)).collectFirst { case Some(f) => f })
-    }
-    scala.util.Try {
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(firstDataFile(new Path(path)).get, conf))
-      val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData
-        .get("org.apache.spark.sql.parquet.row.metadata") finally reader.close()
-      org.apache.spark.sql.types.DataType.fromJson(json).asInstanceOf[org.apache.spark.sql.types.StructType]
-    }.toOption
-  }
-
-  /** Name of the swap-window sentinel raised inside a store dir by the
-    * maintenance ops while source partitions are aside but the replacement
-    * is not yet promoted. [[readStore]] (every probe's read path) refuses
-    * while it exists.
-    */
-  private[graft] val MaintenanceSentinel = ".compact_inprogress"
-
-  /** The RECOVERABLE CHECKED SWAP shared by every store-maintenance op
-    * (compaction and re-quantization, all four store families) — one
-    * implementation of the protocol instead of a hand-rolled copy per op
-    * (the ManifestIo lesson applied to the swap):
-    *
-    *   raise the [[MaintenanceSentinel]] in `sentinelDir` (exclusive
-    *   create — concurrent swaps fail here; [[readStore]] — every probe's
-    *   read path — refuses while it exists) → create `trash` → move each
-    *   of `asides` into `trash` → promote each `(stagedSrc, dst)` →
-    *   `afterPromote` (manifest bump / cache invalidation, while the
-    *   store is already consistent) → drop the sentinel → delete `trash`
-    *   and each `cleanup` root.
-    *
-    * Failure anywhere before the last promote RESTORES the original
-    * store: already-promoted dsts are deleted FIRST (staged data is
-    * recomputable, and on HDFS a rename into an existing dir NESTS — the
-    * originals must rename into a free slot), then the moved-aside
-    * originals rename back in reverse order, then trash and sentinel are
-    * cleared so a retry does not fail the caller's stale-leftover check.
-    * If the RESTORE ITSELF fails at any step (a promoted dst cannot be
-    * deleted, or a rename-back returns false), trash and sentinel are
-    * LEFT IN PLACE — the un-restored originals live only in trash, so
-    * deleting it there would be permanent data loss — and the thrown
-    * message names the manual-recovery path; [[readStore]] keeps
-    * refusing until the operator clears the sentinel.
-    * Failures AFTER the store is consistent (sentinel/cleanup deletes)
-    * throw with the manual-fix path but never un-promote. Every
-    * `FileSystem` boolean is checked. Callers keep their own pre-flight:
-    * fail-fast on leftover sentinel/trash BEFORE staging, and verify the
-    * staged artifacts exist before calling.
-    */
-  private[graft] def recoverableSwap(
-      fs: org.apache.hadoop.fs.FileSystem,
-      opName: String,
-      sentinelDir: org.apache.hadoop.fs.Path,
-      trash: org.apache.hadoop.fs.Path,
-      asides: Seq[org.apache.hadoop.fs.Path],
-      promotes: Seq[(org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path)],
-      cleanup: Seq[org.apache.hadoop.fs.Path],
-      afterPromote: () => Unit = () => ()): Unit = {
-    import org.apache.hadoop.fs.Path
-    val sentinel = new Path(sentinelDir, MaintenanceSentinel)
-    fs.create(sentinel, false).close() // swap window opens
-    val moved = scala.collection.mutable.ArrayBuffer.empty[(Path, Path)]
-    // Restore the original store after a mid-swap failure described by
-    // `failure`, then throw. Every restore step is CHECKED: if any
-    // rename-back returns false, the un-restored partitions exist only
-    // inside `trash`, so trash and sentinel are left in place (readStore
-    // keeps refusing) and the message switches to manual recovery —
-    // deleting trash at that point would be permanent store loss.
-    def restoreAndThrow(failure: String): Nothing = {
-      val unrestored = moved.reverse.filterNot { case (orig, aside) => fs.rename(aside, orig) }
-      if (unrestored.nonEmpty)
-        throw new IllegalStateException(
-          s"$opName: $failure; RESTORE INCOMPLETE — rename-back failed for " +
-            unrestored.map { case (orig, aside) => s"$aside -> $orig" }.mkString(", ") +
-            s" — trash and sentinel left in place; restore those partitions " +
-            s"manually, then remove $sentinel")
-      val trashGone = fs.delete(trash, true)
-      val sentGone = fs.delete(sentinel, false)
-      if (!trashGone || !sentGone)
-        throw new IllegalStateException(
-          s"$opName: $failure — original store restored, but " +
-            s"${Seq(trash.toString).filter(_ => !trashGone) ++ Seq(sentinel.toString).filter(_ => !sentGone) mkString ", "} " +
-            "could not be removed; delete manually before retrying")
-      throw new IllegalStateException(s"$opName: $failure — original store restored")
-    }
-    if (!fs.mkdirs(trash)) {
-      val sentGone = fs.delete(sentinel, false)
-      throw new IllegalStateException(
-        s"$opName: cannot create $trash — store left unchanged" +
-          (if (sentGone) "" else s"; ALSO could not remove $sentinel — remove it manually"))
-    }
-    // index-prefixed aside names: FILE-granular swaps (splitHotCells) set
-    // aside part-files whose bare names repeat across batch= dirs (one
-    // write job reuses its task file names per partition), so the bare
-    // name alone would collide inside the flat trash dir
-    asides.zipWithIndex.foreach { case (orig, i) =>
-      val aside = new Path(trash, s"$i-${orig.getName}")
-      if (!fs.rename(orig, aside))
-        restoreAndThrow(s"failed to move $orig aside")
-      moved += ((orig, aside))
-    }
-    val promoted = scala.collection.mutable.ArrayBuffer.empty[Path]
-    promotes.foreach { case (src, dst) =>
-      if (!fs.rename(src, dst)) {
-        // free the original slots first; if a promoted dst cannot be
-        // deleted, rename-back into that slot would nest on HDFS — stop
-        // here with trash and sentinel intact rather than half-restore
-        val undeletable = promoted.filterNot(p => fs.delete(p, true))
-        if (undeletable.nonEmpty)
-          throw new IllegalStateException(
-            s"$opName: failed to promote $src, and already-promoted " +
-              s"${undeletable.mkString(", ")} could not be deleted to free the " +
-              s"original slots — trash and sentinel left in place; restore the " +
-              s"partitions in $trash manually, then remove $sentinel")
-        restoreAndThrow(s"failed to promote $src")
-      }
-      promoted += dst
-    }
-    afterPromote()
-    if (!fs.delete(sentinel, false))
-      throw new IllegalStateException(
-        s"$opName: store is CONSISTENT, but the swap sentinel could not be " +
-          s"removed — remove $sentinel manually")
-    val undeleted = (trash +: cleanup).filter(p => fs.exists(p) && !fs.delete(p, true))
-    if (undeleted.nonEmpty)
-      throw new IllegalStateException(
-        s"$opName: store is CONSISTENT, but set-aside leftovers could not be " +
-          s"deleted — remove ${undeleted.mkString(", ")} manually")
-  }
-
-  /** FILE-TARGETED ROW DELETION from a partitioned store — the shared
-    * right-to-erasure core behind `Similarity.deleteFromIvfStore`'s
-    * siblings ([[deleteFromMinhashIndex]], [[deleteFromSemStore]], the
-    * text index's tables): given a victim predicate, remove matching rows
-    * by COPY-ON-WRITE of ONLY the files that hold any victim, at file
-    * granularity through the checked [[recoverableSwap]] — untouched
-    * files stay byte-identical, moved bytes track victim placement
-    * rather than store size.
-    *
-    * Mechanics: ONE job prices the request AND names the owning files
-    * (a groupBy over `input_file_name()` of victim rows — bounded by the
-    * store's file count); 0 victims → store untouched, no swap. The
-    * owning files resolve by `listStatus` of only the partition
-    * directories that job named. They re-read with `basePath` (partition
-    * provenance preserved) and the store's schema (no inference job),
-    * drop their victims, and write back MAP-ONLY: each task sorts its
-    * rows on `partitionCols ++ clusterCols` and writes one file per
-    * partition directory it read — no cache, no range-sampling job, no
-    * shuffle, and never more files than it replaces (a file larger than
-    * a scan split is the one exception: each split writes its own). The
-    * swap promotes the rewritten files beside the untouched ones. The
-    * shared [[MaintenanceSentinel]] keeps probes away for the swap
-    * window ([[readStore]] refuses); pre-flight refuses stale leftovers.
-    * Returns rows deleted.
-    */
-  private[graft] def deleteRowsFromStore(
-      spark: org.apache.spark.sql.SparkSession,
-      storeDir: String,
-      opName: String,
-      victimCol: org.apache.spark.sql.Column,
-      partitionCols: Seq[String],
-      clusterCols: Seq[String],
-      afterPromote: () => Unit = () => ()): Long =
-    deleteRowsFromStoreBy(spark, storeDir, opName,
-      markVictims = _.where(victimCol),
-      keepSurvivors = _.where(!victimCol),
-      partitionCols = partitionCols, clusterCols = clusterCols,
-      afterPromote = afterPromote)
-
-  /** BULK-victim form of the erasure core: victims arrive as a TABLE of
-    * ids, not a literal list. The `Seq[Long]` entry points build a
-    * literal `isin` whose expression tree is built, optimized, and
-    * task-serialized per job — fine for a handful of ids, but a real
-    * compliance batch is 10⁵–10⁷ ids, and the literal form stops
-    * scaling around 10⁴ (plan-construction time and driver memory both
-    * ∝ |ids|). Here the victim set stays a DataFrame end to end: the
-    * pricing scan marks victims with a BROADCAST LEFT-SEMI join and the
-    * survivor rewrite drops them with the matching LEFT-ANTI — 10⁷
-    * longs broadcast as ~80 MB, well inside executor memory, and the
-    * plan size is CONSTANT in |victims|. `prune` optionally conjoins a
-    * partition-pruning predicate onto the victim-marking scan (e.g. the
-    * did_mod prune when ids map to their own partitions); the survivor
-    * side never prunes — every non-victim row of an affected file must
-    * be rewritten regardless of partition.
-    */
-  private[graft] def deleteRowsFromStoreJoin(
-      spark: org.apache.spark.sql.SparkSession,
-      storeDir: String,
-      opName: String,
-      victims: DataFrame,
-      key: String,
-      partitionCols: Seq[String],
-      clusterCols: Seq[String],
-      prune: org.apache.spark.sql.Column = lit(true),
-      afterPromote: () => Unit = () => ()): Long = {
-    val v = victims.select(col(key)).distinct()
-    deleteRowsFromStoreBy(spark, storeDir, opName,
-      markVictims = df => df.where(prune).join(broadcast(v), Seq(key), "left_semi"),
-      keepSurvivors = df => df.join(broadcast(v), Seq(key), "left_anti"),
-      partitionCols = partitionCols, clusterCols = clusterCols,
-      afterPromote = afterPromote)
-  }
-
-  /** The one erasure-core implementation behind both victim forms:
-    * `markVictims` filters a store read down to victim rows (pricing),
-    * `keepSurvivors` filters affected-file rows down to what survives
-    * (rewrite). Split out so literal-predicate and broadcast-join victim
-    * semantics share every line of the pricing/rewrite/swap protocol.
-    */
-  private def deleteRowsFromStoreBy(
-      spark: org.apache.spark.sql.SparkSession,
-      storeDir: String,
-      opName: String,
-      markVictims: DataFrame => DataFrame,
-      keepSurvivors: DataFrame => DataFrame,
-      partitionCols: Seq[String],
-      clusterCols: Seq[String],
-      afterPromote: () => Unit): Long = {
-    import org.apache.hadoop.fs.Path
-    val storeP = new Path(storeDir)
-    val fs = storeP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val name = storeP.getName
-    val sentinel = new Path(storeDir, MaintenanceSentinel)
-    val trash = new Path(storeP.getParent, s".${name}_delete_old")
-    val stageRoot = new Path(storeP.getParent, s".${name}_delete_stage")
-    for (left <- Seq(sentinel, trash) if fs.exists(left))
-      throw new IllegalStateException(
-        s"$opName: leftover $left from an unfinished swap at $storeDir — " +
-          "recover (restore set-aside files, remove the sentinel) before retrying")
-    // one job: victim count AND owning-file list (≤ store file count).
-    // input_file_name() attaches BEFORE victim marking: a join-based
-    // marker can bring in a second file source (a parquet victim table),
-    // and the expression is only well-defined against one.
-    val store = readStore(spark, storeDir)
-    val perFile = markVictims(store.withColumn("_graft_file", input_file_name()))
-      .groupBy(col("_graft_file").as("f")).agg(count(lit(1)).as("n"))
-      .collect()
-    val deleted = perFile.map(_.getLong(1)).sum
-    if (deleted == 0L) return 0L
-    // resolve the owning files by listing only the partition dirs the
-    // scan named (never a recursive listFiles, which on the local file
-    // system starts a process per file) and matching names — insensitive
-    // to the scan URIs' scheme/authority
-    val depth = partitionCols.length
-    def relDir(dir: Path): String =
-      Iterator.iterate(dir)(_.getParent).take(depth).map(_.getName).toSeq.reverse.mkString("/")
-    def inStore(rel: String) = if (rel.isEmpty) storeP else new Path(storeP, rel)
-    val affected = perFile.map(r => new Path(r.getString(0))).groupBy(f => relDir(f.getParent))
-      .toSeq.flatMap { case (rel, files) =>
-        val names = files.map(_.getName).toSet
-        fs.listStatus(inStore(rel)).map(_.getPath).filter(p => names(p.getName))
-      }
-    require(affected.nonEmpty,
-      s"$opName: victim rows reported but no owning files resolved — " +
-        "store listing and scan disagree; refusing to swap")
-    fs.delete(stageRoot, true) // stale stage: data-free, safe
-    keepSurvivors(spark.read.schema(store.schema)
-        .option("basePath", fs.makeQualified(storeP).toString)
-        .parquet(affected.map(_.toString): _*))
-      .sortWithinPartitions((partitionCols ++ clusterCols).map(col): _*)
-      .write.mode("overwrite").partitionBy(partitionCols: _*)
-      .parquet(stageRoot.toString)
-    if (!fs.exists(stageRoot))
-      throw new IllegalStateException(
-        s"$opName: staged rewrite missing under $stageRoot — store left unchanged")
-    // staged files live `depth` partition levels deep; promote each into
-    // its store slot beside the untouched files (part names uuid-unique)
-    def stagedLeaves(root: Path, lvl: Int): Seq[Path] =
-      if (lvl == 0) Seq(root)
-      else fs.listStatus(root).map(_.getPath).filter(_.getName.contains("=")).toSeq
-        .flatMap(stagedLeaves(_, lvl - 1))
-    val stagedFiles = stagedLeaves(stageRoot, depth).flatMap { d =>
-      fs.listStatus(d).map(_.getPath)
-        .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
-        .map(f => (f, new Path(inStore(relDir(d)), f.getName)))
-    }
-    stagedFiles.foreach { case (_, dst) => fs.mkdirs(dst.getParent) }
-    recoverableSwap(fs, opName,
-      sentinelDir = storeP, trash = trash,
-      asides = affected,
-      promotes = stagedFiles,
-      cleanup = Seq(stageRoot),
-      afterPromote = afterPromote)
-    deleted
-  }
-
-  /** BATCH-TTL RETENTION core shared by the `batch=`-partitioned store
-    * families ([[Similarity.retainIvfStoreBatches]],
-    * [[retainSemStoreBatches]], [[retainCensusStoreBatches]], and all
-    * four `TextIndex.retainTextIndexBatches` tables): drop every
-    * `batch <= cutoff` partition of `storeDir` as
-    * PURE METADATA ([[Layout.dropPartitions]] — no data file read,
-    * planned, or rewritten; survivors byte-untouched). The `batch=-1`
-    * LAYOUT SEED never ages. Refuses while a maintenance swap is in
-    * progress (dropping dirs under a half-swapped store would corrupt
-    * the restore path) and refuses to age out every real batch — an
-    * empty store is unseedable; rebuild instead. `afterDrop` runs once
-    * if anything dropped (cache invalidation). Returns dropped ids.
-    */
-  private[graft] def retainStoreBatches(
-      spark: org.apache.spark.sql.SparkSession,
-      storeDir: String,
-      opName: String,
-      cutoff: Long,
-      afterDrop: () => Unit = () => ()): Seq[Long] = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(storeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sent = new Path(storeDir, MaintenanceSentinel)
-    if (fs.exists(sent))
-      throw new IllegalStateException(
-        s"$opName: maintenance swap in progress at $storeDir " +
-          s"($MaintenanceSentinel present) — retry after it completes")
-    val batches = fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-      .map(_.getPath.getName.stripPrefix("batch=").toLong)
-    require(batches.exists(_ > cutoff),
-      s"$opName: cutoff $cutoff would age out every batch of $storeDir — " +
-        "an empty store is unseedable; rebuild instead")
-    val dropped = Layout.dropPartitions(spark, storeDir, "batch",
-      v => v != "-1" && v.toLong <= cutoff).map(_.toLong)
-    if (dropped.nonEmpty) afterDrop()
-    dropped
-  }
-
   /** Batch-TTL retention for the STORED SEMANTIC-DEDUP index: aged cell
-    * batches drop metadata-only ([[retainStoreBatches]]); the trained
+    * batches drop metadata-only ([[StoredTable.retainStoreBatches]]); the trained
     * centroids are a QUANTIZER — valid over any subset — so probes
     * against the retained store behave exactly as if the aged vectors
     * were never ingested: a new clone of an aged vector passes FREE, a
@@ -1044,7 +639,7 @@ object Dedup {
     * trace of `docIds` from all three index tables — band rows
     * (`bands/batch=/bh_mod=`), signatures and shingles
     * (`sigs|shingles/batch=/did_mod=`) — by file-targeted rewrite
-    * ([[deleteRowsFromStore]]); no re-banding, no re-aggregation, cold
+    * ([[StoredTable.deleteRowsFromStore]]); no re-banding, no re-aggregation, cold
     * files byte-identical. The `did_mod` tables' victim scans prune to the
     * ids' own partitions (did_mod = id % nMods — the probe discipline
     * applied to the delete). Future probes simply never see the victims:
@@ -1070,26 +665,38 @@ object Dedup {
     // did_mod-partitioned tables: conjoin the partition prune so the
     // victim scan reads only the ids' own partitions
     val vcMod = vc && col("did_mod").isin(mods: _*)
-    // the three tables are independent (no cross-table derivation — each
-    // erases its own rows through its own sentinel/swap), so their
-    // pricing scans and rewrites OVERLAP on the writer pool instead of
-    // running back to back; a crash leaving a subset erased is the same
-    // conservative, idempotently-retryable state the serial order left
-    // (victims without band rows can never be matched against)
-    import scala.concurrent.{Await, Future}
-    implicit val ec: scala.concurrent.ExecutionContext = writerPool
-    Seq(("bands", vc, "bh_mod", Seq("band_hash", "doc_id")),
-        ("sigs", vcMod, "did_mod", Seq("doc_id")), ("shingles", vcMod, "did_mod", Seq("doc_id")))
-      .map { case (t, victimCol, mod, cluster) =>
-        Future(deleteRowsFromStore(spark, s"$idxDir/$t", s"deleteFromMinhashIndex($t)",
-          victimCol, Seq("batch", mod), cluster))
-      }
-      .map(Await.result(_, scala.concurrent.duration.Duration.Inf))
-      .apply(1) // doc rows, from the 1-row-per-doc sigs table
+    eraseIndexTables(spark, idxDir) { (t, dir, opName, partitionCols, cluster) =>
+      deleteRowsFromStore(spark, dir, opName, if (t == "bands") vc else vcMod,
+        partitionCols, cluster)
+    }
+  }
+
+  /** The band-index erasure over its three tables, `erase` applying one
+    * victim form to one table `(name, dir, opName, partitionCols,
+    * clusterCols)`. Every table pre-flights before any erases, so a
+    * leftover on one refuses the whole erasure with the store unchanged.
+    * The tables are independent (no cross-table derivation — each erases
+    * its own rows through its own swap), so their pricing scans and
+    * rewrites OVERLAP on the writer pool instead of running back to back;
+    * a crash leaving a subset erased is the same conservative,
+    * idempotently-retryable state the serial order left (victims without
+    * band rows can never be matched against). Returns the doc rows
+    * deleted, from the 1-row-per-doc sigs table.
+    */
+  private def eraseIndexTables(spark: org.apache.spark.sql.SparkSession, idxDir: String)(
+      erase: (String, String, String, Seq[String], Seq[String]) => Long): Long = {
+    val tables = Seq(("bands", "bh_mod", Seq("band_hash", "doc_id")),
+      ("sigs", "did_mod", Seq("doc_id")), ("shingles", "did_mod", Seq("doc_id")))
+    tables.foreach { case (t, _, _) =>
+      StoredTable.preflightErasure(spark, s"$idxDir/$t", s"deleteFromMinhashIndex($t)")
+    }
+    StoredTable.inParallel(tables.map { case (t, mod, cluster) =>
+      () => erase(t, s"$idxDir/$t", s"deleteFromMinhashIndex($t)", Seq("batch", mod), cluster)
+    }).apply(1)
   }
 
   /** BULK-victim form of the band-index erasure: the victim set is a
-    * TABLE, applied through [[deleteRowsFromStoreJoin]] (broadcast
+    * TABLE, applied through [[StoredTable.deleteRowsFromStoreJoin]] (broadcast
     * semi/anti — plan size constant in |victims|; the literal form
     * above stops scaling around 10⁴ ids). The did_mod partition prune
     * survives: the victims' own partitions derive from a bounded
@@ -1109,17 +716,10 @@ object Dedup {
         .distinct().as[Int].collect().sorted // bounded: ≤ nMods ints
         .toIndexedSeq.map(Integer.valueOf)
       val modPrune = col("did_mod").isin(mods: _*)
-      // three independent tables — overlap exactly as the literal form
-      import scala.concurrent.{Await, Future}
-      implicit val ec: scala.concurrent.ExecutionContext = writerPool
-      Seq(("bands", lit(true), "bh_mod", Seq("band_hash", "doc_id")),
-          ("sigs", modPrune, "did_mod", Seq("doc_id")), ("shingles", modPrune, "did_mod", Seq("doc_id")))
-        .map { case (t, prune, mod, cluster) =>
-          Future(deleteRowsFromStoreJoin(spark, s"$idxDir/$t", s"deleteFromMinhashIndex($t)",
-            v, "doc_id", Seq("batch", mod), cluster, prune = prune))
-        }
-        .map(Await.result(_, scala.concurrent.duration.Duration.Inf))
-        .apply(1) // doc rows, from the 1-row-per-doc sigs table
+      eraseIndexTables(spark, idxDir) { (t, dir, opName, partitionCols, cluster) =>
+        deleteRowsFromStoreJoin(spark, dir, opName, v, "doc_id", partitionCols, cluster,
+          prune = if (t == "bands") lit(true) else modPrune)
+      }
     } finally v.unpersist()
   }
 
@@ -1178,7 +778,7 @@ object Dedup {
   }
 
   /** Bulk-victim form of the sem-store erasure (victims as a table —
-    * see [[deleteRowsFromStoreJoin]] for why literal `isin` stops
+    * see [[StoredTable.deleteRowsFromStoreJoin]] for why literal `isin` stops
     * scaling at compliance-batch sizes).
     */
   def deleteFromSemStore(
@@ -1218,14 +818,7 @@ object Dedup {
     val nm = CensusManifest.checkAndNMods(censusPath, width)
     val root = new Path(censusPath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val name = root.getName
-    val sentinel = new Path(censusPath, MaintenanceSentinel)
-    val trash = new Path(root.getParent, s".${name}_delete_old")
-    val stageRoot = new Path(root.getParent, s".${name}_delete_stage")
-    for (left <- Seq(sentinel, trash) if fs.exists(left))
-      throw new IllegalStateException(
-        s"deleteFromCensusStore: leftover $left from an unfinished swap at " +
-          s"$censusPath — recover before retrying")
+    val (swap, stageRoot) = StoredTable.preflightBeside(fs, root, "deleteFromCensusStore", "delete")
     val decs = windowTable(victimDocs, width)
       .select(col("doc_id"), col("win")).distinct()
       .groupBy(col("win")).agg(count(lit(1)).as("dec"))
@@ -1258,7 +851,6 @@ object Dedup {
         (col("nd") - coalesce(col("dec"), lit(0L))).as("n_docs"),
         col("win_mod"))
       .where(col("n_docs") > 0)
-    fs.delete(stageRoot, true) // stale stage: data-free, safe
     val affectedBytes = affectedDirs
       .map(d => fs.getContentSummary(d).getLength).sum
     val slices = math.max(
@@ -1270,10 +862,7 @@ object Dedup {
       .write.mode("overwrite").partitionBy("win_mod")
       .parquet(stageRoot.toString)
     agg.unpersist(); decs.unpersist()
-    if (!fs.exists(stageRoot))
-      throw new IllegalStateException(
-        s"deleteFromCensusStore: staged rewrite missing under $stageRoot — " +
-          "store left unchanged")
+    swap.verify(stageRoot)
     // streamed layout: consolidated slices promote into the NEWEST batch
     // dir (scoped compaction); flat layout promotes into the root
     val targetBase =
@@ -1285,11 +874,7 @@ object Dedup {
       .filter(d => d.isDirectory && d.getPath.getName.startsWith("win_mod=")).toSeq
     val promotes = stagedDirs.map(d =>
       (d.getPath, new Path(targetBase, d.getPath.getName)))
-    recoverableSwap(fs, "deleteFromCensusStore",
-      sentinelDir = root, trash = trash,
-      asides = affectedDirs,
-      promotes = promotes,
-      cleanup = Seq(stageRoot))
+    swap.commit(asides = affectedDirs, promotes = promotes, cleanup = Seq(stageRoot))
     erased
   }
 
@@ -1300,7 +885,7 @@ object Dedup {
     * run sizes the knob to the batch (the upsertUserTotals discipline).
     * Two concurrent runs in one session could otherwise interleave
     * set/restore and clobber each other's setting or leak the override
-    * session-wide ([[readStoreLock]]'s hazard class). Because the knob is
+    * session-wide ([[StoredTable.readStore]]'s lock, same hazard class). Because the knob is
     * session-global it must stay set for the run's whole planning life, so
     * the lock is held for the full run: concurrent streaming dedup runs on
     * ONE session serialize — production gives each pipeline its own
@@ -1553,6 +1138,32 @@ object Dedup {
       scanProbe(s2, idxDir, batchId, bIdx, bBands, perms, bands, minEstJaccard, verifyJaccard)
   }
 
+  /** Batch `batchId`'s three index appends (bands, sigs, shingles) as
+    * independent writes for [[StoredTable.inParallel]]. coalesce(1): a
+    * micro-batch's index rows are one small file per mod partition —
+    * without it every shuffle partition emits a file per mod and the
+    * store drowns in footers. At production batch sizes, size output
+    * partitions to batch bytes instead.
+    */
+  private def indexAppends(idxDir: String, batchId: Long, appendBands: DataFrame,
+                           bIdx: DataFrame): Seq[() => Unit] = Seq(
+    () => appendBands
+      .withColumn("bh_mod", pmod(col("band_hash"), lit(storeNMods(idxDir))).cast("int"))
+      .select(col("band"), col("band_hash"), col("doc_id"), col("bh_mod"))
+      .coalesce(1)
+      .write.mode("overwrite").partitionBy("bh_mod")
+      .parquet(s"${bandsDir(idxDir)}/batch=$batchId"),
+    () => bIdx.select(col("doc_id"), col("sig"))
+      .withColumn("did_mod", pmod(col("doc_id"), lit(storeNMods(idxDir))).cast("int"))
+      .coalesce(1)
+      .write.mode("overwrite").partitionBy("did_mod")
+      .parquet(s"${sigsDir(idxDir)}/batch=$batchId"),
+    () => bIdx.select(col("doc_id"), col("sh"))
+      .withColumn("did_mod", pmod(col("doc_id"), lit(storeNMods(idxDir))).cast("int"))
+      .coalesce(1)
+      .write.mode("overwrite").partitionBy("did_mod")
+      .parquet(s"${shsDir(idxDir)}/batch=$batchId"))
+
   /** One micro-batch of the streaming dedup — REPLAY-IDEMPOTENT: the
     * batch's accepted, band-index and doc-index rows land in its OWN
     * `batch=<id>` partitions with overwrite, so a checkpoint replay
@@ -1591,41 +1202,11 @@ object Dedup {
     // jobs so the micro-batch pays the slowest write, not the sum (the
     // partitioned index writes each commit NMods small files; serially
     // they dominated the batch)
-    import scala.concurrent.{Await, Future}
-    implicit val ec: scala.concurrent.ExecutionContext = writerPool
-    val wAcc = Future {
-      batch.join(broadcast(drops), Seq("doc_id"), "left_anti") // drops <= batch
+    StoredTable.inParallel(Seq(
+      () => batch.join(broadcast(drops), Seq("doc_id"), "left_anti") // drops <= batch
         .select(keepCols.map(col): _*)
-        .write.mode("overwrite").parquet(s"$accDir/batch=$batchId")
-    }
-    // coalesce(1): a micro-batch's index rows are one small file per mod
-    // partition — without it every shuffle partition emits a file per mod
-    // and the store drowns in footers. At production batch sizes, size
-    // output partitions to batch bytes instead.
-    val wBands = Future {
-      appendBands
-        .withColumn("bh_mod", pmod(col("band_hash"), lit(storeNMods(idxDir))).cast("int"))
-        .select(col("band"), col("band_hash"), col("doc_id"), col("bh_mod"))
-        .coalesce(1)
-        .write.mode("overwrite").partitionBy("bh_mod")
-        .parquet(s"${bandsDir(idxDir)}/batch=$batchId")
-    }
-    val wSigs = Future {
-      bIdx.select(col("doc_id"), col("sig"))
-        .withColumn("did_mod", pmod(col("doc_id"), lit(storeNMods(idxDir))).cast("int"))
-        .coalesce(1)
-        .write.mode("overwrite").partitionBy("did_mod")
-        .parquet(s"${sigsDir(idxDir)}/batch=$batchId")
-    }
-    val wShs = Future {
-      bIdx.select(col("doc_id"), col("sh"))
-        .withColumn("did_mod", pmod(col("doc_id"), lit(storeNMods(idxDir))).cast("int"))
-        .coalesce(1)
-        .write.mode("overwrite").partitionBy("did_mod")
-        .parquet(s"${shsDir(idxDir)}/batch=$batchId")
-    }
-    Seq(wAcc, wBands, wSigs, wShs)
-      .foreach(Await.result(_, scala.concurrent.duration.Duration.Inf))
+        .write.mode("overwrite").parquet(s"$accDir/batch=$batchId")) ++
+      indexAppends(idxDir, batchId, appendBands, bIdx))
     lap("writes")
     cleanup()
     bBands.unpersist()
@@ -1644,38 +1225,14 @@ object Dedup {
     * rows and probes with `batchId > upTo` see exactly the same index —
     * spec-asserted.
     *
-    * Rewrite shape: PARALLEL and SIZE-TARGETED. Rows hash-repartition by
-    * (mod, slice) — `slice` splits each mod's rows into
-    * ⌈store_bytes / (nMods × targetFileBytes)⌉ pieces — so the rewrite
-    * runs one task per output file (a 100 TB index compacts across the
-    * cluster, not through one executor) and output files track
-    * `targetFileBytes` regardless of store size. The three tables are
-    * independent, so they compact CONCURRENTLY on the writer pool, each
-    * through its own swap, and each opens its store without a
-    * schema job ([[readStore]]).
-    *
-    * Swap protocol — RECOVERABLE, every `FileSystem` boolean checked:
-    * stage → verify the stage exists → raise the [[MaintenanceSentinel]]
-    * (exclusive create: a racing maintenance op fails here, and
-    * [[readStore]] — every probe's read path — refuses for the whole swap
-    * window, closing the silent-truncated-read window a crash between
-    * move-aside and promote would otherwise open) → rename old partitions
-    * ASIDE into a hidden `.compact_old` dir (dot-prefixed: invisible to
-    * partition discovery, restorable) → promote the stage to
-    * `batch=upTo` → drop the sentinel → delete the set-aside rows. A
-    * failed move-aside or promote renames the moved partitions back,
-    * clears sentinel and set-aside dir, and throws with the store in its
-    * pre-compaction state; a failed final cleanup throws naming the
-    * leftover dir while the store stays CONSISTENT (the hidden dir is
-    * never read). No step deletes data before its replacement is in
-    * place. Leftovers of a CRASHED swap (`.compact_old` or the sentinel
-    * already present) fail the next attempt FAST before any move-aside —
-    * `fs.mkdirs` returns true on an existing dir and an HDFS rename into
-    * an existing dir NESTS the source, so retrying over stale state would
-    * record wrong (orig, aside) pairs and restore/delete the wrong
-    * partitions. At object-store scale the promote step becomes a
-    * manifest commit (`Layout.commitVersion`'s protocol) rather than a
-    * directory rename.
+    * Each table compacts through [[StoredTable.compactStore]]: a
+    * parallel, size-targeted rewrite (one task per output file, so a
+    * 100 TB index compacts across the cluster, not through one executor)
+    * promoted by the store-mutation protocol documented on
+    * [[StoredTable]]. The three tables are independent, so they compact
+    * CONCURRENTLY on the writer pool, each through its own swap. At
+    * object-store scale the promote step becomes a manifest commit
+    * (`Layout.commitVersion`'s protocol) rather than a directory rename.
     */
   def compactIndex(
       spark: org.apache.spark.sql.SparkSession,
@@ -1685,77 +1242,12 @@ object Dedup {
     val nm = storeNMods(idxDir)
     // three independent tables, each behind its own sentinel and swap —
     // they compact concurrently, as [[deleteFromMinhashIndex]] erases them
-    import scala.concurrent.{Await, Future}
-    implicit val ec: scala.concurrent.ExecutionContext = writerPool
-    Seq(bandsDir(idxDir) -> "bh_mod", sigsDir(idxDir) -> "did_mod", shsDir(idxDir) -> "did_mod")
-      .map { case (dir, modCol) =>
-        Future(compactStore(spark, dir, modCol, "doc_id", nm, upTo, targetFileBytes))
-      }
-      .foreach(Await.result(_, scala.concurrent.duration.Duration.Inf))
-  }
-
-  /** Compact ONE batch-partitioned, hash-fanned-out store table — the
-    * maintenance op shared by every store this file owns (band/doc index
-    * via [[compactIndex]]; census deltas; semantic cell assignments):
-    * rewrite every `batch <= upTo` partition into one consolidated
-    * `batch=upTo` partition under the same `modCol` fanout, with the
-    * parallel size-targeted rewrite + recoverable checked swap documented
-    * on [[compactIndex]]. `saltCol` is any well-distributed column of the
-    * table (doc_id / vec_id / win) used to split oversized mods into
-    * size-budgeted slices.
-    */
-  def compactStore(
-      spark: org.apache.spark.sql.SparkSession,
-      storeDir: String,
-      modCol: String,
-      saltCol: String,
-      nMods: Int,
-      upTo: Long,
-      targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    val nm = nMods
-    val fs = new Path(storeDir).getFileSystem(conf)
-    val sentinel = new Path(storeDir, MaintenanceSentinel)
-    val trash = new Path(storeDir, ".compact_old")
-    // fail FAST on leftovers of a crashed swap — retrying over stale state
-    // would record wrong (orig, aside) pairs (see the swap-protocol doc)
-    for (left <- Seq(sentinel, trash) if fs.exists(left))
-      throw new IllegalStateException(
-        s"compactStore: leftover $left from an unfinished swap at $storeDir — " +
-          "recover (restore any set-aside partitions from .compact_old, remove " +
-          "the sentinel) before retrying")
-    val olds = fs.listStatus(new Path(storeDir)).filter { st =>
-      val name = st.getPath.getName
-      name.startsWith("batch=") && name.stripPrefix("batch=").toLong <= upTo
-    }
-    val totalBytes = olds.map(st => fs.getContentSummary(st.getPath).getLength).sum
-    val slices = math.max(1L,
-      (totalBytes + nm.toLong * targetFileBytes - 1) / (nm.toLong * targetFileBytes)).toInt
-    val staged = s"$storeDir.compact_stage"
-    val rows = readStore(spark, storeDir)
-      .where(col("batch") <= upTo)
-      .drop("batch")
-    // an all-empty store compacts to a schema-only file in mod 0 (the
-    // seed layout) — a partitionBy write of zero rows emits no files at
-    // all and would leave the store unreadable
-    if (rows.isEmpty)
-      rows.drop(modCol).coalesce(1)
-        .write.mode("overwrite").parquet(s"$staged/$modCol=0")
-    else
-      rows
-        .repartition(nm * slices, col(modCol),
-          pmod(xxhash64(col(saltCol)), lit(slices)))
-        .write.mode("overwrite").partitionBy(modCol).parquet(staged)
-    val stagedP = new Path(staged)
-    if (!fs.exists(stagedP))
-      throw new IllegalStateException(
-        s"compactStore: staged rewrite missing at $staged — store left unchanged")
-    recoverableSwap(fs, "compactStore",
-      sentinelDir = new Path(storeDir), trash = trash,
-      asides = olds.map(_.getPath).toSeq,
-      promotes = Seq((stagedP, new Path(s"$storeDir/batch=$upTo"))),
-      cleanup = Nil)
+    StoredTable.inParallel(
+      Seq(bandsDir(idxDir) -> "bh_mod", sigsDir(idxDir) -> "did_mod", shsDir(idxDir) -> "did_mod")
+        .map { case (dir, modCol) =>
+          () => StoredTable.compactStore(spark, dir, modCol, "doc_id", nm, upTo, targetFileBytes)
+        })
+    ()
   }
 
   /** Batch-incremental dedup against a STORED pre-banded index — the
@@ -1781,32 +1273,7 @@ object Dedup {
     val bBands = bandRows(bIdx, perms, bands).persist()
     val (drops, appendBands, cleanup) = adaptiveProbe(spark, idxDir, batchId,
       bIdx, bBands, perms, bands, minEstJaccard, verifyJaccard)
-    import scala.concurrent.{Await, Future}
-    implicit val ec: scala.concurrent.ExecutionContext = writerPool
-    val wBands = Future {
-      appendBands
-        .withColumn("bh_mod", pmod(col("band_hash"), lit(storeNMods(idxDir))).cast("int"))
-        .select(col("band"), col("band_hash"), col("doc_id"), col("bh_mod"))
-        .coalesce(1)
-        .write.mode("overwrite").partitionBy("bh_mod")
-        .parquet(s"${bandsDir(idxDir)}/batch=$batchId")
-    }
-    val wSigs = Future {
-      bIdx.select(col("doc_id"), col("sig"))
-        .withColumn("did_mod", pmod(col("doc_id"), lit(storeNMods(idxDir))).cast("int"))
-        .coalesce(1)
-        .write.mode("overwrite").partitionBy("did_mod")
-        .parquet(s"${sigsDir(idxDir)}/batch=$batchId")
-    }
-    val wShs = Future {
-      bIdx.select(col("doc_id"), col("sh"))
-        .withColumn("did_mod", pmod(col("doc_id"), lit(storeNMods(idxDir))).cast("int"))
-        .coalesce(1)
-        .write.mode("overwrite").partitionBy("did_mod")
-        .parquet(s"${shsDir(idxDir)}/batch=$batchId")
-    }
-    Seq(wBands, wSigs, wShs)
-      .foreach(Await.result(_, scala.concurrent.duration.Duration.Inf))
+    StoredTable.inParallel(indexAppends(idxDir, batchId, appendBands, bIdx))
     cleanup()
     bBands.unpersist()
     bIdx.unpersist()
@@ -2768,17 +2235,13 @@ object Dedup {
     *      pair space — PRESERVING each row's `batch` provenance, so
     *      probe/replay semantics (`batch < batchId`, own-partition
     *      overwrite) are untouched. Requantize re-LABELS cells;
-    *      [[compactStore]] collapses batches — orthogonal maintenance ops
+    *      [[StoredTable.compactStore]] collapses batches — orthogonal maintenance ops
     *      that compose;
-    *   3. SWAP cells + centroids via the recoverable checked protocol
-    *      ([[compactStore]]'s): verify stage → raise the
-    *      [[MaintenanceSentinel]] in the cells dir (readStore — every
-    *      probe — refuses for the window) → move batch partitions and the
-    *      centroid artifact aside → promote the stage → bump the manifest
-    *      to `newNlist` → invalidate the JVM's centroid cache for the
-    *      live path → drop the sentinel → delete the set-aside rows.
-    *      A failed move/promote restores the original store; stale
-    *      leftovers fail the next attempt fast.
+    *   3. SWAP cells + centroids through the store-mutation protocol
+    *      ([[StoredTable]]; sentinel in the cells dir): batch partitions
+    *      and the centroid artifact move aside, the stage promotes, and
+    *      the manifest bumps to `newNlist` and the JVM's centroid cache
+    *      for the live path invalidates before the sentinel drops.
     *
     * Single-writer contract (the same one compaction carries): no
     * concurrent probes from OTHER JVMs during the swap window — in-JVM
@@ -2797,15 +2260,9 @@ object Dedup {
     val cellsDir = s"$storeDir/cells"
     val centDir = s"$storeDir/centroids"
     val fs = new Path(storeDir).getFileSystem(conf)
-    val sentinel = new Path(cellsDir, MaintenanceSentinel)
-    val trash = new Path(storeDir, ".requant_old")
-    for (left <- Seq(sentinel, trash) if fs.exists(left))
-      throw new IllegalStateException(
-        s"requantizeSemStore: leftover $left from an unfinished swap at $storeDir — " +
-          "recover (restore set-aside partitions/centroids from .requant_old, " +
-          "remove the sentinel) before retrying")
     val stageRoot = s"$storeDir/.requant_stage"
-    fs.delete(new Path(stageRoot), true) // stale stage from a failed run: data-free, safe to clear
+    val swap = StoredTable.preflight(fs, "requantizeSemStore", new Path(cellsDir),
+      new Path(storeDir, ".requant_old"), new Path(stageRoot))
     // SQ8 store: reconstruct qvec*qscale (within half a quantization step
     // per component) for training + re-assignment; the codes themselves
     // rewrite through LOSSLESSLY — maintenance never re-quantizes
@@ -2844,9 +2301,7 @@ object Dedup {
     rows.unpersist()
     val stagedCells = new Path(s"$stageRoot/cells")
     val stagedCent = new Path(s"$stageRoot/centroids")
-    if (!fs.exists(stagedCells) || !fs.exists(stagedCent))
-      throw new IllegalStateException(
-        s"requantizeSemStore: staged rewrite missing under $stageRoot — store left unchanged")
+    swap.verify(stagedCells, stagedCent)
     // the cells dir itself stays put (it holds the sentinel readers
     // watch); its batch partitions move aside individually, and the
     // staged batch partitions + centroid artifact promote into place
@@ -2854,8 +2309,7 @@ object Dedup {
       .filter(_.getPath.getName.startsWith("batch=")).map(_.getPath).toSeq
     val stagedParts = fs.listStatus(stagedCells)
       .filter(_.getPath.getName.startsWith("batch=")).map(_.getPath).toSeq
-    recoverableSwap(fs, "requantizeSemStore",
-      sentinelDir = new Path(cellsDir), trash = trash,
+    swap.commit(
       asides = oldParts :+ new Path(centDir),
       promotes = stagedParts.map(p => (p, new Path(cellsDir, p.getName))) :+
         ((stagedCent, new Path(centDir))),

@@ -30,7 +30,7 @@ import org.apache.spark.sql.types._
   *     fold everything but the newest batch (the incremental-append
   *     head stays unfolded, so a hot appender never races the fold's
   *     swap window). Composition stays conservative exactly as
-  *     [[Dedup.retainStoreBatches]]'s scaladoc requires: the
+  *     [[StoredTable.retainStoreBatches]]'s scaladoc requires: the
   *     recommended upTo is younger than any recommended cutoff only
   *     when retention fires too, and the runner executes retention
   *     FIRST.
@@ -101,7 +101,7 @@ object Maintenance {
                                ttlBatches: Int, maxLiveBatches: Int): DataFrame = {
     // O(batches) bounded collect — the planner's declared input size.
     // batch is a DISCOVERED partition column (int for small ids): cast.
-    val batchDocs = Dedup.readStore(spark, s"$idxDir/stats")
+    val batchDocs = StoredTable.readStore(spark, s"$idxDir/stats")
       .groupBy(col("batch").cast("long").as("batch"))
       .agg(sum(col("n_docs")).cast("long").as("n_docs"))
       .collect()
@@ -144,7 +144,7 @@ object Maintenance {
     */
   def planIvfStoreMaintenance(spark: SparkSession, workDir: String,
                               ttlBatches: Int, maxLiveBatches: Int): DataFrame = {
-    val batchDocs = Dedup.readStore(spark, s"$workDir/cells")
+    val batchDocs = StoredTable.readStore(spark, s"$workDir/cells")
       .where(col("batch") =!= -1L)
       .groupBy(col("batch").cast("long").as("batch"))
       .agg(count(lit(1)).as("n_rows"))

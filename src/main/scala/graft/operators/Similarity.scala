@@ -959,13 +959,13 @@ object Similarity {
     *
     * Sentinel/drop-all refusals, the never-aging `batch=-1` seed, and
     * the metadata-only drop all come from the shared retention core
-    * ([[Dedup.retainStoreBatches]]); the index caches invalidate so
+    * ([[StoredTable.retainStoreBatches]]); the index caches invalidate so
     * priced selectivities re-derive against the shrunken store. Returns
     * the dropped batch ids.
     */
   def retainIvfStoreBatches(spark: org.apache.spark.sql.SparkSession,
                             workDir: String, cutoff: Long): Seq[Long] =
-    Dedup.retainStoreBatches(spark, s"$workDir/cells",
+    StoredTable.retainStoreBatches(spark, s"$workDir/cells",
       "retainIvfStoreBatches", cutoff,
       () => invalidateIvfIndexDurably(spark, s"$workDir/ivf_index"))
 
@@ -994,7 +994,7 @@ object Similarity {
     * one cell-clustered write (`repartitionByRange(cell)` + sorted — the
     * compacted layout, so probes prune parquet row groups from the first
     * scan). Lands under `cells/batch=0`, the same layout
-    * [[Dedup.readStore]] and the stored probes serve.
+    * [[StoredTable.readStore]] and the stored probes serve.
     */
   def seedIvfStore(data: DataFrame, workDir: String): Unit = {
     val spark = data.sparkSession
@@ -1113,7 +1113,7 @@ object Similarity {
     seedLayout(static.withColumn("cell", lit(0))).limit(0)
       .write.mode("overwrite").parquet(s"$dataDir/batch=-1")
     var storeRows =
-      if (targetCellRows < Int.MaxValue) Dedup.readStore(spark, dataDir).count() else 0L
+      if (targetCellRows < Int.MaxValue) StoredTable.readStore(spark, dataDir).count() else 0L
     val batchCounts = scala.collection.mutable.Map.empty[Long, Long]
     val q = spark.readStream
       .schema(static.schema)
@@ -1135,7 +1135,7 @@ object Similarity {
         // swap of existing files touches. One metadata existence check
         // per trigger.
         def externalSwap(): Boolean =
-          fs.exists(new Path(dataDir, Dedup.MaintenanceSentinel))
+          StoredTable.swapInProgress(fs, dataDir)
         // RIGHT-TO-ERASURE SLOT, first so compliance never queues behind
         // growth work: requests enqueued by [[enqueueIvfErasure]] drain
         // HERE, in the between-batch window where the stream IS the
@@ -1173,7 +1173,7 @@ object Similarity {
       }
       .start()
     try q.processAllAvailable() finally q.stop()
-    Dedup.readStore(spark, dataDir).drop("batch")
+    StoredTable.readStore(spark, dataDir).drop("batch")
   }
 
   /** Name of the pending-erasure queue directory under an IVF store's
@@ -1352,7 +1352,7 @@ object Similarity {
       rerank: Int = 10): DataFrame = {
     val centroids = loadIvfIndex(spark, s"$workDir/ivf_index")
     val books = loadPqIndex(spark, s"$workDir/pq_index")
-    val stored = Dedup.readStore(spark, s"$workDir/cells").drop("batch")
+    val stored = StoredTable.readStore(spark, s"$workDir/cells").drop("batch")
     val probeRows = rerankWith.where(col("vec_id") === probeId)
       .select(col("embedding").cast("array<double>")).collect()
     require(probeRows.nonEmpty, s"probe vec_id=$probeId not found in rerankWith")
@@ -1407,7 +1407,7 @@ object Similarity {
     import spark.implicits._
     val centroids = loadIvfIndex(spark, s"$workDir/ivf_index")
     val books = loadPqIndex(spark, s"$workDir/pq_index")
-    val stored = Dedup.readStore(spark, s"$workDir/cells").drop("batch")
+    val stored = StoredTable.readStore(spark, s"$workDir/cells").drop("batch")
     // bounded collect: the declared probe set's float vectors
     val probeVecs: Map[Long, Array[Double]] = probes
       .select(col("vec_id"), col("embedding").cast("array<double>"))
@@ -1504,7 +1504,7 @@ object Similarity {
       rerank: Int = 10): DataFrame = {
     val idxPath = s"$workDir/ivf_index"
     val nlist = loadIvfIndex(spark, idxPath).length
-    val stored = Dedup.readStore(spark, s"$workDir/cells").drop("batch")
+    val stored = StoredTable.readStore(spark, s"$workDir/cells").drop("batch")
     val (total, qual) = pricedSelectivity(stored, idxPath, rowFilter)
     require(qual > 0, "ivfPqProbeSetTopKStoredFiltered: no store rows qualify")
     val inv = total.toDouble / qual
@@ -1531,14 +1531,10 @@ object Similarity {
     *      parallel size-targeted job, PRESERVING `batch` provenance so the
     *      ingest's replay semantics (own-partition overwrite) are
     *      untouched;
-    *   3. swap cells + index via the recoverable checked protocol
-    *      (`Dedup.compactStore`'s): verify stage → raise the
-    *      `MaintenanceSentinel` in the cells dir (`Dedup.readStore`
-    *      refuses for the window) → move batch partitions and the index
-    *      artifact aside → promote → invalidate the JVM's index cache →
-    *      drop the sentinel → delete set-aside rows. A failed move/promote
-    *      restores the original store; stale leftovers fail the next
-    *      attempt fast.
+    *   3. swap cells + index through the store-mutation protocol
+    *      ([[StoredTable]]; sentinel in the cells dir): batch partitions
+    *      and the index artifact move aside, the stage promotes, and the
+    *      JVM's index cache invalidates before the sentinel drops.
     *
     * Single-writer contract as with every store maintenance op: no
     * concurrent probes from OTHER JVMs during the swap window.
@@ -1554,16 +1550,10 @@ object Similarity {
     val cellsDir = s"$workDir/cells"
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(workDir).getFileSystem(conf)
-    val sentinel = new Path(cellsDir, Dedup.MaintenanceSentinel)
-    val trash = new Path(workDir, ".requant_old")
-    for (left <- Seq(sentinel, trash) if fs.exists(left))
-      throw new IllegalStateException(
-        s"requantizeIvfStore: leftover $left from an unfinished swap at $workDir — " +
-          "recover (restore set-aside partitions/index from .requant_old, " +
-          "remove the sentinel) before retrying")
     val stageRoot = s"$workDir/.requant_stage"
-    fs.delete(new Path(stageRoot), true) // stale stage from a failed run: data-free, safe to clear
-    val stored = Dedup.readStore(spark, cellsDir).drop("cell")
+    val swap = StoredTable.preflight(fs, "requantizeIvfStore", new Path(cellsDir),
+      new Path(workDir, ".requant_old"), new Path(stageRoot))
+    val stored = StoredTable.readStore(spark, cellsDir).drop("cell")
     val (reconstructed, coded) = withReconstructedEmbedding(spark, workDir, stored)
     val rows = reconstructed
       .persist() // train sample + emptiness check + rewrite
@@ -1614,9 +1604,7 @@ object Similarity {
     rows.unpersist()
     val stagedCells = new Path(s"$stageRoot/cells")
     val stagedIdx = new Path(s"$stageRoot/ivf_index")
-    if (!fs.exists(stagedCells) || !fs.exists(stagedIdx))
-      throw new IllegalStateException(
-        s"requantizeIvfStore: staged rewrite missing under $stageRoot — store left unchanged")
+    swap.verify(stagedCells, stagedIdx)
     // the cells dir itself stays put (it holds the sentinel readers
     // watch); its batch partitions move aside individually, the staged
     // batch partitions + index artifact promote into place
@@ -1624,8 +1612,7 @@ object Similarity {
       .filter(_.getPath.getName.startsWith("batch=")).map(_.getPath).toSeq
     val stagedParts = fs.listStatus(stagedCells)
       .filter(_.getPath.getName.startsWith("batch=")).map(_.getPath).toSeq
-    Dedup.recoverableSwap(fs, "requantizeIvfStore",
-      sentinelDir = new Path(cellsDir), trash = trash,
+    swap.commit(
       asides = oldParts :+ new Path(idxDir),
       promotes = stagedParts.map(p => (p, new Path(cellsDir, p.getName))) :+
         ((stagedIdx, new Path(idxDir))),
@@ -1634,7 +1621,7 @@ object Similarity {
   }
 
   /** COMPACTION for the streamed ANN store — the file-count maintenance
-    * op (`Dedup.compactStore`'s role) for the flat `cells/batch=<id>`
+    * op ([[StoredTable.compactStore]]'s role) for the flat `cells/batch=<id>`
     * layout, so the ANN store has the full maintenance pair (compaction +
     * [[requantizeIvfStore]]) like every other stored index. Collapses
     * every `batch <= upTo` into ONE `batch=upTo` partition of
@@ -1644,10 +1631,12 @@ object Similarity {
     * (a `partitionBy(cell)` dir per cell would mix layouts with the
     * flat per-batch appends and break discovery; clustering gets the
     * same skip without touching the append path). Works unchanged on
-    * the SQ8 code layout (the payload columns pass through). Same
-    * contract as compactStore: only compact batches older than any
-    * replayable checkpoint horizon; single writer during the swap
-    * (probes refuse on the sentinel).
+    * the SQ8 code layout (the payload columns pass through). A range
+    * holding no rows compacts to one schema-only file. Same contract as
+    * compactStore: only compact batches older than any replayable
+    * checkpoint horizon; single writer during the swap, which runs the
+    * store-mutation protocol of [[StoredTable]] (probes refuse on the
+    * sentinel).
     *
     * ERASURE FOLDS IN through `dropIds`: a bulk scattered victim set
     * (the compliance batch case) saturates [[deleteFromIvfStore]]'s
@@ -1703,24 +1692,18 @@ object Similarity {
     import org.apache.hadoop.fs.Path
     val cellsDir = s"$workDir/cells"
     val fs = new Path(workDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sentinel = new Path(cellsDir, Dedup.MaintenanceSentinel)
-    val trash = new Path(workDir, ".compact_old")
-    for (left <- Seq(sentinel, trash) if fs.exists(left))
-      throw new IllegalStateException(
-        s"compactIvfStore: leftover $left from an unfinished swap at $workDir — " +
-          "recover (restore set-aside partitions from .compact_old, remove the " +
-          "sentinel) before retrying")
+    val staged = new Path(workDir, ".compact_stage")
+    val swap = StoredTable.preflight(fs, "compactIvfStore", new Path(cellsDir),
+      new Path(workDir, ".compact_old"), staged)
     val olds = fs.listStatus(new Path(cellsDir)).filter { st =>
       val name = st.getPath.getName
       name.startsWith("batch=") && name.stripPrefix("batch=").toLong <= upTo
     }
     val totalBytes = olds.map(st => fs.getContentSummary(st.getPath).getLength).sum
     val slices = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val staged = s"$workDir/.compact_stage"
-    fs.delete(new Path(staged), true)
-    val store = Dedup.readStore(spark, cellsDir)
+    val store = StoredTable.readStore(spark, cellsDir)
     // victim marking/dropping via broadcast semi/anti — constant-size
-    // plan in |victims| (as in Dedup.deleteRowsFromStoreJoin)
+    // plan in |victims| (as in StoredTable.deleteRowsFromStoreJoin)
     def markV(df: DataFrame): DataFrame = victims match {
       case Some(v) => df.join(broadcast(v), Seq("vec_id"), "left_semi")
       case None    => df.limit(0)
@@ -1740,29 +1723,20 @@ object Similarity {
           "erasure; widen upTo past their batches or use deleteFromIvfStore")
       markV(store.where(col("batch") <= upTo)).count()
     }
-    // persisted across the emptiness probe AND the range-staged write:
-    // the range sampler would otherwise re-run the store scan + victim
-    // anti-join a second time, and the isEmpty probe is a third pass
-    // without the cache
+    // persisted across the range-staged write: the range sampler would
+    // otherwise re-run the store scan + victim anti-join a second time
     val rows = dropV(store.where(col("batch") <= upTo)).drop("batch").persist()
-    // an all-empty store compacts to a schema-only file (a ranged write of
-    // zero rows emits no files and would leave the store unreadable)
-    try {
-      if (rows.isEmpty)
-        rows.coalesce(1).write.mode("overwrite").parquet(staged)
-      else
-        rows.repartitionByRange(slices, col("cell"), col("vec_id"))
-          .sortWithinPartitions("cell", "vec_id")
-          .write.mode("overwrite").parquet(staged)
-    } finally { rows.unpersist(); () }
-    val stagedP = new Path(staged)
-    if (!fs.exists(stagedP))
-      throw new IllegalStateException(
-        s"compactIvfStore: staged rewrite missing at $staged — store left unchanged")
-    Dedup.recoverableSwap(fs, "compactIvfStore",
-      sentinelDir = new Path(cellsDir), trash = trash,
+    // a range of zero rows still stages one schema-only file (Spark's
+    // first write task always writes one in an unpartitioned write), so
+    // the compacted store stays readable
+    try rows.repartitionByRange(slices, col("cell"), col("vec_id"))
+      .sortWithinPartitions("cell", "vec_id")
+      .write.mode("overwrite").parquet(staged.toString)
+    finally { rows.unpersist(); () }
+    swap.verify(staged)
+    swap.commit(
       asides = olds.map(_.getPath).toSeq,
-      promotes = Seq((stagedP, new Path(s"$cellsDir/batch=$upTo"))),
+      promotes = Seq((staged, new Path(s"$cellsDir/batch=$upTo"))),
       cleanup = Nil,
       afterPromote = () =>
         if (erased > 0L) invalidateIvfIndexDurably(spark, s"$workDir/ivf_index"))
@@ -1802,7 +1776,7 @@ object Similarity {
     */
   def cellOccupancy(spark: org.apache.spark.sql.SparkSession,
                     workDir: String): DataFrame =
-    Dedup.readStore(spark, s"$workDir/cells")
+    StoredTable.readStore(spark, s"$workDir/cells")
       .groupBy(col("cell")).agg(count(lit(1)).as("n_rows"))
 
   /** TARGETED hot-cell split — the skew response: every cell holding more
@@ -1825,13 +1799,14 @@ object Similarity {
     *    for training/relabeling and the codes pass through untouched;
     *  - the PHYSICAL rewrite is targeted too: one pruned pass lists the
     *    files holding any hot-cell row, ONLY those files re-read /
-    *    relabel / restage (slices sized by affected bytes), and the
-    *    recoverable swap renames at FILE granularity — cold files are
-    *    never read, written, or renamed, so they stay byte-identical
-    *    (the `q_partition_overwrite` discipline applied to the store);
-    *  - the rewrite preserves `batch` provenance and swaps via the same
-    *    checked recoverable protocol as requantize/compaction (sentinel,
-    *    set-aside, verify-then-promote; leftovers refuse fast).
+    *    relabel / restage (slices sized by affected bytes), and the swap
+    *    renames at FILE granularity, resolving and promoting files as the
+    *    erasure core does ([[StoredTable.owningFiles]],
+    *    [[StoredTable.stagedFilePromotes]]) — cold files are never read,
+    *    written, or renamed, so they stay byte-identical (the
+    *    `q_partition_overwrite` discipline applied to the store);
+    *  - the rewrite preserves `batch` provenance and swaps through the
+    *    store-mutation protocol of [[StoredTable]].
     *
     * Unlike [[requantizeIvfStore]] (a global re-train sized by the MEAN),
     * the split trains O(hot rows) and moves O(affected-file bytes) — on a
@@ -1866,13 +1841,9 @@ object Similarity {
     val cellsDir = s"$workDir/cells"
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(workDir).getFileSystem(conf)
-    val sentinel = new Path(cellsDir, Dedup.MaintenanceSentinel)
-    val trash = new Path(workDir, ".split_old")
-    for (left <- Seq(sentinel, trash) if fs.exists(left))
-      throw new IllegalStateException(
-        s"splitHotCells: leftover $left from an unfinished swap at $workDir — " +
-          "recover (restore set-aside partitions/index from .split_old, " +
-          "remove the sentinel) before retrying")
+    val stageRoot = s"$workDir/.split_stage"
+    val swap = StoredTable.preflight(fs, "splitHotCells", new Path(cellsDir),
+      new Path(workDir, ".split_old"), new Path(stageRoot))
     // the occupancy probe: ≤ nlist (cell, n) pairs — bounded by the index.
     // Cells memoized unsplittable at this exact occupancy are skipped
     // (see [[unsplittableCells]]) — they re-arm when occupancy changes.
@@ -1890,7 +1861,7 @@ object Similarity {
       .filterNot(c => memo.get(c).contains(hotOcc(c)))
     if (candidates.isEmpty) return 0
     val centroids = loadIvfIndex(spark, idxDir)
-    val stored = Dedup.readStore(spark, cellsDir)
+    val stored = StoredTable.readStore(spark, cellsDir)
     val (rows, coded) = withReconstructedEmbedding(spark, workDir, stored)
     // per-hot-cell sub-quantizers, trained from each cell's own rows in
     // the tasks (id-sorted init, seed-free kmeans — deterministic); a
@@ -2001,30 +1972,11 @@ object Similarity {
     //     q_partition_overwrite asserts partition identity).
     val hotFileUris = rows
       .where(col("cell").isin(hot.toIndexedSeq.map(Integer.valueOf): _*))
-      .select(input_file_name().as("f")).distinct().as[String].collect().sorted
-    val batchDirs = fs.listStatus(new Path(cellsDir))
-      .filter(_.getPath.getName.startsWith("batch="))
-    val physicalByKey: Map[String, org.apache.hadoop.fs.FileStatus] =
-      batchDirs.flatMap { d =>
-        fs.listStatus(d.getPath)
-          .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-            !f.getPath.getName.startsWith("."))
-          .map(f => s"${d.getPath.getName}/${f.getPath.getName}" -> f)
-      }.toMap
-    // match scan-reported URIs to listed physical files by their
-    // batch=<id>/<file> suffix — scheme/authority-insensitive
-    val affectedKeys = hotFileUris.map { uri =>
-      val p = new Path(uri)
-      s"${p.getParent.getName}/${p.getName}"
-    }.toSet
-    val affected = physicalByKey.collect {
-      case (k, st) if affectedKeys(k) => st
-    }.toSeq.sortBy(_.getPath.toString)
+      .select(input_file_name().as("f")).distinct().as[String].collect()
+    val affected = StoredTable.owningFiles(fs, new Path(cellsDir), 1, hotFileUris.toSeq)
     require(affected.nonEmpty,
       "splitHotCells: hot rows reported but no owning files resolved — " +
         "store listing and scan disagree; refusing to swap")
-    val stageRoot = s"$workDir/.split_stage"
-    fs.delete(new Path(stageRoot), true) // stale stage: data-free, safe
     invalidateIvfIndex(s"$stageRoot/ivf_index")
     writeCentroids(spark, newCentroids, s"$stageRoot/ivf_index")
     val affectedBytes = affected.map(_.getLen).sum
@@ -2053,28 +2005,14 @@ object Similarity {
     finally { relabeled.unpersist(); () }
     val stagedCells = new Path(s"$stageRoot/cells")
     val stagedIdx = new Path(s"$stageRoot/ivf_index")
-    if (!fs.exists(stagedCells) || !fs.exists(stagedIdx))
-      throw new IllegalStateException(
-        s"splitHotCells: staged rewrite missing under $stageRoot — store left unchanged")
+    swap.verify(stagedCells, stagedIdx)
     // file-granular promote: each staged file lands INSIDE its live
-    // batch= dir next to the untouched cold files (part-file names are
-    // uuid-unique, so no collision); asides are exactly the affected
-    // files
-    val stagedFiles = fs.listStatus(stagedCells)
-      .filter(_.getPath.getName.startsWith("batch=")).toSeq
-      .flatMap { d =>
-        fs.listStatus(d.getPath)
-          .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-            !f.getPath.getName.startsWith("."))
-          .map(f => (f.getPath, new Path(new Path(cellsDir, d.getPath.getName), f.getPath.getName)))
-      }
-    // a staged batch dir may be NEW to the live store only if the live
-    // dir vanished mid-op; normal runs promote into existing dirs
-    stagedFiles.foreach { case (_, dst) => fs.mkdirs(dst.getParent) }
-    Dedup.recoverableSwap(fs, "splitHotCells",
-      sentinelDir = new Path(cellsDir), trash = trash,
+    // batch= dir next to the untouched cold files; asides are exactly
+    // the affected files
+    swap.commit(
       asides = affected.map(_.getPath) :+ new Path(idxDir),
-      promotes = stagedFiles :+ ((stagedIdx, new Path(idxDir))),
+      promotes = StoredTable.stagedFilePromotes(fs, stagedCells, new Path(cellsDir), 1) :+
+        ((stagedIdx, new Path(idxDir))),
       cleanup = Seq(new Path(stageRoot)),
       afterPromote = () => invalidateIvfIndex(idxDir))
     hot.length
@@ -2085,7 +2023,7 @@ object Similarity {
     * compliance request a real deployment gets. Works on every store
     * layout (flat / SQ8 / PQ — the payload passes through; victims drop
     * by `vec_id`). A thin wrapper over the SHARED erasure core
-    * ([[Dedup.deleteRowsFromStore]] — the same pricing/staging/swap every
+    * ([[StoredTable.deleteRowsFromStore]] — the same pricing/staging/swap every
     * stored-index family uses): ONE `groupBy(input_file_name())` job
     * both prices the request and lists the owning files (a `vec_id`
     * predicate doesn't prune the cell-clustered layout, so a second
@@ -2108,7 +2046,7 @@ object Similarity {
       ids: Seq[Long]): Long = {
     require(ids.nonEmpty, "deleteFromIvfStore: empty id set")
     val idxDir = s"$workDir/ivf_index"
-    Dedup.deleteRowsFromStore(spark, s"$workDir/cells", "deleteFromIvfStore",
+    StoredTable.deleteRowsFromStore(spark, s"$workDir/cells", "deleteFromIvfStore",
       victimCol = col("vec_id").isin(ids.distinct.map(java.lang.Long.valueOf): _*),
       partitionCols = Seq("batch"),
       clusterCols = Seq("cell", "vec_id"),
@@ -2117,7 +2055,7 @@ object Similarity {
 
   /** BULK-victim form of the ANN-store erasure: the victim set arrives
     * as a TABLE of `vec_id`s, applied through the shared broadcast
-    * semi/anti core ([[Dedup.deleteRowsFromStoreJoin]]). A real
+    * semi/anti core ([[StoredTable.deleteRowsFromStoreJoin]]). A real
     * compliance batch is 10⁵–10⁷ ids; the literal-`isin` form above
     * builds, optimizes, and task-serializes an expression tree ∝ |ids|
     * and stops scaling around 10⁴ (measured in the erasure harness's bulk leg),
@@ -2130,7 +2068,7 @@ object Similarity {
       workDir: String,
       victims: org.apache.spark.sql.DataFrame): Long = {
     val idxDir = s"$workDir/ivf_index"
-    Dedup.deleteRowsFromStoreJoin(spark, s"$workDir/cells", "deleteFromIvfStore",
+    StoredTable.deleteRowsFromStoreJoin(spark, s"$workDir/cells", "deleteFromIvfStore",
       victims, "vec_id",
       partitionCols = Seq("batch"),
       clusterCols = Seq("cell", "vec_id"),

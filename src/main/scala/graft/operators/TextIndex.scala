@@ -63,9 +63,9 @@ import graft.functions.{TextFunctions => TF}
   *
   * Single-writer contract: like every store family here, maintenance
   * (delete/compact/retain) assumes one writer; concurrent maintenance
-  * collides on the shared [[Dedup.MaintenanceSentinel]] and fails
+  * collides on the shared swap sentinel ([[StoredTable]]) and fails
   * loudly rather than corrupting. Retention routes through
-  * [[Dedup.retainStoreBatches]], so the sentinel refusal and the
+  * [[StoredTable.retainStoreBatches]], so the sentinel refusal and the
   * drop-everything refusal hold for this family exactly as for the
   * band/census/sem/IVF stores.
   */
@@ -182,10 +182,11 @@ object TextIndex {
     * one). The single-writer contract is about maintenance (swap ops)
     * vs writers; same-store maintenance must still not race this call.
     *
-    * Failure: batches are submitted one by one inside the `try`, so when
-    * a later batch fails to submit (e.g. it lacks `text`) or any write
-    * fails, the `finally` still waits out every pipeline already in
-    * flight and releases its append-scoped caches before the exception
+    * Failure: every batch's pipelines are planned inside the `try` and
+    * run through [[StoredTable.inParallel]], which waits out every
+    * pipeline before it rethrows; so when a later batch fails to plan
+    * (e.g. it lacks `text`) or any write fails, the `finally` releases
+    * every planned batch's append-scoped caches before the exception
     * propagates — no orphaned writer keeps running on a `batch=` dir a
     * same-process retry would write again.
     */
@@ -199,32 +200,23 @@ object TextIndex {
     if (manifest.exists(idxDir))
       manifest.check(idxDir, renderManifest(nMods, withPositions))
     else manifest.write(idxDir, renderManifest(nMods, withPositions))
-    import scala.concurrent.Await
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = Dedup.writerPool
-    val pending = scala.collection.mutable.ArrayBuffer.empty[
-      (Seq[scala.concurrent.Future[Unit]], () => Unit)]
+    val planned = scala.collection.mutable.ArrayBuffer.empty[(Seq[() => Unit], () => Unit)]
     try {
       batches.foreach { case (docs, batchId) =>
-        pending += submitAppendPipelines(docs, idxDir, batchId, nMods, withPositions)
+        planned += appendPipelines(docs, idxDir, batchId, nMods, withPositions)
       }
-      pending.flatMap(_._1).foreach(Await.result(_, Duration.Inf))
-    } finally {
-      pending.flatMap(_._1).foreach(Await.ready(_, Duration.Inf))
-      pending.foreach(_._2())
-    }
+      StoredTable.inParallel(planned.toSeq.flatMap(_._1))
+    } finally planned.foreach(_._2())
+    ()
   }
 
-  /** One batch's table pipelines, submitted (not awaited) on `ec`:
-    * returns the write futures plus a release hook for the two
-    * append-scoped caches. Callers await every future before releasing.
+  /** One batch's table pipelines, planned (not run): returns the writes
+    * plus a release hook for the two append-scoped caches. Callers run
+    * every write to completion before releasing.
     */
-  private def submitAppendPipelines(docs: DataFrame, idxDir: String,
-                                    batchId: Long, nMods: Int,
-                                    withPositions: Boolean)(
-      implicit ec: scala.concurrent.ExecutionContext)
-      : (Seq[scala.concurrent.Future[Unit]], () => Unit) = {
-    import scala.concurrent.Future
+  private def appendPipelines(docs: DataFrame, idxDir: String,
+                              batchId: Long, nMods: Int,
+                              withPositions: Boolean): (Seq[() => Unit], () => Unit) = {
     val spark = docs.sparkSession
     // `dl` rides along FROM THE SCAN as size() OF THE SAME TOKEN ARRAY
     // the generator explodes (identical by construction to Σ tf over the
@@ -270,7 +262,7 @@ object TextIndex {
     // next pipeline's tasks back-fill executors the previous one's tail
     // frees. Within a pipeline, order is preserved (the dependent table
     // reads its parent's cache).
-    val wPostings = Future {
+    val wPostings = () => {
         postings
           .select(col("doc_id"), col("term"), col("tf"), col("dl"), col("tm_mod"))
           .repartitionByRange(col("tm_mod"), col("term"), col("doc_id"))
@@ -286,7 +278,7 @@ object TextIndex {
           .write.mode("overwrite").partitionBy("tm_mod")
           .parquet(s"${termsDir(idxDir)}/batch=$batchId")
       }
-      val wMembership = Future {
+      val wMembership = () => {
         membership
           .repartitionByRange(col("did_mod"), col("doc_id"))
           .sortWithinPartitions(col("did_mod"), col("doc_id"))
@@ -306,7 +298,7 @@ object TextIndex {
       // for row-group pruning on the anchor join.
       val wPositions =
         if (!withPositions) Nil
-        else Seq(Future {
+        else Seq(() => {
           docs
             .select(col("doc_id"),
               posexplode(TF.tokens(lower(col("text")))).as(Seq("pos", "term")))
@@ -357,13 +349,13 @@ object TextIndex {
     // the query terms' own hash partitions: the SAME catalyst hash the
     // writer fanned with, evaluated driver-side (no per-query job)
     val mods = queryTermMods(terms, nMods)
-    val stats = Dedup.readStore(spark, statsDir(idxDir))
+    val stats = StoredTable.readStore(spark, statsDir(idxDir))
       .agg(sum(col("n_docs")).cast("double").as("n_docs"),
            sum(col("total_toks")).cast("double").as("total_toks"))
     // persisted: candidates feed the df aggregate AND the scoring join —
     // without it the pruned store slice is read twice (same discipline
     // as bm25TopK's tf)
-    val cand = Dedup.readStore(spark, postingsDir(idxDir))
+    val cand = StoredTable.readStore(spark, postingsDir(idxDir))
       .where(col("tm_mod").isin(mods.toIndexedSeq.map(Integer.valueOf): _*) &&
         col("term").isin(terms: _*))
       .persist()
@@ -407,7 +399,7 @@ object TextIndex {
                               terms: Seq[String]): Map[String, (Long, Long, Long)] = {
     val nMods = storeNMods(idxDir)
     val mods = queryTermMods(terms, nMods)
-    Dedup.readStore(spark, termsDir(idxDir))
+    StoredTable.readStore(spark, termsDir(idxDir))
       .where(col("tm_mod").isin(mods.toIndexedSeq.map(Integer.valueOf): _*) &&
         col("term").isin(terms: _*))
       .groupBy(col("term"))
@@ -471,7 +463,7 @@ object TextIndex {
                         terms: Seq[String], dfCeiling: Long,
                         k1: Double = 1.2, b: Double = 0.75): (Seq[String], Double) = {
     val stats = termImpactStats(spark, idxDir, terms)
-    val g = Dedup.readStore(spark, statsDir(idxDir))
+    val g = StoredTable.readStore(spark, statsDir(idxDir))
       .agg(sum(col("n_docs")).cast("double").as("n"),
         sum(col("total_toks")).cast("double").as("t"))
       .head() // 1-row global stats read
@@ -515,7 +507,7 @@ object TextIndex {
     // lazy unbounded filter the caller composes on, and a cache released
     // here would be gone before they run it)
     def cand(terms: Seq[String]): DataFrame =
-      Dedup.readStore(spark, postingsDir(idxDir))
+      StoredTable.readStore(spark, postingsDir(idxDir))
         .where(col("tm_mod").isin(mods.toIndexedSeq.map(Integer.valueOf): _*) &&
           col("term").isin(terms: _*))
         .select(col("term"), col("doc_id"))
@@ -543,7 +535,7 @@ object TextIndex {
         "phrase/proximity serves need the positional tier; rebuild with it")
     val nMods = storeNMods(idxDir)
     val mods = queryTermMods(terms.distinct, nMods)
-    Dedup.readStore(spark, positionsDir(idxDir))
+    StoredTable.readStore(spark, positionsDir(idxDir))
       .where(col("tm_mod").isin(mods.toIndexedSeq.map(Integer.valueOf): _*) &&
         col("term").isin(terms.distinct: _*))
       .select(col("term"), col("doc_id"), col("pos"))
@@ -641,7 +633,7 @@ object TextIndex {
         // dir check per trigger.
         val foreignSwap = Seq(postingsDir(idxDir), termsDir(idxDir),
             docsDir(idxDir), statsDir(idxDir))
-          .exists(dir => fs.exists(new Path(dir, Dedup.MaintenanceSentinel)))
+          .exists(StoredTable.swapInProgress(fs, _))
         if (!foreignSwap) drainTextIndexErasures(spark, idxDir)
         ()
       }
@@ -694,7 +686,7 @@ object TextIndex {
   /** Right-to-erasure from the text index, BULK-victim form: the victim
     * set is a TABLE (a compliance batch is 10⁵–10⁷ ids — a literal
     * `isin` stops scaling around 10⁴; see
-    * [[Dedup.deleteRowsFromStoreJoin]]), applied to all four tables in
+    * [[StoredTable.deleteRowsFromStoreJoin]]), applied to all four tables in
     * an order chosen for CRASH-SAFE RETRY:
     *
     *  1. PRE-SCAN the membership table (`docs/`), pruned to the
@@ -714,7 +706,7 @@ object TextIndex {
     *     their post-delete postings (exact df/max_tf/min_dl — keeps the
     *     bounded serve's error bound sound), staged one file per
     *     (batch, tm_mod) directory and promoted behind the checked
-    *     [[Dedup.recoverableSwap]].
+    *     swap ([[StoredTable]]).
     *  4. STATS: the affected batches' rows RECOMPUTE as the aggregate
     *     of membership-minus-victims, staged and swapped — NOT
     *     decremented in place: recomputation is idempotent under retry,
@@ -728,7 +720,10 @@ object TextIndex {
     *     victim scan (did_mod), file-targeted rewrite.
     *
     * Single-writer contract as everywhere; each swap raises the shared
-    * sentinel, so probes refuse during any window. Within the ordering
+    * sentinel, so probes refuse during any window. Every table
+    * pre-flights before the first is touched, so a leftover of a crashed
+    * swap on ANY table refuses the whole erasure with the store
+    * unchanged. Within the ordering
     * above, steps that touch DIFFERENT tables and share no derivation
     * edge overlap on the writer pool (postings ∥ positions ∥ stats —
     * stats reads membership, never postings; the dictionary chains on
@@ -767,7 +762,7 @@ object TextIndex {
     // bounded collect: one row per batch holding a victim —
     // (batch, victims present, any victim with dl > 0), so driver
     // memory scales with batches, not victims
-    val perBatch = Dedup.readStore(spark, docsDir(idxDir))
+    val perBatch = StoredTable.readStore(spark, docsDir(idxDir))
       .where(modPrune)
       .join(broadcast(v), Seq("doc_id"), "left_semi")
       .groupBy(col("batch").cast("long"))
@@ -787,37 +782,36 @@ object TextIndex {
     // from the STILL-UNTOUCHED membership minus victims — it never
     // reads postings), so all three submit together. Only the TERM
     // DICTIONARY has a real edge — it recomputes from the POST-delete
-    // postings — so it chains on the postings future instead of
-    // waiting for everything. Crash-retry stays intact whatever
-    // subset completed: every stage idempotently re-derives from
-    // membership (rewritten strictly LAST below), postings re-prices
-    // to the still-present victims, and the recomputing swaps produce
-    // the same values on retry.
-    locally {
-      import scala.concurrent.{Await, Future}
-      implicit val ec: scala.concurrent.ExecutionContext = Dedup.writerPool
-      val wPost = Future {
-        Dedup.deleteRowsFromStoreJoin(spark, postingsDir(idxDir),
+    // postings — so it runs right after the postings erasure, in the
+    // same writer, instead of waiting for everything. Crash-retry stays
+    // intact whatever subset completed: every stage idempotently
+    // re-derives from membership (rewritten strictly LAST below),
+    // postings re-prices to the still-present victims, and the
+    // recomputing swaps produce the same values on retry. Every table
+    // pre-flights first, so a leftover on one refuses before any moves.
+    val positions = storeHasPositions(idxDir)
+    (Seq("postings" -> postingsDir(idxDir), "docs" -> docsDir(idxDir)) ++
+        (if (positions) Seq("positions" -> positionsDir(idxDir)) else Nil))
+      .foreach { case (t, dir) => StoredTable.preflightErasure(spark, dir, s"deleteFromTextIndex($t)") }
+    rewriteSwap(spark, statsDir(idxDir), "rewriteStats")
+    if (postingBatches.nonEmpty) rewriteSwap(spark, termsDir(idxDir), "rewriteTermDictionary")
+    StoredTable.inParallel(Seq(
+      () => {
+        StoredTable.deleteRowsFromStoreJoin(spark, postingsDir(idxDir),
           "deleteFromTextIndex(postings)", v, "doc_id",
           partitionCols = Seq("batch", "tm_mod"),
           clusterCols = Seq("term", "doc_id"))
-      }
-      val wPos =
-        if (!storeHasPositions(idxDir)) Future.successful(0L)
-        else Future {
-          Dedup.deleteRowsFromStoreJoin(spark, positionsDir(idxDir),
-            "deleteFromTextIndex(positions)", v, "doc_id",
-            partitionCols = Seq("batch", "tm_mod"),
-            clusterCols = Seq("term", "doc_id", "pos"))
-        }
-      val wStats = Future { rewriteStats(spark, idxDir, affected, v) }
-      val wTerms =
-        if (postingBatches.isEmpty) Future.successful(())
-        else wPost.map { _ => rewriteTermDictionary(spark, idxDir, postingBatches) }
-      Seq(wPost.map(_ => ()), wPos.map(_ => ()), wStats, wTerms)
-        .foreach(Await.result(_, scala.concurrent.duration.Duration.Inf))
-    }
-    Dedup.deleteRowsFromStoreJoin(spark, docsDir(idxDir),
+        if (postingBatches.nonEmpty) rewriteTermDictionary(spark, idxDir, postingBatches)
+      },
+      () => rewriteStats(spark, idxDir, affected, v)) ++
+      (if (!positions) Nil else Seq(() => {
+        StoredTable.deleteRowsFromStoreJoin(spark, positionsDir(idxDir),
+          "deleteFromTextIndex(positions)", v, "doc_id",
+          partitionCols = Seq("batch", "tm_mod"),
+          clusterCols = Seq("term", "doc_id", "pos"))
+        ()
+      })))
+    StoredTable.deleteRowsFromStoreJoin(spark, docsDir(idxDir),
       "deleteFromTextIndex(docs)", v, "doc_id",
       partitionCols = Seq("batch", "did_mod"),
       clusterCols = Seq("doc_id"),
@@ -839,7 +833,7 @@ object TextIndex {
       // one shuffle, one file per (batch, tm_mod) directory: the postings
       // already carry their term's tm_mod, so hash-partitioning on
       // (batch, tm_mod) clusters every group the aggregation needs
-      Dedup.readStore(spark, postingsDir(idxDir))
+      StoredTable.readStore(spark, postingsDir(idxDir))
         .where(col("batch").isin(batches.map(java.lang.Long.valueOf): _*))
         .repartition(col("batch"), col("tm_mod"))
         .groupBy(col("batch"), col("tm_mod"), col("term"))
@@ -858,7 +852,7 @@ object TextIndex {
   private def rewriteStats(spark: SparkSession, idxDir: String,
                            batches: Seq[Long], victims: DataFrame): Unit =
     swapBatches(spark, statsDir(idxDir), "rewriteStats", batches) { stage =>
-      Dedup.readStore(spark, docsDir(idxDir))
+      StoredTable.readStore(spark, docsDir(idxDir))
         .where(col("batch").isin(batches.map(java.lang.Long.valueOf): _*))
         .join(broadcast(victims), Seq("doc_id"), "left_anti")
         .groupBy(col("batch"))
@@ -869,29 +863,31 @@ object TextIndex {
         .parquet(stage)
     }
 
+  /** The pre-flighted swap of [[swapBatches]] on table `dir` (trash and
+    * stage beside it, tag `rewrite`), with the file system and stage.
+    */
+  private def rewriteSwap(spark: SparkSession, dir: String, opName: String)
+      : (org.apache.hadoop.fs.FileSystem, StoredTable.Swap, org.apache.hadoop.fs.Path) = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (swap, stage) = StoredTable.preflightBeside(fs, root, opName, "rewrite")
+    (fs, swap, stage)
+  }
+
   /** Replace the `batch=` partitions of table `dir` for `batches`:
     * `write` stages their recomputed rows (partitioned by `batch`) at
-    * the path it is given, and the checked [[Dedup.recoverableSwap]]
-    * promotes each staged partition over the old one. A batch that
-    * stages no rows loses its partition.
+    * the path it is given, and the store-mutation protocol
+    * ([[StoredTable]]) promotes each staged partition over the old one.
+    * A batch that stages no rows loses its partition.
     */
   private def swapBatches(spark: SparkSession, dir: String, opName: String,
                           batches: Seq[Long])(write: String => Unit): Unit = {
     import org.apache.hadoop.fs.Path
     val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sentinel = new Path(dir, Dedup.MaintenanceSentinel)
-    val trash = new Path(root.getParent, s".${root.getName}_rewrite_old")
-    val stage = new Path(root.getParent, s".${root.getName}_rewrite_stage")
-    for (left <- Seq(sentinel, trash) if fs.exists(left))
-      throw new IllegalStateException(
-        s"$opName: leftover $left from an unfinished swap at $dir — " +
-          "recover before retrying")
-    fs.delete(stage, true)
+    val (fs, swap, stage) = rewriteSwap(spark, dir, opName)
     write(stage.toString)
     def part(base: Path, b: Long) = new Path(base, s"batch=$b")
-    Dedup.recoverableSwap(fs, opName,
-      sentinelDir = root, trash = trash,
+    swap.commit(
       asides = batches.map(part(root, _)).filter(fs.exists(_)),
       promotes = batches.map(b => (part(stage, b), part(root, b)))
         .filter { case (src, _) => fs.exists(src) },
@@ -900,7 +896,7 @@ object TextIndex {
 
   /** Batch-TTL retention for the text index: drop `batch <= cutoff`
     * partitions of ALL FOUR tables as pure metadata through the SHARED
-    * retention core ([[Dedup.retainStoreBatches]] — no data file read,
+    * retention core ([[StoredTable.retainStoreBatches]] — no data file read,
     * planned, or rewritten), which brings this family the same two
     * refusals every other stored family has: a maintenance-swap
     * sentinel on any table refuses retention (dropping dirs under a
@@ -920,7 +916,7 @@ object TextIndex {
       (if (storeHasPositions(idxDir))
          Seq("positions" -> positionsDir(idxDir)) else Nil))
       .map { case (name, dir) =>
-        name -> Dedup.retainStoreBatches(spark, dir,
+        name -> StoredTable.retainStoreBatches(spark, dir,
           s"retainTextIndexBatches($name)", cutoff)
       }.toMap
 
@@ -985,7 +981,7 @@ object TextIndex {
     val erased = victims match {
       case None => 0L
       case Some(v) =>
-        val docs = Dedup.readStore(spark, docsDir(idxDir))
+        val docs = StoredTable.readStore(spark, docsDir(idxDir))
         val newer = docs.where(col("batch") > upTo)
           .join(broadcast(v), Seq("doc_id"), "left_semi").count()
         require(newer == 0L,
@@ -1040,7 +1036,7 @@ object TextIndex {
               .agg(sum(col("df")).as("df"), max(col("max_tf")).as("max_tf"),
                 min(col("min_dl")).as("min_dl"))
           else
-            dropV(Dedup.readStore(spark, postingsDir(idxDir))
+            dropV(StoredTable.readStore(spark, postingsDir(idxDir))
                 .where(col("batch") <= upTo))
               .groupBy(col("term"))
               .agg(count(lit(1)).as("df"), max(col("tf")).as("max_tf"),
@@ -1063,7 +1059,7 @@ object TextIndex {
             src.agg(sum(col("n_docs")).as("n_docs"),
               sum(col("total_toks")).as("total_toks"))
           else
-            dropV(Dedup.readStore(spark, docsDir(idxDir))
+            dropV(StoredTable.readStore(spark, docsDir(idxDir))
                 .where(col("batch") <= upTo))
               .agg(count(lit(1)).as("n_docs"),
                 coalesce(sum(col("dl")), lit(0L)).as("total_toks"))
@@ -1092,59 +1088,40 @@ object TextIndex {
     // recoverable swap, so crash recovery is per-table exactly as
     // before, and the store-inconsistent window shrinks to the rename
     // phase.
-    val staged = recipes.map { case (dir, stageWriter) =>
+    // pre-flight EVERY table a fold touches before any staging starts:
+    // (dir, stage writer, source batches, the table's swap and stage)
+    val active = recipes.flatMap { case (dir, stageWriter) =>
       val root = new Path(dir)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val srcBatches = fs.listStatus(root).toSeq
         .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
         .map(st => st.getPath.getName.stripPrefix("batch=").toLong)
         .filter(_ <= upTo).sorted
-      val active = srcBatches.length > 1 || (srcBatches.nonEmpty && erased > 0L)
-      if (active) {
-        // pre-flight EVERY table before any staging or swap starts
-        val sentinel = new Path(dir, Dedup.MaintenanceSentinel)
-        val trash = new Path(root.getParent, s".${root.getName}_compact_old")
-        for (left <- Seq(sentinel, trash) if fs.exists(left))
-          throw new IllegalStateException(
-            s"compactTextIndexBatches: leftover $left from an unfinished swap " +
-              s"at $dir — recover before retrying")
-      }
-      (dir, stageWriter, root, fs, srcBatches, active)
+      if (srcBatches.length > 1 || (srcBatches.nonEmpty && erased > 0L))
+        Some((dir, stageWriter, srcBatches, fs,
+          StoredTable.preflightBeside(fs, root, "compactTextIndexBatches", "compact")))
+      else None
     }
-    import scala.concurrent.{Await, Future}
-    implicit val ec: scala.concurrent.ExecutionContext = Dedup.writerPool
-    val stageJobs = staged.map { case (dir, stageWriter, root, fs, srcBatches, active) =>
-      if (!active) Future.successful(())
-      else Future {
-        val stage = new Path(root.getParent, s".${root.getName}_compact_stage")
-        fs.delete(stage, true)
-        val src = Dedup.readStore(spark, dir).where(col("batch") <= upTo)
-        stageWriter(src, new Path(stage, s"batch=$upTo").toString)
-        ()
-      }
+    StoredTable.inParallel(active.map { case (dir, stageWriter, _, _, (_, stage)) =>
+      () => stageWriter(StoredTable.readStore(spark, dir).where(col("batch") <= upTo),
+        new Path(stage, s"batch=$upTo").toString)
+    })
+    val folded = active.map { case (dir, _, srcBatches, fs, (swap, stage)) =>
+      // a fold whose result is empty (every folded row was a victim)
+      // emits no files: promote nothing — the batch dirs simply age out
+      val stagedBatch = new Path(stage, s"batch=$upTo")
+      val promotes =
+        if (fs.exists(stagedBatch) &&
+            fs.listStatus(stagedBatch).exists(st =>
+              !st.getPath.getName.startsWith("_")))
+          Seq((stagedBatch, new Path(dir, s"batch=$upTo")))
+        else Seq.empty
+      swap.commit(
+        asides = srcBatches.map(b => new Path(dir, s"batch=$b")),
+        promotes = promotes,
+        cleanup = Seq(stage))
+      srcBatches.length.toLong - 1L
     }
-    stageJobs.foreach(Await.result(_, scala.concurrent.duration.Duration.Inf))
-    val folded = staged.map { case (dir, _, root, fs, srcBatches, active) =>
-      if (active) {
-        val trash = new Path(root.getParent, s".${root.getName}_compact_old")
-        val stage = new Path(root.getParent, s".${root.getName}_compact_stage")
-        // a fold whose result is empty (every folded row was a victim)
-        // emits no files: promote nothing — the batch dirs simply age out
-        val stagedBatch = new Path(stage, s"batch=$upTo")
-        val promotes =
-          if (fs.exists(stagedBatch) &&
-              fs.listStatus(stagedBatch).exists(st =>
-                !st.getPath.getName.startsWith("_")))
-            Seq((stagedBatch, new Path(root, s"batch=$upTo")))
-          else Seq.empty
-        Dedup.recoverableSwap(fs, "compactTextIndexBatches",
-          sentinelDir = root, trash = trash,
-          asides = srcBatches.map(b => new Path(root, s"batch=$b")),
-          promotes = promotes,
-          cleanup = Seq(stage))
-        srcBatches.length.toLong - 1L
-      } else 0L
-    }
-    (folded.max, erased)
+    ((0L +: folded).max, erased)
   }
 }

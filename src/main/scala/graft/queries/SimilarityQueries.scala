@@ -278,7 +278,7 @@ private[graft] object SimilarityQueries {
       val w = scratchDir("graft_ivfcomp")
       Similarity.streamIngestIvf(s, in, w, nlist = 16)
       Similarity.compactIvfStore(s, w, upTo = 10L)
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells")
+      val stored = graft.operators.StoredTable.readStore(s, s"$w/cells")
       // completeness folded INTO the returned frame (a cross-join of two
       // 1-row counts) so the declared query is one job — no
       // plan-build-time actions
@@ -316,7 +316,7 @@ private[graft] object SimilarityQueries {
       val w = scratchDir("graft_ivfbstore")
       Similarity.streamIngestIvf(s, in, w, nlist = 16, quantized = true)
       Similarity.compactIvfStore(s, w, upTo = 10L)
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells").drop("batch")
+      val stored = graft.operators.StoredTable.readStore(s, s"$w/cells").drop("batch")
       val emb = embeddings(s, d)
       val probes = emb.where(col("vec_id").isin(0L, 1L, 2L, 3L))
       val approx = Similarity.ivfProbeSetTopKStored(
@@ -363,7 +363,7 @@ private[graft] object SimilarityQueries {
       val w = scratchDir("graft_ivfcoarse")
       Similarity.streamIngestIvf(s, in, w, nlist = 16)
       Similarity.requantizeIvfStore(s, w, newNlist = 2048, sampleRows = 2048)
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells").drop("batch")
+      val stored = graft.operators.StoredTable.readStore(s, s"$w/cells").drop("batch")
       val nlistAfter = Similarity.loadIvfIndex(s, s"$w/ivf_index").length
       val expanded = s.read.parquet(in)
       // probes = copy-0 (unjittered) rows of originals 0 and 1
@@ -421,7 +421,7 @@ private[graft] object SimilarityQueries {
       val w = scratchDir("graft_ivffilt")
       Similarity.streamIngestIvf(s, in, w, nlist = 16)
       Similarity.compactIvfStore(s, w, upTo = 10L)
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells").drop("batch")
+      val stored = graft.operators.StoredTable.readStore(s, s"$w/cells").drop("batch")
       val expanded = s.read.parquet(in)
       val probes = expanded
         .where(pmod(col("vec_id"), lit(16)) === 0 && col("label") >= 5)
@@ -524,7 +524,7 @@ private[graft] object SimilarityQueries {
       val sampleN = Similarity.trainIvfIndexHierarchical(
         expanded, s"$w/ivf_index", nlist = 8192, oversample = 10)
       Similarity.seedIvfStore(expanded, w)
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells").drop("batch")
+      val stored = graft.operators.StoredTable.readStore(s, s"$w/cells").drop("batch")
       val nlistTrained = Similarity.loadIvfIndex(s, s"$w/ivf_index").length
       // probes = copy-0 (unjittered) rows of originals 0 and 1
       val probes = expanded.where(col("vec_id").isin(0L, 256L))
@@ -705,7 +705,7 @@ private[graft] object SimilarityQueries {
         .agg(max(col("n_rows")), sum(col("n_rows"))).head()
       val (maxAfter, totalAfter) = (occAfter.getLong(0), occAfter.getLong(1))
       val nlistFinal = Similarity.loadIvfIndex(s, s"$w/ivf_index").length
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells").drop("batch")
+      val stored = graft.operators.StoredTable.readStore(s, s"$w/cells").drop("batch")
       val corpus = s.read.parquet(in)
       // probes 0 and 1: originals whose clone clusters drove the skew
       val probes = corpus.where(col("vec_id").isin(0L, 1L))
@@ -962,7 +962,7 @@ private[graft] object SimilarityQueries {
       val coldOk = after.nonEmpty &&
         after.keySet == before.keySet.filterNot(_.contains("batch=0")) &&
         after.forall { case (f, sig) => before(f) == sig }
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells").drop("batch")
+      val stored = graft.operators.StoredTable.readStore(s, s"$w/cells").drop("batch")
       val agedComplete = stored.agg(
         count(when(col("vec_id") < half, 1)).as("n_aged"),
         count(lit(1)).as("n"))
@@ -1039,7 +1039,7 @@ private[graft] object SimilarityQueries {
       val survivors = before.keySet intersect after.keySet
       val coldOk = survivors.nonEmpty &&
         survivors.forall(f => after(f) == before(f))
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells").drop("batch")
+      val stored = graft.operators.StoredTable.readStore(s, s"$w/cells").drop("batch")
       val vLits = victims.map(java.lang.Long.valueOf)
       val nlist = Similarity.loadIvfIndex(s, s"$w/ivf_index").length
       val probes = corpus.where(col("vec_id").isin(0L, 1L))
@@ -1098,7 +1098,7 @@ private[graft] object SimilarityQueries {
       val victims = emb.where(col("vec_id") % 7 === 3L).select("vec_id")
       val expected = victims.count()
       val nDeleted = Similarity.deleteFromIvfStore(s, w, victims)
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells").drop("batch")
+      val stored = graft.operators.StoredTable.readStore(s, s"$w/cells").drop("batch")
       val completeness = stored
         .agg(count(lit(1)).as("n"),
           count(when(col("vec_id") % 7 === 3L, 1)).as("n_victims"))
@@ -1178,7 +1178,7 @@ private[graft] object SimilarityQueries {
       // survivor codes snapshot — DISTRIBUTED (persisted before the swap
       // rewrites the files under the reader), compared by join, never
       // collected
-      val codesBefore = graft.operators.Dedup.readStore(s, s"$w/cells")
+      val codesBefore = graft.operators.StoredTable.readStore(s, s"$w/cells")
         .select(col("vec_id"), col("pqcode").as("pq_before")).persist()
       codesBefore.count()
       val nDeleted = Similarity.deleteFromIvfStore(s, w, victims)
@@ -1187,7 +1187,7 @@ private[graft] object SimilarityQueries {
       val coldOk = survivors.nonEmpty &&
         survivors.forall(f => cellsAfter(f) == cellsBefore(f))
       val indexOk = (sha(s"$w/ivf_index"), sha(s"$w/pq_index")) == idxBefore
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells")
+      val stored = graft.operators.StoredTable.readStore(s, s"$w/cells")
       val codesOk = stored
         .join(codesBefore, Seq("vec_id"))
         .agg(count(lit(1)).as("n_joined"),
@@ -1255,7 +1255,7 @@ private[graft] object SimilarityQueries {
       Similarity.streamIngestIvfPq(s, in, w, nlist = 8, m = 8, codebookK = 32,
         targetCellRows = 16, growFactor = 4)
       Similarity.compactIvfStore(s, w, upTo = 10L)
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells")
+      val stored = graft.operators.StoredTable.readStore(s, s"$w/cells")
       val nlistAfter = Similarity.loadIvfIndex(s, s"$w/ivf_index").length
       val emb = embeddings(s, d)
       val probes = emb.where(col("vec_id").isin(0L, 1L, 2L, 3L))

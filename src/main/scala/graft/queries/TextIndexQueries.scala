@@ -67,7 +67,7 @@ private[graft] object TextIndexQueries {
       val emb = embeddings(s, d)
       Similarity.saveIvfIndex(emb, s"$w/ivf_index", nlist = 16)
       Similarity.seedIvfStore(emb, w)
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells").drop("batch")
+      val stored = graft.operators.StoredTable.readStore(s, s"$w/cells").drop("batch")
       val byVec = Window.orderBy(col("cosine").desc, col("vec_id"))
       val vec = Similarity.ivfProbeSetTopKStored(
           stored, s"$w/ivf_index", emb.where(col("vec_id") === 0L),
@@ -138,7 +138,7 @@ private[graft] object TextIndexQueries {
       val emb = embeddings(s, d)
       Similarity.saveIvfIndex(emb, s"$w/ivf_index", nlist = 16)
       Similarity.seedIvfStore(emb, w)
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells").drop("batch")
+      val stored = graft.operators.StoredTable.readStore(s, s"$w/cells").drop("batch")
       // query batch: (query_id = probe vec_id, its own term set)
       val queries = Seq(0L -> Seq("dup", "merge", "scan"),
         1L -> Seq("join", "window", "stream"))
@@ -205,7 +205,7 @@ private[graft] object TextIndexQueries {
       val emb = embeddings(s, d)
       Similarity.saveIvfIndex(emb, s"$w/ivf_index", nlist = 16)
       Similarity.seedIvfStore(emb, w)
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells").drop("batch")
+      val stored = graft.operators.StoredTable.readStore(s, s"$w/cells").drop("batch")
       val vec = Similarity.ivfProbeSetTopKStored(
           stored, s"$w/ivf_index", emb.where(col("vec_id") === 0L),
           k = 20, nprobe = 16)
@@ -883,7 +883,7 @@ private[graft] object TextIndexQueries {
       val emb = embeddings(s, d)
       Similarity.saveIvfIndex(emb, s"$w/ivf_index", nlist = 16)
       Similarity.seedIvfStore(emb, w)
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells").drop("batch")
+      val stored = graft.operators.StoredTable.readStore(s, s"$w/cells").drop("batch")
       val byVec = Window.orderBy(col("cosine").desc, col("vec_id"))
       val vec = Similarity.ivfProbeSetTopKStored(
           stored, s"$w/ivf_index", emb.where(col("vec_id") === 0L),
@@ -954,7 +954,7 @@ private[graft] object TextIndexQueries {
       val emb = embeddings(s, d)
       Similarity.saveIvfIndex(emb, s"$w/ivf_index", nlist = 16)
       Similarity.seedIvfStore(emb, w)
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells").drop("batch")
+      val stored = graft.operators.StoredTable.readStore(s, s"$w/cells").drop("batch")
       val queries = Seq(0L -> Seq("dup", "merge", "scan"),
         1L -> Seq("join", "window", "stream"))
       // lexical leg: stored postings only (per query one pruned scan)
@@ -1052,7 +1052,7 @@ private[graft] object TextIndexQueries {
         ()
       }
       val emb = embeddings(s, d)
-      val stored = graft.operators.Dedup.readStore(s, s"$w/cells").drop("batch")
+      val stored = graft.operators.StoredTable.readStore(s, s"$w/cells").drop("batch")
       val queries = Seq(0L -> Seq("dup", "merge", "scan"),
         1L -> Seq("join", "window", "stream"))
       // ONE stored serve per query id feeds BOTH the exactness gate and

@@ -25,9 +25,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    census probes: increment win mods ×2 — stored + streaming; semantic
   *    store probe: increment cell mods); the 1-value label-sum
   *    convergence check per clusters() iteration; and the round-15
-  *    erasure ops: deleteRowsFromStore's per-victim-file counts (≤ the
-  *    store's file count) and deleteFromCensusStore's victim win mods
-  *    (≤ nMods ints).
+  *    erasure op deleteFromCensusStore's victim win mods (≤ nMods ints).
+  *  - StoredTable (the shared store-mutation core, moved out of Dedup):
+  *    the erasure core deleteRowsFromStore's per-victim-file counts (≤
+  *    the store's file count).
   *  - Layout: two 2-value min/max bounds for Z-order bit interleaving.
   *  - LogStore: O(total_splits) split-count read for one document's
   *    reassembly (reference semantics: per-doc, bounded by chunking).
@@ -53,8 +54,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *    bound) and affected-file listing (distinct input_file_name of hot
   *    rows — ≤ the store's file count, metadata); filtered serve's 1-row
   *    selectivity head. Round 16: deleteFromIvfStore routes through the
-  *    shared Dedup.deleteRowsFromStore core (its ONE pricing+owner
-  *    collect is audited under Dedup), dropping the former duplicate
+  *    shared StoredTable.deleteRowsFromStore core (its ONE pricing+owner
+  *    collect is audited under StoredTable), dropping the former duplicate
   *    victim scan — Similarity 16 → 15.
   *  - TextIndex: the serve's ≤ k materializing collect (round 17 —
   *    releases the per-query candidate cache instead of accreting one
@@ -129,7 +130,10 @@ class CollectAuditSpec extends AnyFunSuite {
       "graft/queries/TextIndexQueries.scala"  -> 9,
       "graft/operators/Maintenance.scala" -> 3,
       "graft/operators/Similarity.scala"  -> 15,
-      "graft/operators/Dedup.scala"       -> 10,
+      // the erasure core's pricing collect moved with it: Dedup 10 → 9,
+      // StoredTable 1 (total unchanged)
+      "graft/operators/Dedup.scala"       -> 9,
+      "graft/operators/StoredTable.scala" -> 1,
       "graft/operators/Layout.scala"      -> 2,
       "graft/operators/LogStore.scala"    -> 1,
       "graft/operators/Corpus.scala"      -> 2,

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, StoredTable}
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
@@ -572,7 +572,7 @@ class DedupSpec extends SparkSpec {
       Dedup.retainSemStoreBatches(spark, tmp, cutoff = 99L))
     assert(eAll.getMessage.contains("every batch"))
     // a live maintenance sentinel refuses the drop
-    val sentinel = java.nio.file.Paths.get(s"$tmp/cells", Dedup.MaintenanceSentinel)
+    val sentinel = java.nio.file.Paths.get(s"$tmp/cells", StoredTable.MaintenanceSentinel)
     java.nio.file.Files.createFile(sentinel)
     val eSent = intercept[IllegalStateException](
       Dedup.retainSemStoreBatches(spark, tmp, cutoff = 1L))
@@ -733,7 +733,7 @@ class DedupSpec extends SparkSpec {
       .select("win", "n_docs").as[(String, Long)].collect()
       .groupBy(identity).view.mapValues(_.length).toMap
     val before = rowSet
-    Dedup.compactStore(spark, path, "win_mod", "win", Dedup.NMods, upTo = 2L)
+    StoredTable.compactStore(spark, path, "win_mod", "win", Dedup.NMods, upTo = 2L)
     assert(rowSet == before, "census compaction must keep the multiset of rows")
     // a batch=3 pruned probe against the compacted store still works
     val inc = docs.where(col("doc_id") >= 450)
@@ -784,7 +784,7 @@ class DedupSpec extends SparkSpec {
     for (left <- Seq(".requant_old", ".requant_stage"))
       assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(a, left)), left)
     assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(a, "cells", Dedup.MaintenanceSentinel)))
+      java.nio.file.Paths.get(a, "cells", StoredTable.MaintenanceSentinel)))
   }
 
   test("SQ8 sem store: drops equal the full-precision store at a fraction of the " +
@@ -926,14 +926,14 @@ class DedupSpec extends SparkSpec {
     val staleOld = java.nio.file.Paths.get(path, ".compact_old")
     java.nio.file.Files.createDirectories(staleOld)
     val e1 = intercept[IllegalStateException](
-      Dedup.compactStore(spark, path, "win_mod", "win", Dedup.NMods, upTo = 1L))
+      StoredTable.compactStore(spark, path, "win_mod", "win", Dedup.NMods, upTo = 1L))
     assert(e1.getMessage.contains("leftover"), e1.getMessage)
     java.nio.file.Files.delete(staleOld)
     // the in-progress sentinel makes every store read refuse loudly —
     // both the raw read path and a probe that rides it
-    val sentinel = java.nio.file.Paths.get(path, Dedup.MaintenanceSentinel)
+    val sentinel = java.nio.file.Paths.get(path, StoredTable.MaintenanceSentinel)
     java.nio.file.Files.createFile(sentinel)
-    val e2 = intercept[IllegalStateException](Dedup.readStore(spark, path))
+    val e2 = intercept[IllegalStateException](StoredTable.readStore(spark, path))
     assert(e2.getMessage.contains("maintenance swap in progress"), e2.getMessage)
     val inc = docsD.where(col("doc_id") >= 450)
     val e3 = intercept[IllegalStateException](
@@ -941,7 +941,7 @@ class DedupSpec extends SparkSpec {
     assert(e3.getMessage.contains("maintenance swap in progress"), e3.getMessage)
     // sentinel down: compaction and probes proceed normally
     java.nio.file.Files.delete(sentinel)
-    Dedup.compactStore(spark, path, "win_mod", "win", Dedup.NMods, upTo = 1L)
+    StoredTable.compactStore(spark, path, "win_mod", "win", Dedup.NMods, upTo = 1L)
     assert(Dedup.substringMassIncrementalStored(spark, path, inc, width = 40).count() >= 0)
   }
 
@@ -967,18 +967,18 @@ class DedupSpec extends SparkSpec {
     // CASE A: promote fails, restore succeeds -> original back, no leftovers
     val (tmpA, origA, stagedA, storeA) = mkStore()
     failSrc = s => s.endsWith(".stage/part=0")
-    val eA = intercept[IllegalStateException](Dedup.recoverableSwap(
+    val eA = intercept[IllegalStateException](StoredTable.recoverableSwap(
       fs, "testop", storeA, new HPath(s"$tmpA/.trash"),
       asides = Seq(origA), promotes = Seq((stagedA, origA)), cleanup = Nil))
     assert(eA.getMessage.contains("original store restored"), eA.getMessage)
     assert(fs.exists(new HPath(origA, "data.bin")), "original partition must be back")
     assert(!fs.exists(new HPath(s"$tmpA/.trash")), "trash cleared after full restore")
-    assert(!fs.exists(new HPath(storeA, Dedup.MaintenanceSentinel)), "sentinel dropped")
+    assert(!fs.exists(new HPath(storeA, StoredTable.MaintenanceSentinel)), "sentinel dropped")
     // CASE B: promote fails AND rename-back fails -> trash + sentinel are
     // LEFT (the aside is the only copy); message names manual recovery
     val (tmpB, origB, stagedB, storeB) = mkStore()
     failSrc = s => s.endsWith(".stage/part=0") || s.contains("/.trash/")
-    val eB = intercept[IllegalStateException](Dedup.recoverableSwap(
+    val eB = intercept[IllegalStateException](StoredTable.recoverableSwap(
       fs, "testop", storeB, new HPath(s"$tmpB/.trash"),
       asides = Seq(origB), promotes = Seq((stagedB, origB)), cleanup = Nil))
     assert(eB.getMessage.contains("RESTORE INCOMPLETE"), eB.getMessage)
@@ -986,7 +986,7 @@ class DedupSpec extends SparkSpec {
     // same-named part files from different batch= dirs)
     assert(fs.exists(new HPath(s"$tmpB/.trash/0-part=0/data.bin")),
       "un-restored original must survive inside trash")
-    assert(fs.exists(new HPath(storeB, Dedup.MaintenanceSentinel)),
+    assert(fs.exists(new HPath(storeB, StoredTable.MaintenanceSentinel)),
       "sentinel must stay up so readStore keeps refusing")
     failSrc = _ => false
   }
@@ -1175,7 +1175,7 @@ class DedupSpec extends SparkSpec {
     def rowSet(dir: String) = spark.read.parquet(s"$dir/cells")
       .select("cell", "vec_id").as[(Int, Long)].collect().toSet
     val before = rowSet(a)
-    Dedup.compactStore(spark, s"$a/cells", "cell_mod", "vec_id", Dedup.NMods, upTo = 1L)
+    StoredTable.compactStore(spark, s"$a/cells", "cell_mod", "vec_id", Dedup.NMods, upTo = 1L)
     assert(rowSet(a) == before, "cells compaction must keep the (cell, vec_id) set")
     val dropsA = Dedup.semDedupIncrementalStored(spark, a, inc2, batchId = 2L)
       .as[Long].collect().toSet

@@ -226,7 +226,7 @@ class SimilaritySpec extends SparkSpec {
       .select("vec_id").as[Long].collect().toSet
     assert(got == bf, s"nprobe=nlist over the requantized store must equal brute force: $got vs $bf")
     // swap hygiene: no sentinel, no stage, no set-aside rows left behind
-    for (left <- Seq(".requant_stage", ".requant_old", s"cells/${graft.operators.Dedup.MaintenanceSentinel}"))
+    for (left <- Seq(".requant_stage", ".requant_old", s"cells/${graft.operators.StoredTable.MaintenanceSentinel}"))
       assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(tmp, left)), left)
   }
 
@@ -361,7 +361,7 @@ class SimilaritySpec extends SparkSpec {
       .select("vec_id").as[Long].collect().toSet
     assert(got == bf, s"exhaustive probe over the split store must equal brute force: $got vs $bf")
     for (left <- Seq("work/.split_stage", "work/.split_old",
-        s"work/cells/${graft.operators.Dedup.MaintenanceSentinel}"))
+        s"work/cells/${graft.operators.StoredTable.MaintenanceSentinel}"))
       assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(tmp, left)), left)
   }
 
@@ -386,7 +386,7 @@ class SimilaritySpec extends SparkSpec {
         probeId = 0L, k = 5, nprobe = 4)
       .as[(Long, Double)].collect().toSeq
     assert(afterTop == beforeTop, "the stored probe must be unchanged by compaction")
-    for (left <- Seq(".compact_stage", ".compact_old", s"cells/${graft.operators.Dedup.MaintenanceSentinel}"))
+    for (left <- Seq(".compact_stage", ".compact_old", s"cells/${graft.operators.StoredTable.MaintenanceSentinel}"))
       assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(tmp, left)), left)
     // stale leftovers refuse fast
     java.nio.file.Files.createDirectory(java.nio.file.Paths.get(tmp, ".compact_old"))
@@ -540,7 +540,7 @@ class SimilaritySpec extends SparkSpec {
     assert(codesAfter == codesBefore, "requantize must pass pq codes through untouched")
     // the swap left no leftovers and the store still serves the truth
     for (left <- Seq(".requant_stage", ".requant_old",
-        s"cells/${graft.operators.Dedup.MaintenanceSentinel}"))
+        s"cells/${graft.operators.StoredTable.MaintenanceSentinel}"))
       assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(tmp, left)), left)
     val got2 = Similarity.ivfPqTopKStored(spark, tmp, probeId = 0L,
         rerankWith = emb, k = 5, nprobe = 8, rerank = 8)
@@ -744,7 +744,7 @@ class SimilaritySpec extends SparkSpec {
     assert(Similarity.deleteFromIvfStore(spark, tmp, Seq(999999L)) == 0L)
     assert(files() == allAfter, "a 0-victim delete must leave the store untouched")
     for (l <- Seq(".delete_stage", ".delete_old",
-        s"cells/${graft.operators.Dedup.MaintenanceSentinel}"))
+        s"cells/${graft.operators.StoredTable.MaintenanceSentinel}"))
       assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(tmp, l)), l)
     // CODED layout (SQ8): the same erasure works payload-through — the
     // victims' rows vanish, every survivor's codes are byte-equal
@@ -829,12 +829,12 @@ class SimilaritySpec extends SparkSpec {
       out.toMap
     }
     // raise the sentinel exactly as a concurrent maintenance op would
-    val sentinelP = java.nio.file.Paths.get(data, graft.operators.Dedup.MaintenanceSentinel)
+    val sentinelP = java.nio.file.Paths.get(data, graft.operators.StoredTable.MaintenanceSentinel)
     java.nio.file.Files.createFile(sentinelP)
     val before = snapshot()
     val e = intercept[IllegalStateException](
       Similarity.deleteFromIvfStore(spark, tmp, Seq(1L, 2L)))
-    assert(e.getMessage.contains(graft.operators.Dedup.MaintenanceSentinel),
+    assert(e.getMessage.contains(graft.operators.StoredTable.MaintenanceSentinel),
       s"refusal must name the sentinel: ${e.getMessage}")
     assert(snapshot() == before,
       "a refused delete must leave every byte in place (incl. the sentinel)")
@@ -987,7 +987,7 @@ class SimilaritySpec extends SparkSpec {
       .select("vec_id", "cell").as[(Long, Int)].collect().sorted.toSeq
     assert(allAfter == all, "a no-op trigger must leave the store untouched")
     for (left <- Seq(".split_stage", ".split_old",
-        s"cells/${graft.operators.Dedup.MaintenanceSentinel}"))
+        s"cells/${graft.operators.StoredTable.MaintenanceSentinel}"))
       assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(tmp, left)), left)
   }
 
@@ -1042,7 +1042,7 @@ class SimilaritySpec extends SparkSpec {
     assert(Similarity.splitHotCells(spark, tmp, maxCellRows = 40) == 0)
     assert(files() == snap, "a memoized stuck cell must not pay any rewrite")
     for (left <- Seq(".split_stage", ".split_old",
-        s"cells/${graft.operators.Dedup.MaintenanceSentinel}"))
+        s"cells/${graft.operators.StoredTable.MaintenanceSentinel}"))
       assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(tmp, left)), left)
     // occupancy change re-arms: distinct near-anchor rows land in the
     // stuck cell; the next trigger retries and splits them back out
@@ -1119,7 +1119,7 @@ class SimilaritySpec extends SparkSpec {
       .select("vec_id").as[Long].collect().sorted.toSeq
     assert(contentAfter == contentBefore)
     for (left <- Seq(".split_stage", ".split_old",
-        s"cells/${graft.operators.Dedup.MaintenanceSentinel}"))
+        s"cells/${graft.operators.StoredTable.MaintenanceSentinel}"))
       assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(tmp, left)), left)
   }
 
@@ -1314,7 +1314,7 @@ class SimilaritySpec extends SparkSpec {
     assert(after == expected,
       s"late batch minus its victim must survive the widened fold: $after")
     for (l <- Seq(".compact_stage", ".compact_old",
-        s"cells/${graft.operators.Dedup.MaintenanceSentinel}"))
+        s"cells/${graft.operators.StoredTable.MaintenanceSentinel}"))
       assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(tmp, l)), l)
   }
 
@@ -1337,7 +1337,7 @@ class SimilaritySpec extends SparkSpec {
     assert(Similarity.drainPendingErasures(spark, tmp) == 0L,
       "an empty queue drains to 0")
     for (l <- Seq(s".cells_delete_stage", s".cells_delete_old",
-        s"cells/${graft.operators.Dedup.MaintenanceSentinel}"))
+        s"cells/${graft.operators.StoredTable.MaintenanceSentinel}"))
       assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(tmp, l)), l)
   }
 
@@ -1351,7 +1351,7 @@ class SimilaritySpec extends SparkSpec {
     val w = s"$tmp/work"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(w, "cells"))
     val sentinel = java.nio.file.Paths.get(w, "cells",
-      graft.operators.Dedup.MaintenanceSentinel)
+      graft.operators.StoredTable.MaintenanceSentinel)
     java.nio.file.Files.createFile(sentinel)
     Similarity.enqueueIvfErasure(spark, w, Seq(1L))
     // skew trigger armed so aggressively every batch would split — under

@@ -1,12 +1,13 @@
 package graft
 
-import graft.operators.{Dedup, Similarity, TextIndex}
+import graft.operators.{Dedup, Similarity, StoredTable, TextIndex}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
-/** The two store primitives every stored-index family shares: the
-  * copy-on-write erasure core ([[Dedup.deleteRowsFromStore]] and its
-  * table form) and the job-free store open ([[Dedup.readStore]]).
+/** The store primitives every stored-index family shares: the
+  * copy-on-write erasure core ([[StoredTable.deleteRowsFromStore]] and its
+  * table form), the job-free store open ([[StoredTable.readStore]]), the
+  * leftover pre-flight every mutation runs first, and batch compaction.
   */
 class StoreIoSpec extends SparkSpec {
   import spark.implicits._
@@ -49,11 +50,11 @@ class StoreIoSpec extends SparkSpec {
       val rows = spark.read.parquet(dir).as[(Long, Long, String, Int)].collect().toSeq
       val n = form match {
         case "literal" =>
-          Dedup.deleteRowsFromStore(spark, dir, "spec",
+          StoredTable.deleteRowsFromStore(spark, dir, "spec",
             col("id").isin(victims.map(java.lang.Long.valueOf): _*),
             partitionCols = Seq("p"), clusterCols = Seq("k", "id"))
         case _ =>
-          Dedup.deleteRowsFromStoreJoin(spark, dir, "spec", victims.toDF("id"), "id",
+          StoredTable.deleteRowsFromStoreJoin(spark, dir, "spec", victims.toDF("id"), "id",
             partitionCols = Seq("p"), clusterCols = Seq("k", "id"))
       }
       assert(n == victims.length, form)
@@ -111,7 +112,7 @@ class StoreIoSpec extends SparkSpec {
     try {
       for (t <- tables) {
         sc.setJobGroup(s"open $t", s"open $t")
-        val opened = try Dedup.readStore(spark, t) finally sc.clearJobGroup()
+        val opened = try StoredTable.readStore(spark, t) finally sc.clearJobGroup()
         assert(opened.schema == spark.read.parquet(t).schema, t)
       }
       // listener events arrive in order: once the marker job shows, any
@@ -124,5 +125,100 @@ class StoreIoSpec extends SparkSpec {
       val openJobs = groups.toArray.map(_.toString).filter(_.startsWith("open "))
       assert(openJobs.isEmpty, s"store opens ran jobs: ${openJobs.mkString(", ")}")
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("every store mutation refuses a leftover trash dir or sentinel " +
+       "before it changes a file") {
+    val docs = (0L until 60L).map(i => (i, s"alpha beta$i gamma${i % 5} delta"))
+      .toDF("doc_id", "text")
+    val rnd = new scala.util.Random(3)
+    val emb = (0L until 40L).map(i => (i, Array.fill(8)(rnd.nextGaussian().toFloat).toSeq))
+      .toDF("vec_id", "embedding")
+    def textIndex(r: String): Unit = TextIndex.appendTextIndexBatches(
+      Seq(docs.where(col("doc_id") < 30) -> 0L, docs.where(col("doc_id") >= 30) -> 1L),
+      s"$r/text", withPositions = true)
+    def semStore(r: String): Unit = Dedup.seedSemStore(emb, s"$r/sem", nlist = 4, sampleRows = 40)
+    // (op, store builder, the op, its trash dir, its sentinel dir) — paths
+    // relative to the fixture root; multi-table ops plant on a table other
+    // than the first they touch
+    val ops: Seq[(String, String => Unit, String => Any, String, String)] = Seq(
+      ("deleteFromMinhashIndex", { r =>
+        Dedup.seedStreamStores(docs, s"$r/idx", s"$r/acc", Seq("doc_id"), n = 3, perms = 32)
+        Dedup.minhashIncrementalStored(spark, s"$r/idx", docs, batchId = 0L).count()
+        ()
+      }, r => Dedup.deleteFromMinhashIndex(spark, s"$r/idx", Seq(3L, 40L)),
+        "idx/.shingles_delete_old", "idx/shingles"),
+      ("deleteFromSemStore", semStore,
+        r => Dedup.deleteFromSemStore(spark, s"$r/sem", Seq(3L, 20L)),
+        "sem/.cells_delete_old", "sem/cells"),
+      ("deleteFromTextIndex", textIndex,
+        r => TextIndex.deleteFromTextIndex(spark, s"$r/text", Seq(3L, 40L)),
+        "text/.stats_rewrite_old", "text/stats"),
+      ("compactTextIndexBatches", textIndex,
+        r => TextIndex.compactTextIndexBatches(spark, s"$r/text", upTo = 1L),
+        "text/.stats_compact_old", "text/stats"),
+      ("splitHotCells", { r =>
+        Similarity.streamIngestIvfBatch(emb, 0L, s"$r/ivf/ivf_index", s"$r/ivf/cells",
+          nlist = 2, sampleRows = 40)
+      }, r => Similarity.splitHotCells(spark, s"$r/ivf", maxCellRows = 5),
+        "ivf/.split_old", "ivf/cells"),
+      ("deleteFromCensusStore", { r =>
+        Dedup.writeCensusStore(Dedup.windowCensus(Dedup.windowTable(
+          Tables.documents(spark, Sf0001).where(col("doc_id") < 200))), s"$r/census", width = 40)
+      }, r => Dedup.deleteFromCensusStore(spark, s"$r/census",
+        Tables.documents(spark, Sf0001).where(col("doc_id") < 3), width = 40),
+        ".census_delete_old", "census"),
+      ("requantizeSemStore", semStore,
+        r => Dedup.requantizeSemStore(spark, s"$r/sem", newNlist = 8, sampleRows = 40),
+        "sem/.requant_old", "sem/cells"))
+    for ((op, build, run, trash, sentinelDir) <- ops) {
+      val root = java.nio.file.Files.createTempDirectory("leftover").toString
+      build(root)
+      val before = queries.Fixtures.snapStoreFiles(root)
+      val sentinel = s"$sentinelDir/${StoredTable.MaintenanceSentinel}"
+      for ((left, plant) <- Seq(
+          trash -> ((p: java.nio.file.Path) => java.nio.file.Files.createDirectories(p)),
+          sentinel -> ((p: java.nio.file.Path) => java.nio.file.Files.createFile(p)))) {
+        val p = java.nio.file.Paths.get(root, left)
+        plant(p)
+        val e = intercept[IllegalStateException](run(root))
+        assert(e.getMessage.contains(p.getFileName.toString),
+          s"$op: the refusal must name the leftover $left: ${e.getMessage}")
+        assert(queries.Fixtures.snapStoreFiles(root) == before,
+          s"$op: a refused mutation changed store files (leftover $left)")
+        java.nio.file.Files.delete(p)
+      }
+      // the fixture is one the op really changes once nothing is left over
+      run(root)
+      assert(queries.Fixtures.snapStoreFiles(root) != before, s"$op: the op changed nothing")
+    }
+  }
+
+  test("compaction over a batch range holding no rows leaves a readable, " +
+       "empty store with the same schema and no leftovers") {
+    val root = java.nio.file.Files.createTempDirectory("emptycompact").toString
+    val table = s"$root/census"
+    val cells = s"$root/ivf/cells"
+    for (b <- 0 to 1) {
+      Seq.empty[(String, Long)].toDF("win", "n_docs").coalesce(1)
+        .write.parquet(s"$table/batch=$b/win_mod=0")
+      Seq.empty[(Long, Seq[Float], Int)].toDF("vec_id", "embedding", "cell").coalesce(1)
+        .write.parquet(s"$cells/batch=$b")
+    }
+    val tableSchema = StoredTable.readStore(spark, table).schema
+    val cellsSchema = StoredTable.readStore(spark, cells).schema
+    StoredTable.compactStore(spark, table, "win_mod", "win", nMods = 4, upTo = 1L)
+    assert(Similarity.compactIvfStore(spark, s"$root/ivf", upTo = 1L) == 0L)
+    for ((dir, schema, leftovers) <- Seq(
+        (table, tableSchema, Seq(s"$table.compact_stage", s"$table/.compact_old")),
+        (cells, cellsSchema, Seq(s"$root/ivf/.compact_stage", s"$root/ivf/.compact_old")))) {
+      val after = StoredTable.readStore(spark, dir)
+      assert(after.schema == schema, dir)
+      assert(after.count() == 0L, dir)
+      assert(new java.io.File(dir).list().filter(_.startsWith("batch=")).toSeq == Seq("batch=1"), dir)
+      (leftovers :+ s"$dir/${StoredTable.MaintenanceSentinel}").foreach { l =>
+        assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(l)), s"leftover $l")
+      }
+    }
   }
 }

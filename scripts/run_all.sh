@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# One-shot reproduction: build, test, log_ingest, log_serve and index_lifecycle smokes, correctness vs DuckDB, bench.
+# One-shot reproduction: build, test, log_ingest, log_serve and index_lifecycle smokes, log_serve exact counts, correctness vs DuckDB, bench.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -15,6 +15,9 @@ python3 perfbench/run.py --workload log_ingest --seed 1 --seconds 0 --trace 0
 
 echo "== log_serve benchmark smoke (gates only) =="
 python3 perfbench/run.py --workload log_serve --seed 1 --seconds 0 --trace 0
+
+echo "== log_serve exact counts (jobs and files read per op) =="
+python3 perfbench/test_exact_counts.py log_serve
 
 echo "== index_lifecycle benchmark smoke (gates only) =="
 python3 perfbench/run.py --workload index_lifecycle --seed 1 --seconds 0 --trace 0

@@ -1230,7 +1230,9 @@ object Dedup {
     * 100 TB index compacts across the cluster, not through one executor)
     * promoted by the store-mutation protocol documented on
     * [[StoredTable]]. The three tables are independent, so they compact
-    * CONCURRENTLY on the writer pool, each through its own swap. At
+    * CONCURRENTLY on the writer pool, each through its own swap, after
+    * every table has pre-flighted: a leftover on any refuses the call
+    * before a file changes. At
     * object-store scale the promote step becomes a manifest commit
     * (`Layout.commitVersion`'s protocol) rather than a directory rename.
     */
@@ -1241,12 +1243,15 @@ object Dedup {
       targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
     val nm = storeNMods(idxDir)
     // three independent tables, each behind its own sentinel and swap —
-    // they compact concurrently, as [[deleteFromMinhashIndex]] erases them
-    StoredTable.inParallel(
+    // every one pre-flights first, so a leftover on one refuses before
+    // any compacts; then they compact concurrently, as
+    // [[deleteFromMinhashIndex]] erases them
+    val tables =
       Seq(bandsDir(idxDir) -> "bh_mod", sigsDir(idxDir) -> "did_mod", shsDir(idxDir) -> "did_mod")
-        .map { case (dir, modCol) =>
-          () => StoredTable.compactStore(spark, dir, modCol, "doc_id", nm, upTo, targetFileBytes)
-        })
+    tables.foreach { case (dir, _) => StoredTable.preflightCompaction(spark, dir) }
+    StoredTable.inParallel(tables.map { case (dir, modCol) =>
+      () => StoredTable.compactStore(spark, dir, modCol, "doc_id", nm, upTo, targetFileBytes)
+    })
     ()
   }
 

@@ -3,8 +3,9 @@ package graft.operators
 import java.sql.Timestamp
 
 import graft.functions.{Codec, Ulid}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 /** The partitioned event-log store — the reference's whole API surface,
   * re-expressed Spark-first.
@@ -21,8 +22,10 @@ import org.apache.spark.sql.functions._
   * of [[UserBuckets]] `user_bucket` directories. Opening the store lists a
   * bounded number of directories on the driver, however many users it
   * holds, and [[forUser]] still prunes every user-scoped read to one
-  * directory. `user_id` stays the shuffle key for reassembly, so the chunk
-  * gather is one hash-partitioned aggregation — no per-document round trips.
+  * directory. `user_id` stays the shuffle key for bulk reassembly, so
+  * gathering many documents' chunks is one hash-partitioned aggregation;
+  * one document is one pruned scan assembled on the driver — no
+  * per-chunk round trips either way.
   */
 object LogStore {
 
@@ -268,29 +271,59 @@ object LogStore {
       .withColumnRenamed("parent_key", "id")
   }
 
-  /** Reassemble a single logical document, with the reference's unsplit
-    * short-circuit (`BigDataLogControl.cs:129-132`): a `total_splits == 1`
-    * parent returns without the chunk gather.
+  /** Reassemble a single logical document — reference
+    * `GetCombinedLogChange` (`BigDataLogControl.cs:120-190`) — in ONE Spark
+    * job: one scan, pruned to the user's directory by [[forUser]], gathers
+    * the parent and its chunks (the `id = parent OR parent_log_id = parent`
+    * shape, `:135`), and one collect brings back only those rows — at most
+    * `total_splits` rows of at most [[Chunker.MaxDocBytes]] archive bytes
+    * each, the document the caller collects anyway. The driver orders them
+    * by split index, unzips and concatenates ([[Chunker.combine]], the
+    * reference's `CombineSplitLogs`) and re-zips, as the reference does
+    * (`:175-187`). Unlike [[reassemble]], no row is shuffled: one document
+    * is one parent key, so there is nothing to group across tasks.
+    *
+    * The reference's unsplit short-circuit (`:129-132`) needs no peek: the
+    * same gather returns an unsplit parent alone, and its stored row comes
+    * back as it is (archive bytes not re-zipped). An unknown parent is zero
+    * rows. Either way the result is a small local frame with the columns
+    * of [[reassemble]]'s rows.
     */
   def getCombined(logs: DataFrame, userId: String, parentId: String)(
       implicit spark: SparkSession): DataFrame = {
-    val parent = pointLookup(logs, userId, parentId)
-    // the unsplit short-circuit (`BigDataLogControl.cs:129-132`): peek the
-    // parent's split count (one partition-pruned point read) and skip the
-    // chunk gather entirely when the document was never split — the
-    // returned plan is a pure projection, no aggregate
-    val splits = parent.select(col("total_splits")).collect()
-    if (splits.nonEmpty && splits.head.getInt(0) <= 1)
-      parent.select(
-        col("user_id"), col("id"),
-        Codec.unzip_str(col("zipped_log")).as("payload"),
-        col("total_splits"), col("js_time_of_creation"),
-        col("event_type"), col("trigger"), col("zipped_log"),
-        lit(0).as("split_index"))
-    else
-      reassemble(logs.where(
-        forUser(logs, userId) &&
-          (col("id") === parentId || col("parent_log_id") === parentId)))
+    val meta = Seq("total_splits", "js_time_of_creation", "event_type", "trigger")
+    val rows = logs
+      .where(forUser(logs, userId) &&
+        (col("id") === parentId || col("parent_log_id") === parentId))
+      .select((Seq("id", "split_index", "zipped_log") ++ meta).map(col): _*)
+      .collect().toSeq
+    val parents = rows.filter(_.getAs[String]("id") == parentId)
+    val out =
+      if (parents.nonEmpty && parents.head.getAs[Int]("total_splits") <= 1)
+        parents.map { p =>
+          val zipped = p.getAs[Array[Byte]]("zipped_log")
+          Row.fromSeq(Seq(userId, parentId, Codec.unzipStr(zipped)) ++
+            meta.map(p.getAs[Any]) ++ Seq(zipped, 0))
+        }
+      else if (rows.isEmpty) Nil
+      else {
+        // reassemble's array_join skips null chunks, and its max/min
+        // aggregates skip null values; so does this
+        val payload = Chunker.combine(rows.flatMap { r =>
+          Option(Codec.unzipStr(r.getAs[Array[Byte]]("zipped_log")))
+            .map(r.getAs[Int]("split_index") -> _)
+        })
+        def pick(c: String)(keep: Int => Boolean): Any =
+          rows.map(_.getAs[Any](c)).filter(_ != null).map(_.asInstanceOf[Comparable[Any]])
+            .reduceOption((a, b) => if (keep(a.compareTo(b))) a else b).orNull
+        Seq(Row.fromSeq(Seq(userId, parentId, payload, pick("total_splits")(_ >= 0)) ++
+          meta.tail.map(pick(_)(_ <= 0)) ++ Seq(Codec.zipStr(payload), 0)))
+      }
+    val schema = StructType(
+      Seq(logs.schema("user_id"), logs.schema("id"), StructField("payload", StringType)) ++
+        (meta :+ "zipped_log").map(logs.schema(_)) :+
+        StructField("split_index", IntegerType, nullable = false))
+    spark.createDataFrame(java.util.Arrays.asList(out: _*), schema)
   }
 
   /** Enum-stamp update — reference `UpdateTrigger` (`LogChange.cs:75-78`,

@@ -523,6 +523,16 @@ object StoredTable {
     dropped
   }
 
+  /** [[preflight]] of [[compactStore]]'s swap on `storeDir` — for an op
+    * that compacts several tables and must refuse a leftover on ANY of
+    * them before compacting the first.
+    */
+  private[graft] def preflightCompaction(spark: SparkSession, storeDir: String): Swap = {
+    val storeP = new Path(storeDir)
+    preflight(storeP.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      "compactStore", storeP, new Path(storeDir, ".compact_old"))
+  }
+
   /** Compact ONE batch-partitioned, hash-fanned-out store table — the
     * maintenance op shared by the band/doc index (`Dedup.compactIndex`),
     * census deltas and semantic cell assignments: rewrite every
@@ -550,7 +560,7 @@ object StoredTable {
       targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
     val storeP = new Path(storeDir)
     val fs = storeP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val swap = preflight(fs, "compactStore", storeP, new Path(storeDir, ".compact_old"))
+    val swap = preflightCompaction(spark, storeDir)
     val olds = fs.listStatus(storeP).filter { st =>
       val name = st.getPath.getName
       name.startsWith("batch=") && name.stripPrefix("batch=").toLong <= upTo

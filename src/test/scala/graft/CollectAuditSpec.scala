@@ -30,8 +30,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    the erasure core deleteRowsFromStore's per-victim-file counts (≤
   *    the store's file count).
   *  - Layout: two 2-value min/max bounds for Z-order bit interleaving.
-  *  - LogStore: O(total_splits) split-count read for one document's
-  *    reassembly (reference semantics: per-doc, bounded by chunking).
+  *  - LogStore: getCombined's one gather collect — one document's chunk
+  *    rows, at most total_splits rows of at most Chunker.MaxDocBytes
+  *    archive bytes each, the document the caller collects anyway (it
+  *    replaced the split-count peek, so the count stays 1).
   *  - Corpus: 1-value approx distinct-gram count sizing a Bloom filter,
   *    and the 1-row argmax merge-rule read per BPE training round (the
   *    rule IS the trained artifact; ≤ mergeRounds rows total).

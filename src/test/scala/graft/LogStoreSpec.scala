@@ -4,6 +4,8 @@ import java.nio.file.Files
 
 import graft.functions.Codec
 import graft.operators.{Chunker, LogStore}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.functions._
 
 class LogStoreSpec extends SparkSpec {
@@ -80,14 +82,76 @@ class LogStoreSpec extends SparkSpec {
       Seq(1700000000002L, 1700000000001L))
   }
 
-  /** Partition directories the executed scan of `df` read (`df` must have run). */
-  private def partitionsRead(df: org.apache.spark.sql.DataFrame): Long = {
-    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
-    val scans = helper.collect(df.queryExecution.executedPlan) {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }
-    assert(scans.length == 1, s"expected one file scan:\n${df.queryExecution.executedPlan}")
+  private val planHelper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+
+  private def fileScans(plan: SparkPlan): Seq[FileSourceScanExec] =
+    planHelper.collect(plan) { case f: FileSourceScanExec => f }
+
+  /** Partition directories the one file scan of `plan` read (`plan` must have run). */
+  private def partitionsRead(plan: SparkPlan): Long = {
+    val scans = fileScans(plan)
+    assert(scans.length == 1, s"expected one file scan:\n$plan")
     scans.head.metrics("numPartitions").value
+  }
+
+  private def partitionsRead(df: DataFrame): Long = partitionsRead(df.queryExecution.executedPlan)
+
+  /** What `body` ran: the Spark jobs it submitted, the bytes its tasks wrote
+    * to shuffle, and the executed plans of the queries it ran.
+    */
+  private case class Traced[T](result: T, jobs: Int, shuffleBytes: Long, plans: Seq[SparkPlan])
+
+  private def traced[T](body: => T): Traced[T] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    val group = s"logstore-traced-${java.util.UUID.randomUUID()}"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val jobs = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val g = Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
+        if (g == group) e.stageIds.foreach(stages.add)
+        groups.add(g)
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          shuffleBytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    val queries = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    // listener events arrive in submission order, so once a marker job is
+    // seen every earlier job and query has been seen too
+    def drain(marker: String): Unit = {
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      var waited = 0
+      while (!groups.contains(marker) && waited < 100) { Thread.sleep(100); waited += 1 }
+      assert(groups.contains(marker), "marker job never reached the listener")
+    }
+    sc.addSparkListener(jobs)
+    try {
+      drain(s"$group-before") // so queries run before the body are not captured
+      spark.listenerManager.register(queries)
+      sc.setJobGroup(group, "traced")
+      val result = try body finally sc.clearJobGroup()
+      drain(s"$group-after")
+      Traced(result, groups.toArray.count(_ == group), shuffleBytes.get,
+        plans.toArray(Array.empty[SparkPlan]).toSeq)
+    } finally {
+      spark.listenerManager.unregister(queries)
+      sc.removeSparkListener(jobs)
+    }
+  }
+
+  /** The one file scan among `plans`: the chunk gather of a `getCombined` call. */
+  private def gatherPlan(plans: Seq[SparkPlan]): SparkPlan = {
+    val withScan = plans.filter(fileScans(_).nonEmpty)
+    assert(withScan.length == 1, s"expected one query with a file scan:\n${withScan.mkString("\n")}")
+    withScan.head
   }
 
   private def partitionDirs(dir: String, column: String): Seq[String] =
@@ -205,29 +269,9 @@ class LogStoreSpec extends SparkSpec {
     val dirs = partitionDirs(dir, LogStore.BucketColumn)
     assert(dirs.nonEmpty && dirs.length <= LogStore.UserBuckets, s"bucket dirs: $dirs")
     val schema = spark.read.parquet(dir).schema
-    // listener events arrive in submission order, so once the marker job is
-    // seen every job the open submitted has been seen too
-    val group = "logstore-open"
-    val marker = "logstore-open-marker"
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "open")
-      val opened = try spark.read.schema(schema).parquet(dir) finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      var waited = 0
-      while (!groups.contains(marker) && waited < 100) { Thread.sleep(100); waited += 1 }
-      assert(groups.contains(marker), "marker job never reached the listener")
-      val openJobs = groups.toArray.count(_ == group)
-      assert(openJobs == 0, s"opening the store submitted $openJobs Spark job(s)")
-      assert(opened.inputFiles.length == dirs.length, "one file per bucket directory")
-    } finally sc.removeSparkListener(listener)
+    val open = traced(spark.read.schema(schema).parquet(dir))
+    assert(open.jobs == 0, s"opening the store submitted ${open.jobs} Spark job(s)")
+    assert(open.result.inputFiles.length == dirs.length, "one file per bucket directory")
   }
 
   test("stores partitioned by user_id still answer and prune on user_id") {
@@ -240,11 +284,9 @@ class LogStoreSpec extends SparkSpec {
     assert(partitionDirs(dir, "user_id") == Seq("user_id=u1", "user_id=u2"))
     val back = spark.read.parquet(dir)
     assert(!back.columns.contains(LogStore.BucketColumn))
-    def prunesOnUser(df: org.apache.spark.sql.DataFrame): Unit = {
-      val plan = df.queryExecution.executedPlan.toString
-      assert("""PartitionFilters: \[[^\]]*\(user_id#\d+ = u1\)""".r.findFirstIn(plan).isDefined,
+    def prunesOnUser(plan: SparkPlan): Unit =
+      assert("""PartitionFilters: \[[^\]]*\(user_id#\d+ = u1\)""".r.findFirstIn(plan.toString).isDefined,
         s"expected user_id partition filter in scan:\n$plan")
-    }
     val parents = back.where(col("user_id") === "u1" && col("parent_log_id").isNull)
       .select("id", "total_splits").as[(String, Int)].collect().toMap
     assert(parents.size == 2)
@@ -254,18 +296,21 @@ class LogStoreSpec extends SparkSpec {
     val hit = LogStore.pointLookup(back, "u1", smallId)
     val rows = hit.collect()
     assert(rows.length == 1 && Codec.unzipStr(rows.head.getAs[Array[Byte]]("zipped_log")) == "u1 small")
-    prunesOnUser(hit)
+    prunesOnUser(hit.queryExecution.executedPlan)
     assert(partitionsRead(hit) == 1)
 
     val recent = LogStore.logChangesByType(back, userId = Some("u1"), limit = 100)
     val recentRows = recent.select("user_id", "split_index").as[(String, Int)].collect()
     assert(recentRows.length == parents(splitId) + 1 && recentRows.forall(_._1 == "u1"))
-    prunesOnUser(recent)
+    prunesOnUser(recent.queryExecution.executedPlan)
 
+    // getCombined returns a local frame: the pruning shows on the gather it ran
     for ((id, want) <- Seq(splitId -> big, smallId -> "u1 small")) {
-      val combined = LogStore.getCombined(back, "u1", id)
-      assert(combined.head().getAs[String]("payload") == want)
-      prunesOnUser(combined)
+      val combined = traced(LogStore.getCombined(back, "u1", id).collect())
+      assert(combined.result.map(_.getAs[String]("payload")).toSeq == Seq(want))
+      val gather = gatherPlan(combined.plans)
+      prunesOnUser(gather)
+      assert(partitionsRead(gather) == 1, s"gather of $id read more than one directory:\n$gather")
     }
   }
 
@@ -275,20 +320,68 @@ class LogStoreSpec extends SparkSpec {
     val dir = Files.createTempDirectory("combined").toFile.getAbsolutePath + "/logs"
     LogStore.writeLogs(LogStore.ingest(mkDocs("u1" -> big, "u2" -> "tiny")), dir)
     val back = spark.read.parquet(dir)
+    assert(back.where(col("user_id") === "u1").count() > 1, "fixture must split u1's document")
     for ((user, want) <- Seq("u1" -> big, "u2" -> "tiny")) {
-      val parentId = back
-        .where(col("user_id") === user && col("parent_log_id").isNull)
-        .head().getAs[String]("id")
-      val got = LogStore.getCombined(back, user, parentId)
-      assert(got.head().getAs[String]("payload") == want)
-      // the unsplit short-circuit (BigDataLogControl.cs:129-132) must skip
-      // the chunk gather: no Aggregate anywhere in the plan
-      val hasAggregate = got.queryExecution.optimizedPlan.collectFirst {
-        case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
-      }.isDefined
-      if (user == "u2") assert(!hasAggregate, "unsplit doc must not plan a gather")
-      else assert(hasAggregate, "split doc must gather its chunks")
+      val parent = back.where(col("user_id") === user && col("parent_log_id").isNull).head()
+      val parentId = parent.getAs[String]("id")
+      val got = traced(LogStore.getCombined(back, user, parentId).collect())
+      assert(got.result.length == 1)
+      val row = got.result.head
+      assert(row.getAs[String]("payload") == want)
+      assert(row.getAs[String]("id") == parentId && row.getAs[Int]("split_index") == 0 &&
+        row.getAs[Int]("total_splits") == parent.getAs[Int]("total_splits"))
+      // a split document's chunks are re-zipped into one archive; an
+      // unsplit one's stored archive comes back byte-equal, not re-zipped
+      val zipped = row.getAs[Array[Byte]]("zipped_log")
+      assert(Codec.unzipStr(zipped) == want)
+      if (user == "u2") assert(zipped.sameElements(parent.getAs[Array[Byte]]("zipped_log")))
+      // split or not, the document is one pruned gather: one job, no shuffle
+      assert(got.jobs == 1, s"$user: getCombined submitted ${got.jobs} Spark jobs")
+      assert(got.shuffleBytes == 0L, s"$user: getCombined shuffled ${got.shuffleBytes} bytes")
+      val gather = gatherPlan(got.plans)
+      assert(fileScans(gather).head.partitionFilters.exists(
+        _.references.exists(_.name == LogStore.BucketColumn)),
+        s"expected ${LogStore.BucketColumn} partition filter in the gather:\n$gather")
+      assert(partitionsRead(gather) == 1, s"$user: gather read more than one directory:\n$gather")
     }
+  }
+
+  test("getCombined of an unknown parent id returns no row, with a hit's columns and types") {
+    implicit val s = spark
+    val dir = Files.createTempDirectory("combinedmiss").toFile.getAbsolutePath + "/logs"
+    LogStore.writeLogs(LogStore.ingest(mkDocs("u1" -> "u1 small")), dir)
+    val back = spark.read.parquet(dir)
+    val id = back.head().getAs[String]("id")
+    def shape(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    val hit = LogStore.getCombined(back, "u1", id)
+    assert(hit.count() == 1)
+    assert(shape(hit) == shape(LogStore.reassemble(back)))
+    for ((user, parent) <- Seq("u1" -> s"${id}x", "u1" -> "", "nobody" -> id)) {
+      val miss = LogStore.getCombined(back, user, parent)
+      assert(miss.collect().isEmpty, s"$user/$parent")
+      assert(shape(miss) == shape(hit), s"$user/$parent")
+    }
+  }
+
+  test("getCombined reassembles chunk rows that arrive in reverse split order") {
+    implicit val s = spark
+    val big = TestText.random(4 * 1024 * 1024, seed = 31)
+    // collected once: ingest mints ids at evaluation time
+    val ingested = LogStore.ingest(mkDocs("u1" -> big, "u1" -> "u1 small"))
+    val rows = ingested.collect().sortBy(r => -r.getAs[Int]("split_index"))
+    val chunks = rows.count(_.getAs[Int]("total_splits") > 1)
+    assert(chunks > 2, s"fixture must split into several chunks, got $chunks")
+    val parentId = rows.find(r => r.getAs[Int]("total_splits") > 1 &&
+      r.getAs[Int]("split_index") == 0).get.getAs[String]("id")
+    // an in-memory frame keeps this row order; a store does not promise any
+    val logs = spark.createDataFrame(java.util.Arrays.asList(rows: _*), ingested.schema)
+    assert(logs.select("split_index").as[Int].collect().take(chunks).toSeq ==
+      (chunks - 1 to 0 by -1), "frame must feed the chunks in reverse split order")
+    val got = LogStore.getCombined(logs, "u1", parentId).collect()
+    assert(got.length == 1)
+    assert(got.head.getAs[String]("payload") == big)
+    assert(got.head.getAs[Int]("total_splits") == chunks)
+    assert(Codec.unzipStr(got.head.getAs[Array[Byte]]("zipped_log")) == big)
   }
 
   test("observe metrics report ingest telemetry without extra passes") {

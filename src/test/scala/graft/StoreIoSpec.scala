@@ -138,16 +138,21 @@ class StoreIoSpec extends SparkSpec {
       Seq(docs.where(col("doc_id") < 30) -> 0L, docs.where(col("doc_id") >= 30) -> 1L),
       s"$r/text", withPositions = true)
     def semStore(r: String): Unit = Dedup.seedSemStore(emb, s"$r/sem", nlist = 4, sampleRows = 40)
+    def minhashIndex(r: String): Unit = {
+      Dedup.seedStreamStores(docs, s"$r/idx", s"$r/acc", Seq("doc_id"), n = 3, perms = 32)
+      Dedup.minhashIncrementalStored(spark, s"$r/idx", docs, batchId = 0L).count()
+      ()
+    }
     // (op, store builder, the op, its trash dir, its sentinel dir) — paths
     // relative to the fixture root; multi-table ops plant on a table other
     // than the first they touch
     val ops: Seq[(String, String => Unit, String => Any, String, String)] = Seq(
-      ("deleteFromMinhashIndex", { r =>
-        Dedup.seedStreamStores(docs, s"$r/idx", s"$r/acc", Seq("doc_id"), n = 3, perms = 32)
-        Dedup.minhashIncrementalStored(spark, s"$r/idx", docs, batchId = 0L).count()
-        ()
-      }, r => Dedup.deleteFromMinhashIndex(spark, s"$r/idx", Seq(3L, 40L)),
+      ("deleteFromMinhashIndex", minhashIndex,
+        r => Dedup.deleteFromMinhashIndex(spark, s"$r/idx", Seq(3L, 40L)),
         "idx/.shingles_delete_old", "idx/shingles"),
+      ("compactIndex", minhashIndex,
+        r => Dedup.compactIndex(spark, s"$r/idx", upTo = 0L),
+        "idx/shingles/.compact_old", "idx/shingles"),
       ("deleteFromSemStore", semStore,
         r => Dedup.deleteFromSemStore(spark, s"$r/sem", Seq(3L, 20L)),
         "sem/.cells_delete_old", "sem/cells"),

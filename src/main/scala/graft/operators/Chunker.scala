@@ -16,6 +16,13 @@ import graft.functions.Codec
   * per row inside the ingest's `Generate` (see `LogStore.ingest`), which
   * stores the archives the size check produced. The pure core is
   * scalacheck-testable without a SparkSession.
+  *
+  * Every zip here is `Codec.zipStr`, which deflates a payload of more
+  * than one block (`Codec.BlockBytes`, 256 KiB of UTF-8) block-parallel
+  * on the codec's shared pool: the whole-payload zip that measures an
+  * oversized document's ratio, and each chunk's cap-check zip, run on
+  * every core rather than in the one task thread that holds the
+  * document, which otherwise sets the length of the ingest's stage.
   */
 object Chunker {
 

@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# One-shot reproduction: build, test, log_ingest, log_serve and index_lifecycle smokes, log_ingest and log_serve exact counts, correctness vs DuckDB, bench.
+# One-shot reproduction: build, test, log_ingest, log_serve and index_lifecycle smokes and exact counts, correctness vs DuckDB, bench.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -24,6 +24,9 @@ python3 perfbench/test_exact_counts.py log_serve
 
 echo "== index_lifecycle benchmark smoke (gates only) =="
 python3 perfbench/run.py --workload index_lifecycle --seed 1 --seconds 0 --trace 0
+
+echo "== index_lifecycle exact counts (jobs and files per op; store files) =="
+python3 perfbench/test_exact_counts.py index_lifecycle
 
 echo "== correctness dump ($SF_CORRECTNESS) =="
 rm -rf "$OUT"

@@ -3,6 +3,7 @@ package graft.operators
 import graft.functions.{TextFunctions => TF, VectorOps}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import StoredTable.StoreWriter
 
 /** Deduplication suite for training-data pipelines.
   *
@@ -81,17 +82,17 @@ object Dedup {
         case (k, v)         => s""""$k":$v"""
       }.mkString("{", ",", "}")
     def exists(root: String): Boolean = {
-      val p = path(root); p.getFileSystem(hconf).exists(p)
+      val p = path(root); StoredTable.fileSystem(hconf, p).exists(p)
     }
     def write(root: String, json: String): Unit = {
       val p = path(root)
-      val out = p.getFileSystem(hconf).create(p, true)
+      val out = StoredTable.fileSystem(hconf, p).create(p, true)
       try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
     }
     def read(root: String): String = {
       val p = path(root)
-      val fs = p.getFileSystem(hconf)
+      val fs = StoredTable.fileSystem(hconf, p)
       if (!fs.exists(p))
         throw new IllegalStateException(
           s"$kind at $root has no manifest — refusing to read an unverifiable store")
@@ -817,7 +818,7 @@ object Dedup {
     import org.apache.hadoop.fs.Path
     val nm = CensusManifest.checkAndNMods(censusPath, width)
     val root = new Path(censusPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StoredTable.fileSystem(spark, root)
     val (swap, stageRoot) = StoredTable.preflightBeside(fs, root, "deleteFromCensusStore", "delete")
     val decs = windowTable(victimDocs, width)
       .select(col("doc_id"), col("win")).distinct()
@@ -859,7 +860,7 @@ object Dedup {
     netted
       .repartitionByRange(slices, col("win_mod"), col("win"))
       .sortWithinPartitions(col("win_mod"), col("win"))
-      .write.mode("overwrite").partitionBy("win_mod")
+      .storeWrite.mode("overwrite").partitionBy("win_mod")
       .parquet(stageRoot.toString)
     agg.unpersist(); decs.unpersist()
     swap.verify(stageRoot)
@@ -919,13 +920,13 @@ object Dedup {
       nMods: Int = NMods, bands: Int = 8): Unit = {
     val empty = indexTable(static, n, perms).limit(0)
     bandRows(empty, perms, bands).select(col("band"), col("band_hash"), col("doc_id"))
-      .write.mode("overwrite").parquet(s"${bandsDir(idxDir)}/batch=-1/bh_mod=0")
+      .storeWrite.mode("overwrite").parquet(s"${bandsDir(idxDir)}/batch=-1/bh_mod=0")
     empty.select(col("doc_id"), col("sig"))
-      .write.mode("overwrite").parquet(s"${sigsDir(idxDir)}/batch=-1/did_mod=0")
+      .storeWrite.mode("overwrite").parquet(s"${sigsDir(idxDir)}/batch=-1/did_mod=0")
     empty.select(col("doc_id"), col("sh"))
-      .write.mode("overwrite").parquet(s"${shsDir(idxDir)}/batch=-1/did_mod=0")
+      .storeWrite.mode("overwrite").parquet(s"${shsDir(idxDir)}/batch=-1/did_mod=0")
     static.select(keepCols.map(col): _*).limit(0)
-      .write.mode("overwrite").parquet(s"$accDir/batch=-1")
+      .storeWrite.mode("overwrite").parquet(s"$accDir/batch=-1")
     // pin the store's fanout so every later probe/append partitions with
     // the modulus the store was built with
     nModsIo.write(idxDir, nMods.toString)
@@ -1151,17 +1152,17 @@ object Dedup {
       .withColumn("bh_mod", pmod(col("band_hash"), lit(storeNMods(idxDir))).cast("int"))
       .select(col("band"), col("band_hash"), col("doc_id"), col("bh_mod"))
       .coalesce(1)
-      .write.mode("overwrite").partitionBy("bh_mod")
+      .storeWrite.mode("overwrite").partitionBy("bh_mod")
       .parquet(s"${bandsDir(idxDir)}/batch=$batchId"),
     () => bIdx.select(col("doc_id"), col("sig"))
       .withColumn("did_mod", pmod(col("doc_id"), lit(storeNMods(idxDir))).cast("int"))
       .coalesce(1)
-      .write.mode("overwrite").partitionBy("did_mod")
+      .storeWrite.mode("overwrite").partitionBy("did_mod")
       .parquet(s"${sigsDir(idxDir)}/batch=$batchId"),
     () => bIdx.select(col("doc_id"), col("sh"))
       .withColumn("did_mod", pmod(col("doc_id"), lit(storeNMods(idxDir))).cast("int"))
       .coalesce(1)
-      .write.mode("overwrite").partitionBy("did_mod")
+      .storeWrite.mode("overwrite").partitionBy("did_mod")
       .parquet(s"${shsDir(idxDir)}/batch=$batchId"))
 
   /** One micro-batch of the streaming dedup — REPLAY-IDEMPOTENT: the
@@ -1205,7 +1206,7 @@ object Dedup {
     StoredTable.inParallel(Seq(
       () => batch.join(broadcast(drops), Seq("doc_id"), "left_anti") // drops <= batch
         .select(keepCols.map(col): _*)
-        .write.mode("overwrite").parquet(s"$accDir/batch=$batchId")) ++
+        .storeWrite.mode("overwrite").parquet(s"$accDir/batch=$batchId")) ++
       indexAppends(idxDir, batchId, appendBands, bIdx))
     lap("writes")
     cleanup()
@@ -1720,7 +1721,7 @@ object Dedup {
   def writeCensusStore(census: DataFrame, path: String, width: Int,
       nMods: Int = NMods): Unit = {
     census.withColumn("win_mod", winMod(nMods))
-      .write.mode("overwrite").partitionBy("win_mod").parquet(path)
+      .storeWrite.mode("overwrite").partitionBy("win_mod").parquet(path)
     CensusManifest.write(path, width, nMods)
   }
 
@@ -1934,11 +1935,11 @@ object Dedup {
     // census deltas are hash-fanned-out by window ([[winMod]]) so each
     // batch's existence probe prunes to its own windows' partitions
     windowCensus(windowTable(static.limit(0), width))
-      .write.mode("overwrite").parquet(s"$censusDir/batch=-1/win_mod=0")
+      .storeWrite.mode("overwrite").parquet(s"$censusDir/batch=-1/win_mod=0")
     CensusManifest.write(censusDir, width, nMods)
     static.limit(0).select(col("doc_id"))
       .withColumn("n_dup_windows", lit(0L))
-      .write.mode("overwrite").parquet(s"$outDir/batch=-1")
+      .storeWrite.mode("overwrite").parquet(s"$outDir/batch=-1")
     withShufflePartitions(spark, 8) {
       val q = spark.readStream
         .schema(static.schema)
@@ -1980,14 +1981,14 @@ object Dedup {
     val shared = sharedIntra.unionByName(prior).distinct()
     winsInc.join(shared, Seq("win"), "left_semi")
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_dup_windows"))
-      .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+      .storeWrite.mode("overwrite").parquet(s"$outDir/batch=$batchId")
     // delta append under the store's fanout, own-partition overwrite
     // (replay-idempotent); coalesce(1) for the same small-file reason as
     // the band-store appends
     windowCensus(winsInc)
       .withColumn("win_mod", winMod(nm))
       .coalesce(1)
-      .write.mode("overwrite").partitionBy("win_mod")
+      .storeWrite.mode("overwrite").partitionBy("win_mod")
       .parquet(s"$censusDir/batch=$batchId")
     winsInc.unpersist()
     ()
@@ -2145,10 +2146,10 @@ object Dedup {
       else assignedF
     // empty batch=-1 partition: discovery resolves before any real append
     assigned.limit(0)
-      .write.mode("overwrite").parquet(s"$storeDir/cells/batch=-1/cell_mod=0")
+      .storeWrite.mode("overwrite").parquet(s"$storeDir/cells/batch=-1/cell_mod=0")
     assigned
       .withColumn("cell_mod", pmod(col("cell"), lit(nMods)).cast("int"))
-      .write.mode("overwrite").partitionBy("cell_mod")
+      .storeWrite.mode("overwrite").partitionBy("cell_mod")
       .parquet(s"$storeDir/cells/batch=0")
     SemManifest.write(storeDir, nlist, sampleRows, nMods, quantized)
   }
@@ -2217,7 +2218,7 @@ object Dedup {
       else incA
     append.withColumn("cell_mod", pmod(col("cell"), lit(nm)).cast("int"))
       .coalesce(1)
-      .write.mode("overwrite").partitionBy("cell_mod")
+      .storeWrite.mode("overwrite").partitionBy("cell_mod")
       .parquet(s"$storeDir/cells/batch=$batchId")
     incA.unpersist()
     drops
@@ -2264,7 +2265,7 @@ object Dedup {
     val conf = spark.sparkContext.hadoopConfiguration
     val cellsDir = s"$storeDir/cells"
     val centDir = s"$storeDir/centroids"
-    val fs = new Path(storeDir).getFileSystem(conf)
+    val fs = StoredTable.fileSystem(conf, new Path(storeDir))
     val stageRoot = s"$storeDir/.requant_stage"
     val swap = StoredTable.preflight(fs, "requantizeSemStore", new Path(cellsDir),
       new Path(storeDir, ".requant_old"), new Path(stageRoot))
@@ -2301,7 +2302,7 @@ object Dedup {
         pmod(col("cell"), lit(nm)).cast("int").as("cell_mod"): _*)
       .repartition(nm * slices, col("batch"), col("cell_mod"),
         pmod(xxhash64(col("vec_id")), lit(slices)))
-      .write.mode("overwrite").partitionBy("batch", "cell_mod")
+      .storeWrite.mode("overwrite").partitionBy("batch", "cell_mod")
       .parquet(s"$stageRoot/cells")
     rows.unpersist()
     val stagedCells = new Path(s"$stageRoot/cells")
@@ -2367,7 +2368,7 @@ object Dedup {
     val accDir = s"$workDir/accepted"
     val static = spark.read.parquet(inputDir)
     static.select(keepCols.map(col): _*).limit(0)
-      .write.mode("overwrite").parquet(s"$accDir/batch=-1")
+      .storeWrite.mode("overwrite").parquet(s"$accDir/batch=-1")
     withShufflePartitions(spark, 8) {
       val q = spark.readStream
         .schema(static.schema)
@@ -2404,7 +2405,7 @@ object Dedup {
           .select(col("cell"), col("vec_id"), col("qvec"), col("qscale"))
         else shape.select(col("cell"), col("vec_id"), col("embedding")))
         .limit(0)
-        .write.mode("overwrite").parquet(s"$storeDir/cells/batch=-1/cell_mod=0")
+        .storeWrite.mode("overwrite").parquet(s"$storeDir/cells/batch=-1/cell_mod=0")
       SemManifest.write(storeDir, nlist, sampleRows, nMods, quantized)
     }
     // probe with the quantizer the store CURRENTLY pins — after an
@@ -2416,7 +2417,7 @@ object Dedup {
       minCosine, curNlist, curSample)
     batch.join(broadcast(drops), Seq("vec_id"), "left_anti") // drops <= batch
       .select(keepCols.map(col): _*)
-      .write.mode("overwrite").parquet(s"$accDir/batch=$batchId")
+      .storeWrite.mode("overwrite").parquet(s"$accDir/batch=$batchId")
     // index maintenance BETWEEN batches: if this append pushed mean cell
     // membership past the target, grow the quantizer in place — the knob
     // that keeps per-batch within-cell compare O(batch · targetCellRows)

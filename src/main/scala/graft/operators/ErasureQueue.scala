@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import StoredTable.StoreWriter
 
 /** Shared PENDING-ERASURE QUEUE — right-to-erasure coordinated with a
   * LIVE ingest stream, one implementation for every stored-index family
@@ -42,7 +43,7 @@ private[graft] object ErasureQueue {
                  opName: String): Unit = {
     import org.apache.hadoop.fs.Path
     require(ids.nonEmpty, s"$opName: empty id set")
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StoredTable.fileSystem(spark, new Path(root))
     val dir = new Path(root, DirName)
     fs.mkdirs(dir)
     val name = java.util.UUID.randomUUID().toString
@@ -59,13 +60,13 @@ private[graft] object ErasureQueue {
   def enqueueTable(spark: SparkSession, root: String, victims: DataFrame,
                    key: String, opName: String): Unit = {
     import org.apache.hadoop.fs.Path
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StoredTable.fileSystem(spark, new Path(root))
     val dir = new Path(root, DirName)
     fs.mkdirs(dir)
     val name = java.util.UUID.randomUUID().toString
     val tmp = new Path(dir, s"_$name.tmp")
     victims.select(col(key).cast("long").as(key)).distinct()
-      .write.mode("overwrite").parquet(tmp.toString)
+      .storeWrite.mode("overwrite").parquet(tmp.toString)
     if (!fs.rename(tmp, new Path(dir, s"$name.reqp")))
       throw new IllegalStateException(
         s"$opName: could not publish bulk request $name under $dir")
@@ -78,7 +79,7 @@ private[graft] object ErasureQueue {
             applyIds: Seq[Long] => Long,
             applyTable: DataFrame => Long): Long = {
     import org.apache.hadoop.fs.Path
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StoredTable.fileSystem(spark, new Path(root))
     val dir = new Path(root, DirName)
     if (!fs.exists(dir)) return 0L
     val reqs = fs.listStatus(dir)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import StoredTable.StoreWriter
 
 /** Physical-layout utilities: the knobs that decide whether a 100 TB job
   * shuffles.
@@ -65,6 +66,9 @@ object Layout {
     // database (a non-default db's tables live under <db>.db/ and aren't
     // handled here)
     deleteRecursively(new java.io.File(whPath, table.toLowerCase))
+    // a catalog table, not a store: `saveAsTable` keeps a write's options
+    // as the table's storage properties, so `storeWrite` would pin the
+    // engine's file-system class into the catalog and every later read
     df.write
       .mode("overwrite")
       .bucketBy(buckets, bucketKey)
@@ -91,13 +95,12 @@ object Layout {
     */
   def compact(spark: SparkSession, inPath: String, outPath: String,
               targetBytes: Long): Int = {
-    val fs = new org.apache.hadoop.fs.Path(inPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StoredTable.fileSystem(spark, new org.apache.hadoop.fs.Path(inPath))
     val totalBytes = fs.listStatus(new org.apache.hadoop.fs.Path(inPath))
       .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
     val nOut = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
     spark.read.parquet(inPath).coalesce(nOut)
-      .write.mode("overwrite").parquet(outPath)
+      .storeWrite.mode("overwrite").parquet(outPath)
     nOut
   }
 
@@ -219,7 +222,7 @@ object Layout {
       .repartitionByRange(nFiles, col("__h"))
       .sortWithinPartitions(col("__h"))
       .drop("__h")
-      .write.mode("overwrite").parquet(path)
+      .storeWrite.mode("overwrite").parquet(path)
   }
 
   /** Write `df` clustered on ONE column into `nFiles` parquet files:
@@ -236,7 +239,7 @@ object Layout {
                      path: String, nFiles: Int): Unit =
     df.repartitionByRange(nFiles, col(clusterCol))
       .sortWithinPartitions(col(clusterCol))
-      .write.mode("overwrite").parquet(path)
+      .storeWrite.mode("overwrite").parquet(path)
 
   /** Write `df` z-ordered by two numeric columns into `nFiles` parquet
     * files: range-partition on the z-value, sort within partitions, drop
@@ -261,7 +264,7 @@ object Layout {
       .repartitionByRange(nFiles, col("__z"))
       .sortWithinPartitions(col("__z"))
       .drop("__z")
-      .write.mode("overwrite").parquet(path)
+      .storeWrite.mode("overwrite").parquet(path)
   }
 
   /** Atomic-commit protocol for the immutable-version sink layout
@@ -295,26 +298,14 @@ object Layout {
   // All version/manifest/pointer/vacuum file ops go through the Hadoop
   // FileSystem API, so the commit protocol actually runs against HDFS/S3-
   // class stores (the 100 TB deployment path), not just java.io.File.
-  // Local paths resolve to the RAW local filesystem: the checksummed
-  // LocalFileSystem wrapper would strew .crc sidecars through version and
-  // manifest directories that listing-based recovery (and any external
-  // reader) would then have to know to skip.
-
-  private def hadoopConf: org.apache.hadoop.conf.Configuration =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-
-  private def fsFor(p: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileSystem =
-    p.getFileSystem(hadoopConf) match {
-      case l: org.apache.hadoop.fs.LocalFileSystem => l.getRaw
-      case other => other
-    }
+  // Local paths resolve to the RAW local filesystem (StoredTable.rawFileSystem):
+  // the checksummed LocalFileSystem wrapper would strew .crc sidecars through
+  // version and manifest directories that listing-based recovery (and any
+  // external reader) would then have to know to skip.
 
   private def listNames(dir: org.apache.hadoop.fs.Path,
       dirsOnly: Boolean = false): Array[String] = {
-    val f = fsFor(dir)
+    val f = StoredTable.rawFileSystem(dir)
     if (!f.exists(dir)) Array.empty
     else f.listStatus(dir)
       .filter(st => !dirsOnly || st.isDirectory)
@@ -323,7 +314,7 @@ object Layout {
 
   private def writeSmallFile(p: org.apache.hadoop.fs.Path, content: String,
       overwrite: Boolean): Unit = {
-    val out = fsFor(p).create(p, overwrite)
+    val out = StoredTable.rawFileSystem(p).create(p, overwrite)
     try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
@@ -343,7 +334,7 @@ object Layout {
     if (fromManifest.nonEmpty) Some(fromManifest.max)
     else {
       val p = new org.apache.hadoop.fs.Path(root, PointerFile)
-      val f = fsFor(p)
+      val f = StoredTable.rawFileSystem(p)
       if (!f.exists(p) || f.getFileStatus(p).isDirectory) None
       else scala.util.Try {
         val len = f.getFileStatus(p).getLen.toInt
@@ -367,7 +358,7 @@ object Layout {
 
   def commitVersion(root: String, version: Long, stagedDir: String): Unit = {
     val rootP = new org.apache.hadoop.fs.Path(root)
-    val f = fsFor(rootP)
+    val f = StoredTable.rawFileSystem(rootP)
     val dst = new org.apache.hadoop.fs.Path(rootP, s"v$version")
     if (f.exists(dst)) f.delete(dst, true)
     // single-namespace-op rename on HDFS-class stores; on an object store
@@ -396,7 +387,7 @@ object Layout {
     val dstPtr = new org.apache.hadoop.fs.Path(rootP, PointerFile)
     writeSmallFile(tmp, version.toString, overwrite = true)
     try {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(f.getUri, hadoopConf)
+      val fc = org.apache.hadoop.fs.FileContext.getFileContext(f.getUri, StoredTable.activeHadoopConf)
       fc.rename(tmp, dstPtr, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
     } catch {
       case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
@@ -454,7 +445,7 @@ object Layout {
       .flatMap(c => committed.find(_ <= c))
     val stale = committed.drop(keep).filterNot(v => protectForReplay.contains(v))
     val rootP = new org.apache.hadoop.fs.Path(root)
-    val f = fsFor(rootP)
+    val f = StoredTable.rawFileSystem(rootP)
     stale.foreach { v =>
       f.delete(new org.apache.hadoop.fs.Path(rootP, s"v$v"), true)
       // retire the version's manifest entry with it: the log stays
@@ -484,7 +475,7 @@ object Layout {
     val key = "spark.sql.sources.partitionOverwriteMode"
     val prev = spark.conf.get(key)
     spark.conf.set(key, "dynamic")
-    try update.write.mode("overwrite").partitionBy(partitionCol).parquet(dir)
+    try update.storeWrite.mode("overwrite").partitionBy(partitionCol).parquet(dir)
     finally spark.conf.set(key, prev)
   }
 
@@ -505,7 +496,7 @@ object Layout {
                      partitionCol: String, expire: String => Boolean): Seq[String] = {
     import org.apache.hadoop.fs.Path
     val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StoredTable.fileSystem(spark, root)
     val prefix = s"$partitionCol="
     val dropped = scala.collection.mutable.ArrayBuffer.empty[String]
     fs.listStatus(root).foreach { st =>

@@ -6,6 +6,7 @@ import graft.functions.{Codec, Ulid}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+import StoredTable.StoreWriter
 
 /** The partitioned event-log store — the reference's whole API surface,
   * re-expressed Spark-first.
@@ -112,8 +113,15 @@ object LogStore {
     logs.withColumn(BucketColumn, userBucket(col("user_id")))
       .repartition(logs.sparkSession.sparkContext.defaultParallelism, bucket)
       .sortWithinPartitions(bucket, col("user_id"), col("js_time_of_creation"))
-      .write.mode("append").partitionBy(BucketColumn).parquet(path)
+      .storeWrite.mode("append").partitionBy(BucketColumn).parquet(path)
   }
+
+  /** Open a store [[writeLogs]] wrote, without a Spark job: the data
+    * schema comes from one file's footer ([[StoredTable.readStore]]), so
+    * Spark runs no schema-inference job, and the bucket directories are
+    * listed on the driver. The schema equals `spark.read.parquet(path)`'s.
+    */
+  def open(spark: SparkSession, path: String): DataFrame = StoredTable.readStore(spark, path)
 
   /** Bucket directories of a store [[writeLogs]] writes. At most 32 keeps
     * Spark's listing of the store on the driver
@@ -342,15 +350,7 @@ object LogStore {
     // through the RAW local fs so no .crc sidecar appears next to the
     // document the caller asked for
     val p = new org.apache.hadoop.fs.Path(path)
-    val conf = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-    val fs = p.getFileSystem(conf) match {
-      case l: org.apache.hadoop.fs.LocalFileSystem => l.getRaw
-      case other => other
-    }
-    val out = fs.create(p, true)
+    val out = StoredTable.rawFileSystem(p).create(p, true)
     try out.write(bytes)
     finally out.close()
   }

@@ -3,6 +3,7 @@ package graft.operators
 import graft.functions.VectorOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import StoredTable.StoreWriter
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -829,7 +830,7 @@ object Similarity {
       .map { case (c, i) => (i, c.toSeq) }.toSeq
       .toDF("cell", "centroid")
       .coalesce(1)
-      .write.mode("overwrite").parquet(path)
+      .storeWrite.mode("overwrite").parquet(path)
   }
 
   /** Load a persisted IVF index back into the centroid matrix — one tiny
@@ -857,7 +858,7 @@ object Similarity {
     import org.apache.hadoop.fs.Path
     val p = new Path(path)
     val conf = org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
-    val fs = p.getFileSystem(conf)
+    val fs = StoredTable.fileSystem(conf, p)
     if (!fs.exists(p)) "absent"
     else fs.listStatus(p).toSeq
       .map { st =>
@@ -888,7 +889,7 @@ object Similarity {
                                     idxPath: String): Unit = {
     import org.apache.hadoop.fs.Path
     val p = new Path(idxPath, MaintStampName)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StoredTable.fileSystem(spark, p)
     val out = fs.create(p, true)
     try out.write(java.util.UUID.randomUUID().toString.getBytes("UTF-8"))
     finally out.close()
@@ -1009,7 +1010,7 @@ object Similarity {
     try assigned
       .repartitionByRange(slices, col("cell"), col("vec_id"))
       .sortWithinPartitions("cell", "vec_id")
-      .write.mode("overwrite").parquet(s"$workDir/cells/batch=0")
+      .storeWrite.mode("overwrite").parquet(s"$workDir/cells/batch=0")
     finally { assigned.unpersist(); () }
   }
 
@@ -1108,10 +1109,10 @@ object Similarity {
     import org.apache.hadoop.fs.Path
     val idxPath = s"$workDir/ivf_index"
     val dataDir = s"$workDir/cells"
-    val fs = new Path(workDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StoredTable.fileSystem(spark, new Path(workDir))
     val static = spark.read.parquet(inputDir)
     seedLayout(static.withColumn("cell", lit(0))).limit(0)
-      .write.mode("overwrite").parquet(s"$dataDir/batch=-1")
+      .storeWrite.mode("overwrite").parquet(s"$dataDir/batch=-1")
     var storeRows =
       if (targetCellRows < Int.MaxValue) StoredTable.readStore(spark, dataDir).count() else 0L
     val batchCounts = scala.collection.mutable.Map.empty[Long, Long]
@@ -1249,13 +1250,13 @@ object Similarity {
       nlist: Int, sampleRows: Int, quantized: Boolean = false): Unit = {
     val s2 = batch.sparkSession
     val p = new org.apache.hadoop.fs.Path(idxPath)
-    val fs = p.getFileSystem(s2.sparkContext.hadoopConfiguration)
+    val fs = StoredTable.fileSystem(s2, p)
     if (!fs.exists(p)) saveIvfIndex(batch, idxPath, nlist, sampleRows)
     val centroids = loadIvfIndex(s2, idxPath)
     storedLayout(
       batch.withColumn("cell", nearestCellUdf(centroids)(col("embedding"))),
       quantized)
-      .write.mode("overwrite").parquet(s"$dataDir/batch=$batchId")
+      .storeWrite.mode("overwrite").parquet(s"$dataDir/batch=$batchId")
   }
 
   /** STREAMING IVF-PQ ingest — the composition a real 100 TB ANN
@@ -1311,8 +1312,7 @@ object Similarity {
     val s2 = batch.sparkSession
     val idxPath = s"$workDir/ivf_index"
     val pqPath = s"$workDir/pq_index"
-    val fs = new org.apache.hadoop.fs.Path(idxPath)
-      .getFileSystem(s2.sparkContext.hadoopConfiguration)
+    val fs = StoredTable.fileSystem(s2, new org.apache.hadoop.fs.Path(idxPath))
     if (!fs.exists(new org.apache.hadoop.fs.Path(idxPath)))
       saveIvfIndex(batch, idxPath, nlist, sampleRows)
     if (!fs.exists(new org.apache.hadoop.fs.Path(pqPath)))
@@ -1323,7 +1323,7 @@ object Similarity {
       .withColumn("cell", nearestCellUdf(centroids)(col("embedding")))
       .withColumn("pqcode", pqEncodeUdf(books)(col("embedding")))
       .drop("embedding")
-      .write.mode("overwrite").parquet(s"$workDir/cells/batch=$batchId")
+      .storeWrite.mode("overwrite").parquet(s"$workDir/cells/batch=$batchId")
   }
 
   /** IVF-PQ top-k over the STORED coded table — the serving path of
@@ -1549,7 +1549,7 @@ object Similarity {
     val idxDir = s"$workDir/ivf_index"
     val cellsDir = s"$workDir/cells"
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(workDir).getFileSystem(conf)
+    val fs = StoredTable.fileSystem(conf, new Path(workDir))
     val stageRoot = s"$workDir/.requant_stage"
     val swap = StoredTable.preflight(fs, "requantizeIvfStore", new Path(cellsDir),
       new Path(workDir, ".requant_old"), new Path(stageRoot))
@@ -1599,7 +1599,7 @@ object Similarity {
     // original codes pass through untouched
     (if (coded) relabeled.drop("embedding") else relabeled)
       .repartition(slices, col("batch"), pmod(xxhash64(col("vec_id")), lit(slices)))
-      .write.mode("overwrite").partitionBy("batch")
+      .storeWrite.mode("overwrite").partitionBy("batch")
       .parquet(s"$stageRoot/cells")
     rows.unpersist()
     val stagedCells = new Path(s"$stageRoot/cells")
@@ -1691,7 +1691,7 @@ object Similarity {
       victims: Option[org.apache.spark.sql.DataFrame]): Long = {
     import org.apache.hadoop.fs.Path
     val cellsDir = s"$workDir/cells"
-    val fs = new Path(workDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StoredTable.fileSystem(spark, new Path(workDir))
     val staged = new Path(workDir, ".compact_stage")
     val swap = StoredTable.preflight(fs, "compactIvfStore", new Path(cellsDir),
       new Path(workDir, ".compact_old"), staged)
@@ -1731,7 +1731,7 @@ object Similarity {
     // the compacted store stays readable
     try rows.repartitionByRange(slices, col("cell"), col("vec_id"))
       .sortWithinPartitions("cell", "vec_id")
-      .write.mode("overwrite").parquet(staged.toString)
+      .storeWrite.mode("overwrite").parquet(staged.toString)
     finally { rows.unpersist(); () }
     swap.verify(staged)
     swap.commit(
@@ -1840,7 +1840,7 @@ object Similarity {
     val idxDir = s"$workDir/ivf_index"
     val cellsDir = s"$workDir/cells"
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(workDir).getFileSystem(conf)
+    val fs = StoredTable.fileSystem(conf, new Path(workDir))
     val stageRoot = s"$workDir/.split_stage"
     val swap = StoredTable.preflight(fs, "splitHotCells", new Path(cellsDir),
       new Path(workDir, ".split_old"), new Path(stageRoot))
@@ -2000,7 +2000,7 @@ object Similarity {
     try (if (coded) relabeled.drop("embedding") else relabeled)
       .repartitionByRange(slices, col("batch"), col("cell"), col("vec_id"))
       .sortWithinPartitions("batch", "cell", "vec_id")
-      .write.mode("overwrite").partitionBy("batch")
+      .storeWrite.mode("overwrite").partitionBy("batch")
       .parquet(s"$stageRoot/cells")
     finally { relabeled.unpersist(); () }
     val stagedCells = new Path(s"$stageRoot/cells")
@@ -2242,7 +2242,7 @@ object Similarity {
     } yield (j, c, books(j)(c).toSeq))
       .toDF("subspace", "code", "centroid")
       .coalesce(1)
-      .write.mode("overwrite").parquet(path)
+      .storeWrite.mode("overwrite").parquet(path)
   }
 
   private val loadedPqCache =

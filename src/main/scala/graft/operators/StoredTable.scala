@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, LocalFileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The store-mutation protocol every stored-index family shares — the one
@@ -29,10 +30,71 @@ import org.apache.spark.sql.functions._
   * Alongside it: the job-free store open every probe reads through
   * ([[readStore]], which refuses while a swap is in progress), the
   * copy-on-write erasure core, batch-TTL retention, batch compaction,
-  * and the writer pool the concurrent table writes share
-  * ([[inParallel]]). Each family keeps only its own table recipes.
+  * the writer pool the concurrent table writes share ([[inParallel]]), and
+  * the one way the engine reaches its files: every store write starts at
+  * [[StoreWriter.storeWrite]] and every driver-side file operation takes
+  * its `FileSystem` from [[fileSystem]], so local stores never start a
+  * `chmod` process ([[SpawnFreeLocalFileSystem]]). Each family keeps only
+  * its own table recipes.
   */
 object StoredTable {
+
+  /** Data-source options that send one write's `file:` paths through
+    * [[SpawnFreeLocalFileSystem]]. Spark merges a write's options into that
+    * write's Hadoop conf, so its tasks, its committer and its `_SUCCESS`
+    * marker all use the class. They are set per write, not on the session:
+    * the caller owns the session's conf, and a session-wide `fs.file.impl`
+    * would change every other read and write the caller runs. The cache
+    * is off for the write because `FileSystem.get` caches by scheme,
+    * authority and user, not by conf — the session's cached
+    * `LocalFileSystem` would come back otherwise.
+    */
+  private[graft] val storeWriteOptions: Map[String, String] = Map(
+    "fs.file.impl" -> classOf[SpawnFreeLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
+  /** `ds.storeWrite` — the one start of every store write: `ds.write` with
+    * [[storeWriteOptions]].
+    */
+  implicit final class StoreWriter[T](private val ds: Dataset[T]) extends AnyVal {
+    def storeWrite: DataFrameWriter[T] = ds.write.options(storeWriteOptions)
+  }
+
+  /** The file system for driver-side store operations on `path`
+    * (`mkdirs`, `create`, `rename`, `delete`, listings): a fresh
+    * [[SpawnFreeLocalFileSystem]] over `conf` for a `file:` path (or a
+    * scheme-less one under a local default file system), else the path's
+    * own file system.
+    */
+  private[graft] def fileSystem(conf: Configuration, path: Path): FileSystem = {
+    val scheme = Option(path.toUri.getScheme).getOrElse(FileSystem.getDefaultUri(conf).getScheme)
+    if (scheme != "file") path.getFileSystem(conf)
+    else {
+      val fs = new SpawnFreeLocalFileSystem
+      fs.initialize(java.net.URI.create("file:///"), conf)
+      fs
+    }
+  }
+
+  private[graft] def fileSystem(spark: SparkSession, path: Path): FileSystem =
+    fileSystem(spark.sparkContext.hadoopConfiguration, path)
+
+  /** [[fileSystem]] under the active (else default) session's Hadoop conf,
+    * with a local path on the RAW layer: no `.crc` sidecar beside a file
+    * meant for other readers (a version pointer, a dumped document).
+    */
+  private[graft] def rawFileSystem(path: Path): FileSystem =
+    fileSystem(activeHadoopConf, path) match {
+      case l: LocalFileSystem => l.getRaw
+      case other => other
+    }
+
+  /** The active (else default) session's Hadoop conf, or a fresh one —
+    * for file operations that run without a session in hand.
+    */
+  private[graft] def activeHadoopConf: Configuration =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext.hadoopConfiguration).getOrElse(new Configuration())
 
   /** Bounded, named writer pool for the per-batch concurrent store writes:
     * a micro-batch's independent outputs (accepted rows, band append, doc
@@ -91,7 +153,7 @@ object StoredTable {
     // source partitions are moved aside but the replacement is not yet
     // promoted — a read in that window would silently see a truncated
     // store (missed duplicates), so refuse loudly instead
-    if (swapInProgress(new Path(path).getFileSystem(s2.sparkContext.hadoopConfiguration), path))
+    if (swapInProgress(fileSystem(s2, new Path(path)), path))
       throw new IllegalStateException(
         s"store at $path has a maintenance swap in progress ($MaintenanceSentinel " +
           "present) — refusing to read a possibly half-swapped store; if no " +
@@ -118,7 +180,7 @@ object StoredTable {
   private def storeDataSchema(spark: SparkSession,
                               path: String): Option[org.apache.spark.sql.types.StructType] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(path).getFileSystem(conf)
+    val fs = fileSystem(conf, new Path(path))
     def firstDataFile(dir: Path): Option[Path] = {
       val (files, dirs) = fs.listStatus(dir).filterNot { st =>
         st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith(".")
@@ -433,7 +495,7 @@ object StoredTable {
   private[graft] def preflightErasure(spark: SparkSession, storeDir: String,
                                       opName: String): Unit = {
     val storeP = new Path(storeDir)
-    preflightBeside(storeP.getFileSystem(spark.sparkContext.hadoopConfiguration),
+    preflightBeside(fileSystem(spark, storeP),
       storeP, opName, "delete")
     ()
   }
@@ -454,7 +516,7 @@ object StoredTable {
       clusterCols: Seq[String],
       afterPromote: () => Unit): Long = {
     val storeP = new Path(storeDir)
-    val fs = storeP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, storeP)
     val (swap, stageRoot) = preflightBeside(fs, storeP, opName, "delete")
     // one job: victim count AND owning-file list (≤ store file count).
     // input_file_name() attaches BEFORE victim marking: a join-based
@@ -475,7 +537,7 @@ object StoredTable {
         .option("basePath", fs.makeQualified(storeP).toString)
         .parquet(affected.map(_.toString): _*))
       .sortWithinPartitions((partitionCols ++ clusterCols).map(col): _*)
-      .write.mode("overwrite").partitionBy(partitionCols: _*)
+      .storeWrite.mode("overwrite").partitionBy(partitionCols: _*)
       .parquet(stageRoot.toString)
     swap.verify(stageRoot)
     swap.commit(
@@ -506,7 +568,7 @@ object StoredTable {
       cutoff: Long,
       afterDrop: () => Unit = () => ()): Seq[Long] = {
     val root = new Path(storeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, root)
     if (swapInProgress(fs, storeDir))
       throw new IllegalStateException(
         s"$opName: maintenance swap in progress at $storeDir " +
@@ -529,7 +591,7 @@ object StoredTable {
     */
   private[graft] def preflightCompaction(spark: SparkSession, storeDir: String): Swap = {
     val storeP = new Path(storeDir)
-    preflight(storeP.getFileSystem(spark.sparkContext.hadoopConfiguration),
+    preflight(fileSystem(spark, storeP),
       "compactStore", storeP, new Path(storeDir, ".compact_old"))
   }
 
@@ -559,7 +621,7 @@ object StoredTable {
       upTo: Long,
       targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
     val storeP = new Path(storeDir)
-    val fs = storeP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, storeP)
     val swap = preflightCompaction(spark, storeDir)
     val olds = fs.listStatus(storeP).filter { st =>
       val name = st.getPath.getName
@@ -575,11 +637,11 @@ object StoredTable {
     rows
       .repartition(nMods * slices, col(modCol),
         pmod(xxhash64(col(saltCol)), lit(slices)))
-      .write.mode("overwrite").partitionBy(modCol).parquet(stagedP.toString)
+      .storeWrite.mode("overwrite").partitionBy(modCol).parquet(stagedP.toString)
     if (!fs.exists(stagedP) ||
         !fs.listStatus(stagedP).exists(_.getPath.getName.startsWith(s"$modCol=")))
       rows.drop(modCol).coalesce(1)
-        .write.mode("overwrite").parquet(s"$stagedP/$modCol=0")
+        .storeWrite.mode("overwrite").parquet(s"$stagedP/$modCol=0")
     swap.verify(stagedP)
     swap.commit(
       asides = olds.map(_.getPath).toSeq,

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions => TF}
+import StoredTable.StoreWriter
 
 /** STORED INVERTED INDEX for lexical (BM25) retrieval — the last serve
   * path that still scanned the raw corpus per query
@@ -267,7 +268,7 @@ object TextIndex {
           .select(col("doc_id"), col("term"), col("tf"), col("dl"), col("tm_mod"))
           .repartitionByRange(col("tm_mod"), col("term"), col("doc_id"))
           .sortWithinPartitions(col("tm_mod"), col("term"), col("doc_id"))
-          .write.mode("overwrite").partitionBy("tm_mod")
+          .storeWrite.mode("overwrite").partitionBy("tm_mod")
           .parquet(s"${postingsDir(idxDir)}/batch=$batchId")
         postings.groupBy(col("term"))
           .agg(count(lit(1)).as("df"), max(col("tf")).as("max_tf"),
@@ -275,20 +276,20 @@ object TextIndex {
           .withColumn("tm_mod", pmod(hash(col("term")), lit(nMods)).cast("int"))
           .repartitionByRange(col("tm_mod"), col("term"))
           .sortWithinPartitions(col("tm_mod"), col("term"))
-          .write.mode("overwrite").partitionBy("tm_mod")
+          .storeWrite.mode("overwrite").partitionBy("tm_mod")
           .parquet(s"${termsDir(idxDir)}/batch=$batchId")
       }
       val wMembership = () => {
         membership
           .repartitionByRange(col("did_mod"), col("doc_id"))
           .sortWithinPartitions(col("did_mod"), col("doc_id"))
-          .write.mode("overwrite").partitionBy("did_mod")
+          .storeWrite.mode("overwrite").partitionBy("did_mod")
           .parquet(s"${docsDir(idxDir)}/batch=$batchId")
         membership.agg(
             count(lit(1)).as("n_docs"),
             coalesce(sum(col("dl")), lit(0L)).as("total_toks"))
           .coalesce(1)
-          .write.mode("overwrite").parquet(s"${statsDir(idxDir)}/batch=$batchId")
+          .storeWrite.mode("overwrite").parquet(s"${statsDir(idxDir)}/batch=$batchId")
       }
       // the OPTIONAL positional tier (the Lucene positions-enabled trade:
       // one extra tokenize pass + a token-stream-sized table buys phrase
@@ -305,7 +306,7 @@ object TextIndex {
             .withColumn("tm_mod", pmod(hash(col("term")), lit(nMods)).cast("int"))
             .repartitionByRange(col("tm_mod"), col("term"), col("doc_id"), col("pos"))
             .sortWithinPartitions(col("tm_mod"), col("term"), col("doc_id"), col("pos"))
-            .write.mode("overwrite").partitionBy("tm_mod")
+            .storeWrite.mode("overwrite").partitionBy("tm_mod")
             .parquet(s"${positionsDir(idxDir)}/batch=$batchId")
         })
     (Seq(wPostings, wMembership) ++ wPositions,
@@ -608,7 +609,7 @@ object TextIndex {
                             idxDir: String, nMods: Int = DefaultNMods,
                             withPositions: Boolean = false): Unit = {
     import org.apache.hadoop.fs.Path
-    val fs = new Path(idxDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StoredTable.fileSystem(spark, new Path(idxDir))
     val static = spark.read.parquet(inputDir)
     val q = spark.readStream
       .schema(static.schema)
@@ -840,7 +841,7 @@ object TextIndex {
         .agg(count(lit(1)).as("df"), max(col("tf")).as("max_tf"),
           min(col("dl")).as("min_dl"))
         .sortWithinPartitions(col("batch"), col("tm_mod"), col("term"))
-        .write.mode("overwrite").partitionBy("batch", "tm_mod")
+        .storeWrite.mode("overwrite").partitionBy("batch", "tm_mod")
         .parquet(stage)
     }
 
@@ -859,7 +860,7 @@ object TextIndex {
         .agg(count(lit(1)).as("n_docs"),
           coalesce(sum(col("dl")), lit(0L)).as("total_toks"))
         .coalesce(1)
-        .write.mode("overwrite").partitionBy("batch")
+        .storeWrite.mode("overwrite").partitionBy("batch")
         .parquet(stage)
     }
 
@@ -869,7 +870,7 @@ object TextIndex {
   private def rewriteSwap(spark: SparkSession, dir: String, opName: String)
       : (org.apache.hadoop.fs.FileSystem, StoredTable.Swap, org.apache.hadoop.fs.Path) = {
     val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StoredTable.fileSystem(spark, root)
     val (swap, stage) = StoredTable.preflightBeside(fs, root, opName, "rewrite")
     (fs, swap, stage)
   }
@@ -1013,7 +1014,7 @@ object TextIndex {
       try f
         .repartitionByRange(rangeCols.map(col): _*)
         .sortWithinPartitions(rangeCols.map(col): _*)
-        .write.mode("overwrite").partitionBy(partCol)
+        .storeWrite.mode("overwrite").partitionBy(partCol)
         .parquet(out)
       finally { f.unpersist(); () }
     }
@@ -1063,7 +1064,7 @@ object TextIndex {
                 .where(col("batch") <= upTo))
               .agg(count(lit(1)).as("n_docs"),
                 coalesce(sum(col("dl")), lit(0L)).as("total_toks"))
-        folded.coalesce(1).write.mode("overwrite").parquet(out)
+        folded.coalesce(1).storeWrite.mode("overwrite").parquet(out)
       }) ++ (if (!storeHasPositions(idxDir)) Nil else Seq(
       positionsDir(idxDir) -> { (src: DataFrame, out: String) =>
         // positional tier folds like the postings: pure row fold with
@@ -1092,7 +1093,7 @@ object TextIndex {
     // (dir, stage writer, source batches, the table's swap and stage)
     val active = recipes.flatMap { case (dir, stageWriter) =>
       val root = new Path(dir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = StoredTable.fileSystem(spark, root)
       val srcBatches = fs.listStatus(root).toSeq
         .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
         .map(st => st.getPath.getName.stripPrefix("batch=").toLong)

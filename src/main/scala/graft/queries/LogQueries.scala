@@ -268,7 +268,7 @@ private[graft] object LogQueries {
         graft.operators.LogStore.writeLogs(graft.operators.LogStore.ingest(docs), out)
         out
       })
-      val back = s.read.parquet(dir)
+      val back = graft.operators.LogStore.open(s, dir)
       graft.operators.LogStore.reassemble(back.where(graft.operators.LogStore.forUser(back, "u5")))
         .select(col("user_id"), col("payload"))
         .orderBy("user_id")

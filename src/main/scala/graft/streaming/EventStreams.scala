@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.StructType
+import graft.operators.StoredTable.StoreWriter
 
 /** Structured Streaming surface over the `events` table.
   *
@@ -532,7 +533,7 @@ object EventStreams {
           case None => agg
         }
         val staged = s"$targetRoot/_staged_v$batchId"
-        merged.write.mode("overwrite").parquet(staged)
+        merged.storeWrite.mode("overwrite").parquet(staged)
         graft.operators.Layout.commitVersion(targetRoot, batchId, staged)
         ()
       }
@@ -596,7 +597,7 @@ object EventStreams {
             .orderBy(col("n").desc, col("event_type"))
           batch.withColumn("rk", row_number().over(byDay))
             .where(col("rk") <= k)
-            .write.mode("overwrite").parquet(s"$targetRoot/current")
+            .storeWrite.mode("overwrite").parquet(s"$targetRoot/current")
           ()
         }
         .start()
@@ -628,6 +629,7 @@ object EventStreams {
       .where(col("event_type").isin("click", "purchase"))
     val q = src.writeStream
       .format("parquet")
+      .options(graft.operators.StoredTable.storeWriteOptions)
       .option("path", sinkDir)
       .option("checkpointLocation", chkDir)
       .trigger(Trigger.AvailableNow())
@@ -669,7 +671,7 @@ object EventStreams {
         .option("checkpointLocation", s"$targetRoot/_chk")
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("overwrite").parquet(s"$targetRoot/current")
+          batch.storeWrite.mode("overwrite").parquet(s"$targetRoot/current")
           ()
         }
         .start()

@@ -274,6 +274,16 @@ class LogStoreSpec extends SparkSpec {
     assert(open.result.inputFiles.length == dirs.length, "one file per bucket directory")
   }
 
+  test("LogStore.open submits no Spark job and keeps read.parquet's schema") {
+    val users = (0 until 40).map(i => f"user$i%03d")
+    val dir = Files.createTempDirectory("logopen").toFile.getAbsolutePath + "/logs"
+    LogStore.writeLogs(LogStore.ingest(mkDocs(users.map(u => u -> s"$u payload"): _*)), dir)
+    val open = traced(LogStore.open(spark, dir))
+    assert(open.jobs == 0, s"LogStore.open submitted ${open.jobs} Spark job(s)")
+    assert(open.result.schema == spark.read.parquet(dir).schema)
+    assert(open.result.where(LogStore.forUser(open.result, "user007")).count() == 1L)
+  }
+
   test("stores partitioned by user_id still answer and prune on user_id") {
     implicit val s = spark
     val big = TestText.random(4 * 1024 * 1024, seed = 29)

@@ -39,4 +39,40 @@ class StoreProtocolAuditSpec extends AnyFunSuite {
       found(core).get("staged rewrite missing").contains(1),
       s"the core keeps ONE pre-flight and ONE staged-output check: ${found(core)}")
   }
+
+  test("only StoredTable.scala starts a store write or resolves a FileSystem") {
+    // operators/ and streaming/ write and reach files only through the
+    // spawn-free helpers: `ds.storeWrite` and `StoredTable.fileSystem`. A
+    // bare `.write.` chain or `getFileSystem(` there would fall back to the
+    // session's local file system, which starts a chmod process per file.
+    // The one exception is Layout.writeBucketed's catalog table: saveAsTable
+    // would keep storeWrite's options as the table's storage properties.
+    val bareWrite = """\.write\s*\.""".r
+    val fsLookup = """getFileSystem\(""".r
+    val found = scala.collection.mutable.Map.empty[String, Map[String, Int]]
+    for (dir <- Seq("src/main/scala/graft/operators", "src/main/scala/graft/streaming")) {
+      val root = java.nio.file.Paths.get(dir)
+      assert(java.nio.file.Files.isDirectory(root),
+        s"expected to run from the repo root; cwd=${System.getProperty("user.dir")}")
+      val it = java.nio.file.Files.list(root).iterator()
+      while (it.hasNext) {
+        val p = it.next()
+        if (p.toString.endsWith(".scala")) {
+          val src = new String(java.nio.file.Files.readAllBytes(p),
+            java.nio.charset.StandardCharsets.UTF_8)
+          val hits = Map(
+            ".write." -> bareWrite.findAllMatchIn(src).size,
+            "getFileSystem(" -> fsLookup.findAllMatchIn(src).size).filter(_._2 > 0)
+          if (hits.nonEmpty) found(p.toString) = hits
+        }
+      }
+    }
+    val core = "src/main/scala/graft/operators/StoredTable.scala"
+    val catalogWrite = "src/main/scala/graft/operators/Layout.scala" -> Map(".write." -> 1)
+    assert((found - core).toMap == Map(catalogWrite),
+      s"store writes or file systems outside $core — use storeWrite / StoredTable.fileSystem:\n  " +
+        found.toSeq.sortBy(_._1).map { case (f, h) => s"$f: $h" }.mkString("\n  "))
+    assert(found.get(core).contains(Map(".write." -> 1, "getFileSystem(" -> 1)),
+      s"the core keeps ONE write start and ONE file-system lookup: ${found.get(core)}")
+  }
 }

@@ -1,11 +1,14 @@
 #!/usr/bin/env bash
-# One-shot reproduction: build, test, log_ingest, log_serve and index_lifecycle smokes and exact counts, correctness vs DuckDB, bench.
+# One-shot reproduction: build, closed-set audits, test, log_ingest, log_serve and index_lifecycle smokes and exact counts, correctness vs DuckDB, bench.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
 SF_CORRECTNESS=${SF_CORRECTNESS:-/root/testdata/sf0.01}
 SF_BENCH=${SF_BENCH:-/root/testdata/sf0.1}
 OUT=${OUT:-/tmp/graft_verify}
+
+echo "== closed-set audits (persist, store protocol, collect) =="
+sbt -batch "testOnly graft.PersistAuditSpec graft.StoreProtocolAuditSpec graft.CollectAuditSpec"
 
 echo "== compile + test =="
 sbt -batch test

@@ -23,7 +23,8 @@ import StoredTable.StoreWriter
   * (e.g. boilerplate shingles) are capped via `MaxBucket` before pairing.
   */
 object Dedup {
-  import StoredTable.{deleteRowsFromStore, deleteRowsFromStoreJoin, readStore, retainStoreBatches}
+  import StoredTable.{ManifestIo, deleteRowsFromStore, deleteRowsFromStoreJoin, readStore,
+    retainStoreBatches}
 
   /** Largest LSH bucket we will FULLY pair-expand. A bucket of b docs
     * yields b(b-1)/2 pairs; above this, the bucket degrades to a linear
@@ -49,81 +50,6 @@ object Dedup {
     * store was built with.
     */
   val NMods = 16
-
-  /** Shared render/IO/drift core of the four store manifests below
-    * (artifact [[StoreManifest]], band-index [[IndexManifest]], census
-    * [[CensusManifest]], semantic [[SemManifest]]) — one contract, four
-    * one-screen instantiations: build params render to a canonical ordered
-    * JSON line pinned next to the store; every consumer re-renders its own
-    * params and THROWS on any byte difference, so a store/consumer
-    * parameter mismatch fails loudly instead of returning silently wrong
-    * candidate sets. I/O goes through the store path's Hadoop
-    * `FileSystem` — the same resolution the store's parquet writers use —
-    * so a store rooted on HDFS/S3 carries its manifest WITH the data
-    * rather than stranding it on the driver's local disk.
-    */
-  private[graft] final class ManifestIo(kind: String, fileName: String) {
-    private def hconf = org.apache.spark.sql.SparkSession.active
-      .sparkContext.hadoopConfiguration
-    private def path(root: String) = new org.apache.hadoop.fs.Path(root, fileName)
-    def render(fields: (String, Any)*): String =
-      fields.map {
-        // escape backslash/quote (and bare control chars) so a string
-        // param can never render a malformed line that then fails every
-        // consumer's byte-equality check with an unreadable diff
-        case (k, v: String) =>
-          val esc = v.flatMap {
-            case '"'           => "\\\""
-            case '\\'          => "\\\\"
-            case c if c < ' '  => f"\\u${c.toInt}%04x"
-            case c             => c.toString
-          }
-          s""""$k":"$esc""""
-        case (k, v)         => s""""$k":$v"""
-      }.mkString("{", ",", "}")
-    def exists(root: String): Boolean = {
-      val p = path(root); StoredTable.fileSystem(hconf, p).exists(p)
-    }
-    def write(root: String, json: String): Unit = {
-      val p = path(root)
-      val out = StoredTable.fileSystem(hconf, p).create(p, true)
-      try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    def read(root: String): String = {
-      val p = path(root)
-      val fs = StoredTable.fileSystem(hconf, p)
-      if (!fs.exists(p))
-        throw new IllegalStateException(
-          s"$kind at $root has no manifest — refusing to read an unverifiable store")
-      val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-      val in = fs.open(p)
-      try in.readFully(0, buf) finally in.close()
-      new String(buf, java.nio.charset.StandardCharsets.UTF_8).trim
-    }
-    /** Assert the consumer's rendered params against the pinned manifest. */
-    def check(root: String, want: String): Unit = {
-      val found = read(root)
-      if (found != want)
-        throw new IllegalStateException(
-          s"$kind parameter drift at $root:\n  store:    $found\n  consumer: $want")
-    }
-    /** Parse one integer field out of the pinned manifest — for store
-      * properties a consumer READS rather than declares (`nmods`,
-      * the evolving `nlist`).
-      */
-    def intField(root: String, key: String): Int =
-      ("\"" + key + "\":(-?\\d+)").r.findFirstMatchIn(read(root)).map(_.group(1).toInt)
-        .getOrElse(throw new IllegalStateException(
-          s"malformed $kind manifest at $root: ${read(root)}"))
-    /** Like [[intField]] but with a default — for fields ADDED after
-      * stores already existed (absence means the pre-field behavior, so
-      * old manifests stay verifiable without migration).
-      */
-    def intFieldOr(root: String, key: String, default: Int): Int =
-      ("\"" + key + "\":(-?\\d+)").r.findFirstMatchIn(read(root)).map(_.group(1).toInt)
-        .getOrElse(default)
-  }
 
   /** The store's pinned fanout file (written by [[seedStreamStores]]);
     * stores created before the parameter existed default to [[NMods]].
@@ -813,8 +739,7 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession,
       censusPath: String,
       victimDocs: DataFrame,
-      width: Int = 40,
-      targetFileBytes: Long = 128L * 1024 * 1024): Long = {
+      width: Int = 40): Long = {
     import org.apache.hadoop.fs.Path
     val nm = CensusManifest.checkAndNMods(censusPath, width)
     val root = new Path(censusPath)
@@ -854,14 +779,9 @@ object Dedup {
       .where(col("n_docs") > 0)
     val affectedBytes = affectedDirs
       .map(d => fs.getContentSummary(d).getLength).sum
-    val slices = math.max(
-      math.max(1L, (affectedBytes + targetFileBytes - 1) / targetFileBytes),
-      spark.sparkContext.defaultParallelism.toLong).toInt
-    netted
-      .repartitionByRange(slices, col("win_mod"), col("win"))
-      .sortWithinPartitions(col("win_mod"), col("win"))
-      .storeWrite.mode("overwrite").partitionBy("win_mod")
-      .parquet(stageRoot.toString)
+    StoredTable.clusteredStage(netted, Seq("win_mod", "win"), Seq("win_mod"),
+      stageRoot.toString, Some(StoredTable.sizedSlices(affectedBytes,
+        floor = spark.sparkContext.defaultParallelism)))
     agg.unpersist(); decs.unpersist()
     swap.verify(stageRoot)
     // streamed layout: consolidated slices promote into the NEWEST batch
@@ -1240,8 +1160,7 @@ object Dedup {
   def compactIndex(
       spark: org.apache.spark.sql.SparkSession,
       idxDir: String,
-      upTo: Long,
-      targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
+      upTo: Long): Unit = {
     val nm = storeNMods(idxDir)
     // three independent tables, each behind its own sentinel and swap —
     // every one pre-flights first, so a leftover on one refuses before
@@ -1251,7 +1170,7 @@ object Dedup {
       Seq(bandsDir(idxDir) -> "bh_mod", sigsDir(idxDir) -> "did_mod", shsDir(idxDir) -> "did_mod")
     tables.foreach { case (dir, _) => StoredTable.preflightCompaction(spark, dir) }
     StoredTable.inParallel(tables.map { case (dir, modCol) =>
-      () => StoredTable.compactStore(spark, dir, modCol, "doc_id", nm, upTo, targetFileBytes)
+      () => StoredTable.compactStore(spark, dir, modCol, "doc_id", nm, upTo)
     })
     ()
   }
@@ -2257,8 +2176,7 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession,
       storeDir: String,
       newNlist: Int,
-      sampleRows: Int = 2048,
-      targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
+      sampleRows: Int = 2048): Unit = {
     import org.apache.hadoop.fs.Path
     val (_, _, nm) = SemManifest.read(storeDir) // asserts the store is verifiable
     val qz = SemManifest.quantized(storeDir)
@@ -2293,8 +2211,7 @@ object Dedup {
     Similarity.saveIvfIndex(rows.select(col("vec_id"), col("embedding")),
       s"$stageRoot/centroids", nlist = newNlist, sampleRows = sampleRows)
     val totalBytes = fs.getContentSummary(new Path(cellsDir)).getLength
-    val slices = math.max(1L,
-      (totalBytes + nm.toLong * targetFileBytes - 1) / (nm.toLong * targetFileBytes)).toInt
+    val slices = StoredTable.sizedSlices(totalBytes, perSlice = nm * StoredTable.TargetFileBytes)
     val payload: Seq[org.apache.spark.sql.Column] =
       if (qz) Seq(col("qvec"), col("qscale")) else Seq(col("embedding"))
     Similarity.assignStored(rows, s"$stageRoot/centroids")

@@ -6,7 +6,7 @@ import StoredTable.StoreWriter
 
 /** Shared PENDING-ERASURE QUEUE — right-to-erasure coordinated with a
   * LIVE ingest stream, one implementation for every stored-index family
-  * (the StoredTable/ManifestIo lesson applied to the queue): a
+  * (the [[StoredTable]] / [[StoredTable.ManifestIo]] lesson applied to the queue): a
   * direct delete while the family's stream ingests is out of the
   * single-writer contract — the stream's own between-batch maintenance
   * and the external delete would race on the swap sentinel, and

@@ -98,7 +98,7 @@ object Layout {
     val fs = StoredTable.fileSystem(spark, new org.apache.hadoop.fs.Path(inPath))
     val totalBytes = fs.listStatus(new org.apache.hadoop.fs.Path(inPath))
       .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
-    val nOut = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
+    val nOut = StoredTable.sizedSlices(totalBytes, perSlice = targetBytes)
     spark.read.parquet(inPath).coalesce(nOut)
       .storeWrite.mode("overwrite").parquet(outPath)
     nOut

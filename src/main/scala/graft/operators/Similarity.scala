@@ -992,27 +992,15 @@ object Similarity {
     * `workDir/ivf_index` — the batch (non-streamed) twin of the ingest
     * tiers, used when the index was trained out-of-band (e.g.
     * [[trainIvfIndexHierarchical]]): one assignment map over the corpus,
-    * one cell-clustered write (`repartitionByRange(cell)` + sorted — the
-    * compacted layout, so probes prune parquet row groups from the first
-    * scan). Lands under `cells/batch=0`, the same layout
+    * one cell-clustered write ([[StoredTable.clusteredStage]] on `cell` —
+    * the compacted layout, so probes prune parquet row groups from the
+    * first scan). Lands under `cells/batch=0`, the same layout
     * [[StoredTable.readStore]] and the stored probes serve.
     */
-  def seedIvfStore(data: DataFrame, workDir: String): Unit = {
-    val spark = data.sparkSession
-    val slices = spark.sparkContext.defaultParallelism
-    // the range write SAMPLES its child to derive partition bounds, so an
-    // unpersisted plan evaluates the assignment UDF twice over the corpus
-    // (sampling pass + shuffle pass) — and the assignment is the seed's
-    // whole compute (O(nlist·dim) per row through the two-level scan).
-    // Persisting the assigned frame makes the sampling pass the ONE
-    // evaluation and the shuffle a cache read; released before return.
-    val assigned = assignStored(data, s"$workDir/ivf_index").persist()
-    try assigned
-      .repartitionByRange(slices, col("cell"), col("vec_id"))
-      .sortWithinPartitions("cell", "vec_id")
-      .storeWrite.mode("overwrite").parquet(s"$workDir/cells/batch=0")
-    finally { assigned.unpersist(); () }
-  }
+  def seedIvfStore(data: DataFrame, workDir: String): Unit =
+    StoredTable.clusteredStage(assignStored(data, s"$workDir/ivf_index"),
+      Seq("cell", "vec_id"), Nil, s"$workDir/cells/batch=0",
+      Some(data.sparkSession.sparkContext.defaultParallelism))
 
   /** STREAMING ANN ingest — the embeddings-side sibling of
     * `Dedup.minhashStreamKeep`: vector drops arrive as a file stream; the
@@ -1543,8 +1531,7 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession,
       workDir: String,
       newNlist: Int,
-      sampleRows: Int = 2048,
-      targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
+      sampleRows: Int = 2048): Unit = {
     import org.apache.hadoop.fs.Path
     val idxDir = s"$workDir/ivf_index"
     val cellsDir = s"$workDir/cells"
@@ -1590,9 +1577,7 @@ object Similarity {
     // post-shuffle tasks (the projection is deferred past the exchange),
     // so a byte-small store must not serialize the whole re-assign into
     // one task (measured 62 s -> parallel at 50 k vectors)
-    val slices = math.max(
-      math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes),
-      spark.sparkContext.defaultParallelism.toLong).toInt
+    val slices = StoredTable.sizedSlices(totalBytes, floor = spark.sparkContext.defaultParallelism)
     val staged = loadIvfIndex(spark, s"$stageRoot/ivf_index")
     val relabeled = rows.withColumn("cell", nearestCellUdf(staged)(col("embedding")))
     // coded store: drop the reconstructed float column again — the
@@ -1657,39 +1642,14 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession,
       workDir: String,
       upTo: Long,
-      targetFileBytes: Long = 128L * 1024 * 1024,
       dropIds: Seq[Long] = Nil): Long = {
+    import org.apache.hadoop.fs.Path
     val victims =
       if (dropIds.isEmpty) None
       else {
         import spark.implicits._
         Some(dropIds.distinct.toDF("vec_id"))
       }
-    compactIvfStoreBy(spark, workDir, upTo, targetFileBytes, victims)
-  }
-
-  /** Bulk-victim form of the erasure-folding compaction: the fold is
-    * EXACTLY where a saturating compliance batch should land (V ≫ F
-    * touches ~every file — one rewrite instead of two), so the victim
-    * set must scale like the delete's bulk form: a TABLE through
-    * broadcast semi/anti joins, never a literal list.
-    */
-  def compactIvfStore(
-      spark: org.apache.spark.sql.SparkSession,
-      workDir: String,
-      upTo: Long,
-      targetFileBytes: Long,
-      dropVictims: org.apache.spark.sql.DataFrame): Long =
-    compactIvfStoreBy(spark, workDir, upTo, targetFileBytes,
-      Some(dropVictims.select(col("vec_id").cast("long").as("vec_id")).distinct()))
-
-  private def compactIvfStoreBy(
-      spark: org.apache.spark.sql.SparkSession,
-      workDir: String,
-      upTo: Long,
-      targetFileBytes: Long,
-      victims: Option[org.apache.spark.sql.DataFrame]): Long = {
-    import org.apache.hadoop.fs.Path
     val cellsDir = s"$workDir/cells"
     val fs = StoredTable.fileSystem(spark, new Path(workDir))
     val staged = new Path(workDir, ".compact_stage")
@@ -1700,7 +1660,6 @@ object Similarity {
       name.startsWith("batch=") && name.stripPrefix("batch=").toLong <= upTo
     }
     val totalBytes = olds.map(st => fs.getContentSummary(st.getPath).getLength).sum
-    val slices = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
     val store = StoredTable.readStore(spark, cellsDir)
     // victim marking/dropping via broadcast semi/anti — constant-size
     // plan in |victims| (as in StoredTable.deleteRowsFromStoreJoin)
@@ -1723,16 +1682,8 @@ object Similarity {
           "erasure; widen upTo past their batches or use deleteFromIvfStore")
       markV(store.where(col("batch") <= upTo)).count()
     }
-    // persisted across the range-staged write: the range sampler would
-    // otherwise re-run the store scan + victim anti-join a second time
-    val rows = dropV(store.where(col("batch") <= upTo)).drop("batch").persist()
-    // a range of zero rows still stages one schema-only file (Spark's
-    // first write task always writes one in an unpartitioned write), so
-    // the compacted store stays readable
-    try rows.repartitionByRange(slices, col("cell"), col("vec_id"))
-      .sortWithinPartitions("cell", "vec_id")
-      .storeWrite.mode("overwrite").parquet(staged.toString)
-    finally { rows.unpersist(); () }
+    StoredTable.clusteredStage(dropV(store.where(col("batch") <= upTo)).drop("batch"),
+      Seq("cell", "vec_id"), Nil, staged.toString, Some(StoredTable.sizedSlices(totalBytes)))
     swap.verify(staged)
     swap.commit(
       asides = olds.map(_.getPath).toSeq,
@@ -1832,8 +1783,7 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession,
       workDir: String,
       maxCellRows: Int,
-      splitFactor: Int = 4,
-      targetFileBytes: Long = 128L * 1024 * 1024): Int = {
+      splitFactor: Int = 4): Int = {
     import org.apache.hadoop.fs.Path
     import spark.implicits._
     require(splitFactor >= 2, s"splitHotCells: splitFactor=$splitFactor")
@@ -1979,30 +1929,19 @@ object Similarity {
         "store listing and scan disagree; refusing to swap")
     invalidateIvfIndex(s"$stageRoot/ivf_index")
     writeCentroids(spark, newCentroids, s"$stageRoot/ivf_index")
-    val affectedBytes = affected.map(_.getLen).sum
-    val slices = math.max(
-      math.max(1L, (affectedBytes + targetFileBytes - 1) / targetFileBytes),
-      spark.sparkContext.defaultParallelism.toLong).toInt
+    val slices = StoredTable.sizedSlices(affected.map(_.getLen).sum,
+      floor = spark.sparkContext.defaultParallelism)
     val qualifiedBase = fs.makeQualified(new Path(cellsDir)).toString
     val affectedDf = spark.read.option("basePath", qualifiedBase)
       .parquet(affected.map(_.getPath.toString): _*)
     val (affRows, _) = withReconstructedEmbedding(spark, workDir, affectedDf)
-    // persisted across the range write: the range sampler otherwise
-    // re-evaluates the relabel UDF (and any embedding reconstruction)
-    // over every affected row a second time (the seedIvfStore lesson)
-    val relabeled = affRows
-      .withColumn("cell", relabel(col("cell"), col("embedding")))
-      .persist()
+    val relabeled = affRows.withColumn("cell", relabel(col("cell"), col("embedding")))
     // stage CELL-CLUSTERED (the compacted discipline), not hash-spread:
     // iterative splitting re-targets the still-hot region each round, and
     // a hash-spread stage would smear hot rows across every new file —
     // round 2 would then move everything the first round wrote
-    try (if (coded) relabeled.drop("embedding") else relabeled)
-      .repartitionByRange(slices, col("batch"), col("cell"), col("vec_id"))
-      .sortWithinPartitions("batch", "cell", "vec_id")
-      .storeWrite.mode("overwrite").partitionBy("batch")
-      .parquet(s"$stageRoot/cells")
-    finally { relabeled.unpersist(); () }
+    StoredTable.clusteredStage(if (coded) relabeled.drop("embedding") else relabeled,
+      Seq("batch", "cell", "vec_id"), Seq("batch"), s"$stageRoot/cells", Some(slices))
     val stagedCells = new Path(s"$stageRoot/cells")
     val stagedIdx = new Path(s"$stageRoot/ivf_index")
     swap.verify(stagedCells, stagedIdx)

@@ -30,7 +30,11 @@ import org.apache.spark.sql.functions._
   * Alongside it: the job-free store open every probe reads through
   * ([[readStore]], which refuses while a swap is in progress), the
   * copy-on-write erasure core, batch-TTL retention, batch compaction,
-  * the writer pool the concurrent table writes share ([[inParallel]]), and
+  * the range-clustered restage and the size target every maintenance
+  * rewrite stages through ([[clusteredStage]], [[sizedSlices]]), the
+  * pinned-manifest I/O every family's parameters go through
+  * ([[ManifestIo]]), the writer pool the concurrent table writes share
+  * ([[inParallel]]), and
   * the one way the engine reaches its files: every store write starts at
   * [[StoreWriter.storeWrite]] and every driver-side file operation takes
   * its `FileSystem` from [[fileSystem]], so local stores never start a
@@ -265,7 +269,7 @@ object StoredTable {
   /** The RECOVERABLE CHECKED SWAP shared by every store mutation (erasure,
     * compaction, re-quantization, hot-cell split, every store family) —
     * one implementation of the protocol instead of a hand-rolled copy per
-    * op (the ManifestIo lesson applied to the swap):
+    * op (the [[ManifestIo]] lesson applied to the swap):
     *
     *   raise the [[MaintenanceSentinel]] in `sentinelDir` (exclusive
     *   create — concurrent swaps fail here; [[readStore]] — every probe's
@@ -603,23 +607,25 @@ object StoredTable {
     *
     * Rewrite shape: PARALLEL and SIZE-TARGETED. Rows hash-repartition by
     * (mod, slice) — `slice` splits each mod's rows into
-    * ⌈store_bytes / (nMods × targetFileBytes)⌉ pieces, `saltCol` being
-    * any well-distributed column of the table (doc_id / vec_id / win) —
-    * so the rewrite runs one task per output file and output files track
-    * `targetFileBytes` regardless of store size. A range holding no rows
+    * ⌈store_bytes / (nMods × targetFileBytes)⌉ pieces ([[sizedSlices]]),
+    * `saltCol` being any well-distributed column of the table (doc_id /
+    * vec_id / win) — so the rewrite runs one task per output file and
+    * output files track `targetFileBytes` regardless of store size. The
+    * target is [[TargetFileBytes]]; only specs pass a smaller one, to
+    * force several slices out of a small store. A range holding no rows
     * stages nothing, so the stage then gets one schema-only file in mod 0
     * (the seed layout) — a store without a file would be unreadable.
     * The stage promotes to `batch=upTo` through the protocol above, the
     * old partitions set aside into `.compact_old` inside the store.
     */
-  def compactStore(
+  private[graft] def compactStore(
       spark: SparkSession,
       storeDir: String,
       modCol: String,
       saltCol: String,
       nMods: Int,
       upTo: Long,
-      targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
+      targetFileBytes: Long = TargetFileBytes): Unit = {
     val storeP = new Path(storeDir)
     val fs = fileSystem(spark, storeP)
     val swap = preflightCompaction(spark, storeDir)
@@ -628,8 +634,7 @@ object StoredTable {
       name.startsWith("batch=") && name.stripPrefix("batch=").toLong <= upTo
     }
     val totalBytes = olds.map(st => fs.getContentSummary(st.getPath).getLength).sum
-    val slices = math.max(1L,
-      (totalBytes + nMods.toLong * targetFileBytes - 1) / (nMods.toLong * targetFileBytes)).toInt
+    val slices = sizedSlices(totalBytes, perSlice = nMods.toLong * targetFileBytes)
     val stagedP = new Path(s"$storeDir.compact_stage")
     val rows = readStore(spark, storeDir)
       .where(col("batch") <= upTo)
@@ -647,5 +652,127 @@ object StoredTable {
       asides = olds.map(_.getPath).toSeq,
       promotes = Seq((stagedP, new Path(s"$storeDir/batch=$upTo"))),
       cleanup = Nil)
+  }
+
+  /** The file size every maintenance rewrite targets: 128 MiB, a
+    * parquet-friendly size that keeps per-file overhead small without
+    * making one task's output unwieldy.
+    */
+  private[graft] val TargetFileBytes: Long = 128L * 1024 * 1024
+
+  /** THE SIZE TARGET: how many slices a rewrite of `bytes` stages so each
+    * output file stays near `perSlice` bytes (default [[TargetFileBytes]];
+    * a hash-fanned table passes `fanout × target`, one slice per mod):
+    * ⌈bytes / perSlice⌉, but never fewer than `floor`. A rewrite whose
+    * per-row work runs after the exchange (a re-assignment or relabel
+    * UDF) floors at the session's parallelism, so a byte-small store
+    * still spreads that work over every core.
+    */
+  private[graft] def sizedSlices(bytes: Long, floor: Int = 1,
+                                 perSlice: Long = TargetFileBytes): Int =
+    math.max(floor.toLong, (bytes + perSlice - 1) / perSlice).toInt
+
+  /** THE RANGE-CLUSTERED RESTAGE every maintenance rewrite that clusters
+    * its output stages through (the IVF seed, compaction and hot-cell
+    * split, the census erasure, the text-index fold): `rows`
+    * range-partitioned on `clusterBy` into `slices` ranges (Spark's
+    * default count when `None`), each sorted on `clusterBy`, written in
+    * overwrite mode under `partitionBy` to `out`. Clustered output lets a
+    * probe skip parquet row groups by min/max stats.
+    *
+    * `rows` is persisted for the write and released in a `finally`: the
+    * range exchange SAMPLES its child to derive the bounds, so an
+    * unpersisted child runs its whole plan twice — the store scan, any
+    * victim join, and any per-row UDF (cell assignment, relabel). Cached,
+    * the sampling pass is the one evaluation and the shuffle reads the
+    * cache. A range holding no rows still stages one schema-only file
+    * (Spark's first write task always writes one when `partitionBy` is
+    * empty).
+    */
+  private[graft] def clusteredStage(rows: DataFrame, clusterBy: Seq[String],
+                                    partitionBy: Seq[String], out: String,
+                                    slices: Option[Int]): Unit = {
+    val cached = rows.persist()
+    val keys = clusterBy.map(col)
+    try slices.fold(cached.repartitionByRange(keys: _*))(cached.repartitionByRange(_, keys: _*))
+      .sortWithinPartitions(keys: _*)
+      .storeWrite.mode("overwrite").partitionBy(partitionBy: _*)
+      .parquet(out)
+    finally { cached.unpersist(); () }
+  }
+
+  /** Shared render/IO/drift core of every pinned store manifest (the
+    * artifact, band-index, census and semantic manifests in [[Dedup]],
+    * the text-index manifest in [[TextIndex]]) — one contract, one
+    * one-screen instantiation per family: build params render to a
+    * canonical ordered JSON line pinned next to the store; every consumer
+    * re-renders its own params and THROWS on any byte difference, so a
+    * store/consumer parameter mismatch fails loudly instead of returning
+    * silently wrong candidate sets. I/O goes through the store path's
+    * Hadoop `FileSystem` ([[fileSystem]]) — the same resolution the
+    * store's parquet writers use — so a store rooted on HDFS/S3 carries
+    * its manifest WITH the data rather than stranding it on the driver's
+    * local disk.
+    */
+  private[graft] final class ManifestIo(kind: String, fileName: String) {
+    private def hconf = SparkSession.active.sparkContext.hadoopConfiguration
+    private def path(root: String) = new Path(root, fileName)
+    def render(fields: (String, Any)*): String =
+      fields.map {
+        // escape backslash/quote (and bare control chars) so a string
+        // param can never render a malformed line that then fails every
+        // consumer's byte-equality check with an unreadable diff
+        case (k, v: String) =>
+          val esc = v.flatMap {
+            case '"'           => "\\\""
+            case '\\'          => "\\\\"
+            case c if c < ' '  => f"\\u${c.toInt}%04x"
+            case c             => c.toString
+          }
+          s""""$k":"$esc""""
+        case (k, v)         => s""""$k":$v"""
+      }.mkString("{", ",", "}")
+    def exists(root: String): Boolean = {
+      val p = path(root); fileSystem(hconf, p).exists(p)
+    }
+    def write(root: String, json: String): Unit = {
+      val p = path(root)
+      val out = fileSystem(hconf, p).create(p, true)
+      try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+    }
+    def read(root: String): String = {
+      val p = path(root)
+      val fs = fileSystem(hconf, p)
+      if (!fs.exists(p))
+        throw new IllegalStateException(
+          s"$kind at $root has no manifest — refusing to read an unverifiable store")
+      val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
+      val in = fs.open(p)
+      try in.readFully(0, buf) finally in.close()
+      new String(buf, java.nio.charset.StandardCharsets.UTF_8).trim
+    }
+    /** Assert the consumer's rendered params against the pinned manifest. */
+    def check(root: String, want: String): Unit = {
+      val found = read(root)
+      if (found != want)
+        throw new IllegalStateException(
+          s"$kind parameter drift at $root:\n  store:    $found\n  consumer: $want")
+    }
+    /** Parse one integer field out of the pinned manifest — for store
+      * properties a consumer READS rather than declares (`nmods`,
+      * the evolving `nlist`).
+      */
+    def intField(root: String, key: String): Int =
+      ("\"" + key + "\":(-?\\d+)").r.findFirstMatchIn(read(root)).map(_.group(1).toInt)
+        .getOrElse(throw new IllegalStateException(
+          s"malformed $kind manifest at $root: ${read(root)}"))
+    /** Like [[intField]] but with a default — for fields ADDED after
+      * stores already existed (absence means the pre-field behavior, so
+      * old manifests stay verifiable without migration).
+      */
+    def intFieldOr(root: String, key: String, default: Int): Int =
+      ("\"" + key + "\":(-?\\d+)").r.findFirstMatchIn(read(root)).map(_.group(1).toInt)
+        .getOrElse(default)
   }
 }

@@ -55,7 +55,7 @@ import StoredTable.StoreWriter
   *     swapped) instead of decrementing in place (a crash mid-decrement
   *     would silently skew every later score).
   *   - `text_index_manifest.json` — pins `nMods`; every consumer
-  *     re-renders and throws on drift ([[Dedup.ManifestIo]] contract).
+  *     re-renders and throws on drift ([[StoredTable.ManifestIo]] contract).
   *
   * Append contract: each `doc_id` is indexed by exactly ONE batch (the
   * incremental-ingest discipline every stored family shares); postings
@@ -93,7 +93,7 @@ object TextIndex {
     * serving with silently-absent membership.
     */
   private val manifest =
-    new Dedup.ManifestIo("text index store", "text_index_manifest.json")
+    new StoredTable.ManifestIo("text index store", "text_index_manifest.json")
   private def renderManifest(nMods: Int, positions: Boolean): String =
     manifest.render("version" -> 2, "nmods" -> nMods,
       "positions" -> (if (positions) 1 else 0))
@@ -1002,28 +1002,14 @@ object TextIndex {
     // per-table fold recipes: (dir, staged writer to a target path). The
     // dictionary and stats tables RECOMPUTE from the folded postings/
     // membership rather than folding their own rows, so an erasure fold
-    // keeps them exact. Each range-staged recipe persists its folded
-    // frame for the write's duration: the range sampler would otherwise
-    // re-run the fold's scan + anti-join/aggregation a second time just
-    // to derive bounds.
-    // The stats recipe writes through coalesce(1) — no sampling pass —
-    // so it stays uncached.
-    def stagedRanged(folded: DataFrame, rangeCols: Seq[String],
-                     partCol: String, out: String): Unit = {
-      val f = folded.persist()
-      try f
-        .repartitionByRange(rangeCols.map(col): _*)
-        .sortWithinPartitions(rangeCols.map(col): _*)
-        .storeWrite.mode("overwrite").partitionBy(partCol)
-        .parquet(out)
-      finally { f.unpersist(); () }
-    }
+    // keeps them exact. Every table but stats (one coalesced row) stages
+    // through the range-clustered restage at Spark's default count.
     val recipes: Seq[(String, (DataFrame, String) => Unit)] = Seq(
       postingsDir(idxDir) -> { (src: DataFrame, out: String) =>
-        stagedRanged(
+        StoredTable.clusteredStage(
           dropV(src)
             .select(col("term"), col("doc_id"), col("tf"), col("dl"), col("tm_mod")),
-          Seq("tm_mod", "term", "doc_id"), "tm_mod", out)
+          Seq("tm_mod", "term", "doc_id"), Seq("tm_mod"), out, None)
       },
       termsDir(idxDir) -> { (src: DataFrame, out: String) =>
         // pure fold: df SUMS across batches (each doc indexed by exactly
@@ -1042,14 +1028,14 @@ object TextIndex {
               .groupBy(col("term"))
               .agg(count(lit(1)).as("df"), max(col("tf")).as("max_tf"),
                 min(col("dl")).as("min_dl"))
-        stagedRanged(
+        StoredTable.clusteredStage(
           folded.withColumn("tm_mod", pmod(hash(col("term")), lit(nMods)).cast("int")),
-          Seq("tm_mod", "term"), "tm_mod", out)
+          Seq("tm_mod", "term"), Seq("tm_mod"), out, None)
       },
       docsDir(idxDir) -> { (src: DataFrame, out: String) =>
-        stagedRanged(
+        StoredTable.clusteredStage(
           dropV(src).select(col("doc_id"), col("dl"), col("did_mod")),
-          Seq("did_mod", "doc_id"), "did_mod", out)
+          Seq("did_mod", "doc_id"), Seq("did_mod"), out, None)
       },
       statsDir(idxDir) -> { (src: DataFrame, out: String) =>
         // pure fold: the serving value is the SUM over batch rows, which
@@ -1070,10 +1056,10 @@ object TextIndex {
         // positional tier folds like the postings: pure row fold with
         // victims anti-joined out; positions are doc-local so a fold
         // never renumbers anything
-        stagedRanged(
+        StoredTable.clusteredStage(
           dropV(src)
             .select(col("term"), col("doc_id"), col("pos"), col("tm_mod")),
-          Seq("tm_mod", "term", "doc_id", "pos"), "tm_mod", out)
+          Seq("tm_mod", "term", "doc_id", "pos"), Seq("tm_mod"), out, None)
       }))
     // TWO-PHASE fold: STAGE every table's folded output first — all in
     // parallel on the shared writer pool, and against the UNTOUCHED

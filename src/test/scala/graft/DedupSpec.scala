@@ -477,8 +477,12 @@ class DedupSpec extends SparkSpec {
     val rowsBefore = shRowSet
     // a tiny file-size budget forces slices > 1: the rewrite must fan out
     // into multiple size-tracked files per store, not coalesce(1)'s single
-    // task/single file
-    Dedup.compactIndex(spark, idx, upTo = 5L, targetFileBytes = 8192L)
+    // task/single file. The budget is not a public option, so each of the
+    // index's three tables compacts through the core directly, as
+    // compactIndex runs them.
+    for ((table, modCol) <- Seq("bands" -> "bh_mod", "sigs" -> "did_mod", "shingles" -> "did_mod"))
+      StoredTable.compactStore(spark, s"$idx/$table", modCol, "doc_id", Dedup.NMods,
+        upTo = 5L, targetFileBytes = 8192L)
     val files = java.nio.file.Files.walk(
         java.nio.file.Paths.get(s"$idx/shingles/batch=5")).iterator()
     var nFiles = 0

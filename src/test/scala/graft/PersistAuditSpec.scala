@@ -66,10 +66,6 @@ class PersistAuditSpec extends AnyFunSuite {
       // round 17 (second pass): hybridFusionOverlapGate persists its two
       // vector legs — each feeds both fusion modes of the one gate
       // action (category 2: result-plan caches, session-released)
-      // round 17 (third pass): seedIvfStore and splitHotCells persist
-      // their assigned/relabeled frames across the range write — the
-      // range sampler otherwise evaluates the assignment UDF twice
-      // (category 1: op-scoped, unpersisted in a finally)
       // the query declarations: 19 persists and 1 unpersist, formerly all
       // in SparkEntry.scala — gate fixtures (category 2) and the shared
       // dedup store build's paired artifact handles (category 1)
@@ -81,11 +77,13 @@ class PersistAuditSpec extends AnyFunSuite {
       // ExplainOps: dev-only plan renderer; its one persist exists to
       // PRINT the cached form of the seed pipeline, nothing executes
       "graft/ExplainOps.scala"            -> ((1, 0)),
-      // round 17 (fourth pass): compactIvfStore's survivors and the
-      // text-index fold recipes persist their staged frames across the
-      // range write (category 1, finally-released — same rationale as
-      // the erasure core)
-      "graft/operators/Similarity.scala"  -> ((8, 6)),
+      // one range-clustered restage: seedIvfStore, compactIvfStore,
+      // splitHotCells, the census erasure and the text-index fold stage
+      // through StoredTable.clusteredStage, whose one persist spans the
+      // range write (category 1, released in a finally) — Similarity
+      // (8, 6) → (5, 3), TextIndex (5, 5) → (4, 4), StoredTable (1, 1)
+      "graft/operators/StoredTable.scala" -> ((1, 1)),
+      "graft/operators/Similarity.scala"  -> ((5, 3)),
       // copy-on-write erasure: the erasure core's survivors and
       // rewriteTermDictionary's aggregated dictionary no longer cross a
       // range-staged write (map-only rewrite; one hash shuffle), so their
@@ -93,10 +91,10 @@ class PersistAuditSpec extends AnyFunSuite {
       // TextIndex (6, 6) → (5, 5)
       // the store-mutation core (StoredTable.scala: erasure core, swap,
       // retention, compaction) moved out of Dedup with no cache site, so
-      // it has no entry and Dedup keeps (37, 21)
+      // Dedup keeps (37, 21)
       "graft/operators/Dedup.scala"       -> ((37, 21)),
       "graft/operators/Graph.scala"       -> ((4, 0)),
-      "graft/operators/TextIndex.scala"   -> ((5, 5)),
+      "graft/operators/TextIndex.scala"   -> ((4, 4)),
       "graft/operators/Corpus.scala"      -> ((8, 1)))
     assert(found.toMap == allowed,
       s"persist/unpersist drift — audit the new cache site into a lifetime " +

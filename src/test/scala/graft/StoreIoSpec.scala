@@ -226,4 +226,32 @@ class StoreIoSpec extends SparkSpec {
       }
     }
   }
+
+  test("the range-clustered restage evaluates its rows once and releases " +
+       "its cache after a write and after a failed write") {
+    val root = java.nio.file.Files.createTempDirectory("restage").toString
+    val calls = spark.sparkContext.longAccumulator("restage-rows")
+    val tick = udf { (id: Long) => calls.add(1L); id % 7 }
+    val rows = spark.range(0, 500, 1, 4).select(col("id"), tick(col("id")).as("k"))
+    // control: an unpersisted range write runs the child twice, once for
+    // the sampler's bounds and once for the shuffle
+    rows.repartitionByRange(4, col("k"), col("id")).write.parquet(s"$root/plain")
+    assert(calls.value == 1000L)
+    calls.reset()
+    StoredTable.clusteredStage(rows, Seq("k", "id"), Seq("k"), s"$root/stage", Some(4))
+    assert(calls.value == 500L, "the restage evaluated its rows more than once")
+    assert(rows.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "the restage kept its cache after a write")
+    val staged = spark.read.parquet(s"$root/stage")
+    assert(staged.count() == 500L)
+    assert(new java.io.File(s"$root/stage").list().count(_.startsWith("k=")) == 7)
+    // an output path under a regular file fails the write
+    val file = new java.io.File(root, "file")
+    assert(file.createNewFile())
+    intercept[Exception] {
+      StoredTable.clusteredStage(rows, Seq("k", "id"), Nil, s"$file/stage", Some(4))
+    }
+    assert(rows.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "the restage kept its cache after a failed write")
+  }
 }

@@ -75,4 +75,34 @@ class StoreProtocolAuditSpec extends AnyFunSuite {
     assert(found.get(core).contains(Map(".write." -> 1, "getFileSystem(" -> 1)),
       s"the core keeps ONE write start and ONE file-system lookup: ${found.get(core)}")
   }
+
+  test("only StoredTable.clusteredStage range-stages a maintenance rewrite") {
+    // a range exchange samples its child, so a range-partitioned write of
+    // an unpersisted frame runs the frame's plan twice; the restage owns
+    // the persist. Every other range site in operators/ is pinned here:
+    // TextIndex's append pipelines, Layout's clustered layouts and
+    // Corpus's sorted token tables. Comment and scaladoc lines are skipped.
+    val root = java.nio.file.Paths.get("src/main/scala/graft/operators")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"expected to run from the repo root; cwd=${System.getProperty("user.dir")}")
+    val found = scala.collection.mutable.Map.empty[String, Int]
+    val it = java.nio.file.Files.list(root).iterator()
+    while (it.hasNext) {
+      val p = it.next()
+      if (p.toString.endsWith(".scala")) {
+        val n = java.nio.file.Files.readAllLines(p).toArray(Array.empty[String]).count { line =>
+          val t = line.trim
+          !t.startsWith("*") && !t.startsWith("/*") && !t.startsWith("//") &&
+            t.contains("repartitionByRange(")
+        }
+        if (n > 0) found(p.getFileName.toString) = n
+      }
+    }
+    val allowed = Map("StoredTable.scala" -> 1, "TextIndex.scala" -> 4,
+      "Layout.scala" -> 3, "Corpus.scala" -> 2)
+    assert(found.toMap == allowed,
+      s"repartitionByRange drift — stage a maintenance rewrite through " +
+        s"StoredTable.clusteredStage instead.\n  found:   ${found.toMap.toSeq.sorted}\n  " +
+        s"allowed: ${allowed.toSeq.sorted}")
+  }
 }
